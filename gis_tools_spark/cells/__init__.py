@@ -141,12 +141,18 @@ def adaptive_res(minx, miny, maxx, maxy,
     ones get fine cells (selective join keys).
     """
     for res in range(res_max, res_min - 1, -1):
-        n = 1 << res
-        ncx = int((maxx + 180.0) / 360.0 * n) - int((minx + 180.0) / 360.0 * n) + 1
-        ncy = int((maxy + 90.0) / 180.0 * n) - int((miny + 90.0) / 180.0 * n) + 1
-        if ncx * ncy <= max_cells:
+        if bbox_cell_count(minx, miny, maxx, maxy, res) <= max_cells:
             return res
     return res_min
+
+
+def bbox_cell_count(minx, miny, maxx, maxy, res: int) -> int:
+    """Number of cells at `res` the bbox spans (unclipped): the fan-out
+    a cover of it would have."""
+    n = 1 << res
+    ncx = int((maxx + 180.0) / 360.0 * n) - int((minx + 180.0) / 360.0 * n) + 1
+    ncy = int((maxy + 90.0) / 180.0 * n) - int((miny + 90.0) / 180.0 * n) + 1
+    return ncx * ncy
 
 
 def polygon_to_cells(geom: dict, res: int, exact: bool = True) -> np.ndarray:

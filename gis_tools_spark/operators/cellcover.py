@@ -31,11 +31,10 @@ multi-resolution tiles.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .. import cells as C
+from . import core
 
 __all__ = ["compact_cells", "uncompact_cells", "compact_sql"]
 
@@ -91,13 +90,6 @@ def _compact_local(cells: "np.ndarray", min_res: int) -> "np.ndarray":
     return cur
 
 
-# covers up to this many rows compact on the driver in one numpy pass
-# (8 MB collected at the default; same bytes/rows gating as the sjoin
-# broadcast sidecars). Above it, the distributed per-level loop runs.
-COMPACT_LOCAL_MAX_ROWS = int(os.environ.get("GTS_COMPACT_LOCAL_ROWS",
-                                            "1000000"))
-
-
 def compact_cells(cover: DataFrame, *, cell_col: str = "cell",
                   min_res: int = 0) -> DataFrame:
     """Compact a cell cover: every complete 4-sibling quartet collapses
@@ -106,13 +98,7 @@ def compact_cells(cover: DataFrame, *, cell_col: str = "cell",
     single-res cover or any valid mixed-res cover). Output: same single
     ``cell_col`` column, mixed resolutions."""
     df = cover.select(F.col(cell_col).cast("long").alias(cell_col))
-    res_expr = (F.col(cell_col) / F.lit(_RES_UNIT)).cast("long")
-    lo_hi = df.agg(F.min(res_expr).alias("lo"),
-                   F.max(res_expr).alias("hi"),
-                   F.count("*").alias("n")).collect()[0]
-    if lo_hi["hi"] is None:
-        return df
-    if int(lo_hi["n"]) <= COMPACT_LOCAL_MAX_ROWS:
+    if core.small_side(df, max_rows=core.DRIVER_MAX_ROWS):
         # small cover: the cascade is a driver-local numpy pass instead
         # of ~2 jobs per resolution level (round-6; the sf0.1 gate paid
         # ~20 KB-sized jobs for a 1 MB cover)
@@ -123,10 +109,13 @@ def compact_cells(cover: DataFrame, *, cell_col: str = "cell",
         return df.sparkSession.createDataFrame(
             pd.DataFrame({cell_col: np.sort(out)}),
             schema=f"{cell_col} long")
-    rmin_in, rmax = int(lo_hi["lo"]), int(lo_hi["hi"])
     npart = max(df.rdd.getNumPartitions(), 1)
     cur = df.persist()
-    cur.count()
+    # one job: fills the cache and reads the resolution band
+    res_expr = (F.col(cell_col) / F.lit(_RES_UNIT)).cast("long")
+    lo_hi = cur.agg(F.min(res_expr).alias("lo"),
+                    F.max(res_expr).alias("hi")).collect()[0]
+    rmin_in, rmax = int(lo_hi["lo"]), int(lo_hi["hi"])
     for r in range(rmax, min_res, -1):
         cell = F.col(cell_col)
         res_c = (cell / F.lit(_RES_UNIT)).cast("long")

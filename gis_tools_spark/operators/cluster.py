@@ -85,6 +85,16 @@ def _eps_pairs_unordered(points: DataFrame, *, id_col: str,
             .select("ia", "ib"))
 
 
+def _mirror(u: DataFrame, points: DataFrame, id_col: str) -> DataFrame:
+    """Ordered pair relation from the unordered pairs ``u``: both
+    orientations plus the self pairs. ``u`` is read twice, so callers
+    persist it (scoped) or its grid join runs twice."""
+    return (u.unionAll(u.select(F.col("ib").alias("ia"),
+                                F.col("ia").alias("ib")))
+            .unionAll(points.select(F.col(id_col).alias("ia"),
+                                    F.col(id_col).alias("ib"))))
+
+
 def eps_neighbor_pairs(points: DataFrame, *, id_col: str = "id",
                        lon: str = "lon", lat: str = "lat",
                        eps: float) -> DataFrame:
@@ -92,11 +102,8 @@ def eps_neighbor_pairs(points: DataFrame, *, id_col: str = "id",
     the self pair (ia == ib) — the unordered forward-stencil join
     mirrored both ways plus the self pairs."""
     u = _eps_pairs_unordered(points, id_col=id_col, lon=lon, lat=lat,
-                             eps=eps)
-    return (u.unionAll(u.select(F.col("ib").alias("ia"),
-                                F.col("ia").alias("ib")))
-            .unionAll(points.select(F.col(id_col).alias("ia"),
-                                    F.col(id_col).alias("ib"))))
+                             eps=eps).persist()
+    return persist_scoped(u, _mirror(u, points, id_col))
 
 
 def dbscan(points: DataFrame, *, id_col: str = "id",
@@ -227,11 +234,9 @@ def st_neighbor_pairs(points: DataFrame, *, id_col: str = "id",
     included) — the unordered forward-stencil join mirrored both ways
     plus the self pairs."""
     u = _st_pairs_unordered(points, id_col=id_col, lon=lon, lat=lat,
-                            ts_col=ts_col, eps=eps, eps_t_s=eps_t_s)
-    return (u.unionAll(u.select(F.col("ib").alias("ia"),
-                                F.col("ia").alias("ib")))
-            .unionAll(points.select(F.col(id_col).alias("ia"),
-                                    F.col(id_col).alias("ib"))))
+                            ts_col=ts_col, eps=eps,
+                            eps_t_s=eps_t_s).persist()
+    return persist_scoped(u, _mirror(u, points, id_col))
 
 
 def st_dbscan(points: DataFrame, *, id_col: str = "id",

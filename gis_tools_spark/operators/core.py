@@ -21,6 +21,7 @@ Scale design notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator
 
 import numpy as np
@@ -29,6 +30,8 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .. import cells as C
 from ..geom import kernels as K, wkb
+
+_log = logging.getLogger("gis_tools_spark")
 
 # Salt column used by the skew-handling equi-join.
 SALT_COL = "__salt"
@@ -90,6 +93,29 @@ def persist_scoped(cached: DataFrame, result: DataFrame) -> DataFrame:
     return result
 
 
+# Driver solves (CC contracted graph, watershed chase, compact_cells)
+# collect inputs up to this many rows: 2M two-key rows are ~30 MB.
+DRIVER_MAX_ROWS = 2_000_000
+
+
+def small_side(df: DataFrame, *, max_rows: int, max_bytes: int | None = None,
+               bytes_col: str | None = None) -> bool:
+    """The one broadcast / driver-solve size gate: ``df`` has at most
+    ``max_rows`` rows and, with ``max_bytes``, at most that many bytes
+    in ``bytes_col`` (100k polygons of 1 MB WKB would be 100 GB on the
+    driver). One column-pruned aggregate job."""
+    aggs = [F.count("*").alias("n")]
+    if max_bytes is not None:
+        aggs.append(F.coalesce(F.sum(F.length(F.col(bytes_col))),
+                               F.lit(0)).alias("nbytes"))
+    stat = df.select(*aggs).collect()[0]
+    nbytes = stat["nbytes"] if max_bytes is not None else None
+    small = stat["n"] <= max_rows and (nbytes is None or nbytes <= max_bytes)
+    _log.debug("small_side rows=%d bytes=%s max_rows=%d max_bytes=%s "
+               "small=%s", stat["n"], nbytes, max_rows, max_bytes, small)
+    return small
+
+
 def cpu_grouped(df: DataFrame, *keys: str):
     """groupBy for CPU-heavy, byte-light group kernels: repartition on
     the keys with an EXPLICIT partition count first. AQE's
@@ -125,12 +151,7 @@ def cover_res_for_bounds(mnx: float, mny: float, mxx: float, mxy: float,
     res; the generic sjoin matches through cell-hierarchy ancestors of
     the observed res sets)."""
     res = C.adaptive_res(mnx, mny, mxx, mxy, res_min, res_max, max_cells)
-    while res > 0:
-        n = 1 << res
-        ncx = int((mxx + 180.0) / 360.0 * n) - int((mnx + 180.0) / 360.0 * n) + 1
-        ncy = int((mxy + 90.0) / 180.0 * n) - int((mny + 90.0) / 180.0 * n) + 1
-        if ncx * ncy <= max_cells:
-            break
+    while res > 0 and C.bbox_cell_count(mnx, mny, mxx, mxy, res) > max_cells:
         res -= 1
     return res
 

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .. import cells as C
 from ..geom import kernels as K, wkb
+from .core import small_side
 
 
 def nearest_feature(points: DataFrame, features: DataFrame, *,
@@ -40,7 +41,8 @@ def nearest_feature(points: DataFrame, features: DataFrame, *,
                     strategy: str = "auto") -> DataFrame:
     """Returns one row per point: point cols + (feat_id, nearest_dist)."""
     if strategy == "auto":
-        strategy = "broadcast" if features.count() <= broadcast_max_rows else "rings"
+        strategy = ("broadcast" if small_side(
+            features, max_rows=broadcast_max_rows) else "rings")
     if strategy == "broadcast":
         return _nearest_broadcast(points, features, lon=lon, lat=lat,
                                   point_id=point_id, feat_wkb=feat_wkb,

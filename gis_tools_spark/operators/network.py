@@ -14,7 +14,6 @@ shuffling each component once.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -22,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..geom import wkb
+from ..plans.fixpoint import fixpoint
 
 KEY_DECIMALS = 9  # coordinate rounding for node identity
 
@@ -106,14 +106,6 @@ def _cc_pairs_pandas(a: "pd.Series", b: "pd.Series") -> "pd.DataFrame":
     return out[["node", "lroot"]]
 
 
-# contracted graphs up to this many rows are solved ON THE DRIVER and
-# broadcast back (same bytes/rows gating as the sjoin broadcast
-# sidecars: 2M two-key rows ≈ 30 MB collected). Above it, the
-# distributed pointer-jumping rounds run — nothing is ever required to
-# fit in one machine.
-CC_DRIVER_MAX_ROWS = int(os.environ.get("GTS_CC_DRIVER_EDGES", "2000000"))
-
-
 def connected_components(edges: DataFrame, *, max_iter: int = 64) -> DataFrame:
     """(node, component = MIN node id in the component), all endpoint
     nodes included. Two-level plan (round-6 rewrite — the old all-rounds
@@ -127,12 +119,13 @@ def connected_components(edges: DataFrame, *, max_iter: int = 64) -> DataFrame:
        of the node's LOCAL component. Output size ≈ nodes × partition
        multiplicity, tiny next to the edge list.
     2. **Contracted graph.** A node seen in several tasks links all its
-       lroots; pointer-jumping min-label rounds run only on that
-       contracted lroot graph — usually orders of magnitude smaller and
-       shallower than the input (a clique-ish cluster collapses to one
-       lroot per task slice). Worst case (path graph scattered round-
-       robin) degenerates to the old per-round cost on an edge set no
-       larger than before.
+       lroots. Under the shared driver gate (core.DRIVER_MAX_ROWS) the
+       contracted lroot graph is solved on the driver and its label map
+       broadcast back; above it, pointer-jumping min-label rounds run
+       on it — usually orders of magnitude smaller and shallower than
+       the input (a clique-ish cluster collapses to one lroot per task
+       slice). Worst case (path graph scattered round-robin) degenerates
+       to the old per-round cost on an edge set no larger than before.
 
     The result is a pure function of the input SET (mins are
     order-independent), so partitioning does not leak into labels.
@@ -163,63 +156,53 @@ def connected_components(edges: DataFrame, *, max_iter: int = 64) -> DataFrame:
                      F.explode("__ls").alias("dst_key"))
           .where(F.col("src_key") != F.col("dst_key"))
           .localCheckpoint(eager=True))
-    n2 = e2.count()        # cheap scan of the checkpointed blocks
-    if n2 == 0:
-        # every node saw exactly one task — local labels are global
-        # (common once AQE has coalesced a small edge list); skip the
-        # contracted rounds entirely
-        out = (mapping.groupBy("node")
-               .agg(F.min("lroot").alias("component"))
-               .localCheckpoint(eager=True))
-    else:
-        if n2 <= CC_DRIVER_MAX_ROWS:
-            # solve the contracted graph on the driver and broadcast the
-            # label map back (guide §3.1: broadcast the side that fits)
-            pdf = e2.toPandas()
-            lab_pd = _cc_pairs_pandas(pdf["src_key"], pdf["dst_key"])
-            spark_ = edges.sparkSession
-            lab2 = F.broadcast(spark_.createDataFrame(
-                lab_pd.rename(columns={"lroot": "component"}),
-                schema=f"node {key_t}, component {key_t}"))
-        else:
-            # distributed pointer-jumping rounds. (A recursive
-            # contract-again variant was measured and REVERTED: each
-            # level's logical plan nests the previous one — persist does
-            # not truncate plans — and driver planning time blew up 5x,
-            # bimodally, on the st_dbscan gate.)
-            lab2 = _minlabel_rounds(e2, max_iter=max_iter)
-        out = (mapping.join(lab2.withColumnRenamed("node", "lroot"),
-                            on="lroot", how="left")
-               .groupBy("node")
-               .agg(F.min(F.coalesce("component", F.col("lroot")))
-                    .alias("component"))
-               .localCheckpoint(eager=True))
+    # distributed path: min-label rounds on the symmetrized contracted
+    # graph. (A recursive contract-again variant was measured and
+    # REVERTED: each level's logical plan nests the previous one —
+    # persist does not truncate plans — and driver planning time blew
+    # up 5x, bimodally, on the st_dbscan gate.)
+    und = (e2.select(F.col("src_key").alias("a"), F.col("dst_key").alias("b"))
+           .unionAll(e2.select(F.col("dst_key").alias("a"),
+                               F.col("src_key").alias("b")))
+           .distinct()).persist()
+    lab2, _, _ = fixpoint(
+        "connected_components", e2, _minlabel_step(und),
+        max_rounds=max_iter,
+        start=lambda _: (und.select(F.col("a").alias("node")).distinct()
+                         .withColumn("component", F.col("node"))
+                         .localCheckpoint(eager=True)),
+        driver=lambda pdf: _cc_pairs_pandas(
+            pdf["src_key"], pdf["dst_key"]).rename(
+                columns={"lroot": "component"}),
+        schema=f"node {key_t}, component {key_t}")
+    und.unpersist()
+    out = (mapping.join(lab2.withColumnRenamed("node", "lroot"),
+                        on="lroot", how="left")
+           .groupBy("node")
+           .agg(F.min(F.coalesce("component", F.col("lroot")))
+                .alias("component"))
+           .localCheckpoint(eager=True))
     mapping.unpersist()
     return out
 
 
-def _minlabel_rounds(edges: DataFrame, *, max_iter: int = 64) -> DataFrame:
-    """Min-label propagation with pointer jumping (the pre-round-6
-    connected_components core), now run only on the contracted lroot
-    graph: per round (1) neighbor-min propagation, (2) label compression
-    `component ← label(component)` — O(log diameter) rounds. The changed
-    flag is computed INSIDE the checkpointed frame (one cheap scan per
-    round instead of a labels⋈labels join job)."""
-    und = (edges.select(F.col("src_key").alias("a"), F.col("dst_key").alias("b"))
-           .unionAll(edges.select(F.col("dst_key").alias("a"), F.col("src_key").alias("b")))
-           .distinct()).persist()
-    labels = (und.select(F.col("a").alias("node"))
-              .distinct()
-              .withColumn("component", F.col("node"))
-              .localCheckpoint(eager=True))
-    for _ in range(max_iter):
+def _minlabel_step(und: DataFrame):
+    """One min-label propagation round with pointer jumping over the
+    symmetrized edge set ``und`` (a, b): (1) neighbor-min propagation,
+    (2) label compression `component ← label(component)` — O(log
+    diameter) rounds. The changed flag is computed INSIDE the frame the
+    loop checkpoints (one cheap scan per round instead of a
+    labels⋈labels join job)."""
+    def step(labels: DataFrame) -> DataFrame:
         cand = (und.join(labels.withColumnRenamed("node", "b")
                          .withColumnRenamed("component", "nbr_comp"), on="b")
                 .groupBy("a").agg(F.min("nbr_comp").alias("min_nbr")))
-        prop = (labels.join(cand.withColumnRenamed("a", "node"), on="node", how="left")
+        prop = (labels.join(cand.withColumnRenamed("a", "node"), on="node",
+                            how="left")
                 .select("node", F.col("component").alias("__old"),
                         F.least(F.col("component"),
-                                F.coalesce(F.col("min_nbr"), F.col("component")))
+                                F.coalesce(F.col("min_nbr"),
+                                           F.col("component")))
                         .alias("component"))
                 .localCheckpoint(eager=True))
         # pointer jumping: component ids are node keys, so compress one
@@ -230,20 +213,10 @@ def _minlabel_rounds(edges: DataFrame, *, max_iter: int = 64) -> DataFrame:
                             F.col("component").alias("root")))
         comp = F.least(F.col("component"),
                        F.coalesce(F.col("root"), F.col("component")))
-        new = (prop.join(root, on="component", how="left")
-               .select("node", comp.alias("component"),
-                       (comp != F.col("__old")).alias("__chg"))
-               .localCheckpoint(eager=True))
-        changed = new.where("__chg").limit(1).count()
-        labels = new.drop("__chg")
-        if changed == 0:
-            # labels are eagerly checkpointed — the edge set is no
-            # longer referenced (round-3 advisory: persist leak)
-            und.unpersist()
-            return labels
-    und.unpersist()
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds")
+        return (prop.join(root, on="component", how="left")
+                .select("node", comp.alias("component"),
+                        (comp != F.col("__old")).alias("__chg")))
+    return step
 
 
 def expand_directed(edges: DataFrame, *, direction_col: str = "direction") -> DataFrame:
@@ -328,14 +301,15 @@ def _bellman_ford(edges: DataFrame, sources: list[str], weight_col: str,
     # attribute rewrite: "key not found: source#N")
     init = spark.createDataFrame([(s, s, 0.0) for s in sources],
                                  "source string, node string, dist double")
+    # the state carries the frontier as `__front` (rows improved last
+    # round); the init rows are the first frontier
     dist = (init.join(nodes, on="node")
-            .select("source", "node", "dist")
+            .select("source", "node", "dist",
+                    F.lit(True).alias("__front"))
             .localCheckpoint(eager=True))
-    frontier = dist
-    it = 0
-    while True:
-        it += 1
-        cand = (frontier.join(sym, frontier["node"] == sym["u"])
+
+    def relax(state: DataFrame) -> DataFrame:
+        cand = (state.where("__front").join(sym, F.col("node") == sym["u"])
                 .select("source", F.col("v").alias("node"),
                         (F.col("dist") + F.col("w")).alias("dist")))
         if cutoff is not None:
@@ -344,30 +318,28 @@ def _bellman_ford(edges: DataFrame, sources: list[str], weight_col: str,
             # the isochrone instead of flooding the whole component
             cand = cand.where(F.col("dist") <= F.lit(float(cutoff)))
         cand = cand.groupBy("source", "node").agg(F.min("dist").alias("dist"))
-        # one materialization per round (round-6): the relax merge and
-        # the improved flag land in the SAME checkpointed frame —
-        # previously `improved` and the dist merge were two checkpoint
-        # jobs per round (F.least skips nulls, so the full join merges
-        # discovered-vs-known rows directly)
-        merged = (dist.withColumnRenamed("dist", "__d_old")
-                  .join(cand, on=["source", "node"], how="full")
-                  .select("source", "node",
-                          F.least("dist", "__d_old").alias("dist"),
-                          (F.col("__d_old").isNull()
-                           | (F.col("dist") < F.col("__d_old")))
-                          .alias("__imp"))
-                  .localCheckpoint(eager=True))
-        changed = merged.where("__imp").limit(1).count()
-        if max_iter and it >= max_iter:
-            # contract parity with the pre-round-6 loop: hitting the
-            # iteration cap DISCARDS the capped round's relaxations
-            break
-        dist = merged.drop("__imp")
-        if changed == 0:
-            break
-        frontier = merged.where("__imp").drop("__imp")
+        # the relax merge and the improved flag land in the SAME frame
+        # (F.least skips nulls, so the full join merges discovered-vs-
+        # known rows directly)
+        imp = (F.col("__d_old").isNull()
+               | (F.col("dist") < F.col("__d_old")))
+        return (state.select("source", "node", F.col("dist").alias("__d_old"))
+                .join(cand, on=["source", "node"], how="full")
+                .select("source", "node",
+                        F.least("dist", "__d_old").alias("dist"),
+                        imp.alias("__front"), imp.alias("__chg")))
+
+    # a user cap of max_iter rounds keeps the pre-round-6 contract: the
+    # capped round's relaxations are discarded, so max_iter - 1 rounds
+    # run and no error is raised. Uncapped, a simple shortest path has
+    # fewer hops than the graph has nodes, so one round more than that
+    # always converges unless a negative cycle exists.
+    dist, _, _ = fixpoint(
+        "shortest_paths", dist, relax,
+        max_rounds=max_iter - 1 if max_iter else nodes.count() + 1,
+        strict=not max_iter)
     sym.unpersist()
-    return dist
+    return dist.drop("__front")
 
 
 def shortest_paths(edges: DataFrame, sources: list[str], *,

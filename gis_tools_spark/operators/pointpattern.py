@@ -309,7 +309,7 @@ def _nn_ladder(a: DataFrame, b: DataFrame, radii, *, same_set: bool,
                 .groupBy("ra").agg(F.min(d2).alias("nn_d2")))
 
     unresolved = qa
-    to_unpersist = [] if same_set else [qb]   # qa is checkpointed, not persisted
+    to_unpersist = [] if same_set else [qb]   # qa is checkpointed: see below
     found = []
     n_found = 0
     for k, rk in enumerate(r_int):
@@ -337,6 +337,9 @@ def _nn_ladder(a: DataFrame, b: DataFrame, radii, *, same_set: bool,
            .agg(F.count("*").alias("__c")).collect()}
     for df in to_unpersist:
         df.unpersist()
+    # release qa's checkpoint blocks too: nothing returned reads them,
+    # and local checkpoints are otherwise freed only on driver GC
+    qa._jdf.queryExecution().logical().rdd().unpersist(False)
     # the ladder is len(radii) rows — materialize the cumulative sums
     # driver-side (frees the persisted intermediates immediately and
     # keeps the returned plan trivially small)

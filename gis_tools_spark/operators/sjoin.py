@@ -40,6 +40,7 @@ from .core import (
     refine_covers,
     salt_dim_side,
     salt_fact_side,
+    small_side,
 )
 
 
@@ -84,17 +85,9 @@ def pip_join(points: DataFrame, polygons: DataFrame, *,
         points = points.withColumn("__rid", F.monotonically_increasing_id())
 
     if strategy == "auto":
-        # gate on bytes, not row count: 100k polygons of 1 MB WKB each
-        # would be 100 GB on the driver. One column-pruned pass gives
-        # both count and payload size.
-        stat = polygons.select(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.length(F.col(poly_wkb))), F.lit(0)).alias("nbytes"),
-        ).collect()[0]
-        strategy = ("broadcast"
-                    if stat["n"] <= broadcast_max_rows
-                    and stat["nbytes"] <= broadcast_max_bytes
-                    else "cell")
+        strategy = ("broadcast" if small_side(
+            polygons, max_rows=broadcast_max_rows,
+            max_bytes=broadcast_max_bytes, bytes_col=poly_wkb) else "cell")
 
     if strategy == "broadcast":
         matched = _pip_broadcast(points, polygons, lon=lon, lat=lat,
@@ -112,15 +105,22 @@ def pip_join(points: DataFrame, polygons: DataFrame, *,
                                  keep_poly_wkb=keep_poly_wkb,
                                  force_shuffle=force_shuffle)
 
+    return _join_back(points, matched, how, orig_points.columns)
+
+
+def _join_back(rid_side: DataFrame, matched: DataFrame, how: str,
+               cols: list[str]) -> DataFrame:
+    """how='inner': the matched rows. how='left': every ``rid_side`` row
+    (it carries the `__rid` surrogate id) with the matched right-side
+    columns, null where nothing matched."""
     if how == "inner":
         return matched
-    if how == "left":
-        right_cols = [c for c in matched.columns if c not in points.columns]
-        return (points.join(matched.select("__rid", *right_cols),
-                            on="__rid", how="left")
-                .drop("__rid")
-                .select(*orig_points.columns, *right_cols))
-    raise ValueError(f"how={how!r}")
+    if how != "left":
+        raise ValueError(f"how={how!r}")
+    rcols = [c for c in matched.columns if c not in rid_side.columns]
+    return (rid_side.join(matched.select("__rid", *rcols), on="__rid",
+                          how="left")
+            .drop("__rid").select(*cols, *rcols))
 
 
 def _pip_cell_join(points: DataFrame, polygons: DataFrame, *, lon, lat,
@@ -200,6 +200,39 @@ def _pip_cell_join(points: DataFrame, polygons: DataFrame, *, lon, lat,
     return refined if keep_poly_wkb else refined.drop(poly_wkb)
 
 
+# cells one geometry may add to a broadcast cell index (see _cell_index)
+_MAX_INDEX_CELLS = 4096
+
+
+def _cell_index(geoms: list, res: int):
+    """CSR cell → geometry index over decoded ``geoms`` (None skipped)
+    at ``res``: (sorted unique cells, start and count of each cell's run
+    in ``flat``, ``flat`` geometry indices, oversize indices). Worker
+    lookup is one np.searchsorted over a whole batch instead of a
+    per-row dict loop. Fan-out cap: a geometry whose bbox spans more
+    than _MAX_INDEX_CELLS cells (a continent/world polygon would
+    enumerate an unbounded cell list) goes to the oversize list, tested
+    against every batch instead (bounded: such geometries are few)."""
+    cells, owners, big = [], [], []
+    for i, g in enumerate(geoms):
+        if g is None:
+            continue
+        box = K.bounds(g)
+        if C.bbox_cell_count(*box, res) > _MAX_INDEX_CELLS:
+            big.append(i)
+            continue
+        cc = C.bbox_to_cells(*box, res)
+        cells.append(cc)
+        owners.append(np.full(len(cc), i, dtype=np.int64))
+    pc = np.concatenate(cells).astype(np.int64) if cells \
+        else np.zeros(0, np.int64)
+    pg = np.concatenate(owners) if owners else np.zeros(0, np.int64)
+    o = np.argsort(pc, kind="stable")
+    ucells, starts, counts = np.unique(pc[o], return_index=True,
+                                       return_counts=True)
+    return ucells, starts, counts, pg[o], np.asarray(big, dtype=np.int64)
+
+
 def _broadcast_hits_udf(spark_session, polygons: DataFrame, *,
                         poly_wkb: str, predicate: str, res: int):
     """Shared broadcast-CSR point-in-polygon kernel: returns
@@ -207,37 +240,9 @@ def _broadcast_hits_udf(spark_session, polygons: DataFrame, *,
     matching polygon indices per point. Used by the batch broadcast
     join (_pip_broadcast) and the streaming-safe tagger (pip_tag)."""
     poly_rows = polygons.collect()
-    geoms = []
-    pair_cells: list[int] = []
-    pair_poly: list[int] = []
-    big_polys: list[int] = []
-    for i, row in enumerate(poly_rows):
-        g = wkb.decode(row[poly_wkb])
-        mnx, mny, mxx, mxy = K.bounds(g)
-        geoms.append((g, row))
-        n_ = 1 << res
-        ncx = int((mxx + 180.0) / 360.0 * n_) - int((mnx + 180.0) / 360.0 * n_) + 1
-        ncy = int((mxy + 90.0) / 180.0 * n_) - int((mny + 90.0) / 180.0 * n_) + 1
-        if ncx * ncy > 4096:
-            # fan-out cap: a continent/world polygon would enumerate an
-            # unbounded cell list — test it against every point batch
-            # instead (bounded: such polygons are few by construction)
-            big_polys.append(i)
-            continue
-        for c in C.bbox_to_cells(mnx, mny, mxx, mxy, res).tolist():
-            pair_cells.append(c)
-            pair_poly.append(i)
-    # CSR-style cell index: sorted unique cells + (start,count) into a
-    # flat polygon-index array — worker lookup is one np.searchsorted
-    # over the whole point batch instead of a per-point dict loop.
-    pc = np.asarray(pair_cells, dtype=np.int64)
-    pp = np.asarray(pair_poly, dtype=np.int64)
-    o = np.argsort(pc, kind="stable")
-    pc, pp = pc[o], pp[o]
-    ucells, starts, counts = np.unique(pc, return_index=True, return_counts=True)
-
+    geoms = [wkb.decode(row[poly_wkb]) for row in poly_rows]
     bc = spark_session.sparkContext.broadcast(
-        (geoms, ucells, starts, counts, pp, res, big_polys))
+        (geoms, *_cell_index(geoms, res), res))
 
     from pyspark.sql import types as T
 
@@ -249,11 +254,11 @@ def _broadcast_hits_udf(spark_session, polygons: DataFrame, *,
     # round-trip through the Python worker
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def _hits(lons: pd.Series, lats: pd.Series) -> pd.Series:
-        geoms_, ucells_, starts_, counts_, flat_, res_, big_ = bc.value
+        geoms_, ucells_, starts_, counts_, flat_, big_, res_ = bc.value
         n = len(lons)
         res_lists: list[list[int]] = [[] for _ in range(n)]
         nu = len(ucells_)
-        if n == 0 or (nu == 0 and not big_):
+        if n == 0 or (nu == 0 and not len(big_)):
             return pd.Series(res_lists)
         xs = lons.to_numpy(dtype=np.float64)
         ys = lats.to_numpy(dtype=np.float64)
@@ -282,15 +287,13 @@ def _broadcast_hits_udf(spark_session, polygons: DataFrame, *,
             bounds_ = np.append(pstarts, len(rep_poly))
             for k, pi in enumerate(upoly):
                 idx = rep_pts[bounds_[k]:bounds_[k + 1]]
-                g, _row = geoms_[int(pi)]
-                ok = test(g, xs[idx], ys[idx])
+                ok = test(geoms_[int(pi)], xs[idx], ys[idx])
                 if ok.any():
                     kp_pts.append(idx[ok])
                     kp_poly.append(np.full(int(ok.sum()), pi, dtype=np.int64))
         for pi in big_:
             # capped-fanout polygons: tested against the whole batch
-            g, _row = geoms_[int(pi)]
-            ok = test(g, xs, ys)
+            ok = test(geoms_[int(pi)], xs, ys)
             if ok.any():
                 kp_pts.append(np.nonzero(ok)[0])
                 kp_poly.append(np.full(int(ok.sum()), pi, dtype=np.int64))
@@ -426,23 +429,19 @@ def candidate_pairs(left: DataFrame, right: DataFrame, *,
     broadcast_gate=False to skip the extra dim-side scan."""
     from pyspark.storagelevel import StorageLevel
 
-    if broadcast_gate:
-        stat = right.select(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.length(F.col(right_wkb))),
-                       F.lit(0)).alias("nbytes")).collect()[0]
-        if (stat["n"] <= broadcast_max_rows
-                and stat["nbytes"] <= broadcast_max_bytes):
-            from ..functions.geom_funcs import geom_bounds_struct
-            bs = geom_bounds_struct()
-            lb = left.select(left_id, bs(F.col(left_wkb)).alias("__lb"))
-            rb = right.select(right_id, bs(F.col(right_wkb)).alias("__rb"))
-            cond = ((F.col("__lb.minx") <= F.col("__rb.maxx"))
-                    & (F.col("__lb.maxx") >= F.col("__rb.minx"))
-                    & (F.col("__lb.miny") <= F.col("__rb.maxy"))
-                    & (F.col("__lb.maxy") >= F.col("__rb.miny")))
-            return (lb.join(F.broadcast(rb), cond)
-                    .select(left_id, right_id))
+    if broadcast_gate and small_side(right, max_rows=broadcast_max_rows,
+                                     max_bytes=broadcast_max_bytes,
+                                     bytes_col=right_wkb):
+        from ..functions.geom_funcs import geom_bounds_struct
+        bs = geom_bounds_struct()
+        lb = left.select(left_id, bs(F.col(left_wkb)).alias("__lb"))
+        rb = right.select(right_id, bs(F.col(right_wkb)).alias("__rb"))
+        cond = ((F.col("__lb.minx") <= F.col("__rb.maxx"))
+                & (F.col("__lb.maxx") >= F.col("__rb.minx"))
+                & (F.col("__lb.miny") <= F.col("__rb.maxy"))
+                & (F.col("__lb.maxy") >= F.col("__rb.miny")))
+        return (lb.join(F.broadcast(rb), cond)
+                .select(left_id, right_id))
 
     lc = (explode_cover(left.select(left_id, left_wkb), left_wkb, CELL_COL,
                         res_min, res_max, max_cells)
@@ -528,38 +527,13 @@ def _sjoin_broadcast(left: DataFrame, right: DataFrame, *, left_wkb,
             and left.rdd.getNumPartitions() < sc_.defaultParallelism):
         left = left.repartition(sc_.defaultParallelism)
     right_rows = right.collect()
-    geoms = []
-    pair_cells: list[int] = []
-    pair_geom: list[int] = []
-    big: list[int] = []
-    for i, row in enumerate(right_rows):
-        b = row[right_wkb]
-        g = None if b is None else wkb.decode(b)
-        geoms.append(g)
-        if g is None:
-            continue
-        mnx, mny, mxx, mxy = K.bounds(g)
-        n_ = 1 << res
-        ncx = int((mxx + 180.0) / 360.0 * n_) - int((mnx + 180.0) / 360.0 * n_) + 1
-        ncy = int((mxy + 90.0) / 180.0 * n_) - int((mny + 90.0) / 180.0 * n_) + 1
-        if ncx * ncy > 4096:
-            big.append(i)
-            continue
-        for c in C.bbox_to_cells(mnx, mny, mxx, mxy, res).tolist():
-            pair_cells.append(c)
-            pair_geom.append(i)
-    pc = np.asarray(pair_cells, dtype=np.int64)
-    pg = np.asarray(pair_geom, dtype=np.int64)
-    o = np.argsort(pc, kind="stable")
-    pc, pg = pc[o], pg[o]
-    ucells, starts, counts = np.unique(pc, return_index=True,
-                                       return_counts=True)
-    bc = sc_.broadcast((geoms, ucells, starts, counts, pg, res,
-                        np.asarray(big, dtype=np.int64), predicate))
+    geoms = [None if row[right_wkb] is None else wkb.decode(row[right_wkb])
+             for row in right_rows]
+    bc = sc_.broadcast((geoms, *_cell_index(geoms, res), res, predicate))
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def _hits(lwkbs: pd.Series) -> pd.Series:
-        geoms_, uc, st, ct, flat, res_, big_, pred = bc.value
+        geoms_, uc, st, ct, flat, big_, res_, pred = bc.value
         out: list[list[int]] = [[] for _ in range(len(lwkbs))]
         if len(lwkbs) == 0 or (len(uc) == 0 and len(big_) == 0):
             return pd.Series(out)
@@ -575,16 +549,11 @@ def _sjoin_broadcast(left: DataFrame, right: DataFrame, *, left_wkb,
                 continue
             g = _dec(lb)
             lefts.append(g)
-            mnx, mny, mxx, mxy = K.bounds(g)
-            n_ = 1 << res_
-            ncx = (int((mxx + 180.0) / 360.0 * n_)
-                   - int((mnx + 180.0) / 360.0 * n_) + 1)
-            ncy = (int((mxy + 90.0) / 180.0 * n_)
-                   - int((mny + 90.0) / 180.0 * n_) + 1)
-            if ncx * ncy > 4096:
+            box = K.bounds(g)
+            if C.bbox_cell_count(*box, res_) > _MAX_INDEX_CELLS:
                 ridx = np.arange(len(geoms_), dtype=np.int64)
             elif len(uc):
-                cells = C.bbox_to_cells(mnx, mny, mxx, mxy, res_)
+                cells = C.bbox_to_cells(*box, res_)
                 pos = np.searchsorted(uc, cells)
                 pos_c = np.minimum(pos, len(uc) - 1)
                 hit = np.nonzero(uc[pos_c] == cells)[0]
@@ -687,29 +656,13 @@ def sjoin(left: DataFrame, right: DataFrame, *,
         left = left.withColumn("__rid", F.monotonically_increasing_id())
 
     if strategy == "auto":
-        # bytes gate, not rows (mirrors pip_join): 100k x 1 MB polygons
-        # would be 100 GB on the driver
-        stat = right.select(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum(F.length(F.col(right_wkb))),
-                       F.lit(0)).alias("nbytes")).collect()[0]
-        strategy = ("broadcast"
-                    if stat["n"] <= broadcast_max_rows
-                    and stat["nbytes"] <= broadcast_max_bytes
-                    else "cell")
+        strategy = ("broadcast" if small_side(
+            right, max_rows=broadcast_max_rows,
+            max_bytes=broadcast_max_bytes, bytes_col=right_wkb) else "cell")
     if strategy == "broadcast":
-        refined = _sjoin_broadcast(left, right, left_wkb=left_wkb,
-                                   right_wkb=right_wkb, predicate=predicate,
-                                   res=res_min)
-        if how == "inner":
-            return refined
-        if how == "left":
-            rcols = [c for c in refined.columns if c not in left.columns]
-            return (left.join(refined.select("__rid", *rcols),
-                              on="__rid", how="left")
-                    .drop("__rid")
-                    .select(*orig_left.columns, *rcols))
-        raise ValueError(how)
+        return _join_back(left, _sjoin_broadcast(
+            left, right, left_wkb=left_wkb, right_wkb=right_wkb,
+            predicate=predicate, res=res_min), how, orig_left.columns)
     if strategy != "cell":
         raise ValueError(f"strategy={strategy!r}")
 
@@ -744,11 +697,4 @@ def sjoin(left: DataFrame, right: DataFrame, *,
         return pd.Series(keep)
 
     refined = cand.where(_pair_flag(F.col(left_wkb), F.col(right_wkb)))
-    if how == "inner":
-        return refined
-    if how == "left":
-        rcols = [c for c in refined.columns if c not in left.columns]
-        return (left.join(refined.select("__rid", *rcols), on="__rid", how="left")
-                .drop("__rid")
-                .select(*orig_left.columns, *rcols))
-    raise ValueError(how)
+    return _join_back(left, refined, how, orig_left.columns)

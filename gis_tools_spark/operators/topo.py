@@ -5,8 +5,8 @@ touching geometries until fixpoint), self-overlap detection
 (layer.py:1668-1713 fix_overlap).
 
 Physical shape: intersects self-join (cell filter + exact refine) →
-connected components (label propagation over the pair graph) →
-per-component applyInPandas combine.
+connected components (network.connected_components over the pair
+graph) → per-component applyInPandas combine.
 """
 
 from __future__ import annotations
@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..geom import kernels as K, wkb
+from .network import connected_components
 from .sjoin import sjoin
 
 
@@ -31,32 +32,7 @@ def overlapping_pairs(df: DataFrame, *, wkb_col: str = "geometry_wkb",
 def has_overlap(df: DataFrame, **kw) -> bool:
     """Any two geometries in the layer intersect (reference
     layer.py:1715-1726)."""
-    return overlapping_pairs(df, **kw).limit(1).count() > 0
-
-
-def _components_from_pairs(df: DataFrame, pairs: DataFrame, id_col: str,
-                           max_iter: int = 50) -> DataFrame:
-    """(id, component) labels: component = min reachable id."""
-    und = (pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-           .unionAll(pairs.select(F.col("id_b").alias("a"), F.col("id_a").alias("b"))))
-    labels = df.select(F.col(id_col).alias("a")).distinct() \
-               .withColumn("component", F.col("a"))
-    for _ in range(max_iter):
-        cand = (und.join(labels.withColumnRenamed("a", "b"), on="b")
-                .groupBy("a").agg(F.min("component").alias("min_nbr")))
-        new = (labels.drop("component")
-               .join(cand, on="a", how="left")
-               .join(labels, on="a")
-               .select("a", F.least(F.col("component"),
-                                    F.coalesce(F.col("min_nbr"), F.col("component")))
-                       .alias("component"))
-               .localCheckpoint(eager=True))
-        changed = (new.join(labels.withColumnRenamed("component", "old"), on="a")
-                   .where("component != old").limit(1).count())
-        labels = new
-        if changed == 0:
-            break
-    return labels.withColumnRenamed("a", id_col)
+    return bool(overlapping_pairs(df, **kw).take(1))
 
 
 def dissolve_touching(df: DataFrame, *, wkb_col: str = "geometry_wkb",
@@ -70,11 +46,16 @@ def dissolve_touching(df: DataFrame, *, wkb_col: str = "geometry_wkb",
     exact coverage; overlapping interiors are retained in the parts
     (full boundary-merging union needs the general clipping kernel)."""
     pairs = overlapping_pairs(df, wkb_col=wkb_col, id_col=id_col)
-    labels = _components_from_pairs(df, pairs, id_col)
-    j = df.join(labels, on=id_col)
+    comp = connected_components(pairs.select(
+        F.col("id_a").alias("src_key"), F.col("id_b").alias("dst_key")))
+    # ids that touch nothing are absent from the pair graph: each is its
+    # own component
+    j = (df.join(comp.withColumnRenamed("node", id_col), on=id_col,
+                 how="left")
+         .withColumn("component", F.coalesce("component", F.col(id_col))))
 
     schema = T.StructType([
-        labels.schema["component"],
+        j.schema["component"],
         T.StructField(wkb_col, T.BinaryType()),
         T.StructField("n_members", T.IntegerType()),
         T.StructField("member_ids", T.ArrayType(df.schema[id_col].dataType)),

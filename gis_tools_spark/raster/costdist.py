@@ -30,7 +30,7 @@ Round-5 rework (round-4 verdict asks #1/#3):
   strips end-to-end (fmt ``raw_f64``): a float32 carry rounds at
   every tile crossing, which is both less accurate at mosaic scale
   and breaks value-level oracle agreement for the driver gate;
-- convergence is detected with a per-tile ``__changed`` flag computed
+- convergence is detected with a per-tile ``__chg`` flag computed
   inside the sweep kernel (the old plan re-joined the new tiles to
   the old ones on image_id to byte-compare — a whole extra shuffle
   per sweep);
@@ -50,6 +50,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.fixpoint import fixpoint
 from . import codec
 from .stitch import STRIP_SCHEMA, _grid_indexed, apply_halo, emit_strip_rows
 
@@ -103,7 +104,9 @@ def cost_distance(cost: DataFrame, source_cells: list[tuple[int, int]], *,
     tile rows with `bytes` replaced by the float64 distance raster
     (fmt ``raw_f64``; +inf = unreachable, the no-data value where the
     cost was no-data) and the cost preserved in
-    `cost_bytes`/`cost_fmt`."""
+    `cost_bytes`/`cost_fmt`. Raises ValueError on a negative cost (the
+    sweeps would never settle) and RuntimeError when ``max_iters``
+    sweeps do not reach the fixed point."""
     t, _, _ = _grid_indexed(cost)
     srcs = sorted(set(source_cells))
 
@@ -114,6 +117,11 @@ def cost_distance(cost: DataFrame, source_cells: list[tuple[int, int]], *,
                 r = pdf.iloc[i].copy()
                 w, h = int(r["w"]), int(r["h"])
                 arr = codec.decode(r["bytes"], w, h, r["fmt"])
+                if (arr[arr != no_data] < 0).any():
+                    raise ValueError(
+                        f"cost_distance: negative cost in tile "
+                        f"({int(r['__col'])}, {int(r['__row'])}); entry "
+                        f"costs must be >= 0 for the sweeps to converge")
                 dist = np.full((h, w), np.inf, dtype=np.float64)
                 dist[arr == no_data] = no_data
                 tx, ty = int(r["__col"]), int(r["__row"])
@@ -134,7 +142,7 @@ def cost_distance(cost: DataFrame, source_cells: list[tuple[int, int]], *,
         f"{f.name} {f.dataType.simpleString()}" for f in t.schema.fields
     ) + ", cost_bytes binary, cost_fmt string"
     cur = t.mapInPandas(_init, schema=schema).localCheckpoint(eager=True)
-    sweep_schema = schema + ", __changed boolean"
+    sweep_schema = schema + ", __chg boolean"
     cols = cur.columns
 
     def _emit_strips(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -170,19 +178,16 @@ def cost_distance(cost: DataFrame, source_cells: list[tuple[int, int]], *,
                 flags.append(not np.array_equal(enc, arr))
             out_pdf = pdf[cols].copy()
             out_pdf["bytes"] = pd.Series(bufs, index=pdf.index, dtype=object)
-            out_pdf["__changed"] = flags
+            out_pdf["__chg"] = flags
             yield out_pdf
 
-    for _ in range(max_iters):
+    def sweep(cur: DataFrame) -> DataFrame:
         strips = (cur.mapInPandas(_emit_strips, schema=STRIP_SCHEMA)
                   .groupBy("__col", "__row")
                   .agg(F.collect_list(
                       F.struct("dc", "dr", "strip")).alias("__halo")))
-        nxt = (cur.join(strips, on=["__col", "__row"], how="left")
-               .mapInPandas(_sweep_kernel, schema=sweep_schema)
-               .localCheckpoint(eager=True))
-        changed = nxt.where("__changed").limit(1).count()
-        cur = nxt.drop("__changed")
-        if changed == 0:
-            break
+        return (cur.join(strips, on=["__col", "__row"], how="left")
+                .mapInPandas(_sweep_kernel, schema=sweep_schema))
+
+    cur, _, _ = fixpoint("cost_distance", cur, sweep, max_rounds=max_iters)
     return cur.drop("__col", "__row")

@@ -33,6 +33,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.fixpoint import fixpoint
 from . import codec
 from .stitch import _D8, _grid_indexed
 
@@ -163,7 +164,8 @@ def watershed(flowdir: DataFrame, *,
     round, O(log longest-path) rounds total, each one self-join +
     localCheckpoint — the same O(log d) round structure as the engine's
     connected components, so a continental mega-basin needs ~30 rounds,
-    not ~10^4.
+    not ~10^4. Under the shared driver gate the whole chase runs on the
+    driver in one vectorized pass instead.
 
     Returns (gix, giy, basin, basin_gix, basin_giy); `basin` is the
     packed pour-point key, shared by every pixel of one watershed."""
@@ -171,13 +173,10 @@ def watershed(flowdir: DataFrame, *,
     nodes = ed.select("src", "gix", "giy")
     ptr = (ed.select("src", F.coalesce("dst", "src").alias("ptr"))
            .localCheckpoint(eager=True))
-    from ..operators.network import CC_DRIVER_MAX_ROWS
-    if ptr.count() <= CC_DRIVER_MAX_ROWS:
+
+    def chase(pdf: pd.DataFrame) -> pd.DataFrame:
         # small mosaic: chase every pointer chain on the driver in one
-        # vectorized pass instead of O(log path) join+checkpoint rounds
-        # (round-6; same rows/bytes gating as the contracted-CC solve —
-        # the distributed doubling below is unchanged above the gate)
-        pdf = ptr.toPandas()
+        # vectorized doubling pass instead of join+checkpoint rounds
         srcs = pdf["src"].to_numpy(np.int64)
         lab = pdf["ptr"].to_numpy(np.int64).copy()
         pos = pd.Series(np.arange(len(srcs)), index=srcs)
@@ -194,29 +193,20 @@ def watershed(flowdir: DataFrame, *,
                 break
             lab[m] = new_lab
             p[m] = new_p
-        spark = flowdir.sparkSession
-        solved = spark.createDataFrame(
-            pd.DataFrame({"src": srcs, "ptr": lab}),
-            schema="src long, ptr long")
-        mask = (1 << _KEY_SHIFT) - 1
-        return (nodes.join(F.broadcast(solved), on="src")
-                .select("gix", "giy", F.col("ptr").alias("basin"),
-                        F.col("ptr").bitwiseAND(F.lit(mask))
-                        .alias("basin_gix"),
-                        F.shiftright("ptr", _KEY_SHIFT).alias("basin_giy")))
-    while True:
+        return pd.DataFrame({"src": srcs, "ptr": lab})
+
+    def double(ptr: DataFrame) -> DataFrame:
         hop = ptr.select(F.col("src").alias("p_src"),
                          F.col("ptr").alias("p_ptr"))
-        nxt = (ptr.join(hop, ptr["ptr"] == hop["p_src"], "left")
-               .select("src", F.coalesce("p_ptr", "ptr").alias("ptr"),
-                       (F.col("p_ptr").isNotNull()
-                        & (F.col("p_ptr") != F.col("ptr")))
-                       .alias("__chg"))
-               .localCheckpoint(eager=True))
-        changed = nxt.where("__chg").limit(1).count()
-        ptr = nxt.drop("__chg")
-        if changed == 0:
-            break
+        return (ptr.join(hop, ptr["ptr"] == hop["p_src"], "left")
+                .select("src", F.coalesce("p_ptr", "ptr").alias("ptr"),
+                        (F.col("p_ptr").isNotNull()
+                         & (F.col("p_ptr") != F.col("ptr")))
+                        .alias("__chg")))
+
+    # doubling reaches paths of 2^64 pixels, far past any mosaic
+    ptr, _, _ = fixpoint("watershed", ptr, double, max_rounds=64,
+                         driver=chase, schema="src long, ptr long")
     mask = (1 << _KEY_SHIFT) - 1
     return (nodes.join(ptr, on="src")
             .select("gix", "giy", F.col("ptr").alias("basin"),
@@ -225,28 +215,28 @@ def watershed(flowdir: DataFrame, *,
 
 
 def _accumulate_iterative(edges: DataFrame) -> DataFrame:
-    """carry_{k+1}(v) = Σ_{u→v} carry_k(u); acc(v) = Σ_k carry_k(v).
-    Rounds = longest flow-path length; plans cut per round with
-    localCheckpoint (the kNN-rings pattern) so lineage never stacks."""
+    """carry_{k+1}(v) = Σ_{u→v} carry_k(u); acc(v) = Σ_k carry_k(v),
+    as one (node, c, a) state frame: c the current carry, a the sum so
+    far. Rounds = longest flow-path length, which in an acyclic flow
+    graph is below its node count — a flow-direction cycle raises."""
     edges = edges.persist()
-    carry = (edges.select(F.col("src").alias("node"))
-             .distinct().withColumn("c", F.lit(1).cast("long"))
+    state = (edges.select(F.col("src").alias("node")).distinct()
+             .select("node", F.lit(1).cast("long").alias("c"),
+                     F.lit(0).cast("long").alias("a"))
              .localCheckpoint(eager=True))
-    acc = None
-    while True:
-        nxt = (edges.join(carry, edges["src"] == carry["node"])
+
+    def carry(state: DataFrame) -> DataFrame:
+        nxt = (edges.join(state.where(F.col("c") > 0),
+                          F.col("src") == F.col("node"))
                .groupBy(F.col("dst").alias("node"))
-               .agg(F.sum("c").alias("c"))
-               .localCheckpoint(eager=True))
-        if nxt.isEmpty():
-            break
-        step = nxt.withColumnRenamed("c", "a")
-        acc = step if acc is None else (
-            acc.unionByName(step).groupBy("node")
-            .agg(F.sum("a").alias("a")).localCheckpoint(eager=True))
-        carry = nxt
+               .agg(F.sum("c").alias("__c")))
+        return (state.select("node", "a").join(nxt, on="node", how="full")
+                .select("node", F.coalesce("__c", F.lit(0)).alias("c"),
+                        (F.coalesce("a", F.lit(0))
+                         + F.coalesce("__c", F.lit(0))).alias("a"),
+                        F.col("__c").isNotNull().alias("__chg")))
+
+    state, _, _ = fixpoint("flow_accumulation", state, carry,
+                           max_rounds=state.count() + 1)
     edges.unpersist()
-    if acc is None:
-        sp = edges.sparkSession
-        return sp.createDataFrame([], "node long, acc long")
-    return acc.select("node", F.col("a").alias("acc"))
+    return state.select("node", F.col("a").alias("acc"))

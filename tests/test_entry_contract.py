@@ -5,7 +5,6 @@ names, order-insensitive values)."""
 import sys
 from pathlib import Path
 
-import duckdb
 import numpy as np
 import pandas as pd
 import pytest
@@ -13,6 +12,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as E
+from tools.selfcheck import duck_connect
 
 SF = "/root/testdata/sf0.001"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -20,8 +20,8 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 
 @pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
+def duck(spark):
+    con = duck_connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
     return con

@@ -204,3 +204,19 @@ def test_cost_distance_matches_global_dijkstra(spark):
     # paths genuinely cross tiles: bottom-right tile cost came from a
     # source in another tile
     assert np.isfinite(got[20:, 20:][~nod[20:, 20:]]).all()
+
+
+def test_cost_distance_rejects_negative_cost(spark):
+    """A negative entry cost never lets the sweeps settle: the init
+    pass rejects it instead of looping."""
+    import pytest
+
+    from gis_tools_spark import fixtures
+    from gis_tools_spark.raster.costdist import cost_distance
+
+    neg = codec.encode_raw_f32(np.full((16, 16), -1.0, dtype=np.float32))
+    tiles = fixtures.gen_rasters_exact(2, 1, 16).assign(
+        bytes=[neg] * 2, fmt="raw_f32")
+    with pytest.raises(Exception, match="ValueError: cost_distance: "
+                                        "negative cost"):
+        cost_distance(spark.createDataFrame(tiles), [(3, 3)])

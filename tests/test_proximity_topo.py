@@ -88,3 +88,16 @@ def test_overlap_and_dissolve_touching(spark):
     assert iso["n_members"] == 1
     g = wkb.decode(iso["geometry_wkb"])
     assert K.area(g) == pytest.approx(1.0)
+
+
+def test_dissolve_touching_long_chain_is_one_component(spark):
+    """60 boxes, each touching only the next: one component with 60
+    members. Label propagation without pointer jumping needs ~60 rounds
+    for this chain, so a 50-round cap used to split it."""
+    rows = pd.DataFrame({
+        "gid": list(range(60)),
+        "geometry_wkb": [wkb.box(i, 0, i + 1.5, 1) for i in range(60)]})
+    out = dissolve_touching(spark.createDataFrame(rows)).toPandas()
+    assert len(out) == 1
+    assert out.iloc[0]["n_members"] == 60
+    assert list(out.iloc[0]["member_ids"]) == list(range(60))

@@ -1,6 +1,7 @@
 """Round-6 optimization parity tests: every operator that gained a
 driver-solved small-data fast path must produce EXACTLY the same result
-through its distributed fallback (threshold forced to 0), and the
+through its distributed fallback (threshold forced to 0), every loop on
+the shared fixpoint driver keeps its cap contract, and the
 forward-stencil pair joins must reproduce the classic ordered relation.
 """
 
@@ -9,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from gis_tools_spark.operators import cellcover, cluster, network
+from gis_tools_spark.operators import cellcover, cluster, core, network
 
 
 def _rand_edges(spark, n_nodes=300, n_edges=600, seed=7):
@@ -21,17 +22,13 @@ def _rand_edges(spark, n_nodes=300, n_edges=600, seed=7):
         schema="src_key long, dst_key long")
 
 
-def test_cc_driver_solve_matches_distributed_rounds(spark, monkeypatch):
+def _cc_labels(spark):
     edges = _rand_edges(spark).where("src_key % 7 != 3")  # some isolates
-    fast = {(r["node"], r["component"])
-            for r in network.connected_components(edges).collect()}
-    monkeypatch.setattr(network, "CC_DRIVER_MAX_ROWS", 0)
-    slow = {(r["node"], r["component"])
-            for r in network.connected_components(edges).collect()}
-    assert fast == slow and len(fast) > 0
+    return lambda: {(r["node"], r["component"])
+                    for r in network.connected_components(edges).collect()}
 
 
-def test_compact_local_matches_distributed_loop(spark, monkeypatch):
+def _compact(spark):
     from gis_tools_spark import cells as C
     rng = np.random.default_rng(3)
     lon = rng.uniform(5.0, 6.0, 4000)
@@ -39,23 +36,101 @@ def test_compact_local_matches_distributed_loop(spark, monkeypatch):
     pts = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
     cov = pts.select(C.cell_column(F.col("lon"), F.col("lat"), 9)
                      .alias("cell")).distinct()
-    fast = {r["cell"] for r in cellcover.compact_cells(cov).collect()}
-    monkeypatch.setattr(cellcover, "COMPACT_LOCAL_MAX_ROWS", 0)
-    slow = {r["cell"] for r in cellcover.compact_cells(cov).collect()}
-    assert fast == slow and len(fast) > 0
+    return lambda: {r["cell"] for r in cellcover.compact_cells(cov).collect()}
 
 
-def test_watershed_driver_chase_matches_pointer_doubling(spark, monkeypatch):
+def _watershed(spark):
     from gis_tools_spark import fixtures
     from gis_tools_spark.raster.hydrology import watershed
     from gis_tools_spark.raster.stitch import d8_flow_direction
 
     ras = spark.createDataFrame(fixtures.gen_rasters_exact(2, 2, 32))
     fd = d8_flow_direction(ras)
-    fast = {tuple(r) for r in watershed(fd).collect()}
-    monkeypatch.setattr(network, "CC_DRIVER_MAX_ROWS", 0)
-    slow = {tuple(r) for r in watershed(fd).collect()}
+    return lambda: {tuple(r) for r in watershed(fd).collect()}
+
+
+@pytest.mark.parametrize("make", [_cc_labels, _compact, _watershed],
+                         ids=["connected_components", "compact_cells",
+                              "watershed"])
+def test_driver_solve_matches_distributed(spark, monkeypatch, make):
+    """The driver solve under core.DRIVER_MAX_ROWS and the distributed
+    rounds it replaces (gate forced to 0) give the same answer."""
+    run = make(spark)
+    fast = run()
+    monkeypatch.setattr(core, "DRIVER_MAX_ROWS", 0)
+    slow = run()
     assert fast == slow and len(fast) > 0
+
+
+def _hop_bounded(pdf, sources, hops):
+    """Reference for a capped Bellman-Ford: per (source, node) the
+    shortest distance over paths of at most ``hops`` edges (undirected,
+    min weight per pair)."""
+    w = {}
+    for a, b, x in pdf[["src_key", "dst_key", "length"]].itertuples(
+            index=False):
+        for u, v in ((a, b), (b, a)):
+            w[(u, v)] = min(float(x), w.get((u, v), np.inf))
+    nodes = set(pdf["src_key"]) | set(pdf["dst_key"])
+    out = {}
+    for s in sources:
+        if s not in nodes:
+            continue
+        d = {s: 0.0}
+        for _ in range(hops):
+            nd = dict(d)
+            for (u, v), x in w.items():
+                if u in d and d[u] + x < nd.get(v, np.inf):
+                    nd[v] = d[u] + x
+            d = nd
+        out.update({(s, n): round(v, 9) for n, v in d.items()})
+    return out
+
+
+@pytest.mark.parametrize("max_iter", [1, 2, 4, 0])
+def test_bellman_ford_cap_keeps_capped_contract(spark, max_iter):
+    """max_iter=m runs m - 1 relaxation rounds (the capped round is
+    discarded) and never raises; 0 runs to convergence."""
+    rng = np.random.default_rng(11)
+    n = 40
+    pdf = pd.DataFrame({
+        "src_key": [f"n{i}" for i in range(n - 1)]
+        + [f"n{a}" for a in rng.integers(0, n, 20)],
+        "dst_key": [f"n{i + 1}" for i in range(n - 1)]
+        + [f"n{b}" for b in rng.integers(0, n, 20)],
+        "length": rng.uniform(1, 10, n - 1 + 20)})
+    sources = ["n0", "n17"]
+    got = {(r["source"], r["node"]): round(r["dist"], 9)
+           for r in network.shortest_paths(
+               spark.createDataFrame(pdf), sources,
+               method="bellman-ford", max_iter=max_iter).collect()}
+    assert got == _hop_bounded(pdf, sources,
+                               max_iter - 1 if max_iter else n)
+
+
+def test_fixpoint_cap_raises_naming_the_operator(spark, caplog):
+    import logging
+
+    from gis_tools_spark import fixtures
+    from gis_tools_spark.plans.fixpoint import fixpoint
+    from gis_tools_spark.raster.costdist import cost_distance
+
+    def step(df):
+        return df.withColumn("__chg", F.lit(True))
+
+    with caplog.at_level(logging.DEBUG, logger="gis_tools_spark"):
+        _, rounds, converged = fixpoint("spin", spark.range(3), step,
+                                        max_rounds=2, strict=False)
+    assert (rounds, converged) == (2, False)
+    assert any("op=spin" in r.getMessage() and "converged=False"
+               in r.getMessage() for r in caplog.records)
+    with pytest.raises(RuntimeError, match="spin did not converge in 2"):
+        fixpoint("spin", spark.range(3), step, max_rounds=2)
+    # a source in one tile of a 2x2 mosaic needs more than one sweep
+    cost = spark.createDataFrame(fixtures.gen_rasters_exact(2, 2, 16))
+    with pytest.raises(RuntimeError,
+                       match="cost_distance did not converge in 1"):
+        cost_distance(cost, [(1, 1)], max_iters=1)
 
 
 @pytest.mark.parametrize("same_seed", [0, 1])

@@ -8,7 +8,9 @@ Usage: python tools/selfcheck.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
+import tempfile
 from pathlib import Path
 
 import duckdb
@@ -22,6 +24,28 @@ from gis_tools_spark import get_spark  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+
+def duck_connect() -> duckdb.DuckDBPyConnection:
+    """DuckDB connection for the oracles, opened beside a running Spark
+    session: half the RAM available now and one thread per usable core
+    (DuckDB's default, 80% of all RAM, gets the process OOM-killed
+    beside the JVM). Join reordering is off: on the raster neighbour
+    oracles (`px × offsets JOIN px ON ...`) it builds the px × px cross
+    product first, which took 4-8 GB of memory plus up to 20 GB of
+    spill per query; in the written order each is a hash join that
+    runs in under a second. The answers do not change. Spill files go
+    to a private directory, not the ./.tmp every connection started
+    from the same working directory shares."""
+    with open("/proc/meminfo") as f:
+        avail_kb = next(int(line.split()[1]) for line in f
+                        if line.startswith("MemAvailable:"))
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit='{avail_kb // 2048}MB'")
+    con.execute(f"SET threads={len(os.sched_getaffinity(0))}")
+    con.execute("SET disabled_optimizers='join_order'")
+    con.execute(f"SET temp_directory='{tempfile.mkdtemp(prefix='duckdb_')}'")
+    return con
 
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
@@ -47,11 +71,10 @@ def main() -> int:
             json_out = a.split("=", 1)[1]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
-    con = duckdb.connect()
+    spark = get_spark(cpus=8)
+    con = duck_connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-    spark = get_spark(cpus=8)
     qs = E.queries()
     oracles = E.oracle_sql()
     n_fail = 0
