@@ -671,72 +671,6 @@ def q_jpeg_decode_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("psnr_orig") >= F.lit(40.0)).alias("ok_psnr"))
 
 
-def q_audio_mp3_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end audio-codec gate (round-4: from-scratch MPEG Layer
-    III, raster/mp3.py): deterministic sines seeded by doc_id are
-    mp3-encoded across the codec's feature matrix — variant =
-    doc_id % 6 covers MPEG-1 44.1k long / 44.1k forced window cycle /
-    MPEG-1 32k / MPEG-2 LSF 22.05k / MPEG-2.5 8k / MPEG-1 stereo MS —
-    then decoded and verified against the regenerated source: SNR >= 12
-    dB (the verified-table quantizer's floor is ~14 dB on two-tone
-    content), decoded length within one granule+delay of the input, and
-    zero-crossing rate within 15% of the closed form 2f/sr.  The
-    oracle states the invariant closed-form: every row verifies TRUE."""
-    _tune(spark)
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where("doc_id % 29 = 0").select("doc_id"))
-
-    def _gen(it):
-        import numpy as _np
-        from gis_tools_spark.raster import mp3 as _mp3
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                v = d % 6
-                sr, br, kw = ((44100, 128000, {}),
-                              (44100, 128000, {"block_pattern": "cycle"}),
-                              (32000, 96000, {}),
-                              (22050, 64000, {}),
-                              (8000, 24000, {}),
-                              (44100, 192000, {"ms": True}))[v]
-                amp = 0.2 + 0.05 * (d % 7)
-                f = 110.0 * (1 + d % 9)
-                n = sr // 5
-                t = _np.arange(n) / sr
-                x = amp * _np.sin(2 * _np.pi * f * t)
-                if kw.get("ms"):
-                    x = _np.stack([x, 0.5 * x], axis=1)
-                buf = _mp3.encode(x, sr, bitrate=br, **kw)
-                pcm, got_sr = _mp3.decode(buf)
-                mono = pcm.mean(axis=1) if pcm.ndim == 2 else pcm
-                xm = x.mean(axis=1) if x.ndim == 2 else x
-                # align: scan the encoder+decoder delay range
-                best = (1e30, 0)
-                for delay in range(0, 2600, 1):
-                    nn = min(len(mono) - delay, n)
-                    if nn < n // 2:
-                        break
-                    e = float(_np.mean((mono[delay:delay + nn] - xm[:nn]) ** 2))
-                    if e < best[0]:
-                        best = (e, delay)
-                snr = 10 * _np.log10(_np.mean(xm ** 2) / max(best[0], 1e-30))
-                zc = _np.count_nonzero(_np.signbit(mono[1:])
-                                       != _np.signbit(mono[:-1]))
-                zcr = zc / max(len(mono) - 1, 1)
-                ok_len = n <= len(mono) <= n + 2 * 1152 + 2048
-                ok_zcr = abs(zcr - 2 * f / sr) <= 0.15 * (2 * f / sr)
-                rows.append((d, v, got_sr == sr and bool(snr >= 12.0),
-                             bool(ok_len), bool(ok_zcr)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "variant", "ok_snr", "ok_len", "ok_zcr"])
-
-    return docs.repartition(8).mapInPandas(
-        _gen, schema="doc_id long, variant int, ok_snr boolean, "
-                     "ok_len boolean, ok_zcr boolean")
-
-
 def q_img_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image quality-signal gate (round-4: media.image_quality — the
     brightness/contrast/blur/entropy filter columns an image training
@@ -802,173 +736,6 @@ def q_img_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         r("lap_var").alias("lap_var_r"),
         r("entropy_bits").alias("entropy_r"),
         r("dyn_range").alias("dyn_r"))
-
-
-def q_audio_containers_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lossless audio-container gate (round-4: raster/wavaiff.py +
-    raster/flac.py): deterministic sines seeded by doc_id are encoded
-    across the container matrix — variant = doc_id % 6 covers WAV
-    pcm16 / WAV pcm24 / WAV float32 / AIFF pcm16 / FLAC 16-bit mono /
-    FLAC 24-bit stereo mid-side — then decoded through the engine's
-    decode_audio path and verified EXACTLY against the closed-form
-    quantized source (these codecs are lossless, so the invariant is
-    sample equality, not a PSNR floor), the FLAC rows additionally
-    through the format's own CRC-8/CRC-16/MD5 integrity chain (decode
-    enforces them) and a compression check (smaller than raw PCM on
-    tonal content).  The oracle states the invariant closed-form:
-    every row verifies TRUE."""
-    _tune(spark)
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where("doc_id % 23 = 0").select("doc_id"))
-
-    def _gen(it):
-        import numpy as _np
-        from gis_tools_spark.raster import flac as _fl
-        from gis_tools_spark.raster import wavaiff as _wa
-        from gis_tools_spark.raster.media import decode_audio as _da
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                v = d % 6
-                sr = (8000, 16000, 22050, 11025, 8000, 16000)[v]
-                amp = 0.15 + 0.05 * (d % 7)
-                f = 110.0 * (1 + d % 9)
-                n = sr // 5
-                t = _np.arange(n) / sr
-                x = amp * _np.sin(2 * _np.pi * f * t)
-                ok_comp = True
-                if v == 0:
-                    buf, fmt = _wa.encode_wav(x, sr, bps=16), "wav"
-                    q = _np.clip(_np.rint(x * 32768.0), -32768, 32767)
-                    want = q / 32768.0
-                elif v == 1:
-                    buf, fmt = _wa.encode_wav(x, sr, bps=24), "wav"
-                    s = float(1 << 23)
-                    q = _np.clip(_np.rint(x * s), -s, s - 1)
-                    want = q / s
-                elif v == 2:
-                    buf, fmt = _wa.encode_wav(x, sr, float32=True), "wav"
-                    want = x.astype(_np.float32).astype(_np.float64)
-                elif v == 3:
-                    buf, fmt = _wa.encode_aiff(x, sr, bps=16), "aiff"
-                    q = _np.clip(_np.rint(x * 32768.0), -32768, 32767)
-                    want = q / 32768.0
-                elif v == 4:
-                    buf, fmt = _fl.encode(x, sr, bps=16), "flac"
-                    q = _np.clip(_np.rint(x * 32768.0), -32768, 32767)
-                    want = q / 32768.0
-                    ok_comp = len(buf) < 2 * n  # beats raw pcm_s16
-                else:
-                    st = _np.stack([x, 0.5 * x], axis=1)
-                    buf, fmt = _fl.encode(st, sr, bps=24,
-                                          mid_side=True), "flac"
-                    s = float(1 << 23)
-                    q = _np.clip(_np.rint(st * s), -s, s - 1)
-                    want = (q / s).mean(axis=1)  # decode_audio mixes down
-                    ok_comp = len(buf) < 6 * n
-                got = _da(buf, fmt)
-                ok_exact = (len(got) == n
-                            and bool(_np.array_equal(got, want)))
-                rows.append((d, v, bool(ok_exact), bool(ok_comp)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "variant", "ok_exact", "ok_comp"])
-
-    return docs.repartition(8).mapInPandas(
-        _gen, schema="doc_id long, variant int, ok_exact boolean, "
-                     "ok_comp boolean")
-
-
-def _video_frames_for(doc_id: int, n: int = 6, h: int = 32,
-                      w: int = 48) -> list:
-    """Deterministic smooth photo-like gray frames seeded by doc_id
-    (smooth content so lossy-HEVC PSNR is a meaningful invariant)."""
-    import numpy as np
-
-    x = np.linspace(0, 4 * np.pi, w)
-    y = np.linspace(0, 4 * np.pi, h)
-    prng = np.random.default_rng(doc_id * 6_271 + 3)
-    a1, a2 = prng.uniform(0.4, 1.1, 2)
-    out = []
-    for k in range(n):
-        f = 127 + 80 * (np.sin(x[None, :] * a1 + k * 0.7)
-                        * np.cos(y[:, None] * a2 + k))
-        out.append(np.clip(f, 0, 255).astype(np.uint8))
-    return out
-
-
-def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end compressed-video gate (round-4: raster/native_hevc.py
-    + raster/mp4.py + media.sample_video_frames): deterministic gray
-    frame sequences seeded by doc_id are encoded as all-intra HEVC and
-    packaged into real mp4 ``hvc1`` tracks (x265 via the system
-    libheif; when either codec library is absent the row falls back
-    deterministically to the engine's lossless ``rawvid`` container, so
-    the gate's invariant is unchanged), then flow through the REAL
-    distributed frame-sampling operator — mp4 probe, sample-table
-    slice of ONLY the kept frames out of mdat, libde265 decode — and
-    each sampled frame is verified against the regenerated source at
-    PSNR >= 40 dB, which fails on any container-offset, bitstream or
-    reconstruction corruption. Covers the build brief's video
-    frame-sample multimodal op (the reference has no video path —
-    raster.py:158-165 is its closest raster-decode analog). The oracle
-    states the invariant closed-form: frames 0/2/4 of every video
-    verify TRUE."""
-    _tune(spark)
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where("doc_id % 7 = 0").select("doc_id"))
-
-    def _gen(it):
-        from gis_tools_spark.raster import native_hevc as _nh
-
-        have = _nh.available() and _nh.available(encode=True)
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                frames = _video_frames_for(d)
-                if have:
-                    buf = _nh.encode_mp4_gray(frames, fps=6.0, quality=92)
-                    fmt = "mp4"
-                else:
-                    buf = b"".join(f.tobytes() for f in frames)
-                    fmt = "rawvid"
-                rows.append((f"vid{d:09d}", buf, len(frames),
-                             48, 32, fmt, 6.0, d))
-            yield pd.DataFrame(rows, columns=[
-                "video_id", "bytes", "n_frames", "w", "h", "fmt",
-                "fps", "doc_id"])
-
-    vids = docs.repartition(8).mapInPandas(
-        _gen, schema="video_id string, bytes binary, n_frames int, "
-                     "w int, h int, fmt string, fps double, doc_id long")
-
-    from gis_tools_spark.raster.media import sample_video_frames
-
-    fr = sample_video_frames(vids, every_n=2)
-
-    def _check(it):
-        import numpy as np
-
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                d = int(r.video_id[3:])
-                fi = int(r.frame_index)
-                orig = _video_frames_for(d)[fi]
-                dec = np.frombuffer(bytes(r.bytes), np.uint8).reshape(
-                    int(r.h), int(r.w))
-                mse = float(np.mean((orig.astype(float)
-                                     - dec.astype(float)) ** 2))
-                psnr = 10 * np.log10(255.0 ** 2 / max(mse, 1e-12))
-                rows.append((d, fi, bool(psnr >= 40.0)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "frame_index", "ok_psnr"])
-
-    return fr.mapInPandas(
-        _check, schema="doc_id long, frame_index int, ok_psnr boolean")
 
 
 def q_exif_gps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4096,94 +3863,6 @@ def q_wds_export(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "shard_id", "caption", "image_fmt", "ok"))
 
 
-def q_video_scenes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shot-boundary detection (media.detect_scene_cuts): rawvid
-    fixtures seeded by doc_id hold two constant-value shots with the
-    boundary at frame 5 + doc_id%10 and a brightness step of
-    60 + doc_id%40, so the normalized MAD score has the exact closed
-    form delta/255 at exactly one index.  The DuckDB oracle recomputes
-    both from doc_id arithmetic — a missed, duplicated, or off-by-one
-    cut breaks the value hash."""
-    _tune(spark)
-    from gis_tools_spark.raster.media import detect_scene_cuts
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where("doc_id % 11 = 0").select("doc_id"))
-
-    def _gen(it):
-        import numpy as _np
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                c = 5 + d % 10
-                v1 = 40 + d % 50
-                frames = _np.empty((20, 8, 10), dtype=_np.uint8)
-                frames[:c] = v1
-                frames[c:] = v1 + 60 + d % 40
-                rows.append((f"vid{d:09d}", frames.tobytes(), 20, 10, 8,
-                             "rawvid", d))
-            yield pd.DataFrame(rows, columns=[
-                "video_id", "bytes", "n_frames", "w", "h", "fmt",
-                "doc_id"])
-
-    vids = docs.repartition(4).mapInPandas(
-        _gen, schema="video_id string, bytes binary, n_frames int, "
-                     "w int, h int, fmt string, doc_id long")
-    cuts = detect_scene_cuts(vids, threshold=0.1)
-    return cuts.select(
-        F.substring("video_id", 4, 9).cast("long").alias("doc_id"),
-        "cut_index",
-        F.floor(F.col("score") * 1e9 + F.lit(0.5)).cast("long")
-        .alias("score_r"))
-
-
-def q_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Energy-based audio segmentation (media.segment_audio):
-    pcm_f32 fixtures seeded by doc_id alternate silence and
-    constant-amplitude blocks on exact 100-sample frame boundaries
-    (sr 1000, frame 100 ms), amplitudes 0.25·(1 + doc_id%3) — exactly
-    representable in float32, so per-frame RMS equals the amplitude
-    bit-exactly and every segment's start/end/frame-count/RMS has a
-    closed form the DuckDB oracle recomputes from doc_id arithmetic."""
-    _tune(spark)
-    from gis_tools_spark.raster.media import segment_audio
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where("doc_id % 13 = 0").select("doc_id"))
-
-    def _gen(it):
-        import numpy as _np
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                s0, a1 = 1 + d % 3, 1 + d % 4
-                s1, a2 = 1 + d % 2, 1 + d % 3
-                amp = 0.25 * (1 + d % 3)
-                x = _np.concatenate([
-                    _np.zeros(s0 * 100), _np.full(a1 * 100, amp),
-                    _np.zeros(s1 * 100), _np.full(a2 * 100, amp),
-                ]).astype(_np.float32)
-                rows.append((f"aud{d:09d}", x.tobytes(), "pcm_f32",
-                             1000, d))
-            yield pd.DataFrame(rows, columns=[
-                "audio_id", "bytes", "fmt", "sample_rate", "doc_id"])
-
-    aud = docs.repartition(4).mapInPandas(
-        _gen, schema="audio_id string, bytes binary, fmt string, "
-                     "sample_rate int, doc_id long")
-    segs = segment_audio(aud, frame_ms=100, threshold=0.02)
-    r6 = lambda c: F.floor(F.col(c) * 1e6 + F.lit(0.5)).cast("long")  # noqa: E731
-    return segs.select(
-        F.substring("audio_id", 4, 9).cast("long").alias("doc_id"),
-        "seg_idx", "n_frames",
-        r6("start_s").alias("start_r"),
-        r6("end_s").alias("end_r"),
-        F.floor(F.col("rms_mean") * 1e9 + F.lit(0.5)).cast("long")
-        .alias("rms_r"))
-
-
 def q_format_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Format sniffing / mislabel detection (imgtrain.format_check):
     variant = doc_id % 4 builds a raw payload (magic-less → detected
@@ -6057,10 +5736,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zorder_bbox": q_zorder_bbox,
         "icetable_scan": q_icetable_scan,
         "jpeg_decode_verify": q_jpeg_decode_verify,
-        "audio_mp3_verify": q_audio_mp3_verify,
-        "audio_containers_verify": q_audio_containers_verify,
         "img_quality": q_img_quality,
-        "video_frames": q_video_frames,
         "gpkg_roundtrip": q_gpkg_roundtrip,
         "exif_gps": q_exif_gps,
         "substring_spans": q_substring_spans,
@@ -6081,8 +5757,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "exif_orient": q_exif_orient,
         "dataset_profile": q_dataset_profile,
         "wds_export": q_wds_export,
-        "video_scenes": q_video_scenes,
-        "audio_segments": q_audio_segments,
         "format_check": q_format_check,
         "img_curation_pipeline": q_img_curation_pipeline,
         "warc_pipeline": q_warc_pipeline,
@@ -8217,30 +7891,6 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
             WHERE doc_id % 13 = 0
         """,
-        "video_frames": """
-            SELECT doc_id,
-                   CAST(t.fi AS INTEGER) AS frame_index,
-                   TRUE AS ok_psnr
-            FROM documents, (VALUES (0), (2), (4)) AS t(fi)
-            WHERE doc_id % 7 = 0
-        """,
-        "audio_mp3_verify": """
-            SELECT doc_id,
-                   CAST(doc_id % 6 AS INTEGER) AS variant,
-                   TRUE AS ok_snr,
-                   TRUE AS ok_len,
-                   TRUE AS ok_zcr
-            FROM documents
-            WHERE doc_id % 29 = 0
-        """,
-        "audio_containers_verify": """
-            SELECT doc_id,
-                   CAST(doc_id % 6 AS INTEGER) AS variant,
-                   TRUE AS ok_exact,
-                   TRUE AS ok_comp
-            FROM documents
-            WHERE doc_id % 23 = 0
-        """,
         "img_quality": """
             WITH p AS (
                 SELECT doc_id,
@@ -9237,37 +8887,6 @@ def oracle_sql() -> dict[str, str]:
                                     ELSE 'jpeg' END) AS fmt_detected,
                    (doc_id % 4 = 2) AS fmt_mismatch
             FROM documents WHERE doc_id % 7 = 0
-        """,
-        "video_scenes": """
-            SELECT doc_id,
-                   CAST(5 + doc_id % 10 AS INT) AS cut_index,
-                   CAST(floor(CAST(60 + doc_id % 40 AS DOUBLE) / 255.0
-                              * 1e9 + 0.5) AS BIGINT) AS score_r
-            FROM documents WHERE doc_id % 11 = 0
-        """,
-        "audio_segments": """
-            WITH d AS (
-              SELECT doc_id,
-                     1 + doc_id % 3 AS s0, 1 + doc_id % 4 AS a1,
-                     1 + doc_id % 2 AS s1, 1 + doc_id % 3 AS a2,
-                     0.25 * (1 + doc_id % 3) AS amp
-              FROM documents WHERE doc_id % 13 = 0
-            )
-            SELECT doc_id, 0 AS seg_idx, CAST(a1 AS INT) AS n_frames,
-                   CAST(floor(CAST(s0 * 100 AS DOUBLE) / 1000.0 * 1e6
-                              + 0.5) AS BIGINT) AS start_r,
-                   CAST(floor(CAST((s0 + a1) * 100 AS DOUBLE) / 1000.0
-                              * 1e6 + 0.5) AS BIGINT) AS end_r,
-                   CAST(floor(amp * 1e9 + 0.5) AS BIGINT) AS rms_r
-            FROM d
-            UNION ALL
-            SELECT doc_id, 1, CAST(a2 AS INT),
-                   CAST(floor(CAST((s0 + a1 + s1) * 100 AS DOUBLE)
-                              / 1000.0 * 1e6 + 0.5) AS BIGINT),
-                   CAST(floor(CAST((s0 + a1 + s1 + a2) * 100 AS DOUBLE)
-                              / 1000.0 * 1e6 + 0.5) AS BIGINT),
-                   CAST(floor(amp * 1e9 + 0.5) AS BIGINT)
-            FROM d
         """,
         "exif_orient": """
             SELECT doc_id,

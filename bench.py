@@ -376,79 +376,6 @@ def main() -> None:
             ops=("hflip", "rot90"))))
     meta["img_augment_rows"] = naug
 
-    # -------- audio feature extraction (round-4: from-scratch mp3 in
-    # the fixture mix — pcm_f32 / pcm_s16 / mp3 one-third each)
-    from gis_tools_spark.raster.media import audio_features
-
-    n_aud = max(96, N_IMAGES // 50)
-    base = spark.createDataFrame(fixtures.gen_audio(n=12, sr=16000,
-                                                    dur_s=1.0))
-    audio = (base.crossJoin(spark.range(n_aud // 12).withColumnRenamed(
-                 "id", "rep"))
-             .select(F.concat("audio_id", F.lit("_"), "rep")
-                     .alias("audio_id"),
-                     "bytes", "sample_rate", "fmt")
-             .repartition(CPUS).persist())
-    audio.count()          # materialize: generation excluded from timing
-    na = _timed("audio_features", lambda: _count(audio_features(audio)))
-    meta["audio_rows"] = na
-
-    from gis_tools_spark.raster.media import segment_audio
-
-    nsg = _timed("audio_segments", lambda: _count(
-        segment_audio(audio, frame_ms=25, threshold=0.02)))
-    meta["audio_segments"] = nsg
-    audio.unpersist()
-
-    # -------- video frame sampling (round-4: all-intra HEVC in real
-    # mp4 hvc1 tracks; the sampler slices ONLY kept samples out of
-    # mdat before libde265-decoding them — generation excluded from
-    # timing like the image table; deterministic rawvid fallback keeps
-    # the entry comparable when the codec libraries are absent)
-    from gis_tools_spark.raster import native_hevc as _nh
-    from gis_tools_spark.raster.media import sample_video_frames
-
-    n_vid = max(96, N_IMAGES // 250)
-    _have_hevc = _nh.available() and _nh.available(encode=True)
-
-    def _gen_vids(it):
-        from __spark_entry__ import _video_frames_for
-        from gis_tools_spark.raster import native_hevc as NH
-        for pdf in it:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                frames = _video_frames_for(i, n=12, h=64, w=96)
-                if _have_hevc:
-                    buf = NH.encode_mp4_gray(frames, fps=12.0, quality=90)
-                    fmt = "mp4"
-                else:
-                    buf = b"".join(f.tobytes() for f in frames)
-                    fmt = "rawvid"
-                rows.append((f"vid{i:07d}", buf, 12, 96, 64, fmt, 12.0))
-            yield pd.DataFrame(rows, columns=[
-                "video_id", "bytes", "n_frames", "w", "h", "fmt", "fps"])
-
-    videos = (spark.range(n_vid, numPartitions=CPUS)
-              .mapInPandas(_gen_vids,
-                           schema="video_id string, bytes binary, "
-                                  "n_frames int, w int, h int, "
-                                  "fmt string, fps double")
-              .persist())
-    videos.count()         # materialize: generation excluded from timing
-    nv = _timed("video_frame_sample", lambda: _count(
-        sample_video_frames(videos, every_n=2)))
-    meta["video_rows"] = n_vid
-    meta["video_frames_sampled"] = nv
-    meta["video_codec"] = "hvc1" if _have_hevc else "rawvid"
-
-    from gis_tools_spark.raster.media import detect_scene_cuts
-
-    nsc = _timed("video_scene_cuts", lambda: _count(
-        detect_scene_cuts(videos, threshold=0.05)))
-    meta["video_scene_cuts"] = nsc
-    videos.unpersist()
-
     # -------- lakehouse path (north rule: "over Iceberg tables of
     # image + caption pairs"): the image table committed ONCE to the
     # from-scratch snapshot table (sources/icetable.py — setup excluded,

@@ -294,81 +294,6 @@ def gen_lines(n: int = 64, seed: int = SEED) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["lid", "geometry_wkb", "direction", "max_speed"])
 
 
-# ------------------------------------------------------------------ video / audio
-
-def _hevc_ok() -> bool:
-    """System HEVC codec path usable (libheif/x265 + libde265)?"""
-    try:
-        from .raster import native_hevc as _nh
-        return _nh.available() and _nh.available(encode=True)
-    except Exception:
-        return False
-
-
-def gen_videos(n: int = 8, n_frames: int = 24, w: int = 32, h: int = 24,
-               seed: int = SEED) -> pd.DataFrame:
-    """Deterministic ``rawvid`` fixtures: frame f of video i is a
-    gradient plus a moving bright dot, so any frame is reconstructable
-    closed-form for oracle tests."""
-    rows = []
-    for i in range(n):
-        frames = np.empty((n_frames, h, w), dtype=np.uint8)
-        for f in range(n_frames):
-            yy, xx = np.mgrid[0:h, 0:w]
-            base = ((xx * 3 + yy * 5 + i * 17 + f * 11) % 256).astype(np.uint8)
-            base[f % h, (i + f) % w] = 255
-            frames[f] = base
-        if i % 4 == 3 and _hevc_ok():
-            # real compressed video (mp4 hvc1 track) when the system
-            # codec libraries are present; deterministic source frames
-            # stay the closed-form oracle (lossy: PSNR-checked)
-            from .raster import native_hevc as _nh
-            buf = _nh.encode_mp4_gray(list(frames), fps=12.0, quality=90)
-            rows.append((f"vid{i:06d}", buf, n_frames, w, h, "mp4", 12.0))
-        elif i % 2 == 1:
-            from .raster import mp4 as _mp4
-            buf = _mp4.write_mp4([frames[f].tobytes()
-                                  for f in range(n_frames)],
-                                 w=w, h=h, fps=12.0)
-            rows.append((f"vid{i:06d}", buf, n_frames, w, h, "mp4", 12.0))
-        else:
-            rows.append((f"vid{i:06d}", frames.tobytes(), n_frames, w, h,
-                         "rawvid", 12.0))
-    return pd.DataFrame(rows, columns=["video_id", "bytes", "n_frames",
-                                       "w", "h", "fmt", "fps"])
-
-
-def gen_audio(n: int = 8, sr: int = 8000, dur_s: float = 0.5,
-              seed: int = SEED) -> pd.DataFrame:
-    """Deterministic PCM fixtures: pure sine at 110*(i+1) Hz with
-    amplitude 0.1*(i%9+1) — RMS/peak/zcr have closed forms."""
-    t = np.arange(int(sr * dur_s)) / sr
-    rows = []
-    for i in range(n):
-        amp = 0.1 * (i % 9 + 1)
-        x = (amp * np.sin(2 * np.pi * 110.0 * (i + 1) * t)).astype(np.float32)
-        fmt = ("pcm_f32", "pcm_s16", "mp3", "wav", "flac", "aiff")[i % 6]
-        if fmt == "pcm_f32":
-            buf = x.tobytes()
-        elif fmt == "pcm_s16":
-            buf = (np.clip(x, -1, 1) * 32767).astype("<i2").tobytes()
-        elif fmt == "wav":
-            from .raster import wavaiff as _wa
-            buf = _wa.encode_wav(x.astype(np.float64), sr, bps=16)
-        elif fmt == "aiff":
-            from .raster import wavaiff as _wa
-            buf = _wa.encode_aiff(x.astype(np.float64), sr, bps=16)
-        elif fmt == "flac":
-            from .raster import flac as _fl
-            buf = _fl.encode(x.astype(np.float64), sr, bps=16)
-        else:
-            from .raster import mp3 as _mp3
-            buf = _mp3.encode(x.astype(np.float64), sr,
-                              bitrate=24000 if sr <= 12000 else 64000)
-        rows.append((f"aud{i:06d}", buf, sr, fmt))
-    return pd.DataFrame(rows, columns=["audio_id", "bytes", "sample_rate", "fmt"])
-
-
 # ------------------------------------------------------------------ rasters
 
 def gen_rasters_exact(nx: int = 4, ny: int = 4, tile: int = 64) -> pd.DataFrame:

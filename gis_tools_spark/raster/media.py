@@ -1,22 +1,16 @@
-"""Multimodal media operators for large-scale training-data pipelines:
-image resize, video frame sampling, audio feature extraction.
+"""Image-table operators for training-data pipelines: resize,
+augmentation, EXIF orientation normalization and quality scoring.
 
 These go beyond the reference's raster surface (closest analog:
-``RasterMap.gdal_resample`` /root/reference/gistools/raster.py:303-327,
-which resizes geo-rasters) — the build brief asks for the media ops a
-100 TB multimodal pipeline needs. Design rules:
+``RasterMap.gdal_resample``, which resizes geo-rasters). Design rules:
 
-* media payloads are opaque ``binary`` columns with typed metadata
-  (w/h/fmt, n_frames/fps, sample_rate) — one row per asset;
+* image payloads are opaque ``binary`` columns with typed metadata
+  (w/h/fmt) — one row per image;
 * every kernel is an Arrow-batched ``mapInPandas`` with an explicit
   output schema, so the plumbing (partitioning, batch shape, schema)
   is exactly what a real cluster runs;
-* decode is REAL for the engine's own codecs (raw/raw_f32/png/dct/
-  jpeg/webp images, ``rawvid`` concatenated-frame video, mp4 ``hvc1``
-  all-intra HEVC via raster/native_hevc.py (libde265),
-  ``pcm_f32``/``pcm_s16``/mp3 audio) and raises a clearly-marked
-  ``NotImplementedError`` for wheel-bound codecs (h264/vp9/flac) —
-  the Spark-side plumbing is identical either way.
+* decode and re-encode go through raster/codec.py, so the Spark-side
+  plumbing is the same for every image format it dispatches.
 """
 
 from __future__ import annotations
@@ -300,252 +294,6 @@ def normalize_orientation(df: DataFrame, *,
     return df.mapInPandas(_run, schema=out_schema)
 
 
-# ------------------------------------------------------------------ video
-
-_REAL_VIDEO_FMTS = ("rawvid",)
-
-VIDEO_FRAME_SCHEMA = ("video_id string, frame_index int, t double, "
-                      "bytes binary, w int, h int, fmt string")
-
-
-def decode_video(buf: bytes, w: int, h: int, n_frames: int, fmt: str) -> np.ndarray:
-    """(n_frames, h, w) uint8 for the engine's ``rawvid`` container
-    (concatenated grayscale frames). Compressed codecs are wheel-bound."""
-    if fmt == "rawvid":
-        return np.frombuffer(bytes(buf), dtype=np.uint8).reshape(n_frames, h, w)
-    raise NotImplementedError(
-        f"video codec {fmt!r} requires a decoder wheel (ffmpeg/pyav) absent "
-        f"in this sandbox; supported here: {_REAL_VIDEO_FMTS}")
-
-
-def sample_video_frames(df: DataFrame, *, every_n: int | None = None,
-                        n_samples: int | None = None,
-                        fps_col: str = "fps") -> DataFrame:
-    """Explode video rows into sampled frame rows (one output row per
-    kept frame, payload re-encoded as a ``raw``-fmt grayscale image so
-    downstream image ops apply unchanged).
-
-    Sampling is deterministic: ``every_n`` keeps frames 0, n, 2n, …;
-    ``n_samples`` keeps k evenly-spaced frames (first frame always
-    included). Exactly one of the two must be given. Input schema:
-    (video_id, bytes, n_frames, w, h, fmt[, fps])."""
-    if (every_n is None) == (n_samples is None):
-        raise ValueError("pass exactly one of every_n / n_samples")
-    has_fps = fps_col in df.columns
-
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.fmt == "mp4":
-                    # container path (raster/mp4.py): only the SELECTED
-                    # samples are sliced out of mdat — an mp4 row never
-                    # decodes frames it does not keep
-                    from . import mp4 as _mp4
-
-                    info = _mp4.probe(r.bytes)
-                    v = next(t for t in info["tracks"] if t["kind"] == "vide")
-                    if v["codec"] == "hvc1":
-                        from . import native_hevc as _nh
-
-                        if not _nh.available():
-                            raise NotImplementedError(
-                                "mp4 hvc1 decode needs libde265 (absent)")
-                    elif v["codec"] != "rawg":
-                        raise NotImplementedError(
-                            f"mp4 codec {v['codec']!r} requires a decoder "
-                            "wheel absent in this sandbox (container "
-                            "probe/slice is supported — see video_probe)")
-                    nf, w, h = v["n_samples"], v["w"], v["h"]
-                    if every_n is not None:
-                        idx = np.arange(0, nf, every_n)
-                    else:
-                        idx = np.unique(np.linspace(0, nf - 1,
-                                                    min(n_samples, nf))
-                                        .astype(np.int64))
-                    payloads = _mp4.extract_samples(r.bytes, idx,
-                                                    v["track_id"])
-                    if v["codec"] == "hvc1":
-                        # all-intra HEVC: only the kept samples are
-                        # sliced out of mdat and decoded
-                        hvcc = _mp4.sample_entry_config(
-                            r.bytes, b"hvcC", v["track_id"])
-                        payloads = [f.tobytes() for f in
-                                    _nh.decode_samples_gray(
-                                        payloads, hvcc, size=(h, w))]
-                    fps = v["n_samples"] / v["duration_s"] \
-                        if v["duration_s"] else 0.0
-                    for fi, payload in zip(idx, payloads):
-                        t = (fi / fps) if fps > 0 else float(fi)
-                        rows.append((r.video_id, int(fi), float(t),
-                                     payload, int(w), int(h), "raw_gray"))
-                    continue
-                nf = int(r.n_frames)
-                if nf <= 0:
-                    continue
-                frames = decode_video(r.bytes, int(r.w), int(r.h), nf, r.fmt)
-                if every_n is not None:
-                    idx = np.arange(0, nf, every_n)
-                else:
-                    k = min(n_samples, nf)
-                    idx = np.unique(np.linspace(0, nf - 1, k).astype(np.int64))
-                fps = float(getattr(r, fps_col)) if has_fps else 0.0
-                for fi in idx:
-                    t = (fi / fps) if fps > 0 else float(fi)
-                    rows.append((r.video_id, int(fi), float(t),
-                                 frames[fi].tobytes(), int(r.w), int(r.h),
-                                 "raw_gray"))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "video_id", "frame_index", "t", "bytes", "w", "h", "fmt"])
-
-    return df.mapInPandas(_run, schema=VIDEO_FRAME_SCHEMA)
-
-
-# ------------------------------------------------------------ scene cuts
-
-def _decode_all_frames(buf: bytes, w: int, h: int, n_frames: int,
-                       fmt: str) -> np.ndarray:
-    """(n, h, w) uint8 for rawvid and mp4 (rawg / all-intra hvc1) —
-    the same container/codec routing as sample_video_frames."""
-    if fmt == "mp4":
-        from . import mp4 as _mp4
-
-        info = _mp4.probe(buf)
-        v = next(t for t in info["tracks"] if t["kind"] == "vide")
-        nf, vw, vh = v["n_samples"], v["w"], v["h"]
-        idx = np.arange(nf)
-        payloads = _mp4.extract_samples(buf, idx, v["track_id"])
-        if v["codec"] == "hvc1":
-            from . import native_hevc as _nh
-
-            if not _nh.available():
-                raise NotImplementedError(
-                    "mp4 hvc1 decode needs libde265 (absent)")
-            hvcc = _mp4.sample_entry_config(buf, b"hvcC", v["track_id"])
-            frames = _nh.decode_samples_gray(payloads, hvcc, size=(vh, vw))
-            return np.stack(frames)
-        if v["codec"] != "rawg":
-            raise NotImplementedError(
-                f"mp4 codec {v['codec']!r} requires a decoder wheel "
-                "absent in this sandbox")
-        return np.stack([np.frombuffer(p, dtype=np.uint8).reshape(vh, vw)
-                         for p in payloads])
-    return decode_video(buf, w, h, n_frames, fmt)
-
-
-def detect_scene_cuts(df: DataFrame, *, threshold: float = 0.1,
-                      fps_col: str = "fps") -> DataFrame:
-    """Shot-boundary detection: a cut at frame i when the normalized
-    mean absolute difference |frame_i - frame_{i-1}| / 255 exceeds
-    ``threshold`` — the standard histogram/energy-free baseline
-    detector a sampling pipeline runs to pick one keyframe per shot.
-
-    Output: one row per detected cut ``(video_id, cut_index, t,
-    score)`` with ``cut_index`` the FIRST frame of the new shot and
-    ``score`` the normalized MAD.  Input schema as sample_video_frames
-    (rawvid + mp4 rawg/hvc1 are real; other codecs raise).
-
-    Scale plan: each video decodes once inside its Arrow batch; the
-    frame-delta reduction is one vectorized pass (no per-frame
-    python); output is cuts only — orders of magnitude smaller than
-    frames."""
-    has_fps = fps_col in df.columns
-
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                frames = _decode_all_frames(
-                    bytes(r.bytes), int(r.w), int(r.h),
-                    int(r.n_frames), r.fmt).astype(np.float64)
-                if len(frames) < 2:
-                    continue
-                mad = np.abs(np.diff(frames, axis=0)).mean(axis=(1, 2)) \
-                    / 255.0
-                fps = float(getattr(r, fps_col)) if has_fps else 0.0
-                for j in np.flatnonzero(mad > threshold):
-                    ci = int(j) + 1
-                    t = ci / fps if fps > 0 else float(ci)
-                    rows.append((r.video_id, ci, float(t), float(mad[j])))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "video_id", "cut_index", "t", "score"])
-
-    return df.mapInPandas(
-        _run, schema="video_id string, cut_index int, t double, "
-                     "score double")
-
-
-# ------------------------------------------------------- audio segmentation
-
-def segment_audio(df: DataFrame, *, frame_ms: float = 25.0,
-                  threshold: float = 0.02,
-                  sr_col: str = "sample_rate") -> DataFrame:
-    """Energy-based audio segmentation (VAD baseline): frame the signal
-    at ``frame_ms``, mark frames whose RMS exceeds ``threshold``, and
-    merge consecutive active frames into segments — the
-    split-on-silence step a speech pipeline runs before transcription.
-
-    Output: one row per segment ``(audio_id, seg_idx, start_s, end_s,
-    n_frames, rms_mean)`` with end exclusive.  Decode routes through
-    decode_audio (pcm/wav/aiff/flac/mp3 real).  Channel-mean taken
-    first; the trailing partial frame is kept.
-
-    Scale plan: decode-once per row, framing + RMS + gaps-and-islands
-    all vectorized numpy inside the Arrow batch; output is segments,
-    not samples."""
-
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    x = decode_audio(bytes(r.bytes), r.fmt)
-                except NotImplementedError:
-                    raise
-                except Exception:
-                    continue
-                if x.ndim == 2:
-                    x = x.mean(axis=1)
-                sr = float(getattr(r, sr_col))
-                flen = max(1, int(round(sr * frame_ms / 1000.0)))
-                nfr = (len(x) + flen - 1) // flen
-                if nfr == 0:
-                    continue
-                pad = np.zeros(nfr * flen, dtype=np.float64)
-                pad[:len(x)] = x
-                fr = pad.reshape(nfr, flen)
-                # RMS over the true sample count of the last frame
-                counts = np.full(nfr, flen, dtype=np.float64)
-                counts[-1] = len(x) - (nfr - 1) * flen
-                rms = np.sqrt((fr ** 2).sum(axis=1) / counts)
-                act = rms > threshold
-                if not act.any():
-                    continue
-                d = np.diff(act.astype(np.int8))
-                starts = np.flatnonzero(d == 1) + 1
-                ends = np.flatnonzero(d == -1) + 1
-                if act[0]:
-                    starts = np.concatenate([[0], starts])
-                if act[-1]:
-                    ends = np.concatenate([ends, [nfr]])
-                for k, (s, e) in enumerate(zip(starts, ends)):
-                    rows.append((
-                        r.audio_id, int(k),
-                        float(s * flen / sr),
-                        float(min(int(e) * flen, len(x)) / sr),
-                        int(e - s), float(rms[s:e].mean())))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "audio_id", "seg_idx", "start_s", "end_s", "n_frames",
-                    "rms_mean"])
-
-    return df.mapInPandas(
-        _run, schema="audio_id string, seg_idx int, start_s double, "
-                     "end_s double, n_frames int, rms_mean double")
-
-
 # ------------------------------------------------------------ image quality
 
 def quality_metrics(a: np.ndarray) -> tuple[float, float, float, float, float]:
@@ -619,79 +367,3 @@ def image_quality(df: DataFrame) -> DataFrame:
                 yield out
 
     return df.mapInPandas(_run, schema=out_schema)
-
-
-# ------------------------------------------------------------------ audio
-
-AUDIO_FEATURE_SCHEMA = ("audio_id string, duration_s double, rms double, "
-                        "peak double, zcr double, clip_ratio double")
-
-
-def decode_audio(buf: bytes, fmt: str) -> np.ndarray:
-    """float64 mono samples in [-1, 1]. Real: pcm_f32 (little-endian
-    float32), pcm_s16 (little-endian int16), mp3 (from-scratch MPEG
-    Layer III, raster/mp3.py; streams selecting the unverifiable
-    Huffman escape tables raise — see mp3.py docstring), wav / aiff
-    (raster/wavaiff.py, stdlib-conformance-tested containers) and flac
-    (raster/flac.py, from-scratch lossless codec with CRC/MD5
-    enforcement). Multichannel is mixed down. ogg/aac remain
-    wheel-bound."""
-    if fmt == "pcm_f32":
-        return np.frombuffer(bytes(buf), dtype="<f4").astype(np.float64)
-    if fmt == "pcm_s16":
-        return np.frombuffer(bytes(buf), dtype="<i2").astype(np.float64) / 32768.0
-    if fmt == "mp3":
-        from . import mp3
-        pcm, _sr = mp3.decode(bytes(buf))
-        return pcm.mean(axis=1) if pcm.ndim == 2 else pcm
-    if fmt in ("wav", "aiff", "flac"):
-        if fmt == "wav":
-            from . import wavaiff
-            pcm, _sr = wavaiff.decode_wav(bytes(buf))
-        elif fmt == "aiff":
-            from . import wavaiff
-            pcm, _sr = wavaiff.decode_aiff(bytes(buf))
-        else:
-            from . import flac
-            pcm, _sr = flac.decode_float(bytes(buf))
-        return pcm.mean(axis=1) if pcm.ndim == 2 else pcm
-    raise NotImplementedError(
-        f"audio codec {fmt!r} requires a decoder wheel absent in this "
-        "sandbox; supported here: pcm_f32, pcm_s16, mp3, wav, aiff, flac")
-
-
-def audio_features(df: DataFrame, *, clip_level: float = 0.999) -> DataFrame:
-    """Per-asset scalar features (duration, RMS, peak, zero-crossing
-    rate, clipping ratio) — the quality-scoring columns an audio
-    training pipeline filters on. Input: (audio_id, bytes, sample_rate,
-    fmt)."""
-
-    def _run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    x = decode_audio(r.bytes, r.fmt)
-                except (ValueError, NotImplementedError):
-                    # crawl contract: corrupt/unsupported rows are
-                    # dropped, never kill the task (same as resize_images)
-                    continue
-                n = len(x)
-                sr = float(r.sample_rate)
-                if n == 0 or sr <= 0:
-                    rows.append((r.audio_id, 0.0, 0.0, 0.0, 0.0, 0.0))
-                    continue
-                zc = float(np.count_nonzero(np.signbit(x[1:]) != np.signbit(x[:-1])))
-                rows.append((
-                    r.audio_id,
-                    n / sr,
-                    float(np.sqrt(np.mean(x * x))),
-                    float(np.max(np.abs(x))),
-                    zc / max(n - 1, 1),
-                    float(np.count_nonzero(np.abs(x) >= clip_level)) / n,
-                ))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "audio_id", "duration_s", "rms", "peak", "zcr", "clip_ratio"])
-
-    return df.mapInPandas(_run, schema=AUDIO_FEATURE_SCHEMA)

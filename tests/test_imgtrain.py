@@ -355,13 +355,15 @@ def test_detect_format_sql_mirror_agreement(spark):
     import duckdb
     from gis_tools_spark.operators.imgtrain import (detect_format,
                                                     magic_case_sql)
-    from gis_tools_spark.raster import flac, jpeg, mp4
+    from gis_tools_spark.raster import jpeg
 
     arr = np.arange(192, dtype=np.uint8).reshape(8, 8, 3)
     bufs = [jpeg.encode(arr, 90), codec.encode(arr, "png"),
             codec.encode(arr, "webp"), codec.encode(arr, "raw"),
-            flac.encode(np.zeros(64), 8000, bps=16),
-            mp4.write_mp4([bytes(64)], w=8, h=8, fps=1.0),
+            # fLaC marker + last-block STREAMINFO header (34-byte body)
+            b"fLaC\x80\x00\x00\x22" + bytes(34),
+            # ISO-BMFF ftyp box, generic isom brand
+            b"\x00\x00\x00\x18ftypisom\x00\x00\x02\x00isomiso2",
             b"GIF89a\x00\x00", b"BMxxxx", b"\x00\x01\x02"]
     df = spark.createDataFrame([(i, b) for i, b in enumerate(bufs)],
                                "i int, bytes binary")

@@ -1,15 +1,12 @@
-"""Multimodal media ops (raster/media.py): resize, video frame
-sampling, audio features — numeric kernels against closed forms, Spark
-plumbing end-to-end."""
+"""Image-table ops (raster/media.py): resize and quality signals —
+numeric kernels against closed forms, Spark plumbing end-to-end."""
 
 import numpy as np
 import pytest
 
 from gis_tools_spark import fixtures
 from gis_tools_spark.raster import codec
-from gis_tools_spark.raster.media import (
-    audio_features, decode_audio, decode_video, resize_array,
-    resize_images, sample_video_frames)
+from gis_tools_spark.raster.media import resize_array, resize_images
 
 
 # --------------------------------------------------------------- kernels
@@ -33,45 +30,10 @@ def test_resize_bilinear_exact_on_linear_ramp():
     assert np.allclose(r[inner], want[inner], atol=1e-9)
 
 
-def _frame(i: int, f: int, w: int, h: int) -> bytes:
-    """Closed-form fixture frame (mirrors fixtures.gen_videos)."""
-    yy, xx = np.mgrid[0:h, 0:w]
-    base = ((xx * 3 + yy * 5 + i * 17 + f * 11) % 256).astype(np.uint8)
-    base[f % h, (i + f) % w] = 255
-    return base.tobytes()
-
-
 def test_resize_upscale_preserves_constant_and_range():
     a = np.full((5, 7, 3), 200, dtype=np.uint8)
     r = resize_array(a, 21, 15, method="bilinear")
     assert r.shape == (15, 21, 3) and (r == 200).all()
-
-
-def test_video_decode_roundtrip():
-    vids = fixtures.gen_videos(n=2, n_frames=6, w=8, h=4)
-    r = vids.iloc[0]
-    assert r["fmt"] == "rawvid"
-    frames = decode_video(r["bytes"], r["w"], r["h"], r["n_frames"], r["fmt"])
-    assert frames.shape == (6, 4, 8)
-    # odd fixture rows are real ISO-BMFF containers with rawg samples
-    from gis_tools_spark.raster import mp4 as M
-    r1 = vids.iloc[1]
-    assert r1["fmt"] == "mp4"
-    info = M.probe(r1["bytes"])
-    assert info["tracks"][0]["n_samples"] == 6
-    assert M.extract_samples(r1["bytes"], [3])[0] == _frame(1, 3, 8, 4)
-    with pytest.raises(NotImplementedError):
-        decode_video(b"", 1, 1, 1, "h264")
-
-
-def test_audio_decode_families():
-    aud = fixtures.gen_audio(n=2)
-    x0 = decode_audio(aud.iloc[0]["bytes"], aud.iloc[0]["fmt"])
-    x1 = decode_audio(aud.iloc[1]["bytes"], aud.iloc[1]["fmt"])
-    assert x0.dtype == np.float64 and len(x0) == 4000 and np.abs(x0).max() <= 1.0
-    assert len(x1) == 4000
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"", "aac")
 
 
 # --------------------------------------------------------------- spark
@@ -95,57 +57,6 @@ def test_resize_images_spark(spark):
     bad.loc[0, "fmt"] = "png"
     out2 = resize_images(spark.createDataFrame(bad), 8, 8).toPandas()
     assert len(out2) == 39
-
-
-def test_sample_video_frames_spark(spark):
-    vids = fixtures.gen_videos(n=3, n_frames=10, w=16, h=8)
-    df = spark.createDataFrame(vids)
-    out = sample_video_frames(df, every_n=4).toPandas()
-    # frames 0,4,8 per video
-    assert sorted(out["frame_index"].unique()) == [0, 4, 8]
-    assert len(out) == 9
-    # payload equals the exact frame slice; t = frame/fps.
-    # vid1 is an mp4 container row: the payload was SLICED out of mdat
-    # by the stbl tables, so equality proves the whole offset expansion
-    r = out[(out.video_id == "vid000001") & (out.frame_index == 4)].iloc[0]
-    assert bytes(r["bytes"]) == _frame(1, 4, 16, 8)
-    assert r["t"] == pytest.approx(4 / 12.0)
-    r2 = out[(out.video_id == "vid000002") & (out.frame_index == 4)].iloc[0]
-    src = vids[vids.video_id == "vid000002"].iloc[0]
-    frames = decode_video(src["bytes"], 16, 8, 10, "rawvid")
-    assert bytes(r2["bytes"]) == frames[4].tobytes()
-    # n_samples variant: first + last always in, k distinct
-    out2 = sample_video_frames(df, n_samples=4).toPandas()
-    per = out2.groupby("video_id")["frame_index"].agg(list)
-    for idx in per:
-        assert idx[0] == 0 and idx[-1] == 9 and len(idx) == 4
-    # sampled frames feed straight back into the image ops
-    resized = resize_images(
-        spark.createDataFrame(out), 4, 4, method="nearest").toPandas()
-    assert len(resized) == 9 and (resized["w"] == 4).all()
-
-
-def test_audio_features_spark(spark):
-    aud = fixtures.gen_audio(n=6)
-    out = audio_features(spark.createDataFrame(aud)).toPandas().set_index("audio_id")
-    # sine closed forms: rms = amp/sqrt(2); peak ~ amp; zcr ~ 2f/sr
-    for i in range(6):
-        amp = 0.1 * (i % 9 + 1)
-        f = 110.0 * (i + 1)
-        r = out.loc[f"aud{i:06d}"]
-        if i % 6 == 2:
-            # mp3 rows: lossy (~25 dB coder, see raster/mp3.py) and
-            # padded to granule + filterbank-delay boundaries
-            assert r["duration_s"] == pytest.approx(0.5, rel=0.1)
-            assert r["rms"] == pytest.approx(amp / np.sqrt(2), rel=0.15)
-            assert r["peak"] == pytest.approx(amp, rel=0.25)
-            assert r["zcr"] == pytest.approx(2 * f / 8000.0, rel=0.15)
-        else:
-            assert r["duration_s"] == pytest.approx(0.5)
-            assert r["rms"] == pytest.approx(amp / np.sqrt(2), rel=5e-3)
-            assert r["peak"] == pytest.approx(amp, rel=5e-3)
-            assert r["zcr"] == pytest.approx(2 * f / 8000.0, rel=2e-2)
-            assert r["clip_ratio"] == 0.0
 
 
 # --------------------------------------------------------- image quality
@@ -183,62 +94,3 @@ def test_image_quality_spark_drops_corrupt(spark):
     assert (out["entropy_bits"] > 0).all()
     assert np.isfinite(out[["brightness", "contrast", "lap_var",
                             "dyn_range"]].values).all()
-
-
-# ------------------------------------------------- scene cuts / segmentation
-
-def test_detect_scene_cuts_rawvid_and_mp4(spark):
-    import numpy as np
-    from gis_tools_spark.raster import mp4 as M
-    from gis_tools_spark.raster.media import detect_scene_cuts
-
-    frames = np.empty((20, 8, 10), dtype=np.uint8)
-    frames[:10] = 10
-    frames[10:] = 110
-    flat = np.full((20, 8, 10), 7, dtype=np.uint8)  # no cuts
-    rows = [
-        ("raw_cut", frames.tobytes(), 20, 10, 8, "rawvid", 10.0),
-        ("raw_flat", flat.tobytes(), 20, 10, 8, "rawvid", 10.0),
-        ("mp4_cut", M.write_mp4([frames[f].tobytes() for f in range(20)],
-                                w=10, h=8, fps=10.0), 20, 10, 8, "mp4",
-         10.0),
-    ]
-    df = spark.createDataFrame(rows, "video_id string, bytes binary, "
-                               "n_frames int, w int, h int, fmt string, "
-                               "fps double")
-    got = detect_scene_cuts(df, threshold=0.1).collect()
-    by = {}
-    for r in got:
-        by.setdefault(r.video_id, []).append(r)
-    assert "raw_flat" not in by
-    for vid in ("raw_cut", "mp4_cut"):
-        assert len(by[vid]) == 1
-        r = by[vid][0]
-        assert r.cut_index == 10
-        assert r.score == pytest.approx(100 / 255.0)
-        assert r.t == pytest.approx(1.0)
-
-
-def test_segment_audio_energy_islands(spark):
-    import numpy as np
-    from gis_tools_spark.raster.media import segment_audio
-
-    x = np.concatenate([np.zeros(300), np.full(200, 0.5),
-                        np.zeros(100), np.full(150, 0.5)]) \
-        .astype(np.float32)
-    df = spark.createDataFrame(
-        [("a", x.tobytes(), "pcm_f32", 1000)],
-        "audio_id string, bytes binary, fmt string, sample_rate int")
-    got = sorted(segment_audio(df, frame_ms=100, threshold=0.02).collect(),
-                 key=lambda r: r.seg_idx)
-    assert len(got) == 2
-    s0, s1 = got
-    assert (s0.start_s, s0.end_s, s0.n_frames) == (0.3, 0.5, 2)
-    assert s0.rms_mean == pytest.approx(0.5)
-    assert (s1.start_s, s1.n_frames) == (0.6, 2)
-    assert s1.end_s == pytest.approx(0.75)  # trailing partial frame kept
-    # all-silence input yields no rows
-    sil = spark.createDataFrame(
-        [("s", np.zeros(500, np.float32).tobytes(), "pcm_f32", 1000)],
-        "audio_id string, bytes binary, fmt string, sample_rate int")
-    assert segment_audio(sil, frame_ms=100, threshold=0.02).count() == 0
