@@ -282,58 +282,6 @@ def q_fishnet_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ============================================================ training-data ops
 
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact near-dup removal: hash-groupBy on document text."""
-    _tune(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (docs.groupBy(F.md5(F.col("text")).alias("h"))
-            .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n")))
-
-
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text quality scoring: token count, char stats, punctuation ratio."""
-    _tune(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n_tokens = F.size(F.split(F.trim(F.col("text")), " +"))
-    n_chars = F.length("text")
-    n_nospace = F.length(F.regexp_replace("text", r"\s", ""))
-    n_punct = n_chars - F.length(F.regexp_replace("text", r"[.,;:!?]", ""))
-    bpe = F.expr(
-        r"size(regexp_extract_all(text, '[A-Za-z]{1,4}|[0-9]+|[^A-Za-z0-9\\s]', 0))")
-    return docs.select(
-        "doc_id",
-        n_tokens.alias("n_tokens"),
-        n_chars.alias("n_chars_q"),
-        F.round(n_nospace / n_tokens, 6).alias("avg_token_len"),
-        F.round(n_punct / n_chars, 6).alias("punct_ratio"),
-        bpe.alias("bpe_tokens"),
-    )
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-heuristic language ID (en/fr/de scores + argmax)."""
-    _tune(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def score(word: str):
-        return ((F.length("text")
-                 - F.length(F.expr(f"replace(text, ' {word} ', '')")))
-                / (len(word) + 2)).cast("long")
-
-    en, fr, de = score("the"), score("le"), score("der")
-    pred = (F.when((en >= fr) & (en >= de), F.lit("en"))
-            .when(fr >= de, F.lit("fr")).otherwise(F.lit("de")))
-    return docs.select("doc_id", en.alias("en_s"), fr.alias("fr_s"),
-                       de.alias("de_s"), pred.alias("pred_lang"))
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: md5 of whitespace-normalized lowercase text."""
-    _tune(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    norm = F.lower(F.regexp_replace("text", r"\s+", " "))
-    return docs.select("doc_id", F.md5(norm).alias("fp"))
-
 
 def q_embed_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine nearest neighbor per embedding via the BLOCKED plan
@@ -868,102 +816,6 @@ def q_wds_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "caption_ok boolean, lon_r long, lat_r long")
 
 
-def q_warc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl front-end gate (sources/warc.py + operators/html.py):
-    closed-form HTML pages are packed into member-per-record .warc.gz
-    blobs (one archive per partition, Common Crawl's layout), ingested
-    back through warc_records (multi-member gunzip, WARC + HTTP header
-    parse) and html_extract (script/style drop, entity decode, block
-    newlines), and the recovered status / link / word counts are
-    compared to their closed forms.  Any drift in the gzip member
-    walk, header slicing, HTTP split, tag stripping, or tokenizing
-    changes the counts and breaks the hash."""
-    _tune(spark)
-    from typing import Iterator
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where("doc_id % 23 = 0").select("doc_id"))
-
-    def _pack(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from gis_tools_spark.sources import warc as _W
-        for pdf in it:
-            if not len(pdf):
-                continue
-            recs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                para = " ".join(f"tok{j}" for j in range(3 + d % 7))
-                html = (f"<html><head><title>Doc {d}</title>"
-                        f"<style>p{{x}}</style></head><body>"
-                        f"<h1>Doc &#{68};{d}</h1><p>{para}</p>"
-                        f"<script>var s='<p>no</p>';</script>"
-                        f"<a href='/x'>link</a></body></html>")
-                recs.append({"url": f"http://ex.com/{d}", "html": html})
-            blob = _W.write_warc(recs)
-            yield pd.DataFrame({"doc_id": [int(pdf['doc_id'].min())],
-                                "bytes": [blob]})
-
-    packed = docs.repartition(4).mapInPandas(
-        _pack, schema="doc_id long, bytes binary")
-    from gis_tools_spark.operators.html import html_extract
-    from gis_tools_spark.sources.warc import warc_records
-    recs = warc_records(packed).where("ok AND rec_type = 'response'")
-    pages = recs.select(
-        F.regexp_extract("url", r"/(\d+)$", 1).cast("long").alias("doc_id"),
-        "http_status",
-        F.col("payload").alias("html"))
-    ex = html_extract(pages, html_col="html").alias("ex")
-    joined = pages.select("doc_id", "http_status").join(ex, "doc_id")
-    # h1 text is "Doc D<d>" (entity &#68; = 'D'): 2 words; para 3+d%7;
-    # trailing link 1 word; title excluded from text
-    return joined.select(
-        "doc_id", "http_status", "n_links",
-        F.col("n_words").cast("long").alias("n_words"),
-        (F.col("title") == F.concat(F.lit("Doc "), F.col("doc_id")))
-        .alias("title_ok"))
-
-
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition filters (operators/textstats.py
-    repetition_stats): duplicate-line fraction and top-bigram fraction
-    per document, both pure JVM explode+groupBy shapes.  The DuckDB
-    oracle recomputes both signals from the same single-space/newline
-    tokenization; fractions compared in the house floor(x*1e6+0.5)
-    micro-units."""
-    _tune(spark)
-    from gis_tools_spark.operators.textstats import repetition_stats
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = repetition_stats(docs)
-    return out.select(
-        "doc_id",
-        F.floor(F.col("dup_line_frac") * 1e6 + F.lit(0.5)).cast("long")
-        .alias("dup_line_u"),
-        F.floor(F.col("top_bigram_frac") * 1e6 + F.lit(0.5)).cast("long")
-        .alias("top_bigram_u"))
-
-
-def q_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact repeated-substring spans (operators/dedup.py
-    substring_dup_spans — the RefinedWeb/Pile 'duplicated span >= k
-    tokens' detector, the intra-document complement of the
-    document-level dedup family): every k-token window is md5-keyed
-    JVM-side, windows seen 2..10000 times survive, and per-document
-    overlapping starts merge into maximal spans via lag().  The DuckDB
-    oracle recomputes the identical md5 window keys and the identical
-    gaps-and-islands merge, so the value hash pins tokenization, window
-    hashing, the occurrence band, and the merge rule."""
-    _tune(spark)
-    from gis_tools_spark.operators.dedup import substring_dup_spans
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = substring_dup_spans(docs, k=8)
-    return out.select(F.col("doc_id"),
-                      F.col("span_start").cast("long").alias("span_start"),
-                      F.col("span_end").cast("long").alias("span_end"),
-                      F.col("n_windows").cast("long").alias("n_windows"))
-
-
 def q_img_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup dedup DECISION (operators/dedup.py
     hamming_dedup_clusters): the same synthetic md5-derived phash corpus
@@ -996,242 +848,6 @@ def q_img_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = base.unionByName(dup)
     return hamming_dedup_clusters(df, hash_col="phash", id_col="image_id",
                                   max_hamming=3)
-
-
-def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping token-window chunker (operators/packing.py
-    chunk_documents — the RAG/long-doc context-window splitter): chunk
-    16 / overlap 4 over the documents corpus so the 10-99-word fixture
-    docs produce 1-8 chunks each.  The DuckDB oracle recomputes the
-    identical tokenization, the identical closed-form chunk count
-    (floor((max(n-16,0)+11)/12)+1) and the identical 1-based list
-    slices; md5 of each chunk's text pins span boundaries AND content."""
-    _tune(spark)
-    from gis_tools_spark.operators.packing import chunk_documents
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = chunk_documents(docs, chunk_tokens=16, overlap=4)
-    return out.select("doc_id", "chunk_idx", "tok_start", "tok_end",
-                      "n_tok", F.md5("chunk_text").alias("chunk_md5"))
-
-
-# Gopher-filter gate fixtures: one degenerate document per rule branch,
-# shared verbatim by the Spark query and the DuckDB oracle so the two
-# engines can never drift on the fixture text.  Branch index = doc_id%9;
-# branches 7/8 keep the corpus text (7 appends the stopword suffix).
-_GOPHER_AUG = [
-    "\n".join(["• item alpha beta"] * 20),                    # bullet_lines
-    "\n".join(["one two three four five six seven eight nine soon..."] * 4
-              + ["one two three four five six seven eight nine ten"] * 6),
-    " ".join(["alpha beta gamma delta #tag"] * 12),           # symbol_ratio
-    " ".join(["pneumonoultramicroscopic"] * 50),              # mean_word_len
-    "tiny doc only",                                          # word_count
-    " ".join(["12345 67890 24680 alpha"] * 15),               # alpha_words
-    "\n".join(["the cat of house alpha beta gamma delta"] * 9),  # dup_lines
-]
-_GOPHER_SUFFIX = " the of and that have with be to"
-
-
-def q_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher heuristic quality-filter DECISION (operators/textstats.py
-    gopher_filter): the published rule set — word-count band, mean-word-
-    length band, symbol ratio, bullet/ellipsis line fractions, alpha-word
-    fraction, required stopwords, duplicate-line fraction — composed into
-    a first-match accept/reject with ONE reason per doc.  doc_id%9 swaps
-    in a degenerate fixture doc per rule branch (shared constants with
-    the oracle) so every reason is exercised; the DuckDB oracle rebuilds
-    the identical augmented corpus and re-evaluates the identical rule
-    chain, so the value hash pins tokenization, every signal, and the
-    rule ORDER."""
-    _tune(spark)
-    from gis_tools_spark.operators.textstats import gopher_filter
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    b = (F.col("doc_id") % 9).cast("int")
-    text = F.col("text")
-    for i, doc in enumerate(_GOPHER_AUG):
-        text = F.when(b == F.lit(i), F.lit(doc)).otherwise(text)
-    text = F.when(b == F.lit(7),
-                  F.concat(F.col("text"), F.lit(_GOPHER_SUFFIX))) \
-            .otherwise(text)
-    aug = docs.select("doc_id", text.alias("text"))
-    out = gopher_filter(aug)
-    return out.select(
-        "doc_id",
-        F.col("wc"),
-        F.floor(F.col("chsum") * 1000000.0 / F.col("wc") + F.lit(0.5))
-        .cast("long").alias("mean_wl_u"),
-        F.col("n_stop"),
-        "accept", "reject_reason")
-
-
-def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII detection + redaction over documents (operators/pii.py) —
-    the training-pipeline scrubber, 100% JVM codegen (regexp_extract_all
-    + higher-order Luhn filter; zero Python, zero shuffle).  The
-    documents fixture text is digit-free, so deterministic per-doc_id
-    injections (email / valid+invalid credit card / ipv4 / ssn / phone)
-    control every detector; the DuckDB oracle rebuilds the identical
-    augmented text, re-counts every class with the same regexes —
-    including the Luhn checksum via list_transform/list_aggregate — and
-    re-runs the identical redaction chain (pii_redact_sql), so the
-    value hash pins match boundaries, checksum validation, AND the
-    placeholder substitution order.  Luhn split: doc_id%3 injects a
-    valid card (counted + redacted), doc_id%5 an invalid one (redacted
-    only — the redactor fails closed, the counter does not)."""
-    _tune(spark)
-    from gis_tools_spark.operators.pii import pii_redact, pii_stats
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-
-    def when_mod(m: int, col):
-        return F.when(did % m == 0, col).otherwise(F.lit(""))
-
-    aug = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            when_mod(2, F.concat(F.lit(" contact u"), did.cast("string"),
-                                 F.lit("@example.com"))),
-            when_mod(3, F.lit(" card 4111 1111 1111 1111")),
-            when_mod(5, F.lit(" card 4111111111111112")),
-            when_mod(4, F.concat(F.lit(" ip 10.1.2."),
-                                 (did % 256).cast("string"))),
-            when_mod(7, F.lit(" ssn 123-45-6789")),
-            when_mod(6, F.concat(F.lit(" tel +1 (415) 555-"),
-                                 F.lpad((did % 10000).cast("string"),
-                                        4, "0"))),
-        ).alias("text"))
-    out = pii_redact(pii_stats(aug))
-    return out.select("doc_id", "n_emails", "n_ipv4", "n_ssn", "n_cc",
-                      "n_phones", "has_pii", F.md5("text").alias("red_fp"))
-
-
-def q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (operators/decontam.py): flag every
-    training document sharing ≥1 distinct word 8-gram with an eval set
-    (here the doc_id%17 slice of the corpus — verbatim members are
-    trivially contaminated; the interesting rows are the OTHER docs the
-    fixture's repeated spans pull in).  Gate runs the ``key='text'``
-    family so DuckDB mirrors the gram join verbatim; the production
-    ``key='xxhash'`` long-key family is agreement-tested against it in
-    test_decontam.py (same md5_oracle/xxhash split as MinHash).  Plan:
-    broadcast eval grams, shuffle-free probe + partial count."""
-    _tune(spark)
-    from gis_tools_spark.operators.decontam import decontaminate
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    ev = docs.where("doc_id % 17 = 0")
-    return decontaminate(docs, ev, n=8, key="text")
-
-
-def q_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing (operators/packing.py): documents → 128-token
-    training blocks via the DISTRIBUTED prefix-sum (bucketed cumsum +
-    driver-side bucket offsets — no single-partition global window),
-    documents straddling chunk boundaries GPT-style.  The DuckDB oracle
-    computes the same spans with a plain global window cumsum, so the
-    value hash pins tokenization, the exclusive prefix, the chunk
-    explosion, and the span arithmetic; bucketing invariance
-    (n_buckets 1/7/64 identical) is pytest-gated."""
-    _tune(spark)
-    from gis_tools_spark.operators.packing import pack_sequences
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return pack_sequences(docs, 128)
-
-
-def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted corpus mixing (operators/mixing.py): per-source token
-    totals → budget·weight/total sampling rates (capped at 1 — small
-    sources are taken whole, never upsampled) → deterministic
-    hash-Bernoulli row selection that is a pure function of (doc_id,
-    seed): reproducible across re-runs, resumes, and repartitioning.
-    Gate runs the ``family='md5'`` oracle hash; DuckDB recomputes the
-    totals, the rate algebra, and the identical keep-predicate
-    (sample_sql_predicate — kept in the module so it can't drift), so
-    the value hash pins the EXACT sampled row set, not just counts.
-    The production xxhash family is rate-agreement-tested in
-    test_mixing.py."""
-    _tune(spark)
-    from gis_tools_spark.operators.mixing import mix_corpus
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = mix_corpus(docs, {"src1": 0.3, "src4": 0.2, "src7": 0.5},
-                     2000, seed=11, family="md5")
-    return out.select(
-        "doc_id", "source", "n_tokens",
-        (F.floor(F.col("sample_rate") * 1e9 + F.lit(0.5)))
-        .cast("long").alias("rate_r"))
-
-
-def q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl URL gate (operators/urlfilter.py): parse scheme/host/port/
-    path/query, reduce host to its registrable domain through the
-    multi-part public-suffix table, and classify every row with a
-    first-match block reason (scheme → ip_host → domain blocklist →
-    path regex).  One codegen projection, zero joins, zero Python —
-    the literal-isin blocklist family (the broadcast-DataFrame family
-    is agreement-tested in test_urlfilter.py).  URLs are synthesized
-    deterministically from doc_id so every branch is exercised: ftp
-    schemes (%19), raw-IP hosts (%23), www prefixes (%3), five TLDs
-    incl. the co.uk multi-part suffix (%5), ports (%11), query strings
-    (%4), and three blocklisted domains; the DuckDB oracle rebuilds the
-    same URLs and mirrors every regex (RE2-safe, no lookarounds) plus
-    the suffix-reduction array logic."""
-    _tune(spark)
-    from gis_tools_spark.operators.urlfilter import url_filter
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    did = F.col("doc_id")
-    scheme = (F.when(did % 19 == 0, F.lit("ftp://"))
-              .when(did % 2 == 0, F.lit("https://"))
-              .otherwise(F.lit("http://")))
-    tlds = F.array(F.lit(".com"), F.lit(".org"), F.lit(".co.uk"),
-                   F.lit(".io"), F.lit(".net"))
-    host = F.when(
-        did % 23 == 0,
-        F.concat(F.lit("93.184."), (did % 256).cast("string"),
-                 F.lit(".34"))
-    ).otherwise(F.concat(
-        F.when(did % 3 == 0, F.lit("www.")).otherwise(F.lit("")),
-        F.lit("site"), (did % 37).cast("string"),
-        F.element_at(tlds, (did % 5 + 1).cast("int"))))
-    port = F.when(did % 11 == 0, F.lit(":8080")).otherwise(F.lit(""))
-    tail = F.concat(
-        F.lit("/p/"), did.cast("string"),
-        F.when(did % 4 == 0, F.concat(F.lit("?ref="),
-                                      (did % 10).cast("string")))
-        .otherwise(F.lit("")))
-    urls = docs.select(
-        "doc_id", F.concat(scheme, host, port, tail).alias("url"))
-    out = url_filter(urls,
-                     blocked_domains=["site3.com", "site7.co.uk",
-                                      "site11.net"],
-                     blocked_path_re=r"^/p/.*0$")
-    return out.select(
-        "doc_id", "scheme", "host", "port", "path", "query",
-        "registered_domain", "is_ip",
-        F.coalesce("block_reason", F.lit("")).alias("block_reason"),
-        "blocked")
-
-
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT word-trigram Jaccard over MinHash-LSH-prefiltered candidate
-    pairs (operators/dedup.py:ngram_jaccard_pairs) — the dedup family's
-    exact-verifier op, now value-gated: DuckDB recomputes the same md5
-    MinHash bands for the candidate set and the exact shingle-set
-    intersection/union ratio. Rounding via the shared
-    floor(x*1e6+0.5)/1e6 closed form on both sides."""
-    _tune(spark)
-    from gis_tools_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = ngram_jaccard_pairs(docs, n=3, threshold=0.3, prefilter_bands=8)
-    return out.select(
-        "id_a", "id_b",
-        (F.floor(F.col("jaccard") * 1e6 + F.lit(0.5)) / 1e6).alias("jacc_r"))
 
 
 def q_embed_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1280,108 +896,6 @@ def q_embed_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("vec_id").alias("id_a"),
                     F.col("neighbor_id").alias("id_b"),
                     F.round(F.col("cosine"), 6).alias("cos_r")))
-
-
-def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF-IDF top-3 keywords per document (gate 71): per-doc term
-    frequencies (one shuffle with map-side combine), corpus document
-    frequencies (second reduction of the tf table), smoothed-idf weight
-    ``tf·(ln((N+1)/(df+1))+1)`` rounded to 6 dp, deterministic rank
-    (rounded score desc, word asc). The DuckDB oracle recomputes every
-    count and weight from the same whitespace tokenization — tf, df,
-    score AND rank are value-checked. Reference has no text operators;
-    brief-scope training-pipeline op (corpus-statistics family next to
-    the heuristic gopher/repetition filters)."""
-    _tune(spark)
-    from gis_tools_spark.operators.tfidf import tfidf_topk
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return tfidf_topk(docs, k=3).orderBy("doc_id", "rank")
-
-
-def q_doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram-LM perplexity quality score (gate 72, the CCNet-style
-    published crawl-quality recipe): corpus bigram/context counts (two
-    shuffled aggregations), add-0.5 smoothing over vocab+1, per-doc
-    average bigram log-probability and perplexity, both 6-dp rounded.
-    Gate scores the corpus under its own statistics so every count,
-    every log-probability, and both aggregates are mirrored value-level
-    in DuckDB from the same tokenization (BOS-prefixed whitespace
-    tokens)."""
-    _tune(spark)
-    from gis_tools_spark.operators.lmscore import perplexity_scores
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return perplexity_scores(docs).orderBy("doc_id")
-
-
-# line_dedup gate: deterministic multi-line documents rebuilt from the
-# documents table (fixture texts are single-line) — a constant header on
-# every doc, 6-word body chunks, a promo line on doc_id % 7 == 0, and a
-# per-source footer; engine and oracle construct the identical lines.
-LD_HDR = "hdr shared boilerplate banner"
-LD_PROMO = "promo line buy now"
-LD_CHUNK = 6
-
-
-def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Line-level boilerplate removal (gate 74, the RefinedWeb/CCNet
-    recipe): lines appearing in ≥ min_docs distinct documents are
-    dropped from every document, surviving lines re-join in order. The
-    gate synthesizes multi-line docs deterministically (header + 6-word
-    chunks + conditional promo + per-source footer) so removal hits the
-    header everywhere, the promo on its 1-in-7 docs, and each source's
-    footer, while natural body chunks survive; the oracle rebuilds the
-    identical line set and md5-pins each cleaned document."""
-    _tune(spark)
-    from gis_tools_spark.operators.dedup import dedup_lines
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    words = F.filter(F.split(F.trim(F.lower("text")), r"\s+"),
-                     lambda x: x != F.lit(""))
-    nch = F.ceil(F.size("w") / F.lit(float(LD_CHUNK))).cast("int")
-    # guard: sequence(1, 0) would count DOWN in Spark — empty docs get
-    # an empty chunk list instead
-    chunks = F.when(F.col("nch") > 0, F.transform(
-        F.sequence(F.lit(1), F.col("nch")),
-        lambda i: F.array_join(
-            F.slice("w", (i - 1) * LD_CHUNK + 1, LD_CHUNK), " "))
-    ).otherwise(F.array().cast("array<string>"))
-    built = (docs.select("doc_id", "source", words.alias("w"))
-             .withColumn("nch", nch)
-             .select("doc_id", F.concat_ws(
-                 "\n",
-                 F.concat(F.array(F.lit(LD_HDR)), chunks,
-                          F.when(F.col("doc_id") % 7 == 0,
-                                 F.array(F.lit(LD_PROMO)))
-                          .otherwise(F.array().cast("array<string>")),
-                          F.array(F.concat(F.lit("src "), F.col("source")))))
-                 .alias("text")))
-    out = dedup_lines(built, min_docs=2)
-    return (out.select("doc_id",
-                       F.col("n_lines").cast("long").alias("n_lines"),
-                       F.col("n_removed").cast("long").alias("n_removed"),
-                       F.md5("clean_text").alias("clean_md5"))
-            .orderBy("doc_id"))
-
-
-def q_cross_doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document exact duplicate spans (gate 75, the published
-    remove-substrings-already-seen-elsewhere dedup): maximal token
-    ranges whose every 8-token window also occurs in a DIFFERENT
-    document, reported only for non-canonical copies (the minimum
-    doc_id holding a window keeps it). Same md5 window keys and
-    gaps-and-islands merge as substring_spans, with ownership resolved
-    by one distinct-doc + min-id aggregate, all mirrored in DuckDB."""
-    _tune(spark)
-    from gis_tools_spark.operators.dedup import cross_dup_spans
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = cross_dup_spans(docs, k=8)
-    return out.select(F.col("doc_id"),
-                      F.col("span_start").cast("long").alias("span_start"),
-                      F.col("span_end").cast("long").alias("span_end"),
-                      F.col("n_windows").cast("long").alias("n_windows"))
 
 
 def q_geohash_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1578,92 +1092,6 @@ def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("res", "cell"))
 
 
-# c4_filter gate: deterministic multi-line docs with per-line suffix
-# punctuation and rule-triggering injected lines, shared with the oracle.
-C4_JS_LINE = "this page uses javascript heavily today."
-C4_LOREM_LINE = "lorem ipsum dolor sit amet here."
-C4_CURLY_LINE = "config { braces appear here today."
-C4_BAD_LINE = "contains badword in plain sight today."
-
-
-def q_c4_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-rules cleanup decision (gate 76): line stage (terminal
-    punctuation, ≥5 words, no 'javascript') then first-match document
-    rejection (lorem ipsum / curly brace / bad word / <3 sentence
-    enders). The gate rebuilds deterministic multi-line documents on
-    both engines — 6-word body chunks whose suffix cycles . ! (none) ?
-    by (doc_id+i)%4, all-punctuation-stripped docs at doc_id%19==0, and
-    injected rule-trigger lines at doc_id%11/13/17/23 — so every line
-    rule and every document reason branch is value-checked, with the
-    cleaned text md5-pinned."""
-    _tune(spark)
-    from gis_tools_spark.operators.textstats import c4_filter
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    words = F.filter(F.split(F.trim(F.lower("text")), r"\s+"),
-                     lambda x: x != F.lit(""))
-    nch = F.ceil(F.size("w") / F.lit(float(LD_CHUNK))).cast("int")
-    m = F.col("doc_id")
-
-    def _suffix(i):
-        cyc = (m + i) % 4
-        return (F.when(m % 19 == 0, "")
-                .when(cyc == 0, ".").when(cyc == 1, "!")
-                .when(cyc == 3, "?").otherwise(""))
-
-    body = F.when(F.col("nch") > 0, F.transform(
-        F.sequence(F.lit(1), F.col("nch")),
-        lambda i: F.concat(F.array_join(
-            F.slice("w", (i - 1) * LD_CHUNK + 1, LD_CHUNK), " "),
-            _suffix(i)))).otherwise(F.array().cast("array<string>"))
-
-    def _maybe(mod, line):
-        return (F.when(m % mod == 0, F.array(F.lit(line)))
-                .otherwise(F.array().cast("array<string>")))
-
-    built = (docs.select("doc_id", words.alias("w"))
-             .withColumn("nch", nch)
-             .select("doc_id", F.concat_ws(
-                 "\n", F.concat(body, _maybe(11, C4_JS_LINE),
-                                _maybe(13, C4_LOREM_LINE),
-                                _maybe(17, C4_CURLY_LINE),
-                                _maybe(23, C4_BAD_LINE))).alias("text")))
-    out = c4_filter(built)
-    return (out.select("doc_id", "n_lines", "n_kept", "n_sent",
-                       F.md5("clean_text").alias("clean_md5"),
-                       "reject_reason", "accept")
-            .orderBy("doc_id"))
-
-
-# WordPiece gate vocabulary: every fixture character except 'q' (raw +
-# continuation form) so words containing q exercise the [UNK] path, plus
-# multi-character pieces that make longest-match segmentation
-# non-trivial. Shared verbatim with the DuckDB oracle's VALUES table.
-WP_CHARS = list("abcdefghijklmnoprstuvwy")
-WP_VOCAB = (WP_CHARS + ["##" + c for c in WP_CHARS]
-            + ["the", "data", "spark", "sc", "jo", "ha", "ro", "ba", "fil",
-               "##an", "##in", "##sh", "##er", "##w", "##tch", "##ter"])
-
-
-def q_doc_wordpiece(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WordPiece tokenization (gate 73): greedy longest-match subword
-    segmentation of every document against a fixed vocabulary —
-    the value-gated member of the tokenizer family (BPE train/apply is
-    pytest-gated; its pair-priority loop is not SQL-expressible).
-    Distinct words tokenize once in an Arrow UDF, a join re-expands to
-    document order; the oracle replays the exact greedy scan as a
-    recursive CTE over precomputed longest matches and md5-pins the full
-    piece stream per document."""
-    _tune(spark)
-    from gis_tools_spark.operators.tokenizer import wordpiece_tokenize
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = wordpiece_tokenize(docs, WP_VOCAB)
-    return (out.select("doc_id", "n_pieces", "n_unk",
-                       F.md5(F.concat_ws(" ", "pieces")).alias("pieces_md5"))
-            .orderBy("doc_id"))
-
-
 SEM_M = 8          # semdedup coarse-quantizer cells for the gate
 SEM_THRESH = 0.35  # rounded-cosine duplicate threshold
 
@@ -1691,46 +1119,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("cluster_id").cast("long").alias("cluster_id"),
                        F.col("keep").cast("int").alias("keep"))
             .orderBy("vec_id"))
-
-
-def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs over documents. The md5-based base
-    hash + affine permutations are exactly reproducible in DuckDB, so
-    the oracle recomputes the SAME signatures, band buckets, and
-    Jaccard estimates — a value-level gate of the real LSH op."""
-    _tune(spark)
-    from gis_tools_spark.operators.dedup import minhash_lsh_pairs
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return minhash_lsh_pairs(docs, num_hashes=32, bands=8, threshold=0.5)
-
-
-def q_near_dup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end near-dup dedup DECISION (gate 66): the same md5-family
-    MinHash+LSH pairs as `minhash_pairs`, then pointer-jumping connected
-    components over the duplicate graph, then keep-one-per-cluster
-    (canonical = min doc_id). One row per corpus doc with
-    (cluster_id, keep) — the rows a training pipeline writes onward.
-    The oracle recomputes the identical pairs in DuckDB and resolves
-    components with an independent recursive CTE."""
-    _tune(spark)
-    from gis_tools_spark.operators.dedup import near_dup_clusters
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return near_dup_clusters(docs, num_hashes=32, bands=8, threshold=0.5)
-
-
-def q_simhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dups (Hamming ≤ 3) over documents. md5-based word
-    hashes make the 64-bit simhash and Hamming filter SQL-expressible;
-    pigeonhole blocking is complete for d ≤ 3, so the oracle's
-    brute-force pair filter is the exact same set."""
-    _tune(spark)
-    from gis_tools_spark.operators.dedup import simhash_near_dups
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (simhash_near_dups(docs, max_hamming=3)
-            .select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming")))
 
 
 def q_zonal_raster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3686,23 +3074,6 @@ def q_img_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return aug.mapInPandas(
         _check, schema="doc_id long, aug_op string, w int, h int, "
                        "ok_pixels boolean")
-
-
-def q_strat_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified sampling (operators/mixing.stratified_sample): keep
-    up to 7 docs per language, ranked by the deterministic md5 unit
-    hash with doc_id tie-break — a pure function of (row identity,
-    seed), stable under re-runs/resume/repartitioning, monotone in k.
-    The DuckDB oracle replays the identical hash (unit_hash_sql, kept
-    in the module) and window rank, pinning the EXACT sampled row set.
-    The production xxhash family is invariance-tested in
-    test_imgtrain.py."""
-    _tune(spark)
-    from gis_tools_spark.operators.mixing import stratified_sample
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (stratified_sample(docs, 7, "lang", seed=5, family="md5")
-            .select("doc_id", "lang"))
 
 
 def q_image_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5671,10 +5042,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "snap_to_road": q_snap_to_road,
         "zone_choropleth": q_zone_choropleth,
         "dissolve_region_area": q_dissolve_region_area,
-        "dedup_exact": q_dedup_exact,
-        "minhash_pairs": q_minhash_pairs,
-        "near_dup_keep": q_near_dup_keep,
-        "simhash_dups": q_simhash_dups,
         "zonal_raster_stats": q_zonal_raster_stats,
         "geotiff_zonal": q_geotiff_zonal,
         "cog_window_stats": q_cog_window_stats,
@@ -5703,20 +5070,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "katana_split": q_katana_split,
         "centroid_boundary": q_centroid_boundary,
         "horizon": q_horizon,
-        "text_stats": q_text_stats,
-        "lang_id": q_lang_id,
-        "doc_fingerprint": q_doc_fingerprint,
         "embed_top1": q_embed_top1,
         "embed_ann_lsh": q_embed_ann_lsh,
         "embed_near_dups": q_embed_near_dups,
         "embed_ivf": q_embed_ivf,
         "semdedup": q_semdedup,
-        "tfidf_topk": q_tfidf,
-        "doc_perplexity": q_doc_perplexity,
-        "doc_wordpiece": q_doc_wordpiece,
-        "line_dedup": q_line_dedup,
-        "cross_doc_spans": q_cross_doc_spans,
-        "c4_filter": q_c4_filter,
         "tile_pyramid": q_tile_pyramid,
         "graph_pagerank": q_graph_pagerank,
         "geohash_encode": q_geohash_encode,
@@ -5731,7 +5089,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sjoin_rects": q_sjoin_rects,
         "sjoin_broadcast": q_sjoin_broadcast,
         "sjoin_within": q_sjoin_within,
-        "ngram_jaccard": q_ngram_jaccard,
         "phash_near_dups": q_phash_near_dups,
         "zorder_bbox": q_zorder_bbox,
         "icetable_scan": q_icetable_scan,
@@ -5739,27 +5096,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "img_quality": q_img_quality,
         "gpkg_roundtrip": q_gpkg_roundtrip,
         "exif_gps": q_exif_gps,
-        "substring_spans": q_substring_spans,
-        "repetition_stats": q_repetition_stats,
         "img_dedup_keep": q_img_dedup_keep,
-        "doc_chunks": q_doc_chunks,
-        "gopher_filter": q_gopher_filter,
-        "pii_scrub": q_pii_scrub,
-        "decontam": q_decontam,
-        "url_filter": q_url_filter,
-        "seq_pack": q_seq_pack,
-        "corpus_mix": q_corpus_mix,
         "aspect_buckets": q_aspect_buckets,
         "img_token_pack": q_img_token_pack,
         "img_augment": q_img_augment,
-        "strat_sample": q_strat_sample,
         "image_filter": q_image_filter,
         "exif_orient": q_exif_orient,
         "dataset_profile": q_dataset_profile,
         "wds_export": q_wds_export,
         "format_check": q_format_check,
         "img_curation_pipeline": q_img_curation_pipeline,
-        "warc_pipeline": q_warc_pipeline,
         "wds_pipeline": q_wds_pipeline,
         "pricing_summary": q_pricing_summary,
         "graph_components": q_graph_components,
@@ -5821,105 +5167,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # ---------------------------------------------------------- SQL oracle builders
-
-_DOCS_WORDS_SQL = r"""
-SELECT doc_id,
-       list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS words
-FROM documents
-"""
-
-_MOD64 = "18446744073709551616::HUGEINT"
-
-
-def _pii_oracle_sql() -> str:
-    """DuckDB mirror of q_pii_scrub, composed from the SAME pattern
-    constants as the Spark side (operators/pii.py) so they can never
-    drift: rebuild the augmented text, count each class with RE2 (Java
-    and RE2 agree on these lookaround-free patterns), re-validate Luhn
-    with list_transform/list_aggregate, and re-run the identical
-    redaction chain via pii_redact_sql."""
-    from gis_tools_spark.operators.pii import (
-        CC_RE, EMAIL_RE, IPV4_RE, PHONE_RE, SSN_RE, pii_redact_sql)
-
-    luhn = """
-        length(d) >= 13 AND
-        list_aggregate(list_transform(range(1, length(d) + 1), i ->
-          CASE WHEN i % 2 = 0 THEN
-            CASE WHEN 2 * CAST(substr(reverse(d), i, 1) AS INT) > 9
-                 THEN 2 * CAST(substr(reverse(d), i, 1) AS INT) - 9
-                 ELSE 2 * CAST(substr(reverse(d), i, 1) AS INT) END
-          ELSE CAST(substr(reverse(d), i, 1) AS INT) END), 'sum') % 10 = 0
-    """
-    return f"""
-        WITH aug AS (
-          SELECT doc_id,
-            text
-            || CASE WHEN doc_id % 2 = 0 THEN ' contact u'
-                 || CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END
-            || CASE WHEN doc_id % 3 = 0
-                 THEN ' card 4111 1111 1111 1111' ELSE '' END
-            || CASE WHEN doc_id % 5 = 0
-                 THEN ' card 4111111111111112' ELSE '' END
-            || CASE WHEN doc_id % 4 = 0 THEN ' ip 10.1.2.'
-                 || CAST(doc_id % 256 AS VARCHAR) ELSE '' END
-            || CASE WHEN doc_id % 7 = 0 THEN ' ssn 123-45-6789' ELSE '' END
-            || CASE WHEN doc_id % 6 = 0 THEN ' tel +1 (415) 555-'
-                 || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                 ELSE '' END
-            AS text
-          FROM documents
-        ), c AS (
-          SELECT doc_id, text,
-            CAST(len(regexp_extract_all(text, '{EMAIL_RE}')) AS INT)
-              AS n_emails,
-            CAST(len(regexp_extract_all(text, '{IPV4_RE}')) AS INT)
-              AS n_ipv4,
-            CAST(len(regexp_extract_all(text, '{SSN_RE}')) AS INT) AS n_ssn,
-            CAST(len(list_filter(
-              list_transform(regexp_extract_all(text, '{CC_RE}'),
-                             m -> regexp_replace(m, '[^0-9]', '', 'g')),
-              d -> {luhn})) AS INT) AS n_cc,
-            CAST(len(list_filter(
-              list_transform(regexp_extract_all(text, '{PHONE_RE}'),
-                             m -> regexp_replace(m, '[^0-9]', '', 'g')),
-              d -> length(d) BETWEEN 9 AND 15)) AS INT) AS n_phones
-          FROM aug
-        )
-        SELECT doc_id, n_emails, n_ipv4, n_ssn, n_cc, n_phones,
-          (n_emails + n_ipv4 + n_ssn + n_cc + n_phones) > 0 AS has_pii,
-          md5({pii_redact_sql("text")}) AS red_fp
-        FROM c
-    """
-
-
-def _corpus_mix_oracle_sql() -> str:
-    """DuckDB mirror of q_corpus_mix: same token counts, same rate
-    algebra (IEEE double, same operation order), same md5
-    keep-predicate via mixing.sample_sql_predicate."""
-    from gis_tools_spark.operators.mixing import sample_sql_predicate
-
-    pred = sample_sql_predicate("t.doc_id", 11, "r.sample_rate")
-    return rf"""
-        WITH t AS (
-          SELECT doc_id, source,
-            CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-                                 x -> x <> '')) + 1 AS BIGINT) AS n_tokens
-          FROM documents
-        ), tot AS (
-          SELECT source, SUM(n_tokens) AS tot FROM t GROUP BY 1
-        ), r AS (
-          SELECT source,
-            LEAST(1.0, 2000 * (CASE source WHEN 'src1' THEN 0.3
-                                           WHEN 'src4' THEN 0.2
-                                           WHEN 'src7' THEN 0.5 END)
-                       / tot) AS sample_rate
-          FROM tot WHERE source IN ('src1', 'src4', 'src7')
-        )
-        SELECT t.doc_id, t.source, t.n_tokens,
-          CAST(floor(r.sample_rate * 1e9 + 0.5) AS BIGINT) AS rate_r
-        FROM t JOIN r USING (source)
-        WHERE {pred}
-    """
 
 
 def _aspect_buckets_oracle_sql() -> str:
@@ -6004,23 +5251,6 @@ def _img_token_pack_oracle_sql() -> str:
         SELECT doc_id, n AS n_tokens, bucket, block, pos AS block_pos,
                n > 4096 AS oversize
         FROM r
-    """
-
-
-def _strat_sample_oracle_sql() -> str:
-    """DuckDB mirror of q_strat_sample: the module's own md5 unit-hash
-    SQL (unit_hash_sql — can't drift) under the identical window
-    rank."""
-    from gis_tools_spark.operators.mixing import unit_hash_sql
-
-    return f"""
-        SELECT doc_id, lang FROM (
-          SELECT doc_id, lang,
-                 row_number() OVER (
-                   PARTITION BY lang
-                   ORDER BY {unit_hash_sql('doc_id', 5)}, doc_id) AS rn
-          FROM documents)
-        WHERE rn <= 7
     """
 
 
@@ -6151,232 +5381,6 @@ def _img_curation_oracle_sql() -> str:
     """
 
 
-def _url_filter_oracle_sql() -> str:
-    """DuckDB mirror of q_url_filter, composed from the SAME regex and
-    suffix-table constants as operators/urlfilter.py."""
-    from gis_tools_spark.operators.urlfilter import (
-        HOST_RE, IPV4_HOST_RE, MULTIPART_SUFFIXES, PATH_RE, PORT_RE,
-        QUERY_RE, SCHEME_RE)
-
-    suffixes = ", ".join(f"'{s}'" for s in MULTIPART_SUFFIXES)
-    return f"""
-        WITH u AS (
-          SELECT doc_id,
-            (CASE WHEN doc_id % 19 = 0 THEN 'ftp://'
-                  WHEN doc_id % 2 = 0 THEN 'https://'
-                  ELSE 'http://' END)
-            || (CASE WHEN doc_id % 23 = 0
-                  THEN '93.184.' || CAST(doc_id % 256 AS VARCHAR) || '.34'
-                  ELSE (CASE WHEN doc_id % 3 = 0 THEN 'www.' ELSE '' END)
-                    || 'site' || CAST(doc_id % 37 AS VARCHAR)
-                    || (['.com', '.org', '.co.uk', '.io', '.net'])
-                       [CAST(doc_id % 5 AS INT) + 1] END)
-            || (CASE WHEN doc_id % 11 = 0 THEN ':8080' ELSE '' END)
-            || '/p/' || CAST(doc_id AS VARCHAR)
-            || (CASE WHEN doc_id % 4 = 0
-                  THEN '?ref=' || CAST(doc_id % 10 AS VARCHAR)
-                  ELSE '' END)
-            AS url
-          FROM documents
-        ), p AS (
-          SELECT doc_id,
-            regexp_extract(lower(url), '{SCHEME_RE}', 1) AS scheme,
-            regexp_extract(lower(url), '{HOST_RE}', 1) AS host,
-            regexp_extract(lower(url), '{PORT_RE}', 1) AS port,
-            regexp_extract(lower(url), '{PATH_RE}', 1) AS path,
-            regexp_extract(lower(url), '{QUERY_RE}', 1) AS query
-          FROM u
-        ), r AS (
-          SELECT *,
-            CASE WHEN regexp_matches(host, '{IPV4_HOST_RE}') THEN host
-                 WHEN len(string_split(host, '.')) <= 2 THEN host
-                 WHEN array_to_string(string_split(host, '.')[-2:], '.')
-                      IN ({suffixes})
-                 THEN array_to_string(string_split(host, '.')[-3:], '.')
-                 ELSE array_to_string(string_split(host, '.')[-2:], '.')
-            END AS registered_domain,
-            regexp_matches(host, '{IPV4_HOST_RE}') AS is_ip
-          FROM p
-        )
-        SELECT doc_id, scheme, host, port, path, query,
-          registered_domain, is_ip,
-          CASE WHEN scheme NOT IN ('http', 'https') THEN 'scheme'
-               WHEN is_ip THEN 'ip_host'
-               WHEN registered_domain IN
-                    ('site3.com', 'site7.co.uk', 'site11.net')
-                 THEN 'domain'
-               WHEN regexp_matches(path, '^/p/.*0$') THEN 'path'
-               ELSE '' END AS block_reason,
-          CASE WHEN scheme NOT IN ('http', 'https') THEN 'scheme'
-               WHEN is_ip THEN 'ip_host'
-               WHEN registered_domain IN
-                    ('site3.com', 'site7.co.uk', 'site11.net')
-                 THEN 'domain'
-               WHEN regexp_matches(path, '^/p/.*0$') THEN 'path'
-               ELSE '' END <> '' AS blocked
-        FROM r
-    """
-
-
-def _minhash_oracle_sql(num_hashes: int = 32, bands: int = 8,
-                        threshold: float = 0.5) -> str:
-    """Recompute the engine's exact MinHash signatures in DuckDB: base
-    hash = first 8 bytes of md5 (big-endian), permutations = the same
-    affine maps mod 2^64 (coefficients inlined), banded candidates =
-    pairs equal on >= 1 full band."""
-    from gis_tools_spark.operators.dedup import _perm_params
-
-    pa, pb = _perm_params(num_hashes)
-    rpb = num_hashes // bands
-    perm_rows = ",\n    ".join(
-        f"({i}, {int(pa[i])}::UBIGINT, {int(pb[i])}::UBIGINT)"
-        for i in range(num_hashes))
-    return f"""
-WITH docs AS ({_DOCS_WORDS_SQL.strip()}),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(words[i:i+2], ' ') AS shingle
-  FROM (SELECT doc_id, words,
-               unnest(generate_series(1, len(words) - 2)) AS i
-        FROM docs WHERE len(words) >= 3)
-  UNION
-  SELECT doc_id, array_to_string(words, ' ') FROM docs WHERE len(words) < 3
-),
-hs AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 16))::UBIGINT AS h FROM sh),
-perms(i, a, b) AS (VALUES
-    {perm_rows}),
-sigs AS (
-  SELECT doc_id, p.i,
-    min(CAST((p.a::HUGEINT * hs.h::HUGEINT + p.b::HUGEINT) % {_MOD64} AS UBIGINT)) AS sig
-  FROM hs CROSS JOIN perms p
-  GROUP BY doc_id, p.i
-),
-bands AS (
-  SELECT doc_id, i // {rpb} AS band, list(sig ORDER BY i) AS bs
-  FROM sigs GROUP BY doc_id, i // {rpb}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bs = b.bs AND a.doc_id < b.doc_id
-),
-est AS (
-  SELECT c.id_a, c.id_b,
-         sum(CASE WHEN x.sig = y.sig THEN 1 ELSE 0 END) / {float(num_hashes)} AS jaccard_est
-  FROM cand c
-  JOIN sigs x ON x.doc_id = c.id_a
-  JOIN sigs y ON y.doc_id = c.id_b AND y.i = x.i
-  GROUP BY c.id_a, c.id_b
-)
-SELECT id_a, id_b, jaccard_est FROM est WHERE jaccard_est >= {threshold}
-"""
-
-
-def _gopher_oracle_sql() -> str:
-    """DuckDB mirror of q_gopher_filter: rebuild the identical augmented
-    corpus from the SAME _GOPHER_AUG/_GOPHER_SUFFIX constants, recompute
-    every signal (words/lines tokenization, symbol counts, bullet and
-    ellipsis line tests, alpha-word regex, stopword containment,
-    duplicate-line fraction) and re-run the identical first-match rule
-    chain from operators/textstats.py GOPHER_RULES order."""
-    from gis_tools_spark.operators.textstats import GOPHER_STOPWORDS
-
-    branches = "\n      ".join(
-        f"WHEN {i} THEN '{doc}'" for i, doc in enumerate(_GOPHER_AUG))
-    stop_terms = "\n       + ".join(
-        f"(CASE WHEN list_contains(lwords, '{sw}') THEN 1 ELSE 0 END)"
-        for sw in GOPHER_STOPWORDS)
-    return f"""
-WITH aug AS (
-  SELECT doc_id,
-    CASE CAST(doc_id % 9 AS INT)
-      {branches}
-      WHEN 7 THEN text || '{_GOPHER_SUFFIX}'
-      ELSE text END AS text
-  FROM documents
-), w AS (
-  SELECT doc_id, text,
-    list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS words,
-    list_filter(string_split(text, chr(10)), x -> x <> '') AS lines
-  FROM aug
-), s AS (
-  SELECT doc_id,
-    len(words) AS wc,
-    list_sum(list_transform(words, x -> length(x))) AS chsum,
-    length(text) - length(replace(text, '#', '')) AS n_hash,
-    length(text) - length(replace(text, '…', '')) AS n_uell,
-    (length(text) - length(replace(text, '...', ''))) / 3 AS n_aell,
-    len(lines) AS nl,
-    len(list_filter(lines, l -> substring(l, 1, 2) IN ('• ', '- ', '* '))) AS n_bullet,
-    len(list_filter(lines, l -> ends_with(l, '...') OR ends_with(l, '…'))) AS n_ell_line,
-    len(list_filter(words, x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha_w,
-    {stop_terms} AS n_stop
-  FROM (SELECT *, list_transform(words, x -> lower(x)) AS lwords FROM w)
-), ln AS (
-  SELECT doc_id, l, count(*) AS c
-  FROM (SELECT doc_id, UNNEST(list_filter(string_split(text, chr(10)),
-                                          t -> t <> '')) AS l FROM aug) q
-  GROUP BY doc_id, l
-), lf AS (
-  SELECT doc_id,
-         COALESCE(SUM(CASE WHEN c > 1 THEN c END), 0) * 1.0 / SUM(c)
-           AS dup_line_frac
-  FROM ln GROUP BY doc_id
-), j AS (
-  SELECT s.*, COALESCE(lf.dup_line_frac, 0) AS dup_line_frac
-  FROM s LEFT JOIN lf ON s.doc_id = lf.doc_id
-), r AS (
-  SELECT doc_id, wc, chsum, n_stop,
-    CASE
-      WHEN wc < 50 OR wc > 100000 THEN 'word_count'
-      WHEN chsum * 1.0 / wc < 3.0 OR chsum * 1.0 / wc > 10.0 THEN 'mean_word_len'
-      WHEN (n_hash + n_uell + n_aell) * 1.0 / wc > 0.1 THEN 'symbol_ratio'
-      WHEN nl > 0 AND n_bullet * 1.0 / nl > 0.9 THEN 'bullet_lines'
-      WHEN nl > 0 AND n_ell_line * 1.0 / nl > 0.3 THEN 'ellipsis_lines'
-      WHEN n_alpha_w * 1.0 / wc < 0.8 THEN 'alpha_words'
-      WHEN n_stop < 2 THEN 'stopwords'
-      WHEN dup_line_frac > 0.3 THEN 'dup_lines'
-      ELSE 'ok' END AS reject_reason
-  FROM j
-)
-SELECT doc_id, CAST(wc AS BIGINT) AS wc,
-       CAST(floor(chsum * 1000000.0 / wc + 0.5) AS BIGINT) AS mean_wl_u,
-       CAST(n_stop AS BIGINT) AS n_stop,
-       CAST(CASE WHEN reject_reason = 'ok' THEN 1 ELSE 0 END AS INTEGER)
-         AS accept,
-       reject_reason
-FROM r
-"""
-
-
-def _near_dup_keep_oracle_sql(num_hashes: int = 32, bands: int = 8,
-                              threshold: float = 0.5) -> str:
-    """DuckDB mirror of q_near_dup_keep: the exact _minhash_oracle_sql
-    pair set (nested CTE), components resolved by an INDEPENDENT
-    recursive min-reachability CTE (vs the engine's pointer jumping),
-    then the same left-join keep decision over the full corpus."""
-    pairs_sql = _minhash_oracle_sql(num_hashes, bands, threshold)
-    return f"""
-WITH RECURSIVE pairs AS ({pairs_sql.strip()}),
-e AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION
-  SELECT id_b AS a, id_a AS b FROM pairs
-),
-nodes AS (SELECT DISTINCT a AS node FROM e),
-reach AS (
-  SELECT node, node AS comp FROM nodes
-  UNION
-  SELECT e.a AS node, r.comp FROM e JOIN reach r ON e.b = r.node
-),
-comp AS (SELECT node, min(comp) AS cluster FROM reach GROUP BY node)
-SELECT d.doc_id,
-       CAST(coalesce(c.cluster, d.doc_id) AS BIGINT) AS cluster_id,
-       CAST(CASE WHEN coalesce(c.cluster, d.doc_id) = d.doc_id
-                 THEN 1 ELSE 0 END AS INTEGER) AS keep
-FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
-"""
-
-
 def _semdedup_oracle_sql(m: int = 8, threshold: float = 0.35) -> str:
     """DuckDB mirror of q_semdedup: modulo-centroid construction and
     rounded-dot top-1 assignment copied from the embed_ivf oracle
@@ -6432,93 +5436,6 @@ FROM e
 JOIN assign a ON a.vec_id = e.vec_id
 LEFT JOIN comp c ON c.node = e.vec_id
 ORDER BY e.vec_id
-"""
-
-
-def _line_dedup_oracle_sql(min_docs: int = 2) -> str:
-    """DuckDB mirror of q_line_dedup: rebuild the identical line set
-    (header / 6-word chunks / conditional promo / per-source footer)
-    with explicit positions, count distinct documents per line, drop
-    lines at ≥ min_docs, and md5 the order-preserved rejoin."""
-    return f"""
-WITH docs AS ({_DOCS_WORDS_SQL.strip()}),
-src AS (SELECT doc_id, source FROM documents),
-built AS (
-  SELECT d.doc_id,
-         ['{LD_HDR}']
-         || (CASE WHEN len(d.words) > 0 THEN (
-               SELECT list(array_to_string(
-                        d.words[(i - 1) * {LD_CHUNK} + 1 : i * {LD_CHUNK}],
-                        ' ') ORDER BY i)
-               FROM unnest(generate_series(
-                      1, CAST(ceil(len(d.words) / {LD_CHUNK}.0) AS INT)))
-                    AS t(i)
-             ) ELSE [] END)
-         || (CASE WHEN d.doc_id % 7 = 0 THEN ['{LD_PROMO}'] ELSE [] END)
-         || ['src ' || s.source] AS lines
-  FROM docs d JOIN src s USING (doc_id)
-),
-ln AS (
-  SELECT doc_id, u.i AS pos, lines[u.i] AS line
-  FROM built, unnest(generate_series(1, len(lines))) AS u(i)
-),
-cnt AS (SELECT line, count(DISTINCT doc_id) AS n_docs
-        FROM ln GROUP BY line),
-fl AS (
-  SELECT ln.doc_id, ln.pos, ln.line,
-         CASE WHEN cnt.n_docs >= {min_docs} THEN 1 ELSE 0 END AS rm
-  FROM ln JOIN cnt USING (line)
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum(rm) AS BIGINT) AS n_removed,
-       md5(coalesce(string_agg(CASE WHEN rm = 0 THEN line END, chr(10)
-                               ORDER BY pos), '')) AS clean_md5
-FROM fl GROUP BY doc_id
-"""
-
-
-def _cross_doc_spans_oracle_sql(k: int = 8) -> str:
-    """DuckDB mirror of q_cross_doc_spans: the substring_spans window
-    machinery (identical md5 keys, identical islands merge) with the
-    keep rule swapped for cross-document ownership — windows in ≥2
-    distinct docs, reported for every doc except the minimum-id
-    owner."""
-    return f"""
-WITH d AS (
-  SELECT doc_id,
-         list_filter(string_split(text, ' '), t -> t <> '') AS toks
-  FROM documents
-), b AS (
-  SELECT doc_id, toks, len(toks) AS n FROM d WHERE len(toks) >= {k}
-), w AS (
-  SELECT doc_id, CAST(u.i AS BIGINT) AS pos,
-         md5(array_to_string(toks[u.i:u.i + {k - 1}], chr(31))) AS whash
-  FROM b, UNNEST(range(1, n - {k} + 2)) AS u(i)
-), own AS (
-  SELECT whash, min(doc_id) AS owner
-  FROM w GROUP BY whash
-  HAVING count(DISTINCT doc_id) >= 2 AND count(*) <= 10000
-), m AS (
-  SELECT w.doc_id, w.pos FROM w JOIN own USING (whash)
-  WHERE w.doc_id <> own.owner
-), g AS (
-  SELECT doc_id, pos,
-         CASE WHEN pos - lag(pos, 1, -{k})
-                  OVER (PARTITION BY doc_id ORDER BY pos) > {k}
-              THEN 1 ELSE 0 END AS brk
-  FROM m
-), gg AS (
-  SELECT doc_id, pos,
-         SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS UNBOUNDED PRECEDING) AS grp
-  FROM g
-)
-SELECT doc_id,
-       MIN(pos) AS span_start,
-       MAX(pos) + {k - 1} AS span_end,
-       COUNT(*) AS n_windows
-FROM gg GROUP BY doc_id, grp
 """
 
 
@@ -6772,307 +5689,6 @@ SELECT {r} AS res, {cell} AS cell,
 FROM ({DT.POINTS_SQL.strip()}) p
 GROUP BY cell""")
     return "\nUNION ALL\n".join(parts)
-
-
-def _c4_oracle_sql() -> str:
-    """DuckDB mirror of q_c4_filter: identical document construction
-    (6-word chunks + cycling suffixes + injected rule lines), the same
-    line predicate (terminal punct, ≥5 words, no 'javascript'), the
-    same replace-chain sentence count, and the same first-match reason
-    order; cleaned text md5-pinned in line order."""
-    return f"""
-WITH docs AS ({_DOCS_WORDS_SQL.strip()}),
-built AS (
-  SELECT d.doc_id,
-         (CASE WHEN len(d.words) > 0 THEN (
-            SELECT list(
-              array_to_string(
-                d.words[(i - 1) * {LD_CHUNK} + 1 : i * {LD_CHUNK}], ' ')
-              || (CASE WHEN d.doc_id % 19 = 0 THEN ''
-                       WHEN (d.doc_id + i) % 4 = 0 THEN '.'
-                       WHEN (d.doc_id + i) % 4 = 1 THEN '!'
-                       WHEN (d.doc_id + i) % 4 = 3 THEN '?'
-                       ELSE '' END)
-              ORDER BY i)
-            FROM unnest(generate_series(
-                   1, CAST(ceil(len(d.words) / {LD_CHUNK}.0) AS INT)))
-                 AS t(i)
-          ) ELSE [] END)
-         || (CASE WHEN d.doc_id % 11 = 0 THEN ['{C4_JS_LINE}'] ELSE [] END)
-         || (CASE WHEN d.doc_id % 13 = 0 THEN ['{C4_LOREM_LINE}'] ELSE [] END)
-         || (CASE WHEN d.doc_id % 17 = 0 THEN ['{C4_CURLY_LINE}'] ELSE [] END)
-         || (CASE WHEN d.doc_id % 23 = 0 THEN ['{C4_BAD_LINE}'] ELSE [] END)
-         AS lines
-  FROM docs d
-),
-ln AS (
-  SELECT doc_id, u.i AS pos, trim(lines[u.i]) AS line
-  FROM built, unnest(generate_series(1, len(lines))) AS u(i)
-  WHERE trim(lines[u.i]) <> ''
-),
-fl AS (
-  SELECT doc_id, pos, line,
-         CASE WHEN right(line, 1) IN ('.', '!', '?', '"')
-                   AND len(list_filter(string_split_regex(line, '\\s+'),
-                                       x -> x <> '')) >= 5
-                   AND position('javascript' IN lower(line)) = 0
-              THEN 1 ELSE 0 END AS keep_line
-  FROM ln
-),
-agg AS (
-  SELECT doc_id,
-         CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(sum(keep_line) AS BIGINT) AS n_kept,
-         coalesce(string_agg(CASE WHEN keep_line = 1 THEN line END,
-                             chr(10) ORDER BY pos), '') AS clean_text
-  FROM fl GROUP BY doc_id
-),
-sig AS (
-  SELECT doc_id, n_lines, n_kept, clean_text,
-         CAST(len(clean_text)
-              - len(replace(replace(replace(clean_text, '.', ''),
-                                    '!', ''), '?', '')) AS BIGINT) AS n_sent
-  FROM agg
-)
-SELECT doc_id, n_lines, n_kept, n_sent,
-       md5(clean_text) AS clean_md5,
-       CASE WHEN position('lorem ipsum' IN lower(clean_text)) > 0
-              THEN 'lorem_ipsum'
-            WHEN position('{{' IN clean_text) > 0
-                 OR position('}}' IN clean_text) > 0 THEN 'curly_brace'
-            WHEN position('badword' IN lower(clean_text)) > 0
-              THEN 'bad_word'
-            WHEN n_sent < 3 THEN 'too_few_sentences'
-            ELSE 'ok' END AS reject_reason,
-       CAST(CASE WHEN position('lorem ipsum' IN lower(clean_text)) = 0
-                  AND position('{{' IN clean_text) = 0
-                  AND position('}}' IN clean_text) = 0
-                  AND position('badword' IN lower(clean_text)) = 0
-                  AND n_sent >= 3
-                 THEN 1 ELSE 0 END AS INTEGER) AS accept
-FROM sig
-"""
-
-
-def _wordpiece_oracle_sql() -> str:
-    """DuckDB mirror of q_doc_wordpiece: the greedy longest-match scan
-    replayed exactly — precompute the longest vocabulary match at every
-    (word, position) (continuation pieces carry the '##' prefix from
-    position 2 on), then a recursive CTE walks each distinct word
-    left-to-right consuming best matches; a position with no match
-    collapses the word to [UNK] (BERT semantics). Pieces re-expand to
-    document order and the full stream is md5-pinned."""
-    vocab_rows = ", ".join(f"('{v}')" for v in WP_VOCAB)
-    return f"""
-WITH RECURSIVE docs AS ({_DOCS_WORDS_SQL.strip()}),
-vocab(key) AS (VALUES {vocab_rows}),
-w AS (SELECT DISTINCT unnest(words) AS word FROM docs),
-pos AS (SELECT word, unnest(generate_series(1, len(word))) AS i FROM w),
-cand AS (
-  SELECT p.word, p.i, ln.ln,
-         CASE WHEN p.i = 1 THEN substr(p.word, p.i, ln.ln)
-              ELSE '##' || substr(p.word, p.i, ln.ln) END AS key
-  FROM pos p CROSS JOIN (
-    SELECT unnest(generate_series(1,
-      (SELECT max(len(replace(key, '##', ''))) FROM vocab))) AS ln) ln
-  WHERE p.i + ln.ln - 1 <= len(p.word)
-),
-hit AS (SELECT c.word, c.i, c.ln, c.key
-        FROM cand c JOIN vocab v ON v.key = c.key),
-best AS (SELECT word, i, max_by(key, ln) AS key, max(ln) AS ln
-         FROM hit GROUP BY word, i),
-walk AS (
-  SELECT word, 1 AS i, CAST('' AS VARCHAR) AS pieces, 0 AS np,
-         false AS unk
-  FROM w
-  UNION ALL
-  SELECT wk.word,
-         CASE WHEN b.word IS NULL THEN len(wk.word) + 1
-              ELSE wk.i + b.ln END AS i,
-         CASE WHEN b.word IS NULL THEN '[UNK]'
-              WHEN wk.pieces = '' THEN b.key
-              ELSE wk.pieces || ' ' || b.key END AS pieces,
-         CASE WHEN b.word IS NULL THEN 1 ELSE wk.np + 1 END AS np,
-         (b.word IS NULL) AS unk
-  FROM walk wk LEFT JOIN best b ON b.word = wk.word AND b.i = wk.i
-  WHERE wk.i <= len(wk.word) AND NOT wk.unk
-),
-final AS (SELECT word, pieces, np, unk FROM walk
-          WHERE i = len(word) + 1),
-dw AS (
-  SELECT doc_id, i AS pos, words[i] AS word
-  FROM (SELECT doc_id, words,
-               unnest(generate_series(1, len(words))) AS i
-        FROM docs WHERE len(words) > 0)
-)
-SELECT d.doc_id,
-       CAST(sum(f.np) AS INTEGER) AS n_pieces,
-       CAST(sum(CASE WHEN f.unk THEN 1 ELSE 0 END) AS INTEGER) AS n_unk,
-       md5(string_agg(f.pieces, ' ' ORDER BY d.pos)) AS pieces_md5
-FROM dw d JOIN final f ON f.word = d.word
-GROUP BY d.doc_id
-"""
-
-
-def _tfidf_oracle_sql(k: int = 3) -> str:
-    """DuckDB mirror of q_tfidf: identical tokenization, tf / df counts,
-    smoothed-idf weight with the corpus size computed in-query, 6-dp
-    rounding BEFORE ranking, and the same (score desc, word asc)
-    deterministic tie-break."""
-    return f"""
-WITH docs AS ({_DOCS_WORDS_SQL.strip()}),
-nd AS (SELECT count(*) AS n FROM documents),
-tf AS (
-  SELECT doc_id, w AS word, count(*) AS tf
-  FROM (SELECT doc_id, unnest(words) AS w FROM docs)
-  GROUP BY doc_id, w
-),
-dft AS (SELECT word, count(*) AS df_t FROM tf GROUP BY word),
-s AS (
-  SELECT tf.doc_id, tf.word, tf.tf, dft.df_t,
-         round(tf.tf * (ln(CAST(nd.n + 1 AS DOUBLE) / (dft.df_t + 1)) + 1),
-               6) AS score_r
-  FROM tf JOIN dft USING (word) CROSS JOIN nd
-),
-r AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY doc_id ORDER BY score_r DESC, word) AS rnk
-  FROM s
-)
-SELECT doc_id, word, tf, df_t, score_r, CAST(rnk AS INTEGER) AS "rank"
-FROM r WHERE rnk <= {k}
-"""
-
-
-def _perplexity_oracle_sql(alpha: float = 0.5) -> str:
-    """DuckDB mirror of q_doc_perplexity: BOS-prefixed bigrams, corpus
-    bigram/context counts, vocabulary size computed in-query, add-alpha
-    smoothing, per-doc average natural-log probability and perplexity
-    rounded to 6 dp. Self-trained with min_count=1, so every scored
-    bigram exists in the counts (the engine's left-join floors never
-    engage — the mirror is exact)."""
-    return f"""
-WITH docs AS ({_DOCS_WORDS_SQL.strip()}),
-t AS (SELECT doc_id, list_prepend('<s>', words) AS toks FROM docs),
-bg AS (
-  SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
-  FROM (SELECT doc_id, toks,
-               unnest(generate_series(1, len(toks) - 1)) AS i
-        FROM t WHERE len(toks) >= 2)
-),
-c2 AS (SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY w1, w2),
-c1 AS (SELECT w1, sum(c2) AS c1 FROM c2 GROUP BY w1),
-v AS (SELECT count(DISTINCT w) AS v
-      FROM (SELECT unnest(words) AS w FROM docs)),
-lp AS (
-  SELECT bg.doc_id,
-         ln((c2.c2 + {alpha}) / (c1.c1 + {alpha} * (v.v + 1))) AS lp
-  FROM bg JOIN c2 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v
-),
-a AS (SELECT doc_id, count(*) AS n_bigrams, avg(lp) AS avg_lp
-      FROM lp GROUP BY doc_id)
-SELECT doc_id, n_bigrams,
-       round(avg_lp, 6) AS logprob_r,
-       round(exp(-avg_lp), 6) AS ppl_r
-FROM a
-"""
-
-
-def _ngram_oracle_sql(threshold: float = 0.3, num_hashes: int = 32,
-                      bands: int = 8) -> str:
-    """Exact trigram Jaccard over the SAME md5-MinHash band candidates
-    the engine prefilters with (threshold 0 ⇒ every banded pair), then
-    the exact distinct-shingle intersection/union ratio."""
-    from gis_tools_spark.operators.dedup import _perm_params
-
-    pa, pb = _perm_params(num_hashes)
-    rpb = num_hashes // bands
-    perm_rows = ",\n    ".join(
-        f"({i}, {int(pa[i])}::UBIGINT, {int(pb[i])}::UBIGINT)"
-        for i in range(num_hashes))
-    return f"""
-WITH docs AS ({_DOCS_WORDS_SQL.strip()}),
-sh AS (
-  SELECT DISTINCT doc_id, array_to_string(words[i:i+2], ' ') AS shingle
-  FROM (SELECT doc_id, words,
-               unnest(generate_series(1, len(words) - 2)) AS i
-        FROM docs WHERE len(words) >= 3)
-  UNION
-  SELECT doc_id, array_to_string(words, ' ') FROM docs WHERE len(words) < 3
-),
-hs AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 16))::UBIGINT AS h FROM sh),
-perms(i, a, b) AS (VALUES
-    {perm_rows}),
-sigs AS (
-  SELECT doc_id, p.i,
-    min(CAST((p.a::HUGEINT * hs.h::HUGEINT + p.b::HUGEINT) % {_MOD64} AS UBIGINT)) AS sig
-  FROM hs CROSS JOIN perms p
-  GROUP BY doc_id, p.i
-),
-bands AS (
-  SELECT doc_id, i // {rpb} AS band, list(sig ORDER BY i) AS bs
-  FROM sigs GROUP BY doc_id, i // {rpb}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bs = b.bs AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS ns FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS ni
-  FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-  GROUP BY x.doc_id, y.doc_id
-),
-j AS (
-  SELECT c.id_a, c.id_b,
-         CAST(coalesce(i.ni, 0) AS DOUBLE)
-           / (sa.ns + sb.ns - coalesce(i.ni, 0)) AS jac
-  FROM cand c
-  LEFT JOIN inter i ON i.id_a = c.id_a AND i.id_b = c.id_b
-  JOIN sizes sa ON sa.doc_id = c.id_a
-  JOIN sizes sb ON sb.doc_id = c.id_b
-)
-SELECT id_a, id_b, floor(jac * 1e6 + 0.5) / 1e6 AS jacc_r
-FROM j WHERE jac >= {threshold}
-"""
-
-
-def _simhash_oracle_sql(max_hamming: int = 3) -> str:
-    """64-bit SimHash in SQL: md5-prefix word hashes, per-bit weighted
-    majority, two 32-bit halves assembled via HUGEINT, signed wrap to
-    BIGINT; pairs = brute-force Hamming filter (equals the engine's
-    pigeonhole-complete blocked join for d <= max_hamming)."""
-    return f"""
-WITH docs AS ({_DOCS_WORDS_SQL.strip()}),
-w AS (SELECT doc_id, unnest(words) AS word FROM docs),
-wh AS (SELECT doc_id, word, count(*) AS cnt,
-              ('0x' || substr(md5(word), 1, 16))::UBIGINT AS h
-       FROM w GROUP BY doc_id, word),
-bits AS (
-  SELECT doc_id, bs.b,
-         sum(CASE WHEN (wh.h >> bs.b) & 1::UBIGINT = 1::UBIGINT
-                  THEN cnt ELSE -cnt END) AS acc
-  FROM wh CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS b) bs
-  GROUP BY doc_id, bs.b
-),
-sim AS (
-  SELECT doc_id,
-    CAST(CASE WHEN hv >= 9223372036854775808::HUGEINT
-              THEN hv - {_MOD64} ELSE hv END AS BIGINT) AS simhash
-  FROM (
-    SELECT doc_id,
-      (sum(CASE WHEN acc > 0 AND b >= 32 THEN (1::BIGINT << (b - 32)) ELSE 0 END)::HUGEINT
-         * 4294967296::HUGEINT
-       + sum(CASE WHEN acc > 0 AND b < 32 THEN (1::BIGINT << b) ELSE 0 END)::HUGEINT) AS hv
-    FROM bits GROUP BY doc_id
-  )
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
-"""
 
 
 def _zonal_oracle_sql() -> str:
@@ -7756,47 +6372,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT gid, cell, CAST(floor(a * 1e9 + 0.5) AS BIGINT) AS area_r
             FROM p WHERE a > 1e-12
         """,
-        "dedup_exact": """
-            SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n
-            FROM documents GROUP BY 1
-        """,
-        "text_stats": r"""
-            SELECT doc_id,
-              length(string_split_regex(trim(text), ' +')) AS n_tokens,
-              length(text) AS n_chars_q,
-              round(length(regexp_replace(text, '\s', '', 'g'))
-                    / length(string_split_regex(trim(text), ' +')), 6) AS avg_token_len,
-              round((length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')))
-                    / length(text), 6) AS punct_ratio,
-              CAST(len(regexp_extract_all(text, '[A-Za-z]{1,4}|[0-9]+|[^A-Za-z0-9\s]')) AS INT) AS bpe_tokens
-            FROM documents
-        """,
-        "lang_id": """
-            WITH s AS (
-              SELECT doc_id,
-                CAST((length(text) - length(replace(text, ' the ', ''))) / 5 AS BIGINT) AS en_s,
-                CAST((length(text) - length(replace(text, ' le ', ''))) / 4 AS BIGINT) AS fr_s,
-                CAST((length(text) - length(replace(text, ' der ', ''))) / 5 AS BIGINT) AS de_s
-              FROM documents
-            )
-            SELECT doc_id, en_s, fr_s, de_s,
-              CASE WHEN en_s >= fr_s AND en_s >= de_s THEN 'en'
-                   WHEN fr_s >= de_s THEN 'fr' ELSE 'de' END AS pred_lang
-            FROM s
-        """,
-        "doc_fingerprint": r"""
-            SELECT doc_id, md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp
-            FROM documents
-        """,
-        "minhash_pairs": _minhash_oracle_sql(),
-        "near_dup_keep": _near_dup_keep_oracle_sql(),
         "semdedup": _semdedup_oracle_sql(SEM_M, SEM_THRESH),
-        "tfidf_topk": _tfidf_oracle_sql(3),
-        "doc_perplexity": _perplexity_oracle_sql(0.5),
-        "doc_wordpiece": _wordpiece_oracle_sql(),
-        "line_dedup": _line_dedup_oracle_sql(2),
-        "cross_doc_spans": _cross_doc_spans_oracle_sql(8),
-        "c4_filter": _c4_oracle_sql(),
         "tile_pyramid": _tile_pyramid_oracle_sql(PYR_RES_MIN, PYR_RES_MAX),
         "graph_pagerank": _pagerank_oracle_sql(PR_ITERS, PR_DAMP),
         "geohash_encode": f"""
@@ -7836,7 +6412,6 @@ def oracle_sql() -> dict[str, str]:
               'Polygon' AS gt
             FROM ({DT.ZONES_SQL.strip()}) z
         """,
-        "ngram_jaccard": _ngram_oracle_sql(),
         "phash_near_dups": """
             WITH ids AS (SELECT event_id FROM events WHERE event_id % 199 = 0),
             h AS (SELECT event_id,
@@ -7939,7 +6514,6 @@ def oracle_sql() -> dict[str, str]:
                    END AS dyn_r
             FROM p
         """,
-        "simhash_dups": _simhash_oracle_sql(),
         "zonal_raster_stats": _zonal_oracle_sql(),
         "geotiff_zonal": _zonal_oracle_sql(),
         "user_tracks": f"""
@@ -8789,15 +7363,6 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
             WHERE doc_id % 19 = 0
         """,
-        "warc_pipeline": """
-            SELECT doc_id,
-                   200 AS http_status,
-                   1 AS n_links,
-                   CAST(6 + doc_id % 7 AS BIGINT) AS n_words,
-                   TRUE AS title_ok
-            FROM documents
-            WHERE doc_id % 23 = 0
-        """,
         "img_dedup_keep": """
             WITH RECURSIVE ids AS (
               SELECT event_id FROM events WHERE event_id % 199 = 0
@@ -8831,39 +7396,8 @@ def oracle_sql() -> dict[str, str]:
                              THEN 1 ELSE 0 END AS INTEGER) AS keep
             FROM rows_ d LEFT JOIN comp c ON c.node = d.image_id
         """,
-        "doc_chunks": r"""
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(trim(text), '\s+'),
-                                 x -> x <> '') AS toks
-              FROM documents
-            ), n AS (
-              SELECT doc_id, toks, len(toks) AS n,
-                     1 + CAST(floor((greatest(len(toks) - 16, 0) + 11)
-                                    / 12.0) AS BIGINT) AS n_chunks
-              FROM d
-            ), c AS (
-              SELECT doc_id, toks, n,
-                     UNNEST(range(0, n_chunks)) AS chunk_idx
-              FROM n
-            )
-            SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-                   CAST(chunk_idx * 12 AS BIGINT) AS tok_start,
-                   CAST(least(chunk_idx * 12 + 16, n) AS BIGINT) AS tok_end,
-                   CAST(least(chunk_idx * 12 + 16, n) - chunk_idx * 12
-                        AS BIGINT) AS n_tok,
-                   md5(array_to_string(
-                       toks[chunk_idx * 12 + 1 :
-                            least(chunk_idx * 12 + 16, n)], ' ')) AS chunk_md5
-            FROM c
-        """,
-        "gopher_filter": _gopher_oracle_sql(),
-        "pii_scrub": _pii_oracle_sql(),
-        "url_filter": _url_filter_oracle_sql(),
-        "corpus_mix": _corpus_mix_oracle_sql(),
         "aspect_buckets": _aspect_buckets_oracle_sql(),
         "img_token_pack": _img_token_pack_oracle_sql(),
-        "strat_sample": _strat_sample_oracle_sql(),
         "image_filter": _image_filter_oracle_sql(),
         "img_curation_pipeline": _img_curation_oracle_sql(),
         "dataset_profile": _dataset_profile_oracle_sql(),
@@ -8911,121 +7445,6 @@ def oracle_sql() -> dict[str, str]:
                  (VALUES ('hflip'), ('rot90'), ('rot180'),
                          ('crop:16x12')) v(op)
             WHERE doc_id % 37 = 0
-        """,
-        "seq_pack": r"""
-            WITH t AS (
-              SELECT doc_id,
-                CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-                                     x -> x <> '')) + 1 AS BIGINT) AS n
-              FROM documents
-            ), o AS (
-              SELECT doc_id, n,
-                CAST(COALESCE(SUM(n) OVER (ORDER BY doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS BIGINT) AS off
-              FROM t
-            ), c AS (
-              SELECT doc_id, n, off,
-                unnest(generate_series(off // 128, (off + n - 1) // 128))
-                  AS chunk_id
-              FROM o
-            )
-            SELECT chunk_id, doc_id,
-              GREATEST(0, chunk_id * 128 - off) AS tok_start,
-              LEAST(n, (chunk_id + 1) * 128 - off) AS tok_end,
-              GREATEST(0, off - chunk_id * 128) AS chunk_pos
-            FROM c
-        """,
-        "decontam": f"""
-            WITH docs AS ({_DOCS_WORDS_SQL.strip()}),
-            g AS (
-              SELECT DISTINCT doc_id, array_to_string(words[i:i+7], ' ') AS gram
-              FROM (SELECT doc_id, words,
-                           unnest(generate_series(1, len(words) - 7)) AS i
-                    FROM docs WHERE len(words) >= 8)
-              UNION
-              SELECT doc_id, array_to_string(words, ' ')
-              FROM docs WHERE len(words) < 8
-            ),
-            ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % 17 = 0),
-            hits AS (
-              SELECT g.doc_id, count(*) AS n
-              FROM g JOIN ev USING (gram) GROUP BY 1
-            )
-            SELECT d.doc_id,
-                   CAST(coalesce(h.n, 0) AS BIGINT) AS n_contaminated,
-                   coalesce(h.n, 0) >= 1 AS contaminated
-            FROM (SELECT doc_id FROM documents) d
-            LEFT JOIN hits h USING (doc_id)
-        """,
-        "repetition_stats": """
-            WITH ln AS (
-              SELECT doc_id, l, count(*) AS c
-              FROM (SELECT doc_id, UNNEST(list_filter(
-                        string_split(text, chr(10)), t -> t <> '')) AS l
-                    FROM documents) q
-              GROUP BY doc_id, l
-            ), lf AS (
-              SELECT doc_id,
-                     COALESCE(SUM(CASE WHEN c > 1 THEN c END), 0)
-                       * 1.0 / SUM(c) AS dup_line_frac
-              FROM ln GROUP BY doc_id
-            ), tk AS (
-              SELECT doc_id,
-                     list_filter(string_split(text, ' '), t -> t <> '') AS t
-              FROM documents
-            ), bg0 AS (
-              SELECT doc_id, t[u.i] || ' ' || t[u.i + 1] AS b
-              FROM (SELECT doc_id, t, len(t) AS n FROM tk WHERE len(t) >= 2) q,
-                   UNNEST(range(1, n)) AS u(i)
-            ), bgc AS (
-              SELECT doc_id, b, count(*) AS c FROM bg0 GROUP BY doc_id, b
-            ), bf AS (
-              SELECT doc_id, MAX(c) * 1.0 / SUM(c) AS top_bigram_frac
-              FROM bgc GROUP BY doc_id
-            )
-            SELECT d.doc_id,
-                   CAST(floor(COALESCE(lf.dup_line_frac, 0) * 1000000.0
-                              + 0.5) AS BIGINT) AS dup_line_u,
-                   CAST(floor(COALESCE(bf.top_bigram_frac, 0) * 1000000.0
-                              + 0.5) AS BIGINT) AS top_bigram_u
-            FROM (SELECT DISTINCT doc_id FROM documents) d
-            LEFT JOIN lf ON d.doc_id = lf.doc_id
-            LEFT JOIN bf ON d.doc_id = bf.doc_id
-        """,
-        "substring_spans": """
-            WITH d AS (
-              SELECT doc_id,
-                     list_filter(string_split(text, ' '), t -> t <> '') AS toks
-              FROM documents
-            ), b AS (
-              SELECT doc_id, toks, len(toks) AS n FROM d WHERE len(toks) >= 8
-            ), w AS (
-              SELECT doc_id, CAST(u.i AS BIGINT) AS pos,
-                     md5(array_to_string(toks[u.i:u.i + 7], chr(31))) AS whash
-              FROM b, UNNEST(range(1, n - 8 + 2)) AS u(i)
-            ), keep AS (
-              SELECT whash FROM w GROUP BY whash
-              HAVING count(*) BETWEEN 2 AND 10000
-            ), m AS (
-              SELECT w.doc_id, w.pos FROM w JOIN keep USING (whash)
-            ), g AS (
-              SELECT doc_id, pos,
-                     CASE WHEN pos - lag(pos, 1, -8)
-                              OVER (PARTITION BY doc_id ORDER BY pos) > 8
-                          THEN 1 ELSE 0 END AS brk
-              FROM m
-            ), gg AS (
-              SELECT doc_id, pos,
-                     SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                                    ROWS UNBOUNDED PRECEDING) AS grp
-              FROM g
-            )
-            SELECT doc_id,
-                   MIN(pos) AS span_start,
-                   MAX(pos) + 7 AS span_end,
-                   COUNT(*) AS n_windows
-            FROM gg GROUP BY doc_id, grp
         """,
         "exif_gps": """
             SELECT doc_id,

@@ -39,15 +39,7 @@ from .sampling import add_z_from_raster, sample_points_in_polygons  # noqa: F401
 from .geocoding import all_addresses  # noqa: F401
 from .topography import get_horizon  # noqa: F401
 from .dedup import (  # noqa: F401
-    cross_dup_spans,
-    dedup_exact,
-    dedup_lines,
     hamming_dedup_clusters,
-    minhash_lsh_pairs,
-    near_dup_clusters,
-    ngram_jaccard_pairs,
-    simhash_near_dups,
-    substring_dup_spans,
 )
 from .simsearch import (  # noqa: F401
     brute_force_topk,
@@ -56,26 +48,6 @@ from .simsearch import (  # noqa: F401
     lsh_topk,
     semdedup,
     semdedup_pairs,
-)
-from .tfidf import bm25_scores, tfidf_topk  # noqa: F401
-from .lmscore import perplexity_scores, train_bigram_lm  # noqa: F401
-from .tokenizer import bpe_tokenize, train_bpe, wordpiece_tokenize  # noqa: F401
-from .textstats import (  # noqa: F401
-    c4_filter,
-    fingerprint,
-    gopher_filter,
-    lang_scores,
-    quality_scores,
-    repetition_stats,
-)
-from .pii import pii_redact, pii_stats  # noqa: F401
-from .decontam import decontaminate  # noqa: F401
-from .urlfilter import parse_urls, url_filter  # noqa: F401
-from .packing import chunk_documents, pack_sequences  # noqa: F401
-from .mixing import (  # noqa: F401
-    deterministic_sample,
-    mix_corpus,
-    stratified_sample,
 )
 from .imgtrain import (  # noqa: F401
     aspect_bucket,

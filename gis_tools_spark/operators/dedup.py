@@ -1,209 +1,16 @@
-"""Deduplication operators for training-data pipelines (round-1 core
-per driver instructions): exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Near-duplicate detection on 64-bit hash columns: pigeonhole
+subset-key blocking for Hamming-distance pairs (the image ``phash``
+path) and the pairs → clusters → keep-one decision shared with
+``simsearch.semdedup``.
 
-All hash math is deterministic (xxhash64 via Spark or blake2b via
-Python) so results are stable across runs/partitionings. Scale design:
-every variant reduces to groupBy/join on small fixed-width keys —
-shuffle volume is O(rows × bands), never O(rows²); only within-bucket
-candidate pairs are scored.
+Scale design: every variant reduces to groupBy/join on small
+fixed-width keys — shuffle volume is O(rows × blocks), never O(rows²);
+only within-bucket candidate pairs are scored.
 """
 
 from __future__ import annotations
 
-import hashlib
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
-
-TOKEN_PATTERN = r"[a-z0-9]+"
-
-
-def normalize_text(col):
-    return F.lower(F.regexp_replace(col, r"\s+", " "))
-
-
-# ------------------------------------------------------------------ exact
-
-def dedup_exact(df: DataFrame, *, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """Keep min-id row per exact (md5) text hash."""
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col))
-    return (df.withColumn("__rn", F.row_number().over(w))
-            .where("__rn = 1").drop("__rn"))
-
-
-# ------------------------------------------------------------------ minhash
-
-def _hash64(data: bytes, seed: int = 0) -> int:
-    """First 8 bytes of md5, big-endian unsigned — chosen because the
-    exact value is reproducible in ANSI SQL / DuckDB as
-    ``('0x' || substr(md5(x), 1, 16))::UBIGINT``, which lets the driver
-    gate minhash/simhash against a real value-level oracle."""
-    if seed:
-        data = seed.to_bytes(8, "little") + data
-    return int.from_bytes(hashlib.md5(data).digest()[:8], "big")
-
-
-def _perm_params(num_hashes: int) -> tuple[np.ndarray, np.ndarray]:
-    """Deterministic affine-permutation coefficients over Z_2^64
-    (multiply-shift family: odd `a` makes a*x+b a bijection mod 2^64)."""
-    rng = np.random.RandomState(0x5EED)
-    a = rng.randint(0, 1 << 62, size=num_hashes).astype(np.uint64) * 2 + 1
-    b = rng.randint(0, 1 << 62, size=num_hashes).astype(np.uint64)
-    return a, b
-
-
-def minhash_signatures(df: DataFrame, *, text_col: str = "text",
-                       id_col: str = "doc_id", num_hashes: int = 64,
-                       shingle_size: int = 3) -> DataFrame:
-    """Word-shingle MinHash signature per document (array<long>).
-
-    One blake2b per *shingle* (not per shingle×hash); the num_hashes
-    permutations are derived as vectorized affine maps (a_i*h + b_i mod
-    2^64) and reduced with a single numpy min along the shingle axis —
-    ~num_hashes× fewer interpreter-level hash calls than the naive
-    per-seed loop (round-1 finding)."""
-    pa, pb = _perm_params(num_hashes)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(texts: pd.Series) -> pd.Series:
-        out = []
-        with np.errstate(over="ignore"):
-            for t in texts:
-                words = [w for w in (t or "").lower().split() if w]
-                if len(words) < shingle_size:
-                    shingles = {" ".join(words)} if words else {""}
-                else:
-                    shingles = {" ".join(words[i:i + shingle_size])
-                                for i in range(len(words) - shingle_size + 1)}
-                base = np.fromiter(
-                    (_hash64(s.encode()) for s in shingles),
-                    dtype=np.uint64, count=len(shingles))
-                vals = base[:, None] * pa[None, :] + pb[None, :]
-                out.append(vals.min(axis=0).astype(np.int64).tolist())
-        return pd.Series(out)
-
-    return df.select(id_col, _sig(F.col(text_col)).alias("minhash"))
-
-
-def minhash_signatures_fast(df: DataFrame, *, text_col: str = "text",
-                            id_col: str = "doc_id", num_hashes: int = 64,
-                            shingle_size: int = 3) -> DataFrame:
-    """Production MinHash signature path: 100% JVM whole-stage codegen,
-    zero Python and zero shuffle (round-2 verdict #4).
-
-    Shingling via higher-order array expressions (split → sliding
-    array_join windows → array_distinct) and per-permutation minima as
-    ``array_min(transform(shingles, s -> xxhash64(i, s)))`` — one
-    expression per hash, evaluated row-local. Same banded-LSH join works
-    on top (``minhash_lsh_pairs(..., hash_family='xxhash')``). The md5
-    kernel (`minhash_signatures`) is kept for the DuckDB value-level
-    oracle gate; this family is for throughput at 10^9-doc scale.
-    """
-    words = F.filter(F.split(normalize_text(F.col(text_col)), " "),
-                     lambda w: w != F.lit(""))
-    k = shingle_size
-    # sliding word windows; short docs -> the whole doc as one shingle
-    shingles = F.when(
-        F.size(words) < k,
-        F.array(F.array_join(words, " "))
-    ).otherwise(
-        F.transform(F.sequence(F.lit(0), F.size(words) - k),
-                    lambda i: F.array_join(F.slice(words, i + 1, k), " ")))
-    shingles = F.array_distinct(shingles)
-    # CRITICAL: materialize the string shingling ONCE per row as a named
-    # column, and hash every shingle string ONCE to a long. Inlining the
-    # shingle expression into all num_hashes array_min(...) branches (the
-    # first version of this op) made Catalyst re-evaluate the whole
-    # split/slice/array_join/array_distinct tree per permutation — 64×
-    # the string work, measured 57× SLOWER than the python kernel at
-    # 500k docs. With the base hashes materialized, each permutation is
-    # one xxhash64 over a long.
-    base = df.withColumn(
-        "__hs", F.transform(shingles, lambda s: F.xxhash64(s)))
-    sig = F.array(*[
-        F.array_min(F.transform(F.col("__hs"),
-                                lambda h: F.xxhash64(F.lit(i), h)))
-        for i in range(num_hashes)])
-    return base.select(id_col, sig.alias("minhash"))
-
-
-def minhash_lsh_pairs(df: DataFrame, *, text_col: str = "text",
-                      id_col: str = "doc_id", num_hashes: int = 64,
-                      bands: int = 16, shingle_size: int = 3,
-                      threshold: float = 0.7,
-                      hash_family: str = "md5_oracle") -> DataFrame:
-    """Near-dup candidate pairs via banded LSH, verified by signature-
-    estimated Jaccard ≥ threshold. Returns (id_a, id_b, jaccard_est),
-    id_a < id_b.
-
-    shingle→minhash→band→bucket-join: each doc emits `bands` bucket keys
-    (hash of one band of the signature); equal keys equi-join; estimated
-    Jaccard = fraction of agreeing signature positions.
-
-    hash_family: 'md5_oracle' (python kernel, exactly reproducible in
-    DuckDB SQL — the correctness-gate family) or 'xxhash' (pure-JVM
-    codegen via minhash_signatures_fast — the production family).
-    """
-    rows_per_band = num_hashes // bands
-    signer = (minhash_signatures_fast if hash_family == "xxhash"
-              else minhash_signatures)
-    sigs = signer(df, text_col=text_col, id_col=id_col,
-                  num_hashes=num_hashes, shingle_size=shingle_size)
-    sigs = sigs.persist()
-    banded = sigs.select(
-        id_col, "minhash",
-        F.posexplode(F.array(*[
-            F.xxhash64(F.concat_ws(",", *[
-                F.col("minhash")[b * rows_per_band + r].cast("string")
-                for r in range(rows_per_band)]))
-            for b in range(bands)])).alias("band", "bucket"))
-    a = banded.select(F.col(id_col).alias("id_a"), F.col("minhash").alias("sig_a"),
-                      "band", "bucket")
-    b = banded.select(F.col(id_col).alias("id_b"), F.col("minhash").alias("sig_b"),
-                      "band", "bucket")
-    cand = (a.join(b, on=["band", "bucket"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "sig_a", "sig_b").distinct())
-    jacc = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0), lambda acc, x: acc + x) / F.lit(num_hashes)
-    from .core import persist_scoped
-
-    return persist_scoped(sigs, cand.withColumn("jaccard_est", jacc)
-                          .where(F.col("jaccard_est") >= threshold)
-                          .select("id_a", "id_b", "jaccard_est"))
-
-
-# ------------------------------------------------------------------ simhash
-
-def simhash64(df: DataFrame, *, text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash over word tokens: per-bit majority of token hashes."""
-
-    @F.pandas_udf(T.LongType())
-    def _sim(texts: pd.Series) -> pd.Series:
-        shifts = np.arange(64, dtype=np.uint64)
-        out = np.zeros(len(texts), dtype=np.int64)
-        for k, t in enumerate(texts):
-            words = (t or "").lower().split()
-            if not words:
-                continue
-            # hash each distinct token once, weight by occurrence count
-            uniq, counts = np.unique(np.array(words, dtype=object),
-                                     return_counts=True)
-            hv = np.fromiter((_hash64(w.encode()) for w in uniq),
-                             dtype=np.uint64, count=len(uniq))
-            bits = ((hv[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int64)
-            acc = ((2 * bits - 1) * counts[:, None].astype(np.int64)).sum(axis=0)
-            sel = acc > 0
-            if sel.any():
-                out[k] = (np.uint64(1) << shifts[sel]).sum(dtype=np.uint64).astype(np.int64)
-        return pd.Series(out, dtype=np.int64)
-
-    return df.select(id_col, _sim(F.col(text_col)).alias("simhash"))
+from pyspark.sql import DataFrame, functions as F
 
 
 def simhash_blocking(max_hamming: int, n_blocks: int | None = None
@@ -212,13 +19,13 @@ def simhash_blocking(max_hamming: int, n_blocks: int | None = None
 
     Pigeonhole completeness: ≤ d differing bits flip at most d of the
     n_blocks blocks, so at least (n_blocks − d) blocks AGREE — and every
-    (n_blocks − d)-subset of those agreeing blocks is a key both docs
+    (n_blocks − d)-subset of those agreeing blocks is a key both rows
     emit. Emitting one key per (n_blocks − d)-subset therefore finds
     every pair within distance d.
 
     Scale (round-2 verdict #1): the old scheme joined on SINGLE
     ~16-bit blocks, so bucket population grows as n/2^16 and in-bucket
-    candidate pairs as O(n²/2^16) — ~10^13 pairs at 10^9 docs. Subset
+    candidate pairs as O(n²/2^16) — ~10^13 pairs at 10^9 rows. Subset
     keys concatenate (n_blocks − d) blocks: with the default
     n_blocks = d+3 (e.g. 6 blocks at d=3) each key carries
     64·(n_blocks−d)/n_blocks ≈ 32+ bits, so expected bucket load is
@@ -238,31 +45,21 @@ def simhash_blocking(max_hamming: int, n_blocks: int | None = None
     return bounds, combos
 
 
-def simhash_near_dups(df: DataFrame, *, text_col: str = "text",
-                      id_col: str = "doc_id", max_hamming: int = 3,
-                      n_blocks: int | None = None) -> DataFrame:
-    """Pairs within Hamming distance ≤ max_hamming via pigeonhole
-    subset-key bucketing (see simhash_blocking): each doc emits one
-    64-bit xxhash key per (n_blocks − d)-subset of its blocks; equal
-    keys equi-join; exact popcount filter confirms. Hash collisions can
-    only ADD candidates (same blocks ⇒ same key), never lose pairs."""
-    sh = simhash64(df, text_col=text_col, id_col=id_col)
-    return hamming_near_dups(sh, hash_col="simhash", id_col=id_col,
-                             max_hamming=max_hamming, n_blocks=n_blocks)
-
-
 def hamming_near_dups(df: DataFrame, *, hash_col: str, id_col: str,
                       max_hamming: int = 3,
                       n_blocks: int | None = None) -> DataFrame:
-    """Pairs within Hamming distance ≤ max_hamming on ANY 64-bit hash
-    column, via the same pigeonhole subset-key blocking simhash uses —
-    works for simhash, perceptual image hashes, audio fingerprints…
+    """Pairs within Hamming distance ≤ max_hamming on a 64-bit hash
+    column (e.g. the image ``phash``), via pigeonhole subset-key
+    blocking (see simhash_blocking): each row emits one xxhash key per
+    (n_blocks − d)-subset of its blocks; equal keys equi-join; an exact
+    popcount filter confirms. Key collisions can only ADD candidates,
+    never lose pairs. Returns (id_a, id_b, hamming), id_a < id_b.
 
     Scale note: the OUTPUT (and hence the join) is inherently quadratic
     in the size of any group of identical hashes — every pair of
     hash-equal rows is within any distance. Collapse exact duplicates
-    first (groupBy(hash_col) / dedup_exact) when the corpus contains
-    mass-duplicated payloads; the blocking itself stays O(rows·C)."""
+    first (groupBy(hash_col)) when the table contains mass-duplicated
+    payloads; the blocking itself stays O(rows·C)."""
     if not 0 <= max_hamming < 64:
         raise ValueError(f"max_hamming must be in [0, 64), got {max_hamming}")
     bounds, combos = simhash_blocking(max_hamming, n_blocks)
@@ -277,8 +74,8 @@ def hamming_near_dups(df: DataFrame, *, hash_col: str, id_col: str,
         F.xxhash64(F.lit(ci), *[block_col[j] for j in combo])
         for ci, combo in enumerate(combos)])
     # persist: both sides of the self-join share this lineage — without
-    # it the upstream signature kernel (e.g. simhash64's md5 pass) runs
-    # twice, once per join side (same reason minhash persists its sigs)
+    # it an upstream hash kernel (e.g. a phash decode) runs twice, once
+    # per join side
     e = df.select(id_col, hash_col, F.posexplode(keys).alias("blk", "key")).persist()
     a = e.select(F.col(id_col).alias("id_a"), F.col(hash_col).alias("h_a"), "blk", "key")
     b = e.select(F.col(id_col).alias("id_b"), F.col(hash_col).alias("h_b"), "blk", "key")
@@ -297,229 +94,18 @@ def image_near_dups(df: DataFrame, *, phash_col: str = "phash",
                     max_hamming: int = 6) -> DataFrame:
     """Near-duplicate IMAGE pairs: Hamming blocking on the 64-bit
     perceptual hash column every image table in the engine carries
-    (raster/codec.phash64 — DCT low-frequency signs). The image-side
-    analog of simhash_near_dups; same O(rows·C) shuffle, no O(rows²)."""
+    (raster/codec.phash64 — DCT low-frequency signs); O(rows·C)
+    shuffle, no O(rows²)."""
     return hamming_near_dups(df, hash_col=phash_col, id_col=id_col,
                              max_hamming=max_hamming)
-
-
-# ------------------------------------------------------------------ n-gram jaccard
-
-def ngram_jaccard_pairs(df: DataFrame, *, text_col: str = "text",
-                        id_col: str = "doc_id", n: int = 3,
-                        threshold: float = 0.5,
-                        prefilter_bands: int = 8) -> DataFrame:
-    """EXACT word n-gram Jaccard between candidate pairs, candidates from
-    a cheap MinHash LSH prefilter (so we never score all O(rows²))."""
-    cand = minhash_lsh_pairs(df, text_col=text_col, id_col=id_col,
-                             num_hashes=32, bands=prefilter_bands,
-                             shingle_size=n, threshold=0.0)
-    shingles = df.select(
-        F.col(id_col),
-        F.col(text_col)).withColumn(
-        "sh", _shingle_set_udf(n)(F.col(text_col))).drop(text_col)
-    a = shingles.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = shingles.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    joined = cand.select("id_a", "id_b").join(a, on="id_a").join(b, on="id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return (joined.withColumn("jaccard", inter / union)
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard"))
-
-
-def _shingle_set_udf(n: int):
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _sh(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            words = [w for w in (t or "").lower().split() if w]
-            if len(words) < n:
-                out.append([" ".join(words)] if words else [])
-            else:
-                out.append(sorted({" ".join(words[i:i + n])
-                                   for i in range(len(words) - n + 1)}))
-        return pd.Series(out)
-
-    return _sh
-
-
-def substring_dup_spans(df: DataFrame, *, text_col: str = "text",
-                        id_col: str = "doc_id", k: int = 8,
-                        min_occ: int = 2, max_occ: int = 10_000
-                        ) -> DataFrame:
-    """Exact repeated-substring spans: maximal token ranges whose every
-    k-token window also appears elsewhere in the corpus — the
-    RefinedWeb/Pile-style "duplicated span >= k tokens" detector that
-    complements the document-level families above (exact hash, MinHash,
-    SimHash, n-gram Jaccard all mark whole documents; this finds the
-    COPIED REGIONS inside otherwise-distinct documents).
-
-    Plan (100 % JVM columns, no Python): tokenize (whitespace split,
-    empties dropped), md5 every k-token window via
-    transform(sequence(...)) + slice (one array expression per row),
-    posexplode to (doc, start, window-hash), one groupBy(window-hash)
-    to keep hashes seen min_occ..max_occ times, join back, and merge
-    overlapping/adjacent starts per document with a lag() window
-    (gaps-and-islands).  Returns (doc_id, span_start, span_end,
-    n_windows) with 1-based inclusive token positions.
-
-    Scale: shuffle is O(total tokens) on the window-hash key.
-    ``max_occ`` is the boilerplate guard AND the skew guard — a phrase
-    in >max_occ windows ("all rights reserved") would otherwise
-    concentrate one reducer; RefinedWeb excludes such spans as
-    boilerplate for the same reason.  md5 (not xxhash64) so a DuckDB
-    oracle can recompute the identical keys value-for-value."""
-    win = _window_hashes(df, text_col, id_col, k)
-    keep = (win.groupBy("whash").agg(F.count("*").alias("occ"))
-            .where((F.col("occ") >= min_occ) & (F.col("occ") <= max_occ)))
-    m = win.join(keep, "whash").select(id_col, "pos")
-    return _merge_islands(m, id_col, k)
-
-
-def _window_hashes(df: DataFrame, text_col: str, id_col: str,
-                   k: int) -> DataFrame:
-    """(id, pos, whash) for every k-token window, 1-based positions;
-    md5 keys so DuckDB oracles can recompute them value-for-value."""
-    sep = "\x1f"
-    toks = F.filter(F.split(F.col(text_col), " "),
-                    lambda x: x != F.lit(""))
-    base = (df.select(F.col(id_col), toks.alias("toks"))
-              .withColumn("n", F.size("toks"))
-              .where(F.col("n") >= k))
-    hashes = F.transform(
-        F.sequence(F.lit(1), F.col("n") - k + 1),
-        lambda i: F.md5(F.array_join(F.slice("toks", i, k), sep)))
-    win = base.select(F.col(id_col),
-                      F.posexplode(hashes).alias("p0", "whash"))
-    return win.select(id_col, (F.col("p0") + 1).alias("pos"), "whash")
-
-
-def _merge_islands(m: DataFrame, id_col: str, k: int) -> DataFrame:
-    """Merge kept window starts into maximal spans per document
-    (gaps-and-islands with a lag window)."""
-    w = Window.partitionBy(id_col).orderBy("pos")
-    grp = (m.withColumn("brk", F.when(
-        F.col("pos") - F.lag("pos", 1, -k).over(w) > k, 1).otherwise(0))
-        .withColumn("grp", F.sum("brk").over(
-            w.rowsBetween(Window.unboundedPreceding, 0))))
-    return (grp.groupBy(id_col, "grp")
-            .agg(F.min("pos").alias("span_start"),
-                 (F.max("pos") + k - 1).alias("span_end"),
-                 F.count("*").alias("n_windows"))
-            .drop("grp"))
-
-
-def cross_dup_spans(df: DataFrame, *, text_col: str = "text",
-                    id_col: str = "doc_id", k: int = 8,
-                    max_occ: int = 10_000) -> DataFrame:
-    """CROSS-document exact duplicate spans (the published
-    train-data-dedup recipe of removing every ≥k-token substring that
-    already occurs in another document): maximal token ranges whose
-    every k-token window also appears in a DIFFERENT document, reported
-    only for non-canonical copies (canonical = minimum id holding the
-    window — that copy survives, so dedup never deletes all
-    occurrences). Returns (doc_id, span_start, span_end, n_windows),
-    1-based inclusive token positions — the spans a pipeline cuts out
-    of doc ``doc_id``.
-
-    Plan mirrors :func:`substring_dup_spans` — O(total tokens) shuffle
-    on md5 window keys — with ownership resolved by one extra aggregate
-    (distinct-doc count + min id per window). ``max_occ`` stays the
-    boilerplate/skew guard. Canonical-ownership is per-window (greedy):
-    overlapping windows owned by different documents each keep their
-    own canonical copy, the standard approximation of the exact
-    suffix-array formulation.
-    """
-    win = _window_hashes(df, text_col, id_col, k)
-    own = (win.groupBy("whash")
-           .agg(F.countDistinct(id_col).alias("n_docs"),
-                F.min(id_col).alias("owner"),
-                F.count("*").alias("occ"))
-           .where((F.col("n_docs") >= 2) & (F.col("occ") <= max_occ)))
-    m = (win.join(own, "whash")
-         .where(F.col(id_col) != F.col("owner"))
-         .select(id_col, "pos"))
-    return _merge_islands(m, id_col, k)
-
-
-def dedup_lines(df: DataFrame, *, text_col: str = "text",
-                id_col: str = "doc_id", min_docs: int = 2
-                ) -> DataFrame:
-    """Line-level boilerplate removal (the RefinedWeb/CCNet recipe of
-    dropping lines that repeat across many documents — headers,
-    footers, cookie banners): any line appearing in at least
-    ``min_docs`` DISTINCT documents is removed from every document.
-    Returns one row per input document:
-    ``(id, n_lines, n_removed, clean_text)`` with surviving lines
-    re-joined by newline in their original order (empty string when
-    everything was boilerplate).
-
-    Plan (pure Catalyst, no Python): explode lines with positions, ONE
-    shuffled aggregate for per-line distinct-doc counts, a join back on
-    the line key, and per-document reassembly via
-    collect_list(struct(pos, ...)) + array_sort — order restored
-    without a second window shuffle. Documents with no lines at all
-    (empty text) are preserved with n_lines = 0. At 100 TB the line
-    count table shards on the line key; a hash key variant
-    (xxhash64(line)) halves shuffle width when oracle mirroring is not
-    needed."""
-    lines_arr = F.filter(F.split(F.col(text_col), "\n"),
-                         lambda x: F.trim(x) != F.lit(""))
-    ln = (df.select(F.col(id_col),
-                    F.posexplode_outer(lines_arr).alias("pos", "line")))
-    counts = (ln.where(F.col("line").isNotNull())
-              .groupBy("line")
-              .agg(F.countDistinct(id_col).alias("n_docs")))
-    flagged = (ln.join(counts, on="line", how="left")
-               .withColumn("rm", (F.col("n_docs") >= min_docs)
-                           .cast("int")))
-    return (flagged.groupBy(id_col)
-            .agg(F.count("line").alias("n_lines"),
-                 F.coalesce(F.sum("rm"), F.lit(0)).alias("n_removed"),
-                 F.concat_ws("\n", F.array_sort(F.collect_list(
-                     F.when(F.col("rm") == 0,
-                            F.struct("pos", "line")))).line)
-                 .alias("clean_text")))
-
-
-# ------------------------------------------------- near-dup cluster + keep
-
-def near_dup_clusters(df: DataFrame, *, text_col: str = "text",
-                      id_col: str = "doc_id", num_hashes: int = 64,
-                      bands: int = 16, shingle_size: int = 3,
-                      threshold: float = 0.7,
-                      hash_family: str = "md5_oracle",
-                      max_iter: int = 64) -> DataFrame:
-    """End-to-end near-dup dedup DECISION: LSH pairs → connected
-    components → keep-one-per-cluster (the RefinedWeb / SlimPajama
-    policy, reference has no analog — brief-scope training-pipeline op).
-
-    Returns one row per input id: ``(id, cluster_id, keep)`` where
-    ``cluster_id`` is the minimum id of the duplicate cluster the doc
-    belongs to (its own id when it has no verified near-dup) and
-    ``keep`` marks the canonical survivor — exactly the rows a
-    training pipeline writes onward.
-
-    Scale plan: pairs are LSH-bounded (shuffle O(rows × bands), never
-    O(rows²)); the duplicate GRAPH is orders of magnitude smaller than
-    the corpus and only it enters the iterative pointer-jumping
-    component stage (O(log diameter) rounds); the final decision is a
-    single left join of the corpus scan against the component labels.
-    At 100 TB the corpus scan dominates and stays one pass.
-    """
-    pairs = minhash_lsh_pairs(
-        df, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
-        bands=bands, shingle_size=shingle_size, threshold=threshold,
-        hash_family=hash_family)
-    return _cluster_and_keep(df, pairs, id_col, max_iter)
 
 
 def _cluster_and_keep(df: DataFrame, pairs: DataFrame, id_col: str,
                       max_iter: int) -> DataFrame:
     """Shared pairs→decision tail: connected components over the
     (id_a, id_b) duplicate graph, then one row per corpus id with
-    (cluster_id = component minimum, keep = is-canonical)."""
+    (cluster_id = component minimum, keep = is-canonical). Used by
+    :func:`hamming_dedup_clusters` and ``simsearch.semdedup``."""
     from .network import connected_components
 
     edges = pairs.select(F.col("id_a").alias("src_key"),
@@ -541,14 +127,12 @@ def hamming_dedup_clusters(df: DataFrame, *, hash_col: str,
                            id_col: str, max_hamming: int = 3,
                            n_blocks: int | None = None,
                            max_iter: int = 64) -> DataFrame:
-    """Image/audio near-dup dedup DECISION: the Hamming analog of
-    :func:`near_dup_clusters` for 64-bit perceptual hashes —
+    """Image near-dup dedup DECISION for 64-bit perceptual hashes:
     :func:`hamming_near_dups` pairs → connected components →
     keep-one-per-cluster (canonical = minimum id).  One row per input
     id: ``(id, cluster_id, keep)``.
 
-    Scale plan identical to the text decision: the pair set is
-    pigeonhole-blocked (O(rows·C(n_blocks,d)) candidates, never
+    Scale plan: the pair set is pigeonhole-blocked (O(rows·C(n_blocks,d)) candidates, never
     O(rows²)), only the (much smaller) duplicate graph enters the
     O(log diameter) component rounds, and the decision is one left
     join against the corpus scan.  Collapse exact hash duplicates

@@ -16,8 +16,7 @@ pipeline runs after filtering/dedup and before the dataloader:
   extra`` (CLS/register tokens), the per-image "length" a NaViT-style
   patch-packing trainer bins on.  Pure codegen.
 * ``pack_images`` — greedy first-fit packing of whole images into
-  fixed token-budget blocks (images cannot straddle blocks, unlike
-  text ``pack_sequences``).  Greedy filling is a sequential scan, so
+  fixed token-budget blocks (images cannot straddle blocks).  Greedy filling is a sequential scan, so
   the corpus is bucketed by contiguous id ranges and each bucket packs
   independently in one Arrow task — waste is bounded by one partial
   block per bucket, and ``n_buckets`` bounds the per-task row count
@@ -25,8 +24,7 @@ pipeline runs after filtering/dedup and before the dataloader:
   count) enters Python; pixels never move.
 
 Reference parity: gis-tools has no training-batch ops; build-brief
-scope (large-scale training-data pipeline), alongside packing.py /
-mixing.py.  The bucketing cost uses the exact aspect-ratio distortion
+scope (large-scale training-data pipeline).  The bucketing cost uses the exact aspect-ratio distortion
 factor ``max(ar, bar)/min(ar, bar)`` (the factor by which a
 resize-to-fill stretches the image), expressed over integer products
 so Spark and the SQL oracle compute bit-identical doubles.
@@ -125,7 +123,7 @@ def image_filter(df: DataFrame, *, min_side: int = 64,
        min_caption_chars (NULL captions reject here too)
 
     Appends ``keep`` (boolean) and ``reject_reason`` (NULL when kept).
-    Like the Gopher/C4 filters this is ONE whole-stage-codegen
+    This is ONE whole-stage-codegen
     projection over metadata columns — the pixel payload is never
     decoded, so at 100 TB the filter costs exactly the scan (and
     column pruning drops ``bytes`` entirely when the caller selects

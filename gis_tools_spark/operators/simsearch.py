@@ -490,8 +490,8 @@ def semdedup(df: DataFrame, *, threshold: float = 0.95,
     the minimum id of its semantic-duplicate component (its own id when
     unduplicated), ``keep`` the canonical-survivor flag. This is the
     embedding-space member of the dedup-decision family next to
-    :func:`gis_tools_spark.operators.dedup.near_dup_clusters` (MinHash
-    text) and ``hamming_dedup_clusters`` (perceptual image hashes).
+    :func:`gis_tools_spark.operators.dedup.hamming_dedup_clusters`
+    (perceptual image hashes).
 
     Scale plan: pairs are cluster-bounded (see :func:`semdedup_pairs`);
     only the duplicate graph enters the O(log diameter) pointer-jumping

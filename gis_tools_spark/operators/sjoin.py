@@ -43,6 +43,11 @@ from .core import (
     small_side,
 )
 
+# The broadcast gate's default limits (pip_join, candidate_pairs, sjoin,
+# trajectory.od_flows): the small side is collected to the driver.
+BROADCAST_MAX_ROWS = 100_000
+BROADCAST_MAX_BYTES = 64 << 20
+
 
 def _dedupe_names(points: DataFrame, polygons: DataFrame) -> DataFrame:
     """Rename right-side columns that collide with left-side names."""
@@ -63,8 +68,8 @@ def pip_join(points: DataFrame, polygons: DataFrame, *,
              salt_sample: float = 1.0,
              salt_hist: DataFrame | None = None,
              strategy: str = "auto",
-             broadcast_max_rows: int = 100_000,
-             broadcast_max_bytes: int = 64 << 20,
+             broadcast_max_rows: int = BROADCAST_MAX_ROWS,
+             broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
              keep_poly_wkb: bool = False,
              force_shuffle: bool = False) -> DataFrame:
     """Join point rows to polygon rows where the point is covered.
@@ -408,8 +413,8 @@ def candidate_pairs(left: DataFrame, right: DataFrame, *,
                     salt_threshold: int | None = None,
                     salt_sample: float = 1.0,
                     broadcast_gate: bool = True,
-                    broadcast_max_rows: int = 100_000,
-                    broadcast_max_bytes: int = 64 << 20) -> DataFrame:
+                    broadcast_max_rows: int = BROADCAST_MAX_ROWS,
+                    broadcast_max_bytes: int = BROADCAST_MAX_BYTES) -> DataFrame:
     """Distinct (left_id, right_id) bbox-overlap candidate pairs via
     adaptive per-geometry covers matched through cell-hierarchy
     ancestors — the shared filter phase of the generic sjoin and the
@@ -611,8 +616,8 @@ def sjoin(left: DataFrame, right: DataFrame, *,
           salt_threshold: int | None = None,
           salt_sample: float = 1.0,
           strategy: str = "auto",
-          broadcast_max_rows: int = 100_000,
-          broadcast_max_bytes: int = 64 << 20) -> DataFrame:
+          broadcast_max_rows: int = BROADCAST_MAX_ROWS,
+          broadcast_max_bytes: int = BROADCAST_MAX_BYTES) -> DataFrame:
     """Geometry ⋈ geometry on a spatial predicate (reference sjoin /
     overlay filter phase, layer.py:1099-1140).
 

@@ -82,7 +82,7 @@ def od_flows(points: DataFrame, zones: DataFrame, *,
              ts_col: str = "ts", lon: str = "lon", lat: str = "lat",
              gap_s: int = 3600, zone_id: str = "gid",
              order_tiebreak: str | None = None,
-             strategy: str = "broadcast") -> DataFrame:
+             strategy: str = "auto") -> DataFrame:
     """Origin-destination flow matrix: sessionize the point stream per
     key (gap > gap_s starts a new trip), take each session's first and
     last point, assign both to zones via the PIP join, and count trips
@@ -91,8 +91,9 @@ def od_flows(points: DataFrame, zones: DataFrame, *,
 
     Returns (zone_o, zone_d, n_trips). The sessionize + endpoint
     aggregation collapses the stream to O(sessions) rows BEFORE the
-    joins, and the zone join is the engine's pip_join (broadcast by
-    default)."""
+    joins. ``auto`` tags both endpoints in one broadcast pass when the
+    zones pass pip_join's broadcast gate, else runs two cell-join
+    pip_joins."""
     keys = list(key_cols)
     s = sessionize(points, ts_col=ts_col, gap_s=gap_s, key_cols=tuple(keys),
                    order_tiebreak=order_tiebreak)
@@ -104,6 +105,13 @@ def od_flows(points: DataFrame, zones: DataFrame, *,
                  pos).alias("__o"),
         F.max_by(F.struct(F.col(lon).alias("lon"), F.col(lat).alias("lat")),
                  pos).alias("__d")))
+    if strategy == "auto":
+        from .core import small_side
+        from .sjoin import BROADCAST_MAX_BYTES, BROADCAST_MAX_ROWS
+        strategy = ("broadcast" if small_side(
+            zones, max_rows=BROADCAST_MAX_ROWS,
+            max_bytes=BROADCAST_MAX_BYTES, bytes_col="geometry_wkb")
+            else "cell")
     if strategy == "broadcast":
         # round-6 (guide §2.4): tag BOTH endpoints in one broadcast-CSR
         # UDF stage and explode the hit arrays — zero joins — instead

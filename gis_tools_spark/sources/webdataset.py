@@ -109,9 +109,9 @@ def wds_export(df, out_dir: str, *, samples_per_shard: int = 1000,
     ``(shard_id, path, n_samples, n_bytes)``.
 
     Shard assignment is a pure function of the data: global rank =
-    bucket offset + within-bucket row_number (the same bucketed
-    prefix-sum as pack_sequences — per-bucket COUNTS to the driver,
-    broadcast back; the single-partition global window never appears),
+    bucket offset + within-bucket row_number (a bucketed prefix-sum —
+    per-bucket COUNTS to the driver, broadcast back; the
+    single-partition global window never appears),
     shard = rank // samples_per_shard.  Tar bytes are deterministic
     (mtime=0, USTAR, rank order within shard), so re-running an export
     over the same table yields byte-identical shards — resumable and

@@ -47,6 +47,14 @@ def test_every_query_has_an_oracle():
     assert set(E.queries()) == set(E.oracle_sql())
 
 
+def test_bench_headline_names_are_gates():
+    """bench.py times its headline gates by name; a stale name would only
+    fail mid-bench. Importing bench must not start Spark."""
+    import bench
+
+    assert set(bench.HEADLINE) <= set(E.queries())
+
+
 @pytest.mark.parametrize("name", sorted(E.queries().keys()))
 def test_query_matches_oracle(spark, duck, name):
     spark_pdf = E.queries()[name](spark, SF).toPandas()

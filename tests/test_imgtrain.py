@@ -1,6 +1,6 @@
 """Image-training batch-prep oracles: aspect-ratio bucketing vs a
 brute-force numpy argmin, ViT token closed form, greedy pack replay,
-augmentation pixel exactness, and stratified sampling invariants."""
+and augmentation pixel exactness."""
 
 import sys
 from pathlib import Path
@@ -15,7 +15,6 @@ from gis_tools_spark.operators.imgtrain import (
     pack_images,
     vit_token_count,
 )
-from gis_tools_spark.operators.mixing import stratified_sample
 from gis_tools_spark.raster import codec
 from gis_tools_spark.raster.media import augment_array, augment_images
 
@@ -170,32 +169,6 @@ def test_augment_images_drops_corrupt(spark):
         "image_id string, bytes binary, w int, h int, fmt string")
     out = augment_images(df, ops=("hflip",)).collect()
     assert [r.image_id for r in out] == ["ok"]
-
-
-def test_stratified_sample_invariants(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    got = stratified_sample(docs, 5, "lang", seed=3)
-    counts = {r.lang: r.n for r in
-              got.groupBy("lang").count().withColumnRenamed("count", "n")
-              .collect()}
-    full = {r.lang: r.n for r in
-            docs.groupBy("lang").count().withColumnRenamed("count", "n")
-            .collect()}
-    for lang, n in counts.items():
-        assert n == min(5, full[lang])
-    # deterministic under repartition; k extends monotonically
-    a = sorted(r.doc_id for r in got.collect())
-    b = sorted(r.doc_id for r in
-               stratified_sample(docs.repartition(17), 5, "lang",
-                                 seed=3).collect())
-    assert a == b
-    big = sorted(r.doc_id for r in
-                 stratified_sample(docs, 9, "lang", seed=3).collect())
-    assert set(a) <= set(big)
-    # different seed, different sample
-    c = sorted(r.doc_id for r in
-               stratified_sample(docs, 5, "lang", seed=4).collect())
-    assert a != c
 
 
 def test_image_filter_rule_order(spark):

@@ -4,7 +4,7 @@ Each test pins one defect found by the round-1 review:
   1. intersects() containment fallback for disjoint multi-parts
   2. connected_components convergence on long chains (pointer jumping)
   3. pip_join/sjoin how='left' with null attrs and duplicate rows
-  4. simhash_near_dups completeness for max_hamming >= 4
+  4. hamming_near_dups completeness for max_hamming >= 4
   5. PNG Up-filter (2) on the first row
 """
 
@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 
 from gis_tools_spark.geom import kernels as K, wkb
-from gis_tools_spark.operators.dedup import simhash64, simhash_near_dups
+from gis_tools_spark.operators.dedup import hamming_near_dups
 from gis_tools_spark.operators.network import connected_components
 from gis_tools_spark.operators.sjoin import pip_join
 from gis_tools_spark.raster import codec
@@ -95,25 +95,34 @@ def test_pip_left_join_null_attrs_and_duplicates(spark, zones_pd):
         assert len(outside) == 1 and outside["gid"].isna().all()
 
 
-# ---------------------------------------------------------- 4. simhash block completeness
+# ---------------------------------------------------------- 4. hamming block completeness
 
 def test_simhash_near_dups_complete_for_large_hamming(spark):
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    docs = [(i, base + f" variant {i % 7} tail {'x' * (i % 5)}") for i in range(40)]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    hashes = {r["doc_id"]: r["simhash"] for r in simhash64(df).collect()}
+    # d=6 is image_near_dups' default: 9 blocks of ~7 bits, one key per
+    # 3-block subset, so a pair at distance 6 may share a single key
+    rng = np.random.default_rng(17)
+    hashes = {}
+    for g in range(8):
+        base = int(rng.integers(0, 1 << 64, dtype=np.uint64))
+        for j in range(5):  # neighbours at Hamming 0, 2, 4, 6, 8 of base
+            flips = rng.choice(64, 2 * j, replace=False)
+            hashes[g * 10 + j] = base ^ sum(1 << int(b) for b in flips)
+    df = spark.createDataFrame(
+        [(k, v - (1 << 64) if v >= 1 << 63 else v) for k, v in hashes.items()],
+        ["image_id", "phash"])
     want = set()
     for a in hashes:
         for b in hashes:
-            if a < b:
-                d = bin((hashes[a] ^ hashes[b]) & ((1 << 64) - 1)).count("1")
-                if d <= 6:
-                    want.add((a, b))
+            if a < b and bin(hashes[a] ^ hashes[b]).count("1") <= 6:
+                want.add((a, b))
+    assert len(want) >= 24
     got = {(r["id_a"], r["id_b"])
-           for r in simhash_near_dups(df, max_hamming=6).collect()}
+           for r in hamming_near_dups(df, hash_col="phash", id_col="image_id",
+                                      max_hamming=6).collect()}
     assert got == want  # pigeonhole must be complete, not best-effort
     with pytest.raises(ValueError):
-        simhash_near_dups(df, max_hamming=64)
+        hamming_near_dups(df, hash_col="phash", id_col="image_id",
+                          max_hamming=64)
 
 
 # ---------------------------------------------------------- 5. PNG Up filter on row 0

@@ -1,8 +1,8 @@
-"""Scale-safe SimHash blocking (round-2 verdict #1).
+"""Scale-safe Hamming blocking (round-2 verdict #1).
 
 1. Completeness vs brute force: the subset-key bucketing must recover
    EVERY pair within Hamming d (pigeonhole proof exercised end-to-end
-   through Spark).
+   through Spark on a 64-bit hash column, as for the image phash).
 2. Asymptotics (pure numpy, no Spark): on biased-bit hashes where the
    old single-16-bit-block scheme piles >1k rows into hot buckets, the
    subset-key scheme's candidate count must be orders of magnitude
@@ -12,11 +12,7 @@
 import numpy as np
 import pytest
 
-from gis_tools_spark.operators.dedup import (
-    simhash64,
-    simhash_blocking,
-    simhash_near_dups,
-)
+from gis_tools_spark.operators.dedup import hamming_near_dups, simhash_blocking
 
 
 def _np_keys_subset(h: np.ndarray, d: int, n_blocks: int | None = None):
@@ -103,31 +99,31 @@ def test_candidate_count_scales_linearly_not_quadratically():
     assert new_cands < 20 * n, new_cands
 
 
+def _signed(v: int) -> int:
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
 @pytest.mark.parametrize("d", [0, 3, 5])
 def test_simhash_near_dups_matches_brute_force(spark, d):
     rng = np.random.default_rng(3)
-    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta",
-             "theta", "iota", "kappa", "lam", "mu", "nu", "xi", "omicron"]
-    rows = []
-    for i in range(120):
-        k = 8 + int(rng.integers(0, 12))
-        rows.append((i, " ".join(rng.choice(words, k).tolist())))
-    # implant near-dups: doc 200+i = doc i with one word changed
-    for i in range(10):
-        t = rows[i][1].split()
-        t[0] = "changed"
-        rows.append((200 + i, " ".join(t)))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    hashes = {i: int(h) for i, h in
+              enumerate(rng.integers(0, 1 << 64, 120, dtype=np.uint64))}
+    # plant neighbours of row i at Hamming 0..d+1, straddling the cut
+    for i in range(40):
+        flips = rng.choice(64, i % (d + 2), replace=False)
+        hashes[200 + i] = hashes[i] ^ sum(1 << int(b) for b in flips)
+    df = spark.createDataFrame([(k, _signed(v)) for k, v in hashes.items()],
+                               "id long, h long")
 
-    hashes = {r["doc_id"]: np.uint64(np.int64(r["simhash"]))
-              for r in simhash64(docs).collect()}
     ids = sorted(hashes)
     expect = set()
     for i, a in enumerate(ids):
         for b in ids[i + 1:]:
-            if bin(int(hashes[a] ^ hashes[b])).count("1") <= d:
+            if bin(hashes[a] ^ hashes[b]).count("1") <= d:
                 expect.add((a, b))
+    assert len(expect) >= 2
 
     got = {(r["id_a"], r["id_b"])
-           for r in simhash_near_dups(docs, max_hamming=d).collect()}
+           for r in hamming_near_dups(df, hash_col="h", id_col="id",
+                                      max_hamming=d).collect()}
     assert got == expect

@@ -1,95 +1,11 @@
-"""Dedup / similarity-search / text-analysis operators vs pandas oracles."""
+"""Image-hash dedup / similarity-search / embedding-dedup operators vs
+numpy and brute-force oracles."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
-from gis_tools_spark.operators.dedup import (
-    dedup_exact,
-    minhash_lsh_pairs,
-    minhash_signatures,
-    ngram_jaccard_pairs,
-    simhash_near_dups,
-)
 from gis_tools_spark.operators.simsearch import brute_force_topk, ivf_topk, lsh_topk
-from gis_tools_spark.operators.textstats import fingerprint, lang_scores, quality_scores
-
-
-@pytest.fixture(scope="module")
-def docs_pd():
-    base = [
-        "the quick brown fox jumps over the lazy dog and runs away fast",
-        "le chat est sur la table et le chien est dans le jardin",
-        "der hund ist im garten und die katze ist auf dem tisch",
-        "completely unrelated text about spark dataframes and shuffles",
-    ]
-    rows = []
-    i = 0
-    for b in base:
-        for rep in range(3):
-            # rep 0: exact dup; rep 1: near dup (one word changed); rep 2: distinct tail
-            if rep == 0:
-                t = b
-            elif rep == 1:
-                t = b.replace(b.split()[-1], "variant")
-            else:
-                t = b + f" extra tail {i} with unique tokens {i*7}"
-            rows.append((i, t))
-            i += 1
-    # one exact duplicate of doc 0
-    rows.append((i, base[0]))
-    return pd.DataFrame(rows, columns=["doc_id", "text"])
-
-
-@pytest.fixture(scope="module")
-def docs(spark, docs_pd):
-    return spark.createDataFrame(docs_pd)
-
-
-def test_dedup_exact(docs, docs_pd):
-    kept = dedup_exact(docs).toPandas()
-    # exactly one row per distinct text, min doc_id kept
-    want = docs_pd.groupby("text")["doc_id"].min()
-    assert sorted(kept["doc_id"]) == sorted(want.values)
-
-
-def test_minhash_estimates_jaccard(docs, docs_pd):
-    def jacc(a, b, n=3):
-        sa = {" ".join(a.split()[i:i+n]) for i in range(len(a.split())-n+1)}
-        sb = {" ".join(b.split()[i:i+n]) for i in range(len(b.split())-n+1)}
-        return len(sa & sb) / len(sa | sb)
-
-    pairs = minhash_lsh_pairs(docs, num_hashes=64, bands=16, threshold=0.3).toPandas()
-    texts = dict(zip(docs_pd.doc_id, docs_pd.text))
-    # exact duplicate pair must be found with est ≈ 1
-    dup = pairs[(pairs.id_a == 0) & (pairs.id_b == 12)]
-    assert len(dup) == 1 and dup["jaccard_est"].iloc[0] == 1.0
-    # estimates within 0.35 of true jaccard for reported pairs
-    for _, r in pairs.iterrows():
-        true_j = jacc(texts[r.id_a], texts[r.id_b])
-        assert abs(r.jaccard_est - true_j) < 0.35, (r.id_a, r.id_b, r.jaccard_est, true_j)
-
-
-def test_simhash_finds_exact_and_near(docs):
-    pairs = simhash_near_dups(docs, max_hamming=8).toPandas()
-    got = set(map(tuple, pairs[["id_a", "id_b"]].values))
-    assert (0, 12) in got  # exact dup → hamming 0
-    assert pairs[(pairs.id_a == 0) & (pairs.id_b == 12)]["hamming"].iloc[0] == 0
-
-
-def test_ngram_jaccard_exact_values(docs, docs_pd):
-    pairs = ngram_jaccard_pairs(docs, n=3, threshold=0.2).toPandas()
-    texts = dict(zip(docs_pd.doc_id, docs_pd.text))
-
-    def jacc(a, b, n=3):
-        wa, wb = a.split(), b.split()
-        sa = {" ".join(wa[i:i+n]) for i in range(max(1, len(wa)-n+1))}
-        sb = {" ".join(wb[i:i+n]) for i in range(max(1, len(wb)-n+1))}
-        return len(sa & sb) / len(sa | sb)
-
-    assert len(pairs) > 0
-    for _, r in pairs.iterrows():
-        assert r.jaccard == pytest.approx(jacc(texts[r.id_a], texts[r.id_b]), abs=1e-9)
 
 
 @pytest.fixture(scope="module")
@@ -152,19 +68,6 @@ def test_ivf_full_probe_is_exact(emb):
     a = approx.sort_values(["vec_id", "rank"]).reset_index(drop=True)
     e = exact.sort_values(["vec_id", "rank"]).reset_index(drop=True)
     assert list(a["neighbor_id"]) == list(e["neighbor_id"])
-
-
-def test_lang_and_quality_and_fingerprint(docs, docs_pd):
-    ls = lang_scores(docs).toPandas()
-    assert ls[ls.doc_id == 0]["pred_lang"].iloc[0] == "en"
-    assert ls[ls.doc_id == 3]["pred_lang"].iloc[0] == "fr"
-    assert ls[ls.doc_id == 6]["pred_lang"].iloc[0] == "de"
-    q = quality_scores(docs).toPandas()
-    row = q[q.doc_id == 0].iloc[0]
-    assert row["n_tokens"] == len(docs_pd[docs_pd.doc_id == 0]["text"].iloc[0].split())
-    assert 0 <= row["punct_ratio"] <= 1 and 0 <= row["alpha_ratio"] <= 1
-    fp = fingerprint(docs).toPandas()
-    assert fp[fp.doc_id == 0]["fp_md5"].iloc[0] == fp[fp.doc_id == 12]["fp_md5"].iloc[0]
 
 
 def test_embedding_near_dups_vs_bruteforce(spark):
@@ -259,72 +162,6 @@ def test_image_near_dups_phash(spark):
     paired = {a for a, _ in got} | {b for _, b in got}
     assert sum(1 for i in range(0, 30, 3)
                if f"dup{i:03d}" in paired and f"src{i:03d}" in paired) >= 8
-
-
-def test_near_dup_clusters_keep_decision(docs, docs_pd):
-    """End-to-end dedup decision: clusters agree with a brute-force
-    union-find over the SAME LSH pair set, every doc appears exactly
-    once, cluster_id is the component minimum, and keep marks it."""
-    from gis_tools_spark.operators.dedup import near_dup_clusters
-
-    out = near_dup_clusters(docs, num_hashes=64, bands=16,
-                            threshold=0.3).toPandas()
-    assert sorted(out["doc_id"]) == sorted(docs_pd["doc_id"])
-
-    pairs = minhash_lsh_pairs(docs, num_hashes=64, bands=16,
-                              threshold=0.3).toPandas()
-    parent = {int(i): int(i) for i in docs_pd["doc_id"]}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for _, r in pairs.iterrows():
-        ra, rb = find(int(r.id_a)), find(int(r.id_b))
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {d: find(d) for d in parent}
-
-    got = dict(zip(out["doc_id"].astype(int), out["cluster_id"].astype(int)))
-    assert got == want
-    # keep = 1 exactly when the doc is its cluster's canonical min id
-    for _, r in out.iterrows():
-        assert int(r.keep) == int(int(r.doc_id) == int(r.cluster_id))
-    # exact duplicate of doc 0 (doc 12) must be dropped
-    assert got[12] == 0 and int(out[out.doc_id == 12]["keep"].iloc[0]) == 0
-
-
-def test_gopher_filter_rules_and_order(spark):
-    """Every rule branch fires with its own first-match reason; clean
-    docs accept; signals match a hand computation."""
-    from gis_tools_spark.operators.textstats import gopher_filter
-
-    rows = [
-        (0, " ".join(["the cat of house alpha beta gamma delta"] * 9)),
-        (1, "tiny doc only"),
-        (2, " ".join(["pneumonoultramicroscopic"] * 50)),
-        (3, " ".join(["alpha beta gamma delta #tag"] * 12)),
-        (4, "\n".join(["• item alpha beta"] * 20)),
-        (5, "\n".join(["one two three four five six seven eight nine soon..."] * 4
-                      + ["one two three four five six seven eight nine ten"] * 6)),
-        (6, " ".join(["12345 67890 24680 alpha"] * 15)),
-        (7, " ".join(["zebra quilt mango velvet"] * 15)),
-        (8, "\n".join(["the cat of house alpha beta gamma delta"] * 9)),
-        # word_count outranks bullet_lines (first-match order)
-        (9, "\n".join(["• item alpha beta"] * 3)),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = gopher_filter(df).orderBy("doc_id").toPandas()
-    want = ["ok", "word_count", "mean_word_len", "symbol_ratio",
-            "bullet_lines", "ellipsis_lines", "alpha_words", "stopwords",
-            "dup_lines", "word_count"]
-    assert list(out["reject_reason"]) == want
-    assert list(out["accept"]) == [1] + [0] * 9
-    r0 = out[out.doc_id == 0].iloc[0]
-    assert int(r0.wc) == 72 and int(r0.n_stop) == 2
-    assert int(r0.chsum) == sum(len(w) for w in rows[0][1].split())
 
 
 def test_hamming_dedup_clusters_keep(spark):
@@ -437,93 +274,3 @@ def test_semdedup_kmeans_production_path(emb):
     assert out["keep"].sum() <= 12
 
 
-def test_dedup_lines_boilerplate_removal(spark):
-    """Lines in ≥2 distinct docs are removed everywhere; unique lines
-    survive in order; empty docs are preserved with zero counts."""
-    from gis_tools_spark.operators.dedup import dedup_lines
-
-    rows = [(0, "HDR\nalpha beta\ngamma delta\nFOOT"),
-            (1, "HDR\nepsilon zeta\nFOOT"),
-            (2, "HDR\nunique line here\nFOOT"),
-            (3, ""),
-            (4, "only unique content")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = (dedup_lines(df, min_docs=2).orderBy("doc_id").toPandas()
-           .set_index("doc_id"))
-    assert out.loc[0, "clean_text"] == "alpha beta\ngamma delta"
-    assert out.loc[0, "n_lines"] == 4 and out.loc[0, "n_removed"] == 2
-    assert out.loc[3, "n_lines"] == 0 and out.loc[3, "clean_text"] == ""
-    assert out.loc[4, "clean_text"] == "only unique content"
-    # a line repeated WITHIN one doc only is not boilerplate
-    df2 = spark.createDataFrame([(9, "same\nsame\nother")],
-                                "doc_id long, text string")
-    o2 = dedup_lines(df2, min_docs=2).toPandas()
-    assert o2.n_removed.iloc[0] == 0
-
-
-def test_cross_dup_spans_canonical_keeps(spark):
-    """The copied region is reported only for the non-canonical doc,
-    with exact 1-based token bounds; disjoint docs report nothing."""
-    from gis_tools_spark.operators.dedup import cross_dup_spans
-
-    rows = [(5, "a b c d e f g h i j k l"),
-            (10, "x y z a b c d e f g h i j q r"),
-            (11, "p q r s t u v w")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = cross_dup_spans(df, k=4).toPandas()
-    assert len(out) == 1
-    r = out.iloc[0]
-    assert (int(r.doc_id), int(r.span_start), int(r.span_end)) == (10, 4, 13)
-    # symmetric copy in BOTH directions still keeps exactly one owner
-    df2 = spark.createDataFrame(
-        [(1, "m n o p q r s t"), (2, "m n o p q r s t")],
-        "doc_id long, text string")
-    o2 = cross_dup_spans(df2, k=4).toPandas()
-    assert list(o2.doc_id) == [2] and int(o2.span_start.iloc[0]) == 1
-
-
-def test_c4_filter_line_and_doc_rules(spark):
-    """Line stage: terminal punctuation, >=5 words, no javascript.
-    Doc stage: first-match reason order lorem > curly > bad > sentences."""
-    from gis_tools_spark.operators.textstats import c4_filter
-
-    rows = [
-        (0, "one two three four five.\nshort line.\nno terminal punct here"
-            "\nthis page uses javascript heavily today.\n"
-            "six seven eight nine ten!\neleven twelve one two three?"),
-        (1, "lorem ipsum dolor sit amet here.\n"
-            "alpha beta gamma delta epsilon.\n"
-            "zeta eta theta iota kappa.\nmu nu xi omicron pi."),
-        (2, "config { braces appear here today.\n"
-            "alpha beta gamma delta epsilon.\nzeta eta theta iota kappa.\n"
-            "mu nu xi omicron pi."),
-        (3, "contains badword in plain sight today.\n"
-            "alpha beta gamma delta epsilon.\nzeta eta theta iota kappa.\n"
-            "mu nu xi omicron pi."),
-        (4, "only one good sentence right here."),
-        (5, "alpha beta gamma delta epsilon.\nzeta eta theta iota kappa!\n"
-            "mu nu xi omicron pi?"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = (c4_filter(df).orderBy("doc_id").toPandas()
-           .set_index("doc_id"))
-    # doc 0: 6 lines; kept = line 1, 5, 6 (short/no-punct/js dropped)
-    assert out.loc[0, "n_lines"] == 6 and out.loc[0, "n_kept"] == 3
-    assert out.loc[0, "reject_reason"] == "ok" and out.loc[0, "accept"] == 1
-    assert out.loc[1, "reject_reason"] == "lorem_ipsum"
-    assert out.loc[2, "reject_reason"] == "curly_brace"
-    assert out.loc[3, "reject_reason"] == "bad_word"
-    assert out.loc[4, "reject_reason"] == "too_few_sentences"
-    assert out.loc[5, "reject_reason"] == "ok"
-    # doc 1 mixes lorem AND 3+ sentences: lorem wins (first match)
-    assert out.loc[1, "n_sent"] >= 3
-    # cleaned text keeps document order
-    assert out.loc[5, "clean_text"].startswith("alpha beta")
-
-
-def test_c4_filter_plan_is_python_free(spark):
-    from gis_tools_spark.operators.textstats import c4_filter
-
-    df = spark.createDataFrame([(0, "a.\nb.")], "doc_id long, text string")
-    plan = c4_filter(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan

@@ -64,17 +64,32 @@ def _zones():
     return pd.DataFrame(rows, columns=["gid", "minx", "miny", "maxx", "maxy"])
 
 
-def test_od_flows_matches_bruteforce(spark, tracks_pd):
+@pytest.mark.parametrize("path", ["fused", "fallback"])
+def test_od_flows_matches_bruteforce(spark, tracks_pd, path, monkeypatch,
+                                     caplog):
+    """auto's fused broadcast pass and its two-pip_join cell fallback
+    (forced by a zero row limit) against one brute-force oracle."""
+    import importlib
+
     from gis_tools_spark.geom import wkb as W
+
+    if path == "fallback":  # the package re-exports a function named sjoin
+        sjoin = importlib.import_module("gis_tools_spark.operators.sjoin")
+        monkeypatch.setattr(sjoin, "BROADCAST_MAX_ROWS", 0)
 
     z = _zones()
     zones = z.copy()
     zones["geometry_wkb"] = [bytearray(W.box(r.minx, r.miny, r.maxx, r.maxy))
                              for r in z.itertuples()]
     zdf = spark.createDataFrame(zones[["gid", "geometry_wkb"]])
-    out = od_flows(spark.createDataFrame(tracks_pd), zdf,
-                   key_cols=["dev"], gap_s=6 * 3600,
-                   order_tiebreak="eid").toPandas()
+    with caplog.at_level("DEBUG", logger="gis_tools_spark"):
+        out = od_flows(spark.createDataFrame(tracks_pd), zdf,
+                       key_cols=["dev"], gap_s=6 * 3600,
+                       order_tiebreak="eid").toPandas()
+    gate = [r.getMessage() for r in caplog.records
+            if r.getMessage().startswith("small_side")]
+    assert len(gate) == 1
+    assert gate[0].endswith("small=%s" % (path == "fused"))
 
     # brute-force oracle
     def zone_of(lo, la):

@@ -1,94 +1,8 @@
-"""Crawl front-end tests: WARC container (sources/warc.py) and HTML
-text extraction (operators/html.py), plus the composed pipeline into
-the existing dedup/quality ops."""
+"""WebDataset front end (sources/webdataset.py): tar shard reader,
+the samples DataFrame stage and the export sink."""
 
 import pandas as pd
 import pytest
-
-from gis_tools_spark.operators.html import extract_text, html_extract
-from gis_tools_spark.sources import warc as WC
-
-
-# --------------------------------------------------------------- html
-
-def test_extract_text_semantics():
-    doc = ("<html><head><title>My  Page</title><style>p{c}</style></head>"
-           "<body><h1>Hello &amp; welcome</h1><p>First <b>bold</b> para.</p>"
-           "<script>var x = '<p>not text</p>';</script>"
-           "<div>Second<br>line <a href='x'>link</a></div><!-- gone -->"
-           "</body></html>")
-    e = extract_text(doc)
-    assert e["text"] == "Hello & welcome\nFirst bold para.\nSecond\nline link"
-    assert e["title"] == "My Page"
-    assert e["n_links"] == 1 and e["n_words"] == 9
-
-
-def test_extract_text_never_throws_on_malformed():
-    cases = ["broken <unclosed <p>x</p> < 5 & &#65;",
-             "<script>never closed", "<![CDATA[raw]]>after", "",
-             "<a<a<a>>>", "<!DOCTYPE html><p>t</p>", "a < b > c"]
-    for c in cases:
-        e = extract_text(c)                # must not raise
-        assert isinstance(e["text"], str)
-    assert extract_text("<SCRIPT>x</SCRIPT>after")["text"] == "after"
-    assert extract_text("&#65;&amp;&lt;")["text"] == "A&<"
-
-
-# --------------------------------------------------------------- warc
-
-def _recs(n=4):
-    return [{"url": f"http://ex.com/{i}",
-             "html": f"<html><title>t{i}</title><p>body {i}</p></html>"}
-            for i in range(n)]
-
-
-@pytest.mark.parametrize("gz", [True, False])
-def test_warc_roundtrip(gz):
-    recs = _recs() + [{"url": "meta", "rec_type": "warcinfo",
-                       "payload": b"software: x\r\n"}]
-    buf = WC.write_warc(recs, gzip_members=gz)
-    got = list(WC.iter_records(buf))
-    assert len(got) == 5
-    assert got[4]["headers"]["warc-type"] == "warcinfo"
-    st, hh, body = WC.split_http(got[1]["payload"])
-    assert st == 200 and hh["content-type"] == "text/html"
-    assert b"body 1" in body
-
-
-def test_warc_concatenated_archives_and_errors():
-    buf = WC.write_warc(_recs(2)) + WC.write_warc(_recs(3))
-    assert len(list(WC.iter_records(buf))) == 5
-    with pytest.raises(WC.WarcError):
-        list(WC.iter_records(b"NOT A WARC AT ALL\r\n\r\n"))
-    # truncated payload
-    plain = WC.write_warc(_recs(1), gzip_members=False)
-    with pytest.raises(WC.WarcError):
-        list(WC.iter_records(plain[:len(plain) - 30]))
-
-
-def test_warc_to_training_text_pipeline(spark):
-    """warc.gz blobs -> records -> html text -> quality/repetition ops:
-    the whole crawl front end as DataFrame stages."""
-    from gis_tools_spark.operators.textstats import repetition_stats
-
-    blobs = pd.DataFrame({
-        "doc_id": [1, 2],
-        "bytes": [WC.write_warc(_recs(3)),
-                  b"corrupt \x1f\x8b not gzip really"]})
-    recs = WC.warc_records(spark.createDataFrame(blobs)).toPandas()
-    assert (~recs[recs.doc_id == 2]["ok"]).all()
-    good = recs[recs.ok]
-    assert len(good) == 3 and (good["http_status"] == 200).all()
-    pages = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(3),
-                      "html": [bytes(b).decode() for b in good["payload"]]}))
-    ex = html_extract(pages).toPandas()
-    assert ex["ok"].all() and (ex["n_words"] == 2).all()
-    assert ex["title"].tolist() == ["t0", "t1", "t2"]
-    rep = repetition_stats(
-        spark.createDataFrame(pd.DataFrame(
-            {"doc_id": range(3), "text": ex["text"]}))).toPandas()
-    assert len(rep) == 3
 
 
 # --------------------------------------------------------------- webdataset
