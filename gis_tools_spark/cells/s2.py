@@ -365,9 +365,6 @@ def with_s2_cell(df, lon: str = "lon", lat: str = "lat",
     return cur
 
 
-_TMP_TOKENS = ("face", "xs", "ys", "zs", "u", "v", "x", "y", "d")
-
-
 def _alias_tmp(expr: str) -> str:
     """Rewrite bare layer-variable tokens to their __s2_ column names
     (token-boundary regex; SQL keywords/functions are untouched)."""

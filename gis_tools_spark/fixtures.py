@@ -15,7 +15,6 @@ import os
 import numpy as np
 import pandas as pd
 
-from .cells import RES_MAX, RES_MIN, adaptive_res, bbox_to_cells, latlng_to_cell
 from .geom import wkb
 from .geom.kernels import convex_hull, ring_area_signed
 from .raster import codec
@@ -431,18 +430,3 @@ def write_parquet(out_dir: str, n_images: int = 2000, n_zones: int = 64,
         df.to_parquet(p, index=False)
         paths[name] = p
     return paths
-
-
-def zone_cells_lookup(zones: pd.DataFrame, res_min: int = RES_MIN,
-                      res_max: int = RES_MAX) -> pd.DataFrame:
-    """Exploded (gid, cell) cover table for oracle-side joins."""
-    from .geom.kernels import bounds
-
-    rows = []
-    for gid, zwkb in zip(zones["gid"], zones["geometry_wkb"]):
-        g = wkb.decode(zwkb)
-        mnx, mny, mxx, mxy = bounds(g)
-        res = adaptive_res(mnx, mny, mxx, mxy, res_min, res_max)
-        for c in bbox_to_cells(mnx, mny, mxx, mxy, res).tolist():
-            rows.append((gid, c))
-    return pd.DataFrame(rows, columns=["gid", "cell"])

@@ -671,46 +671,6 @@ def clip_rect(g: dict, minx, miny, maxx, maxy) -> dict | None:
     return clip_polygon_convex(g, rect)
 
 
-def clip_line_rect(coords: np.ndarray, minx, miny, maxx, maxy) -> list[np.ndarray]:
-    """Cohen–Sutherland-style: return line pieces inside the rect."""
-    pieces = []
-    cur = []
-    for i in range(len(coords) - 1):
-        seg = _clip_seg_rect(coords[i, :2], coords[i + 1, :2], minx, miny, maxx, maxy)
-        if seg is None:
-            if len(cur) >= 2:
-                pieces.append(np.asarray(cur))
-            cur = []
-            continue
-        p, q = seg
-        if cur and np.allclose(cur[-1], p):
-            cur.append(q)
-        else:
-            if len(cur) >= 2:
-                pieces.append(np.asarray(cur))
-            cur = [p, q]
-    if len(cur) >= 2:
-        pieces.append(np.asarray(cur))
-    return pieces
-
-
-def _clip_seg_rect(p, q, minx, miny, maxx, maxy):
-    t0, t1 = 0.0, 1.0
-    d = q - p
-    for lo, hi, pc, dc in ((minx, maxx, p[0], d[0]), (miny, maxy, p[1], d[1])):
-        if abs(dc) < EPS:
-            if pc < lo or pc > hi:
-                return None
-            continue
-        ta, tb = (lo - pc) / dc, (hi - pc) / dc
-        if ta > tb:
-            ta, tb = tb, ta
-        t0, t1 = max(t0, ta), min(t1, tb)
-        if t0 > t1:
-            return None
-    return p + t0 * d, p + t1 * d
-
-
 # ---------------------------------------------------------------- distance
 
 def point_to_geom_distance(g: dict, xs: np.ndarray, ys: np.ndarray) -> np.ndarray:

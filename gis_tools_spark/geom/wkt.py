@@ -16,10 +16,6 @@ import re
 
 import numpy as np
 
-_TYPES = ("GEOMETRYCOLLECTION", "MULTILINESTRING", "MULTIPOLYGON",
-          "MULTIPOINT", "LINESTRING", "POLYGON", "POINT")
-
-
 def _fmt_num(v: float) -> str:
     f = float(v)
     if not np.isfinite(f):

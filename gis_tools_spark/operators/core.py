@@ -26,7 +26,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import cells as C
 from ..geom import kernels as K, wkb
@@ -130,15 +130,6 @@ def cpu_grouped(df: DataFrame, *keys: str):
     return df.repartition(n, *[F.col(k) for k in keys]).groupBy(*keys)
 
 
-def point_cells_multires(lon: Column, lat: Column,
-                         res_min: int = C.RES_MIN, res_max: int = C.RES_MAX) -> Column:
-    """Array of the point's ancestor cell at each res in [res_min,res_max].
-
-    Pure column arithmetic — stays inside whole-stage codegen.
-    """
-    return F.array(*[C.cell_column(lon, lat, r) for r in range(res_min, res_max + 1)])
-
-
 def cover_res_for_bounds(mnx: float, mny: float, mxx: float, mxy: float,
                          res_min: int, res_max: int, max_cells: int) -> int:
     """Cover res with a HARD fan-out cap: finest res in [res_min,
@@ -181,26 +172,6 @@ def cover_cells_udf(res_min: int = C.RES_MIN, res_max: int = C.RES_MAX,
         return pd.Series(out)
 
     return _cover
-
-
-def with_bbox(df: DataFrame, wkb_col: str = "geometry_wkb") -> DataFrame:
-    """Denormalized bbox columns (minx,miny,maxx,maxy) from WKB."""
-
-    @F.pandas_udf(T.StructType([
-        T.StructField("minx", T.DoubleType()),
-        T.StructField("miny", T.DoubleType()),
-        T.StructField("maxx", T.DoubleType()),
-        T.StructField("maxy", T.DoubleType()),
-    ]))
-    def _bbox(s: pd.Series) -> pd.DataFrame:
-        rows = [K.bounds(wkb.decode(b)) if b is not None else (None,) * 4 for b in s]
-        return pd.DataFrame(rows, columns=["minx", "miny", "maxx", "maxy"])
-
-    tmp = "__bb"
-    out = df.withColumn(tmp, _bbox(F.col(wkb_col)))
-    for c in ("minx", "miny", "maxx", "maxy"):
-        out = out.withColumn(c, F.col(f"{tmp}.{c}"))
-    return out.drop(tmp)
 
 
 def explode_cover(df: DataFrame, wkb_col: str, out_col: str = CELL_COL,
@@ -258,8 +229,8 @@ def salt_dim_side(df: DataFrame, cell_col: str, hot: DataFrame) -> DataFrame:
     )
 
 
-def refine_covers(pair_df: DataFrame, *, poly_wkb: str, poly_group: str,
-                  lon: str, lat: str, predicate: str = "covers") -> DataFrame:
+def refine_covers(pair_df: DataFrame, *, poly_wkb: str, lon: str, lat: str,
+                  predicate: str = "covers") -> DataFrame:
     """Exact PIP refine over candidate pairs.
 
     Scalar pandas UDF boolean filter: ONLY (wkb, lon, lat) cross the
@@ -270,8 +241,7 @@ def refine_covers(pair_df: DataFrame, *, poly_wkb: str, poly_group: str,
     WKB value so each polygon decodes once and tests its points
     vectorized (K.covers_xy — the reference's exact `intersects`
     refine). predicate: 'covers' (boundary in) or 'contains' (strict
-    interior). ``poly_group`` is retained for API compatibility
-    (grouping is content-keyed on the WKB itself)."""
+    interior)."""
     use_covers = predicate == "covers"
 
     @F.pandas_udf(T.BooleanType())

@@ -272,9 +272,3 @@ def _score(pairs: DataFrame, *, lon, lat, feat_wkb) -> DataFrame:
     return (pairs.withColumn("__sc", _run(F.col(feat_wkb), F.col(lon), F.col(lat)))
             .select("*", "__sc.nearest_dist", "__sc.__order")
             .drop("__sc"))
-
-
-def nearest_feature_sql_order(df: DataFrame, point_id: str, feat_id: str) -> DataFrame:
-    """Window pick used by tests: row_number over (__order, feat_id)."""
-    w = Window.partitionBy(point_id).orderBy(F.col("__order"), F.col(feat_id))
-    return df.withColumn("__rn", F.row_number().over(w)).where("__rn=1").drop("__rn", "__order")

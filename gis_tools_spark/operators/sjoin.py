@@ -101,7 +101,7 @@ def pip_join(points: DataFrame, polygons: DataFrame, *,
                                  keep_poly_wkb=keep_poly_wkb)
     else:
         matched = _pip_cell_join(points, polygons, lon=lon, lat=lat,
-                                 poly_wkb=poly_wkb, poly_id=poly_id,
+                                 poly_wkb=poly_wkb,
                                  predicate=predicate, res_min=res_min,
                                  res_max=res_max, max_cells=max_cells,
                                  salt_threshold=salt_threshold,
@@ -129,7 +129,7 @@ def _join_back(rid_side: DataFrame, matched: DataFrame, how: str,
 
 
 def _pip_cell_join(points: DataFrame, polygons: DataFrame, *, lon, lat,
-                   poly_wkb, poly_id, predicate, res_min, res_max,
+                   poly_wkb, predicate, res_min, res_max,
                    max_cells, salt_threshold, keep_poly_wkb,
                    salt_sample: float = 1.0,
                    salt_hist: DataFrame | None = None,
@@ -200,8 +200,8 @@ def _pip_cell_join(points: DataFrame, polygons: DataFrame, *, lon, lat,
         # the executors before the byte-gate sees it
         cov = cov.hint("shuffle_merge")
     cand = pts.join(cov, on=join_on, how="inner").drop(*join_on)
-    refined = refine_covers(cand, poly_wkb=poly_wkb, poly_group=poly_id,
-                            lon=lon, lat=lat, predicate=predicate)
+    refined = refine_covers(cand, poly_wkb=poly_wkb, lon=lon, lat=lat,
+                            predicate=predicate)
     return refined if keep_poly_wkb else refined.drop(poly_wkb)
 
 

@@ -20,10 +20,6 @@ from .. import cells as C
 from ..geom import kernels as K, wkb
 
 
-def _emit_multi(pieces: list[dict]) -> list[bytes]:
-    return [wkb.encode(p) for p in pieces]
-
-
 # ------------------------------------------------------------------ fishnet
 
 def fishnet(df: DataFrame, *, wkb_col: str = "geometry_wkb",

@@ -157,7 +157,7 @@ def geofence_events(points: DataFrame, zones: DataFrame, *,
                     ts_col: str = "ts", lon: str = "lon", lat: str = "lat",
                     zone_id: str = "gid",
                     order_tiebreak: str | None = None,
-                    strategy: str = "broadcast") -> DataFrame:
+                    strategy: str = "auto") -> DataFrame:
     """Geofence transition detector: one row per ping at which a key's
     zone membership CHANGES, the op behind 'alert when the device
     enters/leaves the fence'.
@@ -170,11 +170,20 @@ def geofence_events(points: DataFrame, zones: DataFrame, *,
     A stream that starts inside a fence emits an 'enter' at its first
     ping (from_zone NULL); pings that stay outside emit nothing.
 
-    Plan: one broadcast PIP join (left semantics restored by grouping
-    hits per ping id and left-joining back), one lag window on the key —
-    both codegen; the output is only the transition rows, orders of
-    magnitude smaller than the ping stream."""
+    Plan: ``auto`` tags every ping with pip_tag's join-free broadcast
+    pass when the zones pass pip_join's broadcast gate, else runs a
+    cell-join pip_join (left semantics restored by grouping hits per
+    ping id and left-joining back); then one lag window on the key. The
+    output is only the transition rows, orders of magnitude smaller
+    than the ping stream."""
     keys = list(key_cols)
+    if strategy == "auto":
+        from .core import small_side
+        from .sjoin import BROADCAST_MAX_BYTES, BROADCAST_MAX_ROWS
+        strategy = ("broadcast" if small_side(
+            zones, max_rows=BROADCAST_MAX_ROWS,
+            max_bytes=BROADCAST_MAX_BYTES, bytes_col="geometry_wkb")
+            else "cell")
     if strategy == "broadcast":
         # round-6 (guide §2.4): pip_tag IS this op's tagging step —
         # MIN covering zone id, NULL outside, every row kept, and

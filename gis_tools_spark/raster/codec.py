@@ -313,12 +313,13 @@ def decode_many(bufs, ws, hs, fmts) -> list:
     array for rows that fail (callers decide row-level error policy —
     the Spark kernels mark, never raise).
 
-    JPEG rows are decoded in vectorized lockstep across the batch
-    (raster/jpeg.py decode_batch) — entropy decode is the dominant
-    kernel of a mostly-JPEG table, and batching across independent
-    streams is how a python decoder escapes per-symbol interpreter cost.
-    Other formats decode per-row (their decoders are already
-    single-pass numpy over the whole buffer)."""
+    JPEG rows go through raster/jpeg.py decode_batch: baseline
+    single-scan streams decode in vectorized lockstep across the batch
+    (entropy decode is the dominant kernel of a mostly-JPEG table, and
+    batching across independent streams is how a python decoder escapes
+    per-symbol interpreter cost); progressive and other JPEG streams
+    decode scalar per row. Other formats decode per-row (their decoders
+    are already single-pass numpy over the whole buffer)."""
     out: list = [None] * len(bufs)
     jidx = [i for i, f in enumerate(fmts) if f in ("jpeg", "jpg")]
     if jidx:

@@ -37,8 +37,6 @@ raster/kernels.py.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
 # ------------------------------------------------------------ tables
@@ -1495,9 +1493,10 @@ def _decode_impl(buf: bytes, want_coefs: bool = False):
 # (~tens of µs) amortizes over the batch width; measured gain vs the
 # scalar loop is recorded in PERF.md. Eligible: baseline sequential
 # huffman, single SOS covering every component, any sampling factors,
-# with or without restart intervals. Progressive / multi-scan fall back
-# to the scalar decoder per stream; a stream that errors mid-lockstep is
-# re-decoded scalar so callers see the exact scalar exception.
+# with or without restart intervals. Progressive (SOF2), arithmetic-
+# coded and multi-scan streams decode through the scalar decoder per
+# stream; a stream that errors mid-lockstep is re-decoded scalar so
+# callers see the exact scalar exception.
 
 _MSK64 = np.array([(1 << s) - 1 for s in range(17)], dtype=np.int64)
 _MSKU64 = _MSK64.astype(np.uint64)
@@ -1518,11 +1517,6 @@ _LOCKSTEP_TAIL = 16
 
 class _Ineligible(Exception):
     """Stream is valid JPEG but outside the lockstep fast path."""
-
-
-class _Progressive(_Ineligible):
-    """Stream is a progressive (SOF2) JPEG — routable to the multi-scan
-    lockstep engine instead of the per-stream scalar fallback."""
 
 
 def _parse_one(buf: bytes) -> dict:
@@ -1587,7 +1581,7 @@ def _parse_one(buf: bytes) -> dict:
                 c["bwf"] = mcux * c["hs"]
                 c["bhf"] = mcuy * c["vs"]
         elif marker == 0xC2:
-            raise _Progressive("progressive")
+            raise _Ineligible("progressive")
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
                         0xCD, 0xCE, 0xCF):
             raise _Ineligible("exotic SOF")
@@ -1939,1050 +1933,53 @@ def _lockstep_decode(states: list[dict]):
     return results, failed
 
 
-# ------------------------------------- progressive lockstep (multi-scan)
-#
-# A progressive stream is a SEQUENCE of scans (DC first/refine, AC
-# spectral-selection first, AC successive-approximation refine), each an
-# independent entropy stream over one component band. Scans vectorize
-# across streams the same way the baseline engine does — round r runs
-# every stream's r-th scan, grouped by scan KIND, each kind with its own
-# lockstep kernel. AC refine, the dominant scan type, advances one
-# COEFFICIENT POSITION per iteration (its correction bits are
-# data-dependent per position); EOB runs skip empty blocks analytically
-# via a per-scan occupancy CSR. Any stream that trips a kernel guard is
-# re-decoded scalar, so errors and results are identical to decode().
-
-def _parse_prog(buf: bytes) -> dict:
-    """Marker walk for an SOF2 stream collecting frame geometry plus
-    EVERY scan's parameters, huffman-table snapshot and destuffed
-    entropy segments. Raises _Ineligible for shapes outside the engine
-    (the scalar decoder then defines the behavior) and ValueError for
-    non-JPEG input."""
-    buf = bytes(buf)
-    if buf[:2] != b"\xFF\xD8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos, n = 2, len(buf)
-    qts: dict[int, np.ndarray] = {}
-    dc_raw: dict[int, tuple] = {}
-    ac_raw: dict[int, tuple] = {}
-    comps: list[dict] = []
-    h = w = mcux = mcuy = 0
-    restart_interval = 0
-    progressive = False
-    jobs: list[dict] = []
-    while pos < n - 1:
-        if buf[pos] != 0xFF:
-            pos += 1
-            continue
-        marker = buf[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        ln = int.from_bytes(buf[pos:pos + 2], "big")
-        payload = buf[pos + 2:pos + ln]
-        if marker == 0xDB:
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 0xF
-                p += 1
-                if pq == 0:
-                    q = np.frombuffer(payload[p:p + 64],
-                                      dtype=np.uint8).astype(np.int32)
-                    p += 64
-                else:
-                    q = np.frombuffer(payload[p:p + 128],
-                                      dtype=">u2").astype(np.int32)
-                    p += 128
-                qts[tq] = q[_UNZZ].reshape(8, 8)
-        elif marker == 0xC2:
-            progressive = True
-            h = int.from_bytes(payload[1:3], "big")
-            w = int.from_bytes(payload[3:5], "big")
-            nc = payload[5]
-            comps = []
-            for ci in range(nc):
-                cid, samp, tq = payload[6 + 3 * ci:9 + 3 * ci]
-                comps.append({"id": cid, "hs": samp >> 4, "vs": samp & 0xF,
-                              "tq": tq})
-            hmax = max(c["hs"] for c in comps)
-            vmax = max(c["vs"] for c in comps)
-            mcux = -(-w // (8 * hmax))
-            mcuy = -(-h // (8 * vmax))
-            for c in comps:
-                c["bwf"] = mcux * c["hs"]
-                c["bhf"] = mcuy * c["vs"]
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise _Ineligible("not SOF2")
-        elif marker == 0xC4:
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 0xF
-                bits = list(payload[p + 1:p + 17])
-                nv = sum(bits)
-                vals = list(payload[p + 17:p + 17 + nv])
-                (dc_raw if tc == 0 else ac_raw)[th] = (bits, vals)
-                p += 17 + nv
-        elif marker == 0xDD:
-            restart_interval = int.from_bytes(payload[:2], "big")
-        elif marker == 0xDA:
-            if not progressive or not comps or h <= 0 or w <= 0:
-                raise _Ineligible("SOS before SOF2")
-            ns = payload[0]
-            scan_cis = []
-            for si in range(ns):
-                cid, tabs = payload[1 + 2 * si], payload[2 + 2 * si]
-                ci = next((i for i, c in enumerate(comps)
-                           if c["id"] == cid), None)
-                if ci is None:
-                    raise _Ineligible("scan names unknown component")
-                comps[ci]["td"] = tabs >> 4
-                comps[ci]["ta"] = tabs & 0xF
-                scan_cis.append(ci)
-            ss = payload[1 + 2 * ns]
-            se = payload[2 + 2 * ns]
-            ahal = payload[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0xF
-            segs, consumed = _entropy_segments(buf[pos + ln:])
-            if ss == 0:
-                if se != 0:
-                    raise _Ineligible("DC scan with Se != 0")
-                kind = "dcf" if ah == 0 else "dcr"
-                job = {"kind": kind, "scan_cis": list(scan_cis), "al": al,
-                       "ri": restart_interval, "segs": segs}
-                if kind == "dcf":
-                    try:
-                        job["dc_raw"] = {ci: dc_raw[comps[ci]["td"]]
-                                         for ci in scan_cis}
-                    except KeyError:
-                        raise _Ineligible("missing DC huffman table")
-            else:
-                if ns != 1 or not (0 < ss <= se <= 63):
-                    raise _Ineligible("bad AC scan shape")
-                kind = "acf" if ah == 0 else "acr"
-                if comps[scan_cis[0]]["ta"] not in ac_raw:
-                    raise _Ineligible("missing AC huffman table")
-                job = {"kind": kind, "ci": scan_cis[0], "ss": ss, "se": se,
-                       "al": al, "ri": restart_interval, "segs": segs,
-                       "ac_raw": ac_raw[comps[scan_cis[0]]["ta"]]}
-            jobs.append(job)
-            pos += ln + consumed
-            continue
-        pos += ln
-    if not jobs:
-        raise _Ineligible("no scan")
-    for c in comps:
-        if c["tq"] not in qts:
-            raise _Ineligible("missing quant table")
-    return {"comps": comps, "qts": qts, "jobs": jobs, "h": h, "w": w,
-            "mcux": mcux, "mcuy": mcuy}
-
-
-def _flatten_job_words(jobs):
-    """Concatenate every job's destuffed segment words: returns
-    (W, segwb, segbits, nseg) with (G, maxseg) geometry — the shared
-    bit-IO substrate of every lockstep kernel."""
-    G = len(jobs)
-    maxseg = max(len(j["segs"]) for j in jobs)
-    segwb = np.zeros((G, maxseg), dtype=np.int64)
-    segbits = np.zeros((G, maxseg), dtype=np.int64)
-    nseg = np.zeros(G, dtype=np.int64)
-    chunks = []
-    wtot = 0
-    for i, j in enumerate(jobs):
-        nseg[i] = len(j["segs"])
-        for q, seg in enumerate(j["segs"]):
-            wrds, nbits = _seg_words_np(seg)
-            segwb[i, q] = wtot
-            segbits[i, q] = nbits
-            chunks.append(wrds)
-            wtot += len(wrds)
-    W = np.concatenate(chunks) if chunks else np.zeros(0, dtype=np.uint64)
-    return W, segwb, segbits, nseg
-
-
-def _job_grid(job, st):
-    """Block-walk geometry for one scan: (pat, mcux_, nmcu) where pat is
-    [(ci, c1, c2, c3)] and block base = (my*c1 + mx*c3 + c2)*64 — the
-    same parameterization _prep_stream uses."""
-    comps = st["comps"]
-    cis = job["scan_cis"] if "scan_cis" in job else [job["ci"]]
-    if len(cis) > 1:
-        pat = []
-        for ci in cis:
-            c = comps[ci]
-            for by in range(c["vs"]):
-                for bx in range(c["hs"]):
-                    pat.append((ci, c["vs"] * c["bwf"],
-                                by * c["bwf"] + bx, c["hs"]))
-        return pat, st["mcux"], st["mcux"] * st["mcuy"]
-    ci = cis[0]
-    c = comps[ci]
-    bh, bw = _ni_dims(c, comps, st["h"], st["w"])
-    return [(ci, c["bwf"], 0, 1)], bw, bh * bw
-
-
-def _k_dcf(jobs, sts, allcoef):
-    """Lockstep DC-first scans: one DC diff symbol per stream per
-    iteration, per-component predictors, restart-segment resets.
-    Mirrors _scan_dc_first; returns the set of failed local indices."""
-    G = len(jobs)
-    W, segwb, segbits, nsegA = _flatten_job_words(jobs)
-    pc1 = np.zeros((G, _MAXPAT), dtype=np.int64)
-    pc2 = np.zeros((G, _MAXPAT), dtype=np.int64)
-    pc3 = np.zeros((G, _MAXPAT), dtype=np.int64)
-    prow = np.zeros((G, _MAXPAT), dtype=np.int64)
-    pcb = np.zeros((G, _MAXPAT), dtype=np.int64)
-    ppi = np.zeros((G, _MAXPAT), dtype=np.int64)
-    patlen = np.zeros(G, dtype=np.int64)
-    mcuxa = np.ones(G, dtype=np.int64)
-    nmcua = np.zeros(G, dtype=np.int64)
-    perseg = np.ones(G, dtype=np.int64)
-    alq = np.zeros(G, dtype=np.int64)
-    failed: set[int] = set()
-
-    rows: dict[int, int] = {}
-    row_arrs: list[np.ndarray] = []
-
-    def _row(raw) -> int:
-        arr = _dec_lut_np(*raw)
-        rid = rows.get(id(arr))
-        if rid is None:
-            rid = len(row_arrs)
-            rows[id(arr)] = rid
-            row_arrs.append(arr)
-        return rid
-
-    for i, (job, st) in enumerate(zip(jobs, sts)):
-        pat, mcux_, nmcu = _job_grid(job, st)
-        if len(pat) > _MAXPAT:
-            failed.add(i)
-            nmcu = 0
-        for pj, (ci, c1, c2, c3) in enumerate(pat[:_MAXPAT]):
-            pc1[i, pj] = c1
-            pc2[i, pj] = c2
-            pc3[i, pj] = c3
-            prow[i, pj] = _row(job["dc_raw"][ci]) << 16
-            pcb[i, pj] = st["cbases"][ci]
-            ppi[i, pj] = i * _PREDC + ci
-        patlen[i] = len(pat)
-        mcuxa[i] = mcux_
-        nmcua[i] = nmcu
-        perseg[i] = job["ri"] if job["ri"] else max(nmcu, 1)
-        alq[i] = job["al"]
-    lutflat = np.concatenate(row_arrs) if row_arrs else \
-        np.zeros(0, dtype=np.int64)
-    predflat = np.zeros(G * _PREDC, dtype=np.int64)
-    segwb_f, segbits_f = segwb.ravel(), segbits.ravel()
-    pc1f, pc2f, pc3f = pc1.ravel(), pc2.ravel(), pc3.ravel()
-    prowf, pcbf, ppif = prow.ravel(), pcb.ravel(), ppi.ravel()
-    maxseg = segwb.shape[1]
-
-    sid = np.flatnonzero(nmcua > 0)
-    p = np.zeros(len(sid), dtype=np.uint64)
-    wb = segwb[sid, 0]
-    plim = (segbits[sid, 0] + 16).astype(np.uint64)
-    segidx = np.zeros(len(sid), dtype=np.int64)
-    in_seg = np.ones(len(sid), dtype=np.int64)
-    pi = np.zeros(len(sid), dtype=np.int64)
-    m = np.zeros(len(sid), dtype=np.int64)
-    fi = sid * _MAXPAT
-    curbase = pcbf[fi] + pc2f[fi] * 64
-    currow = prowf[fi]
-    pidx = ppif[fi]
-    u48, u64c, u7, u3 = (np.uint64(48), np.uint64(64), np.uint64(7),
-                         np.uint64(3))
-    uffff = np.uint64(0xFFFF)
-    straggler_min = min(_LOCKSTEP_TAIL, len(sid) // 2)
-    while len(sid):
-        # bail only when a narrow tail still has LOTS of work: failing
-        # a stream here compounds across scans (whole-stream scalar
-        # re-decode), so short tails are cheaper to just finish.
-        if len(sid) < straggler_min and (nmcua[sid] - m).max() > 256:
-            for i in sid:
-                failed.add(int(i))
-            break
-        off = p & u7
-        word = W[(wb + (p >> u3).astype(np.int64))]
-        peek = ((word >> (u48 - off)) & uffff).astype(np.int64)
-        e = lutflat[currow + peek]
-        ln = e >> 8
-        s = e & 255
-        lns = ln + s
-        v = ((word >> (u64c - off - lns.astype(np.uint64)))
-             & _MSKU64[s]).astype(np.int64)
-        diff = np.where(v >= _HALF64[s], v, v - _MSK64[s])
-        diff[s == 0] = 0
-        p = p + lns.astype(np.uint64)
-        bad = (e == 0) | (p > plim)
-        alive = ~bad
-        gi = np.flatnonzero(alive)
-        if gi.size:
-            ps = pidx[gi]
-            npred = predflat[ps] + diff[gi]
-            predflat[ps] = npred
-            allcoef[curbase[gi]] = npred << alq[sid[gi]]
-            # advance pattern / MCU / segment
-            pin = pi[gi] + 1
-            wrap = pin >= patlen[sid[gi]]
-            pin[wrap] = 0
-            pi[gi] = pin
-            wi = gi[wrap]
-            if wi.size:
-                mm = m[wi] + 1
-                m[wi] = mm
-                fin = mm >= nmcua[sid[wi]]
-                if fin.any():
-                    alive[wi[fin]] = False
-                run = wi[~fin]
-                if run.size:
-                    sw = in_seg[run] >= perseg[sid[run]]
-                    in_seg[run] += 1
-                    if sw.any():
-                        sv = run[sw]
-                        sgi = segidx[sv] + 1
-                        ok = sgi < nsegA[sid[sv]]
-                        if not ok.all():
-                            bsv = sv[~ok]
-                            bad[bsv] = True
-                            alive[bsv] = False
-                            sv, sgi = sv[ok], sgi[ok]
-                        if sv.size:
-                            segidx[sv] = sgi
-                            fs = sid[sv] * maxseg + sgi
-                            wb[sv] = segwb_f[fs]
-                            plim[sv] = (segbits_f[fs] + 16) \
-                                .astype(np.uint64)
-                            p[sv] = 0
-                            in_seg[sv] = 1
-                            pr = (sid[sv][:, None] * _PREDC
-                                  + np.arange(_PREDC)).ravel()
-                            predflat[pr] = 0
-            ba = gi[alive[gi]]
-            if ba.size:
-                f2 = sid[ba] * _MAXPAT + pi[ba]
-                myv = m[ba] // mcuxa[sid[ba]]
-                mxv = m[ba] - myv * mcuxa[sid[ba]]
-                curbase[ba] = pcbf[f2] + (myv * pc1f[f2] + mxv * pc3f[f2]
-                                          + pc2f[f2]) * 64
-                currow[ba] = prowf[f2]
-                pidx[ba] = ppif[f2]
-        if bad.any():
-            for i in sid[bad]:
-                failed.add(int(i))
-        if not alive.all():
-            keep = alive
-            sid, p, wb, plim = sid[keep], p[keep], wb[keep], plim[keep]
-            segidx, in_seg = segidx[keep], in_seg[keep]
-            pi, m = pi[keep], m[keep]
-            curbase, currow, pidx = curbase[keep], currow[keep], pidx[keep]
-    return failed
-
-
-def _k_dcr(jobs, sts, allcoef):
-    """DC-refine scans: exactly ONE raw bit per block — no huffman, so
-    each (stream, segment) vectorizes directly (no lockstep needed).
-    Mirrors _scan_dc_refine."""
-    failed: set[int] = set()
-    for i, (job, st) in enumerate(zip(jobs, sts)):
-        try:
-            pat, mcux_, nmcu = _job_grid(job, st)
-            npat = len(pat)
-            al = job["al"]
-            per_seg = job["ri"] if job["ri"] else nmcu
-            # block bases in scan order
-            mv = np.arange(nmcu, dtype=np.int64)
-            myv, mxv = mv // mcux_, mv % mcux_
-            bases = np.empty(nmcu * npat, dtype=np.int64)
-            for pj, (ci, c1, c2, c3) in enumerate(pat):
-                bases[pj::npat] = (st["cbases"][ci]
-                                   + (myv * c1 + mxv * c3 + c2) * 64)
-            done = 0
-            for sgi in range(-(-nmcu // per_seg)):
-                take = min(per_seg, nmcu - done)
-                nb = take * npat
-                seg = job["segs"][sgi] if sgi < len(job["segs"]) else None
-                if seg is None or len(seg) * 8 < nb:
-                    raise ValueError("entropy data exhausted")
-                wrds, _ = _seg_words_np(seg)
-                pos = np.arange(nb, dtype=np.int64)
-                bits = ((wrds[pos >> 3] >> (np.uint64(63)
-                                            - (pos & 7).astype(np.uint64)))
-                        & np.uint64(1)).astype(bool)
-                tgt = bases[done * npat:(done + take) * npat][bits]
-                allcoef[tgt] |= np.int64(1 << al)
-                done += take
-        except Exception:  # noqa: BLE001 — per-stream scalar fallback
-            failed.add(i)
-    return failed
-
-
-def _k_acf(jobs, sts, allcoef):
-    """Lockstep AC-first scans (spectral selection, Ah=0): one huffman
-    symbol per stream per iteration; EOB runs skip blocks analytically.
-    Mirrors _scan_ac_first."""
-    G = len(jobs)
-    W, segwb, segbits, nsegA = _flatten_job_words(jobs)
-    failed: set[int] = set()
-    rows: dict[int, int] = {}
-    row_arrs: list[np.ndarray] = []
-    lrow = np.zeros(G, dtype=np.int64)
-    cb = np.zeros(G, dtype=np.int64)
-    bwfa = np.zeros(G, dtype=np.int64)
-    bwa = np.ones(G, dtype=np.int64)
-    nblk = np.zeros(G, dtype=np.int64)
-    perseg = np.ones(G, dtype=np.int64)
-    ssa = np.zeros(G, dtype=np.int64)
-    sea = np.zeros(G, dtype=np.int64)
-    ala = np.zeros(G, dtype=np.int64)
-    for i, (job, st) in enumerate(zip(jobs, sts)):
-        arr = _dec_lut_np(*job["ac_raw"])
-        rid = rows.get(id(arr))
-        if rid is None:
-            rid = len(row_arrs)
-            rows[id(arr)] = rid
-            row_arrs.append(arr)
-        lrow[i] = rid << 16
-        c = st["comps"][job["ci"]]
-        bh, bw = _ni_dims(c, st["comps"], st["h"], st["w"])
-        cb[i] = st["cbases"][job["ci"]]
-        bwfa[i] = c["bwf"]
-        bwa[i] = bw
-        nblk[i] = bh * bw
-        perseg[i] = job["ri"] if job["ri"] else max(bh * bw, 1)
-        ssa[i], sea[i], ala[i] = job["ss"], job["se"], job["al"]
-    lutflat = np.concatenate(row_arrs)
-    segwb_f, segbits_f = segwb.ravel(), segbits.ravel()
-    maxseg = segwb.shape[1]
-
-    sid = np.flatnonzero(nblk > 0)
-    p = np.zeros(len(sid), dtype=np.uint64)
-    wb = segwb[sid, 0]
-    plim = (segbits[sid, 0] + 16).astype(np.uint64)
-    segidx = np.zeros(len(sid), dtype=np.int64)
-    in_seg = np.ones(len(sid), dtype=np.int64)  # blocks started this seg
-    m = np.zeros(len(sid), dtype=np.int64)
-    k = ssa[sid].copy()
-    eob = np.zeros(len(sid), dtype=np.int64)
-    myv = m // bwa[sid]
-    base = cb[sid] + (myv * bwfa[sid] + (m - myv * bwa[sid])) * 64
-    u48, u64c, u7, u3 = (np.uint64(48), np.uint64(64), np.uint64(7),
-                         np.uint64(3))
-    uffff = np.uint64(0xFFFF)
-
-    def _nextblock(gi, alive, bad):
-        """Advance streams gi to their next block (segment-aware)."""
-        mm = m[gi] + 1
-        m[gi] = mm
-        fin = mm >= nblk[sid[gi]]
-        if fin.any():
-            alive[gi[fin]] = False
-        run = gi[~fin]
-        if run.size:
-            sw = in_seg[run] >= perseg[sid[run]]
-            in_seg[run] += 1
-            if sw.any():
-                sv = run[sw]
-                sgi = segidx[sv] + 1
-                ok = sgi < nsegA[sid[sv]]
-                if not ok.all():
-                    bsv = sv[~ok]
-                    bad[bsv] = True
-                    alive[bsv] = False
-                    sv, sgi = sv[ok], sgi[ok]
-                if sv.size:
-                    segidx[sv] = sgi
-                    fs = sid[sv] * maxseg + sgi
-                    wb[sv] = segwb_f[fs]
-                    plim[sv] = (segbits_f[fs] + 16).astype(np.uint64)
-                    p[sv] = 0
-                    in_seg[sv] = 1
-                    eob[sv] = 0
-            live = run[alive[run]]
-            k[live] = ssa[sid[live]]
-            myv = m[live] // bwa[sid[live]]
-            base[live] = cb[sid[live]] + (myv * bwfa[sid[live]]
-                                          + (m[live] - myv
-                                             * bwa[sid[live]])) * 64
-
-    straggler_min = min(_LOCKSTEP_TAIL, len(sid) // 2)
-    while len(sid):
-        # bail only when a narrow tail still has LOTS of work (see
-        # _k_dcf) — per-scan failures compound across the scan script.
-        if len(sid) < straggler_min and (nblk[sid] - m).max() > 256:
-            for i in sid:
-                failed.add(int(i))
-            break
-        bad = np.zeros(len(sid), dtype=bool)
-        alive = np.ones(len(sid), dtype=bool)
-        # phase 1: streams inside an EOB run skip whole blocks, no bits
-        ei = np.flatnonzero(eob > 0)
-        if ei.size:
-            sb = sid[ei]
-            skip = np.minimum(np.minimum(eob[ei], nblk[sb] - m[ei]),
-                              perseg[sb] - in_seg[ei] + 1)
-            m[ei] += skip
-            in_seg[ei] += skip
-            eob[ei] -= skip
-            fin = m[ei] >= nblk[sb]
-            if fin.any():
-                alive[ei[fin]] = False
-            run = ei[~fin]
-            if run.size:
-                sw = np.flatnonzero(in_seg[run] > perseg[sid[run]])
-                if sw.size:
-                    sv = run[sw]
-                    sgi = segidx[sv] + 1
-                    ok = sgi < nsegA[sid[sv]]
-                    if not ok.all():
-                        bad[sv[~ok]] = True
-                        alive[sv[~ok]] = False
-                        sv, sgi = sv[ok], sgi[ok]
-                    if sv.size:
-                        segidx[sv] = sgi
-                        fs = sid[sv] * maxseg + sgi
-                        wb[sv] = segwb_f[fs]
-                        plim[sv] = (segbits_f[fs] + 16).astype(np.uint64)
-                        p[sv] = 0
-                        in_seg[sv] = 1
-                        eob[sv] = 0
-                live = run[alive[run]]
-                k[live] = ssa[sid[live]]
-                myv = m[live] // bwa[sid[live]]
-                base[live] = cb[sid[live]] + (myv * bwfa[sid[live]]
-                                              + (m[live] - myv
-                                                 * bwa[sid[live]])) * 64
-        # phase 2: streams with eob==0 read one symbol
-        gi = np.flatnonzero(alive & (eob == 0))
-        if gi.size:
-            off = p[gi] & u7
-            word = W[(wb[gi] + (p[gi] >> u3).astype(np.int64))]
-            peek = ((word >> (u48 - off)) & uffff).astype(np.int64)
-            e = lutflat[lrow[sid[gi]] + peek]
-            ln = e >> 8
-            rs = e & 255
-            s = rs & 15
-            r = rs >> 4
-            zs = s == 0
-            # EOBn: read r extra bits from the same word
-            iseob = zs & (r != 15)
-            rr = np.where(iseob, r, 0)
-            lnr = ln + rr
-            extra = ((word >> (u64c - off - lnr.astype(np.uint64)))
-                     & _MSKU64[rr]).astype(np.int64)
-            # value symbols: read s magnitude bits
-            lns2 = ln + s
-            v = ((word >> (u64c - off - lns2.astype(np.uint64)))
-                 & _MSKU64[s]).astype(np.int64)
-            val = np.where(v >= _HALF64[s], v, v - _MSK64[s])
-            adv = np.where(iseob, lnr, np.where(zs, ln, lns2))
-            p[gi] = p[gi] + adv.astype(np.uint64)
-            gb = (e == 0) | (p[gi] > plim[gi])
-            bad[gi[gb]] = True
-            alive[gi[gb]] = False
-            okm = ~gb
-            # ZRL: k += 16
-            zrl = okm & zs & (r == 15)
-            if zrl.any():
-                zi = gi[zrl]
-                k[zi] += 16
-            # value: k += r, place if k <= se
-            nzm = okm & ~zs
-            if nzm.any():
-                vi = gi[nzm]
-                kk = k[vi] + r[nzm]
-                inb = kk <= sea[sid[vi]]
-                pi2 = vi[inb]
-                if pi2.size:
-                    allcoef[base[pi2] + kk[inb]] = \
-                        val[nzm][inb] << ala[sid[pi2]]
-                k[vi] = kk + 1
-            # EOBn: set run length (current block is consumed by it too)
-            ebm = okm & iseob
-            if ebm.any():
-                bi = gi[ebm]
-                eob[bi] = (np.int64(1) << r[ebm]) - 1 + extra[ebm]
-                _nextblock(bi, alive, bad)
-            # blocks whose k ran past se are done
-            over = np.flatnonzero(alive & (eob == 0) & (k > sea[sid]))
-            if over.size:
-                _nextblock(over, alive, bad)
-        if bad.any():
-            for i in sid[bad]:
-                failed.add(int(i))
-        if not alive.all():
-            keep = alive
-            sid, p, wb, plim = sid[keep], p[keep], wb[keep], plim[keep]
-            segidx, in_seg = segidx[keep], in_seg[keep]
-            m, k, eob, base = m[keep], k[keep], eob[keep], base[keep]
-    return failed
-
-
-def _k_acr(jobs, sts, allcoef):
-    """Lockstep AC-refine scans (successive approximation, Ah>0).
-
-    Each iteration advances every live stream by one huffman symbol
-    and/or one block band-scan: a just-decoded symbol's zero-run and
-    every EOB-run block resolve through a shared 63-wide 2-D band step
-    that consumes the data-dependent correction bits (one per already-
-    nonzero coefficient passed) via a single gather/scatter — the
-    entire advance loop of _scan_ac_refine collapses into one
-    vectorized step. Mirrors _scan_ac_refine's bit-exact semantics;
-    failures fall back to the scalar decoder."""
-    G = len(jobs)
-    W, segwb, segbits, nsegA = _flatten_job_words(jobs)
-    failed: set[int] = set()
-    rows: dict[int, int] = {}
-    row_arrs: list[np.ndarray] = []
-    lrow = np.zeros(G, dtype=np.int64)
-    cb = np.zeros(G, dtype=np.int64)
-    bwfa = np.zeros(G, dtype=np.int64)
-    bwa = np.ones(G, dtype=np.int64)
-    nblk = np.zeros(G, dtype=np.int64)
-    perseg = np.ones(G, dtype=np.int64)
-    ssa = np.zeros(G, dtype=np.int64)
-    sea = np.zeros(G, dtype=np.int64)
-    p1a = np.zeros(G, dtype=np.int64)
-    # occupancy CSR: per stream, the absolute allcoef indices of every
-    # already-nonzero band coefficient in block order, plus per-block
-    # prefix counts. Valid for every FRESH block (k==ss) because a
-    # scan's placements only touch the block being processed — an
-    # entire segment-bounded EOB run then resolves in one ragged step,
-    # empty blocks consuming zero bits and zero iterations.
-    occ_chunks: list[np.ndarray] = []
-    bcs_chunks: list[np.ndarray] = []
-    occ_boff = np.zeros(G, dtype=np.int64)
-    bcs_off = np.zeros(G, dtype=np.int64)
-    otot = btot = 0
-    for i, (job, st) in enumerate(zip(jobs, sts)):
-        arr = _dec_lut_np(*job["ac_raw"])
-        rid = rows.get(id(arr))
-        if rid is None:
-            rid = len(row_arrs)
-            rows[id(arr)] = rid
-            row_arrs.append(arr)
-        lrow[i] = rid << 16
-        c = st["comps"][job["ci"]]
-        bh, bw = _ni_dims(c, st["comps"], st["h"], st["w"])
-        cb[i] = st["cbases"][job["ci"]]
-        bwfa[i] = c["bwf"]
-        bwa[i] = bw
-        nblk[i] = bh * bw
-        perseg[i] = job["ri"] if job["ri"] else max(bh * bw, 1)
-        ssa[i], sea[i] = job["ss"], job["se"]
-        p1a[i] = 1 << job["al"]
-        mv = np.arange(bh * bw, dtype=np.int64)
-        bases_i = cb[i] + ((mv // bw) * c["bwf"] + mv % bw) * 64
-        pos2 = bases_i[:, None] + np.arange(job["ss"], job["se"] + 1,
-                                            dtype=np.int64)[None, :]
-        nzm = allcoef[pos2] != 0
-        occ_chunks.append(pos2[nzm])
-        pre = np.zeros(bh * bw + 1, dtype=np.int64)
-        np.cumsum(nzm.sum(axis=1), out=pre[1:])
-        bcs_chunks.append(pre)
-        occ_boff[i] = otot
-        bcs_off[i] = btot
-        otot += len(occ_chunks[-1])
-        btot += len(pre)
-    occ_flat = np.concatenate(occ_chunks) if occ_chunks else \
-        np.zeros(0, dtype=np.int64)
-    bcs_flat = np.concatenate(bcs_chunks) if bcs_chunks else \
-        np.zeros(0, dtype=np.int64)
-    lutflat = np.concatenate(row_arrs)
-    segwb_f, segbits_f = segwb.ravel(), segbits.ravel()
-    maxseg = segwb.shape[1]
-
-    sid = np.flatnonzero(nblk > 0)
-    ns = len(sid)
-    p = np.zeros(ns, dtype=np.uint64)
-    wb = segwb[sid, 0]
-    plim = (segbits[sid, 0] + 16).astype(np.uint64)
-    segidx = np.zeros(ns, dtype=np.int64)
-    in_seg = np.ones(ns, dtype=np.int64)
-    m = np.zeros(ns, dtype=np.int64)
-    k = ssa[sid].copy()
-    eob = np.zeros(ns, dtype=np.int64)
-    nzstop = np.zeros(ns, dtype=np.int64)
-    val = np.zeros(ns, dtype=np.int64)
-    myv0 = m // bwa[sid]
-    base = cb[sid] + (myv0 * bwfa[sid] + (m - myv0 * bwa[sid])) * 64
-    _BIGSTOP = np.int64(1) << 40
-    _BANDW = 16
-    u48, u63, u64c = np.uint64(48), np.uint64(63), np.uint64(64)
-    u7, u3, u1 = np.uint64(7), np.uint64(3), np.uint64(1)
-    uffff = np.uint64(0xFFFF)
-    jj = np.arange(64, dtype=np.int64)
-
-    def _endblock(gi, alive, bad):
-        """Advance streams gi to their next block (segment-aware)."""
-        mm = m[gi] + 1
-        m[gi] = mm
-        fin = mm >= nblk[sid[gi]]
-        if fin.any():
-            alive[gi[fin]] = False
-        run = gi[~fin]
-        if run.size:
-            sw = in_seg[run] >= perseg[sid[run]]
-            in_seg[run] += 1
-            if sw.any():
-                sv = run[sw]
-                sgi = segidx[sv] + 1
-                ok = sgi < nsegA[sid[sv]]
-                if not ok.all():
-                    bsv = sv[~ok]
-                    bad[bsv] = True
-                    alive[bsv] = False
-                    sv, sgi = sv[ok], sgi[ok]
-                if sv.size:
-                    segidx[sv] = sgi
-                    fs = sid[sv] * maxseg + sgi
-                    wb[sv] = segwb_f[fs]
-                    plim[sv] = (segbits_f[fs] + 16).astype(np.uint64)
-                    p[sv] = 0
-                    in_seg[sv] = 1
-                    eob[sv] = 0
-            live = run[alive[run]]
-            k[live] = ssa[sid[live]]
-            myv = m[live] // bwa[sid[live]]
-            base[live] = cb[sid[live]] + (myv * bwfa[sid[live]]
-                                          + (m[live] - myv
-                                             * bwa[sid[live]])) * 64
-
-    straggler_min = min(_LOCKSTEP_TAIL, len(sid) // 2)
-    while len(sid):
-        # bail only when a narrow tail still has LOTS of work (see
-        # _k_dcf) — per-scan failures compound across the scan script.
-        if len(sid) < straggler_min and (nblk[sid] - m).max() > 256:
-            for i in sid:
-                failed.add(int(i))
-            break
-        bad = np.zeros(len(sid), dtype=bool)
-        alive = np.ones(len(sid), dtype=bool)
-        # ---- symbol phase: streams at a symbol boundary (not mid-band
-        # walk, not inside an EOB run) read one huffman symbol (plus
-        # its appended EOB-length or sign bit)
-        gi = np.flatnonzero((nzstop == 0) & (eob == 0))
-        if gi.size:
-            off = p[gi] & u7
-            word = W[(wb[gi] + (p[gi] >> u3).astype(np.int64))]
-            peek = ((word >> (u48 - off)) & uffff).astype(np.int64)
-            e = lutflat[lrow[sid[gi]] + peek]
-            ln = e >> 8
-            rs = e & 255
-            s = rs & 15
-            r = rs >> 4
-            zs = s == 0
-            iseob = zs & (r != 15)
-            rr = np.where(iseob, r, 0)
-            extra = ((word >> (u64c - off - (ln + rr).astype(np.uint64)))
-                     & _MSKU64[rr]).astype(np.int64)
-            # refinement value symbols read exactly ONE sign bit
-            sbit = ((word >> (u63 - off - ln.astype(np.uint64)))
-                    & u1).astype(np.int64)
-            adv = np.where(iseob, ln + rr, np.where(zs, ln, ln + 1))
-            p[gi] = p[gi] + adv.astype(np.uint64)
-            gb = (e == 0) | (p[gi] > plim[gi])
-            bad[gi[gb]] = True
-            alive[gi[gb]] = False
-            okm = ~gb
-            em = okm & iseob
-            if em.any():
-                ii = gi[em]
-                eob[ii] = (np.int64(1) << r[em]) + extra[em]
-                # k>ss: positions of this block were already walked, so
-                # its occupancy row is stale — window-walk the rest.
-                # k==ss: block untouched, the bulk CSR path takes it.
-                nzstop[ii] = np.where(k[ii] > ssa[sid[ii]], _BIGSTOP, 0)
-            zrl = okm & zs & (r == 15)
-            if zrl.any():
-                ii = gi[zrl]
-                nzstop[ii] = 16
-            nzv = okm & ~zs
-            if nzv.any():
-                ii = gi[nzv]
-                nzstop[ii] = r[nzv] + 1
-                val[ii] = np.where(sbit[nzv] == 1, p1a[sid[ii]],
-                                   -p1a[sid[ii]])
-        # ---- bulk EOB-run phase: streams whose current block is FRESH
-        # (k==ss, no mid-band walk) consume their whole segment-bounded
-        # run in one ragged step via the occupancy CSR — one correction
-        # bit per already-nonzero coefficient, empty blocks free
-        bulkm = alive & (eob > 0) & (nzstop == 0)
-        bk = np.flatnonzero(bulkm)
-        if bk.size:
-            sb = sid[bk]
-            nrun = np.minimum(np.minimum(eob[bk], nblk[sb] - m[bk]),
-                              perseg[sb] - in_seg[bk] + 1)
-            c0i = bcs_off[sb] + m[bk]
-            cstart = bcs_flat[c0i]
-            cnt = bcs_flat[c0i + nrun] - cstart
-            tot = int(cnt.sum())
-            if tot:
-                ccs = np.cumsum(cnt) - cnt
-                rep = np.repeat(np.arange(len(bk)), cnt)
-                within = np.arange(tot, dtype=np.int64) - ccs[rep]
-                bitpos = p[bk][rep] + within.astype(np.uint64)
-                wordi = wb[bk][rep] + (bitpos >> u3).astype(np.int64)
-                bits = ((W[wordi] >> (u63 - (bitpos & u7))) & u1) != 0
-                coefpos = occ_flat[(occ_boff[sb] + cstart)[rep] + within]
-                c0 = allcoef[coefpos]
-                p1c = p1a[sb][rep]
-                selb = bits & ((c0 & p1c) == 0)
-                if selb.any():
-                    allcoef[coefpos[selb]] = c0[selb] + np.where(
-                        c0[selb] >= 0, p1c[selb], -p1c[selb])
-                p[bk] = p[bk] + cnt.astype(np.uint64)
-                gb = p[bk] > plim[bk]
-                if gb.any():
-                    bad[bk[gb]] = True
-                    alive[bk[gb]] = False
-            # transition as if the LAST consumed block just ended
-            okk = bk[alive[bk]]
-            if okk.size:
-                nr = nrun[alive[bk]]
-                m[okk] += nr - 1
-                in_seg[okk] += nr - 1
-                eob[okk] -= nr
-                _endblock(okk, alive, bad)
-        # ---- band window step: streams mid-band-walk (a just-decoded
-        # symbol's advance run, or an EOB current-block scan) process up
-        # to _BANDW positions in one 2-D gather/scatter; longer runs
-        # resume next iteration (nzstop/val persist)
-        bi = np.flatnonzero(alive & (nzstop > 0))
-        if bi.size:
-            sb = sid[bi]
-            width = np.minimum(sea[sb] - k[bi] + 1, _BANDW)
-            wmax = int(width.max())
-            pos2 = base[bi][:, None] + k[bi][:, None] + jj[None, :wmax]
-            vmask = jj[None, :wmax] < width[:, None]
-            posg = np.where(vmask, pos2, 0)
-            c0 = np.where(vmask, allcoef[posg], 0)
-            occ = c0 != 0
-            zero = vmask & ~occ
-            zcum = np.cumsum(zero, axis=1)
-            stopm = zero & (zcum == nzstop[bi][:, None])
-            hasp = stopm.any(axis=1)
-            jp = np.argmax(stopm, axis=1)
-            before = jj[None, :wmax] < np.where(hasp, jp, wmax)[:, None]
-            cocc = occ & before
-            bprefix = np.cumsum(cocc, axis=1) - cocc
-            bitpos = p[bi][:, None] + bprefix.astype(np.uint64)
-            wordi = wb[bi][:, None] + (bitpos >> u3).astype(np.int64)
-            bits = ((W[wordi] >> (u63 - (bitpos & u7))) & u1) != 0
-            p1c = p1a[sb][:, None]
-            sel = cocc & bits & ((c0 & p1c) == 0)
-            if sel.any():
-                upd = c0 + np.where(c0 >= 0, p1c, -p1c)
-                allcoef[posg[sel]] = upd[sel]
-            nbits = cocc.sum(axis=1)
-            p[bi] = p[bi] + nbits.astype(np.uint64)
-            gb = p[bi] > plim[bi]
-            if gb.any():
-                bad[bi[gb]] = True
-                alive[bi[gb]] = False
-            okb = ~gb
-            pl = okb & hasp & (val[bi] != 0)
-            if pl.any():
-                ii = bi[pl]
-                allcoef[base[ii] + k[ii] + jp[pl]] = val[ii]
-            plc = okb & hasp
-            if plc.any():
-                ii = bi[plc]
-                k[ii] = k[ii] + jp[plc] + 1
-                nzstop[ii] = 0
-                val[ii] = 0
-            cont = okb & ~hasp
-            if cont.any():
-                ii = bi[cont]
-                nzstop[ii] -= zero.sum(axis=1)[cont]
-                k[ii] = k[ii] + width[cont]
-            endm = okb & (k[bi] > sea[sb])
-            if endm.any():
-                ii = bi[endm]
-                nzstop[ii] = 0
-                val[ii] = 0
-                dec = eob[ii] > 0
-                eob[ii] = np.where(dec, eob[ii] - 1, 0)
-                _endblock(ii, alive, bad)
-        if bad.any():
-            for i in sid[bad]:
-                failed.add(int(i))
-        if not alive.all():
-            keep = alive
-            sid, p, wb, plim = sid[keep], p[keep], wb[keep], plim[keep]
-            segidx, in_seg = segidx[keep], in_seg[keep]
-            m, k, eob, base = m[keep], k[keep], eob[keep], base[keep]
-            nzstop, val = nzstop[keep], val[keep]
-    return failed
-
-
-_PROG_KERNELS = {"dcf": _k_dcf, "dcr": _k_dcr, "acf": _k_acf,
-                 "acr": _k_acr}
-_PROG_MIN = 32
-# The multi-scan progressive lockstep is PARITY with the table-driven
-# scalar decoder on the fixture mix (0.97-1.24x, PERF.md round-4
-# continuation-2): its ~60-dispatch-per-symbol-step iteration only
-# wins on wide uniform batches. Per the round-4 verdict (#7), scalar
-# is the DEFAULT progressive path; the lockstep stays available behind
-# this env flag (it remains bit-exact — 229-case fuzz + pytest oracles
-# run with the flag forced on) and inherits any future dispatch win.
-def _prog_lockstep() -> bool:
-    # read LAZILY, not at import: decode runs in executor Python
-    # workers, where a driver-side os.environ set after import (or a
-    # flag not propagated via spark.executorEnv) would silently leave
-    # the module-import snapshot stale (round-5 ADVICE)
-    return os.environ.get("GTS_JPEG_PROG_LOCKSTEP", "0") == "1"
-
-
-def _prog_decode_batch(states: list[dict]):
-    """Round-based multi-scan lockstep over progressive streams.
-
-    Round r runs every stream's r-th scan; scans group by kind and each
-    kind's kernel advances its whole group in vectorized lockstep over
-    a shared flat coefficient slab (per-stream regions disjoint).
-    Returns (results, failed) with _lockstep_decode's contract."""
-    S = len(states)
-    failed: set[int] = set()
-    ctot = 0
-    for st in states:
-        cbases = []
-        for c in st["comps"]:
-            cbases.append(ctot)
-            ctot += c["bwf"] * c["bhf"] * 64
-        st["cbases"] = cbases
-    allcoef = np.zeros(ctot, dtype=np.int64)
-    nround = max(len(st["jobs"]) for st in states)
-    for r in range(nround):
-        groups: dict[str, list] = {}
-        for i, st in enumerate(states):
-            if i in failed or r >= len(st["jobs"]):
-                continue
-            groups.setdefault(st["jobs"][r]["kind"], []).append(i)
-        for kind, gidx in groups.items():
-            jobs = [states[i]["jobs"][r] for i in gidx]
-            sts = [states[i] for i in gidx]
-            try:
-                kf = _PROG_KERNELS[kind](jobs, sts, allcoef)
-            except Exception:  # noqa: BLE001 — whole-group scalar fallback
-                kf = set(range(len(jobs)))
-            for j in kf:
-                failed.add(gidx[j])
-    results: list = [None] * S
-    for i, st in enumerate(states):
-        if i in failed:
-            continue
-        try:
-            dense = [allcoef[b:b + c["bwf"] * c["bhf"] * 64]
-                     for b, c in zip(st["cbases"], st["comps"])]
-            results[i] = _reconstruct(st["comps"], dense, st["qts"],
-                                      st["h"], st["w"])
-        except Exception:  # noqa: BLE001
-            failed.add(i)
-    return results, failed
-
-
 def decode_batch(bufs) -> list:
     """Decode many JPEG buffers; returns a same-length list whose
     entries are decoded uint8 arrays or the per-item Exception.
 
     Baseline single-scan streams (with or without restart intervals)
-    decode in vectorized lockstep across the batch; progressive (SOF2)
-    streams decode through the multi-scan lockstep engine; other
-    ineligible streams decode scalar. A stream either engine rejects is
-    re-decoded scalar so its exception (or result) is identical to
-    ``decode``'s."""
+    decode in vectorized lockstep across the batch once at least
+    ``_LOCKSTEP_MIN`` of them are present. Every other stream —
+    progressive (SOF2), arithmetic-coded, multi-scan, or part of a
+    narrower batch — decodes through scalar ``decode``. A stream the
+    lockstep rejects mid-flight is re-decoded scalar, so each entry
+    (result or exception) is identical to ``decode``'s."""
     out: list = [None] * len(bufs)
+
+    def scalar(i):
+        try:
+            out[i] = decode(bufs[i])
+        except Exception as e:   # noqa: BLE001 — per-row error value
+            out[i] = e
+
     states: list[dict] = []
     sids: list[int] = []
-    pstates: list[dict] = []
-    psids: list[int] = []
     for i, b in enumerate(bufs):
         try:
             st = _parse_one(b)
-        except _Progressive:
-            if not _prog_lockstep():
-                # default path: the scalar progressive decoder (parity
-                # with the lockstep on the fixture mix — see _PROG_LOCKSTEP)
-                try:
-                    out[i] = decode(b)
-                except Exception as e:   # noqa: BLE001
-                    out[i] = e
-                continue
-            try:
-                pstates.append(_parse_prog(b))
-                psids.append(i)
-            except Exception:        # noqa: BLE001 — scalar defines it
-                try:
-                    out[i] = decode(b)
-                except Exception as e:   # noqa: BLE001
-                    out[i] = e
-            continue
+            _prep_stream(st)
         except _Ineligible:
-            try:
-                out[i] = decode(b)
-            except Exception as e:   # noqa: BLE001 — per-row error value
-                out[i] = e
+            scalar(i)
             continue
         except Exception as e:       # noqa: BLE001
             out[i] = e
             continue
-        try:
-            _prep_stream(st)
-        except _Ineligible:
-            try:
-                out[i] = decode(b)
-            except Exception as e:   # noqa: BLE001
-                out[i] = e
-            continue
         states.append(st)
         sids.append(i)
-    if states and len(states) < _LOCKSTEP_MIN:
+    if len(states) < _LOCKSTEP_MIN:
         # Narrow batch: lockstep can't amortize its per-iteration numpy
         # dispatch — the scalar loop is at least as fast.
-        for st, i in zip(states, sids):
-            try:
-                out[i] = decode(bufs[i])
-            except Exception as e:   # noqa: BLE001
-                out[i] = e
-        states = []
-    if states:
-        try:
-            results, failed = _lockstep_decode(states)
-        except Exception:            # noqa: BLE001 — full scalar fallback
-            results = [None] * len(states)
-            failed = set(range(len(states)))
-        for j, res in enumerate(results):
-            if j in failed:
-                try:
-                    out[sids[j]] = decode(bufs[sids[j]])
-                except Exception as e:   # noqa: BLE001
-                    out[sids[j]] = e
-            else:
-                out[sids[j]] = res
-    if pstates and len(pstates) < _PROG_MIN:
-        for i in psids:
-            try:
-                out[i] = decode(bufs[i])
-            except Exception as e:   # noqa: BLE001
-                out[i] = e
-        pstates = []
-    if pstates:
-        try:
-            results, failed = _prog_decode_batch(pstates)
-        except Exception:            # noqa: BLE001 — full scalar fallback
-            results = [None] * len(pstates)
-            failed = set(range(len(pstates)))
-        for j, res in enumerate(results):
-            if j in failed:
-                try:
-                    out[psids[j]] = decode(bufs[psids[j]])
-                except Exception as e:   # noqa: BLE001
-                    out[psids[j]] = e
-            else:
-                out[psids[j]] = res
+        for i in sids:
+            scalar(i)
+        return out
+    try:
+        results, failed = _lockstep_decode(states)
+    except Exception:                # noqa: BLE001 — full scalar fallback
+        results = [None] * len(states)
+        failed = set(range(len(states)))
+    for j, res in enumerate(results):
+        if j in failed:
+            scalar(sids[j])
+        else:
+            out[sids[j]] = res
     return out

@@ -27,7 +27,7 @@ Design notes
 * Scalar python by design: arithmetic JPEGs are a small fraction of
   real corpora (most encoders never enable it), so this path stays
   the readable reference implementation; the lockstep batch decoder
-  keeps handling the dominant huffman streams.
+  keeps handling the dominant baseline huffman streams.
 * Statistics areas reset at every scan start and at every restart
   marker (T.81 F.1.4.4 / G.1.3), as do DC predictors and contexts.
 """

@@ -98,8 +98,8 @@ def _verify_batch(batch, min_psnr: float, passthrough: list[str]):
     caps = batch.column(names.index("caption")).to_pylist()
     iids = batch.column(names.index("image_id")).to_pylist()
     ok = np.zeros(len(col), dtype=bool)
-    # pass 1: decode the whole batch at once — JPEG rows go through the
-    # vectorized lockstep decoder (codec.decode_many); a row's decode
+    # pass 1: decode the whole batch at once — baseline JPEG rows go
+    # through the vectorized lockstep decoder (codec.decode_many); a row's decode
     # failure of ANY kind becomes its Exception value, never a task kill
     bufs = [data[offs[i]:offs[i + 1]] for i in range(len(col))]
     arrs = codec.decode_many(bufs, ws, hs, fmts)

@@ -170,23 +170,6 @@ def _iwht4x4(coefs) -> list:
     return out
 
 
-def _iwht_batch(c: np.ndarray) -> np.ndarray:
-    """_iwht4x4 vectorized over (k, 16) int64 blocks (bit-exact)."""
-    c = c.reshape(-1, 4, 4)
-    a1 = c[:, 0] + c[:, 3]
-    b1 = c[:, 1] + c[:, 2]
-    c1 = c[:, 1] - c[:, 2]
-    d1 = c[:, 0] - c[:, 3]
-    t = np.stack([a1 + b1, c1 + d1, a1 - b1, d1 - c1], axis=1)
-    a1 = t[:, :, 0] + t[:, :, 3]
-    b1 = t[:, :, 1] + t[:, :, 2]
-    c1 = t[:, :, 1] - t[:, :, 2]
-    d1 = t[:, :, 0] - t[:, :, 3]
-    out = np.stack([(a1 + b1 + 3) >> 3, (c1 + d1 + 3) >> 3,
-                    (a1 - b1 + 3) >> 3, (d1 - c1 + 3) >> 3], axis=2)
-    return out.reshape(-1, 16)
-
-
 def _idct_batch(c: np.ndarray) -> np.ndarray:
     """_idct4x4 vectorized over (k, 16) int64 blocks (bit-exact —
     numpy >> is arithmetic, matching the scalar path)."""
@@ -587,10 +570,6 @@ def _pred4(mode, a, l, x):
 
 
 # ------------------------------------------------------------ loop filter
-
-def _u2s(p):
-    return p.astype(np.int32) - 128
-
 
 def _c8(v):
     return np.clip(v, -128, 127)

@@ -55,6 +55,29 @@ def test_bench_headline_names_are_gates():
     assert set(bench.HEADLINE) <= set(E.queries())
 
 
+def test_package_reads_no_env_knobs():
+    """Behaviour is set by parameters, not env vars: only session.py may
+    read the environment (deployment settings: core count, driver
+    memory, Spark's own env defaults). Spark-free AST scan, so comments
+    and docstrings that name os.environ do not count."""
+    import ast
+
+    pkg = Path(__file__).resolve().parent.parent / "gis_tools_spark"
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.relative_to(pkg).as_posix() == "session.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Attribute)
+                    and node.attr in ("environ", "getenv")
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "os") or (
+                    isinstance(node, ast.ImportFrom) and node.module == "os"
+                    and {a.name for a in node.names} & {"environ", "getenv"}):
+                hits.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not hits, hits
+
+
 @pytest.mark.parametrize("name", sorted(E.queries().keys()))
 def test_query_matches_oracle(spark, duck, name):
     spark_pdf = E.queries()[name](spark, SF).toPandas()

@@ -45,8 +45,17 @@ def brute(pdf: pd.DataFrame) -> pd.DataFrame:
                                        "to_zone", "kind"])
 
 
-def test_geofence_transitions(spark):
+@pytest.mark.parametrize("path", ["fused", "fallback"])
+def test_geofence_transitions(spark, path, monkeypatch, caplog):
+    """auto's join-free pip_tag pass and its pip_join cell fallback
+    (forced by a zero row limit) against one brute-force oracle."""
+    import importlib
+
     from gis_tools_spark.operators.trajectory import geofence_events
+
+    if path == "fallback":  # the package re-exports a function named sjoin
+        sjoin = importlib.import_module("gis_tools_spark.operators.sjoin")
+        monkeypatch.setattr(sjoin, "BROADCAST_MAX_ROWS", 0)
 
     rng = np.random.default_rng(7)
     n = 400
@@ -58,9 +67,14 @@ def test_geofence_transitions(spark):
         "lat": rng.uniform(-0.5, 1.5, n),
     })
     pdf["ts"] = pd.to_datetime(pdf["t"], unit="s")
-    out = geofence_events(
-        spark.createDataFrame(pdf), zones_df(spark), id_col="ping_id",
-        key_cols=["user_id"], order_tiebreak="ping_id").toPandas()
+    with caplog.at_level("DEBUG", logger="gis_tools_spark"):
+        out = geofence_events(
+            spark.createDataFrame(pdf), zones_df(spark), id_col="ping_id",
+            key_cols=["user_id"], order_tiebreak="ping_id").toPandas()
+    gate = [r.getMessage() for r in caplog.records
+            if r.getMessage().startswith("small_side")]
+    assert len(gate) == 1
+    assert gate[0].endswith("small=%s" % (path == "fused"))
     exp = brute(pdf)
     got = (out.sort_values(["user_id", "ping_id"]).reset_index(drop=True)
            [["user_id", "ping_id", "from_zone", "to_zone", "kind"]])

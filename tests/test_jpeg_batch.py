@@ -1,8 +1,10 @@
-"""Round-4: vectorized lockstep JPEG batch decoder (raster/jpeg.py
-decode_batch) — entropy decode advances every stream in the Arrow batch
-one huffman symbol per numpy iteration, escaping per-symbol interpreter
-cost. Oracle: bit-exact agreement with the scalar decoder (which is
-itself PSNR- and progressive-bit-identity-gated in test_jpeg.py).
+"""Vectorized lockstep JPEG batch decoder (raster/jpeg.py decode_batch)
+— entropy decode advances every baseline single-scan stream in the Arrow
+batch one huffman symbol per numpy iteration, escaping per-symbol
+interpreter cost; progressive and other streams in the same batch route
+to the scalar decoder. Oracle: bit-exact agreement with the scalar
+decoder (which is itself PSNR- and progressive-bit-identity-gated in
+test_jpeg.py).
 
 Reference parity: gis-tools decodes imagery via GDAL
 (/root/reference/gistools/raster.py:158-165); batching across
@@ -136,78 +138,12 @@ def test_vectorized_scan_emitter_bit_identical():
             jpeg._emit_scan_scalar(comps, ri)
 
 
-def _force_prog(monkeypatch):
-    # the lockstep is opt-in (scalar is the default progressive path —
-    # round-4 verdict #7); force it on AND drop the entry gate so small
-    # test batches exercise it
-    monkeypatch.setenv("GTS_JPEG_PROG_LOCKSTEP", "1")  # read lazily now
-    monkeypatch.setattr(jpeg, "_PROG_MIN", 1)
-
-
-def test_prog_lockstep_fuzz_agrees_with_scalar(monkeypatch):
-    """Progressive (SOF2) streams route through the multi-scan lockstep
-    engine: shapes x subsampling x quality x restart x grayscale, plus
-    corrupt/truncated rows, all bit-exact vs the scalar decoder."""
-    _force_prog(monkeypatch)
-    bufs = []
-    for (w, h) in ((96, 64), (37, 23), (16, 16), (8, 8), (64, 48)):
-        for sub in ("444", "420"):
-            for q in (50, 85, 98):
-                img = _smooth_rgb(w, h, seed=h + q)
-                bufs.append(jpeg.encode(img, q, subsampling=sub,
-                                        progressive=True))
-                bufs.append(jpeg.encode(img, q, subsampling=sub,
-                                        restart_interval=2,
-                                        progressive=True))
-    for (w, h) in ((37, 23), (64, 64)):
-        bufs.append(jpeg.encode(_smooth_rgb(w, h, 1)[:, :, 0], 85,
-                                progressive=True))
-    trunc = bytearray(bufs[0])
-    bufs.append(bytes(trunc[:len(trunc) // 2]))
-    bufs.append(b"\xff\xd8garbage")
-    _assert_matches_scalar(bufs)
-
-
-def test_prog_lockstep_restart_interval_one(monkeypatch):
-    """RI=1 in a progressive scan script: a segment switch (and EOB-run
-    reset) after every MCU/block of every scan."""
-    _force_prog(monkeypatch)
-    img = _smooth_rgb(48, 32, seed=9)
-    _assert_matches_scalar(
-        [jpeg.encode(img, 80, restart_interval=1, progressive=True),
-         jpeg.encode(img, 80, subsampling="420", restart_interval=1,
-                     progressive=True)])
-
-
-def test_prog_lockstep_straggler_guard(monkeypatch):
-    """One much-larger progressive stream among small ones crosses the
-    work-aware straggler cutover into the scalar re-decode path."""
-    _force_prog(monkeypatch)
-    monkeypatch.setattr(jpeg, "_LOCKSTEP_TAIL", 4)
-    bufs = [jpeg.encode(_smooth_rgb(16, 16, i), 75, progressive=True)
-            for i in range(8)]
-    bufs.append(jpeg.encode(_smooth_rgb(176, 176, 99), 95,
-                            progressive=True))
-    _assert_matches_scalar(bufs)
-
-
-def test_prog_narrow_batch_takes_scalar_path():
-    """Below _PROG_MIN progressive rows decode scalar — identical
-    values, no engine entry."""
-    img = _smooth_rgb(32, 24, seed=2)
-    bufs = [jpeg.encode(img, 85, progressive=True), b"bad"]
-    res = jpeg.decode_batch(bufs)
-    assert np.array_equal(res[0], jpeg.decode(bufs[0]))
-    assert isinstance(res[1], Exception)
-
-
 def test_corrupt_stream_parity_and_termination(monkeypatch):
     """Random byte flips and truncations over baseline/progressive/
     restart streams: decode_batch must terminate, contain each row's
     failure, and agree with the scalar decoder row-by-row (value-equal
     where scalar decodes, an Exception where scalar raises)."""
     _force_lockstep(monkeypatch)
-    _force_prog(monkeypatch)
     rng = np.random.default_rng(11)
     bufs = []
     for i in range(60):
