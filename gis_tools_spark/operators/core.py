@@ -22,7 +22,7 @@ Scale design notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import logging
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -114,6 +114,24 @@ def small_side(df: DataFrame, *, max_rows: int, max_bytes: int | None = None,
     _log.debug("small_side rows=%d bytes=%s max_rows=%d max_bytes=%s "
                "small=%s", stat["n"], nbytes, max_rows, max_bytes, small)
     return small
+
+
+def driver_solve(op: str, df: DataFrame,
+                 solve: Callable[[pd.DataFrame], pd.DataFrame],
+                 schema: str) -> DataFrame | None:
+    """The shared driver-solve path: when ``df`` has at most
+    DRIVER_MAX_ROWS rows, collect it, run ``solve`` (pandas in, pandas
+    out) on it and return the answer as a broadcast-hinted frame of
+    ``schema``; return None when ``df`` is above the gate, for the
+    caller's distributed plan."""
+    if not small_side(df, max_rows=DRIVER_MAX_ROWS):
+        _log.debug("driver_solve op=%s path=distributed max_rows=%d",
+                   op, DRIVER_MAX_ROWS)
+        return None
+    pdf = df.toPandas()
+    _log.debug("driver_solve op=%s path=driver rows=%d", op, len(pdf))
+    return F.broadcast(df.sparkSession.createDataFrame(solve(pdf),
+                                                       schema=schema))
 
 
 def cpu_grouped(df: DataFrame, *keys: str):

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..geom import wkb
 from ..plans.fixpoint import fixpoint
+from . import core
 
 KEY_DECIMALS = 9  # coordinate rounding for node identity
 
@@ -112,6 +113,10 @@ def connected_components(edges: DataFrame, *, max_iter: int = 64) -> DataFrame:
     min-label propagation paid ~5 shuffled jobs per round and walled the
     st_dbscan/flowacc/near-dup gates):
 
+    0. **Driver solve at entry.** An edge list under the shared driver
+       gate (core.DRIVER_MAX_ROWS) is collected once and solved whole
+       by ``_cc_pairs_pandas``; its answer comes back broadcast-hinted
+       and none of the steps below run.
     1. **Local union-find, zero shuffle.** Each task runs union-find over
        its own slice of the edge list (mapInPandas — the edge set is
        never symmetrized, deduped, or shuffled) and emits one
@@ -132,6 +137,17 @@ def connected_components(edges: DataFrame, *, max_iter: int = 64) -> DataFrame:
     Raises on non-convergence rather than returning split components
     (which would feed Dijkstra wrong subgraphs downstream)."""
     key_t = edges.schema["src_key"].dataType.simpleString()
+    schema = f"node {key_t}, component {key_t}"
+
+    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _cc_pairs_pandas(pdf["src_key"], pdf["dst_key"]).rename(
+            columns={"lroot": "component"})
+
+    solved = core.driver_solve("connected_components",
+                               edges.select("src_key", "dst_key"), solve,
+                               schema)
+    if solved is not None:
+        return solved
 
     def _local(it):
         chunks = [pdf for pdf in it if len(pdf)]
@@ -171,10 +187,7 @@ def connected_components(edges: DataFrame, *, max_iter: int = 64) -> DataFrame:
         start=lambda _: (und.select(F.col("a").alias("node")).distinct()
                          .withColumn("component", F.col("node"))
                          .localCheckpoint(eager=True)),
-        driver=lambda pdf: _cc_pairs_pandas(
-            pdf["src_key"], pdf["dst_key"]).rename(
-                columns={"lroot": "component"}),
-        schema=f"node {key_t}, component {key_t}")
+        driver=solve, schema=schema)
     und.unpersist()
     out = (mapping.join(lab2.withColumnRenamed("node", "lroot"),
                         on="lroot", how="left")
@@ -731,12 +744,26 @@ def pagerank(edges: DataFrame, *, src_col: str = "src",
     iteration count keeps the result deterministic and SQL-mirrorable;
     PR is a contraction so 20 rounds ≈ 1e-3·d^20 residual).
 
-    Scale plan: one shuffled contribution aggregation per round keyed
-    on dst (map-side combined), the dangling scalar rides a 1-row
-    crossJoin (no driver action per round), and eager localCheckpoint
-    truncates the iteration lineage exactly like the component/kNN
-    loops. At 1000 executors each round is one shuffle of the live
-    rank vector — the canonical distributed formulation."""
+    Scale plan: an edge list under the shared driver gate
+    (core.DRIVER_MAX_ROWS) is collected once and the ``iters`` rounds
+    run in numpy on its factorized node codes (``_pagerank_pandas``);
+    the ranks come back broadcast-hinted. Above the gate: one shuffled
+    contribution aggregation per round keyed on dst (map-side
+    combined), the dangling scalar rides a 1-row crossJoin (no driver
+    action per round), and eager localCheckpoint truncates the
+    iteration lineage exactly like the component/kNN loops. At 1000
+    executors each round is one shuffle of the live rank vector — the
+    canonical distributed formulation. The two paths sum the
+    contributions in different orders, so their ranks agree to float
+    rounding, not bit for bit."""
+    key_t = edges.schema[src_col].dataType.simpleString()
+    solved = core.driver_solve(
+        "pagerank", edges.select(F.col(src_col).alias("src"),
+                                 F.col(dst_col).alias("dst")),
+        lambda pdf: _pagerank_pandas(pdf["src"], pdf["dst"], damping, iters),
+        f"node {key_t}, pr double")
+    if solved is not None:
+        return solved
     # cache PRE-PARTITIONED by src: the cached InMemoryRelation carries
     # hashpartitioning(src), so each round's pr⋈e join skips the edge
     # side's Exchange entirely (guide §2.4 — share one exchange across
@@ -774,3 +801,21 @@ def pagerank(edges: DataFrame, *, src_col: str = "src",
                       .alias("pr"))).localCheckpoint()
     e.unpersist()
     return pr.select("node", "pr")
+
+
+def _pagerank_pandas(src: "pd.Series", dst: "pd.Series", damping: float,
+                     iters: int) -> "pd.DataFrame":
+    """``pagerank``'s rounds over one in-memory edge list: the same
+    per-round expression as the distributed plan, with the contribution
+    sum as one weighted ``bincount`` over dst codes."""
+    codes, uniq = pd.factorize(pd.concat([src, dst], ignore_index=True))
+    n = len(uniq)
+    s, d = codes[:len(src)], codes[len(src):]
+    outdeg = np.bincount(s, minlength=n)
+    dangling = outdeg == 0
+    pr = np.full(n, 1.0 / n)
+    base = (1.0 - damping) / n
+    for _ in range(iters):
+        contrib = np.bincount(d, weights=pr[s] / outdeg[s], minlength=n)
+        pr = base + damping * (contrib + pr[dangling].sum() / float(n))
+    return pd.DataFrame({"node": uniq, "pr": pr})

@@ -2,7 +2,15 @@
 (connected components, watershed, Bellman-Ford, cost distance, flow
 accumulation): each round eagerly ``localCheckpoint``s ``step(state)``
 (one job), tests its boolean change column ``__chg`` with one
-``limit(1)`` scan, drops the column, and stops at a round cap."""
+``limit(1)`` scan, drops the column, and stops at a round cap.
+
+The ``driver=`` hook solves a small loop state on the driver instead,
+through ``core.driver_solve`` (which PageRank and connected components
+also call at entry). It has two users: watershed's pointer chase and
+connected components' contracted graph, which an edge list reaches
+only above the operator's own entry gate. Cost distance gates on its
+pixel count at entry instead, before its set-up jobs, so only its
+distributed sweeps run here."""
 
 from __future__ import annotations
 
@@ -10,7 +18,7 @@ import logging
 from typing import Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 _log = logging.getLogger("gis_tools_spark")
 
@@ -34,11 +42,10 @@ def fixpoint(op: str, state: DataFrame,
     # imported here: operators/ imports this module at package import
     from ..operators import core
 
-    if driver is not None and core.small_side(
-            state, max_rows=core.DRIVER_MAX_ROWS):
-        solved = driver(state.toPandas())
-        state = F.broadcast(state.sparkSession.createDataFrame(
-            solved, schema=schema))
+    solved = (core.driver_solve(op, state, driver, schema)
+              if driver is not None else None)
+    if solved is not None:
+        state = solved
         path, rounds, converged = "driver", 0, True
     else:
         if start is not None:

@@ -37,6 +37,16 @@ Round-5 rework (round-4 verdict asks #1/#3):
 - the tile grid is indexed ONCE up front (the old plan re-ran the
   _grid_indexed aggregate — a collect — inside every sweep).
 
+Driver path: a mosaic of at most core.DRIVER_MAX_ROWS pixels (the
+watershed chase's one-row-per-pixel bound; the count comes from the
+grid-index aggregate, so the gate costs no job) skips the sweeps. Its
+tiles are collected once, initialized by the same generator as the
+distributed path, stitched into one array (missing tiles are
+barriers) and relaxed by ``_relax_tile`` in a single call behind an
+unreached border. That is the same Bellman fixed point over the same
+float expression, so the tiles it returns are bit-identical to the
+sweeps'.
+
 Reference scope: gis-tools has no cost-distance op (its raster ops are
 GDAL wrappers, raster.py:794-824); this is brief-scope terrain
 analysis matching the published ArcGIS/GRASS semantics.
@@ -44,6 +54,7 @@ analysis matching the published ArcGIS/GRASS semantics.
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator
 
 import numpy as np
@@ -55,6 +66,8 @@ from . import codec
 from .stitch import STRIP_SCHEMA, _grid_indexed, apply_halo, emit_strip_rows
 
 __all__ = ["cost_distance"]
+
+_log = logging.getLogger("gis_tools_spark")
 
 _SQRT2 = float(np.sqrt(2.0))
 
@@ -96,6 +109,32 @@ def _relax_tile(p: np.ndarray, enter: np.ndarray) -> np.ndarray:
     return out
 
 
+def _relax_mosaic(tiles: pd.DataFrame, no_data: float) -> pd.DataFrame:
+    """The sweeps' fixed point in one call: stitch the initialized
+    tiles' distance and cost rasters into one mosaic (cells of missing
+    tiles are barriers), relax it with ``_relax_tile`` behind a +inf
+    border, and cut it back into each tile's ``raw_f64`` bytes."""
+    w, h = int(tiles["w"].iloc[0]), int(tiles["h"].iloc[0])
+    tx = tiles["__col"].to_numpy(np.int64)
+    ty = tiles["__row"].to_numpy(np.int64)
+    shape = ((ty.max() + 1) * h, (tx.max() + 1) * w)
+    p = np.full((shape[0] + 2, shape[1] + 2), np.inf)
+    enter = np.full(shape, np.nan)
+    spans = [(slice(y * h, (y + 1) * h), slice(x * w, (x + 1) * w))
+             for x, y in zip(tx, ty)]
+    for (ys, xs), b, cb, cf in zip(spans, tiles["bytes"],
+                                   tiles["cost_bytes"], tiles["cost_fmt"]):
+        d = codec.decode_raw_f64(b, w, h)
+        p[1:-1, 1:-1][ys, xs] = np.where(d == no_data, np.nan, d)
+        c = codec.decode(cb, w, h, cf).astype(np.float64)
+        enter[ys, xs] = np.where(c == no_data, np.nan, c)
+    out = _relax_tile(p, enter)
+    out = np.where(np.isnan(out), no_data, out)
+    tiles = tiles.copy()
+    tiles["bytes"] = [codec.encode_raw_f64(out[ys, xs]) for ys, xs in spans]
+    return tiles
+
+
 def cost_distance(cost: DataFrame, source_cells: list[tuple[int, int]], *,
                   no_data: float = codec.NO_DATA_F32,
                   max_iters: int = 64) -> DataFrame:
@@ -105,9 +144,12 @@ def cost_distance(cost: DataFrame, source_cells: list[tuple[int, int]], *,
     (fmt ``raw_f64``; +inf = unreachable, the no-data value where the
     cost was no-data) and the cost preserved in
     `cost_bytes`/`cost_fmt`. Raises ValueError on a negative cost (the
-    sweeps would never settle) and RuntimeError when ``max_iters``
-    sweeps do not reach the fixed point."""
-    t, _, _ = _grid_indexed(cost)
+    sweeps would never settle) and, on the distributed path,
+    RuntimeError when ``max_iters`` sweeps do not reach the fixed
+    point."""
+    from ..operators import core
+
+    t, pixels = _grid_indexed(cost)
     srcs = sorted(set(source_cells))
 
     def _init(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -141,6 +183,14 @@ def cost_distance(cost: DataFrame, source_cells: list[tuple[int, int]], *,
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in t.schema.fields
     ) + ", cost_bytes binary, cost_fmt string"
+    if pixels <= core.DRIVER_MAX_ROWS:
+        _log.debug("cost_distance path=driver pixels=%d", pixels)
+        tiles = pd.concat(list(_init(iter([t.toPandas()]))))
+        tiles = _relax_mosaic(tiles, no_data)
+        return (cost.sparkSession.createDataFrame(
+            tiles[t.columns + ["cost_bytes", "cost_fmt"]], schema=schema)
+            .drop("__col", "__row"))
+    _log.debug("cost_distance path=distributed pixels=%d", pixels)
     cur = t.mapInPandas(_init, schema=schema).localCheckpoint(eager=True)
     sweep_schema = schema + ", __chg boolean"
     cols = cur.columns

@@ -48,7 +48,7 @@ def flow_edges(flowdir: DataFrame, *,
     one row per valid pixel; dst is NULL for pits/flats (d8 = 0).
     Node keys pack (giy, gix) into one long so the graph ops shuffle
     8-byte keys, not structs."""
-    t, _, _ = _grid_indexed(flowdir)
+    t, _ = _grid_indexed(flowdir)
     code_to_off = {code: (dx, dy) for dx, dy, code in _D8}
 
     def _edges(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -205,8 +205,14 @@ def watershed(flowdir: DataFrame, *,
                         .alias("__chg")))
 
     # doubling reaches paths of 2^64 pixels, far past any mosaic
+    first = ptr
     ptr, _, _ = fixpoint("watershed", ptr, double, max_rounds=64,
                          driver=chase, schema="src long, ptr long")
+    # release the first pointers' checkpoint blocks: the driver solve
+    # returns a new frame and every round checkpoints its own, so
+    # nothing returned reads them (local checkpoints are otherwise freed
+    # only on driver GC)
+    first._jdf.queryExecution().logical().rdd().unpersist(False)
     mask = (1 << _KEY_SHIFT) - 1
     return (nodes.join(ptr, on="src")
             .select("gix", "giy", F.col("ptr").alias("basin"),

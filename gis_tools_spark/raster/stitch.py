@@ -33,11 +33,15 @@ from . import codec
 
 def _grid_indexed(df: DataFrame):
     """Add (col, row) grid indices from the geotransforms; returns
-    (indexed_df, tile_w_deg, tile_h_deg)."""
+    (indexed_df, pixels): pixels = cols × rows × w × h of the grid's
+    extent, the size of the whole mosaic as one array (tiles × w × h
+    when no tile is missing)."""
     o = df.agg(F.min("gt_x0").alias("x0"), F.max("gt_y0").alias("y0"),
+               F.max("gt_x0").alias("x1"), F.min("gt_y0").alias("y1"),
                F.max(F.col("gt_rx") * F.col("w")).alias("tw"),
                F.max(F.col("gt_ry") * F.col("h")).alias("th"),
-               F.countDistinct("w", "h").alias("nsz")).collect()[0]
+               F.countDistinct("w", "h").alias("nsz"),
+               F.max("w").alias("w"), F.max("h").alias("h")).collect()[0]
     if int(o["nsz"]) > 1:
         raise ValueError(
             "stitched raster passes require a uniform tile grid (equal "
@@ -46,7 +50,10 @@ def _grid_indexed(df: DataFrame):
     tw, th = float(o["tw"]), float(o["th"])
     out = (df.withColumn("__col", F.round((F.col("gt_x0") - F.lit(o["x0"])) / tw).cast("int"))
              .withColumn("__row", F.round((F.lit(o["y0"]) - F.col("gt_y0")) / th).cast("int")))
-    return out, tw, th
+    # the same HALF_UP rounding as the __col/__row columns
+    cols = int(np.floor((o["x1"] - o["x0"]) / tw + 0.5)) + 1
+    rows = int(np.floor((o["y0"] - o["y1"]) / th + 0.5)) + 1
+    return out, cols * rows * int(o["w"]) * int(o["h"])
 
 
 def slope_aspect_stitched(df: DataFrame, *, mode: str = "slope",
@@ -325,7 +332,7 @@ def stitched_apply(df: DataFrame, padded_fn, *,
     pass_row=True calls ``padded_fn(p, row)`` with the tile's pandas
     row, so kernels can read sibling columns (e.g. a second raster's
     bytes riding along — the cost-distance pattern)."""
-    t, _, _ = _grid_indexed(df)
+    t, _ = _grid_indexed(df)
 
     def _emit_strips(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

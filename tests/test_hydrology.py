@@ -3,6 +3,7 @@ and equality of the per-basin and iterative distributed paths."""
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from gis_tools_spark.raster import codec
 from gis_tools_spark.raster.hydrology import flow_accumulation
@@ -135,13 +136,20 @@ def test_watershed_matches_path_following(spark):
     assert len(set(got.values())) > 1          # multiple real basins
 
 
-def test_cost_distance_matches_global_dijkstra(spark):
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_cost_distance_matches_global_dijkstra(spark, monkeypatch, path):
     """Block-sweep cost distance vs one global-grid Dijkstra — with
     barriers forcing paths around, multiple sources, unreachable
-    pockets, and tile crossings that need several sweeps."""
+    pockets, and tile crossings that need several sweeps. Both the
+    one-call driver relaxation and the distributed sweeps (gate forced
+    to 0) must hit it exactly."""
     import heapq
 
+    from gis_tools_spark.operators import core
     from gis_tools_spark.raster.costdist import cost_distance
+
+    if path == "distributed":
+        monkeypatch.setattr(core, "DRIVER_MAX_ROWS", 0)
 
     def fill(gx, gy):
         return (1.0 + (gx * 5 + gy * 3) % 7).astype(np.float64)
@@ -206,17 +214,23 @@ def test_cost_distance_matches_global_dijkstra(spark):
     assert np.isfinite(got[20:, 20:][~nod[20:, 20:]]).all()
 
 
-def test_cost_distance_rejects_negative_cost(spark):
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_cost_distance_rejects_negative_cost(spark, monkeypatch, path):
     """A negative entry cost never lets the sweeps settle: the init
-    pass rejects it instead of looping."""
-    import pytest
-
+    pass rejects it instead of looping. On the driver path the init runs
+    in this process and raises the ValueError itself; on the distributed
+    path it comes back wrapped in the Python worker's error."""
     from gis_tools_spark import fixtures
+    from gis_tools_spark.operators import core
     from gis_tools_spark.raster.costdist import cost_distance
 
     neg = codec.encode_raw_f32(np.full((16, 16), -1.0, dtype=np.float32))
     tiles = fixtures.gen_rasters_exact(2, 1, 16).assign(
         bytes=[neg] * 2, fmt="raw_f32")
-    with pytest.raises(Exception, match="ValueError: cost_distance: "
-                                        "negative cost"):
+    if path == "driver":
+        err, match = ValueError, "^cost_distance: negative cost"
+    else:
+        monkeypatch.setattr(core, "DRIVER_MAX_ROWS", 0)
+        err, match = Exception, "ValueError: cost_distance: negative cost"
+    with pytest.raises(err, match=match):
         cost_distance(spark.createDataFrame(tiles), [(3, 3)])

@@ -107,14 +107,20 @@ def test_shortest_paths_match_networkx(road_edges):
         assert got[n] == pytest.approx(d, abs=1e-9)
 
 
-def test_pagerank_fixed_point_and_replay(spark):
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_pagerank_fixed_point_and_replay(spark, monkeypatch, path):
     """Power iteration with dangling redistribution: ranks sum to 1,
     the converged vector satisfies the PageRank fixed-point equation to
     1e-9 (an algorithm-independent check), and a numpy replay of the
-    fixed-iteration contract matches to 1e-12."""
+    fixed-iteration contract matches to 1e-12 — on the driver solve and
+    on the distributed rounds (gate forced to 0)."""
     import numpy as np
 
+    from gis_tools_spark.operators import core
     from gis_tools_spark.operators.network import pagerank
+
+    if path == "distributed":
+        monkeypatch.setattr(core, "DRIVER_MAX_ROWS", 0)
 
     rng = np.random.default_rng(11)
     E = {(int(a), int(b)) for a, b in rng.integers(0, 40, (120, 2))
