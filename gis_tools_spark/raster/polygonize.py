@@ -122,7 +122,11 @@ def polygonize_region(mask: np.ndarray, gt) -> dict | None:
 def polygonize(df: DataFrame, *, no_data: float = codec.NO_DATA_F32,
                connectivity: int = 4) -> DataFrame:
     """Per-tile polygonize: one output row per connected same-value
-    region: (image_id, value, region_wkb, region_area, px_count)."""
+    region: (image_id, value, region_wkb, region_area, px_count).
+    Regions are 4-connected; any other `connectivity` raises."""
+    if connectivity != 4:
+        raise ValueError(f"polygonize: connectivity={connectivity!r} is "
+                         "not supported, only 4")
     fields = T.StructType([
         T.StructField("image_id", T.StringType()),
         T.StructField("value", T.DoubleType()),

@@ -47,6 +47,13 @@ def test_polygonize_classes(spark):
         assert K.area(g) == pytest.approx(r["region_area"])
 
 
+@pytest.mark.parametrize("connectivity", [8, "4"])
+def test_polygonize_rejects_unsupported_connectivity(spark, connectivity):
+    df = _tile_df(spark, np.ones((2, 2), dtype=np.float32))
+    with pytest.raises(ValueError, match="connectivity"):
+        polygonize(df, connectivity=connectivity)
+
+
 def test_polygonize_region_hole():
     m = np.ones((4, 4), dtype=bool)
     m[1:3, 1:3] = False
