@@ -8,14 +8,16 @@ from the PUBLIC Apache Iceberg spec concepts (metadata file + snapshot
 manifests + stats-based file pruning + optimistic concurrency +
 version-hint pointer), not from any Iceberg code:
 
-* **Atomic snapshot commits.** A commit stages parquet data files in a
-  snapshot-unique directory, writes an immutable manifest, then claims
-  the next metadata version with an ``O_EXCL`` create — the lake-store
-  analog of Iceberg's atomic metadata swap. Concurrent writers race on
-  the version file; the loser re-reads and retries against the new
-  current snapshot (optimistic concurrency), so an append is never
-  lost and readers NEVER observe a half-commit: until the version file
-  exists, the staged files are invisible orphans.
+* **Atomic snapshot commits.** One helper, ``_claim``, is the commit
+  protocol for every mutation (commit, delete, upsert, compact,
+  vacuum). A mutation stages its parquet data files in a
+  commit-unique directory; ``_claim`` writes an immutable manifest,
+  then claims the next metadata version with an ``O_EXCL`` create —
+  the lake-store analog of Iceberg's atomic metadata swap. Concurrent
+  writers race on the version file; the loser re-reads and rebuilds
+  against the new current snapshot (optimistic concurrency), so an
+  append is never lost and readers NEVER observe a half-commit: until
+  the version file exists, the staged files are invisible orphans.
 * **Manifests with per-file column stats.** Each manifest row carries
   the file's row count, byte size, and per-column min/max/null-count
   aggregated from the parquet footer (collected DISTRIBUTED — a
@@ -30,6 +32,11 @@ version-hint pointer), not from any Iceberg code:
   summary) is kept in the metadata file; ``scan(..., as_of=…)`` reads
   any historical snapshot — the exact semantics the checkpoint layer
   needs for resume ("VERSION AS OF").
+* **Snapshot expiry.** ``vacuum`` first claims the shortened history,
+  then deletes only the files an expired snapshot's manifest lists and
+  no kept snapshot lists (Iceberg's expire-snapshots rule). Files a
+  writer has staged but not yet claimed are listed by no manifest, so
+  they are never touched; removing orphans of dead writers is not done.
 * **Exactness.** Pruning uses footer stats only to PROVE a file
   disjoint from the predicate; the same predicate is re-applied as a
   residual ``where`` on the surviving rows, so the result is
@@ -57,12 +64,13 @@ import os
 import shutil
 import time
 import uuid
-from typing import Iterator
+from typing import Callable, Iterator, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .. import cells as C
+from .clustered import ZRES
 
 
 class CommitConflict(RuntimeError):
@@ -124,10 +132,32 @@ def _load_metadata(root: str) -> dict | None:
     return m
 
 
+def _manifest_path(root: str, snapshot_id: int) -> str:
+    return os.path.join(_meta_dir(root), "snap-%d.manifest.json" % snapshot_id)
+
+
 def _load_manifest(root: str, snapshot_id: int) -> dict:
-    with open(os.path.join(_meta_dir(root),
-                           "snap-%d.manifest.json" % snapshot_id)) as f:
+    with open(_manifest_path(root, snapshot_id)) as f:
         return json.load(f)
+
+
+def _files(root: str, cur: dict) -> list[dict]:
+    """Manifest entries of the current snapshot of metadata ``cur``."""
+    return _load_manifest(root, cur["current_snapshot_id"])["files"]
+
+
+def _rows(entries: list[dict]) -> int:
+    return sum(e["rows"] for e in entries)
+
+
+def _read_files(spark: SparkSession, root: str, schema_json: str,
+                entries: list[dict]) -> DataFrame:
+    """The rows of manifest ``entries``, read with a recorded schema."""
+    schema = T.StructType.fromJson(json.loads(schema_json))
+    if not entries:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(root, e["path"]) for e in entries])
 
 
 # --------------------------------------------------------- stats collection
@@ -209,6 +239,87 @@ def _collect_stats(spark: SparkSession, files: list[str],
 
 # ----------------------------------------------------------------- commits
 
+_RETRIES = 20            # version races a mutation may lose before it fails
+
+
+def _stage(df: DataFrame, root: str) -> list[dict]:
+    """Write ``df`` to a commit-unique ``data/`` dir (invisible to readers
+    until a claim lists it); returns its manifest entries, paths relative
+    to ``root``, zero-row files dropped."""
+    data_dir = os.path.join(root, "data", uuid.uuid4().hex[:16])
+    df.write.mode("overwrite").parquet(data_dir)
+    files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
+    stat_cols = [f.name for f in df.schema.fields
+                 if isinstance(f.dataType, _STAT_TYPES)]
+    return [dict(e, path=os.path.relpath(e["path"], root))
+            for e in _collect_stats(df.sparkSession, files, stat_cols)
+            if e["rows"] > 0]
+
+
+class _Snap(NamedTuple):
+    """The table state a mutation's ``build`` hands to :func:`_claim`:
+    the new snapshot's full file list, schema, operation and summary.
+    ``files=None`` adds no snapshot and only drops the ``expire`` ids
+    from the history (vacuum)."""
+    files: list[dict] | None
+    schema: str
+    operation: str = ""
+    summary: dict | None = None
+    dedup_key: str | None = None
+    expire: frozenset = frozenset()
+
+
+def _claim(root: str, build: Callable[[dict | None], _Snap | int | None]):
+    """The commit protocol, shared by every mutation of the table.
+
+    Each attempt loads the current metadata ``cur`` (None: no table yet)
+    and calls ``build(cur)``. A result that is not a :class:`_Snap` (an
+    existing snapshot id) is returned as is and nothing is written.
+    Otherwise the new snapshot's manifest is written, then the next
+    metadata version is claimed with an ``O_EXCL`` create; a writer that
+    loses the race re-reads and rebuilds against the winner. Returns the
+    id of the snapshot that is current after the claim.
+    """
+    os.makedirs(_meta_dir(root), exist_ok=True)
+    for _ in range(_RETRIES):
+        cur = _load_metadata(root)
+        snap = build(cur)
+        if not isinstance(snap, _Snap):
+            return snap
+        parent = sid = cur["current_snapshot_id"] if cur else None
+        history = [s for s in (cur["snapshots"] if cur else [])
+                   if s["id"] not in snap.expire]
+        if snap.files is not None:
+            sid = int(time.time() * 1000) * 1000 + (os.getpid() % 1000)
+            with open(_manifest_path(root, sid), "w") as f:
+                json.dump({"snapshot_id": sid, "files": snap.files}, f)
+            history.append({
+                "id": sid, "parent_id": parent, "ts": time.time(),
+                "operation": snap.operation, "schema": snap.schema,
+                "summary": dict(snap.summary, total_files=len(snap.files),
+                                total_rows=_rows(snap.files))})
+            if snap.dedup_key is not None:
+                history[-1]["dedup_key"] = snap.dedup_key
+        meta = {"format_version": 1,
+                "table_uuid": cur["table_uuid"] if cur else uuid.uuid4().hex,
+                "schema": snap.schema, "current_snapshot_id": sid,
+                "snapshots": history}
+        version = cur["_version"] + 1 if cur else 1
+        try:
+            fd = os.open(_version_path(root, version),
+                         os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        except FileExistsError:
+            continue                              # lost the race: re-read
+        with os.fdopen(fd, "w") as f:
+            json.dump(meta, f, indent=1)
+        tmp = _hint_path(root) + ".tmp.%s" % uuid.uuid4().hex[:16]
+        with open(tmp, "w") as f:
+            f.write(str(version))
+        os.replace(tmp, _hint_path(root))         # advisory; atomic
+        return sid
+    raise CommitConflict("lost %d version races" % _RETRIES)
+
+
 def _evolve_schema(old_json: str, new_json: str) -> str:
     """Union schema for an append whose DataFrame schema differs.
 
@@ -239,27 +350,25 @@ def _evolve_schema(old_json: str, new_json: str) -> str:
     return T.StructType(fields).json()
 
 
-def _find_dedup(root: str, dedup_key: str) -> int | None:
-    m = _load_metadata(root)
-    if m:
-        for s in m["snapshots"]:
-            if s.get("dedup_key") == dedup_key:
-                return s["id"]
+def _find_dedup(cur: dict | None, dedup_key: str) -> int | None:
+    for s in cur["snapshots"] if cur else []:
+        if s.get("dedup_key") == dedup_key:
+            return s["id"]
     return None
 
 
 def commit(df: DataFrame, root: str, *, mode: str = "append",
            cluster_by: tuple[str, str] | None = None,
-           zres: int = 16, zkey_col: str = "zkey",
-           n_files: int | None = None, max_retries: int = 20,
+           n_files: int | None = None,
            dedup_key: str | None = None) -> int:
     """Write ``df`` as a new table snapshot; returns the snapshot id.
 
     ``mode='append'`` adds the staged files to the current snapshot's
     file set; ``'overwrite'`` replaces it. ``cluster_by=(lon, lat)``
-    stores the Morton key and range-sorts by it so every data file
-    covers a tight Z range — the layout that makes bbox pruning drop
-    whole files. Commit is atomic and optimistic (see module doc).
+    stores the Morton key as ``zkey`` and range-sorts by it so every
+    data file covers a tight Z range — the layout that makes bbox
+    pruning drop whole files. Commit is atomic and optimistic (see
+    module doc).
 
     ``dedup_key`` makes the commit IDEMPOTENT: if a snapshot already
     carries the key, its id is returned and nothing is written — the
@@ -270,84 +379,31 @@ def commit(df: DataFrame, root: str, *, mode: str = "append",
     if mode not in ("append", "overwrite"):
         raise ValueError("mode must be append|overwrite")
     if dedup_key is not None:
-        prior = _find_dedup(root, dedup_key)
+        prior = _find_dedup(_load_metadata(root), dedup_key)
         if prior is not None:
             return prior
-    spark = df.sparkSession
     if cluster_by is not None:
         lon, lat = cluster_by
-        df = df.withColumn(zkey_col,
-                           C.morton_column(F.col(lon), F.col(lat), zres))
-        n = n_files or spark.sparkContext.defaultParallelism
-        df = df.repartitionByRange(n, zkey_col).sortWithinPartitions(zkey_col)
-    schema_json = df.schema.json()
+        df = df.withColumn("zkey",
+                           C.morton_column(F.col(lon), F.col(lat), ZRES))
+        n = n_files or df.sparkSession.sparkContext.defaultParallelism
+        df = df.repartitionByRange(n, "zkey").sortWithinPartitions("zkey")
+    entries = _stage(df, root)
+    summary = {"added_files": len(entries), "added_rows": _rows(entries)}
 
-    # 1. stage data files (commit-unique dir: concurrent-safe, invisible
-    #    to readers until the metadata version is claimed).
-    commit_uuid = uuid.uuid4().hex[:16]
-    data_dir = os.path.join(root, "data", commit_uuid)
-    df.write.mode("overwrite").parquet(data_dir)
-    files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
-    stat_cols = [f.name for f in df.schema.fields
-                 if isinstance(f.dataType, _STAT_TYPES)]
-    entries = _collect_stats(spark, files, stat_cols)
-    for e in entries:
-        e["path"] = os.path.relpath(e["path"], root)
-    added_rows = sum(e["rows"] for e in entries)
+    def build(cur):
+        schema, base = df.schema.json(), []
+        if cur is not None:
+            prior = dedup_key and _find_dedup(cur, dedup_key)
+            if prior:                         # racer landed the same batch
+                return prior
+            if mode == "append":
+                if cur["schema"] != schema:
+                    schema = _evolve_schema(cur["schema"], schema)
+                base = _files(root, cur)
+        return _Snap(base + entries, schema, mode, summary, dedup_key)
 
-    os.makedirs(_meta_dir(root), exist_ok=True)
-    snapshot_id = int(time.time() * 1000) * 1000 + (os.getpid() % 1000)
-
-    # 2. claim the next metadata version (optimistic retry loop).
-    for _ in range(max_retries):
-        cur = _load_metadata(root)
-        if dedup_key is not None and cur is not None:
-            for s in cur["snapshots"]:       # racer landed the same batch
-                if s.get("dedup_key") == dedup_key:
-                    return s["id"]
-        if cur is None:
-            table_uuid, parent, base_files, version = \
-                uuid.uuid4().hex, None, [], 0
-        else:
-            if cur["schema"] != schema_json and mode == "append":
-                schema_json = _evolve_schema(cur["schema"], schema_json)
-            table_uuid = cur["table_uuid"]
-            parent = cur["current_snapshot_id"]
-            base = _load_manifest(root, parent)["files"] if parent else []
-            base_files = base if mode == "append" else []
-            version = cur["_version"]
-        all_files = base_files + entries
-        manifest = {"snapshot_id": snapshot_id, "files": all_files}
-        mpath = os.path.join(_meta_dir(root),
-                             "snap-%d.manifest.json" % snapshot_id)
-        with open(mpath, "w") as f:
-            json.dump(manifest, f)
-        snap_rec = {
-            "id": snapshot_id, "parent_id": parent, "ts": time.time(),
-            "operation": mode, "schema": schema_json,
-            "summary": {"added_files": len(entries),
-                        "added_rows": added_rows,
-                        "total_files": len(all_files),
-                        "total_rows": sum(e["rows"] for e in all_files)}}
-        if dedup_key is not None:
-            snap_rec["dedup_key"] = dedup_key
-        snaps = (cur["snapshots"] if cur else []) + [snap_rec]
-        meta = {"format_version": 1, "table_uuid": table_uuid,
-                "schema": schema_json,
-                "current_snapshot_id": snapshot_id, "snapshots": snaps}
-        try:
-            fd = os.open(_version_path(root, version + 1),
-                         os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            continue                              # lost the race: re-read
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f, indent=1)
-        tmp = _hint_path(root) + ".tmp.%s" % commit_uuid
-        with open(tmp, "w") as f:
-            f.write(str(version + 1))
-        os.replace(tmp, _hint_path(root))         # advisory; atomic
-        return snapshot_id
-    raise CommitConflict("commit lost %d races" % max_retries)
+    return _claim(root, build)
 
 
 # ------------------------------------------------------------------- reads
@@ -359,20 +415,21 @@ def snapshots(root: str) -> list[dict]:
 
 
 def _resolve_snapshot(root: str, as_of) -> dict:
+    """The snapshot ``as_of`` names (None: the current one) from ONE
+    metadata read, with its schema (the table's for snapshots written
+    before schemas were recorded per snapshot)."""
     m = _load_metadata(root)
     if m is None:
         raise FileNotFoundError("no committed snapshot under %s" % root)
     snaps = m["snapshots"]
-    if as_of is None:
-        sid = m["current_snapshot_id"]
-        return next(s for s in snaps if s["id"] == sid)
     by_id = {s["id"]: s for s in snaps}
-    if as_of in by_id:
-        return by_id[as_of]
+    key = m["current_snapshot_id"] if as_of is None else as_of
+    if key in by_id:
+        return {"schema": m["schema"], **by_id[key]}
     older = [s for s in snaps if s["ts"] <= as_of]
     if not older:
         raise LookupError("no snapshot at or before %r" % as_of)
-    return max(older, key=lambda s: s["ts"])
+    return {"schema": m["schema"], **max(older, key=lambda s: s["ts"])}
 
 
 _OPS = ("<", "<=", ">", ">=", "=", "between")
@@ -400,6 +457,14 @@ def _file_survives(stats: dict, filters: list[tuple]) -> bool:
         if op == "between" and (mx < flt[2] or mn > flt[3]):
             return False
     return True
+
+
+def _split(entries: list[dict], filters: list[tuple]):
+    """(files the filters may match, files stats prove they cannot)."""
+    hit, miss = [], []
+    for e in entries:
+        (hit if _file_survives(e["stats"], filters) else miss).append(e)
+    return hit, miss
 
 
 def _residual(filters: list[tuple]):
@@ -431,18 +496,17 @@ def bbox_filters(minx: float, miny: float, maxx: float, maxy: float, *,
     return [(lon, "between", minx, maxx), (lat, "between", miny, maxy)]
 
 
+def _prune(root: str, snap: dict,
+           filters: list[tuple] | None) -> tuple[list[dict], int]:
+    files = _load_manifest(root, snap["id"])["files"]
+    return _split(files, filters or [])[0], len(files)
+
+
 def scan_files(root: str, *, filters: list[tuple] | None = None,
                as_of=None) -> tuple[list[dict], int]:
     """(surviving manifest entries, total file count) — the pruning
     decision alone, for tests/inspection."""
-    snap = _resolve_snapshot(root, as_of)
-    manifest = _load_manifest(root, snap["id"])
-    files = manifest["files"]
-    if filters:
-        keep = [e for e in files if _file_survives(e["stats"], filters)]
-    else:
-        keep = files
-    return keep, len(files)
+    return _prune(root, _resolve_snapshot(root, as_of), filters)
 
 
 def scan(spark: SparkSession, root: str, *,
@@ -461,26 +525,21 @@ def scan(spark: SparkSession, root: str, *,
     flt = list(filters or [])
     if bbox is not None:
         flt += bbox_filters(*bbox, lon=lon, lat=lat)
-    keep, _total = scan_files(root, filters=flt, as_of=as_of)
-    m = _load_metadata(root)
+    # files and schema from ONE resolved snapshot: a racing commit can
+    # not pair one snapshot's files with another's columns. Reading with
+    # the SNAPSHOT's schema lets time travel across an overwrite see
+    # that snapshot's columns; files missing an evolved column read as
+    # null (additive evolution)
     snap = _resolve_snapshot(root, as_of)
-    # read with the SNAPSHOT's schema (recorded per commit), so time
-    # travel across an overwrite/evolution sees that snapshot's columns;
-    # files missing an evolved column read as null (additive evolution)
-    schema = T.StructType.fromJson(
-        json.loads(snap.get("schema", m["schema"])))
-    if not keep:
-        return spark.createDataFrame([], schema)
-    df = spark.read.schema(schema).parquet(
-        *[os.path.join(root, e["path"]) for e in keep])
+    keep, _total = _prune(root, snap, flt)
+    df = _read_files(spark, root, snap["schema"], keep)
     pred = _residual(flt)
     return df.where(pred) if pred is not None else df
 
 
 # ---------------------------------------------------------------- delete
 
-def delete(spark: SparkSession, root: str, *, filters: list[tuple],
-           max_retries: int = 5) -> dict:
+def delete(spark: SparkSession, root: str, *, filters: list[tuple]) -> dict:
     """Row-level DELETE, copy-on-write: remove every row matching the
     ``filters`` conjunction (same tuples as :func:`scan`) and commit the
     result as a new snapshot. Returns a summary dict.
@@ -497,80 +556,33 @@ def delete(spark: SparkSession, root: str, *, filters: list[tuple],
         raise ValueError("delete without filters would drop the table; "
                          "use commit(mode='overwrite') explicitly")
     pred = _residual(filters)
-    for _ in range(max_retries):
-        cur = _load_metadata(root)
+    out: dict = {}
+
+    def build(cur):
         if cur is None:
             raise FileNotFoundError("no committed snapshot under %s" % root)
-        parent = cur["current_snapshot_id"]
-        files = _load_manifest(root, parent)["files"]
-        touched = [e for e in files if _file_survives(e["stats"], filters)]
-        untouched = [e for e in files if not _file_survives(e["stats"],
-                                                            filters)]
+        touched, untouched = _split(_files(root, cur), filters)
+        out.update(deleted_rows=0, rewritten_files=0,
+                   untouched_files=len(untouched))
         if not touched:
-            return {"snapshot_id": parent, "deleted_rows": 0,
-                    "rewritten_files": 0, "untouched_files": len(files)}
-        schema = T.StructType.fromJson(json.loads(cur["schema"]))
-        src = spark.read.schema(schema).parquet(
-            *[os.path.join(root, e["path"]) for e in touched])
+            return cur["current_snapshot_id"]
         # delete WHERE pred; a row where pred is NULL (null in a
         # filtered column) is NOT matched and must be kept
-        kept = src.where(~F.coalesce(pred, F.lit(False)))
-        commit_uuid = uuid.uuid4().hex[:16]
-        data_dir = os.path.join(root, "data", commit_uuid)
-        kept.write.mode("overwrite").parquet(data_dir)
-        new_files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
-        stat_cols = [f.name for f in schema.fields
-                     if isinstance(f.dataType, _STAT_TYPES)]
-        entries = [e for e in _collect_stats(spark, new_files, stat_cols)
-                   if e["rows"] > 0]          # fully-deleted files vanish
-        for e in entries:
-            e["path"] = os.path.relpath(e["path"], root)
-        n_before = sum(e["rows"] for e in touched)
-        n_after = sum(e["rows"] for e in entries)
-        all_files = untouched + entries
-        snapshot_id = int(time.time() * 1000) * 1000 + (os.getpid() % 1000)
-        manifest = {"snapshot_id": snapshot_id, "files": all_files}
-        with open(os.path.join(_meta_dir(root),
-                               "snap-%d.manifest.json" % snapshot_id),
-                  "w") as f:
-            json.dump(manifest, f)
-        snap_rec = {"id": snapshot_id, "parent_id": parent,
-                    "ts": time.time(), "operation": "delete",
-                    "schema": cur["schema"],
-                    "summary": {"deleted_rows": n_before - n_after,
-                                "rewritten_files": len(touched),
-                                "total_files": len(all_files),
-                                "total_rows": sum(e["rows"]
-                                                  for e in all_files)}}
-        meta = {"format_version": 1, "table_uuid": cur["table_uuid"],
-                "schema": cur["schema"],
-                "current_snapshot_id": snapshot_id,
-                "snapshots": cur["snapshots"] + [snap_rec]}
-        version = cur["_version"]
-        try:
-            fd = os.open(_version_path(root, version + 1),
-                         os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            continue          # racer landed: re-derive the file split
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f, indent=1)
-        tmp = _hint_path(root) + ".tmp.%s" % commit_uuid
-        with open(tmp, "w") as f:
-            f.write(str(version + 1))
-        os.replace(tmp, _hint_path(root))
-        return {"snapshot_id": snapshot_id,
-                "deleted_rows": n_before - n_after,
-                "rewritten_files": len(touched),
-                "untouched_files": len(untouched)}
-    raise CommitConflict("delete lost %d races" % max_retries)
+        entries = _stage(_read_files(spark, root, cur["schema"], touched)
+                         .where(~F.coalesce(pred, F.lit(False))), root)
+        summary = {"deleted_rows": _rows(touched) - _rows(entries),
+                   "rewritten_files": len(touched)}
+        out.update(summary)
+        return _Snap(untouched + entries, cur["schema"], "delete", summary)
+
+    return {"snapshot_id": _claim(root, build), **out}
 
 
 # ----------------------------------------------------------------- upsert
 
 def upsert(df: DataFrame, root: str, *, key_col: str,
            cluster_by: tuple[str, str] | None = None,
-           zres: int = 16, n_files: int | None = None,
-           max_retries: int = 5) -> dict:
+           n_files: int | None = None) -> dict:
     """MERGE by key, copy-on-write, in ONE atomic snapshot: rows whose
     ``key_col`` appears in ``df`` are replaced, new keys are inserted.
     Returns a summary dict.
@@ -588,7 +600,7 @@ def upsert(df: DataFrame, root: str, *, key_col: str,
     if cluster_by is not None:
         lon, lat = cluster_by
         df = df.withColumn("zkey", C.morton_column(F.col(lon), F.col(lat),
-                                                   zres))
+                                                   ZRES))
     kmin, kmax = df.agg(F.min(key_col), F.max(key_col)).first()
     if kmin is None:
         m = _load_metadata(root)
@@ -599,98 +611,43 @@ def upsert(df: DataFrame, root: str, *, key_col: str,
     # stage the incoming rows once (their files are snapshot-agnostic)
     if n_files is not None:
         df = df.repartition(n_files)
-    stage_uuid = uuid.uuid4().hex[:16]
-    stage_dir = os.path.join(root, "data", stage_uuid)
-    df.write.mode("overwrite").parquet(stage_dir)
+    entries = _stage(df, root)
     schema_json = df.schema.json()
-    keys = spark.read.parquet(stage_dir).select(key_col).distinct()
+    keys = spark.read.parquet(*[os.path.join(root, e["path"])
+                                for e in entries]).select(key_col).distinct()
     n_incoming = keys.count()
+    overlap = [(key_col, "between", _plain(kmin), _plain(kmax))]
+    out: dict = {}
 
-    for _ in range(max_retries):
-        cur = _load_metadata(root)
+    def build(cur):
         if cur is None:
             raise FileNotFoundError(
                 "no committed snapshot under %s (use commit() to create)"
                 % root)
-        schema_json2 = (_evolve_schema(cur["schema"], schema_json)
-                        if cur["schema"] != schema_json else schema_json)
-        parent = cur["current_snapshot_id"]
-        files = _load_manifest(root, parent)["files"]
-        overlap = [(key_col, "between", _plain(kmin), _plain(kmax))]
-        touched = [e for e in files if _file_survives(e["stats"], overlap)]
-        untouched = [e for e in files
-                     if not _file_survives(e["stats"], overlap)]
-        schema = T.StructType.fromJson(json.loads(cur["schema"]))
-        stat_cols = [f.name for f in
-                     T.StructType.fromJson(json.loads(schema_json2)).fields
-                     if isinstance(f.dataType, _STAT_TYPES)]
+        touched, untouched = _split(_files(root, cur), overlap)
         rewritten: list[dict] = []
-        n_before = 0
         if touched:
-            src = spark.read.schema(schema).parquet(
-                *[os.path.join(root, e["path"]) for e in touched])
-            kept = src.join(F.broadcast(keys) if n_incoming < 2_000_000
-                            else keys, on=key_col, how="left_anti")
-            rw_uuid = uuid.uuid4().hex[:16]
-            rw_dir = os.path.join(root, "data", rw_uuid)
-            kept.write.mode("overwrite").parquet(rw_dir)
-            rw_files = sorted(glob.glob(os.path.join(rw_dir, "*.parquet")))
-            rewritten = [e for e in _collect_stats(spark, rw_files,
-                                                   stat_cols)
-                         if e["rows"] > 0]
-            n_before = sum(e["rows"] for e in touched)
-        staged_files = sorted(glob.glob(os.path.join(stage_dir,
-                                                     "*.parquet")))
-        entries = [e for e in _collect_stats(spark, staged_files, stat_cols)
-                   if e["rows"] > 0]
-        for e in rewritten + entries:
-            e["path"] = os.path.relpath(
-                e["path"], root) if os.path.isabs(e["path"]) else e["path"]
-        n_kept = sum(e["rows"] for e in rewritten)
-        n_new = sum(e["rows"] for e in entries)
-        all_files = untouched + rewritten + entries
-        snapshot_id = int(time.time() * 1000) * 1000 + (os.getpid() % 1000)
-        with open(os.path.join(_meta_dir(root),
-                               "snap-%d.manifest.json" % snapshot_id),
-                  "w") as f:
-            json.dump({"snapshot_id": snapshot_id, "files": all_files}, f)
-        replaced = n_before - n_kept
-        snap_rec = {"id": snapshot_id, "parent_id": parent,
-                    "ts": time.time(), "operation": "upsert",
-                    "schema": schema_json2,
-                    "summary": {"replaced_rows": replaced,
-                                "inserted_rows": n_new - replaced,
-                                "rewritten_files": len(touched),
-                                "total_files": len(all_files),
-                                "total_rows": sum(e["rows"]
-                                                  for e in all_files)}}
-        meta = {"format_version": 1, "table_uuid": cur["table_uuid"],
-                "schema": schema_json2,
-                "current_snapshot_id": snapshot_id,
-                "snapshots": cur["snapshots"] + [snap_rec]}
-        version = cur["_version"]
-        try:
-            fd = os.open(_version_path(root, version + 1),
-                         os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            continue
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f, indent=1)
-        tmp = _hint_path(root) + ".tmp.%s" % stage_uuid
-        with open(tmp, "w") as f:
-            f.write(str(version + 1))
-        os.replace(tmp, _hint_path(root))
-        return {"snapshot_id": snapshot_id, "replaced_rows": replaced,
-                "inserted_rows": n_new - replaced,
-                "rewritten_files": len(touched),
-                "untouched_files": len(untouched)}
-    raise CommitConflict("upsert lost %d races" % max_retries)
+            kept = _read_files(spark, root, cur["schema"], touched).join(
+                F.broadcast(keys) if n_incoming < 2_000_000 else keys,
+                on=key_col, how="left_anti")
+            rewritten = _stage(kept, root)
+        replaced = _rows(touched) - _rows(rewritten)
+        summary = {"replaced_rows": replaced,
+                   "inserted_rows": _rows(entries) - replaced,
+                   "rewritten_files": len(touched)}
+        out.update(summary, untouched_files=len(untouched))
+        schema = (_evolve_schema(cur["schema"], schema_json)
+                  if cur["schema"] != schema_json else schema_json)
+        return _Snap(untouched + rewritten + entries, schema, "upsert",
+                     summary)
+
+    return {"snapshot_id": _claim(root, build), **out}
 
 
 # ------------------------------------------------------------ compaction
 
-def compact(spark: SparkSession, root: str, *, target_bytes: int = 128 << 20,
-            max_retries: int = 5) -> dict:
+def compact(spark: SparkSession, root: str, *,
+            target_bytes: int = 128 << 20) -> dict:
     """Bin-pack small data files into ~``target_bytes`` files and commit
     the result as a new snapshot (operation='compact'). Files already at
     or above half the target are carried over untouched.
@@ -704,109 +661,62 @@ def compact(spark: SparkSession, root: str, *, target_bytes: int = 128 << 20,
     snapshot). Rows are re-sorted by zkey when present so the
     compacted files keep tight manifest stats for pruning.
     """
-    for _ in range(max_retries):
-        cur = _load_metadata(root)
+    out: dict = {}
+
+    def build(cur):
         if cur is None:
             raise FileNotFoundError("no committed snapshot under %s" % root)
-        parent = cur["current_snapshot_id"]
-        files = _load_manifest(root, parent)["files"]
+        files = _files(root, cur)
         small = [e for e in files if e["bytes"] < target_bytes // 2]
-        big = [e for e in files if e["bytes"] >= target_bytes // 2]
+        out.update(compacted_files=0, output_files=0)
         if len(small) <= 1:
-            return {"snapshot_id": parent, "compacted_files": 0,
-                    "output_files": 0}
-        schema = T.StructType.fromJson(json.loads(cur["schema"]))
-        src = spark.read.schema(schema).parquet(
-            *[os.path.join(root, e["path"]) for e in small])
-        n_out = max(1, int(sum(e["bytes"] for e in small) // target_bytes)
-                    + 1)
+            return cur["current_snapshot_id"]
+        src = _read_files(spark, root, cur["schema"], small)
+        n_out = int(sum(e["bytes"] for e in small) // target_bytes) + 1
         if "zkey" in src.columns:
             src = (src.repartitionByRange(n_out, "zkey")
                    .sortWithinPartitions("zkey"))
         else:
             src = src.coalesce(n_out)
-        commit_uuid = uuid.uuid4().hex[:16]
-        data_dir = os.path.join(root, "data", commit_uuid)
-        src.write.mode("overwrite").parquet(data_dir)
-        new_files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
-        stat_cols = [f.name for f in schema.fields
-                     if isinstance(f.dataType, _STAT_TYPES)]
-        entries = [e for e in _collect_stats(spark, new_files, stat_cols)
-                   if e["rows"] > 0]
-        for e in entries:
-            e["path"] = os.path.relpath(e["path"], root)
-        all_files = big + entries
-        snapshot_id = int(time.time() * 1000) * 1000 + (os.getpid() % 1000)
-        with open(os.path.join(_meta_dir(root),
-                               "snap-%d.manifest.json" % snapshot_id),
-                  "w") as f:
-            json.dump({"snapshot_id": snapshot_id, "files": all_files}, f)
-        snap_rec = {"id": snapshot_id, "parent_id": parent,
-                    "ts": time.time(), "operation": "compact",
-                    "schema": cur["schema"],
-                    "summary": {"compacted_files": len(small),
-                                "output_files": len(entries),
-                                "total_files": len(all_files),
-                                "total_rows": sum(e["rows"]
-                                                  for e in all_files)}}
-        meta = {"format_version": 1, "table_uuid": cur["table_uuid"],
-                "schema": cur["schema"],
-                "current_snapshot_id": snapshot_id,
-                "snapshots": cur["snapshots"] + [snap_rec]}
-        version = cur["_version"]
-        try:
-            fd = os.open(_version_path(root, version + 1),
-                         os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            continue
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f, indent=1)
-        tmp = _hint_path(root) + ".tmp.%s" % commit_uuid
-        with open(tmp, "w") as f:
-            f.write(str(version + 1))
-        os.replace(tmp, _hint_path(root))
-        return {"snapshot_id": snapshot_id, "compacted_files": len(small),
-                "output_files": len(entries)}
-    raise CommitConflict("compact lost %d races" % max_retries)
+        entries = _stage(src, root)
+        out.update(compacted_files=len(small), output_files=len(entries))
+        big = [e for e in files if e["bytes"] >= target_bytes // 2]
+        return _Snap(big + entries, cur["schema"], "compact", dict(out))
+
+    return {"snapshot_id": _claim(root, build), **out}
 
 
 # ---------------------------------------------------------------- vacuum
 
 def vacuum(root: str, *, keep_last: int = 1) -> dict:
-    """Expire all but the last ``keep_last`` snapshots and delete data
-    files no kept manifest references. Returns a summary dict."""
-    m = _load_metadata(root)
-    if m is None:
-        return {"removed_snapshots": 0, "removed_files": 0}
-    snaps = m["snapshots"]
-    kept, dropped = snaps[-keep_last:], snaps[:-keep_last]
-    if not any(s["id"] == m["current_snapshot_id"] for s in kept):
-        raise ValueError("keep_last would expire the current snapshot")
-    live: set[str] = set()
-    for s in kept:
-        for e in _load_manifest(root, s["id"])["files"]:
-            live.add(os.path.normpath(e["path"]))
-    removed_files = 0
-    for p in glob.glob(os.path.join(root, "data", "*", "*.parquet")):
-        if os.path.normpath(os.path.relpath(p, root)) not in live:
-            os.remove(p)
-            removed_files += 1
-    for d in glob.glob(os.path.join(root, "data", "*")):
-        if os.path.isdir(d) and not os.listdir(d):
+    """Expire all but the last ``keep_last`` snapshots; returns a
+    summary dict. The shortened history is claimed first; only then are
+    the files that expired manifests list and no kept manifest lists
+    deleted, with the expired manifests (see module doc)."""
+    hist: dict = {"kept": [], "expired": []}
+
+    def build(cur):
+        if cur is None:
+            return None
+        hist.update(kept=cur["snapshots"][-keep_last:],
+                    expired=cur["snapshots"][:-keep_last])
+        if not any(s["id"] == cur["current_snapshot_id"]
+                   for s in hist["kept"]):
+            raise ValueError("keep_last would expire the current snapshot")
+        return _Snap(None, cur["schema"],
+                     expire=frozenset(s["id"] for s in hist["expired"]))
+
+    _claim(root, build)
+    live = {e["path"] for s in hist["kept"]
+            for e in _load_manifest(root, s["id"])["files"]}
+    dead = {e["path"] for s in hist["expired"]
+            for e in _load_manifest(root, s["id"])["files"]} - live
+    for p in dead:
+        os.remove(os.path.join(root, p))
+    for d in {os.path.join(root, os.path.dirname(p)) for p in dead}:
+        if not glob.glob(os.path.join(d, "*.parquet")):
             shutil.rmtree(d)
-    for s in dropped:
-        mp = os.path.join(_meta_dir(root), "snap-%d.manifest.json" % s["id"])
-        if os.path.exists(mp):
-            os.remove(mp)
-    meta = dict(m)
-    version = meta.pop("_version")
-    meta["snapshots"] = kept
-    fd = os.open(_version_path(root, version + 1),
-                 os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as f:
-        json.dump(meta, f, indent=1)
-    tmp = _hint_path(root) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version + 1))
-    os.replace(tmp, _hint_path(root))
-    return {"removed_snapshots": len(dropped), "removed_files": removed_files}
+    for s in hist["expired"]:
+        os.remove(_manifest_path(root, s["id"]))
+    return {"removed_snapshots": len(hist["expired"]),
+            "removed_files": len(dead)}

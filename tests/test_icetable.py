@@ -110,29 +110,127 @@ def test_crash_before_version_claim_is_invisible(spark, tmp_path):
     assert ice.scan(spark, root).count() == 450
 
 
-def test_optimistic_retry_wins_race(spark, tmp_path, monkeypatch):
-    """A racing writer claims the version between our read and our
-    O_EXCL create — the commit must re-read and land on the NEXT
-    version with the racer's rows still present (lost-update-free)."""
-    root = str(tmp_path / "t")
-    ice.commit(_pts(spark, 100, seed=0), root)
-
+def _race_once(monkeypatch, racer):
+    """Run ``racer()`` once, inside the first ``os.open`` of a metadata
+    version: between a mutation's read of the current snapshot and its
+    ``O_EXCL`` claim of the next version."""
     raced = {"done": False}
     real_open = os.open
 
     def race_once(path, flags, *a, **k):
         if "metadata.json" in str(path) and not raced["done"]:
             raced["done"] = True
-            ice.commit(_pts(spark, 70, seed=5), root, mode="append")
+            racer()
         return real_open(path, flags, *a, **k)
 
     monkeypatch.setattr(os, "open", race_once)
-    ice.commit(_pts(spark, 30, seed=7), root, mode="append")
+    return raced
+
+
+_MUTATIONS = {   # mutation of a 100-row table (pids 0-99) -> rows it keeps
+    "commit": (lambda spark, root: ice.commit(
+        _pts(spark, 30, seed=7).withColumn("pid", F.col("pid") + 2000),
+        root, mode="append"), 130),
+    "delete": (lambda spark, root: ice.delete(
+        spark, root, filters=[("pid", "between", 90, 99)]), 90),
+    "upsert": (lambda spark, root: ice.upsert(
+        _pts(spark, 30, seed=7).withColumn("kind", F.lit(99)), root,
+        key_col="pid"), 100),
+    "compact": (lambda spark, root: ice.compact(
+        spark, root, target_bytes=1 << 20), 100),
+}
+
+
+@pytest.mark.parametrize("mutation", sorted(_MUTATIONS))
+def test_optimistic_retry_wins_race(spark, tmp_path, monkeypatch, mutation):
+    """A racing writer claims the version between our read and our
+    O_EXCL create — the mutation must re-read and land on the NEXT
+    version with the racer's rows still present (lost-update-free)."""
+    root = str(tmp_path / "t")
+    ice.commit(_pts(spark, 100, seed=0), root)
+    racer = _pts(spark, 70, seed=5).withColumn("pid", F.col("pid") + 1000)
+    raced = _race_once(monkeypatch, lambda: ice.commit(racer, root,
+                                                       mode="append"))
+    mutate, kept = _MUTATIONS[mutation]
+    mutate(spark, root)
     monkeypatch.undo()
-    assert ice.scan(spark, root).count() == 200       # 100 + 70 + 30
+    assert raced["done"]
+    got = ice.scan(spark, root)
+    assert got.where("pid >= 1000 AND pid < 2000").count() == 70
+    assert got.count() == kept + 70
     snaps = ice.snapshots(root)
     assert len(snaps) == 3
-    assert snaps[-1]["summary"]["total_rows"] == 200
+    assert snaps[-1]["operation"] == ("append" if mutation == "commit"
+                                      else mutation)
+    assert snaps[-1]["summary"]["total_rows"] == kept + 70
+
+
+def test_vacuum_keeps_racing_writers_staged_files(spark, tmp_path,
+                                                  monkeypatch):
+    """A vacuum landing between an append's staging and its claim must
+    not delete the append's staged (not yet listed) files."""
+    root = str(tmp_path / "t")
+    ice.commit(_pts(spark, 100, seed=0), root)
+    ice.commit(_pts(spark, 60, seed=1), root, mode="overwrite")
+    out = {}
+    _race_once(monkeypatch,
+               lambda: out.update(ice.vacuum(root, keep_last=1)))
+    ice.commit(_pts(spark, 30, seed=7).withColumn("pid", F.col("pid") + 1000),
+               root, mode="append")
+    monkeypatch.undo()
+    assert out["removed_snapshots"] == 1 and out["removed_files"] > 0
+    got = ice.scan(spark, root)
+    assert got.count() == 90
+    assert got.where("pid >= 1000").count() == 30
+    assert len(ice.snapshots(root)) == 2
+
+
+def test_upsert_relative_root(spark, tmp_path):
+    """Upsert's new files are listed relative to the table root when
+    the root itself is a relative path (as commit's already are)."""
+    root = os.path.relpath(tmp_path / "t")
+    ice.commit(_pts(spark, 200).repartitionByRange(4, "pid")
+               .sortWithinPartitions("pid"), root)
+    incoming = (spark.range(50, 60).union(spark.range(1000, 1005))
+                .select(F.col("id").alias("pid"),
+                        F.lit(0.0).alias("lon"), F.lit(0.0).alias("lat"),
+                        F.lit(99).cast("int").alias("kind")))
+    out = ice.upsert(incoming, root, key_col="pid")
+    assert out["replaced_rows"] == 10 and out["inserted_rows"] == 5
+    assert all(not os.path.isabs(e["path"])
+               and not e["path"].startswith("..")
+               for e in ice.scan_files(root)[0])
+    got = ice.scan(spark, root)
+    assert got.count() == 205
+    assert got.where("kind = 99").count() == 15
+
+
+def test_scan_reads_one_snapshot_under_racing_commit(spark, tmp_path,
+                                                     monkeypatch):
+    """An overwrite that replaces the schema and lands right after
+    scan's metadata read must not pair the old files with the new
+    columns: the scan sees one snapshot, files and schema alike."""
+    root = str(tmp_path / "t")
+    ice.commit(_pts(spark, 40, seed=0), root)
+    newer = _pts(spark, 10, seed=1).select("pid", F.col("lon").alias("x"))
+    real_load = ice._load_metadata
+    raced = {"done": False}
+
+    def load_then_race(r):
+        m = real_load(r)
+        if not raced["done"]:
+            raced["done"] = True
+            ice.commit(newer, root, mode="overwrite")
+        return m
+
+    monkeypatch.setattr(ice, "_load_metadata", load_then_race)
+    got = ice.scan(spark, root)
+    monkeypatch.undo()
+    assert raced["done"]
+    assert set(got.columns) == {"pid", "lon", "lat", "kind"}
+    assert got.count() == 40
+    assert got.where(F.col("lon").isNull()).count() == 0
+    assert set(ice.scan(spark, root).columns) == {"pid", "x"}
 
 
 def test_append_schema_guard(spark, tmp_path):
