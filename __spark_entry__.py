@@ -280,58 +280,6 @@ def q_fishnet_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fn.select("gid", "cell", area_r.alias("area_r"))
 
 
-# ============================================================ training-data ops
-
-
-def q_embed_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine nearest neighbor per embedding via the BLOCKED plan
-    (no driver-side corpus collect — round-1 review fix): corpus packed
-    into bounded matrix blocks, BNLJ over blocks, BLAS matmul per
-    (batch x block), global window pick on (round(cos,6) desc, id)."""
-    _tune(spark)
-    from gis_tools_spark.operators.simsearch import exact_topk_blocked
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return exact_topk_blocked(emb, k=1)
-
-
-ANN_PLANES = 6
-ANN_TABLES = 2
-ANN_SEED = 42
-
-# embedding near-dup gate config (fewer planes -> denser buckets so the
-# 500-row fixture yields a meaningful pair set; production default is
-# more planes scaled with log n)
-ND_PLANES = 5
-ND_TABLES = 3
-ND_SEED = 7
-ND_THRESH = 0.35
-
-
-def q_embed_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate NN via hyperplane LSH (the 100 TB scale path): bucket
-    equi-join on sign-pattern keys, exact cosine rescore of candidates,
-    window pick. Gated against a full SQL mirror of the SAME hyperplanes
-    (deterministic seed), so the oracle checks the LSH op itself, not a
-    brute-force stand-in."""
-    _tune(spark)
-    from pyspark.sql import Window
-    from gis_tools_spark.operators.simsearch import lsh_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cand = lsh_topk(emb, emb, k=1 << 30, dim=64, n_planes=ANN_PLANES,
-                    n_tables=ANN_TABLES, seed=ANN_SEED)
-    # re-rank on the 6-dp rounded cosine with id tie-break so the pick is
-    # bit-stable against the SQL oracle
-    w = Window.partitionBy("vec_id").orderBy(
-        F.round(F.col("cosine"), 6).desc(), F.col("neighbor_id"))
-    return (cand.withColumn("__rn", F.row_number().over(w))
-            .where("__rn = 1")
-            .select(F.col("vec_id").alias("id_a"),
-                    F.col("neighbor_id").alias("id_b"),
-                    F.round(F.col("cosine"), 6).alias("cos_r")))
-
-
 def q_sjoin_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generic geometry×geometry sjoin gated value-level: two rect
     layers derived from the deterministic event point grid (deltas 0.05
@@ -619,73 +567,6 @@ def q_jpeg_decode_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("psnr_orig") >= F.lit(40.0)).alias("ok_psnr"))
 
 
-def q_img_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image quality-signal gate (round-4: media.image_quality — the
-    brightness/contrast/blur/entropy filter columns an image training
-    pipeline scores first): deterministic 32x32 images seeded by doc_id
-    are built so every metric has an EXACT closed form — variant =
-    doc_id % 4 covers a constant field (raw), a two-value checkerboard
-    (png: Laplacian is +/-4d on the interior, variance exactly 16d^2),
-    a horizontal gradient (raw: linear, so interior Laplacian is
-    exactly 0; 32 equiprobable values, so entropy is exactly 5 bits)
-    and width-1 vertical stripes (lossless webp: Laplacian +/-2d,
-    variance 4d^2) — decoded through the REAL operator (exercising the
-    raw/png/VP8L decode paths) and every metric is integer-pinned at
-    1e-3 against the oracle's closed form."""
-    _tune(spark)
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where("doc_id % 31 = 0").select("doc_id"))
-
-    def _gen(it):
-        import numpy as _np
-        from gis_tools_spark.raster import codec as _codec
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                v = d % 4
-                if v == 0:
-                    c = (d * 37) % 256
-                    arr = _np.full((32, 32), c, dtype=_np.uint8)
-                    fmt = "raw"
-                elif v == 1:
-                    a = (d * 13) % 96
-                    dd = 64 + d % 64
-                    yy, xx = _np.mgrid[0:32, 0:32]
-                    arr = (a + dd * ((xx + yy) % 2)).astype(_np.uint8)
-                    fmt = "png"
-                elif v == 2:
-                    arr = _np.tile((8 * _np.arange(32, dtype=_np.uint8)),
-                                   (32, 1))
-                    fmt = "raw"
-                else:
-                    a = (d * 7) % 100
-                    dd = 40 + d % 80
-                    xx = _np.arange(32)
-                    arr = _np.tile((a + dd * (xx % 2)).astype(_np.uint8),
-                                   (32, 1))
-                    fmt = "webp"
-                rgb = _np.repeat(arr[:, :, None], 3, axis=2)
-                rows.append((d, v, _codec.encode(rgb, fmt), 32, 32, fmt))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "variant", "bytes", "w", "h", "fmt"])
-
-    imgs = docs.repartition(8).mapInPandas(
-        _gen, schema="doc_id long, variant int, bytes binary, w int, "
-                     "h int, fmt string")
-    from gis_tools_spark.raster.media import image_quality
-    q = image_quality(imgs)
-    r = lambda c: F.floor(F.col(c) * 1000.0 + F.lit(0.5)).cast("long")  # noqa: E731
-    return q.select(
-        "doc_id", "variant",
-        r("brightness").alias("brightness_r"),
-        r("contrast").alias("contrast_r"),
-        r("lap_var").alias("lap_var_r"),
-        r("entropy_bits").alias("entropy_r"),
-        r("dyn_range").alias("dyn_r"))
-
-
 def q_exif_gps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXIF ingest gate (round-4: raster/exif.py — the crawl->geotable
     step of the north-star pipeline): per doc_id a real JPEG gets an
@@ -848,54 +729,6 @@ def q_img_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = base.unionByName(dup)
     return hamming_dedup_clusters(df, hash_col="phash", id_col="image_id",
                                   max_hamming=3)
-
-
-def q_embed_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup PAIRS (dedup-family variant of ANN;
-    reference has no analog — LLM-pipeline op per the build brief):
-    LSH bucket equi-join + exact cosine rescore ≥ threshold. Gated
-    against a full SQL mirror of the SAME hyperplanes, so candidate
-    generation AND rescore are value-checked, not a brute-force
-    stand-in."""
-    _tune(spark)
-    from gis_tools_spark.operators.simsearch import embedding_near_dups
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = embedding_near_dups(emb, threshold=ND_THRESH, dim=64,
-                              n_planes=ND_PLANES, n_tables=ND_TABLES,
-                              seed=ND_SEED)
-    return out.orderBy("id_a", "id_b")
-
-
-IVF_M = 8        # modulo-centroid count for the gate
-IVF_NPROBE = 2   # probed buckets per query
-
-
-def q_embed_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-1 (the third similarity-search family, alongside
-    exact and LSH): coarse-quantizer bucket assignment → nprobe bucket
-    equi-join → exact cosine rescore → window pick. The gate injects the
-    deterministic modulo quantizer (centroid c = normalized mean of
-    normalized vectors with vec_id % m == c, components rounded to 6dp)
-    so the ENTIRE IVF plan — centroid construction, rounded-dot
-    assignment with centroid-id tie-break, probe join, rescore — is
-    mirrored value-level in the DuckDB oracle. Production path uses
-    train_centroids (k-means) instead; the plan shape is identical."""
-    _tune(spark)
-    from pyspark.sql import Window
-    from gis_tools_spark.operators.simsearch import ivf_topk, modulo_centroids
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    C = modulo_centroids(emb, n_centroids=IVF_M, round_dp=6)
-    cand = ivf_topk(emb, emb, k=1 << 30, n_centroids=IVF_M,
-                    nprobe=IVF_NPROBE, centroids=C, round_dp=6)
-    w = Window.partitionBy("vec_id").orderBy(
-        F.round(F.col("cosine"), 6).desc(), F.col("neighbor_id"))
-    return (cand.withColumn("__rn", F.row_number().over(w))
-            .where("__rn = 1")
-            .select(F.col("vec_id").alias("id_a"),
-                    F.col("neighbor_id").alias("id_b"),
-                    F.round(F.col("cosine"), 6).alias("cos_r")))
 
 
 def q_geohash_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1090,35 +923,6 @@ def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("n").cast("long").alias("n"),
                        F.round("wsum", 4).alias("wsum_r"))
             .orderBy("res", "cell"))
-
-
-SEM_M = 8          # semdedup coarse-quantizer cells for the gate
-SEM_THRESH = 0.35  # rounded-cosine duplicate threshold
-
-
-def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup DECISION (gate 70): semantic dedup over the embedding
-    table — nearest-centroid assignment confines the all-pairs cosine
-    comparison to clusters, threshold-passing pairs form the duplicate
-    graph, pointer-jumping components + keep-one-per-cluster produce one
-    decision row per vector (the published cluster-bounded semantic-dedup
-    recipe; reference has no analog — brief-scope pipeline op). The gate
-    injects the deterministic modulo quantizer (same construction as the
-    embed_ivf gate) so centroid build, rounded-dot top-1 assignment,
-    within-cluster rounded-cosine pairing, AND the component resolution
-    are all mirrored value-level in DuckDB (components via an independent
-    recursive CTE vs the engine's pointer jumping)."""
-    _tune(spark)
-    from gis_tools_spark.operators.simsearch import modulo_centroids, semdedup
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    C = modulo_centroids(emb, n_centroids=SEM_M, round_dp=6)
-    out = semdedup(emb, threshold=SEM_THRESH, centroids=C, round_dp=6)
-    return (out.select(F.col("vec_id"),
-                       F.col("sem_cluster").cast("int").alias("sem_cluster"),
-                       F.col("cluster_id").cast("long").alias("cluster_id"),
-                       F.col("keep").cast("int").alias("keep"))
-            .orderBy("vec_id"))
 
 
 def q_zonal_raster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2965,354 +2769,6 @@ def q_std_ellipse(spark: SparkSession, sf_dir: str) -> DataFrame:
         r6("theta_rad"), r6("sigma_x"), r6("sigma_y"))
 
 
-# ------------------------------------------------- image-training batch prep
-
-# SDXL-style aspect-ratio bucket list, shared verbatim by the Spark op
-# and the SQL oracle generator so the two can never drift.
-_AR_BUCKETS = [(512, 512), (576, 448), (448, 576), (640, 384), (384, 640),
-               (768, 320), (320, 768), (896, 256), (256, 896)]
-
-# deterministic per-doc image dims — same arithmetic in both engines
-_DIMS_SPARK = ("cast(64 + (doc_id * 7) % 961 as int) as w",
-               "cast(64 + (doc_id * 13) % 961 as int) as h")
-_DIMS_SQL = ("CAST(64 + (doc_id * 7) % 961 AS INT) AS w, "
-             "CAST(64 + (doc_id * 13) % 961 AS INT) AS h")
-
-
-def q_aspect_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aspect-ratio bucketing (operators/imgtrain.py): every image is
-    assigned the bucket minimizing the exact distortion factor
-    max(w·bh, h·bw)/min(w·bh, h·bw) (first-index tie-break via
-    array_position), plus the resize-to-cover/center-crop geometry —
-    the SDXL batching scheme as ONE codegen projection (the bucket
-    list unrolls to literal array expressions; zero shuffle, zero
-    Python).  The DuckDB oracle rebuilds the identical cost list from
-    the shared _AR_BUCKETS literal and replays argmin + the rounding
-    chain, so the value hash pins bucket choice, tie-breaks, and the
-    crop arithmetic."""
-    _tune(spark)
-    from gis_tools_spark.operators.imgtrain import aspect_bucket
-
-    dims = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .selectExpr("doc_id", *_DIMS_SPARK))
-    return aspect_bucket(dims, _AR_BUCKETS).select(
-        "doc_id", "w", "h", "bucket_idx", "bucket_w", "bucket_h",
-        "resize_w", "resize_h", "crop_x", "crop_y")
-
-
-def q_img_token_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ViT patch-token packing (operators/imgtrain.py): token count =
-    ceil(w/16)·ceil(h/16)+1 in codegen, then whole images greedy
-    first-fit into 4096-token blocks within contiguous id-range
-    buckets (images cannot straddle blocks; only (id, count) crosses
-    Arrow).  The dims derivation makes some rows exceed the budget, so
-    the oversize-sits-alone branch is exercised.  The DuckDB oracle
-    replays the bucket arithmetic and the greedy scan as a recursive
-    CTE, pinning every (block, block_pos) assignment."""
-    _tune(spark)
-    from gis_tools_spark.operators.imgtrain import pack_images
-
-    dims = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .selectExpr("doc_id", *_DIMS_SPARK))
-    return pack_images(dims, 4096, patch=16, n_buckets=8)
-
-
-_AUG_GATE_OPS = ("hflip", "rot90", "rot180", "crop:16x12")
-
-
-def q_img_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image augmentation (raster/media.augment_images): deterministic
-    photo-like images seeded by doc_id flow raw/png/lossless-webp
-    (variant = doc_id % 3) through decode → hflip/rot90/rot180/
-    center-crop → re-encode, then a second Arrow pass regenerates the
-    source array and checks the decoded output PIXEL-EXACT against
-    augment_array applied to it (lossless fmts end-to-end).  The
-    oracle states the closed form: one row per (doc, op), output dims
-    from the op's dim algebra, every ok TRUE."""
-    _tune(spark)
-    from gis_tools_spark.fixtures import _gen_pixels
-    from gis_tools_spark.raster import codec as rcodec
-    from gis_tools_spark.raster.media import augment_array, augment_images
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where("doc_id % 37 = 0").select("doc_id"))
-
-    def _gen(it):
-        import numpy as _np
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                prng = _np.random.default_rng(d * 104_729 + 3)
-                arr = _gen_pixels(prng, 24, 20, "png", sigma=1.2)
-                fmt = ("raw", "png", "webp")[d % 3]
-                rows.append((f"img{d:09d}", rcodec.encode(arr, fmt),
-                             20, 24, fmt, d))
-            yield pd.DataFrame(rows, columns=[
-                "image_id", "bytes", "w", "h", "fmt", "doc_id"])
-
-    imgs = docs.repartition(4).mapInPandas(
-        _gen, schema="image_id string, bytes binary, w int, h int, "
-                     "fmt string, doc_id long")
-    aug = augment_images(imgs, ops=_AUG_GATE_OPS)
-
-    def _check(it):
-        import numpy as _np
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                prng = _np.random.default_rng(int(r.doc_id) * 104_729 + 3)
-                src = _gen_pixels(prng, 24, 20, "png", sigma=1.2)
-                exp = augment_array(src, r.aug_op)
-                got = rcodec.decode(bytes(r.bytes), int(r.w), int(r.h),
-                                    r.fmt)
-                rows.append((int(r.doc_id), r.aug_op, int(r.w), int(r.h),
-                             bool(_np.array_equal(got, exp))))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "aug_op", "w", "h", "ok_pixels"])
-
-    return aug.mapInPandas(
-        _check, schema="doc_id long, aug_op string, w int, h int, "
-                       "ok_pixels boolean")
-
-
-def q_image_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataComp-style basic image+caption filter (imgtrain.image_filter):
-    first-match reject reasons too_small → extreme_aspect →
-    too_few_bytes → short_caption over metadata columns only — ONE
-    codegen projection, pixels never decoded (plan asserted Python-free
-    in pytest).  Dims/bytes/captions are synthesized from doc_id with
-    the identical arithmetic in DuckDB so all five branches (incl.
-    accept) fire and the rule ORDER is value-pinned."""
-    _tune(spark)
-    from gis_tools_spark.operators.imgtrain import image_filter
-
-    rows = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .selectExpr(
-                "doc_id", *_DIMS_SPARK,
-                "cast(repeat('x', cast(doc_id % 40 as int)) as binary)"
-                " as bytes",
-                "case when doc_id % 5 = 0 then 'hi'"
-                " else 'a reasonable caption' end as caption"))
-    out = image_filter(rows, min_side=128, max_aspect=3.0, min_bytes=16,
-                       min_caption_chars=5)
-    return out.select("doc_id", "w", "h", "keep", "reject_reason")
-
-
-def q_exif_orient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXIF orientation normalization (media.normalize_orientation):
-    deterministic smooth images seeded by doc_id are jpeg-encoded, an
-    APP1 orientation tag o = 1 + doc_id % 8 embedded (raster/exif.py
-    writer), then the REAL operator parses the tag, decodes, applies
-    the display transform and re-encodes (png out, so the transform is
-    checkable pixel-exact).  A second Arrow pass verifies: ok_exact —
-    decoded output equals exif_normalize_array applied to the decoded
-    stored jpeg (pins the orientation algebra end-to-end); ok_psnr —
-    ≥40 dB against the display-transformed ORIGINAL array (pins the
-    jpeg fidelity).  The oracle states the closed form: dims swap for
-    o ≥ 5, every ok TRUE."""
-    _tune(spark)
-    from gis_tools_spark.fixtures import _gen_pixels
-    from gis_tools_spark.raster import codec as rcodec, exif as rexif, jpeg
-    from gis_tools_spark.raster.media import (exif_normalize_array,
-                                              normalize_orientation)
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where("doc_id % 41 = 0").select("doc_id"))
-
-    def _gen(it):
-        import numpy as _np
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                o = 1 + d % 8
-                prng = _np.random.default_rng(d * 52_361 + 7)
-                arr = _gen_pixels(prng, 24, 20, "jpeg", sigma=1.0)
-                buf = jpeg.encode(arr, 95)
-                if o > 1:
-                    buf = rexif.embed_exif(
-                        buf, rexif.build_exif(orientation=o))
-                rows.append((f"img{d:09d}", buf, 20, 24, "jpeg", d))
-            yield pd.DataFrame(rows, columns=[
-                "image_id", "bytes", "w", "h", "fmt", "doc_id"])
-
-    imgs = docs.repartition(4).mapInPandas(
-        _gen, schema="image_id string, bytes binary, w int, h int, "
-                     "fmt string, doc_id long")
-    fixed = normalize_orientation(imgs, fmt_out="png")
-
-    def _check(it):
-        import numpy as _np
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                d = int(r.doc_id)
-                o = 1 + d % 8
-                prng = _np.random.default_rng(d * 52_361 + 7)
-                src = _gen_pixels(prng, 24, 20, "jpeg", sigma=1.0)
-                buf = jpeg.encode(src, 95)
-                stored = jpeg.decode(buf)
-                exp = exif_normalize_array(stored, o)
-                got = rcodec.decode(bytes(r.bytes), int(r.w), int(r.h),
-                                    r.fmt)
-                ok_exact = bool(_np.array_equal(got, exp))
-                ok_psnr = bool(rcodec.psnr(
-                    exif_normalize_array(src, o), got) >= 40.0)
-                rows.append((d, int(r.exif_orientation), int(r.w),
-                             int(r.h), ok_exact, ok_psnr))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "orientation", "w", "h", "ok_exact", "ok_psnr"])
-
-    return fixed.mapInPandas(
-        _check, schema="doc_id long, orientation int, w int, h int, "
-                       "ok_exact boolean, ok_psnr boolean")
-
-
-_PROFILE_COLS = ("event_id", "user_id", "event_type", "value", "ts_epoch")
-
-
-def q_dataset_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset profiler (operators/profile.py): per-column n / nulls /
-    EXACT distinct / min / max / 1e-6-rounded mean in ONE aggregation
-    pass (every stat an expression in a single agg; long format via
-    stack).  Integer and epoch columns give exact double sums so the
-    mean is bit-stable; the oracle recomputes each column's row with
-    plain SQL aggregates."""
-    _tune(spark)
-    from gis_tools_spark.operators.profile import dataset_profile
-
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
-          .selectExpr("event_id", "user_id", "event_type", "value",
-                      "unix_timestamp(ts) as ts_epoch"))
-    return dataset_profile(ev, list(_PROFILE_COLS), exact=True)
-
-
-def q_wds_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebDataset SINK round trip (sources/webdataset.wds_export):
-    deterministic png images + closed-form captions seeded by doc_id
-    are exported to 32-sample tar shards (deterministic global-rank
-    sharding via the bucketed prefix-sum — shard = rank//32 in
-    ascending doc_id order, byte-deterministic tar), then read back
-    through the engine's own wds_samples reader.  The oracle recomputes
-    the shard assignment as a window rank and the caption text, so the
-    value hash pins the sharding algebra AND the tar write/parse round
-    trip (a lost, duplicated or misattributed sample breaks it)."""
-    _tune(spark)
-    import tempfile
-
-    from gis_tools_spark.fixtures import _gen_pixels
-    from gis_tools_spark.raster import codec as rcodec
-    from gis_tools_spark.sources.webdataset import wds_export, wds_samples
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where("doc_id % 3 = 0").select("doc_id"))
-
-    def _gen(it):
-        import numpy as _np
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                prng = _np.random.default_rng(d * 9_973 + 1)
-                arr = _gen_pixels(prng, 8, 6, "png")
-                rows.append((d, rcodec.encode(arr, "png"), "png",
-                             f"cap for doc {d}"))
-            yield pd.DataFrame(rows, columns=[
-                "image_id", "bytes", "fmt", "caption"])
-
-    imgs = docs.repartition(4).mapInPandas(
-        _gen, schema="image_id long, bytes binary, fmt string, "
-                     "caption string")
-    out_dir = tempfile.mkdtemp(prefix="wds_export_gate_")
-    man = wds_export(imgs, out_dir, samples_per_shard=32,
-                     id_col="image_id", n_buckets=8).collect()
-    blobs = [(int(r.shard_id), open(r.path, "rb").read()) for r in man]
-    bdf = spark.createDataFrame(blobs, "shard_id long, bytes binary")
-    return (wds_samples(bdf)
-            .select(F.col("sample_key").cast("long").alias("doc_id"),
-                    "shard_id", "caption", "image_fmt", "ok"))
-
-
-def q_format_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Format sniffing / mislabel detection (imgtrain.format_check):
-    variant = doc_id % 4 builds a raw payload (magic-less → detected
-    NULL, never accused), a correctly-labeled png, a png MISLABELED as
-    jpeg (the crawl's Content-Type lie), and a correct jpeg — all
-    through the REAL encoders, sniffed by the pure-codegen hex-prefix
-    CASE (plan asserted Python-free in pytest; the DuckDB mirror of
-    the same rule table is agreement-tested there too).  The oracle
-    states the per-variant closed form."""
-    _tune(spark)
-    from gis_tools_spark.fixtures import _gen_pixels
-    from gis_tools_spark.operators.imgtrain import format_check
-    from gis_tools_spark.raster import codec as rcodec, jpeg
-
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where("doc_id % 7 = 0").select("doc_id"))
-
-    def _gen(it):
-        import numpy as _np
-        for pdf in it:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                v = d % 4
-                prng = _np.random.default_rng(d * 641 + 5)
-                arr = _gen_pixels(prng, 8, 8, "jpeg" if v == 3 else "png")
-                if v == 0:
-                    buf, fmt = rcodec.encode(arr, "raw"), "raw"
-                elif v == 1:
-                    buf, fmt = rcodec.encode(arr, "png"), "png"
-                elif v == 2:
-                    buf, fmt = rcodec.encode(arr, "png"), "jpeg"  # lie
-                else:
-                    buf, fmt = jpeg.encode(arr, 90), "jpeg"
-                rows.append((d, v, buf, fmt))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "variant", "bytes", "fmt"])
-
-    imgs = docs.repartition(4).mapInPandas(
-        _gen, schema="doc_id long, variant int, bytes binary, fmt string")
-    return (format_check(imgs)
-            .select("doc_id", "variant", "fmt", "fmt_detected",
-                    "fmt_mismatch"))
-
-
-def q_img_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END image curation (the DataComp-shaped composition):
-    metadata filter (image_filter, first-match reasons) → aspect-ratio
-    bucket assignment (aspect_bucket) on the survivors → ViT
-    token-budget packing (pack_images) of the survivors.  Each stage
-    is individually gated (90, 86, 87); this gate pins their
-    INTEGRATION — the packer's id-range bucket arithmetic runs over
-    the FILTERED id set (min/max move), the bucket argmin sees only
-    kept rows, and a drop or duplication anywhere in the chain breaks
-    the value hash.  The DuckDB oracle replays the full composition:
-    filter CASE → argmin list algebra → greedy recursive CTE."""
-    _tune(spark)
-    from gis_tools_spark.operators.imgtrain import (aspect_bucket,
-                                                    image_filter,
-                                                    pack_images)
-
-    rows = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .selectExpr(
-                "doc_id", *_DIMS_SPARK,
-                "cast(repeat('x', cast(doc_id % 40 as int)) as binary)"
-                " as bytes",
-                "case when doc_id % 5 = 0 then 'hi'"
-                " else 'a reasonable caption' end as caption"))
-    kept = (image_filter(rows, min_side=128, max_aspect=3.0,
-                         min_bytes=16, min_caption_chars=5)
-            .where(F.col("keep")))
-    bucketed = aspect_bucket(kept, _AR_BUCKETS)
-    packed = pack_images(bucketed, 4096, patch=16, n_buckets=8)
-    return (bucketed.select("doc_id", "bucket_idx")
-            .join(packed, on="doc_id")
-            .select("doc_id", "bucket_idx", "n_tokens", "block",
-                    "block_pos"))
-
-
 # ================================================= clustering / geostat / covers
 
 KMEANS_K, KMEANS_ITERS = 8, 3
@@ -5070,11 +4526,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "katana_split": q_katana_split,
         "centroid_boundary": q_centroid_boundary,
         "horizon": q_horizon,
-        "embed_top1": q_embed_top1,
-        "embed_ann_lsh": q_embed_ann_lsh,
-        "embed_near_dups": q_embed_near_dups,
-        "embed_ivf": q_embed_ivf,
-        "semdedup": q_semdedup,
         "tile_pyramid": q_tile_pyramid,
         "graph_pagerank": q_graph_pagerank,
         "geohash_encode": q_geohash_encode,
@@ -5093,19 +4544,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zorder_bbox": q_zorder_bbox,
         "icetable_scan": q_icetable_scan,
         "jpeg_decode_verify": q_jpeg_decode_verify,
-        "img_quality": q_img_quality,
         "gpkg_roundtrip": q_gpkg_roundtrip,
         "exif_gps": q_exif_gps,
         "img_dedup_keep": q_img_dedup_keep,
-        "aspect_buckets": q_aspect_buckets,
-        "img_token_pack": q_img_token_pack,
-        "img_augment": q_img_augment,
-        "image_filter": q_image_filter,
-        "exif_orient": q_exif_orient,
-        "dataset_profile": q_dataset_profile,
-        "wds_export": q_wds_export,
-        "format_check": q_format_check,
-        "img_curation_pipeline": q_img_curation_pipeline,
         "wds_pipeline": q_wds_pipeline,
         "pricing_summary": q_pricing_summary,
         "graph_components": q_graph_components,
@@ -5167,276 +4608,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # ---------------------------------------------------------- SQL oracle builders
-
-
-def _aspect_buckets_oracle_sql() -> str:
-    """DuckDB mirror of q_aspect_buckets, generated from the SAME
-    _AR_BUCKETS literal: identical cost doubles, list argmin with
-    first-index semantics (list_position = Spark array_position), and
-    the identical scale/round/crop chain."""
-    costs = ", ".join(
-        f"greatest(w * {int(bh)}.0, h * {int(bw)}.0)"
-        f" / least(w * {int(bh)}.0, h * {int(bw)}.0)"
-        for bw, bh in _AR_BUCKETS)
-    bws = ", ".join(str(int(bw)) for bw, _ in _AR_BUCKETS)
-    bhs = ", ".join(str(int(bh)) for _, bh in _AR_BUCKETS)
-    return f"""
-        WITH t AS (
-          SELECT doc_id, {_DIMS_SQL} FROM documents
-        ), c AS (
-          SELECT doc_id, w, h,
-                 list_position([{costs}], list_min([{costs}])) AS pos
-          FROM t
-        ), g AS (
-          SELECT doc_id, w, h, pos,
-                 CAST(([{bws}])[pos] AS INT) AS bucket_w,
-                 CAST(([{bhs}])[pos] AS INT) AS bucket_h
-          FROM c
-        ), s AS (
-          SELECT *,
-                 greatest(CAST(bucket_w AS DOUBLE) / CAST(w AS DOUBLE),
-                          CAST(bucket_h AS DOUBLE) / CAST(h AS DOUBLE))
-                   AS scale
-          FROM g
-        ), r AS (
-          SELECT *,
-            greatest(CAST(floor(CAST(w AS DOUBLE) * scale + 0.5) AS INT),
-                     bucket_w) AS resize_w,
-            greatest(CAST(floor(CAST(h AS DOUBLE) * scale + 0.5) AS INT),
-                     bucket_h) AS resize_h
-          FROM s
-        )
-        SELECT doc_id, w, h, CAST(pos - 1 AS INT) AS bucket_idx,
-               bucket_w, bucket_h, resize_w, resize_h,
-               CAST(floor((resize_w - bucket_w) / 2) AS INT) AS crop_x,
-               CAST(floor((resize_h - bucket_h) / 2) AS INT) AS crop_y
-        FROM r
-    """
-
-
-def _img_token_pack_oracle_sql() -> str:
-    """DuckDB mirror of q_img_token_pack: the identical bucket-range
-    arithmetic (width = (max-min)//n_buckets + 1) and the greedy
-    first-fit scan replayed as a recursive CTE over per-bucket row
-    numbers — pins every (block, block_pos) assignment and the
-    oversize branch."""
-    return f"""
-        WITH RECURSIVE d AS (
-          SELECT doc_id, {_DIMS_SQL} FROM documents
-        ), b AS (
-          SELECT min(doc_id) AS mn,
-                 greatest(1, (max(doc_id) - min(doc_id)) // 8 + 1) AS wd
-          FROM d
-        ), t AS (
-          SELECT doc_id,
-                 CAST(ceil(w / 16.0) * ceil(h / 16.0) + 1 AS BIGINT) AS n,
-                 CAST((doc_id - b.mn) // b.wd AS BIGINT) AS bucket,
-                 row_number() OVER (
-                   PARTITION BY CAST((doc_id - b.mn) // b.wd AS BIGINT)
-                   ORDER BY doc_id) AS rn
-          FROM d, b
-        ), r AS (
-          SELECT bucket, rn, doc_id, n, n AS fill,
-                 CAST(0 AS BIGINT) AS block, CAST(0 AS BIGINT) AS pos
-          FROM t WHERE rn = 1
-          UNION ALL
-          SELECT t.bucket, t.rn, t.doc_id, t.n,
-                 CASE WHEN r.fill + t.n > 4096 THEN t.n
-                      ELSE r.fill + t.n END,
-                 CASE WHEN r.fill + t.n > 4096 THEN r.block + 1
-                      ELSE r.block END,
-                 CASE WHEN r.fill + t.n > 4096 THEN 0 ELSE r.pos + 1 END
-          FROM r JOIN t ON t.bucket = r.bucket AND t.rn = r.rn + 1
-        )
-        SELECT doc_id, n AS n_tokens, bucket, block, pos AS block_pos,
-               n > 4096 AS oversize
-        FROM r
-    """
-
-
-def _image_filter_oracle_sql() -> str:
-    """DuckDB mirror of q_image_filter: identical dims/bytes/caption
-    synthesis and the identical first-match CASE chain."""
-    return f"""
-        WITH t AS (
-          SELECT doc_id, {_DIMS_SQL},
-                 octet_length(encode(repeat('x',
-                   CAST(doc_id % 40 AS INT)))) AS nb,
-                 CASE WHEN doc_id % 5 = 0 THEN 'hi'
-                      ELSE 'a reasonable caption' END AS caption
-          FROM documents
-        ), r AS (
-          SELECT doc_id, w, h,
-                 CASE
-                   WHEN least(CAST(w AS DOUBLE), CAST(h AS DOUBLE)) < 128
-                     THEN 'too_small'
-                   WHEN greatest(CAST(w AS DOUBLE), CAST(h AS DOUBLE))
-                        / least(CAST(w AS DOUBLE), CAST(h AS DOUBLE)) > 3.0
-                     THEN 'extreme_aspect'
-                   WHEN nb < 16 THEN 'too_few_bytes'
-                   WHEN length(trim(coalesce(caption, ''))) < 5
-                     THEN 'short_caption'
-                 END AS reject_reason
-          FROM t
-        )
-        SELECT doc_id, w, h, reject_reason IS NULL AS keep, reject_reason
-        FROM r
-    """
-
-
-def _dataset_profile_oracle_sql() -> str:
-    """DuckDB mirror of q_dataset_profile: one UNION ALL branch per
-    profiled column recomputing the identical stats (exact distinct,
-    double min/max, 1e-6-rounded mean over an exact-in-double sum)."""
-    num_cols = {"event_id", "user_id", "value", "ts_epoch"}
-    parts = []
-    for c in _PROFILE_COLS:
-        if c in num_cols:
-            mn = f"CAST(min({c}) AS DOUBLE)"
-            mx = f"CAST(max({c}) AS DOUBLE)"
-            av = f"floor(avg(CAST({c} AS DOUBLE)) * 1e6 + 0.5) / 1e6"
-            ms = xs = "CAST(NULL AS VARCHAR)"
-        else:
-            mn = mx = av = "CAST(NULL AS DOUBLE)"
-            ms, xs = f"min({c})", f"max({c})"
-        parts.append(f"""
-          SELECT '{c}' AS "column", count(*) AS n,
-                 count(*) - count({c}) AS n_null,
-                 count(DISTINCT {c}) AS n_distinct,
-                 {mn} AS min_num, {mx} AS max_num, {av} AS mean_num,
-                 {ms} AS min_str, {xs} AS max_str
-          FROM e""")
-    body = " UNION ALL ".join(parts)
-    return f"""
-        WITH e AS (
-          SELECT event_id, user_id, event_type, value,
-                 CAST(floor(epoch(ts)) AS BIGINT) AS ts_epoch
-          FROM events
-        )
-        {body}
-    """
-
-
-def _img_curation_oracle_sql() -> str:
-    """DuckDB mirror of q_img_curation_pipeline — the gate-90 filter
-    CASE, the gate-86 argmin list algebra, and the gate-87 greedy
-    recursive CTE composed over the SAME shared literals, with the
-    packer's id-range arithmetic computed over the FILTERED set."""
-    costs = ", ".join(
-        f"greatest(w * {int(bh)}.0, h * {int(bw)}.0)"
-        f" / least(w * {int(bh)}.0, h * {int(bw)}.0)"
-        for bw, bh in _AR_BUCKETS)
-    return f"""
-        WITH RECURSIVE base AS (
-          SELECT doc_id, {_DIMS_SQL},
-                 octet_length(encode(repeat('x',
-                   CAST(doc_id % 40 AS INT)))) AS nb,
-                 CASE WHEN doc_id % 5 = 0 THEN 'hi'
-                      ELSE 'a reasonable caption' END AS caption
-          FROM documents
-        ), kept AS (
-          SELECT doc_id, w, h FROM base
-          WHERE CASE
-                  WHEN least(CAST(w AS DOUBLE), CAST(h AS DOUBLE)) < 128
-                    THEN 'too_small'
-                  WHEN greatest(CAST(w AS DOUBLE), CAST(h AS DOUBLE))
-                       / least(CAST(w AS DOUBLE), CAST(h AS DOUBLE)) > 3.0
-                    THEN 'extreme_aspect'
-                  WHEN nb < 16 THEN 'too_few_bytes'
-                  WHEN length(trim(coalesce(caption, ''))) < 5
-                    THEN 'short_caption'
-                END IS NULL
-        ), c AS (
-          SELECT doc_id,
-                 list_position([{costs}], list_min([{costs}])) AS pos
-          FROM kept
-        ), bb AS (
-          SELECT min(doc_id) AS mn,
-                 greatest(1, (max(doc_id) - min(doc_id)) // 8 + 1) AS wd
-          FROM kept
-        ), t AS (
-          SELECT doc_id,
-                 CAST(ceil(w / 16.0) * ceil(h / 16.0) + 1 AS BIGINT) AS n,
-                 CAST((doc_id - bb.mn) // bb.wd AS BIGINT) AS bucket,
-                 row_number() OVER (
-                   PARTITION BY CAST((doc_id - bb.mn) // bb.wd AS BIGINT)
-                   ORDER BY doc_id) AS rn
-          FROM kept, bb
-        ), r AS (
-          SELECT bucket, rn, doc_id, n, n AS fill,
-                 CAST(0 AS BIGINT) AS block, CAST(0 AS BIGINT) AS pos
-          FROM t WHERE rn = 1
-          UNION ALL
-          SELECT t.bucket, t.rn, t.doc_id, t.n,
-                 CASE WHEN r.fill + t.n > 4096 THEN t.n
-                      ELSE r.fill + t.n END,
-                 CASE WHEN r.fill + t.n > 4096 THEN r.block + 1
-                      ELSE r.block END,
-                 CASE WHEN r.fill + t.n > 4096 THEN 0 ELSE r.pos + 1 END
-          FROM r JOIN t ON t.bucket = r.bucket AND t.rn = r.rn + 1
-        )
-        SELECT r.doc_id, CAST(c.pos - 1 AS INT) AS bucket_idx,
-               r.n AS n_tokens, r.block, r.pos AS block_pos
-        FROM r JOIN c USING (doc_id)
-    """
-
-
-def _semdedup_oracle_sql(m: int = 8, threshold: float = 0.35) -> str:
-    """DuckDB mirror of q_semdedup: modulo-centroid construction and
-    rounded-dot top-1 assignment copied from the embed_ivf oracle
-    (rn = 1), within-cluster pairs kept at round(cosine, 6) >= threshold,
-    duplicate components resolved by an independent recursive
-    min-reachability CTE, then the keep decision + sem_cluster join."""
-    return f"""
-WITH RECURSIVE e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), n AS (
-  SELECT vec_id, CAST(vec_id % {m} AS INT) AS c,
-         list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS vn
-  FROM e
-), dims AS (
-  SELECT unnest(generate_series(1, 64)) AS d
-), cm AS (
-  SELECT c, d, avg(vn[d]) AS m FROM n CROSS JOIN dims GROUP BY c, d
-), cn AS (
-  SELECT cm.c, cm.d, round(cm.m / sqrt(t.s2), 6) AS cmr
-  FROM cm JOIN (SELECT c, sum(m * m) AS s2 FROM cm GROUP BY c) t
-    ON cm.c = t.c
-), dots AS (
-  SELECT n.vec_id, cn.c, round(sum(n.vn[cn.d] * cn.cmr), 6) AS dot
-  FROM n CROSS JOIN cn GROUP BY n.vec_id, cn.c
-), assign AS (
-  SELECT vec_id, c FROM (
-    SELECT vec_id, c,
-      row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, c) AS rn
-    FROM dots) WHERE rn = 1
-), pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM assign a JOIN assign b ON a.c = b.c AND a.vec_id < b.vec_id
-  JOIN n na ON na.vec_id = a.vec_id
-  JOIN n nb ON nb.vec_id = b.vec_id
-  WHERE round(list_dot_product(na.vn, nb.vn), 6) >= {threshold}
-), ed AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION
-  SELECT id_b AS a, id_a AS b FROM pairs
-), nodes AS (SELECT DISTINCT a AS node FROM ed),
-reach AS (
-  SELECT node, node AS comp FROM nodes
-  UNION
-  SELECT ed.a AS node, r.comp FROM ed JOIN reach r ON ed.b = r.node
-),
-comp AS (SELECT node, min(comp) AS cluster FROM reach GROUP BY node)
-SELECT e.vec_id,
-       CAST(a.c AS INTEGER) AS sem_cluster,
-       CAST(coalesce(c.cluster, e.vec_id) AS BIGINT) AS cluster_id,
-       CAST(CASE WHEN coalesce(c.cluster, e.vec_id) = e.vec_id
-                 THEN 1 ELSE 0 END AS INTEGER) AS keep
-FROM e
-JOIN assign a ON a.vec_id = e.vec_id
-LEFT JOIN comp c ON c.node = e.vec_id
-ORDER BY e.vec_id
-"""
 
 
 def _s2_cells_oracle_sql() -> str:
@@ -5996,120 +5167,6 @@ FROM ang GROUP BY pid, sector
 """
 
 
-def _near_dup_oracle_sql() -> str:
-    """SQL mirror of embedding_near_dups: the SAME deterministic
-    hyperplanes (inlined), sign-pattern bucket keys with the table tag
-    in bits 48+, bucket-join candidates with id_a < id_b, exact cosine
-    rescore rounded to 6 dp, threshold filter on the rounded value
-    (both sides filter post-rounding, so no boundary flips)."""
-    import numpy as np
-
-    from gis_tools_spark.operators.simsearch import _hyperplanes
-
-    rows = []
-    for t in range(ND_TABLES):
-        P = _hyperplanes(64, ND_PLANES, ND_SEED + t)
-        for p in range(ND_PLANES):
-            for d in range(64):
-                rows.append(f"({t},{p},{d},{P[p, d]!r})")
-    plane_rows = ",".join(rows)
-    return f"""
-WITH planes(t, p, d, w) AS (VALUES {plane_rows}),
-vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-dots AS (
-  SELECT vec_id, planes.t, planes.p, sum(v[planes.d + 1] * planes.w) AS dot
-  FROM vecs CROSS JOIN planes
-  GROUP BY vec_id, planes.t, planes.p
-),
-keys AS (
-  SELECT vec_id,
-    CAST(t AS BIGINT) * 281474976710656
-    + sum(CASE WHEN dot > 0 THEN (1::BIGINT << p) ELSE 0 END) AS bucket
-  FROM dots GROUP BY vec_id, t
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM keys a JOIN keys b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-),
-pairdim AS (
-  SELECT c.id_a, c.id_b,
-         va.v[dd.d] * vb.v[dd.d] AS xy,
-         va.v[dd.d] * va.v[dd.d] AS xx,
-         vb.v[dd.d] * vb.v[dd.d] AS yy
-  FROM cand c
-  JOIN vecs va ON va.vec_id = c.id_a
-  JOIN vecs vb ON vb.vec_id = c.id_b
-  CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS d) dd
-),
-scored AS (
-  SELECT id_a, id_b,
-         round(sum(xy) / (sqrt(sum(xx)) * sqrt(sum(yy))), 6) AS cos_r
-  FROM pairdim GROUP BY id_a, id_b
-)
-SELECT id_a, id_b, cos_r FROM scored
-WHERE cos_r >= {ND_THRESH}
-ORDER BY id_a, id_b
-"""
-
-
-def _ann_lsh_oracle_sql() -> str:
-    """Full SQL mirror of the hyperplane-LSH ANN gate: the SAME
-    deterministic hyperplanes (inlined literals), sign-pattern bucket
-    keys, bucket-join candidates, exact cosine rescore, rounded-cosine
-    rank pick."""
-    import numpy as np
-
-    from gis_tools_spark.operators.simsearch import _hyperplanes
-
-    rows = []
-    for t in range(ANN_TABLES):
-        P = _hyperplanes(64, ANN_PLANES, ANN_SEED + t)
-        for p in range(ANN_PLANES):
-            for d in range(64):
-                rows.append(f"({t},{p},{d},{P[p, d]!r})")
-    plane_rows = ",".join(rows)
-    return f"""
-WITH planes(t, p, d, w) AS (VALUES {plane_rows}),
-vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-dots AS (
-  SELECT vec_id, planes.t, planes.p, sum(v[planes.d + 1] * planes.w) AS dot
-  FROM vecs CROSS JOIN planes
-  GROUP BY vec_id, planes.t, planes.p
-),
-keys AS (
-  SELECT vec_id,
-    CAST(t AS BIGINT) * 281474976710656
-    + sum(CASE WHEN dot > 0 THEN (1::BIGINT << p) ELSE 0 END) AS bucket
-  FROM dots GROUP BY vec_id, t
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM keys a JOIN keys b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-),
-pairdim AS (
-  SELECT c.id_a, c.id_b,
-         va.v[dd.d] * vb.v[dd.d] AS xy,
-         va.v[dd.d] * va.v[dd.d] AS xx,
-         vb.v[dd.d] * vb.v[dd.d] AS yy
-  FROM cand c
-  JOIN vecs va ON va.vec_id = c.id_a
-  JOIN vecs vb ON vb.vec_id = c.id_b
-  CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS d) dd
-),
-scored AS (
-  SELECT id_a, id_b,
-         round(sum(xy) / (sqrt(sum(xx)) * sqrt(sum(yy))), 6) AS cos_r
-  FROM pairdim GROUP BY id_a, id_b
-),
-ranked AS (
-  SELECT id_a, id_b, cos_r,
-         row_number() OVER (PARTITION BY id_a ORDER BY cos_r DESC, id_b) AS rn
-  FROM scored
-)
-SELECT id_a, id_b, cos_r FROM ranked WHERE rn = 1
-"""
-
-
 _PIP_PAIRS_SQL = f"""
 SELECT p.event_id, z.gid
 FROM ({DT.POINTS_SQL.strip()}) p
@@ -6372,7 +5429,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT gid, cell, CAST(floor(a * 1e9 + 0.5) AS BIGINT) AS area_r
             FROM p WHERE a > 1e-12
         """,
-        "semdedup": _semdedup_oracle_sql(SEM_M, SEM_THRESH),
         "tile_pyramid": _tile_pyramid_oracle_sql(PYR_RES_MIN, PYR_RES_MAX),
         "graph_pagerank": _pagerank_oracle_sql(PR_ITERS, PR_DAMP),
         "geohash_encode": f"""
@@ -6465,54 +5521,6 @@ def oracle_sql() -> dict[str, str]:
                    TRUE AS ok_psnr
             FROM documents
             WHERE doc_id % 13 = 0
-        """,
-        "img_quality": """
-            WITH p AS (
-                SELECT doc_id,
-                       CAST(doc_id % 4 AS INTEGER) AS variant,
-                       (doc_id * 37) % 256 AS c,
-                       (doc_id * 13) % 96 AS a1,
-                       64 + doc_id % 64 AS d1,
-                       (doc_id * 7) % 100 AS a3,
-                       40 + doc_id % 80 AS d3
-                FROM documents
-                WHERE doc_id % 31 = 0
-            )
-            SELECT doc_id, variant,
-                   CASE variant
-                        WHEN 0 THEN c * 1000
-                        WHEN 1 THEN CAST(floor((a1 + d1 / 2.0) * 1000.0
-                                               + 0.5) AS BIGINT)
-                        WHEN 2 THEN 124000
-                        ELSE CAST(floor((a3 + d3 / 2.0) * 1000.0 + 0.5)
-                                  AS BIGINT)
-                   END AS brightness_r,
-                   CASE variant
-                        WHEN 0 THEN 0
-                        WHEN 1 THEN d1 * 500
-                        WHEN 2 THEN CAST(floor(sqrt(5456.0) * 1000.0 + 0.5)
-                                         AS BIGINT)
-                        ELSE d3 * 500
-                   END AS contrast_r,
-                   CASE variant
-                        WHEN 0 THEN 0
-                        WHEN 1 THEN 16 * d1 * d1 * 1000
-                        WHEN 2 THEN 0
-                        ELSE 4 * d3 * d3 * 1000
-                   END AS lap_var_r,
-                   CASE variant
-                        WHEN 0 THEN 0
-                        WHEN 1 THEN 1000
-                        WHEN 2 THEN 5000
-                        ELSE 1000
-                   END AS entropy_r,
-                   CASE variant
-                        WHEN 0 THEN 0
-                        WHEN 1 THEN d1 * 1000
-                        WHEN 2 THEN 248000
-                        ELSE d3 * 1000
-                   END AS dyn_r
-            FROM p
         """,
         "zonal_raster_stats": _zonal_oracle_sql(),
         "geotiff_zonal": _zonal_oracle_sql(),
@@ -7396,56 +6404,6 @@ def oracle_sql() -> dict[str, str]:
                              THEN 1 ELSE 0 END AS INTEGER) AS keep
             FROM rows_ d LEFT JOIN comp c ON c.node = d.image_id
         """,
-        "aspect_buckets": _aspect_buckets_oracle_sql(),
-        "img_token_pack": _img_token_pack_oracle_sql(),
-        "image_filter": _image_filter_oracle_sql(),
-        "img_curation_pipeline": _img_curation_oracle_sql(),
-        "dataset_profile": _dataset_profile_oracle_sql(),
-        "wds_export": """
-            SELECT doc_id,
-                   CAST((row_number() OVER (ORDER BY doc_id) - 1) // 32
-                        AS BIGINT) AS shard_id,
-                   'cap for doc ' || CAST(doc_id AS VARCHAR) AS caption,
-                   'png' AS image_fmt,
-                   TRUE AS ok
-            FROM documents WHERE doc_id % 3 = 0
-        """,
-        "format_check": """
-            SELECT doc_id,
-                   CAST(doc_id % 4 AS INT) AS variant,
-                   (CASE doc_id % 4 WHEN 0 THEN 'raw' WHEN 1 THEN 'png'
-                                    WHEN 2 THEN 'jpeg'
-                                    ELSE 'jpeg' END) AS fmt,
-                   (CASE doc_id % 4 WHEN 0 THEN NULL WHEN 1 THEN 'png'
-                                    WHEN 2 THEN 'png'
-                                    ELSE 'jpeg' END) AS fmt_detected,
-                   (doc_id % 4 = 2) AS fmt_mismatch
-            FROM documents WHERE doc_id % 7 = 0
-        """,
-        "exif_orient": """
-            SELECT doc_id,
-                   CAST(1 + doc_id % 8 AS INT) AS orientation,
-                   CAST(CASE WHEN 1 + doc_id % 8 >= 5
-                             THEN 24 ELSE 20 END AS INT) AS w,
-                   CAST(CASE WHEN 1 + doc_id % 8 >= 5
-                             THEN 20 ELSE 24 END AS INT) AS h,
-                   TRUE AS ok_exact, TRUE AS ok_psnr
-            FROM documents WHERE doc_id % 41 = 0
-        """,
-        "img_augment": """
-            SELECT doc_id, op AS aug_op,
-                   CAST(CASE op WHEN 'rot90' THEN 24
-                                WHEN 'crop:16x12' THEN 16
-                                ELSE 20 END AS INT) AS w,
-                   CAST(CASE op WHEN 'rot90' THEN 20
-                                WHEN 'crop:16x12' THEN 12
-                                ELSE 24 END AS INT) AS h,
-                   TRUE AS ok_pixels
-            FROM documents,
-                 (VALUES ('hflip'), ('rot90'), ('rot180'),
-                         ('crop:16x12')) v(op)
-            WHERE doc_id % 37 = 0
-        """,
         "exif_gps": """
             SELECT doc_id,
                    TRUE AS ok,
@@ -7809,8 +6767,6 @@ SELECT CAST(floor(gix / 2) AS BIGINT) AS ogix,
 FROM px GROUP BY 1, 2
 """,
         "horizon": _horizon_oracle_sql(),
-        "embed_ann_lsh": _ann_lsh_oracle_sql(),
-        "embed_near_dups": _near_dup_oracle_sql(),
         "sjoin_rects": """
             WITH p AS (
               SELECT event_id,
@@ -7864,63 +6820,6 @@ FROM px GROUP BY 1, 2
             FROM a JOIN b
               ON b.mnx <= a.mnx AND a.mxx <= b.mxx
              AND b.mny <= a.mny AND a.mxy <= b.mxy
-        """,
-        "embed_ivf": f"""
-            WITH e AS (
-              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-            ), n AS (
-              SELECT vec_id, CAST(vec_id % {IVF_M} AS INT) AS c,
-                     list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS vn
-              FROM e
-            ), dims AS (
-              SELECT unnest(generate_series(1, 64)) AS d
-            ), cm AS (            -- per-class per-dim mean of normalized vectors
-              SELECT c, d, avg(vn[d]) AS m
-              FROM n CROSS JOIN dims GROUP BY c, d
-            ), cn AS (            -- normalized + 6dp-rounded centroids
-              SELECT cm.c, cm.d, round(cm.m / sqrt(t.s2), 6) AS cmr
-              FROM cm JOIN (SELECT c, sum(m * m) AS s2 FROM cm GROUP BY c) t
-                ON cm.c = t.c
-            ), dots AS (          -- rounded dot(vec, centroid) for every pair
-              SELECT n.vec_id, cn.c, round(sum(n.vn[cn.d] * cn.cmr), 6) AS dot
-              FROM n CROSS JOIN cn GROUP BY n.vec_id, cn.c
-            ), ranked AS (
-              SELECT vec_id, c,
-                row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, c) AS rn
-              FROM dots
-            ), cb AS (
-              SELECT vec_id AS id_b, c FROM ranked WHERE rn = 1
-            ), qb AS (
-              SELECT vec_id AS id_a, c FROM ranked WHERE rn <= {IVF_NPROBE}
-            ), cand AS (
-              SELECT DISTINCT id_a, id_b
-              FROM qb JOIN cb USING (c) WHERE id_a <> id_b
-            ), scored AS (
-              SELECT id_a, id_b,
-                round(CAST(list_cosine_similarity(a.v, b.v) AS DOUBLE), 6) AS cos_r
-              FROM cand
-              JOIN e a ON a.vec_id = cand.id_a
-              JOIN e b ON b.vec_id = cand.id_b
-            ), pick AS (
-              SELECT id_a, id_b, cos_r,
-                row_number() OVER (PARTITION BY id_a ORDER BY cos_r DESC, id_b) AS rn
-              FROM scored
-            )
-            SELECT id_a, id_b, cos_r FROM pick WHERE rn = 1
-        """,
-        "embed_top1": """
-            WITH p AS (
-              SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                round(CAST(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                                  CAST(b.embedding AS DOUBLE[])) AS DOUBLE), 6) AS cos_r
-              FROM embeddings a CROSS JOIN embeddings b
-              WHERE a.vec_id <> b.vec_id
-            ), ranked AS (
-              SELECT id_a, id_b, cos_r,
-                row_number() OVER (PARTITION BY id_a ORDER BY cos_r DESC, id_b) AS rn
-              FROM p
-            )
-            SELECT id_a, id_b, cos_r FROM ranked WHERE rn = 1
         """,
         "pricing_summary": """
             SELECT l_returnflag, l_linestatus,

@@ -40,7 +40,6 @@ HEADLINE = (
     "zonal_event_stats", "zonal_raster_stats", "zonal_majority",
     "raster_burn", "raster_contour",
     "shared_area",
-    "embed_top1", "embed_ann_lsh",
     "events_sessionize", "graph_pagerank", "pricing_summary",
     "stream_pip_hourly",
     "asof_join", "interval_join", "hotspot_gi", "moran_grid",
@@ -105,7 +104,7 @@ def main() -> None:
     from gis_tools_spark.sources import driver_tables as DT
     DT.events_points(spark, SF_DIR).count()
     DT.nation_zones(spark, SF_DIR).count()
-    for tbl in ("documents", "embeddings", "lineitem"):
+    for tbl in ("documents", "lineitem"):
         spark.read.parquet(f"{SF_DIR}/{tbl}.parquet").count()
     # ... and the join plan SHAPES once at toy size: the first
     # pandas-UDF/mapInPandas plan of a session pays Arrow runner +
@@ -162,27 +161,6 @@ def main() -> None:
     n_db = _timed("dbscan_clusters", lambda: _count(
         _dbscan(pts, id_col="event_id", eps=0.05, min_pts=5)))
     meta["dbscan_clusters_rows"] = n_db
-
-    # -------- IVF ANN in production shape (k-means quantizer sized to the
-    # corpus; the embed_ivf GATE pins a tiny 8-centroid modulo quantizer
-    # for SQL mirroring, which over-fills buckets at sf0.1 — correctness
-    # config and throughput config are deliberately different)
-    from gis_tools_spark.operators.simsearch import ivf_topk
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    n_emb = emb.count()
-    m = max(8, int((n_emb / 40) ** 0.5) * 4)
-    n_ivf = _timed("embed_ivf", lambda: _count(ivf_topk(emb, emb, k=1, n_centroids=m, nprobe=3)))
-    meta["embed_ivf_rows"] = n_ivf
-
-    # -------- SemDeDup decision in production shape (k-means quantizer
-    # sized so clusters hold ~40 vectors; the gate pins the tiny modulo
-    # quantizer for SQL mirroring)
-    from gis_tools_spark.operators.simsearch import semdedup
-
-    n_sem = _timed("semdedup", lambda: _count(
-        semdedup(emb, threshold=0.5, n_clusters=m, seed=11)))
-    meta["semdedup_rows"] = n_sem
 
     # -------- COG AOI scan: windowed tile-local reads + overview
     # selection over a table of tiled multi-IFD GeoTIFF blobs (the
@@ -284,89 +262,6 @@ def main() -> None:
     nd_in = images.select("image_id", "phash").unionByName(dups)
     nd = _timed("img_near_dups", lambda: _count(image_near_dups(nd_in, max_hamming=4)))
     meta["img_near_dup_pairs"] = nd
-
-    from gis_tools_spark.raster.media import resize_images
-
-    nr = _timed("img_resize", lambda: _count(resize_images(
-            images.select("image_id", "bytes", "w", "h", "fmt", "phash"),
-            24, 24, method="bilinear")))
-    meta["img_resize_rows"] = nr
-
-    from gis_tools_spark.raster.media import image_quality
-
-    nq = _timed("img_quality", lambda: _count(image_quality(
-            images.select("image_id", "bytes", "w", "h", "fmt"))
-            .where(F.col("entropy_bits") > 0.0)))
-    meta["img_quality_rows"] = nq
-
-    # -------- training-batch prep: aspect buckets + ViT token packing
-    # (pure codegen + per-bucket greedy; pixels never move)
-    from gis_tools_spark.operators.imgtrain import aspect_bucket, pack_images
-
-    _BUCKETS = [(512, 512), (576, 448), (448, 576), (640, 384), (384, 640),
-                (768, 320), (320, 768)]
-    imgs_wh = images.select(
-        F.monotonically_increasing_id().alias("img_no"),
-        (F.lit(64) + F.pmod(F.xxhash64("image_id"), 961)).cast("int")
-        .alias("gw"),
-        (F.lit(64) + F.pmod(F.xxhash64("image_id", F.lit(1)), 961))
-        .cast("int").alias("gh"))
-    nab = _timed("aspect_pack", lambda: _count(
-        pack_images(aspect_bucket(imgs_wh, _BUCKETS, w_col="gw",
-                                  h_col="gh"),
-                    4096, patch=16, w_col="gw", h_col="gh",
-                    id_col="img_no", n_buckets=CPUS * 2)))
-    meta["aspect_pack_rows"] = nab
-
-    # -------- metadata-only image+caption filter (pure codegen)
-    from gis_tools_spark.operators.imgtrain import image_filter
-
-    nfil = _timed("image_filter", lambda: _count(
-        image_filter(images, min_side=16, max_aspect=3.0)
-        .where(F.col("keep"))))
-    meta["image_filter_rows"] = nfil
-
-    # -------- magic-byte format verification (pure codegen sniff)
-    from gis_tools_spark.operators.imgtrain import format_check
-
-    nfc = _timed("format_check", lambda: _count(
-        format_check(images).where(~F.col("fmt_mismatch"))))
-    meta["format_check_rows"] = nfc
-
-    # -------- WebDataset export sink (deterministic sharding + tar write)
-    import tempfile
-
-    from gis_tools_spark.sources.webdataset import wds_export
-
-    _wds_dir = tempfile.mkdtemp(prefix="bench_wds_")
-    wds_in = images.select(
-        F.monotonically_increasing_id().alias("num"),
-        "bytes", "fmt", "caption").where(F.col("num") % 6 == 0)
-    nws = _timed("wds_export", lambda: _count(wds_export(
-        wds_in, _wds_dir, samples_per_shard=1024, id_col="num",
-        n_buckets=CPUS)))
-    meta["wds_export_shards"] = nws
-
-    # -------- one-pass exact profiler over the biggest driver table
-    from gis_tools_spark.operators.profile import dataset_profile
-
-    # production mode: HLL distinct = one aggregate pass. exact=True is
-    # the gate-only mode (N distinct aggregates expand the scan N-ish
-    # times: measured 8.6 s vs 0.6 s here — priced in the docstring).
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    npr = _timed("dataset_profile", lambda: _count(dataset_profile(
-        li, ["l_orderkey", "l_quantity", "l_extendedprice",
-             "l_returnflag", "l_linestatus"])))
-    meta["dataset_profile_rows"] = npr
-
-    # -------- augmentation fan-out (decode → flip/rot/crop → re-encode)
-    from gis_tools_spark.raster.media import augment_images
-
-    naug = _timed("img_augment", lambda: _count(augment_images(
-            images.select("image_id", "bytes", "w", "h", "fmt")
-                  .where(F.abs(F.xxhash64("image_id")) % 6 == 0),
-            ops=("hflip", "rot90"))))
-    meta["img_augment_rows"] = naug
 
     # -------- lakehouse path (north rule: "over Iceberg tables of
     # image + caption pairs"): the image table committed ONCE to the

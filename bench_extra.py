@@ -53,7 +53,7 @@ def main() -> None:
     from gis_tools_spark.sources import driver_tables as DT
     DT.events_points(spark, SF_DIR).count()
     DT.nation_zones(spark, SF_DIR).count()
-    for tbl in ("documents", "embeddings", "lineitem"):
+    for tbl in ("documents", "lineitem"):
         spark.read.parquet(f"{SF_DIR}/{tbl}.parquet").count()
     wpts = spark.createDataFrame(fixtures.gen_points(200)[["pid", "lon", "lat"]])
     wz = fixtures.gen_zones(4)

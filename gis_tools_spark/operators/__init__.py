@@ -41,20 +41,5 @@ from .topography import get_horizon  # noqa: F401
 from .dedup import (  # noqa: F401
     hamming_dedup_clusters,
 )
-from .simsearch import (  # noqa: F401
-    brute_force_topk,
-    exact_topk_blocked,
-    ivf_topk,
-    lsh_topk,
-    semdedup,
-    semdedup_pairs,
-)
-from .imgtrain import (  # noqa: F401
-    aspect_bucket,
-    image_filter,
-    pack_images,
-    vit_token_count,
-)
-from .profile import dataset_profile  # noqa: F401
 from .pyramid import tile_pyramid  # noqa: F401
 from . import network  # noqa: F401

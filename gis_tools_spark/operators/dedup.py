@@ -1,7 +1,6 @@
 """Near-duplicate detection on 64-bit hash columns: pigeonhole
 subset-key blocking for Hamming-distance pairs (the image ``phash``
-path) and the pairs → clusters → keep-one decision shared with
-``simsearch.semdedup``.
+path) and the pairs → clusters → keep-one decision over them.
 
 Scale design: every variant reduces to groupBy/join on small
 fixed-width keys — shuffle volume is O(rows × blocks), never O(rows²);
@@ -100,29 +99,6 @@ def image_near_dups(df: DataFrame, *, phash_col: str = "phash",
                              max_hamming=max_hamming)
 
 
-def _cluster_and_keep(df: DataFrame, pairs: DataFrame, id_col: str,
-                      max_iter: int) -> DataFrame:
-    """Shared pairs→decision tail: connected components over the
-    (id_a, id_b) duplicate graph, then one row per corpus id with
-    (cluster_id = component minimum, keep = is-canonical). Used by
-    :func:`hamming_dedup_clusters` and ``simsearch.semdedup``."""
-    from .network import connected_components
-
-    edges = pairs.select(F.col("id_a").alias("src_key"),
-                         F.col("id_b").alias("dst_key"))
-    comps = connected_components(edges, max_iter=max_iter)
-    # min-label propagation converges to the minimum node id per
-    # component, so `component` doubles as the canonical keep id
-    out = (df.select(F.col(id_col))
-           .join(comps.withColumnRenamed("node", id_col), on=id_col,
-                 how="left")
-           .select(F.col(id_col),
-                   F.coalesce(F.col("component"), F.col(id_col))
-                   .alias("cluster_id")))
-    return out.withColumn(
-        "keep", (F.col("cluster_id") == F.col(id_col)).cast("int"))
-
-
 def hamming_dedup_clusters(df: DataFrame, *, hash_col: str,
                            id_col: str, max_hamming: int = 3,
                            n_blocks: int | None = None,
@@ -137,6 +113,20 @@ def hamming_dedup_clusters(df: DataFrame, *, hash_col: str,
     O(log diameter) component rounds, and the decision is one left
     join against the corpus scan.  Collapse exact hash duplicates
     first on mass-duplicated corpora (see hamming_near_dups note)."""
+    from .network import connected_components
+
     pairs = hamming_near_dups(df, hash_col=hash_col, id_col=id_col,
                               max_hamming=max_hamming, n_blocks=n_blocks)
-    return _cluster_and_keep(df, pairs, id_col, max_iter)
+    edges = pairs.select(F.col("id_a").alias("src_key"),
+                         F.col("id_b").alias("dst_key"))
+    comps = connected_components(edges, max_iter=max_iter)
+    # min-label propagation converges to the minimum node id per
+    # component, so `component` doubles as the canonical keep id
+    out = (df.select(F.col(id_col))
+           .join(comps.withColumnRenamed("node", id_col), on=id_col,
+                 how="left")
+           .select(F.col(id_col),
+                   F.coalesce(F.col("component"), F.col(id_col))
+                   .alias("cluster_id")))
+    return out.withColumn(
+        "keep", (F.col("cluster_id") == F.col(id_col)).cast("int"))

@@ -27,10 +27,9 @@ and re-runs at any parallelism agree with each other.
 
 Plan shape / 100 TB notes:
 - each iteration is ONE map-side-combinable groupBy over the points:
-  the k centroids are collected to the driver (k rows — same contract
-  as simsearch's IVF centroids) and inlined as a ``least()`` over k
-  literal structs, so assignment is pure whole-stage-codegen column
-  math, no join, no Python;
+  the k centroids are collected to the driver (k rows) and inlined
+  as a ``least()`` over k literal structs, so assignment is pure
+  whole-stage-codegen column math, no join, no Python;
 - total cost = n_iter scans of a persisted int64-projected table; no
   shuffle grows with k or n beyond the k-row aggregate;
 - skew-free by construction (the aggregate key is j ∈ [0, k)) — with

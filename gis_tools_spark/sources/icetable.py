@@ -12,12 +12,14 @@ version-hint pointer), not from any Iceberg code:
   protocol for every mutation (commit, delete, upsert, compact,
   vacuum). A mutation stages its parquet data files in a
   commit-unique directory; ``_claim`` writes an immutable manifest,
-  then claims the next metadata version with an ``O_EXCL`` create —
-  the lake-store analog of Iceberg's atomic metadata swap. Concurrent
-  writers race on the version file; the loser re-reads and rebuilds
-  against the new current snapshot (optimistic concurrency), so an
-  append is never lost and readers NEVER observe a half-commit: until
-  the version file exists, the staged files are invisible orphans.
+  then claims the next metadata version by hard-linking a fully
+  written temp file to its name, which fails when the name is taken
+  (as an ``O_EXCL`` create does) — the lake-store analog of Iceberg's
+  atomic metadata swap. Concurrent writers race on the version file;
+  the loser re-reads and rebuilds against the new current snapshot
+  (optimistic concurrency), so an append is never lost and readers
+  NEVER observe a half-commit: until the version file exists, the
+  staged files are invisible orphans.
 * **Manifests with per-file column stats.** Each manifest row carries
   the file's row count, byte size, and per-column min/max/null-count
   aggregated from the parquet footer (collected DISTRIBUTED — a
@@ -50,7 +52,7 @@ brief, not a port of anything.
 
 Layout::
 
-    root/metadata/v{N}.metadata.json   # O_EXCL-claimed, immutable
+    root/metadata/v{N}.metadata.json   # link-claimed, immutable
     root/metadata/version-hint.text    # advisory pointer (os.replace)
     root/metadata/snap-{id}.manifest.json
     root/data/{commit-uuid}/part-*.parquet
@@ -275,10 +277,14 @@ def _claim(root: str, build: Callable[[dict | None], _Snap | int | None]):
     Each attempt loads the current metadata ``cur`` (None: no table yet)
     and calls ``build(cur)``. A result that is not a :class:`_Snap` (an
     existing snapshot id) is returned as is and nothing is written.
-    Otherwise the new snapshot's manifest is written, then the next
-    metadata version is claimed with an ``O_EXCL`` create; a writer that
-    loses the race re-reads and rebuilds against the winner. Returns the
-    id of the snapshot that is current after the claim.
+    Otherwise the new snapshot's manifest is written under an id no
+    other manifest holds (``O_EXCL``; a taken id moves to the next), then
+    the next metadata version is written to a temp file and claimed by
+    hard-linking it to the version name, which fails like an ``O_EXCL``
+    create if the name exists, so readers never see a partly written
+    version. A writer that loses the race re-reads and rebuilds against
+    the winner. Returns the id of the snapshot that is current after
+    the claim.
     """
     os.makedirs(_meta_dir(root), exist_ok=True)
     for _ in range(_RETRIES):
@@ -291,7 +297,14 @@ def _claim(root: str, build: Callable[[dict | None], _Snap | int | None]):
                    if s["id"] not in snap.expire]
         if snap.files is not None:
             sid = int(time.time() * 1000) * 1000 + (os.getpid() % 1000)
-            with open(_manifest_path(root, sid), "w") as f:
+            while True:                       # ids are unique on disk
+                try:
+                    fd = os.open(_manifest_path(root, sid),
+                                 os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+                    break
+                except FileExistsError:
+                    sid += 1
+            with os.fdopen(fd, "w") as f:
                 json.dump({"snapshot_id": sid, "files": snap.files}, f)
             history.append({
                 "id": sid, "parent_id": parent, "ts": time.time(),
@@ -305,13 +318,17 @@ def _claim(root: str, build: Callable[[dict | None], _Snap | int | None]):
                 "schema": snap.schema, "current_snapshot_id": sid,
                 "snapshots": history}
         version = cur["_version"] + 1 if cur else 1
-        try:
-            fd = os.open(_version_path(root, version),
-                         os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            continue                              # lost the race: re-read
+        path = _version_path(root, version)
+        tmp = path + ".tmp.%s" % uuid.uuid4().hex[:16]
+        fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         with os.fdopen(fd, "w") as f:
             json.dump(meta, f, indent=1)
+        try:
+            os.link(tmp, path)            # exclusive, and appears complete
+        except FileExistsError:
+            continue                              # lost the race: re-read
+        finally:
+            os.unlink(tmp)
         tmp = _hint_path(root) + ".tmp.%s" % uuid.uuid4().hex[:16]
         with open(tmp, "w") as f:
             f.write(str(version))

@@ -9,8 +9,8 @@ blob; ``wds_samples`` parses it with the stdlib ``tarfile`` (public
 CPython) over an in-memory buffer, groups members by stem, and emits
 one row per sample with the conventional columns pulled out (image
 bytes + detected format via magic sniff, caption text, metadata JSON)
-plus the full extension map for anything else.  ``write_wds`` emits
-conformant shards for fixtures and as the interchange sink.
+plus the full extension map for anything else.  ``write_wds`` is the
+fixture writer: it emits conformant shards for tests and fixtures.
 
 Corrupt shards mark a row (ok=false), never a task kill; at 100 TB
 each shard parses independently on the document table's existing
@@ -95,99 +95,6 @@ def write_wds(samples: list[dict], *, gzip_shard: bool = False) -> bytes:
                 if k not in ("key", "image", "image_ext", "caption", "meta"):
                     add(f"{key}.{k}", bytes(v))
     return buf.getvalue()
-
-
-def wds_export(df, out_dir: str, *, samples_per_shard: int = 1000,
-               id_col: str = "image_id", image_col: str = "bytes",
-               fmt_col: str = "fmt", caption_col: str | None = "caption",
-               meta_col: str | None = None, n_buckets: int = 64,
-               gzip_shard: bool = False):
-    """Distributed WebDataset SINK: one deterministic .tar shard per
-    ``samples_per_shard`` rows in ascending ``id_col`` order — the
-    export step that hands a filtered/deduped image+caption corpus to
-    a dataloader.  Returns the shard manifest as a DataFrame
-    ``(shard_id, path, n_samples, n_bytes)``.
-
-    Shard assignment is a pure function of the data: global rank =
-    bucket offset + within-bucket row_number (a bucketed prefix-sum —
-    per-bucket COUNTS to the driver, broadcast back; the
-    single-partition global window never appears),
-    shard = rank // samples_per_shard.  Tar bytes are deterministic
-    (mtime=0, USTAR, rank order within shard), so re-running an export
-    over the same table yields byte-identical shards — resumable and
-    diffable.  Each shard writes tmp-then-rename so a killed task
-    never leaves a half shard visible.  ``id_col`` must be numeric.
-
-    Scale plan: one count-only aggregate, one window over id-range
-    buckets, one shuffle keyed on shard_id; each shard materializes in
-    exactly one task.  Size shards (the WebDataset convention is
-    ~100 MB-1 GB) so a shard fits a task comfortably."""
-    import os
-
-    import pandas as pd
-    from pyspark.sql import Window, functions as F
-
-    sps = int(samples_per_shard)
-    if sps <= 0:
-        raise ValueError("samples_per_shard must be positive")
-    os.makedirs(out_dir, exist_ok=True)
-    cols = [id_col, image_col, fmt_col]
-    if caption_col:
-        cols.append(caption_col)
-    if meta_col:
-        cols.append(meta_col)
-    t = df.select(*cols).withColumn("__id", F.col(id_col).cast("long"))
-    lo, hi = t.agg(F.min("__id"), F.max("__id")).first()
-    manifest_schema = ("shard_id long, path string, n_samples long, "
-                       "n_bytes long")
-    if lo is None:
-        return df.sparkSession.createDataFrame([], manifest_schema)
-    width = max(1, (int(hi) - int(lo)) // max(1, int(n_buckets)) + 1)
-    t = t.withColumn("__b", ((F.col("__id") - int(lo)) / width)
-                     .cast("long"))
-    sums = {r["__b"]: r["c"] for r in
-            t.groupBy("__b").agg(F.count("*").alias("c")).collect()}
-    acc, offs = 0, []
-    for b in sorted(sums):
-        offs.append((b, acc))
-        acc += int(sums[b])
-    bdf = df.sparkSession.createDataFrame(offs, "__b long, __boff long")
-    w = Window.partitionBy("__b").orderBy("__id")
-    t = (t.join(F.broadcast(bdf), on="__b")
-         .withColumn("__rank", F.col("__boff")
-                     + F.row_number().over(w) - 1)
-         .withColumn("__shard", (F.col("__rank") / sps).cast("long")))
-
-    def _write(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = int(key[0])
-        pdf = pdf.sort_values("__rank")
-        caps = pdf[caption_col] if caption_col else None
-        metas = pdf[meta_col] if meta_col else None
-        samples = []
-        for i in range(len(pdf)):
-            s = {"key": f"{int(pdf['__id'].iloc[i]):012d}",
-                 "image": bytes(pdf[image_col].iloc[i]),
-                 "image_ext": str(pdf[fmt_col].iloc[i])}
-            if caps is not None and caps.iloc[i] is not None:
-                s["caption"] = str(caps.iloc[i])
-            if metas is not None and metas.iloc[i] is not None:
-                mv = metas.iloc[i]
-                s["meta"] = json.loads(mv) if isinstance(mv, str) \
-                    else dict(mv)
-            samples.append(s)
-        blob = write_wds(samples, gzip_shard=gzip_shard)
-        ext = "tar.gz" if gzip_shard else "tar"
-        path = os.path.join(out_dir, f"shard-{sid:06d}.{ext}")
-        tmp = path + f".tmp-{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, path)
-        return pd.DataFrame([(sid, path, len(samples), len(blob))],
-                            columns=["shard_id", "path", "n_samples",
-                                     "n_bytes"])
-
-    return (t.groupBy("__shard")
-            .applyInPandas(_write, schema=manifest_schema))
 
 
 WDS_SCHEMA = ("shard_id long, sample_key string, image binary, "

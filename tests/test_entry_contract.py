@@ -16,7 +16,7 @@ from tools.selfcheck import duck_connect
 
 SF = "/root/testdata/sf0.001"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+          "lineitem", "events", "documents"]
 
 
 @pytest.fixture(scope="module")

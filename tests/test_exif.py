@@ -2,7 +2,7 @@
 build_exif_udeg/geotag) + the geotag_images egress operator.
 
 The generic reader/writer (parse_exif/build_exif/image_exif) is
-covered by test_imgtrain/test_warc_html; these tests pin the EXACT
+covered by test_warc_html; these tests pin the EXACT
 round-trip contract of the µdeg writer and the Spark stamp→extract
 loop."""
 

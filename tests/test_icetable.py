@@ -165,6 +165,53 @@ def test_optimistic_retry_wins_race(spark, tmp_path, monkeypatch, mutation):
     assert snaps[-1]["summary"]["total_rows"] == kept + 70
 
 
+def test_reader_during_version_write_sees_old_version(spark, tmp_path,
+                                                      monkeypatch):
+    """A reader that lands while a commit is still writing the next
+    metadata version reads the previous version, never a partial file."""
+    root = str(tmp_path / "t")
+    s1 = ice.commit(_pts(spark, 100, seed=0), root)
+    seen = []
+    real_dump = json.dump
+
+    def dump(obj, *a, **k):
+        if isinstance(obj, dict) and "format_version" in obj and not seen:
+            seen.append([s["id"] for s in ice.snapshots(root)])
+        return real_dump(obj, *a, **k)
+
+    monkeypatch.setattr(ice.json, "dump", dump)
+    s2 = ice.commit(_pts(spark, 50, seed=1), root, mode="append")
+    monkeypatch.undo()
+    assert seen == [[s1]]
+    assert [s["id"] for s in ice.snapshots(root)] == [s1, s2]
+
+
+def test_same_millisecond_commits_get_unique_snapshot_ids(spark, tmp_path,
+                                                          monkeypatch):
+    """Two commits from one process in the same millisecond (frozen
+    clock) still get distinct snapshot ids, and each id's manifest
+    lists exactly that snapshot's files."""
+    import types
+
+    root = str(tmp_path / "t")
+    monkeypatch.setattr(ice, "time",
+                        types.SimpleNamespace(time=lambda: 1.7e9))
+    s1 = ice.commit(_pts(spark, 100, seed=0), root)
+    racer = _pts(spark, 70, seed=5).withColumn("pid", F.col("pid") + 1000)
+    _race_once(monkeypatch, lambda: ice.commit(racer, root, mode="append"))
+    ice.commit(_pts(spark, 30, seed=7).withColumn("pid", F.col("pid") + 2000),
+               root, mode="append")
+    monkeypatch.undo()
+    ids = [s["id"] for s in ice.snapshots(root)]
+    assert len(ids) == 3 and len(set(ids)) == 3 and ids[0] == s1
+    for sid, want in zip(ids, [range(0, 100),
+                               [*range(0, 100), *range(1000, 1070)],
+                               [*range(0, 100), *range(1000, 1070),
+                                *range(2000, 2030)]]):
+        got = ice.scan(spark, root, as_of=sid).select("pid").collect()
+        assert sorted(r.pid for r in got) == list(want), sid
+
+
 def test_vacuum_keeps_racing_writers_staged_files(spark, tmp_path,
                                                   monkeypatch):
     """A vacuum landing between an append's staging and its claim must

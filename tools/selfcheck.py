@@ -23,7 +23,7 @@ import __spark_entry__ as E  # noqa: E402
 from gis_tools_spark import get_spark  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+          "lineitem", "events", "documents"]
 
 
 def duck_connect() -> duckdb.DuckDBPyConnection:
