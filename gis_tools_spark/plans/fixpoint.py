@@ -7,10 +7,11 @@ accumulation): each round eagerly ``localCheckpoint``s ``step(state)``
 The ``driver=`` hook solves a small loop state on the driver instead,
 through ``core.driver_solve`` (which PageRank and connected components
 also call at entry). It has two users: watershed's pointer chase and
-connected components' contracted graph, which an edge list reaches
-only above the operator's own entry gate. Cost distance gates on its
-pixel count at entry instead, before its set-up jobs, so only its
-distributed sweeps run here."""
+connected components' contracted graph, which an input reaches only
+above the operator's own entry gate (watershed's is on the mosaic's
+pixels, so a sparse mosaic above it can still chase its valid pixels
+here). Cost distance gates on its pixel count at entry too, so only
+its distributed sweeps run here."""
 
 from __future__ import annotations
 

@@ -23,10 +23,17 @@ carry-propagation path (method='iterative'): per round
 carry_{k+1}(v) = Σ_{u→v} carry_k(u), acc += carry — pure DataFrame
 joins cut with localCheckpoint, rounds = longest flow-path length.
 Both paths are proven equal in pytest.
+
+Watershed labels each pixel with the end of its D8 path by pointer
+doubling. A mosaic of at most core.DRIVER_MAX_ROWS pixels is collected
+once and its edges (``_edges``) and chase (``_chase``) run on the
+driver; larger mosaics run the same two functions as a ``mapInPandas``
+and as fixpoint's ``driver=`` hook around the doubling rounds.
 """
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator
 
 import numpy as np
@@ -39,7 +46,44 @@ from .stitch import _D8, _grid_indexed
 
 __all__ = ["flow_edges", "flow_accumulation", "watershed"]
 
+_log = logging.getLogger("gis_tools_spark")
+
 _KEY_SHIFT = 32  # node key = giy << 32 | gix
+
+
+def _edges(pdf: pd.DataFrame, no_data: float) -> pd.DataFrame:
+    """The (src, dst, gix, giy) edges of a batch of grid-indexed D8
+    tiles: one row per valid pixel, dst NULL for pits/flats."""
+    recs = []
+    for i in range(len(pdf)):
+        r = pdf.iloc[i]
+        arr = codec.decode(r["bytes"], int(r["w"]), int(r["h"]), r["fmt"])
+        tx, ty = int(r["__col"]), int(r["__row"])
+        rows_, cols_ = np.nonzero(arr != no_data)
+        gix = tx * int(r["w"]) + cols_
+        giy = ty * int(r["h"]) + rows_
+        d8 = arr[rows_, cols_].astype(np.int64)
+        dst = np.full(len(d8), np.nan)
+        for dx, dy, code in _D8:
+            m = d8 == code
+            dst[m] = ((giy[m] + dy).astype(np.int64) << _KEY_SHIFT) \
+                | (gix[m] + dx)
+        recs.append(pd.DataFrame({
+            "src": (giy.astype(np.int64) << _KEY_SHIFT) | gix,
+            "dst": pd.Series(dst).astype("Int64"),
+            "gix": gix.astype(np.int64),
+            "giy": giy.astype(np.int64)}))
+    return pd.concat(recs, ignore_index=True)
+
+
+def _edge_frame(t: DataFrame, no_data: float) -> DataFrame:
+    """``_edges`` over every tile of a ``_grid_indexed`` mosaic."""
+    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            if len(pdf):
+                yield _edges(pdf, no_data)
+
+    return t.mapInPandas(run, schema="src long, dst long, gix long, giy long")
 
 
 def flow_edges(flowdir: DataFrame, *,
@@ -49,35 +93,7 @@ def flow_edges(flowdir: DataFrame, *,
     Node keys pack (giy, gix) into one long so the graph ops shuffle
     8-byte keys, not structs."""
     t, _ = _grid_indexed(flowdir)
-    code_to_off = {code: (dx, dy) for dx, dy, code in _D8}
-
-    def _edges(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for i in range(len(pdf)):
-                r = pdf.iloc[i]
-                arr = codec.decode(r["bytes"], int(r["w"]), int(r["h"]),
-                                   r["fmt"])
-                tx, ty = int(r["__col"]), int(r["__row"])
-                rows_, cols_ = np.nonzero(arr != no_data)
-                gix = tx * int(r["w"]) + cols_
-                giy = ty * int(r["h"]) + rows_
-                d8 = arr[rows_, cols_].astype(np.int64)
-                dst = np.full(len(d8), np.nan)
-                for code, (dx, dy) in code_to_off.items():
-                    m = d8 == code
-                    dst[m] = ((giy[m] + dy).astype(np.int64) << _KEY_SHIFT) \
-                        | (gix[m] + dx)
-                recs.append(pd.DataFrame({
-                    "src": (giy.astype(np.int64) << _KEY_SHIFT) | gix,
-                    "dst": pd.Series(dst).astype("Int64"),
-                    "gix": gix.astype(np.int64),
-                    "giy": giy.astype(np.int64)}))
-            if recs:
-                yield pd.concat(recs, ignore_index=True)
-
-    return t.mapInPandas(_edges,
-                         schema="src long, dst long, gix long, giy long")
+    return _edge_frame(t, no_data)
 
 
 def _solve_basin(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -153,6 +169,29 @@ def flow_accumulation(flowdir: DataFrame, *,
     return out
 
 
+def _chase(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Every (src, ptr) pointer chain followed to its end in one
+    vectorized doubling pass; a pointer to a node that is not a src
+    (an off-grid cell) ends its chain there."""
+    srcs = pdf["src"].to_numpy(np.int64)
+    lab = pdf["ptr"].to_numpy(np.int64).copy()
+    pos = pd.Series(np.arange(len(srcs)), index=srcs)
+    p = pos.reindex(lab).fillna(-1).to_numpy(np.int64)
+    idx = np.arange(len(srcs))
+    while True:
+        m = (p >= 0) & (p != idx)
+        if not m.any():
+            break
+        new_lab = lab[p[m]]
+        new_p = p[p[m]]
+        if (np.array_equal(new_lab, lab[m])
+                and np.array_equal(new_p, p[m])):
+            break
+        lab[m] = new_lab
+        p[m] = new_p
+    return pd.DataFrame({"src": srcs, "ptr": lab})
+
+
 def watershed(flowdir: DataFrame, *,
               no_data: float = codec.NO_DATA_F32) -> DataFrame:
     """Watershed delineation: label every pixel with its pour point —
@@ -164,36 +203,35 @@ def watershed(flowdir: DataFrame, *,
     round, O(log longest-path) rounds total, each one self-join +
     localCheckpoint — the same O(log d) round structure as the engine's
     connected components, so a continental mega-basin needs ~30 rounds,
-    not ~10^4. Under the shared driver gate the whole chase runs on the
-    driver in one vectorized pass instead.
+    not ~10^4. A mosaic of at most core.DRIVER_MAX_ROWS pixels (the
+    grid-index aggregate's count, so the gate costs no job) is instead
+    collected once and its edges and chase run on the driver, through
+    the same ``_edges`` and ``_chase`` as the distributed plan. Above
+    that gate, fixpoint's ``driver=`` hook still chases an edge list
+    under it (a mosaic of mostly no-data) on the driver.
 
     Returns (gix, giy, basin, basin_gix, basin_giy); `basin` is the
     packed pour-point key, shared by every pixel of one watershed."""
-    ed = flow_edges(flowdir, no_data=no_data)
+    from ..operators import core
+
+    t, pixels = _grid_indexed(flowdir)
+    mask = (1 << _KEY_SHIFT) - 1
+    if pixels <= core.DRIVER_MAX_ROWS:
+        _log.debug("watershed path=driver pixels=%d", pixels)
+        ed = _edges(t.toPandas(), no_data)
+        ptr = _chase(pd.DataFrame({"src": ed["src"],
+                                   "ptr": ed["dst"].fillna(ed["src"])}))
+        basin = ptr["ptr"].to_numpy(np.int64)
+        return flowdir.sparkSession.createDataFrame(pd.DataFrame({
+            "gix": ed["gix"], "giy": ed["giy"], "basin": basin,
+            "basin_gix": basin & mask, "basin_giy": basin >> _KEY_SHIFT}),
+            schema="gix long, giy long, basin long, basin_gix long, "
+                   "basin_giy long")
+    _log.debug("watershed path=distributed pixels=%d", pixels)
+    ed = _edge_frame(t, no_data)
     nodes = ed.select("src", "gix", "giy")
     ptr = (ed.select("src", F.coalesce("dst", "src").alias("ptr"))
            .localCheckpoint(eager=True))
-
-    def chase(pdf: pd.DataFrame) -> pd.DataFrame:
-        # small mosaic: chase every pointer chain on the driver in one
-        # vectorized doubling pass instead of join+checkpoint rounds
-        srcs = pdf["src"].to_numpy(np.int64)
-        lab = pdf["ptr"].to_numpy(np.int64).copy()
-        pos = pd.Series(np.arange(len(srcs)), index=srcs)
-        p = pos.reindex(lab).fillna(-1).to_numpy(np.int64)
-        idx = np.arange(len(srcs))
-        while True:
-            m = (p >= 0) & (p != idx)
-            if not m.any():
-                break
-            new_lab = lab[p[m]]
-            new_p = p[p[m]]
-            if (np.array_equal(new_lab, lab[m])
-                    and np.array_equal(new_p, p[m])):
-                break
-            lab[m] = new_lab
-            p[m] = new_p
-        return pd.DataFrame({"src": srcs, "ptr": lab})
 
     def double(ptr: DataFrame) -> DataFrame:
         hop = ptr.select(F.col("src").alias("p_src"),
@@ -207,13 +245,12 @@ def watershed(flowdir: DataFrame, *,
     # doubling reaches paths of 2^64 pixels, far past any mosaic
     first = ptr
     ptr, _, _ = fixpoint("watershed", ptr, double, max_rounds=64,
-                         driver=chase, schema="src long, ptr long")
+                         driver=_chase, schema="src long, ptr long")
     # release the first pointers' checkpoint blocks: the driver solve
     # returns a new frame and every round checkpoints its own, so
     # nothing returned reads them (local checkpoints are otherwise freed
     # only on driver GC)
     first._jdf.queryExecution().logical().rdd().unpersist(False)
-    mask = (1 << _KEY_SHIFT) - 1
     return (nodes.join(ptr, on="src")
             .select("gix", "giy", F.col("ptr").alias("basin"),
                     F.col("ptr").bitwiseAND(F.lit(mask)).alias("basin_gix"),

@@ -15,11 +15,18 @@ semantics:
 
 Tiles are assumed to sit on a regular grid (equal size, aligned origins
 — the SRTM/mosaic layout); the grid indices are derived from each
-tile's geotransform against the global origin (one scalar agg).
+tile's geotransform against the global origin (one scalar agg, which
+also counts the mosaic's pixels and rejects mixed tile sizes).
+
+Driver path: every halo pass goes through ``stitched_apply``, which
+skips the strip shuffle for a mosaic of at most core.DRIVER_MAX_ROWS
+pixels. It collects the tiles once and runs the same strip emitter and
+kernel on the driver, so the tiles it returns are bit-identical.
 """
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator
 
 import numpy as np
@@ -29,6 +36,8 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from .. import cells as C
 from ..geom import boolean, kernels as K, wkb
 from . import codec
+
+_log = logging.getLogger("gis_tools_spark")
 
 
 def _grid_indexed(df: DataFrame):
@@ -40,13 +49,14 @@ def _grid_indexed(df: DataFrame):
                F.max("gt_x0").alias("x1"), F.min("gt_y0").alias("y1"),
                F.max(F.col("gt_rx") * F.col("w")).alias("tw"),
                F.max(F.col("gt_ry") * F.col("h")).alias("th"),
-               F.countDistinct("w", "h").alias("nsz"),
-               F.max("w").alias("w"), F.max("h").alias("h")).collect()[0]
-    if int(o["nsz"]) > 1:
+               F.min("w").alias("w0"), F.max("w").alias("w"),
+               F.min("h").alias("h0"), F.max("h").alias("h")).collect()[0]
+    if o["w0"] != o["w"] or o["h0"] != o["h"]:
         raise ValueError(
             "stitched raster passes require a uniform tile grid (equal "
-            f"w×h, aligned origins); found {o['nsz']} distinct tile "
-            "sizes. Resample or retile the mosaic first.")
+            f"w×h, aligned origins); found tile widths {o['w0']}–{o['w']} "
+            f"and heights {o['h0']}–{o['h']}. Resample or retile the "
+            "mosaic first.")
     tw, th = float(o["tw"]), float(o["th"])
     out = (df.withColumn("__col", F.round((F.col("gt_x0") - F.lit(o["x0"])) / tw).cast("int"))
              .withColumn("__row", F.round((F.lit(o["y0"]) - F.col("gt_y0")) / th).cast("int")))
@@ -321,18 +331,21 @@ STRIP_SCHEMA = T.StructType([
 
 
 def stitched_apply(df: DataFrame, padded_fn, *,
-                   no_data: float = codec.NO_DATA_F32,
-                   pass_row: bool = False) -> DataFrame:
+                   no_data: float = codec.NO_DATA_F32) -> DataFrame:
     """Generic 1-px halo-exchange pass: decode each tile, exchange edge
     strips/corners with grid neighbors, hand ``padded_fn`` the (h+2,
     w+2) edge-clamped+halo'd float64 array (no-data as NaN), and
     re-encode its (h, w) float32 result (NaN → no-data). The shuffle is
     4 strips + 4 corner pixels per tile, never whole tiles.
 
-    pass_row=True calls ``padded_fn(p, row)`` with the tile's pandas
-    row, so kernels can read sibling columns (e.g. a second raster's
-    bytes riding along — the cost-distance pattern)."""
-    t, _ = _grid_indexed(df)
+    A mosaic of at most core.DRIVER_MAX_ROWS pixels (the count comes
+    from the grid-index aggregate, so the gate costs no job) skips the
+    shuffle: its tiles are collected once and the same strip emitter
+    and kernel run on the driver, with the strips grouped into the
+    same ``__halo`` lists, so the output is bit-identical."""
+    from ..operators import core
+
+    t, pixels = _grid_indexed(df)
 
     def _emit_strips(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -348,11 +361,6 @@ def stitched_apply(df: DataFrame, padded_fn, *,
                                             int(r["__col"]), int(r["__row"])))
             if rows:
                 yield pd.DataFrame(rows, columns=["__col", "__row", "dc", "dr", "strip"])
-
-    strips = (t.mapInPandas(_emit_strips, schema=STRIP_SCHEMA)
-              .groupBy("__col", "__row")
-              .agg(F.collect_list(F.struct("dc", "dr", "strip")).alias("__halo")))
-    joined = t.join(strips, on=["__col", "__row"], how="left")
 
     out_schema = df.schema
     out_cols = list(df.columns)
@@ -371,7 +379,7 @@ def stitched_apply(df: DataFrame, padded_fn, *,
                 # of whichever edge neighbor exists, else self-replicate
                 p = apply_halo(np.pad(a, 1, mode="edge"), r["__halo"],
                                no_data)
-                o = padded_fn(p, r) if pass_row else padded_fn(p)
+                o = padded_fn(p)
                 o = np.where(np.isnan(o), no_data, o)
                 bufs.append(codec.encode(o.astype(np.float32), "raw_f32"))
             out = pdf[out_cols].copy()
@@ -381,6 +389,21 @@ def stitched_apply(df: DataFrame, padded_fn, *,
             out["fmt"] = "raw_f32"
             yield out
 
+    if pixels <= core.DRIVER_MAX_ROWS:
+        _log.debug("stitched_apply path=driver pixels=%d", pixels)
+        tiles = t.toPandas()
+        halo = {k: g[["dc", "dr", "strip"]].to_dict("records")
+                for k, g in pd.concat(list(_emit_strips(iter([tiles]))))
+                .groupby(["__col", "__row"])}
+        tiles["__halo"] = [halo.get(k) for k in
+                           zip(tiles["__col"], tiles["__row"])]
+        return df.sparkSession.createDataFrame(
+            next(_kernel(iter([tiles]))), schema=out_schema)
+    _log.debug("stitched_apply path=distributed pixels=%d", pixels)
+    strips = (t.mapInPandas(_emit_strips, schema=STRIP_SCHEMA)
+              .groupBy("__col", "__row")
+              .agg(F.collect_list(F.struct("dc", "dr", "strip")).alias("__halo")))
+    joined = t.join(strips, on=["__col", "__row"], how="left")
     return joined.mapInPandas(_kernel, schema=out_schema)
 
 

@@ -282,9 +282,9 @@ def _claim(root: str, build: Callable[[dict | None], _Snap | int | None]):
     the next metadata version is written to a temp file and claimed by
     hard-linking it to the version name, which fails like an ``O_EXCL``
     create if the name exists, so readers never see a partly written
-    version. A writer that loses the race re-reads and rebuilds against
-    the winner. Returns the id of the snapshot that is current after
-    the claim.
+    version. A writer that loses the race deletes its manifest, then
+    re-reads and rebuilds against the winner. Returns the id of the
+    snapshot that is current after the claim.
     """
     os.makedirs(_meta_dir(root), exist_ok=True)
     for _ in range(_RETRIES):
@@ -325,8 +325,10 @@ def _claim(root: str, build: Callable[[dict | None], _Snap | int | None]):
             json.dump(meta, f, indent=1)
         try:
             os.link(tmp, path)            # exclusive, and appears complete
-        except FileExistsError:
-            continue                              # lost the race: re-read
+        except FileExistsError:                   # lost the race: re-read
+            if snap.files is not None:            # no snapshot lists it
+                os.unlink(_manifest_path(root, sid))
+            continue
         finally:
             os.unlink(tmp)
         tmp = _hint_path(root) + ".tmp.%s" % uuid.uuid4().hex[:16]

@@ -165,6 +165,26 @@ def test_optimistic_retry_wins_race(spark, tmp_path, monkeypatch, mutation):
     assert snaps[-1]["summary"]["total_rows"] == kept + 70
 
 
+def test_lost_race_leaves_no_orphan_manifest(tmp_path, monkeypatch):
+    """A claim that loses the version race deletes the manifest it wrote
+    before retrying: every manifest in metadata/ is a snapshot's."""
+    root = str(tmp_path / "t")
+
+    def claim():
+        return ice._claim(root, lambda cur: ice._Snap([], "{}", "append", {}))
+
+    claim()
+    raced = _race_once(monkeypatch, claim)
+    claim()
+    monkeypatch.undo()
+    assert raced["done"]
+    manifests = {f for f in os.listdir(os.path.join(root, "metadata"))
+                 if f.endswith(".manifest.json")}
+    assert len(manifests) == 3
+    assert manifests == {"snap-%d.manifest.json" % s["id"]
+                         for s in ice.snapshots(root)}
+
+
 def test_reader_during_version_write_sees_old_version(spark, tmp_path,
                                                       monkeypatch):
     """A reader that lands while a commit is still writing the next

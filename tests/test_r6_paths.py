@@ -49,6 +49,15 @@ def _watershed(spark):
     return lambda: {tuple(r) for r in watershed(fd).collect()}
 
 
+def _d8(spark):
+    from gis_tools_spark import fixtures
+    from gis_tools_spark.raster.stitch import d8_flow_direction
+
+    ras = spark.createDataFrame(fixtures.gen_rasters_exact(2, 2, 32))
+    return lambda: {(r["image_id"], bytes(r["bytes"]))
+                    for r in d8_flow_direction(ras).collect()}
+
+
 def _pagerank(spark):
     # node 300 is dangling (no out-edge) and 0->1 is a parallel edge.
     # Spark sums each node's contributions in shuffle order, the driver
@@ -73,9 +82,10 @@ def _cost_distance(spark):
 
 
 @pytest.mark.parametrize("make", [_cc_labels, _compact, _watershed,
-                                  _pagerank, _cost_distance],
+                                  _pagerank, _cost_distance, _d8],
                          ids=["connected_components", "compact_cells",
-                              "watershed", "pagerank", "cost_distance"])
+                              "watershed", "pagerank", "cost_distance",
+                              "d8_flow_direction"])
 def test_driver_solve_matches_distributed(spark, monkeypatch, make):
     """The driver solve under core.DRIVER_MAX_ROWS and the distributed
     rounds it replaces (gate forced to 0) give the same answer: exactly,
@@ -93,14 +103,17 @@ def test_driver_solve_matches_distributed(spark, monkeypatch, make):
         assert fast == slow
 
 
-@pytest.mark.parametrize("make", [_pagerank, _cc_labels, _cost_distance],
+@pytest.mark.parametrize("make, budget",
+                         [(_pagerank, 4), (_cc_labels, 4),
+                          (_cost_distance, 4), (_watershed, 6)],
                          ids=["pagerank", "connected_components",
-                              "cost_distance"])
-def test_small_input_job_budget(spark, make):
+                              "cost_distance", "watershed"])
+def test_small_input_job_budget(spark, make, budget):
     """A small input takes the one-collect driver path: the call plus the
-    collect of its output stays within 4 Spark jobs (measured 3 for
-    PageRank and components, 4 for cost distance; the distributed
-    rounds on the same inputs run 25 to 152)."""
+    collect of its output stays within ``budget`` Spark jobs (measured 3
+    for PageRank and components, 4 for cost distance, 6 for D8 plus
+    watershed, where each of the two grid-index aggregates is 2 jobs;
+    the distributed rounds on the same inputs run 25 to 152)."""
     sc = spark.sparkContext
     run = make(spark)
     group = f"job-budget{make.__name__}"
@@ -111,7 +124,7 @@ def test_small_input_job_budget(spark, make):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(jobs) <= 4, jobs
+    assert len(jobs) <= budget, jobs
 
 
 def _hop_bounded(pdf, sources, hops):

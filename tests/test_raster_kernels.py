@@ -16,6 +16,8 @@ from gis_tools_spark.raster.kernels import (
 )
 from gis_tools_spark.raster.polygonize import polygonize, polygonize_region
 
+from test_stitch import both_paths
+
 
 def _tile_df(spark, arr, gt=(0.0, 1.0, 0.0, 1.0), image_id="t"):
     h, w = arr.shape[:2]
@@ -117,7 +119,7 @@ def test_contour_bins(spark):
     assert len(np.unique(res)) <= 12
 
 
-def test_hillshade_matches_global_array(spark):
+def test_hillshade_matches_global_array(spark, monkeypatch):
     """Stitched hillshade on a 2x2 mosaic equals the single-global-array
     computation everywhere (borders through the halo exchange), and the
     formula matches a direct numpy evaluation."""
@@ -129,8 +131,6 @@ def test_hillshade_matches_global_array(spark):
     from gis_tools_spark.raster.stitch import slope_aspect_stitched
 
     ras_pd = fixtures.gen_rasters_exact(2, 2, 32)
-    out = slope_aspect_stitched(spark.createDataFrame(ras_pd),
-                                mode="hillshade").toPandas()
 
     # rebuild the global array
     G = np.zeros((64, 64), dtype=np.float64)
@@ -147,17 +147,20 @@ def test_hillshade_matches_global_array(spark):
     want = horn_output(dzdx, dzdy, "hillshade").astype(np.float32)
     assert 0.0 <= np.nanmin(want) and np.nanmax(want) <= 255.0
 
-    for r in out.itertuples(index=False):
-        arr = codec.decode(r.bytes, int(r.w), int(r.h), "raw_f32")
-        _, tx, ty = r.image_id.split("_")
-        blk = want[int(ty)*32:(int(ty)+1)*32, int(tx)*32:(int(tx)+1)*32]
-        got = np.where(arr == codec.NO_DATA_F32, np.nan, arr)
-        m = ~np.isnan(blk)
-        assert np.array_equal(got[m], blk[m]), r.image_id
-        assert np.isnan(got[~m]).all()
+    for path in both_paths(monkeypatch):
+        out = slope_aspect_stitched(spark.createDataFrame(ras_pd),
+                                    mode="hillshade").toPandas()
+        for r in out.itertuples(index=False):
+            arr = codec.decode(r.bytes, int(r.w), int(r.h), "raw_f32")
+            _, tx, ty = r.image_id.split("_")
+            blk = want[int(ty)*32:(int(ty)+1)*32, int(tx)*32:(int(tx)+1)*32]
+            got = np.where(arr == codec.NO_DATA_F32, np.nan, arr)
+            m = ~np.isnan(blk)
+            assert np.array_equal(got[m], blk[m]), (path, r.image_id)
+            assert np.isnan(got[~m]).all(), (path, r.image_id)
 
 
-def test_focal_stats_modes_match_global(spark):
+def test_focal_stats_modes_match_global(spark, monkeypatch):
     """Focal mean/min/max/range on a 2x2 mosaic equal the global-array
     nan-aware window stats everywhere (borders through the halo)."""
     import numpy as np
@@ -178,19 +181,24 @@ def test_focal_stats_modes_match_global(spark):
                       for dy in (-1, 0, 1) for dx in (-1, 0, 1)])
 
     import warnings
+    wants = {}
     for stat, fn in (("mean", np.nanmean), ("min", np.nanmin),
                      ("max", np.nanmax),
                      ("range", lambda s, axis: np.nanmax(s, axis=axis)
                       - np.nanmin(s, axis=axis))):
         with warnings.catch_warnings():
             warnings.simplefilter("ignore", RuntimeWarning)
-            want = fn(stack, axis=0).astype(np.float32)
-        out = focal_stats_stitched(spark.createDataFrame(ras_pd),
-                                   stat=stat).toPandas()
-        for r in out.itertuples(index=False):
-            arr = codec.decode(r.bytes, int(r.w), int(r.h), "raw_f32")
-            _, tx, ty = r.image_id.split("_")
-            blk = want[int(ty)*32:(int(ty)+1)*32, int(tx)*32:(int(tx)+1)*32]
-            got = np.where(arr == codec.NO_DATA_F32, np.nan, arr)
-            m = ~np.isnan(blk)
-            assert np.array_equal(got[m], blk[m]), (stat, r.image_id)
+            wants[stat] = fn(stack, axis=0).astype(np.float32)
+    for path in both_paths(monkeypatch):
+        for stat, want in wants.items():
+            out = focal_stats_stitched(spark.createDataFrame(ras_pd),
+                                       stat=stat).toPandas()
+            for r in out.itertuples(index=False):
+                arr = codec.decode(r.bytes, int(r.w), int(r.h), "raw_f32")
+                _, tx, ty = r.image_id.split("_")
+                blk = want[int(ty)*32:(int(ty)+1)*32,
+                           int(tx)*32:(int(tx)+1)*32]
+                got = np.where(arr == codec.NO_DATA_F32, np.nan, arr)
+                m = ~np.isnan(blk)
+                assert np.array_equal(got[m], blk[m]), (path, stat,
+                                                        r.image_id)

@@ -1,12 +1,16 @@
 """Cross-tile stitching vs single-global-array oracles (SURVEY §7.3:
 the reference computes on one array — raster.py:683-702 polygonize,
-794-824 slope — so tiled results must match the mosaic computation)."""
+794-824 slope — so tiled results must match the mosaic computation).
+Test mosaics are under the driver gate, so each stitched op is checked
+on the driver path and again on the halo exchange with the gate forced
+to 0 (``both_paths``)."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from gis_tools_spark.geom import kernels as K, wkb
+from gis_tools_spark.operators import core
 from gis_tools_spark.raster import codec
 from gis_tools_spark.raster.stitch import polygonize_stitched, slope_aspect_stitched
 
@@ -33,15 +37,46 @@ def _mosaic(nx, ny, tile, fill):
     return glob, pdf, rx, ry
 
 
-def test_slope_halo_matches_global(spark):
+def both_paths(monkeypatch):
+    """Yield "driver", then "distributed" with core.DRIVER_MAX_ROWS
+    forced to 0, so the stitched op called in between runs the halo
+    exchange."""
+    yield "driver"
+    monkeypatch.setattr(core, "DRIVER_MAX_ROWS", 0)
+    yield "distributed"
+
+
+def _stitch(out, tile=16, n=2):
+    """The (n·tile)² global array from stitched tiles {image_id: arr}."""
+    got = np.zeros((n * tile, n * tile), dtype=np.float32)
+    for ty in range(n):
+        for tx in range(n):
+            got[ty * tile:(ty + 1) * tile,
+                tx * tile:(tx + 1) * tile] = out[f"tile_{tx}_{ty}"]
+    return got
+
+
+def _tiles(df, tile=16):
+    return {r["image_id"]: codec.decode_raw_f32(bytes(r["bytes"]), tile, tile)
+            for r in df.collect()}
+
+
+def test_mixed_tile_sizes_raise(spark):
+    from gis_tools_spark.raster.stitch import _grid_indexed
+
+    _, pdf, _, _ = _mosaic(2, 1, 16, lambda gx, gy: gx + gy)
+    pdf.loc[1, "w"] = 8
+    with pytest.raises(ValueError, match="widths 8–16 and heights 16–16"):
+        _grid_indexed(spark.createDataFrame(pdf))
+
+
+def test_slope_halo_matches_global(spark, monkeypatch):
     # smooth ramp + bump: border pixels must equal the global Horn result
     def fill(gx, gy):
         return 0.5 * gx + 0.25 * gy + 10 * np.sin(gx * 0.3) * np.cos(gy * 0.2)
 
     glob, pdf, rx, ry = _mosaic(2, 2, 16, fill)
     df = spark.createDataFrame(pdf)
-    out = {r["image_id"]: codec.decode_raw_f32(bytes(r["bytes"]), 16, 16)
-           for r in slope_aspect_stitched(df).collect()}
 
     a = glob.astype(np.float64)
     p = np.pad(a, 1, mode="edge")
@@ -51,13 +86,12 @@ def test_slope_halo_matches_global(spark):
             - (p[:-2, :-2] + 2 * p[:-2, 1:-1] + p[:-2, 2:])) / 8.0
     want = np.degrees(np.arctan(np.hypot(dzdx, dzdy))).astype(np.float32)
 
-    got = np.zeros_like(want)
-    for ty in range(2):
-        for tx in range(2):
-            got[ty * 16:(ty + 1) * 16, tx * 16:(tx + 1) * 16] = out[f"tile_{tx}_{ty}"]
     # interior tile borders exact; mosaic-outer border uses edge replicate
     # on both sides, so the whole thing matches
-    np.testing.assert_allclose(got, want, rtol=1e-5, atol=1e-5)
+    for path in both_paths(monkeypatch):
+        got = _stitch(_tiles(slope_aspect_stitched(df)))
+        np.testing.assert_allclose(got, want, rtol=1e-5, atol=1e-5,
+                                   err_msg=path)
 
 
 def test_polygonize_stitched_matches_global(spark):
@@ -96,7 +130,7 @@ def test_polygonize_stitched_matches_global(spark):
     assert area == pytest.approx(cross["px_count"].iloc[0] * rx * ry, rel=1e-9)
 
 
-def test_d8_flow_direction_matches_global(spark):
+def test_d8_flow_direction_matches_global(spark, monkeypatch):
     """Stitched D8 vs a literal global-array brute force — including
     no-data exclusion, tie preference, pits and edge-replicate."""
     from gis_tools_spark.raster.stitch import _D8, d8_flow_direction
@@ -117,22 +151,14 @@ def test_d8_flow_direction_matches_global(spark):
         r["bytes"] = codec.encode_raw_f32(sub)
         rows.append(r)
     df = spark.createDataFrame(pd.DataFrame(rows))
-    out = {r["image_id"]: codec.decode_raw_f32(bytes(r["bytes"]), 16, 16)
-           for r in d8_flow_direction(df).collect()}
-    got = np.zeros((32, 32), dtype=np.float32)
-    for ty in range(2):
-        for tx in range(2):
-            got[ty * 16:(ty + 1) * 16,
-                tx * 16:(tx + 1) * 16] = out[f"tile_{tx}_{ty}"]
 
     a = glob.astype(np.float64)
     a[glob == codec.NO_DATA_F32] = np.nan
     p = np.pad(a, 1, mode="edge")
-    H, W = 32, 32
-    for gy in range(H):
-        for gx in range(W):
+    want = np.full((32, 32), codec.NO_DATA_F32, dtype=np.float32)
+    for gy in range(32):
+        for gx in range(32):
             if np.isnan(a[gy, gx]):
-                assert got[gy, gx] == codec.NO_DATA_F32, (gx, gy)
                 continue
             best, bc = 0.0, 0
             for dx, dy, code in _D8:
@@ -142,13 +168,16 @@ def test_d8_flow_direction_matches_global(spark):
                 drop = (a[gy, gx] - nb) / (np.sqrt(2.0) if dx and dy else 1.0)
                 if drop > best:
                     best, bc = drop, code
-            assert got[gy, gx] == bc, (gx, gy, got[gy, gx], bc)
+            want[gy, gx] = bc
     # terrain has pits/flats and every direction code somewhere
-    assert (got[glob != codec.NO_DATA_F32] == 0).any()
-    assert len(set(got[glob != codec.NO_DATA_F32].astype(int)) - {0}) >= 6
+    assert (want[glob != codec.NO_DATA_F32] == 0).any()
+    assert len(set(want[glob != codec.NO_DATA_F32].astype(int)) - {0}) >= 6
+    for path in both_paths(monkeypatch):
+        got = _stitch(_tiles(d8_flow_direction(df)))
+        np.testing.assert_array_equal(got, want, err_msg=path)
 
 
-def test_curvature_matches_global(spark):
+def test_curvature_matches_global(spark, monkeypatch):
     """Stitched curvature (total/profile/plan) vs the global-array
     Zevenbergen-Thorne computation, flat-denominator guard included."""
     from gis_tools_spark.raster.stitch import curvature_stitched
@@ -183,19 +212,15 @@ def test_curvature_matches_global(spark):
                              2 * (D * H * H + E * G * G - Fc * G * H)
                              / den * 100)}
     assert (den == 0).sum() > 0
-    for mode, w in want.items():
-        out = {r["image_id"]: codec.decode_raw_f32(bytes(r["bytes"]), 16, 16)
-               for r in curvature_stitched(df, mode=mode).collect()}
-        got = np.zeros((32, 32), dtype=np.float32)
-        for ty in range(2):
-            for tx in range(2):
-                got[ty * 16:(ty + 1) * 16,
-                    tx * 16:(tx + 1) * 16] = out[f"tile_{tx}_{ty}"]
-        np.testing.assert_allclose(got, w.astype(np.float32),
-                                   rtol=1e-5, atol=1e-5, err_msg=mode)
+    for path in both_paths(monkeypatch):
+        for mode, w in want.items():
+            got = _stitch(_tiles(curvature_stitched(df, mode=mode)))
+            np.testing.assert_allclose(got, w.astype(np.float32),
+                                       rtol=1e-5, atol=1e-5,
+                                       err_msg=(path, mode))
 
 
-def test_terrain_indices_match_global(spark):
+def test_terrain_indices_match_global(spark, monkeypatch):
     """TRI / TPI / roughness through the halo exchange vs the same
     kernels on the single global array (incl. a NaN hole whose 3x3
     footprint must drop on both sides)."""
@@ -230,12 +255,9 @@ def test_terrain_indices_match_global(spark):
         "tpi": zC - sum(nb) / 8.0,
         "roughness": np.maximum.reduce([zC] + nb) - np.minimum.reduce([zC] + nb),
     }
-    for mode, w in want.items():
-        out = {r["image_id"]: codec.decode_raw_f32(bytes(r["bytes"]), 16, 16)
-               for r in terrain_index_stitched(df, mode=mode).collect()}
-        got = np.zeros((32, 32), np.float32)
-        for ty in range(2):
-            for tx in range(2):
-                got[ty * 16:(ty + 1) * 16, tx * 16:(tx + 1) * 16] = out[f"tile_{tx}_{ty}"]
-        wf = np.where(np.isnan(w), codec.NO_DATA_F32, w).astype(np.float32)
-        np.testing.assert_allclose(got, wf, rtol=1e-6, atol=1e-6, err_msg=mode)
+    for path in both_paths(monkeypatch):
+        for mode, w in want.items():
+            got = _stitch(_tiles(terrain_index_stitched(df, mode=mode)))
+            wf = np.where(np.isnan(w), codec.NO_DATA_F32, w).astype(np.float32)
+            np.testing.assert_allclose(got, wf, rtol=1e-6, atol=1e-6,
+                                       err_msg=(path, mode))
