@@ -2959,7 +2959,7 @@ EXIF_RES = 11
 
 
 def q_exif_gps_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXIF geotag ingest (raster/exif.py + operators/imgmeta.py): the
+    """EXIF geotag ingest (raster/exif.py): the
     events sample becomes real JPEG blobs carrying EXIF APP1 GPS
     (degree/minute/second RATIONALs encoded (d,1)(0,1)(9·rem,2500) —
     exact at microdegree resolution), then exif_gps lifts lat/lon/alt/

@@ -379,7 +379,7 @@ def hilbert_key(lon, lat, res: int):
     """Vectorized numpy Hilbert key on the equirectangular lon/lat grid
     at ``res`` (2·res bits) — the locality-better drop-in for
     cells.morton_key: consecutive keys are always edge-adjacent cells,
-    so range-sharded layouts (icetable cluster_by, bucketed joins) cut
+    so range-sharded layouts (icetable cluster_by) cut
     fewer cell boundaries than the Z-order curve.  Same quantization
     as morton_key (floor on the linear grid — no trig, no float32
     concerns)."""

@@ -2,7 +2,6 @@
 
 from .geom_funcs import (  # noqa: F401
     buffer_geom,
-    clean_geometry,
     geom_area,
     geom_bounds_struct,
     geom_buffer,
@@ -13,13 +12,9 @@ from .geom_funcs import (  # noqa: F401
     geom_envelope,
     geom_force_2d,
     geom_length,
-    geom_segmentize,
     geom_shape_factor,
-    geom_simplify,
     geom_type_of,
 )
 from .geodesy import (  # noqa: F401
-    euclidean,
-    geodesic_meters,
     great_circle_meters,
 )

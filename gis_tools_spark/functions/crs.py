@@ -8,9 +8,8 @@ Supported CRS ids:
   utm:N — UTM zone N north (transverse Mercator, Karney/Krüger series,
           ~0.1 mm accuracy within the zone; WGS84 ellipsoid)
 
-API mirrors the per-geometry UDF pattern: ``reproject_udf(src, dst)``
-returns a WKB→WKB pandas UDF; ``transform_xy`` is the raw numpy kernel
-(used by tests and raster warps).
+``transform_xy`` is the raw numpy kernel (used by the SQL functions,
+tests and raster warps).
 """
 
 from __future__ import annotations
@@ -19,7 +18,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F, types as T
 
-from ..geom import wkb
 
 R = 6_378_137.0           # WGS84 semi-major
 F_INV = 298.257223563
@@ -123,41 +121,6 @@ def transform_xy(x: np.ndarray, y: np.ndarray, src, dst):
         x, y = _to_utm(x, y, zone)
         return x, y + (10_000_000.0 if south else 0.0)
     return r.fwd(x, y)
-
-
-def reproject_udf(src, dst):
-    """WKB→WKB vectorized reprojection UDF."""
-
-    def _tx(g):
-        t = g["type"]
-
-        def conv(a):
-            x, y = transform_xy(a[:, 0].copy(), a[:, 1].copy(), src, dst)
-            out = a.copy().astype(np.float64)
-            out[:, 0], out[:, 1] = x, y
-            return out
-
-        if t == "Point":
-            c = conv(g["coords"].reshape(1, -1))[0]
-            return wkb.point(*c)
-        if t == "LineString":
-            return wkb.linestring(conv(g["coords"]))
-        if t == "Polygon":
-            return wkb.polygon([conv(r) for r in g["rings"]])
-        if t == "MultiPolygon":
-            return wkb.multipolygon([[conv(r) for r in rings] for rings in g["polygons"]])
-        if t == "MultiLineString":
-            return wkb.multilinestring([conv(l) for l in g["lines"]])
-        if t == "MultiPoint":
-            return wkb.multipoint(conv(g["points"]))
-        raise ValueError(t)
-
-    @F.pandas_udf(T.BinaryType())
-    def _udf(s: pd.Series) -> pd.Series:
-        return pd.Series([None if b is None else _tx(wkb.decode(b)) for b in s],
-                         dtype=object)
-
-    return _udf
 
 
 # --- conic / azimuthal projections (Snyder closed forms) ----------------
@@ -697,8 +660,6 @@ class HotineObliqueMercator:
             Sp * np.cos(self.gamma0) - Vp * np.sin(self.gamma0),
             np.cos(B * u / A)) / B
         return np.rad2deg(lam), np.rad2deg(phi)
-
-
 
 
 class _MeridianArc:

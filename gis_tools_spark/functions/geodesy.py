@@ -5,7 +5,6 @@ haversine × local-sphere radius, euclidean distance.py:56-66)."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, functions as F
 
 EARTH_RADIUS_M = 6_371_000.0
@@ -19,152 +18,6 @@ def great_circle_meters(lon1: Column, lat1: Column, lon2: Column, lat2: Column,
     dlon = F.radians(lon2 - lon1) / 2
     a = F.sin(dlat) ** 2 + F.cos(rl1) * F.cos(rl2) * F.sin(dlon) ** 2
     return F.lit(2.0 * radius) * F.asin(F.sqrt(a))
-
-
-def euclidean(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
-    return F.sqrt((x1 - x2) ** 2 + (y1 - y2) ** 2)
-
-
-def geodesic_meters():
-    """Ellipsoidal (WGS84) geodesic distance — the engine's pyproj
-    Geod.inv analog (reference pyproj_distance distance.py:69-91),
-    computed with a vectorized Vincenty inverse iteration in numpy
-    inside one Arrow-batched pandas UDF. Accuracy ~0.5 mm against
-    Karney for non-antipodal pairs; near-antipodal pairs (where Vincenty
-    fails to converge) fall back to the great-circle value.
-
-    Usage: df.withColumn("d", geodesic_meters()(lon1, lat1, lon2, lat2))
-    """
-    from pyspark.sql import types as T
-
-    A, FLAT = 6378137.0, 1 / 298.257223563
-    B = A * (1 - FLAT)
-
-    @F.pandas_udf(T.DoubleType())
-    def _udf(lon1: pd.Series, lat1: pd.Series,
-             lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-        p1 = np.radians(lat1.to_numpy(np.float64))
-        p2 = np.radians(lat2.to_numpy(np.float64))
-        dl = np.radians(lon2.to_numpy(np.float64) - lon1.to_numpy(np.float64))
-        u1, u2 = np.arctan((1 - FLAT) * np.tan(p1)), np.arctan((1 - FLAT) * np.tan(p2))
-        su1, cu1 = np.sin(u1), np.cos(u1)
-        su2, cu2 = np.sin(u2), np.cos(u2)
-        lam = dl.copy()
-        converged = np.zeros(len(lam), dtype=bool)
-        sig = np.zeros_like(lam)
-        ssig = np.zeros_like(lam)
-        csig = np.ones_like(lam)
-        cos2a = np.ones_like(lam)
-        c2sm = np.zeros_like(lam)
-        for _ in range(60):
-            sl, cl = np.sin(lam), np.cos(lam)
-            ssig = np.sqrt((cu2 * sl) ** 2 + (cu1 * su2 - su1 * cu2 * cl) ** 2)
-            csig = su1 * su2 + cu1 * cu2 * cl
-            sig = np.arctan2(ssig, csig)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sina = np.where(ssig != 0, cu1 * cu2 * sl / ssig, 0.0)
-                cos2a = 1 - sina ** 2
-                c2sm = np.where(cos2a != 0,
-                                csig - 2 * su1 * su2 / np.where(cos2a == 0, 1, cos2a),
-                                0.0)
-            cc = FLAT / 16 * cos2a * (4 + FLAT * (4 - 3 * cos2a))
-            new = dl + (1 - cc) * FLAT * sina * (
-                sig + cc * ssig * (c2sm + cc * csig * (-1 + 2 * c2sm ** 2)))
-            converged |= np.abs(new - lam) < 1e-12
-            lam = new
-            if converged.all():
-                break
-        usq = cos2a * (A * A - B * B) / (B * B)
-        ka = 1 + usq / 16384 * (4096 + usq * (-768 + usq * (320 - 175 * usq)))
-        kb = usq / 1024 * (256 + usq * (-128 + usq * (74 - 47 * usq)))
-        dsig = kb * ssig * (c2sm + kb / 4 * (
-            csig * (-1 + 2 * c2sm ** 2)
-            - kb / 6 * c2sm * (-3 + 4 * ssig ** 2) * (-3 + 4 * c2sm ** 2)))
-        d = B * ka * (sig - dsig)
-        # identical points → 0; non-converged (near-antipodal) → haversine
-        same = (p1 == p2) & (dl == 0)
-        hav = 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(
-            np.sin((p2 - p1) / 2) ** 2
-            + np.cos(p1) * np.cos(p2) * np.sin(dl / 2) ** 2))
-        d = np.where(same, 0.0, np.where(converged, d, hav))
-        return pd.Series(d)
-
-    return _udf
-
-
-def geodesic_destination():
-    """Ellipsoidal (WGS84) direct geodesy problem — the Geod.fwd
-    analog completing geodesic_meters (the inverse): position and
-    final azimuth after travelling ``dist_m`` from a point at initial
-    azimuth ``bearing_deg``.  Vectorized Vincenty direct iteration in
-    numpy inside one Arrow-batched pandas UDF returning a struct
-    (lon, lat, back_azimuth_deg).  Round-trip against the
-    independently-coded Vincenty inverse is pytest-pinned at sub-mm;
-    the quarter meridian (10 001 965.729 m equator→pole) lands on the
-    pole to sub-meter.
-
-    Usage::
-
-        dest = geodesic_destination()(lon, lat, bearing, dist)
-        df.select(dest["lon"], dest["lat"], dest["az2_deg"])
-    """
-    from pyspark.sql import types as T
-
-    A, FLAT = 6378137.0, 1 / 298.257223563
-    B = A * (1 - FLAT)
-    schema = T.StructType([
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("az2_deg", T.DoubleType()),
-    ])
-
-    @F.pandas_udf(schema)
-    def _udf(lon1: pd.Series, lat1: pd.Series, bearing: pd.Series,
-             dist: pd.Series) -> pd.DataFrame:
-        p1 = np.radians(lat1.to_numpy(np.float64))
-        a1 = np.radians(bearing.to_numpy(np.float64))
-        s = dist.to_numpy(np.float64)
-        u1 = np.arctan((1 - FLAT) * np.tan(p1))
-        su1, cu1 = np.sin(u1), np.cos(u1)
-        sa1, ca1 = np.sin(a1), np.cos(a1)
-        sig1 = np.arctan2(np.tan(u1), ca1)
-        sina = cu1 * sa1
-        cos2a = 1 - sina ** 2
-        usq = cos2a * (A * A - B * B) / (B * B)
-        ka = 1 + usq / 16384 * (4096 + usq * (-768 + usq * (320 - 175 * usq)))
-        kb = usq / 1024 * (256 + usq * (-128 + usq * (74 - 47 * usq)))
-        sig = s / (B * ka)
-        for _ in range(60):
-            tsm = 2 * sig1 + sig
-            ssig, csig = np.sin(sig), np.cos(sig)
-            c2sm = np.cos(tsm)
-            dsig = kb * ssig * (c2sm + kb / 4 * (
-                csig * (-1 + 2 * c2sm ** 2)
-                - kb / 6 * c2sm * (-3 + 4 * ssig ** 2)
-                * (-3 + 4 * c2sm ** 2)))
-            new = s / (B * ka) + dsig
-            if np.all(np.abs(new - sig) < 1e-13):
-                sig = new
-                break
-            sig = new
-        tsm = 2 * sig1 + sig
-        ssig, csig = np.sin(sig), np.cos(sig)
-        c2sm = np.cos(tsm)
-        tmp = su1 * ssig - cu1 * csig * ca1
-        p2 = np.arctan2(su1 * csig + cu1 * ssig * ca1,
-                        (1 - FLAT) * np.sqrt(sina ** 2 + tmp ** 2))
-        lam = np.arctan2(ssig * sa1, cu1 * csig - su1 * ssig * ca1)
-        cc = FLAT / 16 * cos2a * (4 + FLAT * (4 - 3 * cos2a))
-        dl = lam - (1 - cc) * FLAT * sina * (
-            sig + cc * ssig * (c2sm + cc * csig * (-1 + 2 * c2sm ** 2)))
-        lon2 = lon1.to_numpy(np.float64) + np.degrees(dl)
-        lon2 = (lon2 + 540.0) % 360.0 - 180.0
-        az2 = np.degrees(np.arctan2(sina, -tmp))
-        az2 = (az2 + 360.0) % 360.0
-        return pd.DataFrame({"lon": lon2, "lat": np.degrees(p2),
-                             "az2_deg": az2})
-
-    return _udf
 
 
 def rhumb_distance_meters(lon1: Column, lat1: Column, lon2: Column,
@@ -211,29 +64,6 @@ def rhumb_bearing_deg(lon1: Column, lat1: Column, lon2: Column,
                   / F.tan(F.lit(np.pi / 4) + p1 / 2)))
     th = F.degrees(F.atan2(dlam, dpsi))
     return (th + F.lit(360.0)) % F.lit(360.0)
-
-
-def rhumb_destination(lon1: Column, lat1: Column, bearing_deg: Column,
-                      dist_m: Column,
-                      radius: float = EARTH_RADIUS_M
-                      ) -> tuple[Column, Column]:
-    """(lon, lat) after sailing ``dist_m`` on a constant course.
-    Inverse of the distance/bearing pair (round-trip pytest-pinned)."""
-    th = F.radians(bearing_deg)
-    p1 = F.radians(lat1)
-    delta = dist_m / F.lit(float(radius))
-    dphi = delta * F.cos(th)
-    p2 = p1 + dphi
-    dpsi = (F.log(F.tan(F.lit(np.pi / 4) + p2 / 2)
-                  / F.tan(F.lit(np.pi / 4) + p1 / 2)))
-    q = F.when(F.abs(dphi) > F.lit(1e-12), dphi / dpsi) \
-        .otherwise(F.cos(p1))
-    dlam = delta * F.sin(th) / q
-    # normalize the destination longitude to (−180, 180] so courses
-    # crossing the antimeridian land on a valid coordinate
-    lon_raw = lon1 + F.degrees(dlam)
-    lon_out = F.lit(180.0) - F.pmod(F.lit(180.0) - lon_raw, F.lit(360.0))
-    return (lon_out, F.degrees(p2))
 
 
 def great_circle_interpolate(lon1: Column, lat1: Column,
@@ -304,28 +134,3 @@ def initial_bearing_deg(lon1: Column, lat1: Column, lon2: Column,
         F.sin(dl) * F.cos(p2),
         F.cos(p1) * F.sin(p2) - F.sin(p1) * F.cos(p2) * F.cos(dl)))
     return (th + F.lit(360.0)) % F.lit(360.0)
-
-
-def great_circle_destination(lon1: Column, lat1: Column,
-                             bearing_deg: Column, dist_m: Column,
-                             radius: float = EARTH_RADIUS_M
-                             ) -> tuple[Column, Column]:
-    """(lon, lat) after travelling ``dist_m`` along the great circle
-    with initial ``bearing_deg`` — the direct geodesy problem
-    (spherical): φ₂ = asin(sinφ₁·cosδ + cosφ₁·sinδ·cosθ),
-    λ₂ = λ₁ + atan2(sinθ·sinδ·cosφ₁, cosδ − sinφ₁·sinφ₂).
-    Longitude normalized to (−180, 180]. Pure codegen; inverse of
-    (great_circle_meters, initial_bearing_deg) — round-trip
-    pytest-pinned."""
-    p1 = F.radians(lat1)
-    th = F.radians(bearing_deg)
-    d = dist_m / F.lit(float(radius))
-    sp2 = F.sin(p1) * F.cos(d) + F.cos(p1) * F.sin(d) * F.cos(th)
-    p2 = F.asin(F.least(F.greatest(sp2, F.lit(-1.0)), F.lit(1.0)))
-    dl = F.atan2(F.sin(th) * F.sin(d) * F.cos(p1),
-                 F.cos(d) - F.sin(p1) * F.sin(p2))
-    lon2 = lon1 + F.degrees(dl)
-    # pmod for input-domain robustness (unwrapped lon1), same fix as
-    # the rhumb Δλ forms
-    lon2 = F.pmod(lon2 + F.lit(180.0), F.lit(360.0)) - F.lit(180.0)
-    return lon2, F.degrees(p2)

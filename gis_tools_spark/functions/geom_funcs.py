@@ -1,9 +1,8 @@
 """Per-geometry scalar functions as vectorized Arrow UDF factories
 (SURVEY.md §2.3 — each maps to one reference method: buffer
 layer.py:469-488, centroid 490-499, convex_hull 1610-1621, envelope
-622-633, simplify 1082-1097 + douglas_peucker 1954-1972, to_2d
-1139-1153, add_points_to_line 389-403, shape_factor 1888-1900,
-area/length/bounds props 1356-1366).
+622-633, to_2d 1139-1153, shape_factor 1888-1900, area/length/bounds
+props 1356-1366).
 
 Usage: ``df.withColumn("area", geom_area()(F.col("geometry_wkb")))``.
 """
@@ -43,41 +42,6 @@ def geom_area():
 
 def geom_length():
     return _wkb_to_double(K.length)
-
-
-def geom_simplify_vw(min_area: float):
-    """WKB → WKB Visvalingam–Whyatt simplification (area criterion;
-    geom/kernels.simplify_vw) over LineString / MultiLineString /
-    Polygon rings — the cartographic alternative to Douglas–Peucker."""
-    @F.pandas_udf(T.BinaryType())
-    def _udf(s: pd.Series) -> pd.Series:
-        def one(b):
-            if b is None:
-                return None
-            g = wkb.decode(b)
-            t = g["type"]
-            if t == "LineString":
-                g = {"type": t, "coords": K.simplify_vw(g["coords"],
-                                                        min_area)}
-            elif t == "MultiLineString":
-                g = {"type": t, "lines": [K.simplify_vw(l, min_area)
-                                          for l in g["lines"]]}
-            elif t in ("Polygon", "MultiPolygon"):
-                def ring(r):
-                    out = K.simplify_vw(r, min_area)
-                    return out if len(out) >= 4 else r
-                if t == "Polygon":
-                    g = {"type": t,
-                         "rings": [ring(r) for r in g["rings"]]}
-                else:
-                    g = {"type": t,
-                         "polygons": [[ring(r) for r in rs]
-                                      for rs in g["polygons"]]}
-            return wkb.encode(g)
-
-        return pd.Series([one(b) for b in s])
-
-    return _udf
 
 
 def geom_as_text():
@@ -195,23 +159,6 @@ def geom_convex_hull():
     return _wkb_to_wkb(_hull)
 
 
-def geom_simplify(tolerance: float):
-    def _simp(g):
-        t = g["type"]
-        if t == "LineString":
-            return wkb.linestring(K.simplify_dp(g["coords"], tolerance))
-        if t == "Polygon":
-            return wkb.polygon([K.simplify_dp(r, tolerance) for r in g["rings"]])
-        if t == "MultiPolygon":
-            return wkb.multipolygon(
-                [[K.simplify_dp(r, tolerance) for r in rings] for rings in g["polygons"]])
-        if t == "MultiLineString":
-            return wkb.multilinestring([K.simplify_dp(l, tolerance) for l in g["lines"]])
-        return wkb.encode(g)
-
-    return _wkb_to_wkb(_simp)
-
-
 def geom_force_2d():
     def _f2(g):
         t = g["type"]
@@ -230,17 +177,6 @@ def geom_force_2d():
         return wkb.encode(g)
 
     return _wkb_to_wkb(_f2)
-
-
-def geom_segmentize(max_len: float):
-    def _seg(g):
-        if g["type"] == "LineString":
-            return wkb.linestring(K.segmentize(g["coords"], max_len))
-        if g["type"] == "MultiLineString":
-            return wkb.multilinestring([K.segmentize(l, max_len) for l in g["lines"]])
-        return wkb.encode(g)
-
-    return _wkb_to_wkb(_seg)
 
 
 def _segment_rect(p, q, d: float) -> np.ndarray | None:
@@ -333,59 +269,6 @@ def geom_is_valid():
         return pd.Series(out)
 
     return _udf
-
-
-def clean_geometry(df, wkb_col: str = "geometry_wkb", *,
-                   delete_invalid: bool = False):
-    """Layer-level repair (reference clean_geometry layer.py:1584-1608):
-    delete_invalid=True filters invalid rows; otherwise repairs in place
-    and drops only unsalvageable rows."""
-    if delete_invalid:
-        return df.where(geom_is_valid()(F.col(wkb_col)))
-    repaired = df.withColumn(wkb_col, geom_make_valid()(F.col(wkb_col)))
-    return repaired.where(F.col(wkb_col).isNotNull())
-
-
-def geom_length_xyz():
-    """3D length (XY length when no Z) — reference length_xyz
-    layer.py:813-868."""
-    def _len3(g):
-        t = g["type"]
-        lines = ([g["coords"]] if t == "LineString"
-                 else g["lines"] if t == "MultiLineString" else K.ring_list(g))
-        total = 0.0
-        for l in lines:
-            d = np.diff(l, axis=0)
-            total += float(np.sqrt((d * d).sum(axis=1)).sum())
-        return total
-
-    return _wkb_to_double(_len3)
-
-
-def geom_line_slope(mode: str = "percent"):
-    """Mean absolute slope of a 3D line (reference slope
-    layer.py:2044-2099): per-segment dz over horizontal run, length-
-    weighted; mode ∈ {percent, degrees}. 2D lines → 0."""
-    def _slope(g):
-        t = g["type"]
-        lines = ([g["coords"]] if t == "LineString"
-                 else g.get("lines", []))
-        num = den = 0.0
-        for l in lines:
-            if l.shape[1] < 3:
-                continue
-            dxy = np.sqrt((np.diff(l[:, :2], axis=0) ** 2).sum(axis=1))
-            dz = np.abs(np.diff(l[:, 2]))
-            ok = dxy > K.EPS
-            s = np.where(ok, dz / np.where(ok, dxy, 1.0), 0.0)
-            num += float((s * dxy).sum())
-            den += float(dxy.sum())
-        if den <= K.EPS:
-            return 0.0
-        mean = num / den
-        return mean * 100.0 if mode == "percent" else float(np.degrees(np.arctan(mean)))
-
-    return _wkb_to_double(_slope)
 
 
 def geom_type_of():

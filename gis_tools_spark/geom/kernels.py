@@ -714,15 +714,6 @@ def geom_distance(g1: dict, g2: dict) -> float:
     return best
 
 
-def hausdorff_distance(g1: dict, g2: dict) -> float:
-    """Discrete (vertex-based) symmetric Hausdorff distance, like shapely's
-    default for LineString vertices (reference layer.py:676-689)."""
-    a = np.vstack([r[:, :2] for r in ring_list(g1)])
-    b = np.vstack([r[:, :2] for r in ring_list(g2)])
-    d = np.sqrt(((a[:, None, :] - b[None, :, :]) ** 2).sum(axis=2))
-    return float(max(d.min(axis=1).max(), d.min(axis=0).max()))
-
-
 # ---------------------------------------------------------------- misc ops
 
 def convex_hull(pts: np.ndarray) -> np.ndarray:
@@ -746,64 +737,6 @@ def convex_hull(pts: np.ndarray) -> np.ndarray:
     return np.vstack([hull, hull[:1]])
 
 
-def simplify_dp(coords: np.ndarray, tol: float) -> np.ndarray:
-    """Douglas–Peucker (matches reference simplify layer.py:1082-1097 and
-    douglas_peucker layer.py:1954-1972)."""
-    pts = coords[:, :2]
-    keep = np.zeros(len(pts), dtype=bool)
-    keep[0] = keep[-1] = True
-    stack = [(0, len(pts) - 1)]
-    while stack:
-        i, j = stack.pop()
-        if j <= i + 1:
-            continue
-        seg = pts[j] - pts[i]
-        l2 = seg @ seg
-        mid = pts[i + 1 : j]
-        if l2 < EPS:
-            d = np.sqrt(((mid - pts[i]) ** 2).sum(axis=1))
-        else:
-            t = np.clip((mid - pts[i]) @ seg / l2, 0, 1)
-            proj = pts[i] + t[:, None] * seg
-            d = np.sqrt(((mid - proj) ** 2).sum(axis=1))
-        k = int(np.argmax(d))
-        if d[k] > tol:
-            keep[i + 1 + k] = True
-            stack.extend([(i, i + 1 + k), (i + 1 + k, j)])
-    if coords.shape[1] == 3:
-        return coords[keep]
-    return pts[keep]
-
-
-def segmentize(coords: np.ndarray, max_len: float) -> np.ndarray:
-    """Densify a line: no segment longer than max_len (reference
-    add_points_to_line, geometry.py:27-34)."""
-    out = [coords[0]]
-    for i in range(len(coords) - 1):
-        p, q = coords[i], coords[i + 1]
-        seg = np.sqrt(((q[:2] - p[:2]) ** 2).sum())
-        n = max(1, int(np.ceil(seg / max_len)))
-        for k in range(1, n + 1):
-            out.append(p + (q - p) * (k / n))
-    return np.asarray(out)
-
-
-def radius_of_curvature(coords: np.ndarray) -> np.ndarray:
-    """Per-interior-vertex circumscribed-circle radius (reference
-    radius_of_curvature geometry.py:839-906): R of the circle through
-    each consecutive vertex triple; collinear → inf."""
-    p = coords[:, :2]
-    a = p[:-2]; b = p[1:-1]; c = p[2:]
-    ab = np.sqrt(((b - a) ** 2).sum(axis=1))
-    bc = np.sqrt(((c - b) ** 2).sum(axis=1))
-    ca = np.sqrt(((a - c) ** 2).sum(axis=1))
-    cross = (b[:, 0] - a[:, 0]) * (c[:, 1] - a[:, 1]) - (b[:, 1] - a[:, 1]) * (c[:, 0] - a[:, 0])
-    area2 = np.abs(cross)
-    with np.errstate(divide="ignore"):
-        r = np.where(area2 < EPS, np.inf, ab * bc * ca / (2 * np.where(area2 < EPS, 1.0, area2)))
-    return r
-
-
 def buffer_point(x: float, y: float, dist: float, resolution: int = 16) -> np.ndarray:
     """Circle approximation ring, CCW, shapely-style 4*resolution segments."""
     n = 4 * resolution
@@ -812,34 +745,6 @@ def buffer_point(x: float, y: float, dist: float, resolution: int = 16) -> np.nd
     out[-1] = out[0]  # exact closure (sin(2π) ≠ 0.0 in floats; a 1e-16
     # residual creates a zero-length edge the clipper flags degenerate)
     return out
-
-
-def interpolate_line(coords: np.ndarray, dist: float) -> np.ndarray:
-    """Point at distance along the line (shapely line_interpolate_point)."""
-    pts = coords[:, :2]
-    seg = np.sqrt((np.diff(pts, axis=0) ** 2).sum(axis=1))
-    cum = np.concatenate([[0.0], np.cumsum(seg)])
-    total = cum[-1]
-    d = min(max(dist, 0.0), total)
-    i = int(np.searchsorted(cum, d, side="right")) - 1
-    i = min(i, len(seg) - 1)
-    t = 0.0 if seg[i] < EPS else (d - cum[i]) / seg[i]
-    return pts[i] + t * (pts[i + 1] - pts[i])
-
-
-def project_on_line(coords: np.ndarray, x: float, y: float) -> float:
-    """Distance along line of the closest point (shapely .project)."""
-    pts = coords[:, :2]
-    p, q = pts[:-1], pts[1:]
-    d = q - p
-    l2 = (d * d).sum(axis=1)
-    t = np.clip(((np.array([x, y]) - p) * d).sum(axis=1) / np.where(l2 < EPS, 1.0, l2), 0, 1)
-    proj = p + t[:, None] * d
-    dd = ((proj - np.array([x, y])) ** 2).sum(axis=1)
-    i = int(np.argmin(dd))
-    seg = np.sqrt(l2)
-    cum = np.concatenate([[0.0], np.cumsum(seg)])
-    return float(cum[i] + t[i] * seg[i])
 
 
 def _signed_boundary_dist(g: dict, xs: np.ndarray,
@@ -961,53 +866,3 @@ def chaikin(g: dict, iterations: int = 2) -> dict:
     if t == "Polygon":
         return {"type": "Polygon", "rings": polys[0]}
     return {"type": "MultiPolygon", "polygons": polys}
-
-
-def simplify_vw(coords: np.ndarray, min_area: float) -> np.ndarray:
-    """Visvalingam–Whyatt simplification: repeatedly remove the vertex
-    whose effective triangle (with its two live neighbours) has the
-    smallest area, until every remaining vertex's triangle area is
-    ≥ ``min_area``.  Endpoints always survive.  The area-based
-    criterion keeps visually salient corners that Douglas–Peucker's
-    distance criterion can drop — the standard cartographic
-    alternative (Visvalingam & Whyatt 1993).
-
-    Heap with lazy invalidation + the standard monotone fix (an
-    effective area is taken as max(own, last removed) so removal order
-    is non-decreasing)."""
-    import heapq
-
-    v = np.asarray(coords, dtype=np.float64)
-    n = len(v)
-    if n <= 2:
-        return v.copy()
-
-    def tri(i, j, k):
-        return abs((v[j, 0] - v[i, 0]) * (v[k, 1] - v[i, 1])
-                   - (v[j, 1] - v[i, 1]) * (v[k, 0] - v[i, 0])) / 2.0
-
-    prev = np.arange(n) - 1
-    nxt = np.arange(n) + 1
-    alive = np.ones(n, dtype=bool)
-    version = np.zeros(n, dtype=np.int64)
-    heap = []
-    for i in range(1, n - 1):
-        heapq.heappush(heap, (tri(i - 1, i, i + 1), i, 0))
-    last = 0.0
-    while heap:
-        a, i, ver = heapq.heappop(heap)
-        if not alive[i] or ver != version[i]:
-            continue
-        a = max(a, last)
-        if a >= min_area:
-            break
-        last = a
-        alive[i] = False
-        p, q = prev[i], nxt[i]
-        nxt[p], prev[q] = q, p
-        for j in (p, q):
-            if 0 < j < n - 1 and alive[j]:
-                version[j] += 1
-                heapq.heappush(
-                    heap, (tri(prev[j], j, nxt[j]), j, version[j]))
-    return v[alive]

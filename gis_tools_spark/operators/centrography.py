@@ -1,5 +1,5 @@
-"""Centrographic statistics — mean center, standard distance and the
-standard deviational ellipse (Yuill 1971 / CrimeStat III chap. 4), the
+"""Centrographic statistics — the standard deviational ellipse (with its
+mean center and standard distance) and the median center (Yuill 1971 / CrimeStat III chap. 4), the
 classic first-look descriptive layer of point-pattern analysis (the
 reference exposes the centroid/statistics building blocks in
 gistools layer.py:905-934 and stats.py:60-151; the ellipse itself is
@@ -35,36 +35,6 @@ def _moments(points: DataFrame, by: list[str], lon: str, lat: str,
         F.sum(w * y * y).alias("s_yy"),
         F.sum(w * x * y).alias("s_xy"),
     )
-
-
-def mean_center(points: DataFrame, *, by: list[str] | None = None,
-                lon: str = "lon", lat: str = "lat",
-                weight: str | None = None) -> DataFrame:
-    """(Weighted) mean center per group: one aggregation, two columns."""
-    by = by or []
-    m = _moments(points, by, lon, lat, weight)
-    return m.select(*by,
-                    F.col("w_n").alias("n"),
-                    (F.col("s_x") / F.col("w_n")).alias("mean_x"),
-                    (F.col("s_y") / F.col("w_n")).alias("mean_y"))
-
-
-def standard_distance(points: DataFrame, *, by: list[str] | None = None,
-                      lon: str = "lon", lat: str = "lat",
-                      weight: str | None = None) -> DataFrame:
-    """Standard distance (the 2-D RMS dispersion radius):
-    sqrt(Σd²/n) = sqrt((Σx² - (Σx)²/n + Σy² - (Σy)²/n) / n)."""
-    by = by or []
-    m = _moments(points, by, lon, lat, weight)
-    n = F.col("w_n")
-    # association mirrors the oracle: (dxx) + (dyy), then / n
-    dxx = F.col("s_xx") - F.col("s_x") * F.col("s_x") / n
-    dyy = F.col("s_yy") - F.col("s_y") * F.col("s_y") / n
-    return m.select(*by,
-                    n.alias("n"),
-                    (F.col("s_x") / n).alias("mean_x"),
-                    (F.col("s_y") / n).alias("mean_y"),
-                    F.sqrt((dxx + dyy) / n).alias("std_dist"))
 
 
 def _ellipse_cols(n: Column, sx: Column, sy: Column, sxx: Column,
@@ -117,7 +87,7 @@ def median_center(points: DataFrame, *, by: list[str] | None = None,
                   iters: int = 12, eps: float = 1e-12) -> DataFrame:
     """Median center (geometric median / Weber point) per group via
     ``iters`` fixed Weiszfeld steps from the mean center — the robust
-    companion of mean_center (ArcGIS "Median Center"): the point
+    companion of the mean center (ArcGIS "Median Center"): the point
     minimizing Σ distance, insensitive to outliers that drag the mean.
 
     Weiszfeld step: c' = Σ(pᵢ/dᵢ) / Σ(1/dᵢ) with dᵢ = max(‖pᵢ−c‖, eps)

@@ -1,102 +1,22 @@
-"""Choropleth classification — natural breaks (Jenks/Fisher), quantile
-and equal-interval class schemes over a value column.
+"""Choropleth classification — equal-interval class breaks over a value
+column, and the column arithmetic that assigns each row its class.
 
 The map-styling half every GIS exposes (ArcGIS/QGIS "Classify"; pysal
-mapclassify). Exact Fisher-Jenks needs the sorted value vector, which
-doesn't distribute; the standard scale answer (and mapclassify's own
-`JenksCaspallSampled`) is to run the DP over a bounded HISTOGRAM:
-
-  one groupBy(bin) collapses any row count to ≤ `bins` weighted points
-  → driver-side vectorized Fisher DP over the bins (O(bins² · k) with
-  numpy prefix-sum SSE, exact for the binned representation)
-  → classify = pure column arithmetic against the broadcast breaks.
-
-With `bins` ≥ the number of distinct values the result is EXACTLY the
-Fisher-Jenks optimum (each distinct value its own bin) — that's the
-pytest oracle. At 10^12 rows the only data-sized op is the first
-groupBy; the DP sees ≤ bins rows.
+mapclassify): classify = pure column arithmetic against the broadcast
+breaks.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
-__all__ = ["jenks_breaks", "equal_interval_breaks", "quantile_breaks",
-           "classify_column"]
-
-
-def _hist(df: DataFrame, col: str, bins: int):
-    """(values, weights) of the bounded histogram; values are the exact
-    bin means (not centers), so the binned SSE is exact per bin."""
-    lo, hi = df.agg(F.min(col), F.max(col)).first()
-    lo, hi = float(lo), float(hi)
-    if hi == lo:
-        return np.array([lo]), np.array([1.0]), lo, hi
-    b = F.least(F.floor((F.col(col) - lo) / (hi - lo) * bins),
-                F.lit(bins - 1)).cast("long")
-    rows = (df.groupBy(b.alias("__b"))
-            .agg(F.count("*").alias("w"), F.avg(col).alias("v"))
-            .orderBy("__b").collect())
-    return (np.array([r["v"] for r in rows]),
-            np.array([float(r["w"]) for r in rows]), lo, hi)
-
-
-def jenks_breaks(df: DataFrame, col: str, k: int, *,
-                 bins: int = 1024) -> list[float]:
-    """k-class Fisher-Jenks breaks: returns k-1 internal upper bounds
-    (class i = values in (break_{i-1}, break_i]). Exact when every
-    distinct value lands in its own bin."""
-    v, w, lo, hi = _hist(df, col, bins)
-    n = len(v)
-    if n <= k:
-        return list(np.unique(v)[:-1].astype(float))
-    # weighted prefix sums → SSE of any bin range in O(1)
-    cw = np.concatenate([[0.0], np.cumsum(w)])
-    cwv = np.concatenate([[0.0], np.cumsum(w * v)])
-    cwv2 = np.concatenate([[0.0], np.cumsum(w * v * v)])
-
-    def sse(i, j):
-        """SSE of bins i..j-1 (numpy-broadcast over arrays)."""
-        W = cw[j] - cw[i]
-        S = cwv[j] - cwv[i]
-        S2 = cwv2[j] - cwv2[i]
-        return S2 - np.where(W > 0, S * S / np.where(W > 0, W, 1.0), 0.0)
-
-    dp = sse(0, np.arange(n + 1))                    # 1 class
-    cut = np.zeros((k, n + 1), dtype=np.int64)
-    idx = np.arange(n + 1)
-    for c in range(1, k):
-        # dp_c[j] = min_i dp[i] + sse(i, j): broadcast (n+1, n+1)
-        cost = dp[None, :] + sse(idx[None, :], idx[:, None])
-        # cost[j, i] needs i < j (≥1 bin per class): mask col ≥ row
-        cost[np.triu_indices(n + 1)] = np.inf
-        best = np.argmin(cost, axis=1)
-        dp = cost[np.arange(n + 1), best]
-        cut[c] = best
-    # backtrack the k-1 cut positions for the full range
-    cuts = []
-    j = n
-    for c in range(k - 1, 0, -1):
-        i = int(cut[c][j])
-        cuts.append(i)
-        j = i
-    cuts.reverse()
-    return [float(v[i - 1]) for i in cuts]
+__all__ = ["equal_interval_breaks", "classify_column"]
 
 
 def equal_interval_breaks(df: DataFrame, col: str, k: int) -> list[float]:
     lo, hi = df.agg(F.min(col), F.max(col)).first()
     lo, hi = float(lo), float(hi)
     return [lo + (hi - lo) * i / k for i in range(1, k)]
-
-
-def quantile_breaks(df: DataFrame, col: str, k: int) -> list[float]:
-    """Exact quantile breaks (Spark's exact `percentile`)."""
-    qs = [i / k for i in range(1, k)]
-    row = df.agg(F.expr(
-        f"percentile({col}, array({','.join(map(str, qs))}))")).first()[0]
-    return [float(x) for x in row]
 
 
 def classify_column(value: Column | str, breaks: list[float]) -> Column:

@@ -46,8 +46,7 @@ from pyspark.sql import DataFrame, functions as F
 from .core import persist_scoped
 from .network import connected_components
 
-__all__ = ["dbscan", "eps_neighbor_pairs", "st_dbscan",
-           "st_neighbor_pairs"]
+__all__ = ["dbscan", "st_dbscan"]
 
 
 def _eps_pairs_unordered(points: DataFrame, *, id_col: str,
@@ -83,27 +82,6 @@ def _eps_pairs_unordered(points: DataFrame, *, id_col: str,
             .where((~F.col("sm") | (F.col("ia") < F.col("ib")))
                    & (dx * dx + dy * dy <= e * e))
             .select("ia", "ib"))
-
-
-def _mirror(u: DataFrame, points: DataFrame, id_col: str) -> DataFrame:
-    """Ordered pair relation from the unordered pairs ``u``: both
-    orientations plus the self pairs. ``u`` is read twice, so callers
-    persist it (scoped) or its grid join runs twice."""
-    return (u.unionAll(u.select(F.col("ib").alias("ia"),
-                                F.col("ia").alias("ib")))
-            .unionAll(points.select(F.col(id_col).alias("ia"),
-                                    F.col(id_col).alias("ib"))))
-
-
-def eps_neighbor_pairs(points: DataFrame, *, id_col: str = "id",
-                       lon: str = "lon", lat: str = "lat",
-                       eps: float) -> DataFrame:
-    """All ordered pairs (ia, ib) with planar distance <= eps, including
-    the self pair (ia == ib) — the unordered forward-stencil join
-    mirrored both ways plus the self pairs."""
-    u = _eps_pairs_unordered(points, id_col=id_col, lon=lon, lat=lat,
-                             eps=eps).persist()
-    return persist_scoped(u, _mirror(u, points, id_col))
 
 
 def dbscan(points: DataFrame, *, id_col: str = "id",
@@ -223,20 +201,6 @@ def _st_pairs_unordered(points: DataFrame, *, id_col: str,
                    & (F.abs(F.col("at") - F.col("bt_c"))
                       <= F.lit(et_us)))
             .select("ia", "ib"))
-
-
-def st_neighbor_pairs(points: DataFrame, *, id_col: str = "id",
-                      lon: str = "lon", lat: str = "lat",
-                      ts_col: str = "ts", eps: float,
-                      eps_t_s: float) -> DataFrame:
-    """All ordered pairs (ia, ib) neighboring in SPACE AND TIME:
-    planar distance <= eps and |Δt| <= eps_t_s seconds (self pair
-    included) — the unordered forward-stencil join mirrored both ways
-    plus the self pairs."""
-    u = _st_pairs_unordered(points, id_col=id_col, lon=lon, lat=lat,
-                            ts_col=ts_col, eps=eps,
-                            eps_t_s=eps_t_s).persist()
-    return persist_scoped(u, _mirror(u, points, id_col))
 
 
 def st_dbscan(points: DataFrame, *, id_col: str = "id",

@@ -1,4 +1,4 @@
-"""Isochrone polygons — the drive-time-area composition.
+"""Isochrone boundaries — the drive-time-area composition.
 
 Composes two gated engine primitives end-to-end:
 ``network.service_area`` (multi-source Bellman-Ford with cutoff
@@ -10,11 +10,7 @@ Dijkstra + travel_time pipelines, network.py:625-774, with the
 polygonization left to the user; here it is one call).
 
 ``isochrone_boundaries`` returns the boundary EDGES (source, i, j) —
-exact, deterministic, oracle-able.  ``isochrone_polygons`` walks the
-edges into closed rings per source (outer ring CCW by shoelace) and
-emits WKB POLYGON / MULTIPOLYGON plus the enclosed area; boundaries
-with pinch vertices (degree > 2 — alpha shapes allow them) fall back
-to a MULTILINESTRING with ``is_ring = false``.
+exact, deterministic, oracle-able.
 
 Scale: the reach phase touches only the isochrone ball (service_area's
 pruning contract); the hull phase is per-source applyInPandas over
@@ -24,16 +20,12 @@ through the driver.
 
 from __future__ import annotations
 
-import struct
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .network import service_area
 from .triangulate import alpha_shape_edges
 
-__all__ = ["isochrone_boundaries", "isochrone_polygons"]
+__all__ = ["isochrone_boundaries"]
 
 
 def isochrone_boundaries(edges: DataFrame, node_xy: DataFrame,
@@ -51,111 +43,3 @@ def isochrone_boundaries(edges: DataFrame, node_xy: DataFrame,
                    F.col("x").cast("long").alias("x"),
                    F.col("y").cast("long").alias("y")))
     return alpha_shape_edges(pts, by="source", alpha=alpha)
-
-
-def _rings_from_edges(pts: dict, edge_list: list) -> tuple:
-    """Walk degree-2 edge cycles into rings.  Returns (rings, ok):
-    rings = list of [(x, y), ...] closed (first == last); ok=False when
-    any vertex has degree != 2 (pinch) — caller falls back."""
-    adj: dict = {}
-    for i, j in edge_list:
-        adj.setdefault(i, []).append(j)
-        adj.setdefault(j, []).append(i)
-    if any(len(v) != 2 for v in adj.values()):
-        return [], False
-    seen = set()
-    rings = []
-    for start in sorted(adj):
-        if start in seen:
-            continue
-        ring = [start]
-        seen.add(start)
-        prev, cur = None, start
-        while True:
-            a, b = adj[cur]
-            nxt = b if a == prev else a
-            if nxt == start:
-                break
-            ring.append(nxt)
-            seen.add(nxt)
-            prev, cur = cur, nxt
-        rings.append([pts[k] for k in ring] + [pts[ring[0]]])
-    return rings, True
-
-
-def _shoelace(ring: list) -> float:
-    s = 0.0
-    for (x0, y0), (x1, y1) in zip(ring, ring[1:]):
-        s += x0 * y1 - x1 * y0
-    return s / 2.0
-
-
-def _wkb_polygon(rings: list) -> bytes:
-    """Little-endian WKB: POLYGON (1 ring) or MULTIPOLYGON grouping
-    holes under the largest outer ring is NOT attempted — each ring
-    becomes its own polygon shell (alpha shapes here are outlines;
-    hole assignment would need containment tests the caller can run
-    with the engine's PIP)."""
-    def poly(ring):
-        b = struct.pack("<BII", 1, 3, 1) + struct.pack("<I", len(ring))
-        for x, y in ring:
-            b += struct.pack("<dd", float(x), float(y))
-        return b
-
-    if len(rings) == 1:
-        return poly(rings[0])
-    out = struct.pack("<BII", 1, 6, len(rings))
-    return out + b"".join(poly(r) for r in rings)
-
-
-def _wkb_multilinestring(pts: dict, edge_list: list) -> bytes:
-    out = struct.pack("<BII", 1, 5, len(edge_list))
-    for i, j in edge_list:
-        out += struct.pack("<BII", 1, 2, 2)
-        out += struct.pack("<dd", float(pts[i][0]), float(pts[i][1]))
-        out += struct.pack("<dd", float(pts[j][0]), float(pts[j][1]))
-    return out
-
-
-def isochrone_polygons(edges: DataFrame, node_xy: DataFrame,
-                       sources: list[str], *, cutoff: float,
-                       alpha: float,
-                       weight_col: str = "length") -> DataFrame:
-    """(source, n_nodes, n_rings, is_ring, area, geometry_wkb) per
-    source — see module docstring."""
-    reach = service_area(edges, sources, cutoff=cutoff,
-                         weight_col=weight_col)
-    pts = (reach.join(node_xy, on="node")
-           .select("source", F.col("nid").cast("long").alias("id"),
-                   F.col("x").cast("long").alias("x"),
-                   F.col("y").cast("long").alias("y")))
-    bnd = alpha_shape_edges(pts, by="source", alpha=alpha)
-    both = (pts.groupBy("source")
-            .agg(F.collect_list(F.struct("id", "x", "y")).alias("__pts"))
-            .join(bnd.groupBy("source")
-                  .agg(F.collect_list(F.struct("i", "j")).alias("__edges")),
-                  on="source"))
-
-    def _run(it):
-        for pdf in it:
-            rows = []
-            for src, p, e in zip(pdf["source"], pdf["__pts"],
-                                 pdf["__edges"]):
-                pm = {int(q["id"]): (int(q["x"]), int(q["y"])) for q in p}
-                el = [(int(q["i"]), int(q["j"])) for q in e]
-                rings, ok = _rings_from_edges(pm, el)
-                if ok and rings:
-                    area = sum(abs(_shoelace(r)) for r in rings)
-                    rows.append((src, len(pm), len(rings), True,
-                                 float(area), _wkb_polygon(rings)))
-                else:
-                    rows.append((src, len(pm), 0, False, None,
-                                 _wkb_multilinestring(pm, el)))
-            yield pd.DataFrame(rows, columns=[
-                "source", "n_nodes", "n_rings", "is_ring", "area",
-                "geometry_wkb"])
-
-    kt = dict(both.dtypes)["source"]
-    return both.mapInPandas(
-        _run, schema=f"source {kt}, n_nodes int, n_rings int, "
-                     "is_ring boolean, area double, geometry_wkb binary")

@@ -44,7 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["kmeans", "kmeans_centroids"]
+__all__ = ["kmeans"]
 
 
 def _fit(points: DataFrame, *, k: int, n_iter: int, x: str, y: str,
@@ -102,14 +102,6 @@ def _assign_expr(cents: dict[int, tuple[int, int]],
         arms.append(F.struct((dx * dx + dy * dy).alias("d2"),
                              F.lit(j).alias("j")))
     return F.least(*arms).getField("j")
-
-
-def kmeans_centroids(points: DataFrame, *, k: int, n_iter: int,
-                     x: str, y: str, id_col: str) -> DataFrame:
-    """Final centroids as a k-row DataFrame (j, cx, cy)."""
-    spark = points.sparkSession
-    cents = _fit(points, k=k, n_iter=n_iter, x=x, y=y, id_col=id_col)
-    return spark.createDataFrame(cents, "j int, cx long, cy long")
 
 
 def kmeans(points: DataFrame, *, k: int, n_iter: int,

@@ -1,9 +1,6 @@
-"""Geostatistics: distributed empirical variogram + ordinary kriging.
+"""Geostatistics: the distributed empirical variogram.
 
-The classic two-step geostatistical interpolation workflow (Matheron;
-the ArcGIS "Geostatistical Analyst" / gstat / pykrige surface):
-
-1. ``empirical_variogram`` — the experimental semivariogram
+``empirical_variogram`` — the experimental semivariogram
    γ̂(h) = 1/(2 N(h)) Σ (z_i − z_j)² over point pairs binned by lag
    distance h. Distributed exactly like the DBSCAN pair phase: grid-bin
    at the cutoff lag, 3×3 neighbor-bin equi-join, so pair volume is
@@ -14,24 +11,8 @@ the ArcGIS "Geostatistical Analyst" / gstat / pykrige surface):
    oracle can mirror the whole expression tree (the only floats are one
    IEEE sqrt — correctly rounded everywhere — and the final divisions).
 
-2. ``ordinary_kriging`` — moving-neighborhood OK: each query point is
-   predicted from its k nearest in-radius samples by solving the
-   (m+1)×(m+1) Lagrange system  [[Γ, 1], [1ᵀ, 0]] [λ; μ] = [γ; 1],
-   ẑ = λᵀ z,  σ² = λᵀγ + μ.  The neighbor search is the engine's
-   bounded grid join + per-query window top-k (pure codegen); only the
-   tiny solves run in an Arrow-batched pandas UDF, vectorized with
-   np.linalg.solve over stacked systems grouped by neighbor count.
-
-Plan shape / 100 TB notes:
-- variogram: one equi-join shuffle on the lag-cutoff bin + one
-  map-side-combinable groupBy(bin) — output is n_bins rows;
-- kriging: candidates = samples explode(9) on the radius bin, one
-  equi-join against queries binned once, window top-k per query, one
-  collect_list groupBy, then a scalar Arrow UDF whose rows carry only
-  (qx, qy, neighbors) — sample attribute payloads never cross Arrow;
-- moving neighborhood caps the solve at k×k regardless of corpus size
-  (global kriging's O(n³) solve cannot scale; k-neighborhood OK is the
-  standard production variant for exactly that reason).
+Plan shape: one equi-join shuffle on the lag-cutoff bin + one
+map-side-combinable groupBy(bin) — output is n_bins rows.
 
 Reference scope: gis-tools wraps DEM surfaces but has no geostatistics;
 brief-scope (gap-filling sensor/elevation/quality surfaces at lake
@@ -41,14 +22,9 @@ scale). IDW (interpolate.py) is the deterministic-weights sibling; TIN
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
-                               StructType)
-from pyspark.sql.window import Window
 
-__all__ = ["empirical_variogram", "ordinary_kriging", "variogram_gamma"]
+__all__ = ["empirical_variogram"]
 
 
 # ------------------------------------------------------------- variogram
@@ -119,142 +95,3 @@ def empirical_variogram(points: DataFrame, *, value_col: str,
          ).alias("gamma"),
         (F.col("__sd").cast("double")
          / (F.col("n_pairs").cast("double") * scale_xy)).alias("mean_lag"))
-
-
-# ------------------------------------------------------------- kriging
-
-def variogram_gamma(h: np.ndarray, *, model: str, nugget: float,
-                    sill: float, vrange: float) -> np.ndarray:
-    """Theoretical semivariogram γ(h) for h >= 0 (γ(0) = 0 exactly)."""
-    h = np.asarray(h, dtype=np.float64)
-    c = sill - nugget
-    if model == "spherical":
-        hr = np.minimum(h / vrange, 1.0)
-        g = nugget + c * (1.5 * hr - 0.5 * hr ** 3)
-    elif model == "exponential":
-        g = nugget + c * (1.0 - np.exp(-3.0 * h / vrange))
-    elif model == "gaussian":
-        g = nugget + c * (1.0 - np.exp(-3.0 * (h / vrange) ** 2))
-    else:
-        raise ValueError(f"unknown variogram model {model!r}")
-    return np.where(h == 0.0, 0.0, g)
-
-
-def _solve_ok(qx, qy, nx, ny, nv, *, model, nugget, sill, vrange):
-    """Vectorized OK solves for one equal-m batch: nx/ny/nv are
-    (B, m) float arrays. Returns (pred, var) length-B arrays."""
-    B, m = nx.shape
-    dxx = nx[:, :, None] - nx[:, None, :]
-    dyy = ny[:, :, None] - ny[:, None, :]
-    gij = variogram_gamma(np.sqrt(dxx * dxx + dyy * dyy), model=model,
-                          nugget=nugget, sill=sill, vrange=vrange)
-    a = np.empty((B, m + 1, m + 1))
-    a[:, :m, :m] = gij
-    a[:, m, :], a[:, :, m] = 1.0, 1.0
-    a[:, m, m] = 0.0
-    hq = np.sqrt((nx - qx[:, None]) ** 2 + (ny - qy[:, None]) ** 2)
-    rhs = np.empty((B, m + 1))
-    rhs[:, :m] = variogram_gamma(hq, model=model, nugget=nugget,
-                                 sill=sill, vrange=vrange)
-    rhs[:, m] = 1.0
-    try:
-        sol = np.linalg.solve(a, rhs[:, :, None])[:, :, 0]
-    except np.linalg.LinAlgError:
-        sol = np.stack([np.linalg.lstsq(a[i], rhs[i], rcond=None)[0]
-                        for i in range(B)])
-    lam = sol[:, :m]
-    mu = sol[:, m]
-    pred = (lam * nv).sum(axis=1)
-    var = (lam * rhs[:, :m]).sum(axis=1) + mu
-    return pred, var
-
-
-def ordinary_kriging(samples: DataFrame, queries: DataFrame, *,
-                     value_col: str, lon: str = "lon", lat: str = "lat",
-                     query_id: str, k: int = 12, radius: float,
-                     model: str = "spherical", nugget: float = 0.0,
-                     sill: float = 1.0, vrange: float = 1.0) -> DataFrame:
-    """Moving-neighborhood ordinary kriging: predict ``value_col`` at
-    each query point from its ≤k nearest samples within ``radius``.
-    Returns (query_id, lon, lat, ok_value, ok_var, n_neighbors); query
-    points with zero in-radius samples are omitted.
-
-    Deterministic: neighbor top-k ties break on (d², sample order), the
-    solve is a pure function of the neighbor set."""
-    r = float(radius)
-    sx, sy = F.col(lon), F.col(lat)
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    s = samples.select(
-        sx.alias("__sx"), sy.alias("__sy"),
-        F.col(value_col).cast("double").alias("__sv"),
-        F.explode(F.array(*[
-            F.struct((F.floor(sx / r) + dx).alias("bx"),
-                     (F.floor(sy / r) + dy).alias("by"))
-            for dx, dy in offs])).alias("t")
-    ).select("__sx", "__sy", "__sv",
-             F.col("t.bx").alias("bx"), F.col("t.by").alias("by"))
-    q = queries.select(
-        F.col(query_id).alias("__qid"),
-        F.col(lon).alias("__qx"), F.col(lat).alias("__qy"),
-        F.floor(F.col(lon) / r).alias("bx"),
-        F.floor(F.col(lat) / r).alias("by"))
-    dx = F.col("__qx") - F.col("__sx")
-    dy = F.col("__qy") - F.col("__sy")
-    d2 = dx * dx + dy * dy
-    cand = (q.join(s, on=["bx", "by"])
-            .where(d2 <= F.lit(r * r))
-            .select("__qid", "__qx", "__qy", "__sx", "__sy", "__sv",
-                    d2.alias("__d2")))
-    wnd = Window.partitionBy("__qid").orderBy(
-        F.col("__d2"), F.col("__sx"), F.col("__sy"))
-    top = (cand.withColumn("__rn", F.row_number().over(wnd))
-           .where(F.col("__rn") <= int(k)))
-    grouped = (top.groupBy("__qid", "__qx", "__qy")
-               .agg(F.collect_list(
-                   F.struct(F.col("__rn"), F.col("__sx"), F.col("__sy"),
-                            F.col("__sv"))).alias("__nb")))
-
-    # carry the caller's id dtype through (string keys are common;
-    # hard-coding LongType here used to fail deep inside the Arrow
-    # stage with an opaque cast error — round-4 ADVICE)
-    qid_type = queries.schema[query_id].dataType
-    fields = StructType([
-        StructField("qid", qid_type), StructField("qx", DoubleType()),
-        StructField("qy", DoubleType()),
-        StructField("ok_value", DoubleType()),
-        StructField("ok_var", DoubleType()),
-        StructField("n_neighbors", LongType())])
-
-    kw = dict(model=model, nugget=nugget, sill=sill, vrange=vrange)
-
-    def _krige(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            nbs = pdf["__nb"].tolist()
-            ms = np.array([len(nb) for nb in nbs])
-            qx = pdf["__qx"].to_numpy(np.float64)
-            qy = pdf["__qy"].to_numpy(np.float64)
-            pred = np.empty(len(pdf))
-            var = np.empty(len(pdf))
-            for m in np.unique(ms):
-                idx = np.nonzero(ms == m)[0]
-                # sort each neighbor list by __rn for determinism
-                def arr(field, i):
-                    nb = sorted(nbs[i], key=lambda t: t["__rn"])
-                    return [t[field] for t in nb]
-                nx = np.array([arr("__sx", i) for i in idx])
-                ny = np.array([arr("__sy", i) for i in idx])
-                nv = np.array([arr("__sv", i) for i in idx])
-                p, v = _solve_ok(qx[idx], qy[idx], nx, ny, nv, **kw)
-                pred[idx] = p
-                var[idx] = v
-            yield pd.DataFrame({
-                "qid": pdf["__qid"].to_numpy(),
-                "qx": qx, "qy": qy, "ok_value": pred, "ok_var": var,
-                "n_neighbors": ms.astype(np.int64)})
-
-    out = grouped.mapInPandas(_krige, schema=fields)
-    return out.select(F.col("qid").alias(query_id),
-                      F.col("qx").alias(lon), F.col("qy").alias(lat),
-                      "ok_value", "ok_var", "n_neighbors")

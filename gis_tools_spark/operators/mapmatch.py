@@ -1,39 +1,27 @@
-"""Road snapping and HMM map matching over segment tables.
+"""Road snapping over segment tables.
 
 The reference stops at per-point projection (`project`,
-layer.py:1030-1057 — see proximity.snap_to_lines for that surface);
-GPS pipelines additionally need (a) a pure-codegen snap against a ROAD
-SEGMENT table at billions of pings, and (b) track-aware map matching
-(Newson & Krummel 2009 HMM semantics: emission = GPS noise, transition
-= route continuity), because per-ping nearest-edge flips between
-parallel roads.
+layer.py:1030-1057); GPS pipelines additionally need a pure-codegen
+snap against a ROAD SEGMENT table at billions of pings.
 
 Segments are rows (seg_id, x1, y1, x2, y2) — the exploded form of a
-road network's polylines (one row per 2-point piece; explode with
-operators/split.cut_* or geom underlying-points). Planar coordinates;
-reproject first for metric radii.
+road network's polylines (one row per 2-point piece). Planar
+coordinates; reproject first for metric radii.
 
-Scale design:
-- snap_to_segments: segments explode to the cells of their
-  radius-padded bbox (sequence() bounds — bounded fan-out for road-
-  length segments), pings carry ONE cell; cell equi-join + closed-form
-  point-segment distance in whole-stage codegen; per-ping argmin via
-  one window. Two shuffles total (cell join, window), zero Python.
-- map_match: stage 1 keeps the top-K candidates per ping (same join),
-  stage 2 is one applyInPandas Viterbi per track key — state is
-  O(pings_per_track × K), the track is the natural locality unit, and
-  the K-candidate table is ~K× the ping volume, not |segments|.
+Scale design: segments explode to the cells of their radius-padded
+bbox (sequence() bounds — bounded fan-out for road-length segments),
+pings carry ONE cell; cell equi-join + closed-form point-segment
+distance in whole-stage codegen; per-ping argmin via one window. Two
+shuffles total (cell join, window), zero Python.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .. import cells as C
 
-__all__ = ["snap_to_segments", "map_match"]
+__all__ = ["snap_to_segments"]
 
 
 def _seg_cells(segs: DataFrame, radius: float, res: int) -> DataFrame:
@@ -100,70 +88,3 @@ def snap_to_segments(points: DataFrame, segs: DataFrame, *,
             .where(F.col("__rn") == 1)
             .withColumn("snap_dist", F.sqrt("__d2"))
             .drop("__rn", "__d2", "__px", "__py"))
-
-
-def map_match(pings: DataFrame, segs: DataFrame, *,
-              key_cols: list[str], ts_col: str = "ts",
-              radius: float, sigma: float | None = None,
-              beta: float | None = None, k: int = 5,
-              lon: str = "lon", lat: str = "lat",
-              point_id: str = "pid", seg_id: str = "seg_id",
-              res: int = 12) -> DataFrame:
-    """HMM map matching (Newson & Krummel 2009 shape): per track, pick
-    the segment sequence minimizing
-
-        sum_i d_i^2 / (2 sigma^2)                     (emission)
-      + sum_i |gap_i| / beta                          (transition)
-
-    where d_i is ping i's snap distance to its chosen segment and gap_i
-    the euclidean distance between consecutive snap points (route
-    discontinuity proxy — exact route distance needs routing and is out
-    of scope, as in most production matchers). sigma defaults to
-    radius/5, beta to radius. Ties break toward the smaller seg_id.
-
-    Returns one row per matched ping: key cols + (point_id, ts,
-    seg_id, seg_t, snap_x, snap_y, snap_dist). Pings with no candidate
-    in `radius` are dropped (split tracks upstream if gaps matter)."""
-    sigma = float(sigma if sigma is not None else radius / 5.0)
-    beta = float(beta if beta is not None else radius)
-    cand = _candidates(pings, segs, radius, lon=lon, lat=lat, res=res)
-    wk = Window.partitionBy(point_id).orderBy(F.col("__d2").asc(),
-                                              F.col(seg_id).asc())
-    cand = (cand.withColumn("__rn", F.row_number().over(wk))
-            .where(F.col("__rn") <= k)
-            .select(*key_cols, point_id, ts_col, seg_id, "seg_t",
-                    "snap_x", "snap_y", F.sqrt("__d2").alias("snap_dist")))
-
-    out_schema = cand.schema
-
-    def _viterbi(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([ts_col, point_id, seg_id],
-                              kind="mergesort").reset_index(drop=True)
-        groups = [g for _, g in pdf.groupby([ts_col, point_id], sort=True)]
-        if not groups:
-            return pdf.iloc[0:0]
-        prev_cost = (groups[0]["snap_dist"].to_numpy() ** 2
-                     / (2 * sigma * sigma))
-        back: list[np.ndarray] = []
-        for i in range(1, len(groups)):
-            g, h = groups[i - 1], groups[i]
-            gx = g["snap_x"].to_numpy()[None, :]
-            gy = g["snap_y"].to_numpy()[None, :]
-            hx = h["snap_x"].to_numpy()[:, None]
-            hy = h["snap_y"].to_numpy()[:, None]
-            gap = np.hypot(hx - gx, hy - gy)
-            tot = prev_cost[None, :] + gap / beta
-            bp = np.argmin(tot, axis=1)        # first (smallest seg) min
-            back.append(bp)
-            prev_cost = (tot[np.arange(len(h)), bp]
-                         + h["snap_dist"].to_numpy() ** 2
-                         / (2 * sigma * sigma))
-        sel = [int(np.argmin(prev_cost))]
-        for bp in reversed(back):
-            sel.append(int(bp[sel[-1]]))
-        sel.reverse()
-        return pd.concat([groups[i].iloc[[s]]
-                          for i, s in enumerate(sel)], ignore_index=True)
-
-    return cand.groupBy(*key_cols).applyInPandas(
-        lambda key, pdf: _viterbi(pdf), schema=out_schema)

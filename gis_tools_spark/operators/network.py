@@ -5,16 +5,13 @@ Edges live in a DataFrame (edge_id, src_key, dst_key, weight, direction)
 with node keys = rounded endpoint coordinates (the reference keys its
 networkx MultiGraph by coordinate tuples, network.py:131-137).
 
-Distributed pieces are plain DataFrame ops (degree, self-loops,
-multi-edges); connected components use iterative label propagation
+Connected components use iterative label propagation
 (small-world joins); Dijkstra runs per-component via applyInPandas with
 networkx — authentic to the reference (network.py:625-774) while only
 shuffling each component once.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -53,31 +50,6 @@ def edges_from_lines(df: DataFrame, *, wkb_col: str = "geometry_wkb",
             .withColumn("dst_key", F.col("__e.dst_key"))
             .withColumn("length", F.col("__e.length"))
             .drop("__e"))
-
-
-def self_loops(edges: DataFrame) -> DataFrame:
-    """Edges whose endpoints coincide (reference network.py:80-87)."""
-    return edges.where(F.col("src_key") == F.col("dst_key"))
-
-
-def multi_edges(edges: DataFrame) -> DataFrame:
-    """Duplicate (src,dst) pairs, undirected (network.py:38-52)."""
-    a = F.least("src_key", "dst_key").alias("u")
-    b = F.greatest("src_key", "dst_key").alias("v")
-    return (edges.select(a, b).groupBy("u", "v").count()
-            .where(F.col("count") > 1))
-
-
-def node_degrees(edges: DataFrame) -> DataFrame:
-    """Undirected degree per node key (basis for end-nodes / remote
-    nodes, network.py:53-87, 197-215)."""
-    nodes = (edges.select(F.col("src_key").alias("node"))
-             .unionAll(edges.select(F.col("dst_key").alias("node"))))
-    return nodes.groupBy("node").agg(F.count("*").alias("degree"))
-
-
-def end_nodes(edges: DataFrame) -> DataFrame:
-    return node_degrees(edges).where("degree = 1")
 
 
 def _cc_pairs_pandas(a: "pd.Series", b: "pd.Series") -> "pd.DataFrame":
@@ -230,66 +202,6 @@ def _minlabel_step(und: DataFrame):
                 .select("node", comp.alias("component"),
                         (comp != F.col("__old")).alias("__chg")))
     return step
-
-
-def expand_directed(edges: DataFrame, *, direction_col: str = "direction") -> DataFrame:
-    """Expand per `direction` into directed arcs (reference build_graph
-    network.py:814-844): 'two-ways' → fwd+rev, 'one-way' → fwd,
-    'reverse' → rev. Adds `is_forward` boolean; rev arcs swap endpoints."""
-    fwd = (edges.where(F.col(direction_col).isin("two-ways", "one-way"))
-           .withColumn("is_forward", F.lit(True)))
-    rev = (edges.where(F.col(direction_col).isin("two-ways", "reverse"))
-           .withColumn("is_forward", F.lit(False))
-           .withColumnRenamed("src_key", "__t")
-           .withColumnRenamed("dst_key", "src_key")
-           .withColumnRenamed("__t", "dst_key"))
-    return fwd.unionByName(rev.select(*fwd.columns))
-
-
-def travel_times(lines: DataFrame, *, wkb_col: str = "geometry_wkb",
-                 speed_col: str = "max_speed",
-                 rollover_criterion: float = 3.0,
-                 min_speed: float = 1.0) -> DataFrame:
-    """Per-edge travel time (reference travel_time network.py:846-1047,
-    simplified kinematics): per-segment allowed speed =
-    min(max_speed, sqrt(rollover · R)) with R the curve radius at the
-    segment's vertices (rollover criterion network.py:521-522);
-    time = Σ seg_len / v. Adds `travel_time` and `mean_speed` columns.
-    Units follow the inputs (speed in length-units/hour → time in hours).
-    """
-    # 1:1 per line → struct scalar UDF over (wkb, speed); other line
-    # attribute columns stay JVM-side
-    tt_t = T.StructType([T.StructField("travel_time", T.DoubleType()),
-                         T.StructField("mean_speed", T.DoubleType())])
-
-    @F.pandas_udf(tt_t)
-    def _tt(bs: pd.Series, speeds: pd.Series) -> pd.DataFrame:
-        tt, ms = [], []
-        for b, vmax_ in zip(bs, speeds):
-            g = wkb.decode(b)
-            coords = g["coords"] if g["type"] == "LineString" else g["lines"][0]
-            pts = coords[:, :2]
-            seg = np.sqrt((np.diff(pts, axis=0) ** 2).sum(axis=1))
-            v = np.full(len(seg), max(float(vmax_), min_speed))
-            if len(pts) >= 3:
-                from ..geom.kernels import radius_of_curvature
-
-                r = radius_of_curvature(coords)
-                vcurve = np.sqrt(rollover_criterion * r)
-                # a curve radius at vertex k limits segments k and k+1
-                lim = np.full(len(seg), np.inf)
-                lim[:-1] = np.minimum(lim[:-1], vcurve)
-                lim[1:] = np.minimum(lim[1:], vcurve)
-                v = np.maximum(np.minimum(v, lim), min_speed)
-            total_len = float(seg.sum())
-            t = float((seg / v).sum()) if total_len > 0 else 0.0
-            tt.append(t)
-            ms.append(total_len / t if t > 0 else 0.0)
-        return pd.DataFrame({"travel_time": tt, "mean_speed": ms})
-
-    return (lines.withColumn("__tt", _tt(F.col(wkb_col), F.col(speed_col)))
-            .select("*", "__tt.travel_time", "__tt.mean_speed")
-            .drop("__tt"))
 
 
 def _bellman_ford(edges: DataFrame, sources: list[str], weight_col: str,
@@ -463,270 +375,6 @@ def nearest_facility(edges: DataFrame, sources: list[str], *,
     return (sa.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
             .select("node", F.col("source").alias("facility"), "dist"))
-
-
-# ------------------------------------------------------------------ kinematics
-# Physics model parity with the reference's travel_time / velocity /
-# fuel_consumption (network.py:846-1047) and its uniform-acceleration
-# segment-transition solver (network.py:1050-1129). Reimplemented from
-# the published equations (v² = v₀² + 2as transitions, hp-limited grade
-# speeds, rollover curvature limit, energy-balance fuel demand).
-
-_HP_W = 745.699872  # mechanical horsepower in watts
-_G = 9.81
-
-
-def _accel_profile(v_lim: np.ndarray, seg_len: np.ndarray,
-                   v_in: float, v_out: float, a1: float, a2: float):
-    """Travel time / acceleration distance across one edge's segments.
-
-    Walks segments forward accelerating at a1 toward each segment's
-    speed limit and decelerating at a2 (<0) into the next; when a
-    segment is too short to brake to the downstream limit, the entry
-    speed is lowered and the walk backtracks one segment (reference
-    semantics, network.py:1050-1129). Returns (t_per_seg, d_accel_per_
-    seg, node_speeds)."""
-    m = len(v_lim)
-    v = np.concatenate(([v_in], v_lim[1:], [v_out])).astype(np.float64)
-    t = np.zeros(m)
-    da = np.zeros(m)
-    tol = 0.01
-    n = 0
-    guard = 0
-    while n < m and guard < 50 * m + 100:
-        guard += 1
-        vi, vf, vm, s = v[n], v[n + 1], v_lim[n], seg_len[n]
-        d1 = (vm * vm - vi * vi) / (2 * a1)       # accel distance to vm
-        d2 = (vf * vf - vm * vm) / (2 * a2)       # brake distance vm→vf
-        if vm > vi and vm > vf:
-            d = ((vf * vf - vi * vi) / (2 * a1) if vf >= vi
-                 else (vf * vf - vi * vi) / (2 * a2))
-            if d1 + d2 <= s:
-                t[n] = (vm - vi) / a1 + (vf - vm) / a2 + (s - (d1 + d2)) / vm
-                da[n] = d1
-                n += 1
-            elif d <= s + tol:
-                vpk = np.sqrt((2 * s * a1 * a2 + a2 * vi * vi - a1 * vf * vf)
-                              / (a2 - a1))
-                t[n] = (vpk - vi) / a1 + (vf - vpk) / a2
-                da[n] = (vpk * vpk - vi * vi) / (2 * a1)
-                n += 1
-            elif vf >= vi:
-                vr = np.sqrt(vi * vi + 2 * a1 * s)
-                t[n] = (vr - vi) / a1
-                da[n] = s
-                v[n + 1] = vr
-                n += 1
-            else:
-                v[n] = np.sqrt(vf * vf - 2 * a2 * s)
-                n = max(n - 1, 0)
-        elif vf < vm <= vi:
-            if d2 <= s + tol:
-                t[n] = (vf - vm) / a2 + (s - d2) / vm
-                n += 1
-            else:
-                v[n] = np.sqrt(vf * vf - 2 * a2 * s)
-                n = max(n - 1, 0)
-        elif vi < vm <= vf:
-            if d1 <= s:
-                t[n] = (vm - vi) / a1 + (s - d1) / vm
-                da[n] = d1
-                v[n + 1] = vm
-            else:
-                vr = np.sqrt(vi * vi + 2 * a1 * s)
-                t[n] = (vr - vi) / a1
-                da[n] = s
-                v[n + 1] = vr
-            n += 1
-        else:  # vm <= vi and vm <= vf
-            t[n] = s / vm
-            v[n + 1] = vm
-            n += 1
-    return t, da, v
-
-
-def _edge_segments(g: dict):
-    coords = np.asarray(
-        g["coords"] if g["type"] == "LineString" else g["lines"][0],
-        dtype=np.float64)
-    pts = coords[:, :2]
-    dxy = np.sqrt((np.diff(pts, axis=0) ** 2).sum(axis=1))
-    if coords.shape[1] >= 3:
-        dz = np.diff(coords[:, 2])
-        slope_deg = np.degrees(np.arctan2(dz, np.maximum(dxy, 1e-12)))
-        seg_len = np.sqrt(dxy * dxy + dz * dz)
-    else:
-        slope_deg = np.zeros(len(dxy))
-        seg_len = dxy
-    return coords, seg_len, slope_deg
-
-
-def _v_limits(coords, seg_len, slope_deg, *, max_speed, rolling_coeff,
-              rollover, weight, gross_hp, uphill_hp, downhill_hp):
-    """Per-segment hp/grade/curvature-limited speeds for both directions
-    (reference _get_max_limited_speed network.py:1009-1047)."""
-    from ..geom.kernels import radius_of_curvature
-
-    ehp_up = gross_hp * uphill_hp * _HP_W
-    ehp_down = gross_hp * downhill_hp * _HP_W
-    rad = np.radians(slope_deg)
-    grade = _G * weight * np.sin(np.abs(rad))
-    roll = _G * rolling_coeff * weight * np.cos(rad)
-    down = slope_deg < 0
-    v_fwd = np.where(down,
-                     ehp_down / np.maximum(grade - roll, 1e-9),
-                     ehp_up / np.maximum(grade + roll, 1e-9))
-    up = slope_deg > 0
-    v_rev = np.where(up,
-                     ehp_down / np.maximum(grade - roll, 1e-9),
-                     ehp_up / np.maximum(grade + roll, 1e-9))
-    v_curve = np.full(len(seg_len), np.inf)
-    if len(coords) >= 3:
-        r = radius_of_curvature(coords)
-        vc = np.sqrt(rollover * r * _G)
-        v_curve[:-1] = np.minimum(v_curve[:-1], vc)
-        v_curve[1:] = np.minimum(v_curve[1:], vc)
-    v_fwd = np.minimum(np.minimum(v_fwd, v_curve), max_speed)
-    v_rev = np.minimum(np.minimum(v_rev, v_curve), max_speed)
-    return np.maximum(v_fwd, 0.1), np.maximum(v_rev, 0.1)
-
-
-def vehicle_kinematics(lines: DataFrame, *, gross_hp: float,
-                       vehicle_weight: float,
-                       wkb_col: str = "geometry_wkb",
-                       speed_col: str = "max_speed",
-                       rolling_col: str | None = None,
-                       rollover_col: str | None = None,
-                       v_in: float = 0.0, v_out: float = 0.0,
-                       acceleration_rate: float = 1.5 * 0.3048,
-                       deceleration_rate: float = -9.5 * 0.3048,
-                       uphill_hp: float = 0.8, downhill_hp: float = 0.6,
-                       vehicle_frontal_area: float = 7.92,
-                       engine_efficiency: float = 0.4,
-                       fuel_energy_density: float = 35.0,
-                       drag_resistance: float = 0.35,
-                       mass_correction_factor: float = 1.05,
-                       rho_air: float = 1.225,
-                       default_rolling: float = 0.01,
-                       default_rollover: float = 3.0) -> DataFrame:
-    """Per-edge travel time, mean velocity and fuel demand for BOTH
-    directions (reference travel_time/velocity/fuel_consumption,
-    network.py:846-1047). Speeds in m/s, lengths in the geometry's
-    units, fuel in liters (energy density MJ/L). Adds columns
-    travel_time_{fwd,rev} [s], v_mean_{fwd,rev}, fuel_{fwd,rev}."""
-    fields = T.StructType(list(lines.schema.fields) + [
-        T.StructField(c, T.DoubleType())
-        for c in ("travel_time_fwd", "travel_time_rev",
-                  "v_mean_fwd", "v_mean_rev", "fuel_fwd", "fuel_rev")])
-
-    a1, a2 = acceleration_rate, deceleration_rate
-
-    def _fuel(seg_len, slope_deg, v_mean_seg, d_a, rolling):
-        rad = np.radians(slope_deg)
-        u_r = rolling * vehicle_weight * _G * np.cos(rad) * seg_len
-        u_a = (0.5 * rho_air * vehicle_frontal_area * drag_resistance
-               * v_mean_seg ** 2 * seg_len)
-        u_i = mass_correction_factor * vehicle_weight * a1 * d_a
-        u_g = vehicle_weight * _G * np.sin(rad) * seg_len
-        e = np.maximum(0.0, (u_r + u_a + u_i + u_g) * 1e-6
-                       / (fuel_energy_density * engine_efficiency))
-        return float(e.sum())
-
-    def _run(it):
-        for pdf in it:
-            cols = {c: [] for c in ("travel_time_fwd", "travel_time_rev",
-                                    "v_mean_fwd", "v_mean_rev",
-                                    "fuel_fwd", "fuel_rev")}
-            for i in range(len(pdf)):
-                g = wkb.decode(pdf[wkb_col].iloc[i])
-                coords, seg_len, slope_deg = _edge_segments(g)
-                vmax = float(pdf[speed_col].iloc[i])
-                rolling = (float(pdf[rolling_col].iloc[i]) if rolling_col
-                           else default_rolling)
-                rollover = (float(pdf[rollover_col].iloc[i]) if rollover_col
-                            else default_rollover)
-                v_fwd, v_rev = _v_limits(coords, seg_len, slope_deg,
-                                         max_speed=vmax, rolling_coeff=rolling,
-                                         rollover=rollover, weight=vehicle_weight,
-                                         gross_hp=gross_hp, uphill_hp=uphill_hp,
-                                         downhill_hp=downhill_hp)
-                tf, daf, _ = _accel_profile(v_fwd, seg_len, v_in, v_out, a1, a2)
-                tr, dar, _ = _accel_profile(v_rev[::-1], seg_len[::-1],
-                                            v_out, v_in, a1, a2)
-                total = float(seg_len.sum())
-                ttf, ttr = float(tf.sum()), float(tr.sum())
-                vs_f = seg_len / np.maximum(tf, 1e-12)
-                vs_r = seg_len[::-1] / np.maximum(tr, 1e-12)
-                cols["travel_time_fwd"].append(ttf)
-                cols["travel_time_rev"].append(ttr)
-                cols["v_mean_fwd"].append(total / ttf if ttf > 0 else 0.0)
-                cols["v_mean_rev"].append(total / ttr if ttr > 0 else 0.0)
-                cols["fuel_fwd"].append(_fuel(seg_len, slope_deg, vs_f, daf, rolling))
-                cols["fuel_rev"].append(_fuel(seg_len[::-1], -slope_deg[::-1],
-                                              vs_r, dar, rolling))
-            out = pdf.copy()
-            for c, vals in cols.items():
-                out[c] = vals
-            yield out
-
-    return lines.mapInPandas(_run, schema=fields)
-
-
-def remote_edges(edges: DataFrame) -> DataFrame:
-    """Edges disconnected from everything else: both endpoints have a
-    single distinct neighbor — i.e. each other (reference remote_edges
-    network.py:55-66, neighbor-count == 1 at both ends)."""
-    und = (edges.select(F.col("src_key").alias("a"), F.col("dst_key").alias("b"))
-           .unionAll(edges.select(F.col("dst_key").alias("a"), F.col("src_key").alias("b")))
-           .where(F.col("a") != F.col("b"))
-           .distinct())
-    nbrs = und.groupBy("a").agg(F.count("*").alias("n_nbrs"))
-    one = nbrs.where("n_nbrs = 1").select(F.col("a").alias("node"))
-    return (edges
-            .join(one.withColumnRenamed("node", "src_key"), on="src_key", how="left_semi")
-            .join(one.withColumnRenamed("node", "dst_key"), on="dst_key", how="left_semi")
-            .where(F.col("src_key") != F.col("dst_key")))
-
-
-def remote_nodes(nodes: DataFrame, edges: DataFrame, *,
-                 node_key: str = "node") -> DataFrame:
-    """Isolated nodes not touched by any edge (reference remote_nodes
-    network.py:69-76): anti-join of a node table against edge endpoints."""
-    endpoints = (edges.select(F.col("src_key").alias(node_key))
-                 .unionAll(edges.select(F.col("dst_key").alias(node_key)))
-                 .distinct())
-    return nodes.join(endpoints, on=node_key, how="left_anti")
-
-
-def split_at_ending_edges(lines: DataFrame, *, wkb_col: str = "geometry_wkb",
-                          line_id: str = "lid", tol: float = 1e-9) -> DataFrame:
-    """Split lines where ANOTHER line's endpoint lands on them
-    (reference split_at_ending_edges network.py:340-349: end nodes that
-    intersect more than one geometry become split points)."""
-    from .split import split_lines_at_points
-
-    e = edges_from_lines(lines, wkb_col=wkb_col, id_col=line_id)
-    deg = node_degrees(e)
-    ends = deg.where("degree = 1").select("node")
-    pts = ends.select(
-        F.split(F.col("node"), ",")[0].cast("double").alias("lon"),
-        F.split(F.col("node"), ",")[1].cast("double").alias("lat"))
-    return split_lines_at_points(lines, pts, line_wkb=wkb_col,
-                                 line_id=line_id, tol=tol)
-
-
-def merge_degree2(lines: DataFrame, *, wkb_col: str = "geometry_wkb",
-                  line_id: str = "lid") -> DataFrame:
-    """Contract degree-2 chains network-wide (reference merge2 /
-    get_single_edges network.py:251-298): label connected components,
-    then chain-merge per component (split.linemerge already contracts
-    degree-2 nodes within each group)."""
-    from .split import linemerge
-
-    e = edges_from_lines(lines, wkb_col=wkb_col, id_col=line_id)
-    comp = connected_components(e)
-    grouped = e.join(comp.withColumnRenamed("node", "src_key"), on="src_key")
-    return linemerge(grouped, "component", wkb_col=wkb_col)
 
 
 def pagerank(edges: DataFrame, *, src_col: str = "src",

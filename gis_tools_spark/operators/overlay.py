@@ -1,7 +1,6 @@
-"""Overlay operators: intersection join, shared/attr area, dissolve,
-dedup (SURVEY.md §2.5/§2.6; reference layer.py:965-1005 `overlay`,
-geometry.py:925-961 `shared_area`, layer.py:1555-1582 `attr_area`,
-layer.py:501-516 `dissolve`, layer.py:584-620 dedup).
+"""Overlay operators: intersection join, shared area, dissolve
+(SURVEY.md §2.5/§2.6; reference layer.py:965-1005 `overlay`,
+geometry.py:925-961 `shared_area`, layer.py:501-516 `dissolve`).
 
 Round-1 scope note: geometric intersection is exact when the *clipping*
 side is convex (rect tiles, convex zones — Sutherland–Hodgman). The
@@ -15,7 +14,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import cells as C
 from ..geom import boolean, kernels as K, wkb
@@ -187,15 +186,6 @@ def shared_area(left: DataFrame, right: DataFrame, *, normalized: bool = False,
     return out.withColumnRenamed("inter_area", "shared_area")
 
 
-def attr_area(left: DataFrame, right: DataFrame, *, pivot_attr: str,
-              left_id: str = "lid", **kw) -> DataFrame:
-    """Per-left-row intersection-area sums pivoted by a right attribute
-    (reference attr_area layer.py:1555-1582)."""
-    inter = intersection_join(left, right, left_id=left_id,
-                              keep_geometry=False, **kw)
-    return (inter.groupBy(left_id).pivot(pivot_attr).sum("inter_area"))
-
-
 def areal_interpolate(src: DataFrame, dst: DataFrame,
                       value_cols: list[str], *,
                       extensive: bool = True,
@@ -307,16 +297,6 @@ def dissolve(df: DataFrame, by: str, *, wkb_col: str = "geometry_wkb",
     return df.groupBy(by).applyInPandas(_union, schema=T.StructType(fields))
 
 
-def drop_duplicate_geometries(df: DataFrame, *, wkb_col: str = "geometry_wkb",
-                              id_col: str = "gid") -> DataFrame:
-    """Keep first (min id) row per exactly-equal geometry — WKB is the
-    canonical hashable form (reference layer.py:584-620 keeps the first
-    occurrence in index order)."""
-    w = Window.partitionBy(F.sha2(F.col(wkb_col), 256)).orderBy(F.col(id_col))
-    return (df.withColumn("__rn", F.row_number().over(w))
-            .where("__rn = 1").drop("__rn"))
-
-
 def overlay(left: DataFrame, right: DataFrame, *, how: str = "union",
             left_wkb: str = "geometry_wkb", right_wkb: str = "geometry_wkb",
             left_id: str = "lid", right_id: str = "gid",
@@ -393,11 +373,6 @@ def overlay(left: DataFrame, right: DataFrame, *, how: str = "union",
     for leg in legs[1:]:
         out = out.unionByName(leg)
     return out
-
-
-def union_join(left: DataFrame, right: DataFrame, **kw) -> DataFrame:
-    """overlay(how='union') — see overlay()."""
-    return overlay(left, right, how="union", **kw)
 
 
 def line_zone_length(segments: DataFrame, zones: DataFrame, *,

@@ -1,8 +1,6 @@
 """Proximity operators (SURVEY.md §2.5): distance-range joins
 (reference nearest_neighbors layer.py:896-929 = features intersecting
-buffer(d) ≡ ST_DWithin), pairwise distance matrices (layer.py:1007-1028),
-element-wise Hausdorff (layer.py:676-689), snap/project
-(layer.py:1030-1057).
+buffer(d) ≡ ST_DWithin) and centroid-to-boundary distances.
 """
 
 from __future__ import annotations
@@ -77,87 +75,6 @@ def _padded_cover_udf(wkb_col: str, pad: float, res: int):
         return pd.Series(out)
 
     return _cover
-
-
-def pairwise_distance(left: DataFrame, right: DataFrame, *,
-                      left_wkb: str = "geometry_wkb", right_wkb: str = "geometry_wkb",
-                      left_id: str = "lid", right_id: str = "gid") -> DataFrame:
-    """Full M×N distance matrix as long-form rows (reference
-    layer.py:1007-1028). Quadratic by definition — for small layers."""
-    right = _dedupe_names(left, right)
-    if right_wkb not in right.columns:
-        right_wkb = f"{right_wkb}_right"
-    if right_id not in right.columns:
-        right_id = f"{right_id}_right"
-    cand = left.select(left_id, left_wkb).crossJoin(right.select(right_id, right_wkb))
-
-    @F.pandas_udf(T.DoubleType())
-    def _dist(la: pd.Series, rb: pd.Series) -> pd.Series:
-        cache: dict[bytes, dict] = {}
-
-        def _dec(b):
-            g = cache.get(b)
-            if g is None:
-                g = cache[b] = wkb.decode(b)
-            return g
-
-        return pd.Series([K.geom_distance(_dec(a), _dec(b))
-                          for a, b in zip(la, rb)])
-
-    return (cand.withColumn("dist", _dist(F.col(left_wkb), F.col(right_wkb)))
-            .drop(left_wkb, right_wkb))
-
-
-def hausdorff_pairs(left: DataFrame, right: DataFrame, *,
-                    on: str, left_wkb: str = "geometry_wkb",
-                    right_wkb: str = "geometry_wkb") -> DataFrame:
-    """Element-wise (zip-by-key) Hausdorff distance (reference
-    layer.py:676-689 zips rows by position; we zip by an explicit key)."""
-    r = right.select(F.col(on), F.col(right_wkb).alias("__rwkb"))
-    j = left.select(F.col(on), F.col(left_wkb).alias("__lwkb")).join(r, on=on)
-
-    @F.pandas_udf(T.DoubleType())
-    def _hd(la: pd.Series, rb: pd.Series) -> pd.Series:
-        return pd.Series([K.hausdorff_distance(wkb.decode(a), wkb.decode(b))
-                          for a, b in zip(la, rb)])
-
-    return (j.withColumn("hausdorff", _hd(F.col("__lwkb"), F.col("__rwkb")))
-            .drop("__lwkb", "__rwkb"))
-
-
-def snap_to_lines(points: DataFrame, lines: DataFrame, *,
-                  lon: str = "lon", lat: str = "lat", point_id: str = "pid",
-                  line_wkb: str = "geometry_wkb", line_id: str = "lid") -> DataFrame:
-    """Project each point onto its nearest line (reference `project`,
-    layer.py:1030-1057: nearest feature → line.project/interpolate).
-    Returns point cols + (line_id, snap_x, snap_y, line_pos, dist)."""
-    from .knn import nearest_feature
-
-    nearest = nearest_feature(points, lines, lon=lon, lat=lat,
-                              point_id=point_id, feat_wkb=line_wkb,
-                              feat_id=line_id, strategy="broadcast")
-    j = nearest.join(lines.select(F.col(line_id).alias("nearest_" + line_id),
-                                  F.col(line_wkb).alias("__lwkb")),
-                     on="nearest_" + line_id)
-    snap_t = T.StructType([T.StructField("snap_x", T.DoubleType()),
-                           T.StructField("snap_y", T.DoubleType()),
-                           T.StructField("line_pos", T.DoubleType())])
-
-    @F.pandas_udf(snap_t)
-    def _snap(bs: pd.Series, xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
-        sx, sy, pos = [], [], []
-        for b, x, y in zip(bs, xs, ys):
-            g = wkb.decode(b)
-            coords = g["coords"] if g["type"] == "LineString" else g["lines"][0]
-            t = K.project_on_line(coords, x, y)
-            p = K.interpolate_line(coords, t)
-            sx.append(float(p[0])); sy.append(float(p[1])); pos.append(t)
-        return pd.DataFrame({"snap_x": sx, "snap_y": sy, "line_pos": pos})
-
-    return (j.withColumn("__s", _snap(F.col("__lwkb"), F.col(lon), F.col(lat)))
-            .drop("__lwkb")
-            .select("*", "__s.snap_x", "__s.snap_y", "__s.line_pos")
-            .drop("__s"))
 
 
 def centroid_boundary_distance(df, *, wkb_col: str = "geometry_wkb"):

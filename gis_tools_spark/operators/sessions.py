@@ -7,9 +7,8 @@ exceeds ``gap_s``; the session index is the running count of session
 starts. Scale: one shuffle on the key columns; everything else is
 partition-local window math — the same plan at 10^12 events.
 
-The streaming analog is ``streaming.windowed.sessionized_zone_counts``
-(``F.session_window`` + watermark); this batch form is deterministic
-and SQL-mirrorable (lag + cumulative sum), so it can be value-gated.
+The form is deterministic and SQL-mirrorable (lag + cumulative sum),
+so it can be value-gated.
 """
 
 from __future__ import annotations

@@ -23,6 +23,7 @@ Two physical strategies, chosen by the caller (or `auto`):
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator
 
 import numpy as np
@@ -42,6 +43,8 @@ from .core import (
     salt_fact_side,
     small_side,
 )
+
+_log = logging.getLogger("gis_tools_spark")
 
 # The broadcast gate's default limits (pip_join, candidate_pairs, sjoin,
 # trajectory.od_flows): the small side is collected to the driver.
@@ -89,10 +92,13 @@ def pip_join(points: DataFrame, polygons: DataFrame, *,
         # nulls (null != null) and cross-multiplies duplicate rows
         points = points.withColumn("__rid", F.monotonically_increasing_id())
 
+    reason = "requested"
     if strategy == "auto":
-        strategy = ("broadcast" if small_side(
-            polygons, max_rows=broadcast_max_rows,
-            max_bytes=broadcast_max_bytes, bytes_col=poly_wkb) else "cell")
+        small = small_side(polygons, max_rows=broadcast_max_rows,
+                           max_bytes=broadcast_max_bytes, bytes_col=poly_wkb)
+        strategy = "broadcast" if small else "cell"
+        reason = f"polygons {'within' if small else 'over'} broadcast limits"
+    _log.debug("pip_join strategy=%s reason=%s", strategy, reason)
 
     if strategy == "broadcast":
         matched = _pip_broadcast(points, polygons, lon=lon, lat=lat,
@@ -424,19 +430,31 @@ def candidate_pairs(left: DataFrame, right: DataFrame, *,
     cells coarsened to each observed left res; join2 the strict
     converse), and both pair joins accept explicit hot-cell salting.
 
-    When ``broadcast_gate`` is on and the right side passes the same
+    When ``broadcast_gate`` is on and BOTH sides pass the same
     bytes/rows gate as the sjoin broadcast strategy, candidates come
     from a broadcast bbox join instead (round-6, guide §3.1): one
     bounds pass per side, zero shuffles, no cover UDFs — a strict
     bbox-overlap superset of interacting pairs, which is exactly the
-    contract the exact refine downstream assumes. Callers that already
-    made their own strategy decision (generic sjoin's auto) pass
-    broadcast_gate=False to skip the extra dim-side scan."""
+    contract the exact refine downstream assumes. That join is a
+    nested loop over |left| x |right|, so a large left side takes the
+    output-sensitive cell join even under a small right side; the left
+    side is measured only once the right side has passed. Callers that
+    already made their own strategy decision (generic sjoin's auto)
+    pass broadcast_gate=False to skip the extra scans."""
     from pyspark.storagelevel import StorageLevel
 
-    if broadcast_gate and small_side(right, max_rows=broadcast_max_rows,
-                                     max_bytes=broadcast_max_bytes,
-                                     bytes_col=right_wkb):
+    if not broadcast_gate:
+        path, reason = "cell", "gate off"
+    elif not small_side(right, max_rows=broadcast_max_rows,
+                        max_bytes=broadcast_max_bytes, bytes_col=right_wkb):
+        path, reason = "cell", "right over broadcast limits"
+    elif not small_side(left, max_rows=broadcast_max_rows,
+                        max_bytes=broadcast_max_bytes, bytes_col=left_wkb):
+        path, reason = "cell", "left over broadcast limits"
+    else:
+        path, reason = "bbox", "both sides within broadcast limits"
+    _log.debug("candidate_pairs path=%s reason=%s", path, reason)
+    if path == "bbox":
         from ..functions.geom_funcs import geom_bounds_struct
         bs = geom_bounds_struct()
         lb = left.select(left_id, bs(F.col(left_wkb)).alias("__lb"))
@@ -660,10 +678,13 @@ def sjoin(left: DataFrame, right: DataFrame, *,
     if how == "left":
         left = left.withColumn("__rid", F.monotonically_increasing_id())
 
+    reason = "requested"
     if strategy == "auto":
-        strategy = ("broadcast" if small_side(
-            right, max_rows=broadcast_max_rows,
-            max_bytes=broadcast_max_bytes, bytes_col=right_wkb) else "cell")
+        small = small_side(right, max_rows=broadcast_max_rows,
+                           max_bytes=broadcast_max_bytes, bytes_col=right_wkb)
+        strategy = "broadcast" if small else "cell"
+        reason = f"right {'within' if small else 'over'} broadcast limits"
+    _log.debug("sjoin strategy=%s reason=%s", strategy, reason)
     if strategy == "broadcast":
         return _join_back(left, _sjoin_broadcast(
             left, right, left_wkb=left_wkb, right_wkb=right_wkb,

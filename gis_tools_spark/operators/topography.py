@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import cells as C
 from ..raster import codec
-from ..raster.zonal import pixel_centers
+from ..raster.zonal import pixel_centers, tile_cover
+from .core import CELL_COL
 
 EARTH_R = 6_371_000.0
 
@@ -54,30 +55,9 @@ def get_horizon(observers: DataFrame, dem_tiles: DataFrame, *,
                      .drop("value", "image_id"))
         elev_col = "__own"
     # observers ⋈ tiles whose bbox (padded by radius) covers the observer cell
-    t = (dem_tiles
-         .withColumn("__maxx", F.col("gt_x0") + F.col("gt_rx") * F.col("w"))
-         .withColumn("__miny", F.col("gt_y0") - F.col("gt_ry") * F.col("h")))
-    n = 1 << res
-    # lon pad must grow by 1/cos(lat): `radius_deg` of ground distance
-    # spans radius_deg/cos(lat) degrees of longitude, so a flat pad
-    # misses in-radius pixels at high latitude
-    lat_abs = (F.greatest(F.abs(F.col("__miny")), F.abs(F.col("gt_y0")))
-               + F.lit(radius_deg))
-    pad_x = (F.lit(radius_deg)
-             / F.greatest(F.cos(F.radians(F.least(lat_abs, F.lit(89.0)))),
-                          F.lit(1e-6)))
-    ix0 = F.floor((F.col("gt_x0") - pad_x + 180.0) / 360.0 * n).cast("long")
-    ix1 = F.floor((F.col("__maxx") + pad_x + 180.0) / 360.0 * n).cast("long")
-    iy0 = F.floor((F.col("__miny") - radius_deg + 90.0) / 180.0 * n).cast("long")
-    iy1 = F.floor((F.col("gt_y0") + radius_deg + 90.0) / 180.0 * n).cast("long")
-    tc = (t.withColumn("__ix", F.explode(F.sequence(ix0, ix1)))
-          .withColumn("__iy", F.explode(F.sequence(iy0, iy1)))
-          .withColumn("__cell",
-                      F.lit(res).cast("long") * F.lit(1 << C.RES_SHIFT)
-                      + F.col("__ix") * F.lit(1 << C.IX_SHIFT) + F.col("__iy"))
-          .drop("__ix", "__iy", "__maxx", "__miny"))
-    oc = observers.withColumn("__cell", C.cell_column(F.col(lon), F.col(lat), res))
-    pairs = oc.join(tc, on="__cell").drop("__cell") \
+    tc = tile_cover(dem_tiles, res, pad_deg=radius_deg)
+    oc = observers.withColumn(CELL_COL, C.cell_column(F.col(lon), F.col(lat), res))
+    pairs = oc.join(tc, on=CELL_COL).drop(CELL_COL) \
               .dropDuplicates([obs_id, "image_id"])
 
     part_fields = T.StructType([
@@ -205,28 +185,3 @@ def decode_pixels(dem_tiles: DataFrame, *,
                 yield pd.concat(recs, ignore_index=True)
 
     return t.mapInPandas(_px, schema="gix long, giy long, z double")
-
-
-def dozier_horizon_1d(elev: np.ndarray, spacing: float) -> np.ndarray:
-    """Dozier & Frew 1-D forward-horizon stack algorithm (reference
-    topography.py:74-108, numba kernel): for each point, the max
-    elevation angle looking forward along the profile."""
-    n = len(elev)
-    out = np.zeros(n)
-    stack = [n - 1]
-    for i in range(n - 2, -1, -1):
-        while stack:
-            j = stack[-1]
-            ang_j = (elev[j] - elev[i]) / ((j - i) * spacing)
-            if len(stack) >= 2:
-                k = stack[-2]
-                ang_k = (elev[k] - elev[i]) / ((k - i) * spacing)
-                if ang_k >= ang_j:
-                    stack.pop()
-                    continue
-            break
-        j = stack[-1]
-        ang = (elev[j] - elev[i]) / ((j - i) * spacing)
-        out[i] = max(0.0, np.degrees(np.arctan(ang)))
-        stack.append(i)
-    return out

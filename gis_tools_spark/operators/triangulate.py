@@ -209,31 +209,6 @@ def delaunay_edges(points: DataFrame, *, by: str, id_col: str = "id",
     return _cpu_grouped(points, by).applyInPandas(_fn, schema=schema)
 
 
-def delaunay_triangles(points: DataFrame, *, by: str, id_col: str = "id",
-                       x_col: str = "x", y_col: str = "y") -> DataFrame:
-    """Distributed per-group Delaunay triangles: (by, i, j, k) with
-    i < j < k (original ids)."""
-    schema = T.StructType([
-        points.schema[by],
-        T.StructField("i", T.LongType()),
-        T.StructField("j", T.LongType()),
-        T.StructField("k", T.LongType()),
-    ])
-
-    def _fn(key, pdf):
-        ids, xs, ys = _dedupe(pdf[id_col].to_numpy(),
-                              pdf[x_col].to_numpy(), pdf[y_col].to_numpy())
-        tris = triangulate_points(xs, ys)
-        trip = sorted(tuple(sorted((int(ids[a]), int(ids[b]), int(ids[c]))))
-                      for a, b, c in tris)
-        return pd.DataFrame({by: [key[0]] * len(trip),
-                             "i": [t[0] for t in trip],
-                             "j": [t[1] for t in trip],
-                             "k": [t[2] for t in trip]})
-
-    return _cpu_grouped(points, by).applyInPandas(_fn, schema=schema)
-
-
 def _clip_halfplane(poly: np.ndarray, nx: float, ny: float, d: float) -> np.ndarray:
     """Sutherland-Hodgman clip of polygon rows (x, y) by
     nx*x + ny*y <= d."""

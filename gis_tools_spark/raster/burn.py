@@ -13,16 +13,13 @@ Output: one row per tile with the burned array as raw_f32 bytes.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
-from .. import cells as C
 from ..geom import kernels as K, wkb
 from . import codec
-from .zonal import pixel_centers
+from .zonal import auto_res, pixel_centers, tile_cover
 
 
 def burn_zones_to_tiles(tiles: DataFrame, zones: DataFrame, *,
@@ -43,23 +40,8 @@ def burn_zones_to_tiles(tiles: DataFrame, zones: DataFrame, *,
     from ..operators.core import CELL_COL, explode_cover  # deferred: circular
 
     if res is None:
-        from .zonal import auto_res
-
         res = auto_res(tiles)
-    n = 1 << res
-    t = (tiles
-         .withColumn("__maxx", F.col("gt_x0") + F.col("gt_rx") * F.col("w"))
-         .withColumn("__miny", F.col("gt_y0") - F.col("gt_ry") * F.col("h")))
-    ix0 = F.floor((F.col("gt_x0") + 180.0) / 360.0 * n).cast("long")
-    ix1 = F.floor((F.col("__maxx") + 180.0) / 360.0 * n).cast("long")
-    iy0 = F.floor((F.col("__miny") + 90.0) / 180.0 * n).cast("long")
-    iy1 = F.floor((F.col("gt_y0") + 90.0) / 180.0 * n).cast("long")
-    t = (t.withColumn("__ix", F.explode(F.sequence(ix0, ix1)))
-         .withColumn("__iy", F.explode(F.sequence(iy0, iy1)))
-         .withColumn(CELL_COL,
-                     F.lit(res).cast("long") * F.lit(1 << C.RES_SHIFT)
-                     + F.col("__ix") * F.lit(1 << C.IX_SHIFT) + F.col("__iy"))
-         .drop("__ix", "__iy", "__maxx", "__miny"))
+    t = tile_cover(tiles, res)
 
     burn_cols = [zone_id, zone_wkb]
     if burn_attr and burn_attr not in burn_cols:

@@ -64,7 +64,7 @@ _T_STRIP_OFF, _T_SPP, _T_RPS, _T_STRIP_CNT = 273, 277, 278, 279
 _T_PLANAR, _T_PREDICTOR, _T_SFMT = 284, 317, 339
 _T_TILE_W, _T_TILE_L, _T_TILE_OFF, _T_TILE_CNT = 322, 323, 324, 325
 _T_PIXSCALE, _T_TIEPOINT, _T_TRANSFORM = 33550, 33922, 34264
-_T_GEOKEYS, _T_GEODOUBLES, _T_GEOASCII = 34735, 34736, 34737
+_T_GEOKEYS = 34735
 _T_GDAL_NODATA = 42113
 
 _TYPE_FMT = {1: "B", 2: "s", 3: "H", 4: "I", 5: "II", 6: "b", 7: "B",

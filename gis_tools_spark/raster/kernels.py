@@ -274,38 +274,6 @@ def map_pixels(df: DataFrame, fn: Callable[[np.ndarray], np.ndarray], *,
     return df.mapInPandas(_run, schema=schema)
 
 
-def raster_global_stats(df: DataFrame, *, no_data: float = codec.NO_DATA_F32) -> DataFrame:
-    """NaN-aware global min/max/mean/sum across all tiles (reference
-    raster.py:356-376): per-tile partials + final combine."""
-    fields = T.StructType([
-        T.StructField("n", T.LongType()),
-        T.StructField("s", T.DoubleType()),
-        T.StructField("mn", T.DoubleType()),
-        T.StructField("mx", T.DoubleType()),
-    ])
-
-    def _partial(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i in range(len(pdf)):
-                r = pdf.iloc[i]
-                arr = codec.decode(r["bytes"], int(r["w"]), int(r["h"]), r["fmt"]).astype(np.float64)
-                good = arr[arr != no_data]
-                rows.append((int(good.size), float(good.sum()) if good.size else 0.0,
-                             float(good.min()) if good.size else np.inf,
-                             float(good.max()) if good.size else -np.inf))
-            yield pd.DataFrame(rows, columns=["n", "s", "mn", "mx"])
-
-    p = df.mapInPandas(_partial, schema=fields)
-    return p.agg(
-        F.sum("n").alias("count"),
-        (F.sum("s") / F.sum("n")).alias("mean"),
-        F.sum("s").alias("sum"),
-        F.min("mn").alias("min"),
-        F.max("mx").alias("max"),
-    )
-
-
 def contour_bins(df: DataFrame, interval: float, *, pmin: float = 2.0,
                  pmax: float = 98.0, no_data: float = codec.NO_DATA_F32) -> DataFrame:
     """Percentile-clamped binning → per-bin mean fill (reference contour,
@@ -411,57 +379,6 @@ def horn_output(dzdx: np.ndarray, dzdy: np.ndarray, mode: str,
               + np.cos(alt) * np.sin(s) * np.cos(az - asp))
         return 255.0 * np.maximum(hs, 0.0)
     raise ValueError(f"unknown mode {mode!r}")
-
-
-def slope_aspect(df: DataFrame, *, mode: str = "slope",
-                 no_data: float = codec.NO_DATA_F32,
-                 azimuth: float = 315.0,
-                 altitude: float = 45.0) -> DataFrame:
-    """Horn 3×3 slope/aspect/hillshade per tile (reference
-    raster.py:794-824 via gdal.DEMProcessing). Interior-exact; tile
-    borders use edge-replicate (cross-tile halo exchange is the
-    stitching pass, SURVEY §7.3)."""
-    def _kernel(arr: np.ndarray) -> np.ndarray:
-        a = arr.astype(np.float64)
-        a = np.where(a == no_data, np.nan, a)
-        p = np.pad(a, 1, mode="edge")
-        dzdx = ((p[:-2, 2:] + 2 * p[1:-1, 2:] + p[2:, 2:])
-                - (p[:-2, :-2] + 2 * p[1:-1, :-2] + p[2:, :-2])) / 8.0
-        dzdy = ((p[2:, :-2] + 2 * p[2:, 1:-1] + p[2:, 2:])
-                - (p[:-2, :-2] + 2 * p[:-2, 1:-1] + p[:-2, 2:])) / 8.0
-        out = horn_output(dzdx, dzdy, mode, azimuth, altitude)
-        out = np.where(np.isnan(out), no_data, out)
-        return out.astype(np.float32)
-
-    return map_pixels(df, _kernel, out_fmt="raw_f32")
-
-
-def sieve(df: DataFrame, min_size: int, *, no_data: float = codec.NO_DATA_F32) -> DataFrame:
-    """GDAL-sieve analog: absorb 4-connected same-value regions smaller
-    than min_size into their largest neighbor (reference raster.py:193-202,
-    724-738)."""
-    def _kernel(arr: np.ndarray) -> np.ndarray:
-        a = arr.copy()
-        labels, sizes, vals = _label_regions(a)
-        h, w = a.shape
-        for lbl in np.nonzero(sizes < min_size)[0]:
-            if sizes[lbl] == 0:
-                continue
-            mask = labels == lbl
-            # neighbor values along the region border
-            border_vals = {}
-            ys, xs = np.nonzero(mask)
-            for y, x in zip(ys, xs):
-                for dy, dx in ((1, 0), (-1, 0), (0, 1), (0, -1)):
-                    ny, nx = y + dy, x + dx
-                    if 0 <= ny < h and 0 <= nx < w and not mask[ny, nx]:
-                        v = a[ny, nx]
-                        border_vals[v] = border_vals.get(v, 0) + 1
-            if border_vals:
-                a[mask] = max(border_vals, key=border_vals.get)
-        return a
-
-    return map_pixels(df, _kernel)
 
 
 def _label_regions(a: np.ndarray):

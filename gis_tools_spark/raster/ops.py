@@ -1,7 +1,6 @@
-"""Raster ↔ vector composite ops (SURVEY.md §2.10): clip/exclude to a
-polygon layer (reference raster.py:204-221, 280-291), mosaic merge
-(raster.py:517-536 first-wins), point sampling (get_value_at,
-raster.py:312-348), and add_z for lines (layer.py:405-434).
+"""Raster ↔ vector composite ops (SURVEY.md §2.10): point sampling
+(get_value_at, raster.py:312-348), the tile pyramid and the two-raster
+crosstab.
 """
 
 from __future__ import annotations
@@ -12,110 +11,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from ..geom import kernels as K, wkb
 from . import codec
-from .zonal import pixel_centers, rasterize_mask
-
-
-def clip_to_zones(rasters: DataFrame, zones: DataFrame, *,
-                  zone_wkb: str = "geometry_wkb", zone_id: str = "gid",
-                  exclude: bool = False,
-                  no_data: float = codec.NO_DATA_F32) -> DataFrame:
-    """Keep (or drop, exclude=True) cells inside the zone polygons: the
-    reference rasterizes the layer as a mask and blanks the rest. Tiles
-    that intersect no zone become all-no_data (clip) / unchanged
-    (exclude)."""
-    from .burn import burn_zones_to_tiles
-
-    burned = burn_zones_to_tiles(
-        rasters.select("image_id", "w", "h", "gt_x0", "gt_rx", "gt_y0", "gt_ry"),
-        zones, zone_wkb=zone_wkb, zone_id=zone_id, burn_value=1.0, background=0.0)
-    mask_df = burned.select("image_id", F.col("bytes").alias("__mask"))
-    j = rasters.join(mask_df, on="image_id")
-    schema = rasters.schema
-
-    def _apply(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            bufs = []
-            for i in range(len(pdf)):
-                r = pdf.iloc[i]
-                arr = codec.decode(r["bytes"], int(r["w"]), int(r["h"]), r["fmt"]).copy()
-                m = codec.decode_raw_f32(r["__mask"], int(r["w"]), int(r["h"])) > 0.5
-                if exclude:
-                    arr[m] = no_data
-                else:
-                    arr[~m] = no_data
-                bufs.append(codec.encode(arr, r["fmt"]))
-            out = pdf.drop(columns=["__mask"])
-            out["bytes"] = pd.Series(bufs, index=pdf.index, dtype=object)
-            yield out
-
-    return j.mapInPandas(_apply, schema=schema)
-
-
-def merge_mosaic(rasters: DataFrame, *, res_x: float, res_y: float,
-                 tile_px: int = 256,
-                 no_data: float = codec.NO_DATA_F32) -> DataFrame:
-    """Mosaic overlapping tiles onto a regular target grid (reference
-    rasterio.merge semantics: first tile wins per pixel, 'first' =
-    lowest image_id for determinism).
-
-    groupBy target tile key → per-tile resample-overlay UDF. Output rows
-    are target tiles (image_id = tile key) on the aligned grid."""
-    span_x = res_x * tile_px
-    span_y = res_y * tile_px
-    t = (rasters
-         .withColumn("__maxx", F.col("gt_x0") + F.col("gt_rx") * F.col("w"))
-         .withColumn("__miny", F.col("gt_y0") - F.col("gt_ry") * F.col("h")))
-    tx0 = F.floor((F.col("gt_x0") + 180.0) / span_x).cast("long")
-    tx1 = F.floor((F.col("__maxx") + 180.0) / span_x).cast("long")
-    ty0 = F.floor((F.col("__miny") + 90.0) / span_y).cast("long")
-    ty1 = F.floor((F.col("gt_y0") + 90.0) / span_y).cast("long")
-    t = (t.withColumn("__tx", F.explode(F.sequence(tx0, tx1)))
-         .withColumn("__ty", F.explode(F.sequence(ty0, ty1))))
-
-    out_schema = T.StructType([
-        T.StructField("tile_x", T.LongType()),
-        T.StructField("tile_y", T.LongType()),
-        T.StructField("bytes", T.BinaryType()),
-        T.StructField("w", T.IntegerType()),
-        T.StructField("h", T.IntegerType()),
-        T.StructField("gt_x0", T.DoubleType()),
-        T.StructField("gt_rx", T.DoubleType()),
-        T.StructField("gt_y0", T.DoubleType()),
-        T.StructField("gt_ry", T.DoubleType()),
-        T.StructField("n_sources", T.IntegerType()),
-    ])
-
-    def _mosaic(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        x0 = -180.0 + tx * span_x
-        y1 = -90.0 + (ty + 1) * span_y  # top
-        out = np.full((tile_px, tile_px), no_data, dtype=np.float32)
-        # first-wins by image_id order
-        for _, r in pdf.sort_values("image_id").iterrows():
-            arr = codec.decode(r["bytes"], int(r["w"]), int(r["h"]), r["fmt"])
-            # source pixel centers → target indices (nearest)
-            xs, ys = pixel_centers(r["gt_x0"], r["gt_rx"], r["gt_y0"], r["gt_ry"],
-                                   int(r["w"]), int(r["h"]))
-            ci = np.floor((xs - x0) / res_x).astype(int)
-            ri = np.floor((y1 - ys) / res_y).astype(int)
-            okc = (ci >= 0) & (ci < tile_px)
-            okr = (ri >= 0) & (ri < tile_px)
-            sub = arr[np.ix_(okr, okc)]
-            tgt = out[np.ix_(ri[okr], ci[okc])]
-            fill = (tgt == no_data) & (sub != no_data)
-            tgt[fill] = sub[fill]
-            out[np.ix_(ri[okr], ci[okc])] = tgt
-        return pd.DataFrame([{
-            "tile_x": tx, "tile_y": ty, "bytes": codec.encode_raw_f32(out),
-            "w": tile_px, "h": tile_px,
-            "gt_x0": x0, "gt_rx": res_x, "gt_y0": y1, "gt_ry": res_y,
-            "n_sources": len(pdf),
-        }])
-
-    return t.groupBy("__tx", "__ty").applyInPandas(
-        lambda k, p: _mosaic(k, p), schema=out_schema)
 
 
 def sample_at_points(rasters: DataFrame, points: DataFrame, *,

@@ -84,6 +84,41 @@ def auto_res(rasters: DataFrame, max_cells_per_tile: int = 64) -> int:
     return 0
 
 
+def tile_cover(tiles: DataFrame, res: int, *,
+               pad_deg: float | None = None) -> DataFrame:
+    """Each tile row once per grid cell at ``res`` that its bbox covers
+    (pure column arithmetic — tiles are rectangles), in column
+    ``operators.core.CELL_COL``. ``pad_deg`` widens the bbox by that many
+    degrees of ground distance: latitude by ``pad_deg``, longitude by
+    ``pad_deg / cos(lat)`` at the padded bbox's poleward edge, so a flat
+    pad does not miss in-radius pixels at high latitude."""
+    from ..operators.core import CELL_COL  # deferred: circular
+
+    x0 = F.col("gt_x0")
+    x1 = F.col("gt_x0") + F.col("gt_rx") * F.col("w")
+    y0 = F.col("gt_y0") - F.col("gt_ry") * F.col("h")
+    y1 = F.col("gt_y0")
+    if pad_deg is not None:
+        lat_abs = F.greatest(F.abs(y0), F.abs(y1)) + F.lit(pad_deg)
+        pad_x = (F.lit(pad_deg)
+                 / F.greatest(F.cos(F.radians(F.least(lat_abs, F.lit(89.0)))),
+                              F.lit(1e-6)))
+        x0, x1, y0, y1 = x0 - pad_x, x1 + pad_x, y0 - pad_deg, y1 + pad_deg
+    n = 1 << res
+    ix0 = F.floor((x0 + 180.0) / 360.0 * n).cast("long")
+    ix1 = F.floor((x1 + 180.0) / 360.0 * n).cast("long")
+    iy0 = F.floor((y0 + 90.0) / 180.0 * n).cast("long")
+    iy1 = F.floor((y1 + 90.0) / 180.0 * n).cast("long")
+    return (tiles
+            .withColumn("__ix", F.explode(F.sequence(ix0, ix1)))
+            .withColumn("__iy", F.explode(F.sequence(iy0, iy1)))
+            .withColumn(CELL_COL,
+                        F.lit(res).cast("long") * F.lit(1 << C.RES_SHIFT)
+                        + F.col("__ix") * F.lit(1 << C.IX_SHIFT)
+                        + F.col("__iy"))
+            .drop("__ix", "__iy"))
+
+
 def tile_zone_pairs(rasters: DataFrame, zones: DataFrame, *,
                     zone_wkb: str = "geometry_wkb", zone_id: str = "gid",
                     res: int | None = None,
@@ -98,20 +133,7 @@ def tile_zone_pairs(rasters: DataFrame, zones: DataFrame, *,
 
     if res is None:
         res = auto_res(rasters)
-    tiles = rasters.withColumn("__maxx", F.col("gt_x0") + F.col("gt_rx") * F.col("w")) \
-                   .withColumn("__miny", F.col("gt_y0") - F.col("gt_ry") * F.col("h"))
-    n = 1 << res
-    ix0 = F.floor((F.col("gt_x0") + 180.0) / 360.0 * n).cast("long")
-    ix1 = F.floor((F.col("__maxx") + 180.0) / 360.0 * n).cast("long")
-    iy0 = F.floor((F.col("__miny") + 90.0) / 180.0 * n).cast("long")
-    iy1 = F.floor((F.col("gt_y0") + 90.0) / 180.0 * n).cast("long")
-    t = (tiles
-         .withColumn("__ix", F.explode(F.sequence(ix0, ix1)))
-         .withColumn("__iy", F.explode(F.sequence(iy0, iy1)))
-         .withColumn(CELL_COL,
-                     F.lit(res).cast("long") * F.lit(1 << C.RES_SHIFT)
-                     + F.col("__ix") * F.lit(1 << C.IX_SHIFT) + F.col("__iy"))
-         .drop("__ix", "__iy", "__maxx", "__miny"))
+    t = tile_cover(rasters, res)
     zc = explode_cover(zones.select(zone_id, zone_wkb), zone_wkb, CELL_COL,
                        res, res, max_cells)
     return (t.join(zc, on=CELL_COL).drop(CELL_COL)
@@ -286,51 +308,3 @@ def zonal_majority(rasters: DataFrame, zones: DataFrame, *,
                 F.col("__maj.n").alias("majority_n"),
                 F.col("__min.value").alias("minority"),
                 F.col("__min.n").alias("minority_n")))
-
-
-# ------------------------------------------------------------------ surface
-# WGS84 ellipsoid constants (reference Ellipsoid, coordinates.py:36-70)
-WGS84_A = 6378.137            # km (reference works in km for surfaces)
-WGS84_E2 = 0.00669437999014
-
-
-def compute_surface(lb, rb, ub, bb, geo_type: str = "latlon"):
-    """Pixel surface from border coordinates (reference
-    surface.py:15-53): 'latlon' uses the local-sphere approximation of
-    the WGS84 ellipsoid at the pixel's mid-latitude (km^2); 'equal'
-    returns the planar rectangle area. All inputs array-like."""
-    lb, rb = np.asarray(lb, dtype=np.float64), np.asarray(rb, dtype=np.float64)
-    ub, bb = np.asarray(ub, dtype=np.float64), np.asarray(bb, dtype=np.float64)
-    if geo_type == "equal":
-        return np.abs(ub - bb) * np.abs(rb - lb)
-    if geo_type != "latlon":
-        raise ValueError(f"geo_type {geo_type!r} not defined")
-    lat = np.radians((ub + bb) / 2)
-    s2 = np.sin(lat) ** 2
-    n = WGS84_A / np.sqrt(1 - WGS84_E2 * s2)                 # prime vertical
-    p = WGS84_A * (1 - WGS84_E2) / (1 - WGS84_E2 * s2) ** 1.5  # meridional
-    r = np.sqrt(n * p)                                        # local sphere, km
-    return (r ** 2) * (np.sin(np.radians(ub)) - np.sin(np.radians(bb))) \
-        * np.radians(rb - lb)
-
-
-def pixel_overlap_area(centroid1, centroid2, res1, res2,
-                       geo_type: str = "latlon"):
-    """Overlap surface between two pixel rectangles given their centroids
-    and resolutions (reference surface.py:56-89): rectangle-intersection
-    borders → compute_surface; zero where the rectangles don't overlap."""
-    c1 = np.asarray(centroid1, dtype=np.float64)
-    c2 = np.asarray(centroid2, dtype=np.float64)
-    lb1, rb1 = c1[..., 0] - res1 / 2, c1[..., 0] + res1 / 2
-    ub1, bb1 = c1[..., 1] + res1 / 2, c1[..., 1] - res1 / 2
-    lb2, rb2 = c2[..., 0] - res2 / 2, c2[..., 0] + res2 / 2
-    ub2, bb2 = c2[..., 1] + res2 / 2, c2[..., 1] - res2 / 2
-    lb = np.maximum(lb1, lb2)
-    rb = np.minimum(rb1, rb2)
-    ub = np.minimum(ub1, ub2)
-    bb = np.maximum(bb1, bb2)
-    xo = np.maximum(0.0, rb - lb)
-    yo = np.maximum(0.0, ub - bb)
-    area = np.asarray(compute_surface(lb, rb, ub, bb, geo_type), dtype=np.float64)
-    area = np.where(np.isclose(xo, 0) | np.isclose(yo, 0), 0.0, area)
-    return area

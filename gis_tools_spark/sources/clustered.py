@@ -1,10 +1,9 @@
 """Z-order-clustered spatial layout + bbox scan pruning.
 
-The second data-layout lever next to :mod:`bucketed` (which removes the
-JOIN shuffle): clustering a table by the Morton key makes SPATIAL RANGE
-queries cheap. ``write_clustered`` range-partitions and sorts rows by
-the interleaved-bit Z key, so each parquet file/row-group covers a tiny
-contiguous Z range; ``bbox_filter`` turns a query bbox into a union of
+Clustering a table by the Morton key makes SPATIAL RANGE queries cheap:
+when rows are range-partitioned and sorted by the interleaved-bit Z key
+(the lake's ``icetable`` commits do this), each parquet file/row-group
+covers a tiny contiguous Z range; ``bbox_filter`` turns a query bbox into a union of
 Z BETWEENs (one per adaptive cover cell — every quadtree cell is ONE
 contiguous Morton range) plus the exact lon/lat bounds. Both predicate
 families are plain comparisons on scan columns, so Catalyst pushes them
@@ -23,26 +22,11 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .. import cells as C
 
 ZRES = 16  # default clustering res: ~610 m cells, 32-bit keys
-
-
-def write_clustered(df: DataFrame, path: str, *, lon: str = "lon",
-                    lat: str = "lat", zres: int = ZRES,
-                    zkey_col: str = "zkey", n_files: int | None = None,
-                    mode: str = "overwrite") -> None:
-    """Persist `df` sorted by the Morton key: repartitionByRange gives
-    globally disjoint Z ranges per file, sortWithinPartitions makes
-    every row group's zkey min/max tight."""
-    out = df.withColumn(zkey_col,
-                        C.morton_column(F.col(lon), F.col(lat), zres))
-    n = n_files or df.sparkSession.sparkContext.defaultParallelism
-    (out.repartitionByRange(n, zkey_col)
-        .sortWithinPartitions(zkey_col)
-        .write.mode(mode).parquet(path))
 
 
 def bbox_zranges(minx: float, miny: float, maxx: float, maxy: float, *,
@@ -96,10 +80,3 @@ def bbox_filter(df: DataFrame, minx: float, miny: float, maxx: float,
     return df.where(zpred
                     & (F.col(lon) >= F.lit(minx)) & (F.col(lon) <= F.lit(maxx))
                     & (F.col(lat) >= F.lit(miny)) & (F.col(lat) <= F.lit(maxy)))
-
-
-def bbox_read(spark: SparkSession, path: str, minx: float, miny: float,
-              maxx: float, maxy: float, **kw) -> DataFrame:
-    """Open a clustered table and apply the prunable bbox selection."""
-    return bbox_filter(spark.read.parquet(path), minx, miny, maxx, maxy,
-                       **kw)

@@ -1,9 +1,7 @@
-"""OpenStreetMap Overpass tooling — QL query building and
-response-JSON → feature parsing (pure functions; the HTTP fetch itself
-stays out of scope — no network in this environment).
+"""OpenStreetMap Overpass tooling — response-JSON → feature parsing
+(pure functions; the HTTP fetch itself is out of scope).
 
-Reference parity: gis-tools osm.py — ``ql_query`` (osm.py:196-228,
-byte-identical output strings), ``json_to_geodataframe``
+Reference parity: gis-tools osm.py — ``json_to_geodataframe``
 (osm.py:181-193 via _to_point_features/_to_features, osm.py:25-83):
 nodes → points; ways → linestrings / closed polygons; relations →
 member ways merged end-to-end (the reference's gistools.geometry merge
@@ -21,45 +19,6 @@ from typing import Iterator
 import numpy as np
 
 from ..geom import wkb
-
-
-class QlQueryError(ValueError):
-    pass
-
-
-def ql_query(osm_type: str, tag: str, values=None, bounds=None,
-             polygon_coord: str | None = None, timeout: int = 180) -> str:
-    """Overpass QL query string (reference osm.py:196-228 exactly)."""
-    if osm_type not in ("node", "way", "relation", "nwr"):
-        raise ValueError(f"bad osm_type {osm_type!r}")
-    if isinstance(values, str):
-        values = [values]
-    if bounds and not polygon_coord:
-        west, south, east, north = bounds
-        boundary = f'({south:.6f},{west:.6f},{north:.6f},{east:.6f})'
-    elif polygon_coord and not bounds:
-        boundary = f'(poly:"{polygon_coord}")'
-    else:
-        raise QlQueryError(
-            "Must define either geometry bounds or polygon coordinates")
-    if values:
-        if len(values) > 1:
-            tags = f'["{tag}"~"{"|".join(values)}"]'
-        else:
-            tags = f'["{tag}"="{values[0]}"]'
-    else:
-        tags = f'["{tag}"]'
-    return f'[out:json][timeout:{timeout}];{osm_type}{tags}{boundary};out geom;'
-
-
-def polygon_coord_str(ring) -> str:
-    """Exterior ring coords → the 'lat lon lat lon …' string Overpass
-    poly filters expect (reference osm.py:134-179, 6-dp rounding)."""
-    parts = []
-    for x, y in np.asarray(ring, dtype=float)[:, :2]:
-        parts.append(f"{y:.6f}")
-        parts.append(f"{x:.6f}")
-    return " ".join(parts)
 
 
 def _tags(elem: dict) -> str:

@@ -20,9 +20,7 @@ a pair of blob-table operators per format:
   Polygon records group rings by the spec's winding convention
   (clockwise = outer) with an even-odd containment test assigning
   holes to their outer ring; multiple outers become a MultiPolygon.
-  ``parse_dbf`` reads dBase III attributes (C/N/F/L/D fields);
-  ``shapefile_layer`` joins both into feature rows. ``write_shp`` /
-  ``write_dbf`` emit conformant files for the roundtrip tests and the
+  ``write_shp`` emits conformant files for the roundtrip tests and the
   interchange sink.
 
 Corrupt documents are marked (ok=false), never a task kill.
@@ -229,47 +227,6 @@ def parse_shp(buf: bytes) -> list[bytes | None]:
     return out
 
 
-def parse_dbf(buf: bytes):
-    """.dbf bytes → (field_names, rows of python values). dBase III:
-    C=str, N/F=number, L=bool, D=YYYYMMDD string."""
-    buf = bytes(buf)
-    if len(buf) < 32:
-        raise ValueError("not a dbf file")
-    nrec = struct.unpack("<I", buf[4:8])[0]
-    hsize, rsize = struct.unpack("<HH", buf[8:12])
-    fields = []
-    pos = 32
-    while pos < hsize - 1 and buf[pos] != 0x0D:
-        name = buf[pos:pos + 11].split(b"\0")[0].decode("latin1")
-        ftype = chr(buf[pos + 11])
-        flen = buf[pos + 16]
-        fields.append((name, ftype, flen))
-        pos += 32
-    rows = []
-    for i in range(nrec):
-        rpos = hsize + i * rsize
-        rec = buf[rpos:rpos + rsize]
-        if len(rec) < rsize or rec[0:1] == b"*":   # deleted row
-            continue
-        vals = []
-        fpos = 1
-        for name, ftype, flen in fields:
-            raw = rec[fpos:fpos + flen].decode("latin1").strip()
-            fpos += flen
-            if ftype in ("N", "F"):
-                try:
-                    vals.append(float(raw) if ("." in raw or "e" in raw)
-                                else int(raw))
-                except ValueError:
-                    vals.append(None)
-            elif ftype == "L":
-                vals.append(raw.upper() in ("T", "Y") if raw else None)
-            else:
-                vals.append(raw or None)
-        rows.append(vals)
-    return [f[0] for f in fields], rows
-
-
 # --------------------------------------------------------- shp writers
 
 def _shp_record(buf: bytes | None):
@@ -383,26 +340,6 @@ def _all_coords(g: dict):
                 yield np.asarray(r, dtype=float)[:, :2]
 
 
-def write_dbf(field_names: list[str], rows: list[list]) -> bytes:
-    """All fields as C(64) text — lossless for the roundtrip tests and
-    readable by every dBase consumer."""
-    nf = len(field_names)
-    hsize = 32 + 32 * nf + 1
-    rsize = 1 + 64 * nf
-    hdr = struct.pack("<B3BIHH20x", 3, 95, 1, 1, len(rows), hsize, rsize)
-    for name in field_names:
-        hdr += struct.pack("<11sc4xB15x", name.encode("latin1")[:10],
-                           b"C", 64)
-    hdr += b"\x0D"
-    body = b""
-    for row in rows:
-        body += b" "
-        for v in row:
-            s = ("" if v is None else str(v)).encode("latin1", "replace")
-            body += s[:64].ljust(64)
-    return hdr + body + b"\x1A"
-
-
 # ------------------------------------------------------ Spark operators
 
 def geojson_features(df, id_col: str = "doc_id",
@@ -456,45 +393,3 @@ def to_geojson(df, wkb_col: str = "geometry_wkb",
     cols = ["feature_id", wkb_col] + ([props_col] if props_col else [])
     return df.select(*cols).mapInPandas(
         _enc, schema="feature_id string, json string, ok boolean")
-
-
-def shapefile_layer(df, id_col: str = "layer_id", shp_col: str = "shp",
-                    dbf_col: str = "dbf"):
-    """(layer id, .shp bytes, .dbf bytes) rows → one row per feature:
-    (layer_id, feature_id, geometry_wkb, geom_type, properties, ok).
-    Pass dbf NULL for geometry-only layers."""
-
-    def _scan(it: Iterator) -> Iterator:
-        import json as _json
-
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for lid, shp, dbf in zip(pdf[id_col], pdf[shp_col],
-                                     pdf[dbf_col]):
-                try:
-                    geoms = parse_shp(shp)
-                    if dbf is not None and len(dbf):
-                        names, recs = parse_dbf(dbf)
-                        props = [_json.dumps(dict(zip(names, r)),
-                                             sort_keys=True)
-                                 for r in recs]
-                    else:
-                        props = ["{}"] * len(geoms)
-                    for i, g in enumerate(geoms):
-                        p = props[i] if i < len(props) else "{}"
-                        rows.append((lid, f"{lid}/{i}", g,
-                                     wkb.geom_type(g) if g else None,
-                                     p, True))
-                except Exception:  # noqa: BLE001 — mark, never kill
-                    rows.append((lid, f"{lid}/0", None, None, None,
-                                 False))
-            yield pd.DataFrame(rows, columns=[
-                "layer_id", "feature_id", "geometry_wkb", "geom_type",
-                "properties", "ok"])
-
-    return df.select(id_col, shp_col, dbf_col).mapInPandas(
-        _scan, schema="layer_id string, feature_id string, "
-                      "geometry_wkb binary, geom_type string, "
-                      "properties string, ok boolean")

@@ -1,6 +1,5 @@
 """Centrography (operators/centrography.py) vs closed-form numpy: the
-mean center / standard distance / standard deviational ellipse must
-match the direct per-point definitions, not just the moment shortcut —
+standard deviational ellipse must match the direct per-point definitions, not just the moment shortcut —
 this catches any algebra error in the Σx²-style rearrangement."""
 
 import numpy as np
@@ -8,7 +7,7 @@ import pandas as pd
 import pytest
 
 from gis_tools_spark.operators.centrography import (
-    mean_center, standard_distance, std_deviational_ellipse)
+    std_deviational_ellipse)
 
 
 def _ref_ellipse(x, y, w=None):
@@ -56,19 +55,6 @@ def test_ellipse_matches_per_point_definition(spark, pts):
         np.testing.assert_allclose(
             [r.mean_x, r.mean_y, r.std_dist, r.theta_rad, r.sigma_x, r.sigma_y],
             [mx, my, sdd, th, sx, sy], rtol=1e-9)
-
-
-def test_weighted_mean_center_and_distance(spark, pts):
-    mc = (mean_center(spark.createDataFrame(pts), by=["grp"], weight="wgt")
-          .toPandas().set_index("grp").sort_index())
-    sd = (standard_distance(spark.createDataFrame(pts), by=["grp"], weight="wgt")
-          .toPandas().set_index("grp").sort_index())
-    for g, sub in pts.groupby("grp"):
-        mx, my, sdd, *_ = _ref_ellipse(sub.lon.values, sub.lat.values,
-                                       sub.wgt.values)
-        np.testing.assert_allclose([mc.loc[g].mean_x, mc.loc[g].mean_y],
-                                   [mx, my], rtol=1e-12)
-        np.testing.assert_allclose(sd.loc[g].std_dist, sdd, rtol=1e-9)
 
 
 def test_rotation_invariants(spark):

@@ -78,69 +78,3 @@ def test_multiline_and_wkb_roundtrip(spark):
     l2 = g["lines"][1]
     assert np.allclose(np.cross(l2[-1] - l2[0], (l2 - l2[0])), 0)
     assert out[1]["g"] is None
-
-
-def test_simplify_vw_properties():
-    from gis_tools_spark.geom import kernels as K
-
-    rng = np.random.RandomState(4)
-    v = np.cumsum(rng.uniform(-1, 1, (200, 2)), axis=0)
-    for thr in (0.0, 0.01, 0.5, 5.0):
-        out = K.simplify_vw(v, thr)
-        # endpoints kept, order preserved (subsequence)
-        assert np.array_equal(out[0], v[0])
-        assert np.array_equal(out[-1], v[-1])
-        idx = 0
-        for row in out:
-            while idx < len(v) and not np.array_equal(v[idx], row):
-                idx += 1
-            assert idx < len(v)
-        # monotone: larger threshold keeps no more points
-    n_prev = None
-    for thr in (0.0, 0.01, 0.5, 5.0, 100.0):
-        n = len(K.simplify_vw(v, thr))
-        if n_prev is not None:
-            assert n <= n_prev
-        n_prev = n
-
-
-def test_simplify_vw_vs_bruteforce():
-    from gis_tools_spark.geom import kernels as K
-
-    rng = np.random.RandomState(7)
-    v = np.cumsum(rng.uniform(-1, 1, (12, 2)), axis=0)
-
-    def brute(v, thr):
-        pts = list(map(tuple, v))
-        last = 0.0
-        while len(pts) > 2:
-            areas = []
-            for i in range(1, len(pts) - 1):
-                (ax, ay), (bx, by), (cx, cy) = (pts[i - 1], pts[i],
-                                                pts[i + 1])
-                areas.append(abs((bx - ax) * (cy - ay)
-                                 - (by - ay) * (cx - ax)) / 2)
-            k = int(np.argmin(areas))
-            a = max(areas[k], last)
-            if a >= thr:
-                break
-            last = a
-            pts.pop(k + 1)
-        return np.array(pts)
-
-    for thr in (0.05, 0.2, 1.0):
-        assert np.array_equal(K.simplify_vw(v, thr), brute(v, thr))
-
-
-def test_simplify_vw_spark(spark):
-    from pyspark.sql import functions as F
-
-    from gis_tools_spark.functions.geom_funcs import geom_simplify_vw
-
-    v = np.array([[0, 0], [1, 0.001], [2, 0], [3, 3], [4, 0]], float)
-    buf = W.encode({"type": "LineString", "coords": v})
-    df = spark.createDataFrame(pd.DataFrame({"g": [buf, None]}))
-    out = df.select(geom_simplify_vw(0.05)(F.col("g")).alias("s")).collect()
-    g = W.decode(bytes(out[0]["s"]))
-    assert len(g["coords"]) == 4          # tiny bump removed
-    assert out[1]["s"] is None

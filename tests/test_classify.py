@@ -1,6 +1,4 @@
-"""Classification schemes vs brute-force oracles."""
-
-import itertools
+"""Equal-interval breaks and column classification."""
 
 import numpy as np
 import pandas as pd
@@ -9,46 +7,7 @@ import pytest
 from gis_tools_spark.operators.classify import (
     classify_column,
     equal_interval_breaks,
-    jenks_breaks,
-    quantile_breaks,
 )
-
-
-def _brute_jenks(vals, k):
-    """Minimum weighted-SSE partition by enumerating all cut sets."""
-    vals = sorted(vals)
-    n = len(vals)
-    best, best_cuts = np.inf, None
-
-    def sse(seg):
-        a = np.array(seg)
-        return float(((a - a.mean()) ** 2).sum())
-
-    for cuts in itertools.combinations(range(1, n), k - 1):
-        idx = [0, *cuts, n]
-        cost = sum(sse(vals[idx[i]:idx[i + 1]]) for i in range(k))
-        if cost < best - 1e-12:
-            best, best_cuts = cost, cuts
-    return [vals[c - 1] for c in best_cuts], best
-
-
-def test_jenks_matches_bruteforce(spark):
-    rng = np.random.default_rng(17)
-    # clustered data with clear structure + noise
-    vals = np.concatenate([rng.normal(0, 1, 8), rng.normal(10, 1, 6),
-                           rng.normal(25, 2, 6)]).round(3)
-    vals = np.unique(vals)          # distinct → exact with bins >= n
-    df = spark.createDataFrame(pd.DataFrame({"v": vals}))
-    for k in (2, 3, 4):
-        got = jenks_breaks(df, "v", k, bins=4096)
-        want, want_cost = _brute_jenks(list(vals), k)
-        # compare achieved SSE (multiple cut sets can tie)
-        def cost_of(breaks):
-            cls = np.searchsorted(np.array(breaks), vals, side="left")
-            return sum(((vals[cls == c] - vals[cls == c].mean()) ** 2).sum()
-                       for c in np.unique(cls))
-        assert cost_of(got) == pytest.approx(want_cost, rel=1e-9), k
-        assert len(got) == k - 1
 
 
 def test_breaks_and_classify(spark):
@@ -56,23 +15,9 @@ def test_breaks_and_classify(spark):
     df = spark.createDataFrame(pdf)
     eq = equal_interval_breaks(df, "v", 4)
     assert eq == pytest.approx([24.75, 49.5, 74.25])
-    qb = quantile_breaks(df, "v", 4)
-    assert qb == pytest.approx([24.75, 49.5, 74.25])
     out = df.select("v", classify_column("v", eq).alias("c")).toPandas()
     assert set(out.c) == {0, 1, 2, 3}
     # monotone, boundary goes to the LOWER class (v <= break)
     assert (out.sort_values("v").c.diff().fillna(0) >= 0).all()
     assert out[out.v == 24.0].c.iloc[0] == 0
     assert out[out.v == 25.0].c.iloc[0] == 1
-
-
-def test_jenks_scale_invariance_binned(spark):
-    """Binned Jenks on 50k rows recovers the 3 well-separated clusters."""
-    rng = np.random.default_rng(5)
-    vals = np.concatenate([rng.normal(0, 0.5, 20000),
-                           rng.normal(50, 0.5, 20000),
-                           rng.normal(100, 0.5, 10000)])
-    df = spark.createDataFrame(pd.DataFrame({"v": vals})).repartition(16)
-    br = jenks_breaks(df, "v", 3, bins=512)
-    # breaks are left-class maxima: ≈max(cluster1)≈2 and ≈max(cluster2)≈52
-    assert -2 < br[0] < 45 and 45 < br[1] < 98

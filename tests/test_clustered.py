@@ -81,8 +81,12 @@ def test_clustered_scan_pushdown_and_prune(spark, tmp_path):
     # small row groups so the prune ratio is meaningful at test size
     spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "1024")
     spark.conf.set("parquet.block.size", 64 * 1024)
-    CL.write_clustered(df, path, n_files=16)
-    out = CL.bbox_read(spark, path, *BBOX)
+    # the clustered layout: range-partitioned and sorted by the zkey
+    (df.withColumn("zkey", C.morton_column(F.col("lon"), F.col("lat"),
+                                           CL.ZRES))
+       .repartitionByRange(16, "zkey").sortWithinPartitions("zkey")
+       .write.mode("overwrite").parquet(path))
+    out = CL.bbox_filter(spark.read.parquet(path), *BBOX)
 
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "zkey" in plan, plan

@@ -1,12 +1,9 @@
 """CRS transforms: WGS84 ↔ WebMercator / UTM (closed-form kernels)."""
 
 import numpy as np
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from gis_tools_spark.functions.crs import reproject_udf, transform_xy
-from gis_tools_spark.geom import wkb
+from gis_tools_spark.functions.crs import transform_xy
 
 
 def test_mercator_known_value_and_roundtrip():
@@ -42,16 +39,6 @@ def test_unsupported_crs_raises():
     # code with no built-in parameterization
     with pytest.raises(NotImplementedError):
         transform_xy(np.array([0.0]), np.array([0.0]), "4326", "29902")
-
-
-def test_reproject_udf_polygon(spark):
-    df = spark.createDataFrame(pd.DataFrame(
-        {"gid": [1], "geometry_wkb": [wkb.box(7, 43, 7.1, 43.1)]}))
-    out = df.withColumn("m", reproject_udf("4326", "3857")(F.col("geometry_wkb"))).toPandas()
-    g = wkb.decode(out["m"].iloc[0])
-    xs = g["rings"][0][:, 0]
-    want_x, _ = transform_xy(np.array([7.0, 7.1]), np.array([43.0, 43.0]), "4326", "3857")
-    assert xs.min() == pytest.approx(want_x[0]) and xs.max() == pytest.approx(want_x[1])
 
 
 # ------------------------------------------------------- round-2: conic/azimuthal

@@ -84,16 +84,6 @@ def test_distance_and_hausdorff():
     assert K.geom_distance(a, wkb.decode(wkb.box(1, 1, 3, 3))) == 0.0
 
 
-def test_convex_hull_and_simplify():
+def test_convex_hull():
     h = K.convex_hull(np.array([(0, 0), (1, 0), (1, 1), (0, 1), (0.5, 0.5)]))
     assert abs(K.ring_area_signed(h) - 1.0) < 1e-12
-    s = K.simplify_dp(np.array([(0.0, 0.0), (1.0, 0.001), (2.0, 0.0)]), 0.01)
-    assert len(s) == 2
-
-
-def test_line_ops():
-    line = np.array([(0.0, 0.0), (10.0, 0.0)])
-    assert np.allclose(K.interpolate_line(line, 4.0), [4, 0])
-    assert K.project_on_line(line, 4.0, 3.0) == pytest.approx(4.0)
-    seg = K.segmentize(line, 3.0)
-    assert len(seg) == 5  # 0, 2.5, 5, 7.5, 10

@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from gis_tools_spark.functions import (
-    euclidean,
     geom_area,
     geom_buffer,
     geom_centroid_xy,
@@ -14,9 +13,7 @@ from gis_tools_spark.functions import (
     geom_envelope,
     geom_force_2d,
     geom_length,
-    geom_segmentize,
     geom_shape_factor,
-    geom_simplify,
     geom_type_of,
     great_circle_meters,
 )
@@ -55,18 +52,12 @@ def test_centroid_envelope_hull(gdf):
     assert K.area(hull) == pytest.approx(16.0)
 
 
-def test_simplify_force2d_segmentize(spark):
+def test_force2d(spark):
     line3d = wkb.linestring([(0, 0, 1), (5, 0.001, 2), (10, 0, 3)])
     df = spark.createDataFrame(pd.DataFrame({"gid": [1], "geometry_wkb": [line3d]}))
-    got = (df.withColumn("s", geom_simplify(0.01)(F.col("geometry_wkb")))
-           .withColumn("f2", geom_force_2d()(F.col("geometry_wkb")))
-           .withColumn("seg", geom_segmentize(2.0)(F.col("geometry_wkb")))
+    got = (df.withColumn("f2", geom_force_2d()(F.col("geometry_wkb")))
            .toPandas().iloc[0])
-    assert len(wkb.decode(got["s"])["coords"]) == 2
     assert wkb.decode(got["f2"])["coords"].shape[1] == 2
-    seg = wkb.decode(got["seg"])["coords"]
-    d = np.sqrt((np.diff(seg[:, :2], axis=0) ** 2).sum(axis=1))
-    assert (d <= 2.0 + 1e-9).all()
 
 
 def test_buffer_point_area(spark):
@@ -91,10 +82,8 @@ def test_geodesy_columns(spark):
         "lon1": [0.0], "lat1": [0.0], "lon2": [0.0], "lat2": [1.0]}))
     got = df.select(
         great_circle_meters(F.col("lon1"), F.col("lat1"), F.col("lon2"), F.col("lat2")).alias("gc"),
-        euclidean(F.col("lon1"), F.col("lat1"), F.col("lon2"), F.col("lat2")).alias("eu"),
     ).collect()[0]
     assert got["gc"] == pytest.approx(111194.9, rel=1e-3)  # 1 deg meridian arc
-    assert got["eu"] == 1.0
     # plan check: pure codegen, no Python UDF
     plan = df.select(great_circle_meters(F.col("lon1"), F.col("lat1"),
                                          F.col("lon2"), F.col("lat2")))._jdf \

@@ -1,14 +1,11 @@
-"""isochrone_boundaries / isochrone_polygons (operators/isochrone.py)."""
+"""isochrone_boundaries (operators/isochrone.py)."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from gis_tools_spark.operators.isochrone import (_rings_from_edges,
-                                                 _shoelace,
-                                                 isochrone_boundaries,
-                                                 isochrone_polygons)
+from gis_tools_spark.operators.isochrone import isochrone_boundaries
 
 
 def _lattice(spark, n=12, jit=True):
@@ -32,21 +29,6 @@ def _lattice(spark, n=12, jit=True):
     nd = spark.createDataFrame(pd.DataFrame(
         rows_n, columns=["node", "nid", "x", "y"]))
     return e, nd
-
-
-def test_single_ring_and_area_bounds(spark):
-    e, nd = _lattice(spark)
-    out = isochrone_polygons(e, nd, ["g5_5"], cutoff=8.0,
-                             alpha=2000.0).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["is_ring"] and r["n_rings"] == 1
-    # area bounded by reach size: each node "owns" ~1000² of lattice
-    assert 0.2 * r["n_nodes"] * 1e6 < r["area"] < 1.2 * r["n_nodes"] * 1e6
-    # WKB parses as POLYGON with a closed ring
-    import struct
-    buf = bytes(r["geometry_wkb"])
-    assert struct.unpack_from("<BI", buf)[1] == 3
 
 
 def test_composition_equals_manual(spark):
@@ -77,26 +59,3 @@ def test_boundary_nodes_within_cutoff(spark):
                  service_area(e, ["g5_5"], cutoff=6.0)
                  .join(nd, on="node").select("nid").collect()}
     assert ids <= reach_ids
-
-
-def test_ring_walker_pinch_fallback():
-    pts = {0: (0, 0), 1: (2, 0), 2: (1, 1), 3: (0, 2), 4: (2, 2)}
-    # bow-tie: vertex 2 has degree 4 → not walkable into simple rings
-    edges = [(0, 1), (0, 2), (1, 2), (2, 3), (2, 4), (3, 4)]
-    rings, ok = _rings_from_edges(pts, edges)
-    assert not ok
-    # two disjoint triangles walk fine
-    pts2 = {0: (0, 0), 1: (1, 0), 2: (0, 1), 3: (5, 5), 4: (6, 5),
-            5: (5, 6)}
-    rings, ok = _rings_from_edges(pts2, [(0, 1), (1, 2), (0, 2),
-                                         (3, 4), (4, 5), (3, 5)])
-    assert ok and len(rings) == 2
-    assert all(r[0] == r[-1] for r in rings)
-    assert abs(abs(_shoelace(rings[0])) - 0.5) < 1e-12
-
-
-def test_unreachable_source_absent(spark):
-    e, nd = _lattice(spark)
-    out = isochrone_polygons(e, nd, ["g0_0", "nope"], cutoff=5.0,
-                             alpha=2000.0).collect()
-    assert {r["source"] for r in out} == {"g0_0"}

@@ -44,7 +44,7 @@ def _points_df(spark, ids, xs, ys):
 
 
 def test_kmeans_matches_numpy_replay(spark):
-    from gis_tools_spark.operators.kmeans import kmeans, kmeans_centroids
+    from gis_tools_spark.operators.kmeans import _fit, kmeans
 
     rng = np.random.default_rng(7)
     n, k, it = 400, 5, 4
@@ -53,11 +53,9 @@ def test_kmeans_matches_numpy_replay(spark):
     ys = rng.integers(0, 100000, n)
     cents, assign, d2 = _numpy_kmeans(ids, xs, ys, k, it)
 
-    got = kmeans_centroids(_points_df(spark, ids, xs, ys),
-                           k=k, n_iter=it, x="xi", y="yi",
-                           id_col="id").collect()
-    assert {(r["j"], r["cx"], r["cy"]) for r in got} == \
-        {(j, cents[j][0], cents[j][1]) for j in range(k)}
+    got = _fit(_points_df(spark, ids, xs, ys),
+               k=k, n_iter=it, x="xi", y="yi", id_col="id")
+    assert set(got) == {(j, cents[j][0], cents[j][1]) for j in range(k)}
 
     rows = (kmeans(_points_df(spark, ids, xs, ys), k=k, n_iter=it,
                    x="xi", y="yi", id_col="id")
@@ -67,7 +65,7 @@ def test_kmeans_matches_numpy_replay(spark):
 
 
 def test_kmeans_deterministic_across_partitioning(spark):
-    from gis_tools_spark.operators.kmeans import kmeans_centroids
+    from gis_tools_spark.operators.kmeans import _fit
 
     rng = np.random.default_rng(3)
     n = 300
@@ -76,15 +74,13 @@ def test_kmeans_deterministic_across_partitioning(spark):
     ys = rng.integers(0, 1000, n)
     df1 = _points_df(spark, ids, xs, ys).repartition(1)
     df8 = _points_df(spark, ids, xs, ys).repartition(8)
-    a = sorted(map(tuple, kmeans_centroids(
-        df1, k=4, n_iter=3, x="xi", y="yi", id_col="id").collect()))
-    b = sorted(map(tuple, kmeans_centroids(
-        df8, k=4, n_iter=3, x="xi", y="yi", id_col="id").collect()))
+    a = sorted(_fit(df1, k=4, n_iter=3, x="xi", y="yi", id_col="id"))
+    b = sorted(_fit(df8, k=4, n_iter=3, x="xi", y="yi", id_col="id"))
     assert a == b
 
 
 def test_kmeans_empty_cluster_keeps_centroid(spark):
-    from gis_tools_spark.operators.kmeans import kmeans_centroids
+    from gis_tools_spark.operators.kmeans import _fit
 
     # two tight blobs, k=3: one init bucket's centroid is stranded between
     # them and loses every point after the first assignment
@@ -92,17 +88,15 @@ def test_kmeans_empty_cluster_keeps_centroid(spark):
     xs = np.array([0, 1, 2, 1000, 1001, 1002, 0, 1, 1000])
     ys = np.zeros(9, dtype=np.int64)
     cents, _, _ = _numpy_kmeans(ids, xs, ys, 3, 3)
-    got = kmeans_centroids(_points_df(spark, ids, xs, ys),
-                           k=3, n_iter=3, x="xi", y="yi",
-                           id_col="id").collect()
-    assert {(r["j"], r["cx"], r["cy"]) for r in got} == \
-        {(j, *cents[j]) for j in range(3)}
+    got = _fit(_points_df(spark, ids, xs, ys),
+               k=3, n_iter=3, x="xi", y="yi", id_col="id")
+    assert set(got) == {(j, *cents[j]) for j in range(3)}
 
 
 def test_kmeans_requires_k_buckets(spark):
-    from gis_tools_spark.operators.kmeans import kmeans_centroids
+    from gis_tools_spark.operators.kmeans import _fit
 
     df = _points_df(spark, np.array([0, 4]), np.array([1, 2]),
                     np.array([1, 2]))
     with pytest.raises(ValueError, match="init buckets"):
-        kmeans_centroids(df, k=4, n_iter=1, x="xi", y="yi", id_col="id")
+        _fit(df, k=4, n_iter=1, x="xi", y="yi", id_col="id")

@@ -126,86 +126,3 @@ def test_variogram_duckdb_mirror(spark, field):
 
 
 # --------------------------------------------------------------- kriging
-
-def _ok_numpy(xs, ys, vs, qx, qy, *, model, nugget, sill, vrange, k, radius):
-    """Brute-force moving-neighborhood OK replay."""
-    from gis_tools_spark.operators.kriging import variogram_gamma
-
-    d2 = (xs - qx) ** 2 + (ys - qy) ** 2
-    order = np.lexsort((ys, xs, d2))
-    order = [i for i in order if d2[i] <= radius * radius][:k]
-    if not order:
-        return None
-    nx, ny, nv = xs[order], ys[order], vs[order]
-    m = len(order)
-    h = np.sqrt((nx[:, None] - nx[None, :]) ** 2
-                + (ny[:, None] - ny[None, :]) ** 2)
-    a = np.zeros((m + 1, m + 1))
-    a[:m, :m] = variogram_gamma(h, model=model, nugget=nugget, sill=sill,
-                                vrange=vrange)
-    a[m, :m] = 1.0
-    a[:m, m] = 1.0
-    hq = np.sqrt((nx - qx) ** 2 + (ny - qy) ** 2)
-    rhs = np.concatenate([variogram_gamma(hq, model=model, nugget=nugget,
-                                          sill=sill, vrange=vrange), [1.0]])
-    sol = np.linalg.solve(a, rhs)
-    lam, mu = sol[:m], sol[m]
-    return float(lam @ nv), float(lam @ rhs[:m] + mu), m
-
-
-def test_kriging_matches_numpy(spark, field):
-    from gis_tools_spark.operators.kriging import ordinary_kriging
-
-    xs, ys, vs = field
-    rng = np.random.default_rng(5)
-    qx = rng.uniform(1, 9, 40)
-    qy = rng.uniform(1, 9, 40)
-    queries = spark.createDataFrame(
-        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(qx, qy))],
-        "qid long, lon double, lat double")
-    kw = dict(model="spherical", nugget=0.01, sill=0.8, vrange=3.0)
-    got = {r["qid"]: r for r in ordinary_kriging(
-        _samples_df(spark, xs, ys, vs), queries, value_col="value",
-        query_id="qid", k=10, radius=2.5, **kw).collect()}
-    n_checked = 0
-    for i in range(40):
-        want = _ok_numpy(xs, ys, vs, qx[i], qy[i], k=10, radius=2.5, **kw)
-        if want is None:
-            assert i not in got
-            continue
-        r = got[i]
-        assert r["n_neighbors"] == want[2]
-        assert r["ok_value"] == pytest.approx(want[0], abs=1e-9)
-        assert r["ok_var"] == pytest.approx(want[1], abs=1e-9)
-        n_checked += 1
-    assert n_checked >= 30
-
-
-@pytest.mark.parametrize("model", ["spherical", "exponential", "gaussian"])
-def test_kriging_exact_at_samples_and_constant_field(spark, model):
-    from gis_tools_spark.operators.kriging import ordinary_kriging
-
-    rng = np.random.default_rng(9)
-    xs = rng.uniform(0, 5, 60)
-    ys = rng.uniform(0, 5, 60)
-    vs = np.round(rng.uniform(10, 20, 60), 3)
-    samples = _samples_df(spark, xs, ys, vs)
-    # queries AT the sample locations, nugget=0 -> exact interpolation
-    queries = spark.createDataFrame(
-        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(xs, ys))],
-        "qid long, lon double, lat double")
-    got = ordinary_kriging(samples, queries, value_col="value",
-                           query_id="qid", k=8, radius=2.0, model=model,
-                           nugget=0.0, sill=1.0, vrange=2.0).collect()
-    assert len(got) == 60
-    for r in got:
-        assert r["ok_value"] == pytest.approx(vs[r["qid"]], abs=1e-8)
-        assert abs(r["ok_var"]) < 1e-8
-    # constant field -> constant prediction everywhere (weights sum to 1)
-    const = _samples_df(spark, xs, ys, np.full(60, 7.25))
-    q2 = spark.createDataFrame([(0, 2.5, 2.5), (1, 1.0, 4.0)],
-                               "qid long, lon double, lat double")
-    for r in ordinary_kriging(const, q2, value_col="value",
-                              query_id="qid", k=8, radius=3.0, model=model,
-                              nugget=0.05, sill=1.0, vrange=2.0).collect():
-        assert r["ok_value"] == pytest.approx(7.25, abs=1e-9)

@@ -4,7 +4,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from gis_tools_spark.operators.mapmatch import map_match, snap_to_segments
+from gis_tools_spark.operators.mapmatch import snap_to_segments
 
 
 def _brute_snap(pts, segs, radius):
@@ -51,83 +51,3 @@ def test_snap_to_segments_matches_bruteforce(spark):
         assert gt == pytest.approx(t, rel=1e-12)
         assert (gqx, gqy) == (pytest.approx(qx), pytest.approx(qy))
     assert len(want) > 100
-
-
-def test_map_match_matches_bruteforce_dp(spark):
-    """Exhaustive path enumeration over the candidate sets equals the
-    Viterbi result (small K^N)."""
-    rng = np.random.default_rng(4)
-    segs = pd.DataFrame({
-        "seg_id": [0, 1, 2],
-        "x1": [5.0, 5.0, 5.0], "y1": [40.00, 40.02, 40.05],
-        "x2": [5.5, 5.5, 5.5], "y2": [40.00, 40.02, 40.05]})
-    n = 6
-    pings = pd.DataFrame({
-        "user": ["u"] * n, "pid": range(n),
-        "ts": pd.to_datetime("2024-01-01")
-        + pd.to_timedelta(np.arange(n) * 10, unit="s"),
-        "lon": 5.05 + np.arange(n) * 0.05,
-        "lat": 40.01 + rng.uniform(-0.015, 0.015, n)})
-    r, sigma, beta = 0.06, 0.012, 0.06
-    out = map_match(spark.createDataFrame(pings),
-                    spark.createDataFrame(segs), key_cols=["user"],
-                    radius=r, sigma=sigma, beta=beta,
-                    point_id="pid").toPandas().sort_values("pid")
-    assert len(out) == n
-
-    # brute force: all candidate combos
-    cands = []
-    for _, p in pings.iterrows():
-        cs = []
-        for _, s in segs.iterrows():
-            dx, dy = s.x2 - s.x1, s.y2 - s.y1
-            l2 = dx * dx + dy * dy
-            t = min(max(((p.lon - s.x1) * dx + (p.lat - s.y1) * dy) / l2,
-                        0.0), 1.0)
-            qx, qy = s.x1 + t * dx, s.y1 + t * dy
-            d = np.hypot(p.lon - qx, p.lat - qy)
-            if d <= r:
-                cs.append((int(s.seg_id), d, qx, qy))
-        cands.append(cs)
-    import itertools
-    best, best_cost = None, np.inf
-    for combo in itertools.product(*cands):
-        cost = sum(c[1] ** 2 / (2 * sigma ** 2) for c in combo)
-        cost += sum(np.hypot(combo[i][2] - combo[i - 1][2],
-                             combo[i][3] - combo[i - 1][3]) / beta
-                    for i in range(1, len(combo)))
-        key = tuple(c[0] for c in combo)
-        if cost < best_cost - 1e-12 or (abs(cost - best_cost) <= 1e-12
-                                        and key < best):
-            best, best_cost = key, cost
-    assert tuple(out["seg_id"].astype(int)) == best
-
-
-def test_map_match_resists_parallel_road_flips(spark):
-    """Noisy pings along road A near a parallel road B: per-ping nearest
-    flips for some pings, the HMM stays on A."""
-    rng = np.random.default_rng(9)
-    segs = pd.DataFrame({
-        "seg_id": [0, 1],
-        "x1": [5.0, 5.0], "y1": [40.000, 40.004],
-        "x2": [6.0, 6.0], "y2": [40.000, 40.004]})
-    n = 40
-    pings = pd.DataFrame({
-        "user": ["u"] * n, "pid": range(n),
-        "ts": pd.to_datetime("2024-01-01")
-        + pd.to_timedelta(np.arange(n) * 5, unit="s"),
-        "lon": 5.05 + np.arange(n) * 0.02,
-        "lat": 40.0 + rng.normal(0, 0.002, n)})
-    # ensure some pings individually snap to road B
-    per_ping = snap_to_segments(spark.createDataFrame(pings),
-                                spark.createDataFrame(segs),
-                                radius=0.02, point_id="pid").toPandas()
-    assert (per_ping["seg_id"] == 1).any()
-    # beta small enough that two road switches (the only term that
-    # differs between routes) outweigh any plausible emission gain
-    out = map_match(spark.createDataFrame(pings),
-                    spark.createDataFrame(segs), key_cols=["user"],
-                    radius=0.02, sigma=0.002, beta=0.0001,
-                    point_id="pid").toPandas()
-    assert len(out) == n
-    assert (out["seg_id"] == 0).all()

@@ -5,13 +5,10 @@ import numpy as np
 import pytest
 
 from gis_tools_spark import fixtures
-from gis_tools_spark.geom import kernels as K, wkb
+from gis_tools_spark.geom import wkb
 from gis_tools_spark.operators.network import (
     connected_components,
     edges_from_lines,
-    end_nodes,
-    multi_edges,
-    self_loops,
     shortest_paths,
 )
 
@@ -43,15 +40,6 @@ def _nx_graph(lines):
     return g
 
 
-def test_self_loops_and_degrees(road_edges):
-    edges, lines = road_edges
-    assert self_loops(edges).count() == 1  # fixture self-loop
-    g = _nx_graph(lines)
-    deg1 = {n for n, d in g.degree() if d == 1}
-    got = {r["node"] for r in end_nodes(edges.where("src_key != dst_key")).collect()}
-    assert got == deg1
-
-
 def test_connected_components_match_networkx(road_edges):
     edges, lines = road_edges
     g = _nx_graph(lines)
@@ -60,38 +48,6 @@ def test_connected_components_match_networkx(road_edges):
     groups = comp.groupby("component")["node"].apply(frozenset)
     got = {grp for grp in groups if len(grp) > 1}
     assert got == want
-
-
-def test_travel_times_and_direction_expansion(spark):
-    import pandas as pd
-
-    from gis_tools_spark.operators.network import expand_directed, travel_times
-
-    df = spark.createDataFrame(pd.DataFrame({
-        "lid": [1, 2],
-        "geometry_wkb": [wkb.linestring([(0., 0.), (10., 0.)]),
-                         wkb.linestring([(0., 0.), (1., 0.), (1.3, 0.3), (1.3, 1.3)])],
-        "direction": ["two-ways", "one-way"],
-        "max_speed": [25.0, 25.0]}))
-    out = travel_times(df).toPandas().set_index("lid")
-    assert out.loc[1, "travel_time"] == pytest.approx(10 / 25)
-    assert out.loc[1, "mean_speed"] == pytest.approx(25.0)
-    assert out.loc[2, "mean_speed"] < 25.0  # curvature-limited
-
-    from gis_tools_spark.operators.network import edges_from_lines
-
-    d = expand_directed(edges_from_lines(df)).toPandas()
-    assert len(d) == 3
-    assert set(d[d.lid == 1]["is_forward"]) == {True, False}
-    one = d[d.lid == 2].iloc[0]
-    assert one["is_forward"]
-
-
-def test_radius_of_curvature_kernel():
-    th = np.array([0.0, 0.5, 1.0])
-    pts = np.stack([np.cos(th), np.sin(th)], axis=1)
-    assert K.radius_of_curvature(pts)[0] == pytest.approx(1.0)
-    assert np.isinf(K.radius_of_curvature(np.array([(0, 0), (1, 0), (2, 0)], float))[0])
 
 
 def test_shortest_paths_match_networkx(road_edges):

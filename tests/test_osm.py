@@ -1,40 +1,14 @@
-"""Overpass QL building + response parsing (sources/osm.py), mirrored
-against the reference's pure functions (osm.py:196-228 ql_query,
-osm.py:25-98 feature extraction — byte-identical query strings, same
+"""Overpass response parsing (sources/osm.py), mirrored against the
+reference's pure functions (osm.py:25-98 feature extraction — same
 element-selection and skip rules). The HTTP fetch is out of scope.
 """
 
 import json
 
 import numpy as np
-import pytest
 
 from gis_tools_spark.geom import wkb
 from gis_tools_spark.sources import osm as O
-
-
-def test_ql_query_reference_strings():
-    # single value → ["t"="v"], bounds tuple west,south,east,north
-    q = O.ql_query("way", "highway", "primary", bounds=(5.0, 44.0, 6.0, 45.0))
-    assert q == ('[out:json][timeout:180];way["highway"="primary"]'
-                 '(44.000000,5.000000,45.000000,6.000000);out geom;')
-    # multiple values → regex form
-    q = O.ql_query("node", "amenity", ["cafe", "bar"],
-                   polygon_coord="44.0 5.0 44.0 6.0 45.0 5.5")
-    assert q == ('[out:json][timeout:180];node["amenity"~"cafe|bar"]'
-                 '(poly:"44.0 5.0 44.0 6.0 45.0 5.5");out geom;')
-    # bare tag
-    assert '["building"]' in O.ql_query("nwr", "building",
-                                        bounds=(0, 0, 1, 1))
-    with pytest.raises(O.QlQueryError):
-        O.ql_query("way", "highway")       # neither bounds nor poly
-    with pytest.raises(ValueError):
-        O.ql_query("area", "highway", bounds=(0, 0, 1, 1))
-
-
-def test_polygon_coord_str_lat_lon_order():
-    s = O.polygon_coord_str([(5.0, 44.0), (6.0, 44.5)])
-    assert s == "44.000000 5.000000 44.500000 6.000000"
 
 
 def _resp(elements):

@@ -1,4 +1,4 @@
-"""Overlay/dissolve/dedup + tiling/splitting operators."""
+"""Overlay/dissolve + tiling/splitting operators."""
 
 import numpy as np
 import pandas as pd
@@ -7,13 +7,10 @@ import pytest
 from gis_tools_spark.geom import kernels as K, wkb
 from gis_tools_spark.operators.overlay import (
     dissolve,
-    drop_duplicate_geometries,
     intersection_join,
     shared_area,
 )
 from gis_tools_spark.operators.split import (
-    cut_lines_fixed_length,
-    explode_multiparts,
     fishnet,
     image_tile_assignment,
     katana_split,
@@ -74,28 +71,10 @@ def test_katana_golden_rectangle():
     assert areas == pytest.approx([1.0, 1.0])
 
 
-def test_dissolve_and_dedup(spark, zones_pd):
+def test_dissolve(spark, zones_pd):
     zz = zones_pd[["gid", "secteur", "geometry_wkb"]]
     dis = dissolve(spark.createDataFrame(zz), "secteur").toPandas()
     assert set(dis["secteur"]) == set(zz["secteur"])
-    # disjoint-group area check: groups whose members don't overlap
-    dup = pd.concat([zz, zz.assign(gid=zz.gid + 100)])
-    dd = drop_duplicate_geometries(spark.createDataFrame(dup)).toPandas()
-    assert len(dd) == len(zz) and set(dd.gid) == set(zz.gid)
-
-
-def test_explode_multiparts(spark, zones_pd):
-    em = explode_multiparts(spark.createDataFrame(zones_pd[["gid", "geometry_wkb"]])).toPandas()
-    n_parts = sum(max(1, len(K.polygons_of(wkb.decode(b)))) for b in zones_pd["geometry_wkb"])
-    assert len(em) == n_parts
-
-
-def test_cut_lines_fixed_length(spark):
-    line = wkb.linestring([(0.0, 0.0), (10.0, 0.0)])
-    df = spark.createDataFrame(pd.DataFrame({"lid": [1], "geometry_wkb": [line]}))
-    out = cut_lines_fixed_length(df, piece_len=3.0).toPandas()
-    assert len(out) == 4
-    assert sorted(out["piece_len"].round(9)) == pytest.approx([1.0, 3.0, 3.0, 3.0])
 
 
 def test_image_tile_assignment_matches_cover(spark):

@@ -1,5 +1,7 @@
 """PIP / spatial join vs plain-pandas oracle (SURVEY.md §5 strategy)."""
 
+import logging
+
 import numpy as np
 import pytest
 
@@ -23,12 +25,18 @@ def dfs(spark, zones_pd, points_pd):
             spark.createDataFrame(zones_pd[["gid", "nom", "secteur", "surf", "geometry_wkb"]]))
 
 
-@pytest.mark.parametrize("strategy", ["cell", "broadcast"])
-def test_pip_join_matches_oracle(dfs, oracle_pairs, strategy):
+@pytest.mark.parametrize("strategy", ["cell", "broadcast", "auto"])
+def test_pip_join_matches_oracle(dfs, oracle_pairs, strategy, caplog):
+    caplog.set_level(logging.DEBUG, logger="gis_tools_spark")
     pts, zones = dfs
     got = sorted((r["pid"], r["gid"]) for r in
                  pip_join(pts, zones, strategy=strategy).select("pid", "gid").collect())
     assert got == oracle_pairs
+    want = {"cell": "pip_join strategy=cell reason=requested",
+            "broadcast": "pip_join strategy=broadcast reason=requested",
+            "auto": "pip_join strategy=broadcast reason=polygons within "
+                    "broadcast limits"}[strategy]
+    assert want in [r.getMessage() for r in caplog.records]
 
 
 def test_pip_join_salted_matches(dfs, oracle_pairs):

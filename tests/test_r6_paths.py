@@ -210,8 +210,12 @@ def test_forward_stencil_pairs_match_bruteforce(spark, same_seed):
         "lat": rng.uniform(0, 1.0, n)})
     eps = 0.07
     pts = spark.createDataFrame(pdf)
-    got = {(r["ia"], r["ib"]) for r in cluster.eps_neighbor_pairs(
-        pts, id_col="id", eps=eps).collect()}
+    fwd = [(r["ia"], r["ib"]) for r in cluster._eps_pairs_unordered(
+        pts, id_col="id", lon="lon", lat="lat", eps=eps).collect()]
+    # each unordered pair exactly once, then mirrored plus the self pairs
+    assert len(fwd) == len({frozenset(p) for p in fwd})
+    got = ({p for p in fwd} | {(b, a) for a, b in fwd}
+           | {(i, i) for i in range(n)})
     # brute force ordered pairs incl self
     dx = pdf["lon"].to_numpy()[:, None] - pdf["lon"].to_numpy()[None, :]
     dy = pdf["lat"].to_numpy()[:, None] - pdf["lat"].to_numpy()[None, :]

@@ -1,5 +1,4 @@
-"""Per-image raster kernels: polygonize, sieve, resample, slope,
-global stats, contour."""
+"""Per-image raster kernels: polygonize, resample, contour."""
 
 import numpy as np
 import pandas as pd
@@ -9,10 +8,7 @@ from gis_tools_spark.geom import kernels as K, wkb
 from gis_tools_spark.raster import codec
 from gis_tools_spark.raster.kernels import (
     contour_bins,
-    raster_global_stats,
     resample_block,
-    sieve,
-    slope_aspect,
 )
 from gis_tools_spark.raster.polygonize import polygonize, polygonize_region
 
@@ -64,14 +60,6 @@ def test_polygonize_region_hole():
     assert len(g["rings"]) == 2
 
 
-def test_sieve_absorbs_small_regions(spark):
-    arr = np.zeros((6, 6), dtype=np.float32)
-    arr[2, 2] = 5.0  # single-pixel region
-    out = sieve(_tile_df(spark, arr), 2).toPandas()
-    res = codec.decode_raw_f32(out["bytes"].iloc[0], 6, 6)
-    assert (res == 0.0).all()
-
-
 def test_resample_mean_and_nearest(spark):
     arr = np.arange(16, dtype=np.float32).reshape(4, 4)
     out = resample_block(_tile_df(spark, arr), 2, method="mean").toPandas()
@@ -80,34 +68,6 @@ def test_resample_mean_and_nearest(spark):
     assert np.allclose(res, want)
     out2 = resample_block(_tile_df(spark, arr), -2).toPandas()
     assert int(out2["w"].iloc[0]) == 8 and int(out2["h"].iloc[0]) == 8
-
-
-def test_slope_flat_and_ramp(spark):
-    flat = np.full((8, 8), 7.0, dtype=np.float32)
-    out = slope_aspect(_tile_df(spark, flat)).toPandas()
-    res = codec.decode_raw_f32(out["bytes"].iloc[0], 8, 8)
-    assert np.allclose(res, 0.0)
-    ramp = np.tile(np.arange(8, dtype=np.float32), (8, 1))  # dz/dx = 1
-    out2 = slope_aspect(_tile_df(spark, ramp)).toPandas()
-    res2 = codec.decode_raw_f32(out2["bytes"].iloc[0], 8, 8)
-    assert np.allclose(res2[2:-2, 2:-2], 45.0, atol=1e-4)
-
-
-def test_global_stats(spark):
-    a = np.array([[1, 2], [codec.NO_DATA_F32, 4]], dtype=np.float32)
-    b = np.array([[5, 6], [7, 8]], dtype=np.float32)
-    import pandas as pd
-    rows = []
-    for iid, arr in (("a", a), ("b", b)):
-        rows.append((iid, codec.encode_raw_f32(arr), 2, 2, "raw_f32", "c", 0,
-                     0.0, 1.0, 0.0, 1.0))
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=[
-        "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-        "gt_x0", "gt_rx", "gt_y0", "gt_ry"]))
-    got = raster_global_stats(df).collect()[0]
-    vals = np.array([1, 2, 4, 5, 6, 7, 8], dtype=float)
-    assert got["count"] == 7 and got["min"] == 1 and got["max"] == 8
-    assert got["mean"] == pytest.approx(vals.mean())
 
 
 def test_contour_bins(spark):

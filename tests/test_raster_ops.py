@@ -1,57 +1,13 @@
-"""clip_to_zones / merge_mosaic / sample_at_points vs direct oracles."""
+"""sample_at_points vs direct oracles."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from gis_tools_spark import fixtures
-from gis_tools_spark.geom import wkb
 from gis_tools_spark.raster import codec
-from gis_tools_spark.raster.ops import clip_to_zones, merge_mosaic, sample_at_points
-from gis_tools_spark.raster.zonal import pixel_centers, rasterize_mask
-
-
-def test_clip_and_exclude(spark):
-    ras_pd = fixtures.gen_rasters(2, 2, 16)
-    ras = spark.createDataFrame(ras_pd)
-    zone = wkb.box(6.0, 41.0, 8.5, 43.5)
-    zones = spark.createDataFrame(pd.DataFrame({"gid": [1], "geometry_wkb": [zone]}))
-    clipped = clip_to_zones(ras, zones).toPandas().set_index("image_id")
-    excluded = clip_to_zones(ras, zones, exclude=True).toPandas().set_index("image_id")
-    g = wkb.decode(zone)
-    for _, r in ras_pd.iterrows():
-        arr = codec.decode_raw_f32(r["bytes"], r["w"], r["h"])
-        xs, ys = pixel_centers(r["gt_x0"], r["gt_rx"], r["gt_y0"], r["gt_ry"], r["w"], r["h"])
-        m = rasterize_mask(g, xs, ys)
-        got_c = codec.decode_raw_f32(clipped.loc[r["image_id"], "bytes"], r["w"], r["h"])
-        got_e = codec.decode_raw_f32(excluded.loc[r["image_id"], "bytes"], r["w"], r["h"])
-        want_c = arr.copy(); want_c[~m] = codec.NO_DATA_F32
-        want_e = arr.copy(); want_e[m] = codec.NO_DATA_F32
-        assert np.array_equal(got_c, want_c), r["image_id"]
-        assert np.array_equal(got_e, want_e), r["image_id"]
-
-
-def test_merge_mosaic_first_wins(spark):
-    # two overlapping tiles on the same grid; overlap resolved by min image_id
-    res = 0.01
-    a = np.full((8, 8), 1.0, dtype=np.float32)
-    b = np.full((8, 8), 2.0, dtype=np.float32)
-    rows = [
-        ("a", codec.encode_raw_f32(a), 8, 8, "raw_f32", "c", 0, 0.0, res, 0.08, res),
-        ("b", codec.encode_raw_f32(b), 8, 8, "raw_f32", "c", 0, 0.04, res, 0.08, res),
-    ]
-    ras = spark.createDataFrame(pd.DataFrame(rows, columns=[
-        "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-        "gt_x0", "gt_rx", "gt_y0", "gt_ry"]))
-    out = merge_mosaic(ras, res_x=res, res_y=res, tile_px=32).toPandas()
-    total_1 = total_2 = 0
-    for _, r in out.iterrows():
-        arr = codec.decode_raw_f32(r["bytes"], 32, 32)
-        total_1 += int((arr == 1.0).sum())
-        total_2 += int((arr == 2.0).sum())
-    # tile a covers 64 px (all 1.0, wins overlap); b adds its non-overlapped 32 px
-    assert total_1 == 64
-    assert total_2 == 32
+from gis_tools_spark.raster.ops import sample_at_points
+from gis_tools_spark.raster.zonal import pixel_centers
 
 
 def test_sample_at_points(spark):

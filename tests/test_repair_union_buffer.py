@@ -179,81 +179,8 @@ def test_dissolve_overlapping_exact(spark):
 
 # ---------------------------------------------------------------- line cuts
 
-def test_cut_recursive_midpoint(spark):
-    from gis_tools_spark.operators.split import cut_lines_recursive_midpoint
-
-    df = spark.createDataFrame(
-        [(1, bytearray(wkb.linestring([(0, 0), (8, 0)])))],
-        "lid int, geometry_wkb binary")
-    out = cut_lines_recursive_midpoint(df, threshold=3.0).toPandas()
-    # 8 → 4,4 → 2,2,2,2 (each < 3)
-    assert len(out) == 4
-    assert np.allclose(sorted(out["piece_len"]), [2, 2, 2, 2])
-    assert out["piece_len"].sum() == pytest.approx(8.0)
-
-
-def test_split_at_underlying_points(spark):
-    from gis_tools_spark.operators.split import split_lines_at_underlying_points
-
-    lines = spark.createDataFrame(
-        [(1, bytearray(wkb.linestring([(0, 0), (1, 0), (2, 0), (3, 0)]))),
-         (2, bytearray(wkb.linestring([(0, 5), (3, 5)])))],
-        "lid int, geometry_wkb binary")
-    locs = spark.createDataFrame(
-        [(1, 1), (1, 2), (1, 0), (1, 3)], "lid int, vertex_index int")
-    out = split_lines_at_underlying_points(lines, locs).toPandas()
-    l1 = out[out["lid"] == 1].sort_values("part_index")
-    assert len(l1) == 3  # only interior indices 1,2 split (0 and 3 ignored)
-    pieces = [wkb.decode(bytes(b))["coords"][:, 0].tolist()
-              for b in l1["piece_wkb"]]
-    assert pieces == [[0, 1], [1, 2], [2, 3]]
-    l2 = out[out["lid"] == 2]
-    assert len(l2) == 1 and l2["part_index"].iloc[0] == 0
-
 
 # ---------------------------------------------------------------- kinematics
-
-def test_vehicle_kinematics_flat_straight_analytic(spark):
-    from gis_tools_spark.operators.network import vehicle_kinematics
-
-    # flat 1000 m straight road, vmax far above achievable: car
-    # accelerates from 0 at a1 then brakes to 0 at a2 within the segment
-    L = 1000.0
-    a1, a2 = 1.5 * 0.3048, -9.5 * 0.3048
-    df = spark.createDataFrame(
-        [(1, bytearray(wkb.linestring([(0.0, 0.0), (L, 0.0)])), 30.0)],
-        "lid int, geometry_wkb binary, max_speed double")
-    out = vehicle_kinematics(
-        df, gross_hp=300.0, vehicle_weight=2000.0,
-        acceleration_rate=a1, deceleration_rate=a2).toPandas()
-    r = out.iloc[0]
-    # closed form: accelerate to v, cruise at vmax=30 if reached.
-    # distance to reach 30: v^2/(2 a1) = 984.3 m; brake 30->0: 155.4 m;
-    # sum > L → triangular profile: v_pk = sqrt(2 L a1 a2/(a2-a1))
-    vpk = np.sqrt(2 * L * a1 * a2 / (a2 - a1))
-    t_want = vpk / a1 + (0 - vpk) / a2
-    assert r["travel_time_fwd"] == pytest.approx(t_want, rel=1e-6)
-    assert r["travel_time_rev"] == pytest.approx(t_want, rel=1e-6)
-    assert r["v_mean_fwd"] == pytest.approx(L / t_want, rel=1e-6)
-    assert r["fuel_fwd"] > 0
-
-
-def test_vehicle_kinematics_uphill_slower(spark):
-    from gis_tools_spark.operators.network import vehicle_kinematics
-
-    # gentle 1.5% grade: uphill is hp-limited (18 m/s), downhill grade
-    # resistance < rolling resistance → downhill runs at max_speed.
-    # (steep grades invert this — the reference's downhill model is
-    # engine-braking-limited, ehp_down/(grade - roll))
-    up = np.array([(0.0, 0.0, 0.0), (1000.0, 0.0, 15.0)])
-    df = spark.createDataFrame(
-        [(1, bytearray(wkb.linestring(up)), 25.0)],
-        "lid int, geometry_wkb binary, max_speed double")
-    out = vehicle_kinematics(df, gross_hp=150.0, vehicle_weight=20000.0).toPandas()
-    r = out.iloc[0]
-    # uphill direction strictly slower and thirstier than downhill
-    assert r["travel_time_fwd"] > r["travel_time_rev"]
-    assert r["fuel_fwd"] > r["fuel_rev"]
 
 
 # ---------------------------------------------------------------- sparse kNN

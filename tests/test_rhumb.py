@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from gis_tools_spark.functions.geodesy import (great_circle_meters,
                                                rhumb_bearing_deg,
-                                               rhumb_destination,
                                                rhumb_distance_meters)
 
 
@@ -67,77 +66,3 @@ def test_rhumb_at_least_great_circle(spark):
                             F.col("lon2"), F.col("lat2")).alias("gc")
     ).toPandas()
     assert (out["rh"] >= out["gc"] - 1e-6).all()
-
-
-def test_destination_roundtrip(spark):
-    rng = np.random.RandomState(5)
-    pdf = pd.DataFrame({
-        "lon1": rng.uniform(-150, 150, 100),
-        "lat1": rng.uniform(-60, 60, 100),
-        "brg": rng.uniform(0, 360, 100),
-        "d": rng.uniform(1e3, 2e6, 100),
-    })
-    df = spark.createDataFrame(pdf)
-    dlon, dlat = rhumb_destination(F.col("lon1"), F.col("lat1"),
-                                   F.col("brg"), F.col("d"))
-    dest = df.select("lon1", "lat1", "brg", "d",
-                     dlon.alias("lon2"), dlat.alias("lat2"))
-    back = dest.select(
-        "brg", "d",
-        rhumb_distance_meters(F.col("lon1"), F.col("lat1"),
-                              F.col("lon2"), F.col("lat2")).alias("d2"),
-        rhumb_bearing_deg(F.col("lon1"), F.col("lat1"),
-                          F.col("lon2"), F.col("lat2")).alias("b2")
-    ).toPandas()
-    assert np.allclose(back["d"], back["d2"], rtol=1e-9)
-    db = np.abs((back["brg"] - back["b2"] + 180) % 360 - 180)
-    assert (db < 1e-6).all()
-
-
-def test_great_circle_destination_roundtrip(spark):
-    from gis_tools_spark.functions.geodesy import (
-        great_circle_destination, great_circle_meters,
-        initial_bearing_deg)
-
-    rng = np.random.RandomState(11)
-    pdf = pd.DataFrame({
-        "lon1": rng.uniform(-170, 170, 150),
-        "lat1": rng.uniform(-70, 70, 150),
-        "brg": rng.uniform(0, 360, 150),
-        "d": rng.uniform(1e3, 5e6, 150),
-    })
-    df = spark.createDataFrame(pdf)
-    dlon, dlat = great_circle_destination(F.col("lon1"), F.col("lat1"),
-                                          F.col("brg"), F.col("d"))
-    dest = df.select("*", dlon.alias("lon2"), dlat.alias("lat2"))
-    back = dest.select(
-        "brg", "d",
-        great_circle_meters(F.col("lon1"), F.col("lat1"),
-                            F.col("lon2"), F.col("lat2")).alias("d2"),
-        initial_bearing_deg(F.col("lon1"), F.col("lat1"),
-                            F.col("lon2"), F.col("lat2")).alias("b2"),
-        F.col("lat2")).toPandas()
-    assert np.allclose(back["d"], back["d2"], rtol=1e-9)
-    db = np.abs((back["brg"] - back["b2"] + 180) % 360 - 180)
-    assert (db < 1e-6).all()
-    assert (np.abs(back["lat2"]) <= 90).all()
-
-
-def test_great_circle_destination_closed_forms(spark):
-    from gis_tools_spark.functions.geodesy import great_circle_destination
-
-    R = 6_371_000.0
-    quarter = np.pi / 2 * R
-    df = spark.createDataFrame(pd.DataFrame({
-        "lon1": [0.0, 0.0, 10.0],
-        "lat1": [0.0, 0.0, 0.0],
-        "brg": [0.0, 90.0, 90.0],
-        "d": [quarter, quarter, 2 * np.pi * R],   # pole; quarter eq; lap
-    }))
-    dlon, dlat = great_circle_destination(F.col("lon1"), F.col("lat1"),
-                                          F.col("brg"), F.col("d"))
-    out = df.select(dlon.alias("lon2"), dlat.alias("lat2")).collect()
-    assert abs(out[0]["lat2"] - 90.0) < 1e-6          # north pole
-    assert abs(out[1]["lon2"] - 90.0) < 1e-9
-    assert abs(out[1]["lat2"]) < 1e-9
-    assert abs(out[2]["lon2"] - 10.0) < 1e-6          # full lap home

@@ -1,89 +1,9 @@
-"""Round-2 gap-fill operators: honeycomb hex tiling, Vincenty geodesic,
-remote edges/nodes, split_at_ending_edges, centroid-boundary distance,
-pixel surface/overlap."""
+"""Round-2 gap-fill operators: centroid-boundary distance."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
-from gis_tools_spark.geom import kernels as K, wkb
-
-
-# ---------------------------------------------------------------- honeycomb
-
-def test_honeycomb_area_preservation_and_hex_shape(spark):
-    from gis_tools_spark.operators.split import honeycomb
-
-    df = spark.createDataFrame(
-        [(1, bytearray(wkb.box(0, 0, 3, 3)))], "gid int, geometry_wkb binary")
-    out = honeycomb(df, hex_area=0.5).toPandas()
-    # pieces tile the polygon exactly
-    assert out["piece_area"].sum() == pytest.approx(9.0, rel=1e-9)
-    # a hexagon fully inside the box keeps the full hex area
-    full = out[np.isclose(out["piece_area"], 0.5, rtol=1e-9)]
-    assert len(full) > 0
-    # interior piece is a hexagon (6 distinct vertices)
-    g = wkb.decode(bytes(full["piece_wkb"].iloc[0]))
-    ring = K.ring_list(g)[0]
-    assert len(ring) - 1 == 6
-
-
-# ---------------------------------------------------------------- geodesic
-
-def test_geodesic_meters_known_values(spark):
-    from gis_tools_spark.functions.geodesy import geodesic_meters
-
-    df = spark.createDataFrame(
-        [(0.0, 0.0, 0.0, 1.0),    # 1 deg meridian arc from equator
-         (0.0, 0.0, 1.0, 0.0),    # 1 deg along equator
-         (2.3522, 48.8566, 2.3522, 48.8566)],  # same point
-        "lon1 double, lat1 double, lon2 double, lat2 double")
-    from pyspark.sql import functions as F
-    got = [r["d"] for r in df.withColumn(
-        "d", geodesic_meters()(F.col("lon1"), F.col("lat1"),
-                               F.col("lon2"), F.col("lat2"))).collect()]
-    assert got[0] == pytest.approx(110574.4, abs=1.0)   # WGS84 meridian degree
-    assert got[1] == pytest.approx(111319.5, abs=1.0)   # WGS84 equator degree
-    assert got[2] == 0.0
-
-
-# ---------------------------------------------------------------- network extras
-
-def test_remote_edges_and_nodes(spark):
-    from gis_tools_spark.operators.network import remote_edges, remote_nodes
-
-    edges = spark.createDataFrame(
-        [(1, "a", "b"), (2, "b", "c"),      # chain: not remote
-         (3, "x", "y"),                      # isolated pair: remote
-         (4, "z", "z")],                     # self loop: not remote
-        "eid int, src_key string, dst_key string")
-    got = {r["eid"] for r in remote_edges(edges).collect()}
-    assert got == {3}
-    nodes = spark.createDataFrame(
-        [("a",), ("x",), ("lonely",)], "node string")
-    iso = {r["node"] for r in remote_nodes(nodes, edges).collect()}
-    assert iso == {"lonely"}
-
-
-def test_split_at_ending_edges(spark):
-    from gis_tools_spark.operators.network import split_at_ending_edges
-
-    # line 1 spans x 0..4; line 2 ends ON line 1 at (2, 0)
-    lines = spark.createDataFrame(
-        [(1, bytearray(wkb.linestring([(0, 0), (4, 0)]))),
-         (2, bytearray(wkb.linestring([(2, 2), (2, 0)])))],
-        "lid int, geometry_wkb binary")
-    out = split_at_ending_edges(lines).toPandas()
-    l1 = out[out["lid"] == 1]
-    assert len(l1) == 2  # split at the T junction
-
-    def _len(b):
-        g = wkb.decode(bytes(b))
-        d = np.diff(g["coords"][:, :2], axis=0)
-        return float(np.sqrt((d * d).sum(axis=1)).sum())
-
-    lens = sorted(round(_len(b), 6) for b in l1["piece_wkb"])
-    assert lens == [2.0, 2.0]
+from gis_tools_spark.geom import wkb
 
 
 # ---------------------------------------------------------------- centroid-boundary
@@ -98,21 +18,3 @@ def test_centroid_boundary_distance(spark):
     assert r["cb_min_dist"] == pytest.approx(1.0, abs=1e-9)
     assert r["cb_max_dist"] == pytest.approx(np.sqrt(5.0), abs=1e-9)
 
-
-# ---------------------------------------------------------------- pixel surface
-
-def test_pixel_overlap_area_planar_and_latlon():
-    from gis_tools_spark.raster.zonal import compute_surface, pixel_overlap_area
-
-    # planar: half-overlapping unit pixels
-    o = pixel_overlap_area(np.array([[0.0, 0.0]]), np.array([[0.5, 0.0]]),
-                           1.0, 1.0, "equal")
-    assert o[0] == pytest.approx(0.5)
-    assert pixel_overlap_area(np.array([[0.0, 0.0]]), np.array([[9.0, 0.0]]),
-                              1.0, 1.0, "equal")[0] == 0.0
-    # latlon: 1-deg pixel at the equator ≈ 12308 km² (local-sphere WGS84)
-    a = compute_surface([0.0], [1.0], [1.0], [0.0])
-    assert a[0] == pytest.approx(12308.46, rel=1e-4)
-    # poleward pixels shrink
-    b = compute_surface([0.0], [1.0], [61.0], [60.0])
-    assert b[0] < a[0] * 0.6

@@ -5,15 +5,12 @@
    `remaining` without routing them to the broadcast fallback).
 2. knn._nearest_rings raised IndexError on empty winner sets
    (empty points input).
-3. split_lines_at_underlying_points decoded only part 0 of a
-   MultiLineString, silently dropping the other parts.
 """
 
 import numpy as np
 
 from gis_tools_spark.geom import wkb
 from gis_tools_spark.operators.knn import nearest_feature
-from gis_tools_spark.operators.split import split_lines_at_underlying_points
 
 
 def _tiny_square(cx, cy, half=0.01):
@@ -47,27 +44,3 @@ def test_rings_empty_points_input(spark):
     out = nearest_feature(pts, feats, strategy="rings")
     assert out.count() == 0
     assert "nearest_gid" in out.columns and "nearest_dist" in out.columns
-
-
-def test_split_underlying_points_multilinestring(spark):
-    """All parts of a MultiLineString must be emitted; indices are
-    part-local (same interpretation as cut_lines_recursive_midpoint)."""
-    part_a = [(0.0, 0.0), (1.0, 0.0), (2.0, 0.0), (3.0, 0.0)]
-    part_b = [(0.0, 5.0), (1.0, 5.0), (2.0, 5.0)]
-    mls = wkb.multilinestring([part_a, part_b])
-    lines = spark.createDataFrame([(1, mls)], ["lid", "geometry_wkb"])
-    # index 1 is interior for both parts -> part A splits into 2, part B into 2
-    locs = spark.createDataFrame([(1, 1)], ["lid", "vertex_index"])
-    rows = split_lines_at_underlying_points(lines, locs).collect()
-    assert len(rows) == 4
-    pieces = [wkb.decode(r["piece_wkb"])["coords"] for r in
-              sorted(rows, key=lambda r: r["part_index"])]
-    np.testing.assert_allclose(pieces[0], [(0, 0), (1, 0)])
-    np.testing.assert_allclose(pieces[1], [(1, 0), (2, 0), (3, 0)])
-    np.testing.assert_allclose(pieces[2], [(0, 5), (1, 5)])
-    np.testing.assert_allclose(pieces[3], [(1, 5), (2, 5)])
-
-    # no breaks: every part still emitted, one piece per part
-    rows2 = split_lines_at_underlying_points(
-        lines, locs.where("lid < 0")).collect()
-    assert len(rows2) == 2

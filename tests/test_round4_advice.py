@@ -47,61 +47,6 @@ def test_rhumb_antimeridian_short_arc(spark):
     assert abs(r["b"] - 270.0) < 1e-9
 
 
-def test_rhumb_destination_crosses_dateline(spark):
-    """Sailing due east across the antimeridian lands on a normalized
-    longitude in (−180, 180]."""
-    from gis_tools_spark.functions.geodesy import rhumb_destination
-
-    df = _one(spark, lon1=179.5, lat1=0.0, brg=90.0,
-              d=R * np.radians(1.0))
-    lon2, lat2 = rhumb_destination(F.col("lon1"), F.col("lat1"),
-                                   F.col("brg"), F.col("d"))
-    r = df.select(lon2.alias("lon2"), lat2.alias("lat2")).head()
-    assert abs(r["lon2"] - (-179.5)) < 1e-9
-    assert abs(r["lat2"]) < 1e-12
-    assert -180.0 < r["lon2"] <= 180.0
-
-
-def test_rhumb_roundtrip_near_dateline(spark):
-    """distance+bearing → destination round-trips a dateline pair."""
-    from gis_tools_spark.functions.geodesy import (rhumb_bearing_deg,
-                                                   rhumb_destination,
-                                                   rhumb_distance_meters)
-
-    df = _one(spark, lon1=178.7, lat1=-12.0, lon2=-177.2, lat2=-11.4)
-    d = rhumb_distance_meters(F.col("lon1"), F.col("lat1"),
-                              F.col("lon2"), F.col("lat2"))
-    b = rhumb_bearing_deg(F.col("lon1"), F.col("lat1"),
-                          F.col("lon2"), F.col("lat2"))
-    lon2, lat2 = rhumb_destination(F.col("lon1"), F.col("lat1"), b, d)
-    r = df.select(lon2.alias("lon"), lat2.alias("lat")).head()
-    assert abs(r["lon"] - (-177.2)) < 1e-7
-    assert abs(r["lat"] - (-11.4)) < 1e-9
-
-
-def test_kriging_string_query_id(spark):
-    """String query keys flow through to the output (the qid dtype is
-    the caller's, not a hard-coded LongType)."""
-    from gis_tools_spark.operators.kriging import ordinary_kriging
-
-    rng = np.random.default_rng(11)
-    xs, ys = rng.uniform(0, 5, 30), rng.uniform(0, 5, 30)
-    vs = np.round(rng.uniform(10, 20, 30), 3)
-    samples = spark.createDataFrame(
-        [(float(x), float(y), float(v)) for x, y, v in zip(xs, ys, vs)],
-        "lon double, lat double, value double")
-    queries = spark.createDataFrame(
-        [("q-a", 2.0, 2.0), ("q-b", 3.0, 3.0)],
-        "qid string, lon double, lat double")
-    out = ordinary_kriging(samples, queries, value_col="value",
-                           query_id="qid", k=8, radius=2.0,
-                           model="spherical", nugget=0.01, sill=0.8,
-                           vrange=3.0)
-    assert out.schema["qid"].dataType.simpleString() == "string"
-    got = {r["qid"] for r in out.collect()}
-    assert got == {"q-a", "q-b"}
-
-
 def test_kmeans_negative_coords_raise(spark):
     from gis_tools_spark.operators.kmeans import kmeans
 

@@ -2,13 +2,16 @@
 cell-index path must be value-identical to the shuffle cell path, across
 predicates, null rows, oversize geometries, and how='left'."""
 
+import logging
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from gis_tools_spark import fixtures
 from gis_tools_spark.geom import wkb
-from gis_tools_spark.operators.sjoin import sjoin
+from gis_tools_spark.operators.overlay import intersection_join
+from gis_tools_spark.operators.sjoin import candidate_pairs, sjoin
 
 
 def _layers(spark, n=120, seed=3):
@@ -93,10 +96,46 @@ def test_broadcast_plan_no_shuffle_join(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_auto_gates_on_bytes(spark):
+def test_auto_gates_on_bytes(spark, caplog):
     """auto picks broadcast for a small right side and cell when the
-    byte gate trips."""
+    byte gate trips, and logs which it chose and why."""
+    caplog.set_level(logging.DEBUG, logger="gis_tools_spark")
     left, right = _layers(spark, n=30)
     small = sjoin(left, right)  # auto -> broadcast at this size
     gated = sjoin(left, right, broadcast_max_bytes=10)  # force cell
     assert _pairs(small) == _pairs(gated)
+    msgs = [r.getMessage() for r in caplog.records]
+    assert "sjoin strategy=broadcast reason=right within broadcast limits" \
+        in msgs, msgs
+    assert "sjoin strategy=cell reason=right over broadcast limits" \
+        in msgs, msgs
+
+
+def test_bbox_candidates_gate_both_sides(spark, caplog, monkeypatch):
+    """The overlay joins' broadcast bbox path is a nested loop over
+    |left| x |right|: a large left side must take the cell join even
+    when the right side is small, and both paths give the same clips."""
+    caplog.set_level(logging.DEBUG, logger="gis_tools_spark")
+    left, _ = _layers(spark, n=40)
+    right = spark.createDataFrame(
+        fixtures.gen_zones(4, seed=9)[["gid", "geometry_wkb"]])
+
+    def run(max_rows):
+        monkeypatch.setitem(candidate_pairs.__kwdefaults__,
+                            "broadcast_max_rows", max_rows)
+        caplog.clear()
+        out = intersection_join(left, right)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        rows = sorted((r["lid"], r["gid"], round(r["inter_area"], 9))
+                      for r in out.collect())
+        return plan, rows, [r.getMessage() for r in caplog.records]
+
+    plan, cell_rows, msgs = run(10)  # right (4) under, left (40) over
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "candidate_pairs path=cell reason=left over broadcast limits" \
+        in msgs, msgs
+    plan, bbox_rows, msgs = run(100)  # both under
+    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert ("candidate_pairs path=bbox reason=both sides within broadcast "
+            "limits") in msgs, msgs
+    assert cell_rows == bbox_rows and len(cell_rows) > 0

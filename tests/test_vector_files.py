@@ -85,23 +85,9 @@ def test_shapefile_point_line_null_roundtrip():
     assert wkb.decode(back[1])["type"] == "MultiLineString"
 
 
-def test_dbf_roundtrip_and_types():
-    names, rows = VF.parse_dbf(VF.write_dbf(
-        ["gid", "nom", "surf"], [[1, "nord", 12.5], [2, "sud", None]]))
-    assert names == ["gid", "nom", "surf"]
-    assert rows[0] == ["1", "nord", "12.5"]
-    assert rows[1][2] is None
-    with pytest.raises(ValueError):
-        VF.parse_dbf(b"short")
-    with pytest.raises(ValueError):
-        VF.parse_shp(b"not a shapefile at all" + b"\0" * 100)
-
-
 def test_geojson_features_spark_roundtrip_feeds_sjoin(spark):
     """zones → to_geojson → geojson_features → the unchanged PIP join:
     zone counts identical to joining the original WKB layer."""
-    import pandas as pd
-
     from gis_tools_spark.operators.sjoin import pip_join
 
     zones_pdf = fixtures.gen_zones(8)
@@ -128,25 +114,3 @@ def test_geojson_features_spark_roundtrip_feeds_sjoin(spark):
     via_m = {str(r["gid"]).split("/")[0]: int(r["count"])
              for _, r in via.iterrows()}
     assert sum(base_m.values()) == sum(via_m.values()) > 0
-
-
-def test_shapefile_layer_spark(spark):
-    import pandas as pd
-
-    zones_pdf = fixtures.gen_zones(10)
-    wkbs = [z["geometry_wkb"] for _, z in zones_pdf.iterrows()]
-    shp = VF.write_shp(wkbs)
-    dbf = VF.write_dbf(["gid", "nom"],
-                       [[int(z["gid"]), z["nom"]]
-                        for _, z in zones_pdf.iterrows()])
-    df = spark.createDataFrame(pd.DataFrame({
-        "layer_id": ["zones", "broken"],
-        "shp": [shp, b"garbage"],
-        "dbf": [dbf, None]}))
-    out = VF.shapefile_layer(df).toPandas()
-    good = out[out["layer_id"] == "zones"]
-    assert good["ok"].all() and len(good) == len(zones_pdf)
-    assert {json.loads(p)["gid"] for p in good["properties"]} == \
-        {str(int(z["gid"])) for _, z in zones_pdf.iterrows()}
-    bad = out[out["layer_id"] == "broken"]
-    assert len(bad) == 1 and not bad["ok"].iloc[0]
