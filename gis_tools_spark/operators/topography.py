@@ -185,3 +185,28 @@ def decode_pixels(dem_tiles: DataFrame, *,
                 yield pd.concat(recs, ignore_index=True)
 
     return t.mapInPandas(_px, schema="gix long, giy long, z double")
+
+
+def dozier_horizon_1d(elev: np.ndarray, spacing: float) -> np.ndarray:
+    """Dozier & Frew 1-D forward-horizon stack algorithm (reference
+    topography.py:74-108, numba kernel): for each point, the max
+    elevation angle looking forward along the profile."""
+    n = len(elev)
+    out = np.zeros(n)
+    stack = [n - 1]
+    for i in range(n - 2, -1, -1):
+        while stack:
+            j = stack[-1]
+            ang_j = (elev[j] - elev[i]) / ((j - i) * spacing)
+            if len(stack) >= 2:
+                k = stack[-2]
+                ang_k = (elev[k] - elev[i]) / ((k - i) * spacing)
+                if ang_k >= ang_j:
+                    stack.pop()
+                    continue
+            break
+        j = stack[-1]
+        ang = (elev[j] - elev[i]) / ((j - i) * spacing)
+        out[i] = max(0.0, np.degrees(np.arctan(ang)))
+        stack.append(i)
+    return out

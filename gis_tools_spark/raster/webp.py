@@ -361,6 +361,13 @@ def encode(arr: np.ndarray, lossy: bool = False,
 
 # ------------------------------------------------------------------ decode
 
+def _lz77_value(code: int, br: _BitReader) -> int:
+    if code < 4:
+        return code + 1
+    extra = (code - 2) >> 1
+    offset = (2 + (code & 1)) << extra
+    return offset + br.read(extra) + 1
+
 
 def decode(buf: bytes) -> np.ndarray:
     """WebP bytes → (h,w,3) uint8 RGB.
@@ -369,7 +376,7 @@ def decode(buf: bytes) -> np.ndarray:
     groups, short distances). Lossy VP8: full from-scratch keyframe
     decode (raster/vp8.py, bit-exact with libwebp). VP8X extended
     containers decode purely; a lossy ALPH alpha plane does not
-    affect RGB and is ignored."""
+    affect RGB and is ignored (decode_alpha_vp8l exposes the plane)."""
     buf = bytes(buf)
     if buf[:4] != b"RIFF" or buf[8:12] != b"WEBP":
         raise ValueError("not a WebP file")
@@ -447,6 +454,15 @@ def _decode_vp8l(payload: bytes) -> np.ndarray:
     g = ((a >> 8) & 0xFF).astype(np.uint8)
     b = (a & 0xFF).astype(np.uint8)
     return np.stack([r, g, b], axis=2)
+
+
+def decode_alpha_vp8l(data: bytes, w: int, h: int) -> np.ndarray:
+    """Headerless VP8L stream of an ALPH chunk (compression method 1):
+    the alpha plane coded as the green channel of a w×h image."""
+    br = _BitReader(data)
+    argb = _decode_transformed(br, w, h)
+    return ((np.array(argb, dtype=np.uint32) >> 8) & 0xFF) \
+        .astype(np.uint8).reshape(h, w)
 
 
 def _decode_transformed(br: _BitReader, w: int, h: int) -> list:

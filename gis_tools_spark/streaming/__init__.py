@@ -13,3 +13,4 @@ directory are tiled and joined incrementally.
 
 from .ingest import incremental_ingest  # noqa: F401
 from .sink import exactly_once_sink  # noqa: F401
+from .windowed import running_zone_totals, windowed_zone_counts  # noqa: F401

@@ -1,11 +1,17 @@
-"""Stateful streaming over the geo-image stream (SURVEY.md §2.16;
-reference has no streaming engine — this is the Spark-native
-extension the build brief asks for).
+"""Event-time streaming aggregations over the geo-image stream
+(SURVEY.md §2.16; reference has no streaming engine — this is the
+Spark-native extension the build brief asks for).
 
-- geofence_transitions: applyInPandasWithState operator that carries
-  each device's last zone across micro-batches and emits its zone
-  changes. It tags zones with the batch PIP kernel, so stream and batch
-  semantics are identical by construction.
+- windowed_zone_counts: watermark + tumbling event-time window per
+  zone. Late rows beyond the watermark are dropped by Spark's state
+  eviction — the standard late-data contract.
+- running_zone_totals: applyInPandasWithState custom stateful operator
+  keeping a per-zone cumulative count across micro-batches (the
+  smallest honest exemplar of the stateful-op plumbing: state schema,
+  timeout handling, batch iteration).
+
+Both reuse the batch PIP join kernel via the broadcast strategy, so
+stream and batch semantics are identical by construction.
 """
 
 from __future__ import annotations
@@ -13,6 +19,87 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..operators.sjoin import pip_join
+
+
+def windowed_zone_counts(stream: DataFrame, zones: DataFrame, *,
+                         ts_col: str = "ts", window: str = "10 minutes",
+                         watermark: str = "20 minutes",
+                         lon: str = "lon", lat: str = "lat") -> DataFrame:
+    """points-stream ⋈ zones → (window, gid, n) with late-data eviction.
+
+    The watermark bounds state: windows older than (max event time −
+    watermark) finalize and stop accepting rows, so state size is
+    O(zones × active windows) regardless of stream length — the 100 TB
+    /day ingest shape. Join strategy is broadcast (static small zone
+    side), which Structured Streaming allows against a stream without
+    state on the join itself.
+    """
+    # watermarks require TIMESTAMP (with zone); parquet sources often
+    # carry TIMESTAMP_NTZ — normalize before declaring event time
+    pts = (stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+           .withWatermark(ts_col, watermark))
+    joined = pip_join(pts, zones, strategy="broadcast", lon=lon, lat=lat)
+    return (joined.groupBy(F.window(F.col(ts_col), window).alias("win"),
+                           "gid")
+            .agg(F.count("*").alias("n"))
+            .select(F.col("win.start").alias("win_start"),
+                    F.col("win.end").alias("win_end"), "gid", "n"))
+
+
+def sessionized_zone_counts(stream: DataFrame, zones: DataFrame, *,
+                            ts_col: str = "ts", gap: str = "30 minutes",
+                            watermark: str = "1 hour",
+                            lon: str = "lon", lat: str = "lat") -> DataFrame:
+    """Streaming gap-session aggregation per zone (the streaming analog
+    of operators/sessions.sessionize): F.session_window merges rows of a
+    zone whose event times are within `gap`; the watermark closes and
+    emits sessions once no in-gap row can still arrive. State is
+    O(zones × open sessions) — bounded by the watermark horizon.
+    """
+    pts = (stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+           .withWatermark(ts_col, watermark))
+    joined = pip_join(pts, zones, strategy="broadcast", lon=lon, lat=lat)
+    return (joined.groupBy(F.session_window(F.col(ts_col), gap).alias("sess"),
+                           "gid")
+            .agg(F.count("*").alias("n"))
+            .select(F.col("sess.start").alias("sess_start"),
+                    F.col("sess.end").alias("sess_end"), "gid", "n"))
+
+
+_STATE_SCHEMA = T.StructType([T.StructField("total", T.LongType())])
+_OUT_SCHEMA = T.StructType([
+    T.StructField("gid", T.LongType()),
+    T.StructField("total", T.LongType()),
+])
+
+
+def running_zone_totals(stream: DataFrame, zones: DataFrame, *,
+                        lon: str = "lon", lat: str = "lat") -> DataFrame:
+    """Custom stateful operator: cumulative per-zone hit count across
+    micro-batches via applyInPandasWithState (GroupState keeps one
+    64-bit counter per zone; no timeout — zones are a small static
+    dimension, so state is bounded by the zone count)."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    joined = pip_join(stream, zones, strategy="broadcast", lon=lon, lat=lat)
+
+    def _update(key, pdfs, state: GroupState):
+        n = 0
+        for pdf in pdfs:
+            n += len(pdf)
+        total = (state.get[0] if state.exists else 0) + n
+        state.update((total,))
+        yield pd.DataFrame({"gid": [key[0]], "total": [total]})
+
+    return (joined.select("gid", lon, lat)
+            .groupBy("gid")
+            .applyInPandasWithState(_update, outputStructType=_OUT_SCHEMA,
+                                    stateStructType=_STATE_SCHEMA,
+                                    outputMode="update",
+                                    timeoutConf=GroupStateTimeout.NoTimeout))
 
 
 def geofence_transitions(stream: DataFrame, zones: DataFrame, *,

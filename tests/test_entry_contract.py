@@ -107,6 +107,23 @@ _UNREACHED_OK = {
         "test hook: the decoder's DCT coefficients, compared with libjpeg's",
     ("raster.webp", "is_lossy"):
         "test helper: tells the lossy and lossless WebP fixtures apart",
+    ("raster.webp", "_lz77_value"):
+        "reference: the spec's LZ77 prefix-code value mapping, which "
+        "_decode_entropy_image inlines in its hot loop",
+    ("raster.webp", "decode_alpha_vp8l"):
+        "image ingest: the ALPH alpha plane that decode drops from VP8X "
+        "images",
+    ("operators.imgmeta", "geotag_images"):
+        "image ingest: the write half of the EXIF contract that "
+        "raster/exif.image_exif reads",
+    ("operators.topography", "dozier_horizon_1d"):
+        "reference: the 1-D Dozier-Frew horizon sweep that get_horizon "
+        "generalizes to every azimuth",
+    # _STATE_SCHEMA and _OUT_SCHEMA are reached through running_zone_totals
+    **{("streaming.windowed", n): "ingest path: event-time zone counts over "
+       "the point stream, beside geofence_transitions" for n in (
+        "windowed_zone_counts", "sessionized_zone_counts",
+        "running_zone_totals")},
     ("raster.kernels", "verify_images_udf"):
         "test oracle: the pandas-UDF verify that verify_images_arrow must "
         "match",

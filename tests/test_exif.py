@@ -1,11 +1,13 @@
 """Exact-microdegree EXIF geotag writer (raster/exif.py
-build_exif_udeg/geotag).
+build_exif_udeg/geotag) + the geotag_images egress operator.
 
 The generic reader/writer (parse_exif/build_exif/image_exif) is
 covered by test_warc_html; these tests pin the EXACT
-round-trip contract of the µdeg writer."""
+round-trip contract of the µdeg writer and the Spark stamp→extract
+loop."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from gis_tools_spark.raster import exif as X
@@ -75,3 +77,45 @@ def test_altitude_exact(alt_mm, want):
     p = X.parse_exif(X.geotag(_jpeg(10), lat_udeg=1, lon_udeg=1,
                               alt_mm=alt_mm))
     assert abs(p["alt"] - want) < 1e-9
+
+
+def test_spark_geotag_images_roundtrip(spark):
+    from gis_tools_spark.operators.imgmeta import geotag_images
+    from gis_tools_spark.raster.exif import image_exif
+
+    base = _jpeg(9)
+    pdf = pd.DataFrame({
+        "image_id": [f"i{k}" for k in range(20)],
+        "bytes": [base if k % 4 else b"RAWW" for k in range(20)],
+        "lat_udeg": [k * 1_000_003 - 10_000_000 for k in range(20)],
+        "lon_udeg": [k * 2_000_003 - 20_000_000 for k in range(20)],
+        "ori": [1 + k % 8 for k in range(20)],
+    })
+    df = spark.createDataFrame(pdf)
+    stamped = geotag_images(df, orientation="ori")
+    assert stamped.columns == df.columns
+    out = image_exif(stamped).toPandas().set_index("image_id")
+    for _, row in pdf.iterrows():
+        r = out.loc[row["image_id"]]
+        if row["bytes"][:2] == b"\xff\xd8":
+            assert int(np.floor(r["lat"] * 1e6 + 0.5)) == row["lat_udeg"]
+            assert int(np.floor(r["lon"] * 1e6 + 0.5)) == row["lon_udeg"]
+            assert r["orientation"] == row["ori"]
+        else:
+            assert not r["has_gps"]
+
+
+def test_spark_geotag_null_coords_passthrough(spark):
+    from gis_tools_spark.operators.imgmeta import geotag_images
+
+    base = _jpeg(11)
+    pdf = pd.DataFrame({
+        "image_id": ["a", "b"],
+        "bytes": [base, base],
+        "lat_udeg": pd.array([1_000_000, None], dtype="Int64"),
+        "lon_udeg": pd.array([2_000_000, None], dtype="Int64"),
+    })
+    df = spark.createDataFrame(pdf)
+    out = geotag_images(df).toPandas().set_index("image_id")
+    assert bytes(out.loc["b", "bytes"]) == base          # untouched
+    assert bytes(out.loc["a", "bytes"]) != base          # stamped

@@ -44,6 +44,78 @@ def _pts_inside(zones_pd, gid, n, ts):
         "ts": pd.to_datetime(ts).astype("datetime64[us]")})
 
 
+def test_windowed_zone_counts_watermark_drops_late(spark, tmp_path):
+    from gis_tools_spark.streaming.windowed import windowed_zone_counts
+
+    zones, zones_pd = _zone_df(spark)
+    src = tmp_path / "stream_in"
+    src.mkdir()
+    # batch file 1: 3 rows in zone A at 10:00-10:05, max event time 12:00
+    # (the 12:00 row pushes the watermark to 11:50 with a 10 min delay,
+    # finalizing the 10:00 window)
+    b1 = pd.concat([
+        _pts_inside(zones_pd, zones_pd.gid.iloc[0], 3,
+                    ["2026-01-01 10:01", "2026-01-01 10:02", "2026-01-01 10:04"]),
+        _pts_inside(zones_pd, zones_pd.gid.iloc[0], 1, ["2026-01-01 12:00"]),
+    ])
+    b1.to_parquet(src / "b1.parquet", index=False)
+    schema = spark.read.parquet(str(src / "b1.parquet")).schema
+
+    sink = str(tmp_path / "sink")
+
+    def _run_once():
+        stream = spark.readStream.schema(schema).parquet(str(src))
+        out = windowed_zone_counts(stream, zones, window="10 minutes",
+                                   watermark="10 minutes")
+        q = (out.writeStream.format("parquet")
+             .outputMode("append")
+             .option("path", sink)
+             .option("checkpointLocation", str(tmp_path / "ck"))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+
+    # pass 1: watermark advances to 11:50 and persists in the checkpoint
+    _run_once()
+    # pass 2: a LATE row for the finalized 10:00 window -> dropped by the
+    # restored watermark
+    b2 = _pts_inside(zones_pd, zones_pd.gid.iloc[0], 1, ["2026-01-01 10:03"])
+    b2.to_parquet(src / "b2.parquet", index=False)
+    _run_once()
+    res = {(r["win_start"].strftime("%H:%M"), r["gid"]): r["n"]
+           for r in spark.read.parquet(sink).collect()}
+    # the finalized 10:00 window holds ONLY the 3 on-time rows — the
+    # late 10:03 arrival in batch 2 was evicted by the watermark
+    key = ("10:00", int(zones_pd.gid.iloc[0]))
+    assert res.get(key) == 3, res
+
+
+def test_running_zone_totals_state_across_batches(spark, tmp_path):
+    from gis_tools_spark.streaming.windowed import running_zone_totals
+
+    zones, zones_pd = _zone_df(spark)
+    gid = int(zones_pd.gid.iloc[1])
+    src = tmp_path / "state_in"
+    src.mkdir()
+    _pts_inside(zones_pd, gid, 2, ["2026-01-01 09:00"] * 2) \
+        .to_parquet(src / "b1.parquet", index=False)
+    _pts_inside(zones_pd, gid, 3, ["2026-01-01 09:30"] * 3) \
+        .to_parquet(src / "b2.parquet", index=False)
+
+    schema = spark.read.parquet(str(src / "b1.parquet")).schema
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).parquet(str(src)))
+    out = running_zone_totals(stream, zones)
+    q = (out.writeStream.format("memory").queryName("rzt")
+         .outputMode("update")
+         .option("checkpointLocation", str(tmp_path / "ck2"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    rows = spark.sql("select * from rzt").collect()
+    totals = sorted(r["total"] for r in rows if r["gid"] == gid)
+    # two micro-batches: running total 2 then 5 — state survived
+    assert totals == [2, 5], rows
+
+
 def test_incremental_ingest_exactly_once(spark, tmp_path):
     from gis_tools_spark.streaming.ingest import incremental_ingest
 
@@ -70,6 +142,44 @@ def test_incremental_ingest_exactly_once(spark, tmp_path):
     q2.awaitTermination(120)
     n2 = spark.read.parquet(f"{out_dir}/zone_hits").count()
     assert n1 == n2 == 5
+
+
+def test_sessionized_zone_counts_gap_sessions(spark, tmp_path):
+    """Streaming session windows: rows within the gap merge into one
+    session; in append mode only sessions CLOSED by the watermark are
+    emitted (the 12:00 row advances the watermark past the first
+    session's end but its own session stays open)."""
+    from gis_tools_spark.streaming.windowed import sessionized_zone_counts
+
+    zones, zones_pd = _zone_df(spark)
+    src = tmp_path / "sess_in"
+    src.mkdir()
+    gid0 = int(zones_pd.gid.iloc[0])
+    b1 = pd.concat([
+        _pts_inside(zones_pd, gid0, 2,
+                    ["2026-01-01 10:00", "2026-01-01 10:10"]),
+        _pts_inside(zones_pd, gid0, 1, ["2026-01-01 12:00"]),
+    ])
+    b1.to_parquet(src / "b1.parquet", index=False)
+
+    stream = (spark.readStream.schema(
+        "event_id long, lon double, lat double, ts timestamp_ntz")
+        .option("maxFilesPerTrigger", 1).parquet(str(src)))
+    out = sessionized_zone_counts(stream, zones, gap="30 minutes",
+                                  watermark="1 hour")
+    q = (out.writeStream.format("memory").queryName("sess")
+         .outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "sess_ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = spark.sql("SELECT * FROM sess").toPandas()
+    # exactly the closed session: 10:00 → 10:40 (10:10 + 30 min), 2 rows
+    assert len(got) == 1, got
+    r = got.iloc[0]
+    assert int(r["gid"]) == gid0
+    assert r["n"] == 2
+    assert str(r["sess_start"]) == "2026-01-01 10:00:00"
+    assert str(r["sess_end"]) == "2026-01-01 10:40:00"
 
 
 def test_geofence_transitions_state_across_batches(spark, tmp_path):

@@ -5,9 +5,20 @@ import pandas as pd
 import pytest
 
 from gis_tools_spark import fixtures
-from gis_tools_spark.operators.topography import EARTH_R, get_horizon
+from gis_tools_spark.operators.topography import EARTH_R, dozier_horizon_1d, get_horizon
 from gis_tools_spark.raster import codec
 from gis_tools_spark.raster.zonal import pixel_centers
+
+
+def test_dozier_1d_matches_bruteforce():
+    rng = np.random.default_rng(3)
+    elev = rng.uniform(0, 100, 50)
+    spacing = 30.0
+    got = dozier_horizon_1d(elev, spacing)
+    for i in range(len(elev) - 1):
+        angs = [(elev[j] - elev[i]) / ((j - i) * spacing) for j in range(i + 1, len(elev))]
+        want = max(0.0, np.degrees(np.arctan(max(angs))))
+        assert got[i] == pytest.approx(want, abs=1e-9), i
 
 
 def test_get_horizon_matches_bruteforce(spark):
