@@ -314,7 +314,7 @@ def q_sjoin_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sjoin_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-4 zero-shuffle strategy of the generic sjoin
-    (operators/sjoin.py:_sjoin_broadcast): the small right layer is
+    (operators/sjoin.py:_BroadcastIndex + _geom_hits): the small right layer is
     collected once, a CSR cell→geometry index is broadcast, and
     filter+refine run in ONE scalar-UDF pass over the left side — no
     Exchange at all. Distinct rect layers (deltas 0.04/0.06, mods

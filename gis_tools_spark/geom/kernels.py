@@ -15,8 +15,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from . import wkb
-
 EPS = 1e-12
 
 

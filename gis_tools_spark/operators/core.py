@@ -22,7 +22,7 @@ Scale design notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import logging
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
 import pandas as pd

@@ -23,13 +23,17 @@ a broadcast all-pairs pass.
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .. import cells as C
 from ..geom import kernels as K, wkb
-from .core import small_side
+from .sjoin import _BroadcastIndex, _strategy
+
+_log = logging.getLogger("gis_tools_spark")
 
 
 def nearest_feature(points: DataFrame, features: DataFrame, *,
@@ -37,12 +41,14 @@ def nearest_feature(points: DataFrame, features: DataFrame, *,
                     point_id: str = "pid",
                     feat_wkb: str = "geometry_wkb", feat_id: str = "gid",
                     res: int = C.RES_MIN,
-                    broadcast_max_rows: int = 200_000,
                     strategy: str = "auto") -> DataFrame:
-    """Returns one row per point: point cols + (feat_id, nearest_dist)."""
-    if strategy == "auto":
-        strategy = ("broadcast" if small_side(
-            features, max_rows=broadcast_max_rows) else "rings")
+    """Returns one row per point: point cols + (feat_id, nearest_dist).
+    ``auto`` takes the broadcast all-pairs pass when the features pass
+    the joins' shared broadcast gate (`sjoin._strategy`), else the
+    distributed ring expansion. Feature rows with a null geometry never
+    match."""
+    strategy = _strategy("nearest_feature", strategy,
+                         ("features", features, feat_wkb), big="rings")
     if strategy == "broadcast":
         return _nearest_broadcast(points, features, lon=lon, lat=lat,
                                   point_id=point_id, feat_wkb=feat_wkb,
@@ -52,41 +58,35 @@ def nearest_feature(points: DataFrame, features: DataFrame, *,
                           feat_id=feat_id, res=res)
 
 
-def _decode_features(rows, feat_wkb, feat_id):
-    feats = []
-    for r in rows:
-        g = wkb.decode(r[feat_wkb])
-        cx, cy = K.centroid(g)
-        feats.append((r[feat_id], g, cx, cy, K.bounds(g)))
-    return feats
-
-
 def _nearest_broadcast(points, features, *, lon, lat, point_id, feat_wkb, feat_id):
-    """All-pairs vectorized pass with the features broadcast (no shuffle)."""
-    rows = features.select(feat_id, feat_wkb).collect()
-    sc = points.sparkSession.sparkContext
-    bc = sc.broadcast(_decode_features(rows, feat_wkb, feat_id))
+    """All-pairs vectorized pass with the features broadcast (no shuffle).
 
+    The UDF emits, per point, the winner's position in the collected
+    features and its distance (only lon/lat cross Arrow); the winner's
+    id is looked up JVM-side in the collected ids, with no join."""
     from pyspark.sql import types as T
-    id_field = features.schema[feat_id]
-    # 1:1 per point → struct scalar UDF over (lon, lat) only; point
-    # attribute columns stay JVM-side (pruning holds around the stage)
-    nn_t = T.StructType([T.StructField("nid", id_field.dataType),
-                         T.StructField("ndist", T.DoubleType())])
+
+    nf = "nearest_" + feat_id
+    index = _BroadcastIndex(
+        features.select(F.col(feat_id).alias(nf), feat_wkb), feat_wkb, None)
+    bc = index.bc
+    nn_t = T.StructType([T.StructField("i", T.IntegerType()),
+                         T.StructField("d", T.DoubleType())])
 
     @F.pandas_udf(nn_t)
     def _nn(lons: pd.Series, lats: pd.Series) -> pd.DataFrame:
-        feats = bc.value
-        ids = [f[0] for f in feats]
-        cents = np.array([[f[2], f[3]] for f in feats])
+        geoms = bc.value[0]
+        valid = [j for j, g in enumerate(geoms) if g is not None]
         xs = lons.to_numpy(dtype=np.float64)
         ys = lats.to_numpy(dtype=np.float64)
-        n, m = len(xs), len(feats)
+        n, m = len(xs), len(valid)
         if n == 0 or m == 0:
-            return pd.DataFrame({"nid": [None] * n, "ndist": [np.nan] * n})
+            return pd.DataFrame({"i": pd.Series([None] * n, dtype="Int32"),
+                                 "d": [np.nan] * n})
+        cents = np.array([K.centroid(geoms[j]) for j in valid])
         dist = np.empty((n, m))
-        for j, (fid, g, cx, cy, bb) in enumerate(feats):
-            dist[:, j] = K.point_to_geom_distance(g, xs, ys)
+        for k, j in enumerate(valid):
+            dist[:, k] = K.point_to_geom_distance(geoms[j], xs, ys)
         cdist = np.sqrt((xs[:, None] - cents[None, :, 0]) ** 2
                         + (ys[:, None] - cents[None, :, 1]) ** 2)
         inter = dist == 0.0
@@ -96,13 +96,13 @@ def _nearest_broadcast(points, features, *, lon, lat, point_id, feat_wkb, feat_i
         pick_d = dist.argmin(axis=1)
         pick = np.where(any_inter, pick_c, pick_d)
         best = np.where(any_inter, 0.0, dist[np.arange(n), pick_d])
-        return pd.DataFrame({"nid": [ids[int(k)] for k in pick],
-                             "ndist": best})
+        return pd.DataFrame({"i": np.asarray(valid, dtype=np.int32)[pick],
+                             "d": best})
 
     return (points.withColumn("__nn", _nn(F.col(lon), F.col(lat)))
             .select("*",
-                    F.col("__nn.nid").alias("nearest_" + feat_id),
-                    F.col("__nn.ndist").alias("nearest_dist"))
+                    F.element_at(index.ids(nf), F.col("__nn.i") + 1).alias(nf),
+                    F.col("__nn.d").alias("nearest_dist"))
             .drop("__nn"))
 
 
@@ -152,8 +152,9 @@ def _nearest_rings(points, features, *, lon, lat, point_id, feat_wkb, feat_id,
     winners = []
     deferred = []  # hit points whose confirm radius exceeded 2*max_k —
                    # routed to the broadcast fallback, never dropped
-    k, lo = 0, 0
+    k, lo, rounds = 0, 0, 0
     while k <= max_k:
+        rounds += 1
         best = _round_best(remaining, lo, k).localCheckpoint(eager=True)
         if best.limit(1).count():
             kconf = best.agg(F.max(F.ceil(F.col("nearest_dist") / F.lit(cell_w)))).collect()[0][0]
@@ -193,6 +194,8 @@ def _nearest_rings(points, features, *, lon, lat, point_id, feat_wkb, feat_id,
     fallback = list(deferred)
     if remaining is not None and remaining.limit(1).count():
         fallback.append(remaining)
+    _log.debug("nearest_feature rounds=%d deferred=%d fallback=%s",
+               rounds, len(deferred), bool(fallback))
     if fallback:
         fb = fallback[0]
         for x in fallback[1:]:

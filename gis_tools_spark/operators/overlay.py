@@ -10,16 +10,12 @@ algorithm (Greiner–Hormann) — planned, see kernels.clip_polygon_convex.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import cells as C
 from ..geom import boolean, kernels as K, wkb
-from .core import CELL_COL, explode_cover
-from .sjoin import _dedupe_names, candidate_pairs
+from .sjoin import _prepare_right, candidate_pairs
 
 
 def intersection_join(left: DataFrame, right: DataFrame, *,
@@ -37,11 +33,8 @@ def intersection_join(left: DataFrame, right: DataFrame, *,
     Greiner–Hormann kernel (geom.boolean); the Sutherland–Hodgman fast
     path is used when the clipper part is convex.
     """
-    right = _dedupe_names(left, right)
-    if right_wkb not in right.columns:
-        right_wkb = f"{right_wkb}_right"
-    if right_id not in right.columns:
-        right_id = f"{right_id}_right"
+    right, right_wkb, right_id = _prepare_right(left, right, right_wkb,
+                                                right_id)
 
     pairs = candidate_pairs(left, right, left_id=left_id, left_wkb=left_wkb,
                             right_id=right_id, right_wkb=right_wkb,
@@ -110,11 +103,8 @@ def difference_join(left: DataFrame, right: DataFrame, *,
     Output: left columns with geometry replaced by the difference part
     (+ part_index, diff_area).
     """
-    right = _dedupe_names(left, right)
-    if right_wkb not in right.columns:
-        right_wkb = f"{right_wkb}_right"
-    if right_id not in right.columns:
-        right_id = f"{right_id}_right"
+    right, right_wkb, right_id = _prepare_right(left, right, right_wkb,
+                                                right_id)
 
     pairs = candidate_pairs(left, right, left_id=left_id, left_wkb=left_wkb,
                             right_id=right_id, right_wkb=right_wkb,
@@ -327,9 +317,7 @@ def overlay(left: DataFrame, right: DataFrame, *, how: str = "union",
     if how not in ("union", "identity", "symmetric_difference"):
         raise ValueError(f"how={how!r}")
 
-    rightd = _dedupe_names(left, right)
-    r_wkb = right_wkb if right_wkb in rightd.columns else f"{right_wkb}_right"
-    r_id = right_id if right_id in rightd.columns else f"{right_id}_right"
+    rightd, r_wkb, r_id = _prepare_right(left, right, right_wkb, right_id)
     l_attrs = [c for c in left.columns if c != left_wkb]
     r_attrs = [c for c in rightd.columns if c != r_wkb]
     out_geom = "geometry_wkb"

@@ -5,16 +5,14 @@ buffer(d) ≡ ST_DWithin) and centroid-to-boundary distances.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import cells as C
 from ..geom import kernels as K, wkb
-from .core import CELL_COL, explode_cover
-from .sjoin import _dedupe_names
+from .core import CELL_COL
+from .sjoin import _prepare_right
 
 
 def dwithin_join(points: DataFrame, features: DataFrame, dist: float, *,
@@ -25,11 +23,7 @@ def dwithin_join(points: DataFrame, features: DataFrame, dist: float, *,
     the reference's nearest_neighbors (buffer-intersects) as a range
     join: bbox-expanded cover equi-join (filter) + exact distance
     (refine). Adds a `dist` column."""
-    features = _dedupe_names(points, features)
-    if feat_wkb not in features.columns:
-        feat_wkb = f"{feat_wkb}_right"
-    if feat_id not in features.columns:
-        feat_id = f"{feat_id}_right"
+    features, feat_wkb = _prepare_right(points, features, feat_wkb)
     if res is None:
         # cells must be ≥ dist so ±1-cell disk covers the radius
         res = C.RES_MIN

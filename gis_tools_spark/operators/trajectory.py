@@ -23,9 +23,10 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import cells as C
 from ..functions.geodesy import great_circle_meters
 from .sessions import sessionize
-from .sjoin import pip_join
+from .sjoin import _BroadcastIndex, _pip_hits, _strategy, pip_join, pip_tag
 
 __all__ = ["track_stats", "od_flows", "geofence_events", "staypoints",
            "frechet_pairs", "heading_stats"]
@@ -105,13 +106,8 @@ def od_flows(points: DataFrame, zones: DataFrame, *,
                  pos).alias("__o"),
         F.max_by(F.struct(F.col(lon).alias("lon"), F.col(lat).alias("lat")),
                  pos).alias("__d")))
-    if strategy == "auto":
-        from .core import small_side
-        from .sjoin import BROADCAST_MAX_BYTES, BROADCAST_MAX_ROWS
-        strategy = ("broadcast" if small_side(
-            zones, max_rows=BROADCAST_MAX_ROWS,
-            max_bytes=BROADCAST_MAX_BYTES, bytes_col="geometry_wkb")
-            else "cell")
+    strategy = _strategy("od_flows", strategy,
+                         ("zones", zones, "geometry_wkb"))
     if strategy == "broadcast":
         # round-6 (guide §2.4): tag BOTH endpoints in one broadcast-CSR
         # UDF stage and explode the hit arrays — zero joins — instead
@@ -120,12 +116,9 @@ def od_flows(points: DataFrame, zones: DataFrame, *,
         # multiplicity exactly (a session in k origin zones and m
         # destination zones contributes k·m trips, and a session with
         # no hit on either side drops), so results are identical.
-        from .. import cells as C
-        from .sjoin import _broadcast_hits_udf
-        _hits, poly_rows = _broadcast_hits_udf(
-            points.sparkSession, zones, poly_wkb="geometry_wkb",
-            predicate="covers", res=C.RES_MIN)
-        ids = F.array(*[F.lit(row[zone_id]) for row in poly_rows])
+        index = _BroadcastIndex(zones, "geometry_wkb", C.RES_MIN)
+        _hits = _pip_hits(index, "covers")
+        ids = index.ids(zone_id)
         return (ends
                 .select(F.explode(_hits(F.col("__o.lon"),
                                         F.col("__o.lat"))).alias("__io"),
@@ -177,21 +170,14 @@ def geofence_events(points: DataFrame, zones: DataFrame, *,
     output is only the transition rows, orders of magnitude smaller
     than the ping stream."""
     keys = list(key_cols)
-    if strategy == "auto":
-        from .core import small_side
-        from .sjoin import BROADCAST_MAX_BYTES, BROADCAST_MAX_ROWS
-        strategy = ("broadcast" if small_side(
-            zones, max_rows=BROADCAST_MAX_ROWS,
-            max_bytes=BROADCAST_MAX_BYTES, bytes_col="geometry_wkb")
-            else "cell")
+    strategy = _strategy("geofence_events", strategy,
+                         ("zones", zones, "geometry_wkb"))
     if strategy == "broadcast":
         # round-6 (guide §2.4): pip_tag IS this op's tagging step —
         # MIN covering zone id, NULL outside, every row kept, and
         # join-free (pure array expression over the broadcast CSR
         # hits) — so the groupBy(id) + left-join-back pair of shuffles
         # disappears from the plan
-        from .. import cells as C
-        from .sjoin import pip_tag
         z = pip_tag(points, zones, lon=lon, lat=lat, poly_id=zone_id,
                     res=C.RES_MIN, out_col="__zone")
     else:
@@ -240,8 +226,6 @@ def staypoints(df: DataFrame, *, key_cols: Sequence[str],
     expression is JVM codegen, and state per run is O(1) so a
     billion-ping device never materializes its track in memory.
     """
-    from .. import cells as C
-
     keys = list(key_cols)
     order = [F.col(ts_col).asc()]
     if order_tiebreak:

@@ -25,8 +25,6 @@ from __future__ import annotations
 import struct
 from typing import Iterator
 
-import numpy as np
-
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1, 9: 4, 10: 8}
 _TYPE_FMT = {1: "B", 3: "H", 4: "I", 9: "i"}
 

@@ -33,7 +33,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .. import cells as C
 from ..geom import boolean, kernels as K, wkb
 from . import codec
 

@@ -78,6 +78,44 @@ def test_package_reads_no_env_knobs():
     assert not hits, hits
 
 
+def test_package_has_no_unused_imports():
+    """Every name a package module imports is used in that module. The
+    package has no lint step, so this Spark-free AST scan stands in for
+    one. Skipped: ``__init__`` re-exports, ``__future__`` imports and
+    names listed in ``__all__``; names used only inside string
+    annotations count as used."""
+    pkg = Path(__file__).resolve().parent.parent / "gis_tools_spark"
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text())
+        imported, used, exported = {}, set(), set()
+        for node in ast.walk(tree):
+            for ann in (getattr(node, "annotation", None),
+                        getattr(node, "returns", None)):
+                for c in ast.walk(ann) if ann is not None else ():
+                    if isinstance(c, ast.Constant) and isinstance(c.value, str):
+                        used.update(_IDENT.findall(c.value))
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    imported[(a.asname or a.name).split(".")[0]] = node.lineno
+            elif isinstance(node, ast.ImportFrom) \
+                    and node.module != "__future__":
+                for a in node.names:
+                    imported[a.asname or a.name] = node.lineno
+            elif isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Assign) and any(
+                    isinstance(t, ast.Name) and t.id == "__all__"
+                    for t in node.targets):
+                exported.update(ast.literal_eval(node.value))
+        hits += [f"{path.relative_to(pkg)}:{line} {name}"
+                 for name, line in imported.items()
+                 if name not in used and name not in exported]
+    assert not hits, hits
+
+
 # Package defs that nothing outside the tests reaches but that stay, each
 # with its reason. Keys are (module relative to gis_tools_spark, name);
 # "cells" is the cells package's __init__.

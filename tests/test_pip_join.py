@@ -39,12 +39,18 @@ def test_pip_join_matches_oracle(dfs, oracle_pairs, strategy, caplog):
     assert want in [r.getMessage() for r in caplog.records]
 
 
-def test_pip_join_salted_matches(dfs, oracle_pairs):
+def test_pip_join_salted_matches(dfs, oracle_pairs, caplog):
+    """Salting the hot cells (the fixture's densest point cells hold 9-11
+    points) must not change results, and the salting choice is logged."""
+    caplog.set_level(logging.DEBUG, logger="gis_tools_spark")
     pts, zones = dfs
     got = sorted((r["pid"], r["gid"]) for r in
-                 pip_join(pts, zones, strategy="cell", salt_threshold=50)
+                 pip_join(pts, zones, strategy="cell", salt_threshold=5)
                  .select("pid", "gid").collect())
     assert got == oracle_pairs
+    salt = [r.getMessage() for r in caplog.records
+            if r.getMessage().startswith("salt hot_cells=")]
+    assert len(salt) == 1 and int(salt[0].split("=")[1]) > 0, salt
 
 
 def test_pip_join_sampled_salt_matches(dfs, oracle_pairs):
@@ -77,13 +83,19 @@ def test_pip_left_join_keeps_all_points(dfs):
     assert n == pts.count()  # fixture pids are unique
 
 
-def test_pip_empty_and_null_sides(dfs, spark):
+@pytest.mark.parametrize("strategy", ["cell", "broadcast"])
+def test_pip_empty_and_null_sides(dfs, spark, strategy):
+    """An empty polygon side gives no rows; a null polygon is skipped on
+    both strategies while the other polygons still match."""
     from pyspark.sql import functions as F
 
     pts, zones = dfs
-    assert pip_join(pts, zones.limit(0), strategy="cell").count() == 0
+    assert pip_join(pts, zones.limit(0), strategy=strategy).count() == 0
     zn = zones.limit(1).withColumn("geometry_wkb", F.lit(None).cast("binary"))
-    assert pip_join(pts, zn, strategy="cell").count() == 0
+    assert pip_join(pts, zn, strategy=strategy).count() == 0
+    n = pip_join(pts, zones, strategy=strategy).count()
+    assert n > 0
+    assert pip_join(pts, zones.unionByName(zn), strategy=strategy).count() == n
 
 
 def test_geom_geom_sjoin_matches_oracle(spark, zones_pd):

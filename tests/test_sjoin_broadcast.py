@@ -132,10 +132,10 @@ def test_bbox_candidates_gate_both_sides(spark, caplog, monkeypatch):
 
     plan, cell_rows, msgs = run(10)  # right (4) under, left (40) over
     assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "candidate_pairs path=cell reason=left over broadcast limits" \
+    assert "candidate_pairs strategy=cell reason=left over broadcast limits" \
         in msgs, msgs
     plan, bbox_rows, msgs = run(100)  # both under
     assert "BroadcastNestedLoopJoin" in plan, plan
-    assert ("candidate_pairs path=bbox reason=both sides within broadcast "
-            "limits") in msgs, msgs
+    assert ("candidate_pairs strategy=bbox reason=both sides within "
+            "broadcast limits") in msgs, msgs
     assert cell_rows == bbox_rows and len(cell_rows) > 0
