@@ -17,7 +17,7 @@ from .sjoin import _prepare_right
 
 def dwithin_join(points: DataFrame, features: DataFrame, dist: float, *,
                  lon: str = "lon", lat: str = "lat",
-                 feat_wkb: str = "geometry_wkb", feat_id: str = "gid",
+                 feat_wkb: str = "geometry_wkb",
                  res: int | None = None) -> DataFrame:
     """All (point, feature) pairs with geometry distance ≤ dist —
     the reference's nearest_neighbors (buffer-intersects) as a range

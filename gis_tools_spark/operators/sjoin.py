@@ -9,9 +9,9 @@ counts as a hit).
 
 Two physical strategies. A caller may name one; ``auto`` lets
 `_strategy`, the one broadcast-or-cell decision shared by every join
-here, `knn.nearest_feature` and `trajectory.od_flows`/
-`geofence_events`, measure the small side against BROADCAST_MAX_ROWS/
-BROADCAST_MAX_BYTES:
+here, `knn.nearest_feature`, `trajectory.od_flows`/`geofence_events`
+and the raster–vector ops' `raster.zonal.map_tile_zones`, measure the
+small side against BROADCAST_MAX_ROWS/BROADCAST_MAX_BYTES:
 
 1. **cell join** (default at scale): polygons → bounded adaptive-res
    cover cells (Arrow UDF, ≤ max_cells each); points → cell id *per
@@ -277,6 +277,24 @@ def _cell_index(geoms: list, res: int):
     ucells, starts, counts = np.unique(pc[o], return_index=True,
                                        return_counts=True)
     return ucells, starts, counts, pg[o], np.asarray(big, dtype=np.int64)
+
+
+def _bbox_candidates(index, res: int, box, n: int) -> np.ndarray:
+    """Sorted distinct positions, among the ``n`` geometries of a
+    `_cell_index` at ``res``, whose cells meet the cells of ``box``,
+    plus the oversize ones: a superset of the geometries whose bbox
+    meets ``box``. A ``box`` over _MAX_INDEX_CELLS cells names all
+    ``n``."""
+    ucells, starts, counts, flat, big = index
+    if C.bbox_cell_count(*box, res) > _MAX_INDEX_CELLS:
+        return np.arange(n, dtype=np.int64)
+    parts = [big]
+    if len(ucells):
+        cells = C.bbox_to_cells(*box, res)
+        pos = np.minimum(np.searchsorted(ucells, cells), len(ucells) - 1)
+        parts += [flat[starts[p]:starts[p] + counts[p]]
+                  for p in pos[ucells[pos] == cells]]
+    return np.unique(np.concatenate(parts))
 
 
 class _BroadcastIndex:
@@ -565,7 +583,8 @@ def _geom_hits(index: _BroadcastIndex, predicate: str):
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def _hits(lwkbs: pd.Series) -> pd.Series:
-        geoms_, (uc, st, ct, flat, big_), res_ = bc.value
+        geoms_, index_, res_ = bc.value
+        uc, *_, big_ = index_
         out: list[list[int]] = [[] for _ in range(len(lwkbs))]
         if len(lwkbs) == 0 or (len(uc) == 0 and len(big_) == 0):
             return pd.Series(out)
@@ -578,25 +597,7 @@ def _geom_hits(index: _BroadcastIndex, predicate: str):
                 continue
             g = decode_cached(lb)
             lefts.append(g)
-            box = K.bounds(g)
-            if C.bbox_cell_count(*box, res_) > _MAX_INDEX_CELLS:
-                ridx = np.arange(len(geoms_), dtype=np.int64)
-            elif len(uc):
-                cells = C.bbox_to_cells(*box, res_)
-                pos = np.searchsorted(uc, cells)
-                pos_c = np.minimum(pos, len(uc) - 1)
-                hit = np.nonzero(uc[pos_c] == cells)[0]
-                if len(hit):
-                    ridx = np.concatenate([
-                        flat[st[pos_c[h]]:st[pos_c[h]] + ct[pos_c[h]]]
-                        for h in hit])
-                else:
-                    ridx = np.zeros(0, dtype=np.int64)
-                if len(big_):
-                    ridx = np.concatenate([ridx, big_])
-            else:
-                ridx = big_
-            for r in np.unique(ridx):
+            for r in _bbox_candidates(index_, res_, K.bounds(g), len(geoms_)):
                 cand_l.append(li)
                 cand_r.append(int(r))
         if not cand_l:

@@ -4,11 +4,14 @@ rasterio.features.rasterize, and ZonalStatistics' zone-id rasterization
 stats.py:49-56).
 
 Spark design: tiles are rows (either existing image rows carrying a
-pixel grid, or a generated fishnet of cells at a resolution); zones join
-to the tiles they intersect (cell-cover equi-join), then a per-(tile)
-kernel burns all its zones into one array — pixel-center test by
-default (rasterio all_touched=False) or bbox-overlap for all_touched.
-Output: one row per tile with the burned array as raw_f32 bytes.
+pixel grid, or a generated fishnet of cells at a resolution). The tile–
+zone pair builder `zonal.map_tile_zones` hands each tile all the zones
+it may meet: a broadcast zone index looked up in one pass over the
+tiles for a zone layer within the broadcast limits, a cell-cover join
+grouped by tile above them. A per-tile kernel burns its zones into one
+array — pixel-center test by default (rasterio all_touched=False) or
+pixel-rectangle overlap for all_touched. Output: one row per tile with
+the burned array as raw_f32 bytes.
 """
 
 from __future__ import annotations
@@ -17,9 +20,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
-from ..geom import kernels as K, wkb
+from ..geom import kernels as K
 from . import codec
-from .zonal import auto_res, pixel_centers, tile_cover
+from .zonal import map_tile_zones, pixel_centers, rasterize_mask
 
 
 def burn_zones_to_tiles(tiles: DataFrame, zones: DataFrame, *,
@@ -37,52 +40,36 @@ def burn_zones_to_tiles(tiles: DataFrame, zones: DataFrame, *,
     otherwise `burn_value`. Tiles intersecting no zone are filled with
     `background` (kept — the grid stays complete).
     """
-    from ..operators.core import CELL_COL, explode_cover  # deferred: circular
-
-    if res is None:
-        res = auto_res(tiles)
-    t = tile_cover(tiles, res)
-
-    burn_cols = [zone_id, zone_wkb]
-    if burn_attr and burn_attr not in burn_cols:
-        burn_cols.append(burn_attr)
-    zc = explode_cover(zones.select(*burn_cols), zone_wkb, CELL_COL,
-                       res, res, max_cells=4096)
-    pairs = (t.join(zc, on=CELL_COL, how="left").drop(CELL_COL)
-             .dropDuplicates(["image_id", zone_id]))
-
-    tile_cols = [c for c in tiles.columns]
+    tile_cols = [c for c in tiles.columns if c != "bytes"]
     out_schema = T.StructType(
-        [tiles.schema[c] for c in tile_cols if c != "bytes"]
+        [tiles.schema[c] for c in tile_cols]
         + [T.StructField("bytes", T.BinaryType()),
            T.StructField("n_zones", T.IntegerType())])
 
-    def _burn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        r0 = pdf.iloc[0]
-        w, h = int(r0["w"]), int(r0["h"])
-        xs, ys = pixel_centers(r0["gt_x0"], r0["gt_rx"], r0["gt_y0"], r0["gt_ry"], w, h)
+    def _burn(t, zs) -> pd.DataFrame:
+        w, h = int(t["w"]), int(t["h"])
+        xs, ys = pixel_centers(t["gt_x0"], t["gt_rx"], t["gt_y0"], t["gt_ry"], w, h)
         arr = np.full((h, w), background, dtype=np.float32)
         nz = 0
-        zrows = pdf[pdf[zone_wkb].notna()]
-        for _, zr in zrows.sort_values(zone_id).iterrows():
-            g = wkb.decode(zr[zone_wkb])
+        for z, g in zs:  # ascending zone_id: the last zone wins
             if all_touched:
-                mask = _mask_all_touched(g, xs, ys, r0["gt_rx"], r0["gt_ry"])
+                mask = _mask_all_touched(g, xs, ys, t["gt_rx"], t["gt_ry"])
             else:
-                gx, gy = np.meshgrid(xs, ys)
-                mask = K.covers_xy(g, gx.ravel(), gy.ravel(), boundary_tol=0).reshape(h, w)
+                mask = rasterize_mask(g, xs, ys)
             if not mask.any():
                 continue
-            val = float(zr[burn_attr]) if burn_attr else burn_value
-            arr[mask] = val
+            arr[mask] = float(z[burn_attr]) if burn_attr else burn_value
             nz += 1
-        row = {c: r0[c] for c in tile_cols if c != "bytes"}
+        row = {c: t[c] for c in tile_cols}
         row["bytes"] = codec.encode_raw_f32(arr)
         row["n_zones"] = nz
         return pd.DataFrame([row])
 
-    return pairs.groupBy("image_id").applyInPandas(
-        lambda key, pdf: _burn(key, pdf), schema=out_schema)
+    return map_tile_zones("burn_zones_to_tiles", tiles.select(*tile_cols),
+                          zones, _burn,
+                          out_schema, zone_id=zone_id, zone_wkb=zone_wkb,
+                          attrs=(burn_attr,) if burn_attr else (),
+                          grouped=True, res=res, max_cells=4096)
 
 
 def _mask_all_touched(g: dict, xs: np.ndarray, ys: np.ndarray,

@@ -6,17 +6,29 @@ the raster and compute mean/std/min/max/sum/density/no_data_count,
 optionally surface-weighted (weights = per-pixel geodesic areas,
 stats.py:154-203 + surface.py:15-53).
 
-Spark design: the raster is tiled across image rows. Per (tile, zone)
-candidate pair (cell cover join), an Arrow-batched kernel rasterizes the
-zone mask over the tile's pixel grid and emits PARTIAL aggregates
-(count, sum, sumsq, min, max, nodata, wsum, wsumsq, wtotal); a final
-groupBy(zone) combines them — a classic partial/final aggregation, so
-the big raster never concentrates on one node and tiles stream through.
+Spark design: the raster is tiled across image rows. `map_tile_zones`,
+the one tile–zone pair builder of the raster–vector ops (this module
+and `burn.py`), hands each tile and its candidate zones to a per-tile
+kernel. `operators.sjoin._strategy` picks its plan:
+
+- broadcast (zones within the broadcast limits): the zones are collected
+  and decoded once and broadcast with a `_cell_index` of their bboxes;
+  one mapInPandas pass over the tiles decodes each tile once, looks up
+  its candidate zones and runs the kernel, with no shuffle;
+- cell (above the limits): a cell cover equi-join of tile bbox cells
+  with zone cover cells carries each tile with each candidate zone; a
+  zone too large for the cover's cell cap pairs by bbox overlap.
+
+Per (tile, zone) the zonal kernel rasterizes the zone mask over the
+tile's pixel grid and emits PARTIAL aggregates (count, sum, sumsq, min,
+max, nodata, wsum, wsumsq, wtotal); a final groupBy(zone) combines
+them — a classic partial/final aggregation, so the big raster never
+concentrates on one node and tiles stream through.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -119,25 +131,215 @@ def tile_cover(tiles: DataFrame, res: int, *,
             .drop("__ix", "__iy"))
 
 
-def tile_zone_pairs(rasters: DataFrame, zones: DataFrame, *,
-                    zone_wkb: str = "geometry_wkb", zone_id: str = "gid",
-                    res: int | None = None,
-                    max_cells: int = 1024) -> DataFrame:
-    """Candidate (tile, zone) pairs via the cell-cover equi-join: tile
-    bbox covers (pure arithmetic — tiles are rectangles) ⋈ zone covers.
-    rasters needs (image_id, bytes, w, h, fmt, gt_x0, gt_rx, gt_y0,
-    gt_ry). res=None → auto-pick so tile covers stay bounded."""
-    # deferred import: operators package pulls topography which needs this
-    # module (circular otherwise)
-    from ..operators.core import CELL_COL, explode_cover
+# the tile columns the pixel kernels read
+_PIXEL_COLS = ("image_id", "bytes", "w", "h", "fmt",
+               "gt_x0", "gt_rx", "gt_y0", "gt_ry")
+
+
+def map_tile_zones(op: str, tiles: DataFrame, zones: DataFrame,
+                   per_tile: Callable, schema: T.StructType, *,
+                   zone_id: str = "gid", zone_wkb: str = "geometry_wkb",
+                   attrs: tuple[str, ...] = (), grouped: bool = False,
+                   res: int | None = None,
+                   max_cells: int = 1024) -> DataFrame:
+    """The one tile–zone pair builder of the raster–vector ops.
+
+    ``per_tile(tile, zs)`` gets a tile row (``tile[c]`` for each tiles
+    column) and a list of candidate ``(zone, geometry)`` pairs in
+    ascending ``zone_id``: ``zone[c]`` for ``zone_id`` and ``attrs``,
+    and the decoded ``zone_wkb``; zones with null WKB never appear. It
+    returns a pandas frame of ``schema``, or None for no rows.
+    Candidates are a superset of the zones whose bbox meets the tile's,
+    so the kernel makes the exact test.
+
+    ``op`` names the call in `sjoin._strategy`'s DEBUG record, which
+    picks the plan from the zones' size:
+
+    - broadcast: each tile gets one call with all its candidates (an
+      empty list when it meets none), on the tiles' own partitions;
+      ``res`` is the zone index's (None: `_index_res` of the zones);
+    - cell: with ``grouped``, the same, after a shuffle by tile;
+      without it, one call per candidate (tile, zone) pair, and none
+      for a tile without candidates. ``res`` (None: `auto_res` of the
+      tiles) and ``max_cells`` size the cover.
+    """
+    from ..operators.sjoin import (  # deferred: circular
+        _bbox_candidates,
+        _cell_index,
+        _spread,
+        _strategy,
+    )
+
+    cols = list(dict.fromkeys((zone_id, zone_wkb, *attrs)))
+    zones = zones.select(*cols)
+    if _strategy(op, "auto", ("zones", zones, zone_wkb)) == "cell":
+        return _cell_map(tiles, zones, per_tile, schema, zone_id=zone_id,
+                         zone_wkb=zone_wkb, grouped=grouped, res=res,
+                         max_cells=max_cells)
+
+    rows = sorted((r for r in zones.collect() if r[zone_wkb] is not None),
+                  key=lambda r: (r[zone_id] is None, r[zone_id]))
+    geoms = [wkb.decode(r[zone_wkb]) for r in rows]
+    boxes = np.array([K.bounds(g) for g in geoms]).reshape(-1, 4)
+    if res is None:
+        res = _index_res(boxes)
+    zattrs = [{c: r[c] for c in cols if c != zone_wkb} for r in rows]
+    bc = tiles.sparkSession.sparkContext.broadcast(
+        (zattrs, geoms, boxes, _cell_index(geoms, res), res))
+
+    def _zones_of(t) -> list:
+        zattrs_, geoms_, boxes_, index_, res_ = bc.value
+        # the tile bbox padded by half a pixel: every pixel centre and
+        # pixel rectangle lies inside it
+        rx, ry = t["gt_rx"], t["gt_ry"]
+        x0, y1 = t["gt_x0"] - rx / 2, t["gt_y0"] + ry / 2
+        x1 = t["gt_x0"] + rx * (int(t["w"]) + 0.5)
+        y0 = t["gt_y0"] - ry * (int(t["h"]) + 0.5)
+        cand = _bbox_candidates(index_, res_, (x0, y0, x1, y1), len(geoms_))
+        b = boxes_[cand]
+        cand = cand[(b[:, 0] <= x1) & (b[:, 2] >= x0)
+                    & (b[:, 1] <= y1) & (b[:, 3] >= y0)]
+        return [(zattrs_[j], geoms_[j]) for j in cand]
+
+    return _spread(tiles).mapInPandas(
+        lambda it: _each_row(it, lambda t: per_tile(t, _zones_of(t))),
+        schema=schema)
+
+
+def _each_row(it: Iterator[pd.DataFrame], fn: Callable):
+    """A mapInPandas body: ``fn(row)``, a frame or None, for each row of
+    each batch, concatenated into one frame per batch."""
+    for pdf in it:
+        frames = [f for f in (fn(pdf.iloc[i]) for i in range(len(pdf)))
+                  if f is not None]
+        if frames:
+            yield pd.concat(frames, ignore_index=True)
+
+
+def _index_res(boxes: np.ndarray) -> int:
+    """Res of the broadcast zone index: the finest whose cells are as
+    large as the median zone bbox, so a typical zone sits in ≤ 4 cells
+    (picked from the collected zones: no job over the tiles)."""
+    if not len(boxes):
+        return 0
+    sx = float(np.median(boxes[:, 2] - boxes[:, 0]))
+    sy = float(np.median(boxes[:, 3] - boxes[:, 1]))
+    for res in range(C.MAX_RES, -1, -1):
+        if 360.0 / (1 << res) >= sx and 180.0 / (1 << res) >= sy:
+            return res
+    return 0
+
+
+def _cell_map(tiles: DataFrame, zones: DataFrame, per_tile: Callable,
+              schema: T.StructType, *, zone_id: str, zone_wkb: str,
+              grouped: bool, res: int | None, max_cells: int) -> DataFrame:
+    """`map_tile_zones` above the broadcast limits: the cell-cover pairs
+    of `_cell_pairs`, then one mapInPandas call per pair or, with
+    ``grouped``, one applyInPandas call per tile."""
+    pairs = _cell_pairs(tiles, zones, zone_id=zone_id, zone_wkb=zone_wkb,
+                        res=res, max_cells=max_cells,
+                        how="left" if grouped else "inner")
+    if grouped:
+        def _tile(pdf: pd.DataFrame) -> pd.DataFrame:
+            zs = pdf[pdf[zone_wkb].notna()].sort_values(zone_id)
+            return per_tile(pdf.iloc[0], [(z, wkb.decode(z[zone_wkb]))
+                                          for _, z in zs.iterrows()])
+
+        return pairs.groupBy("image_id").applyInPandas(_tile, schema=schema)
+
+    return pairs.mapInPandas(lambda it: _each_row(
+        it, lambda r: per_tile(r, [(r, wkb.decode(r[zone_wkb]))])),
+        schema=schema)
+
+
+def _cell_pairs(tiles: DataFrame, zones: DataFrame, *, zone_id: str,
+                zone_wkb: str, res: int | None, max_cells: int,
+                how: str) -> DataFrame:
+    """Candidate (tile, zone) rows, each pair once: tile bbox cells at
+    ``res`` (None: `auto_res`) ⋈ zone cover cells (``how``='left' keeps
+    tiles without candidates, with null zone columns). The cover of a
+    zone whose bbox spans more than ``max_cells`` cells at ``res`` is
+    coarsened, so no tile cell equals its cells: such zones pair with
+    the tiles by bbox overlap, the bbox taken from their coarse cells."""
+    from ..operators.core import CELL_COL, explode_cover  # deferred: circular
 
     if res is None:
-        res = auto_res(rasters)
-    t = tile_cover(rasters, res)
-    zc = explode_cover(zones.select(zone_id, zone_wkb), zone_wkb, CELL_COL,
-                       res, res, max_cells)
-    return (t.join(zc, on=CELL_COL).drop(CELL_COL)
+        res = auto_res(tiles)
+    zc = explode_cover(zones, zone_wkb, CELL_COL, res, res, max_cells)
+    cres = F.shiftright(F.col(CELL_COL), C.RES_SHIFT)
+    fine = (tile_cover(tiles, res)
+            .join(zc.where(cres == res), on=CELL_COL, how=how)
+            .drop(CELL_COL))
+
+    mask = (1 << C.IX_SHIFT) - 1
+    ix = F.shiftright(F.col(CELL_COL), C.IX_SHIFT).bitwiseAND(mask)
+    iy = F.col(CELL_COL).bitwiseAND(mask)
+    cw = F.lit(360.0) / F.pow(F.lit(2.0), cres)
+    ch = F.lit(180.0) / F.pow(F.lit(2.0), cres)
+    big = (zc.where(cres != res).groupBy(zone_id).agg(
+        *[F.first(c).alias(c) for c in zones.columns if c != zone_id],
+        F.min(ix * cw - 180.0).alias("__zx0"),
+        F.max((ix + 1) * cw - 180.0).alias("__zx1"),
+        F.min(iy * ch - 90.0).alias("__zy0"),
+        F.max((iy + 1) * ch - 90.0).alias("__zy1")))
+    overlap = ((F.col("__zx0") <= F.col("gt_x0") + F.col("gt_rx") * F.col("w"))
+               & (F.col("__zx1") >= F.col("gt_x0"))
+               & (F.col("__zy0") <= F.col("gt_y0"))
+               & (F.col("__zy1") >= F.col("gt_y0") - F.col("gt_ry") * F.col("h")))
+    coarse = (tiles.join(big, overlap)
+              .drop("__zx0", "__zx1", "__zy0", "__zy1"))
+    return (fine.unionByName(coarse)
             .dropDuplicates(["image_id", zone_id]))
+
+
+def _tile_pixels(t) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A tile row's pixels as float64 (the band mean for multi-band
+    tiles) and its pixel-centre x and y coordinates."""
+    w, h = int(t["w"]), int(t["h"])
+    arr = codec.decode(t["bytes"], w, h, t["fmt"]).astype(np.float64)
+    if arr.ndim == 3:
+        arr = arr.mean(axis=2)
+    xs, ys = pixel_centers(t["gt_x0"], t["gt_rx"], t["gt_y0"], t["gt_ry"],
+                           w, h)
+    return arr, xs, ys
+
+
+def _partial_row(arr: np.ndarray, xs: np.ndarray, ys: np.ndarray,
+                 rx: float, ry: float, g: dict, no_data: float,
+                 patch_value: float | None) -> dict | None:
+    """The PARTIAL_SCHEMA aggregates of the tile pixels whose centres
+    ``g`` covers; None when it covers none."""
+    mask = rasterize_mask(g, xs, ys)
+    if not mask.any():
+        return None
+    vals = arr[mask]
+    nod = vals == no_data
+    good = vals[~nod]
+    surf = pixel_surface(xs, ys, rx, ry)[mask][~nod]
+    return {
+        "px_count": int(good.size),
+        "px_sum": float(good.sum()) if good.size else 0.0,
+        "px_sumsq": float((good ** 2).sum()) if good.size else 0.0,
+        "px_min": float(good.min()) if good.size else np.inf,
+        "px_max": float(good.max()) if good.size else -np.inf,
+        "nodata_count": int(nod.sum()),
+        "patch_count": int((good == patch_value).sum()) if patch_value is not None else 0,
+        "w_sum": float(surf.sum()),
+        "w_val_sum": float((surf * good).sum()),
+        "w_val_sumsq": float((surf * good ** 2).sum()),
+    }
+
+
+def _value_counts(arr: np.ndarray, xs: np.ndarray, ys: np.ndarray,
+                  g: dict, no_data: float, decimals: int):
+    """Distinct values (rounded to ``decimals``) and their counts over
+    the tile pixels whose centres ``g`` covers, no-data excluded; None
+    when there are none."""
+    vals = arr[rasterize_mask(g, xs, ys)]
+    vals = np.round(vals[vals != no_data], decimals)
+    if not vals.size:
+        return None
+    return np.unique(vals, return_counts=True)
 
 
 def zonal_partials(rasters: DataFrame, zones: DataFrame, *,
@@ -145,49 +347,28 @@ def zonal_partials(rasters: DataFrame, zones: DataFrame, *,
                    no_data: float = codec.NO_DATA_F32,
                    patch_value: float | None = None,
                    res: int | None = None, max_cells: int = 1024) -> DataFrame:
-    """(tile, zone) partial aggregates — see tile_zone_pairs for the
-    candidate join."""
-    pairs = tile_zone_pairs(rasters, zones, zone_wkb=zone_wkb,
-                            zone_id=zone_id, res=res, max_cells=max_cells)
-
+    """(tile, zone) partial aggregates — see map_tile_zones for the
+    candidate pairs."""
     fields = ([T.StructField("image_id", T.StringType()),
-               pairs.schema[zone_id]] + PARTIAL_SCHEMA)
+               zones.schema[zone_id]] + PARTIAL_SCHEMA)
 
-    def _partial(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i in range(len(pdf)):
-                r = pdf.iloc[i]
-                arr = codec.decode(r["bytes"], int(r["w"]), int(r["h"]), r["fmt"]).astype(np.float64)
-                if arr.ndim == 3:
-                    arr = arr.mean(axis=2)
-                xs, ys = pixel_centers(r["gt_x0"], r["gt_rx"], r["gt_y0"], r["gt_ry"],
-                                       int(r["w"]), int(r["h"]))
-                g = wkb.decode(r[zone_wkb])
-                mask = rasterize_mask(g, xs, ys)
-                if not mask.any():
-                    continue
-                vals = arr[mask]
-                nod = vals == no_data
-                good = vals[~nod]
-                surf = pixel_surface(xs, ys, r["gt_rx"], r["gt_ry"])[mask][~nod]
-                rows.append({
-                    "image_id": r["image_id"], zone_id: r[zone_id],
-                    "px_count": int(good.size),
-                    "px_sum": float(good.sum()) if good.size else 0.0,
-                    "px_sumsq": float((good ** 2).sum()) if good.size else 0.0,
-                    "px_min": float(good.min()) if good.size else np.inf,
-                    "px_max": float(good.max()) if good.size else -np.inf,
-                    "nodata_count": int(nod.sum()),
-                    "patch_count": int((good == patch_value).sum()) if patch_value is not None else 0,
-                    "w_sum": float(surf.sum()),
-                    "w_val_sum": float((surf * good).sum()),
-                    "w_val_sumsq": float((surf * good ** 2).sum()),
-                })
-            if rows:
-                yield pd.DataFrame(rows)
+    def _tile(t, zs) -> pd.DataFrame | None:
+        if not zs:
+            return None
+        arr, xs, ys = _tile_pixels(t)
+        rows = []
+        for z, g in zs:
+            p = _partial_row(arr, xs, ys, t["gt_rx"], t["gt_ry"], g,
+                             no_data, patch_value)
+            if p is not None:
+                rows.append({"image_id": t["image_id"], zone_id: z[zone_id],
+                             **p})
+        return pd.DataFrame(rows) if rows else None
 
-    return pairs.mapInPandas(_partial, schema=T.StructType(fields))
+    return map_tile_zones("zonal_statistics", rasters.select(*_PIXEL_COLS),
+                          zones, _tile, T.StructType(fields),
+                          zone_id=zone_id, zone_wkb=zone_wkb, res=res,
+                          max_cells=max_cells)
 
 
 def zonal_statistics(rasters: DataFrame, zones: DataFrame, *,
@@ -244,38 +425,27 @@ def zonal_value_counts(rasters: DataFrame, zones: DataFrame, *,
     counts — O(distinct values) rows per pair, never the pixels — and
     one groupBy(zone, value) combines them. Same scale shape as
     zonal_statistics."""
-    pairs = tile_zone_pairs(rasters, zones, zone_wkb=zone_wkb,
-                            zone_id=zone_id, res=res, max_cells=max_cells)
-    fields = T.StructType([pairs.schema[zone_id],
+    fields = T.StructType([zones.schema[zone_id],
                            T.StructField("value", T.DoubleType()),
                            T.StructField("n", T.LongType())])
 
-    def _partial(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            frames = []
-            for i in range(len(pdf)):
-                r = pdf.iloc[i]
-                arr = codec.decode(r["bytes"], int(r["w"]), int(r["h"]),
-                                   r["fmt"]).astype(np.float64)
-                if arr.ndim == 3:
-                    arr = arr.mean(axis=2)
-                xs, ys = pixel_centers(r["gt_x0"], r["gt_rx"], r["gt_y0"],
-                                       r["gt_ry"], int(r["w"]), int(r["h"]))
-                mask = rasterize_mask(wkb.decode(r[zone_wkb]), xs, ys)
-                if not mask.any():
-                    continue
-                vals = arr[mask]
-                vals = np.round(vals[vals != no_data], decimals)
-                if not vals.size:
-                    continue
-                uniq, cnt = np.unique(vals, return_counts=True)
-                frames.append(pd.DataFrame({
-                    zone_id: r[zone_id], "value": uniq,
-                    "n": cnt.astype(np.int64)}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    def _tile(t, zs) -> pd.DataFrame | None:
+        if not zs:
+            return None
+        arr, xs, ys = _tile_pixels(t)
+        frames = []
+        for z, g in zs:
+            vc = _value_counts(arr, xs, ys, g, no_data, decimals)
+            if vc is not None:
+                frames.append(pd.DataFrame({zone_id: z[zone_id],
+                                            "value": vc[0],
+                                            "n": vc[1].astype(np.int64)}))
+        return pd.concat(frames, ignore_index=True) if frames else None
 
-    partial = pairs.mapInPandas(_partial, schema=fields)
+    partial = map_tile_zones("zonal_value_counts",
+                             rasters.select(*_PIXEL_COLS), zones, _tile,
+                             fields, zone_id=zone_id, zone_wkb=zone_wkb,
+                             res=res, max_cells=max_cells)
     return partial.groupBy(zone_id, "value").agg(F.sum("n").alias("n"))
 
 

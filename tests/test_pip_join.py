@@ -39,6 +39,14 @@ def test_pip_join_matches_oracle(dfs, oracle_pairs, strategy, caplog):
     assert want in [r.getMessage() for r in caplog.records]
 
 
+def _salted(caplog) -> int:
+    """The hot-cell count of the one ``salt hot_cells=N`` record."""
+    salt = [r.getMessage() for r in caplog.records
+            if r.getMessage().startswith("salt hot_cells=")]
+    assert len(salt) == 1, salt
+    return int(salt[0].split("=")[1])
+
+
 def test_pip_join_salted_matches(dfs, oracle_pairs, caplog):
     """Salting the hot cells (the fixture's densest point cells hold 9-11
     points) must not change results, and the salting choice is logged."""
@@ -48,33 +56,37 @@ def test_pip_join_salted_matches(dfs, oracle_pairs, caplog):
                  pip_join(pts, zones, strategy="cell", salt_threshold=5)
                  .select("pid", "gid").collect())
     assert got == oracle_pairs
-    salt = [r.getMessage() for r in caplog.records
-            if r.getMessage().startswith("salt hot_cells=")]
-    assert len(salt) == 1 and int(salt[0].split("=")[1]) > 0, salt
+    assert _salted(caplog) > 0
 
 
-def test_pip_join_sampled_salt_matches(dfs, oracle_pairs):
+def test_pip_join_sampled_salt_matches(dfs, oracle_pairs, caplog):
     """Sampled hot-cell detection must not change results — salting is
     correctness-invariant however the histogram is estimated (a missed
-    hot cell stays unsalted, an over-count over-spreads)."""
+    hot cell stays unsalted, an over-count over-spreads). The threshold
+    is low enough that the 30% sample finds hot cells."""
+    caplog.set_level(logging.DEBUG, logger="gis_tools_spark")
     pts, zones = dfs
     got = sorted((r["pid"], r["gid"]) for r in
-                 pip_join(pts, zones, strategy="cell", salt_threshold=20,
+                 pip_join(pts, zones, strategy="cell", salt_threshold=5,
                           salt_sample=0.3)
                  .select("pid", "gid").collect())
     assert got == oracle_pairs
+    assert _salted(caplog) > 0
 
 
-def test_pip_join_salt_hist_proxy_matches(dfs, oracle_pairs):
+def test_pip_join_salt_hist_proxy_matches(dfs, oracle_pairs, caplog):
     """A cheap histogram proxy (here: a half-sample of the point table)
-    must not change results, and force_shuffle must not either."""
+    must not change results, and force_shuffle must not either. The
+    threshold is low enough that the proxy finds hot cells."""
+    caplog.set_level(logging.DEBUG, logger="gis_tools_spark")
     pts, zones = dfs
     proxy = pts.sample(fraction=0.5, seed=1).select("lon", "lat")
     got = sorted((r["pid"], r["gid"]) for r in
-                 pip_join(pts, zones, strategy="cell", salt_threshold=20,
+                 pip_join(pts, zones, strategy="cell", salt_threshold=3,
                           salt_hist=proxy, force_shuffle=True)
                  .select("pid", "gid").collect())
     assert got == oracle_pairs
+    assert _salted(caplog) > 0
 
 
 def test_pip_left_join_keeps_all_points(dfs):

@@ -103,17 +103,45 @@ def test_driver_solve_matches_distributed(spark, monkeypatch, make):
         assert fast == slow
 
 
+def _zonal_mosaic(spark):
+    from gis_tools_spark import fixtures
+
+    return (spark.createDataFrame(fixtures.gen_rasters(3, 3, 16)),
+            spark.createDataFrame(fixtures.gen_zones(16)[["gid",
+                                                          "geometry_wkb"]]))
+
+
+def _zonal_statistics(spark):
+    from gis_tools_spark.raster.zonal import zonal_statistics
+
+    ras, zones = _zonal_mosaic(spark)
+    return lambda: {tuple(r) for r in zonal_statistics(ras, zones).collect()}
+
+
+def _burn(spark):
+    from gis_tools_spark.raster.burn import burn_zones_to_tiles
+
+    ras, zones = _zonal_mosaic(spark)
+    return lambda: {tuple(r) for r in burn_zones_to_tiles(
+        ras, zones, burn_attr="gid").collect()}
+
+
 @pytest.mark.parametrize("make, budget",
                          [(_pagerank, 4), (_cc_labels, 4),
-                          (_cost_distance, 4), (_watershed, 6)],
+                          (_cost_distance, 4), (_watershed, 6),
+                          (_zonal_statistics, 4), (_burn, 3)],
                          ids=["pagerank", "connected_components",
-                              "cost_distance", "watershed"])
+                              "cost_distance", "watershed",
+                              "zonal_statistics", "burn_zones_to_tiles"])
 def test_small_input_job_budget(spark, make, budget):
     """A small input takes the one-collect driver path: the call plus the
     collect of its output stays within ``budget`` Spark jobs (measured 3
     for PageRank and components, 4 for cost distance, 6 for D8 plus
     watershed, where each of the two grid-index aggregates is 2 jobs;
-    the distributed rounds on the same inputs run 25 to 152)."""
+    the distributed rounds on the same inputs run 25 to 152). A small
+    zone layer takes the broadcast plan of zonal statistics and tile
+    burning (measured 4 and 3: the size gate, the zone collect, and the
+    output's aggregate or collect; the cell plan runs 10 each)."""
     sc = spark.sparkContext
     run = make(spark)
     group = f"job-budget{make.__name__}"

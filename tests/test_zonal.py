@@ -159,3 +159,112 @@ def test_zonal_value_counts_and_majority(spark):
         assert m["majority_n"] == counts[exp_maj]
         assert m["minority"] == pytest.approx(exp_min)
         assert m["minority_n"] == counts[exp_min]
+
+
+# ---------------------------------------------------------------- both plans
+
+def _paths(monkeypatch, caplog, op, run):
+    """``run()`` on the broadcast plan, then with the broadcast gate
+    forced to 0 on the cell plan; each plan is checked against its
+    ``<op> strategy=…`` DEBUG record. Returns both results."""
+    import importlib
+    import logging
+
+    sjoin_module = importlib.import_module("gis_tools_spark.operators.sjoin")
+    caplog.set_level(logging.DEBUG, logger="gis_tools_spark")
+    out = []
+    for path in ("broadcast", "cell"):
+        if path == "cell":
+            monkeypatch.setattr(sjoin_module, "BROADCAST_MAX_ROWS", 0)
+        caplog.clear()
+        out.append(run())
+        assert any(r.getMessage().startswith(f"{op} strategy={path} ")
+                   for r in caplog.records), path
+    return out
+
+
+@pytest.fixture(scope="module")
+def mixed(spark):
+    """A 3×3 mosaic plus a tile far from every zone, and eight zones
+    plus one with a null geometry."""
+    ras = fixtures.gen_rasters(3, 3, 16)
+    far = ras.iloc[[0]].assign(image_id="far", gt_x0=100.0)
+    zones = fixtures.gen_zones(8)[["gid", "geometry_wkb"]]
+    zones = pd.concat([zones, pd.DataFrame({"gid": [99],
+                                            "geometry_wkb": [None]})])
+    return (spark.createDataFrame(pd.concat([ras, far], ignore_index=True)),
+            spark.createDataFrame(zones))
+
+
+def test_zonal_plans_agree(monkeypatch, caplog, mixed):
+    """Both plans give the same per-(tile, zone) partials bit for bit,
+    so the same statistics. The final per-zone sums run in shuffle
+    order, which differs between the plans, so those compare to 1e-12."""
+    from gis_tools_spark.raster.zonal import zonal_partials
+
+    ras, zones = mixed
+
+    def run():
+        parts = sorted(tuple(r) for r in zonal_partials(ras, zones).collect())
+        stats = [{r["gid"]: r.asDict() for r in zonal_statistics(
+            ras, zones, surface_weighted=sw).collect()}
+            for sw in (False, True)]
+        return parts, stats
+
+    (bp, bstats), (cp, cstats) = _paths(monkeypatch, caplog,
+                                        "zonal_statistics", run)
+    assert bp == cp and len(bp) > 0
+    assert "far" not in {p[0] for p in bp} and 99 not in {p[1] for p in bp}
+    for b, c in zip(bstats, cstats):
+        assert b.keys() == c.keys()
+        for gid in b:
+            assert b[gid] == pytest.approx(c[gid], rel=1e-12, abs=1e-12)
+
+
+def test_value_counts_plans_agree(monkeypatch, caplog, mixed):
+    from gis_tools_spark.raster.zonal import zonal_value_counts
+
+    ras, zones = mixed
+    b, c = _paths(monkeypatch, caplog, "zonal_value_counts", lambda: sorted(
+        tuple(r) for r in zonal_value_counts(ras, zones).collect()))
+    assert b == c and len(b) > 0
+
+
+@pytest.mark.parametrize("all_touched", [False, True])
+def test_burn_plans_agree(monkeypatch, caplog, mixed, all_touched):
+    """Burning the zone id itself, overlapping zones burn in ascending
+    id on both plans, and the far tile stays background."""
+    from gis_tools_spark.raster.burn import burn_zones_to_tiles
+
+    ras, zones = mixed
+    tiles = ras.drop("bytes")
+    b, c = _paths(monkeypatch, caplog, "burn_zones_to_tiles", lambda: sorted(
+        tuple(r) for r in burn_zones_to_tiles(
+            tiles, zones, burn_attr="gid", background=-1.0,
+            all_touched=all_touched).collect()))
+    assert b == c and len(b) == 10
+    assert [r[-1] for r in b if r[0] == "far"] == [0]
+    assert sum(r[-1] for r in b) > 9
+
+
+def test_oversize_zone_is_kept(monkeypatch, caplog, spark):
+    """A zone whose bbox spans more than the cover's cell cap at the
+    tiles' res still pairs with every tile it meets, on both plans (the
+    cell plan once dropped it: its coarsened cover cells never equal a
+    tile cell)."""
+    from gis_tools_spark.raster.burn import burn_zones_to_tiles
+
+    ras = spark.createDataFrame(fixtures.gen_rasters(3, 3, 48))
+    zones = spark.createDataFrame(pd.DataFrame({
+        "gid": [1, 2],
+        "geometry_wkb": [wkb.box(-15, 20, 30, 65), wkb.box(6, 41, 6.5, 41.5)]}))
+
+    def run():
+        gids = sorted(r["gid"] for r in zonal_statistics(ras, zones).collect())
+        n_zones = sorted(r["n_zones"] for r in burn_zones_to_tiles(
+            ras, zones, burn_attr="gid").collect())
+        return gids, n_zones
+
+    for gids, n_zones in _paths(monkeypatch, caplog, "zonal_statistics", run):
+        assert gids == [1, 2]
+        assert n_zones == [1] * 8 + [2]
