@@ -29,6 +29,7 @@ small side against BROADCAST_MAX_ROWS/BROADCAST_MAX_BYTES:
 from __future__ import annotations
 
 import logging
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -250,20 +251,20 @@ def _pip_cell_join(points: DataFrame, polygons: DataFrame, *, lon, lat,
 _MAX_INDEX_CELLS = 4096
 
 
-def _cell_index(geoms: list, res: int):
-    """CSR cell → geometry index over decoded ``geoms`` (None skipped)
-    at ``res``: (sorted unique cells, start and count of each cell's run
-    in ``flat``, ``flat`` geometry indices, oversize indices). Worker
+def _cell_index(boxes: np.ndarray, res: int):
+    """CSR cell → geometry index over the (n, 4) ``boxes`` of decoded
+    geometries (NaN rows, for null geometries, skipped) at ``res``:
+    (sorted unique cells, start and count of each cell's run in
+    ``flat``, ``flat`` geometry indices, oversize indices). Worker
     lookup is one np.searchsorted over a whole batch instead of a
     per-row dict loop. Fan-out cap: a geometry whose bbox spans more
     than _MAX_INDEX_CELLS cells (a continent/world polygon would
     enumerate an unbounded cell list) goes to the oversize list, tested
     against every batch instead (bounded: such geometries are few)."""
     cells, owners, big = [], [], []
-    for i, g in enumerate(geoms):
-        if g is None:
+    for i, box in enumerate(boxes):
+        if np.isnan(box[0]):
             continue
-        box = K.bounds(g)
         if C.bbox_cell_count(*box, res) > _MAX_INDEX_CELLS:
             big.append(i)
             continue
@@ -300,18 +301,29 @@ def _bbox_candidates(index, res: int, box, n: int) -> np.ndarray:
 class _BroadcastIndex:
     """The one broadcast build for the small side of a join: collect
     ``small`` once, decode its ``wkb_col`` (null rows stay None and
-    never match), build the `_cell_index` at ``res`` (None: no index,
-    for all-pairs lookups) and broadcast ``(geoms, index, res)`` as
-    ``bc``. A per-batch lookup UDF over ``bc`` names matching rows by
-    their position in ``rows``; `attach` or `ids` turns those positions
-    into attributes."""
+    never match) and take each geometry's bbox into ``boxes`` (a NaN
+    row for a null one), build the `_cell_index` at ``res`` (None: no
+    index, for all-pairs lookups; a function: the res it returns for
+    ``boxes``) and broadcast ``(geoms, index, res)`` as ``bc``. A
+    per-batch lookup UDF over ``bc`` names matching rows by their
+    position in ``rows`` (sorted by ``key`` when given: a driver sort,
+    where an orderBy would cost a sampling job); `attach` or `ids`
+    turns those positions into attributes."""
 
-    def __init__(self, small: DataFrame, wkb_col: str, res: int | None):
-        self.rows = small.collect()
+    def __init__(self, small: DataFrame, wkb_col: str,
+                 res: int | Callable[[np.ndarray], int] | None,
+                 key: Callable | None = None):
+        self.rows = sorted(small.collect(), key=key) if key \
+            else small.collect()
         self.schema = small.schema
         geoms = [None if r[wkb_col] is None else wkb.decode(r[wkb_col])
                  for r in self.rows]
-        index = None if res is None else _cell_index(geoms, res)
+        self.boxes = np.array(
+            [(np.nan,) * 4 if g is None else K.bounds(g) for g in geoms],
+            dtype=np.float64).reshape(-1, 4)
+        if callable(res):
+            res = res(self.boxes)
+        index = None if res is None else _cell_index(self.boxes, res)
         self.bc = small.sparkSession.sparkContext.broadcast(
             (geoms, index, res))
 

@@ -36,9 +36,10 @@ def burn_zones_to_tiles(tiles: DataFrame, zones: DataFrame, *,
 
     tiles: (image_id, w, h, gt_x0, gt_rx, gt_y0, gt_ry) rows.
     burn_attr: zone column whose value fills covered pixels (last zone in
-    gid order wins on overlap, like rasterize's sequential burn);
-    otherwise `burn_value`. Tiles intersecting no zone are filled with
-    `background` (kept — the grid stays complete).
+    gid order wins on overlap, like rasterize's sequential burn; a null
+    value burns NaN); otherwise `burn_value`. Tiles intersecting no zone
+    are filled with `background` (kept — the grid stays complete).
+    res: the cover res of the cell plan (`zonal.map_tile_zones`).
     """
     tile_cols = [c for c in tiles.columns if c != "bytes"]
     out_schema = T.StructType(
@@ -58,7 +59,8 @@ def burn_zones_to_tiles(tiles: DataFrame, zones: DataFrame, *,
                 mask = rasterize_mask(g, xs, ys)
             if not mask.any():
                 continue
-            arr[mask] = float(z[burn_attr]) if burn_attr else burn_value
+            v = z[burn_attr] if burn_attr else burn_value
+            arr[mask] = np.nan if v is None else float(v)  # null: NaN
             nz += 1
         row = {c: t[c] for c in tile_cols}
         row["bytes"] = codec.encode_raw_f32(arr)

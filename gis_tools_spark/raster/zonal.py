@@ -11,13 +11,15 @@ the one tile–zone pair builder of the raster–vector ops (this module
 and `burn.py`), hands each tile and its candidate zones to a per-tile
 kernel. `operators.sjoin._strategy` picks its plan:
 
-- broadcast (zones within the broadcast limits): the zones are collected
-  and decoded once and broadcast with a `_cell_index` of their bboxes;
-  one mapInPandas pass over the tiles decodes each tile once, looks up
-  its candidate zones and runs the kernel, with no shuffle;
+- broadcast (zones within the broadcast limits): `sjoin._BroadcastIndex`
+  collects and decodes the zones once and broadcasts them with a
+  `_cell_index` of their bboxes; one mapInPandas pass over the tiles
+  decodes each tile once, looks up its candidate zones and runs the
+  kernel, with no shuffle;
 - cell (above the limits): a cell cover equi-join of tile bbox cells
-  with zone cover cells carries each tile with each candidate zone; a
-  zone too large for the cover's cell cap pairs by bbox overlap.
+  (and their ancestors, which a zone too large for the cover's cell cap
+  is covered with) with zone cover cells carries each tile with each
+  candidate zone.
 
 Per (tile, zone) the zonal kernel rasterizes the zone mask over the
 tile's pixel grid and emits PARTIAL aggregates (count, sum, sumsq, min,
@@ -97,13 +99,17 @@ def auto_res(rasters: DataFrame, max_cells_per_tile: int = 64) -> int:
 
 
 def tile_cover(tiles: DataFrame, res: int, *,
-               pad_deg: float | None = None) -> DataFrame:
+               pad_deg: float | None = None,
+               coarser: bool = False) -> DataFrame:
     """Each tile row once per grid cell at ``res`` that its bbox covers
     (pure column arithmetic — tiles are rectangles), in column
     ``operators.core.CELL_COL``. ``pad_deg`` widens the bbox by that many
     degrees of ground distance: latitude by ``pad_deg``, longitude by
     ``pad_deg / cos(lat)`` at the padded bbox's poleward edge, so a flat
-    pad does not miss in-radius pixels at high latitude."""
+    pad does not miss in-radius pixels at high latitude. With
+    ``coarser``, also once per cell it covers at each res below ``res``:
+    the ancestors of its cells at ``res``, which is what a cover
+    coarsened below ``res`` is made of."""
     from ..operators.core import CELL_COL  # deferred: circular
 
     x0 = F.col("gt_x0")
@@ -116,19 +122,26 @@ def tile_cover(tiles: DataFrame, res: int, *,
                  / F.greatest(F.cos(F.radians(F.least(lat_abs, F.lit(89.0)))),
                               F.lit(1e-6)))
         x0, x1, y0, y1 = x0 - pad_x, x1 + pad_x, y0 - pad_deg, y1 + pad_deg
-    n = 1 << res
+    # the res of each cell: ``res``, or with ``coarser`` each res down
+    # to 0; floor(u * 2^r) at res r is floor(u * 2^res) >> (res - r)
+    # (u scaled by a power of two is exact), so these are ancestors.
+    # No lambdas: a higher-order function compiles anew on every call
+    r = F.col("__r")
+    n = F.pow(F.lit(2.0), r)
     ix0 = F.floor((x0 + 180.0) / 360.0 * n).cast("long")
     ix1 = F.floor((x1 + 180.0) / 360.0 * n).cast("long")
     iy0 = F.floor((y0 + 90.0) / 180.0 * n).cast("long")
     iy1 = F.floor((y1 + 90.0) / 180.0 * n).cast("long")
     return (tiles
+            .withColumn("__r", F.explode(F.sequence(F.lit(0), F.lit(res)))
+                        if coarser else F.lit(res))
             .withColumn("__ix", F.explode(F.sequence(ix0, ix1)))
             .withColumn("__iy", F.explode(F.sequence(iy0, iy1)))
             .withColumn(CELL_COL,
-                        F.lit(res).cast("long") * F.lit(1 << C.RES_SHIFT)
+                        r.cast("long") * F.lit(1 << C.RES_SHIFT)
                         + F.col("__ix") * F.lit(1 << C.IX_SHIFT)
                         + F.col("__iy"))
-            .drop("__ix", "__iy"))
+            .drop("__r", "__ix", "__iy"))
 
 
 # the tile columns the pixel kernels read
@@ -157,15 +170,14 @@ def map_tile_zones(op: str, tiles: DataFrame, zones: DataFrame,
 
     - broadcast: each tile gets one call with all its candidates (an
       empty list when it meets none), on the tiles' own partitions;
-      ``res`` is the zone index's (None: `_index_res` of the zones);
     - cell: with ``grouped``, the same, after a shuffle by tile;
       without it, one call per candidate (tile, zone) pair, and none
       for a tile without candidates. ``res`` (None: `auto_res` of the
       tiles) and ``max_cells`` size the cover.
     """
     from ..operators.sjoin import (  # deferred: circular
+        _BroadcastIndex,
         _bbox_candidates,
-        _cell_index,
         _spread,
         _strategy,
     )
@@ -177,18 +189,16 @@ def map_tile_zones(op: str, tiles: DataFrame, zones: DataFrame,
                          zone_wkb=zone_wkb, grouped=grouped, res=res,
                          max_cells=max_cells)
 
-    rows = sorted((r for r in zones.collect() if r[zone_wkb] is not None),
-                  key=lambda r: (r[zone_id] is None, r[zone_id]))
-    geoms = [wkb.decode(r[zone_wkb]) for r in rows]
-    boxes = np.array([K.bounds(g) for g in geoms]).reshape(-1, 4)
-    if res is None:
-        res = _index_res(boxes)
-    zattrs = [{c: r[c] for c in cols if c != zone_wkb} for r in rows]
-    bc = tiles.sparkSession.sparkContext.broadcast(
-        (zattrs, geoms, boxes, _cell_index(geoms, res), res))
+    index = _BroadcastIndex(zones, zone_wkb, _index_res,
+                            key=lambda r: (r[zone_id] is None, r[zone_id]))
+    bc = index.bc
+    bz = tiles.sparkSession.sparkContext.broadcast((
+        [{c: r[c] for c in cols if c != zone_wkb} for r in index.rows],
+        index.boxes))
 
     def _zones_of(t) -> list:
-        zattrs_, geoms_, boxes_, index_, res_ = bc.value
+        geoms_, index_, res_ = bc.value
+        zattrs_, boxes_ = bz.value
         # the tile bbox padded by half a pixel: every pixel centre and
         # pixel rectangle lies inside it
         rx, ry = t["gt_rx"], t["gt_ry"]
@@ -196,7 +206,7 @@ def map_tile_zones(op: str, tiles: DataFrame, zones: DataFrame,
         x1 = t["gt_x0"] + rx * (int(t["w"]) + 0.5)
         y0 = t["gt_y0"] - ry * (int(t["h"]) + 0.5)
         cand = _bbox_candidates(index_, res_, (x0, y0, x1, y1), len(geoms_))
-        b = boxes_[cand]
+        b = boxes_[cand]  # NaN for a null geometry: never passes
         cand = cand[(b[:, 0] <= x1) & (b[:, 2] >= x0)
                     & (b[:, 1] <= y1) & (b[:, 3] >= y0)]
         return [(zattrs_[j], geoms_[j]) for j in cand]
@@ -218,8 +228,10 @@ def _each_row(it: Iterator[pd.DataFrame], fn: Callable):
 
 def _index_res(boxes: np.ndarray) -> int:
     """Res of the broadcast zone index: the finest whose cells are as
-    large as the median zone bbox, so a typical zone sits in ≤ 4 cells
-    (picked from the collected zones: no job over the tiles)."""
+    large as the median zone bbox (NaN rows skipped), so a typical zone
+    sits in ≤ 4 cells (picked from the collected zones: no job over the
+    tiles)."""
+    boxes = boxes[~np.isnan(boxes[:, 0])]
     if not len(boxes):
         return 0
     sx = float(np.median(boxes[:, 2] - boxes[:, 0]))
@@ -259,36 +271,15 @@ def _cell_pairs(tiles: DataFrame, zones: DataFrame, *, zone_id: str,
     ``res`` (None: `auto_res`) ⋈ zone cover cells (``how``='left' keeps
     tiles without candidates, with null zone columns). The cover of a
     zone whose bbox spans more than ``max_cells`` cells at ``res`` is
-    coarsened, so no tile cell equals its cells: such zones pair with
-    the tiles by bbox overlap, the bbox taken from their coarse cells."""
+    coarsened, so the tile side also carries its cells' ancestors at
+    every coarser res: one equi-join matches both."""
     from ..operators.core import CELL_COL, explode_cover  # deferred: circular
 
     if res is None:
         res = auto_res(tiles)
     zc = explode_cover(zones, zone_wkb, CELL_COL, res, res, max_cells)
-    cres = F.shiftright(F.col(CELL_COL), C.RES_SHIFT)
-    fine = (tile_cover(tiles, res)
-            .join(zc.where(cres == res), on=CELL_COL, how=how)
-            .drop(CELL_COL))
-
-    mask = (1 << C.IX_SHIFT) - 1
-    ix = F.shiftright(F.col(CELL_COL), C.IX_SHIFT).bitwiseAND(mask)
-    iy = F.col(CELL_COL).bitwiseAND(mask)
-    cw = F.lit(360.0) / F.pow(F.lit(2.0), cres)
-    ch = F.lit(180.0) / F.pow(F.lit(2.0), cres)
-    big = (zc.where(cres != res).groupBy(zone_id).agg(
-        *[F.first(c).alias(c) for c in zones.columns if c != zone_id],
-        F.min(ix * cw - 180.0).alias("__zx0"),
-        F.max((ix + 1) * cw - 180.0).alias("__zx1"),
-        F.min(iy * ch - 90.0).alias("__zy0"),
-        F.max((iy + 1) * ch - 90.0).alias("__zy1")))
-    overlap = ((F.col("__zx0") <= F.col("gt_x0") + F.col("gt_rx") * F.col("w"))
-               & (F.col("__zx1") >= F.col("gt_x0"))
-               & (F.col("__zy0") <= F.col("gt_y0"))
-               & (F.col("__zy1") >= F.col("gt_y0") - F.col("gt_ry") * F.col("h")))
-    coarse = (tiles.join(big, overlap)
-              .drop("__zx0", "__zx1", "__zy0", "__zy1"))
-    return (fine.unionByName(coarse)
+    return (tile_cover(tiles, res, coarser=True)
+            .join(zc, on=CELL_COL, how=how).drop(CELL_COL)
             .dropDuplicates(["image_id", zone_id]))
 
 
@@ -348,7 +339,8 @@ def zonal_partials(rasters: DataFrame, zones: DataFrame, *,
                    patch_value: float | None = None,
                    res: int | None = None, max_cells: int = 1024) -> DataFrame:
     """(tile, zone) partial aggregates — see map_tile_zones for the
-    candidate pairs."""
+    candidate pairs; ``res`` and ``max_cells`` size its cell plan's
+    cover."""
     fields = ([T.StructField("image_id", T.StringType()),
                zones.schema[zone_id]] + PARTIAL_SCHEMA)
 

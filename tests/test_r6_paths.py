@@ -141,7 +141,7 @@ def test_small_input_job_budget(spark, make, budget):
     the distributed rounds on the same inputs run 25 to 152). A small
     zone layer takes the broadcast plan of zonal statistics and tile
     burning (measured 4 and 3: the size gate, the zone collect, and the
-    output's aggregate or collect; the cell plan runs 10 each)."""
+    output's aggregate or collect; the cell plan runs 8 each)."""
     sc = spark.sparkContext
     run = make(spark)
     group = f"job-budget{make.__name__}"

@@ -186,12 +186,14 @@ def _paths(monkeypatch, caplog, op, run):
 @pytest.fixture(scope="module")
 def mixed(spark):
     """A 3×3 mosaic plus a tile far from every zone, and eight zones
-    plus one with a null geometry."""
+    plus one with a null geometry. Each zone has a ``val``, null for
+    one zone with a geometry."""
     ras = fixtures.gen_rasters(3, 3, 16)
     far = ras.iloc[[0]].assign(image_id="far", gt_x0=100.0)
     zones = fixtures.gen_zones(8)[["gid", "geometry_wkb"]]
     zones = pd.concat([zones, pd.DataFrame({"gid": [99],
                                             "geometry_wkb": [None]})])
+    zones["val"] = [None if g == 3 else g * 1.5 for g in zones["gid"]]
     return (spark.createDataFrame(pd.concat([ras, far], ignore_index=True)),
             spark.createDataFrame(zones))
 
@@ -230,21 +232,27 @@ def test_value_counts_plans_agree(monkeypatch, caplog, mixed):
     assert b == c and len(b) > 0
 
 
+@pytest.mark.parametrize("burn_attr", ["gid", "val"])
 @pytest.mark.parametrize("all_touched", [False, True])
-def test_burn_plans_agree(monkeypatch, caplog, mixed, all_touched):
-    """Burning the zone id itself, overlapping zones burn in ascending
-    id on both plans, and the far tile stays background."""
+def test_burn_plans_agree(monkeypatch, caplog, mixed, all_touched,
+                          burn_attr):
+    """Burning the zone id itself or an attribute with a null, overlapping
+    zones burn in ascending id on both plans, the null burns NaN, and
+    the far tile stays background."""
     from gis_tools_spark.raster.burn import burn_zones_to_tiles
 
     ras, zones = mixed
     tiles = ras.drop("bytes")
     b, c = _paths(monkeypatch, caplog, "burn_zones_to_tiles", lambda: sorted(
         tuple(r) for r in burn_zones_to_tiles(
-            tiles, zones, burn_attr="gid", background=-1.0,
+            tiles, zones, burn_attr=burn_attr, background=-1.0,
             all_touched=all_touched).collect()))
     assert b == c and len(b) == 10
     assert [r[-1] for r in b if r[0] == "far"] == [0]
     assert sum(r[-1] for r in b) > 9
+    nan = any(np.isnan(np.frombuffer(r[-2], dtype=np.float32)).any()
+              for r in b)
+    assert nan == (burn_attr == "val")
 
 
 def test_oversize_zone_is_kept(monkeypatch, caplog, spark):
