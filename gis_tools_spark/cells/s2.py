@@ -344,7 +344,7 @@ def with_s2_cell(df, lon: str = "lon", lat: str = "lat",
     exponentially-sized tree — the optimizer hangs/OOMs before any
     task runs.  Use a window aggregate over the id instead (one pass,
     no self-join), or put an explicit barrier between encode and join
-    (`df.persist()` + a materializing action, or a checkpoint) —
+    (a persisted copy + a materializing action, or a checkpoint) —
     pytest-pinned in test_s2.test_downstream_patterns."""
     from pyspark.sql import functions as F
 

@@ -31,10 +31,14 @@ multi-resolution tiles.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .. import cells as C
 from . import core
+
+_log = logging.getLogger("gis_tools_spark")
 
 __all__ = ["compact_cells", "uncompact_cells", "compact_sql"]
 
@@ -57,15 +61,18 @@ def _parent(cell: Column) -> Column:
             + (iy / 2).cast("long"))
 
 
-def _compact_local(cells: "np.ndarray", min_res: int) -> "np.ndarray":
+def _compact_local(cells: "np.ndarray",
+                   min_res: int) -> tuple["np.ndarray", int, int]:
     """Exact in-memory replay of the per-level promotion cascade —
     identical semantics to the distributed loop (promote a parent when
     all 4 distinct children are present), microseconds at driver-
-    collectable sizes."""
+    collectable sizes. Returns (cells, levels that promoted, parents
+    promoted)."""
     import numpy as np
     cur = cells.astype(np.int64)
     if not len(cur):
-        return cur
+        return cur, 0, 0
+    levels = promoted = 0
     rmax = int((cur // _RES_UNIT).max())
     rmin_in = int((cur // _RES_UNIT).min())
     for r in range(rmax, min_res, -1):
@@ -87,7 +94,8 @@ def _compact_local(cells: "np.ndarray", min_res: int) -> "np.ndarray":
             continue
         keep = at_r[~np.isin(parent, prom)]
         cur = np.concatenate([others, keep, prom])
-    return cur
+        levels, promoted = levels + 1, promoted + len(prom)
+    return cur, levels, promoted
 
 
 def compact_cells(cover: DataFrame, *, cell_col: str = "cell",
@@ -105,44 +113,49 @@ def compact_cells(cover: DataFrame, *, cell_col: str = "cell",
         import numpy as np
         import pandas as pd
         arr = df.toPandas()[cell_col].to_numpy()
-        out = _compact_local(arr, min_res)
+        out, levels, n_promoted = _compact_local(arr, min_res)
+        _log.debug("compact_cells path=driver levels=%d promoted=%d",
+                   levels, n_promoted)
         return df.sparkSession.createDataFrame(
             pd.DataFrame({cell_col: np.sort(out)}),
             schema=f"{cell_col} long")
     npart = max(df.rdd.getNumPartitions(), 1)
-    cur = df.persist()
-    # one job: fills the cache and reads the resolution band
-    res_expr = (F.col(cell_col) / F.lit(_RES_UNIT)).cast("long")
-    lo_hi = cur.agg(F.min(res_expr).alias("lo"),
-                    F.max(res_expr).alias("hi")).collect()[0]
-    rmin_in, rmax = int(lo_hi["lo"]), int(lo_hi["hi"])
-    for r in range(rmax, min_res, -1):
-        cell = F.col(cell_col)
-        res_c = (cell / F.lit(_RES_UNIT)).cast("long")
-        at_r = cur.where(res_c == r)
-        others = cur.where(res_c != r)
-        promoted = (at_r.groupBy(_parent(cell).alias(cell_col))
-                    .agg(F.count("*").alias("__n"))
-                    .where(F.col("__n") == 4)
-                    .select(cell_col)
-                    .persist())
-        n_prom = promoted.count()
-        if n_prom == 0:
-            promoted.unpersist()
-            if rmin_in >= r:   # nothing can ever promote below this level
-                break
-            continue
-        kept = at_r.join(
-            promoted.select(F.col(cell_col).alias("__p")),
-            _parent(F.col(cell_col)) == F.col("__p"), "left_anti")
-        # coalesce: the three-way union would otherwise compound partition
-        # counts round over round (2p + shuffle width per level)
-        nxt = (others.unionByName(kept).unionByName(promoted)
-               .coalesce(npart).persist())
-        nxt.count()
-        cur.unpersist()
-        promoted.unpersist()
-        cur = nxt
+    cur, levels, n_promoted = df, 0, 0
+    # the input is kept for the resolution probe and the first level;
+    # each level's state is an eager local checkpoint, as in fixpoint
+    with core.cache_scope() as keep_input:
+        keep_input(df)
+        res_expr = (F.col(cell_col) / F.lit(_RES_UNIT)).cast("long")
+        lo_hi = df.agg(F.min(res_expr).alias("lo"),
+                       F.max(res_expr).alias("hi")).collect()[0]
+        rmin_in, rmax = int(lo_hi["lo"]), int(lo_hi["hi"])
+        for r in range(rmax, min_res, -1):
+            cell = F.col(cell_col)
+            res_c = (cell / F.lit(_RES_UNIT)).cast("long")
+            at_r = cur.where(res_c == r)
+            others = cur.where(res_c != r)
+            with core.cache_scope() as keep:
+                promoted = keep(at_r.groupBy(_parent(cell).alias(cell_col))
+                                .agg(F.count("*").alias("__n"))
+                                .where(F.col("__n") == 4)
+                                .select(cell_col))
+                n_prom = promoted.count()
+                if n_prom == 0:
+                    if rmin_in >= r:  # nothing can ever promote below
+                        break
+                    continue
+                kept = at_r.join(
+                    promoted.select(F.col(cell_col).alias("__p")),
+                    _parent(F.col(cell_col)) == F.col("__p"), "left_anti")
+                # coalesce: the three-way union would otherwise compound
+                # partition counts round over round (2p + shuffle width
+                # per level)
+                cur = (others.unionByName(kept).unionByName(promoted)
+                       .coalesce(npart).localCheckpoint(eager=True))
+            levels += 1
+            n_promoted += n_prom
+    _log.debug("compact_cells path=distributed levels=%d promoted=%d",
+               levels, n_promoted)
     return cur
 
 

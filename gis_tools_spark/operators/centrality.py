@@ -38,7 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .core import cpu_grouped
+from .core import cache_scope, cpu_grouped
 from .network import connected_components
 
 __all__ = ["betweenness", "closeness"]
@@ -163,8 +163,8 @@ def closeness(edges: DataFrame, *, weight_col: str | None = None,
     sym = sym.groupBy("u", "v").agg(F.min("w").alias("w"))
 
     comp = connected_components(edges_n).select("node", "component")
-    esym = sym.join(comp.withColumnRenamed("node", "u"), on="u").persist()
-    try:
+    with cache_scope() as keep:
+        esym = keep(sym.join(comp.withColumnRenamed("node", "u"), on="u"))
         sizes = esym.groupBy("component").agg(
             (F.count("*") / 2).alias("n_edges"),
             F.countDistinct("u").alias("n_nodes"),
@@ -248,10 +248,7 @@ def closeness(edges: DataFrame, *, weight_col: str | None = None,
                .select("node",
                        F.coalesce("closeness", F.lit(0.0)).alias("closeness"),
                        F.coalesce("harmonic", F.lit(0.0)).alias("harmonic")))
-        out = out.localCheckpoint(eager=True)
-    finally:
-        esym.unpersist()
-    return out
+        return out.localCheckpoint(eager=True)
 
 
 def betweenness(edges: DataFrame, *, weight_col: str | None = None,
@@ -286,9 +283,8 @@ def betweenness(edges: DataFrame, *, weight_col: str | None = None,
 
     comp = connected_components(edges_n).select(
         F.col("node"), F.col("component"))
-    esym = (sym.join(comp.withColumnRenamed("node", "u"), on="u")
-            .persist())
-    try:
+    with cache_scope() as keep:
+        esym = keep(sym.join(comp.withColumnRenamed("node", "u"), on="u"))
         sizes = esym.groupBy("component").agg(
             (F.count("*") / 2).alias("n_edges"),
             F.countDistinct("u").alias("n_nodes"),
@@ -369,7 +365,4 @@ def betweenness(edges: DataFrame, *, weight_col: str | None = None,
                .select("node",
                        F.coalesce("betweenness", F.lit(0.0))
                        .alias("betweenness")))
-        out = out.localCheckpoint(eager=True)
-    finally:
-        esym.unpersist()
-    return out
+        return out.localCheckpoint(eager=True)

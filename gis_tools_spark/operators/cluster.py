@@ -43,7 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .core import persist_scoped
+from .core import cache_scope
 from .network import connected_components
 
 __all__ = ["dbscan", "st_dbscan"]
@@ -101,10 +101,11 @@ def _labels_from_pairs(points: DataFrame, pairs: DataFrame, *,
     """Shared DBSCAN label phase over the UNORDERED neighbor pair set
     (each {p,q}, p != q, exactly once, arbitrary orientation): core
     filter → pointer-jumping components on the core graph → min-rule
-    border assignment. Working on unordered pairs halves the persisted
+    border assignment. Working on unordered pairs halves the cached
     pair set and every downstream join vs the round-5 ordered relation
-    (guide §2.3 — shuffle fewer bytes)."""
-    pairs = pairs.persist()
+    (guide §2.3 — shuffle fewer bytes). The labels come back as an
+    eager local checkpoint, so the pair and core caches are freed on
+    return."""
     # |N_eps(p)| counts p itself: core ⇔ (#unordered pairs touching p)
     # + 1 >= min_pts. Isolated points never appear in `pairs`, so for
     # min_pts <= 1 every point is core.
@@ -121,37 +122,40 @@ def _labels_from_pairs(points: DataFrame, pairs: DataFrame, *,
                   .join(core.withColumnRenamed("__cid", "ib"), on="ib")
                   .select(F.col("ia").alias("src_key"),
                           F.col("ib").alias("dst_key")))
-    labels = connected_components(core_edges)
-    core_clusters = (core.join(labels.withColumnRenamed("node", "__cid"),
-                               on="__cid", how="left")
-                     .select(F.col("__cid"),
-                             F.coalesce("component", F.col("__cid"))
-                             .alias("__cluster"))).persist()
-    # border points: non-core, >=1 core neighbor; min cluster among
-    # them — probe the unordered pairs from both ends
-    hits = (pairs.join(core_clusters.withColumnRenamed("__cid", "ib"),
-                       on="ib")
-            .select(F.col("ia").alias("__bid"), "__cluster")
-            .unionAll(
-                pairs.join(core_clusters.withColumnRenamed("__cid", "ia"),
-                           on="ia")
-                .select(F.col("ib").alias("__bid"), "__cluster")))
-    border = (hits
-              .join(core.withColumnRenamed("__cid", "__bid"), on="__bid",
-                    how="left_anti")
-              .groupBy("__bid").agg(F.min("__cluster").alias("__cluster")))
-    out = (points
-           .join(core_clusters.withColumnRenamed("__cid", id_col),
-                 on=id_col, how="left")
-           .withColumnRenamed("__cluster", "__core_cluster")
-           .join(border.withColumnRenamed("__bid", id_col), on=id_col,
-                 how="left")
-           .select(
-               F.col(id_col),
-               F.col("__core_cluster").isNotNull().alias("is_core"),
-               F.coalesce("__core_cluster", "__cluster").cast("long")
-               .alias("cluster")))
-    return persist_scoped(pairs, persist_scoped(core_clusters, out))
+    with cache_scope() as keep:
+        keep(pairs)
+        labels = connected_components(core_edges)
+        core_clusters = keep(
+            core.join(labels.withColumnRenamed("node", "__cid"),
+                      on="__cid", how="left")
+            .select(F.col("__cid"),
+                    F.coalesce("component", F.col("__cid"))
+                    .alias("__cluster")))
+        # border points: non-core, >=1 core neighbor; min cluster among
+        # them — probe the unordered pairs from both ends
+        hits = (pairs.join(core_clusters.withColumnRenamed("__cid", "ib"),
+                           on="ib")
+                .select(F.col("ia").alias("__bid"), "__cluster")
+                .unionAll(
+                    pairs.join(core_clusters.withColumnRenamed("__cid", "ia"),
+                               on="ia")
+                    .select(F.col("ib").alias("__bid"), "__cluster")))
+        border = (hits
+                  .join(core.withColumnRenamed("__cid", "__bid"), on="__bid",
+                        how="left_anti")
+                  .groupBy("__bid").agg(F.min("__cluster").alias("__cluster")))
+        out = (points
+               .join(core_clusters.withColumnRenamed("__cid", id_col),
+                     on=id_col, how="left")
+               .withColumnRenamed("__cluster", "__core_cluster")
+               .join(border.withColumnRenamed("__bid", id_col), on=id_col,
+                     how="left")
+               .select(
+                   F.col(id_col),
+                   F.col("__core_cluster").isNotNull().alias("is_core"),
+                   F.coalesce("__core_cluster", "__cluster").cast("long")
+                   .alias("cluster")))
+        return out.localCheckpoint(eager=True)
 
 
 def _st_pairs_unordered(points: DataFrame, *, id_col: str,

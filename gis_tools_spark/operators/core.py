@@ -22,6 +22,7 @@ Scale design notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import logging
+from contextlib import contextmanager
 from typing import Callable
 
 import numpy as np
@@ -74,23 +75,26 @@ def prepared_cached(buf: bytes) -> "K.PreparedGeom":
     return p
 
 
-def persist_scoped(cached: DataFrame, result: DataFrame) -> DataFrame:
-    """Tie a persisted intermediate's lifetime to the op's result: when
-    the caller's last reference to ``result`` is garbage-collected, the
-    intermediate is unpersisted. Repeated operator invocations in a
-    long-lived session therefore stop accumulating cached partitions
-    (round-3 advisory) while the returned lazy plan can still reuse the
-    cache across its own multiple consumers."""
-    import weakref
+@contextmanager
+def cache_scope():
+    """The one cache lifetime rule: ``keep(df)`` persists ``df`` and
+    returns it, and every kept frame is unpersisted when the block
+    exits, normally or by an exception. So a cache serves only the
+    actions the op runs inside the block; where the returned plan must
+    re-read an intermediate, the op returns an eager
+    ``localCheckpoint``, freed together with the plan. Caches are keyed
+    by plan: keep each frame in one scope only."""
+    kept: list[DataFrame] = []
 
-    def _release(df=cached):
-        try:
+    def keep(df: DataFrame) -> DataFrame:
+        kept.append(df.persist())
+        return df
+
+    try:
+        yield keep
+    finally:
+        for df in kept:
             df.unpersist()
-        except Exception:
-            pass
-
-    weakref.finalize(result, _release)
-    return result
 
 
 # Driver solves (CC contracted graph, watershed chase, compact_cells)

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .core import cache_scope
+
 
 def simhash_blocking(max_hamming: int, n_blocks: int | None = None
                      ) -> tuple[list[int], list[tuple[int, ...]]]:
@@ -52,7 +54,8 @@ def hamming_near_dups(df: DataFrame, *, hash_col: str, id_col: str,
     blocking (see simhash_blocking): each row emits one xxhash key per
     (n_blocks − d)-subset of its blocks; equal keys equi-join; an exact
     popcount filter confirms. Key collisions can only ADD candidates,
-    never lose pairs. Returns (id_a, id_b, hamming), id_a < id_b.
+    never lose pairs. Returns (id_a, id_b, hamming), id_a < id_b, as
+    an eager local checkpoint.
 
     Scale note: the OUTPUT (and hence the join) is inherently quadratic
     in the size of any group of identical hashes — every pair of
@@ -72,20 +75,21 @@ def hamming_near_dups(df: DataFrame, *, hash_col: str, id_col: str,
     keys = F.array(*[
         F.xxhash64(F.lit(ci), *[block_col[j] for j in combo])
         for ci, combo in enumerate(combos)])
-    # persist: both sides of the self-join share this lineage — without
+    # keep: both sides of the self-join share this lineage — without
     # it an upstream hash kernel (e.g. a phash decode) runs twice, once
     # per join side
-    e = df.select(id_col, hash_col, F.posexplode(keys).alias("blk", "key")).persist()
+    e = df.select(id_col, hash_col, F.posexplode(keys).alias("blk", "key"))
     a = e.select(F.col(id_col).alias("id_a"), F.col(hash_col).alias("h_a"), "blk", "key")
     b = e.select(F.col(id_col).alias("id_b"), F.col(hash_col).alias("h_b"), "blk", "key")
     cand = (a.join(b, on=["blk", "key"]).where(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b", "h_a", "h_b").distinct())
     ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    from .core import persist_scoped
-
-    return persist_scoped(e, cand.withColumn("hamming", ham)
-                          .where(F.col("hamming") <= max_hamming)
-                          .select("id_a", "id_b", "hamming"))
+    with cache_scope() as keep:
+        keep(e)
+        return (cand.withColumn("hamming", ham)
+                .where(F.col("hamming") <= max_hamming)
+                .select("id_a", "id_b", "hamming")
+                .localCheckpoint(eager=True))
 
 
 def image_near_dups(df: DataFrame, *, phash_col: str = "phash",

@@ -44,17 +44,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .core import cache_scope
+
 __all__ = ["kmeans"]
 
 
 def _fit(points: DataFrame, *, k: int, n_iter: int, x: str, y: str,
          id_col: str) -> list[tuple[int, int, int]]:
     """Run the iterations; return [(j, cx, cy)] — k driver-side rows."""
-    pts = points.select(
-        F.col(id_col).cast("long").alias("__kid"),
-        F.col(x).cast("long").alias("__kx"),
-        F.col(y).cast("long").alias("__ky")).persist()
-    try:
+    with cache_scope() as keep:
+        pts = keep(points.select(
+            F.col(id_col).cast("long").alias("__kid"),
+            F.col(x).cast("long").alias("__kx"),
+            F.col(y).cast("long").alias("__ky")))
         # the exact floor-mean contract relies on Spark's truncating
         # `div` == floor division, which holds only for NONNEGATIVE
         # sums — guard it (mirrors centrality.py's min_w <= 0 guard;
@@ -86,8 +88,6 @@ def _fit(points: DataFrame, *, k: int, n_iter: int, x: str, y: str,
             # emptied clusters keep their previous centroid
             cents = {j: new.get(j, cents[j]) for j in range(k)}
         return [(j, cents[j][0], cents[j][1]) for j in range(k)]
-    finally:
-        pts.unpersist()
 
 
 def _assign_expr(cents: dict[int, tuple[int, int]],

@@ -121,16 +121,15 @@ def _nearest_rings(points, features, *, lon, lat, point_id, feat_wkb, feat_id,
     confirm radius exceeds 2*max_k — fall back to the broadcast
     all-pairs pass (few stragglers by construction).
     """
-    from .core import CELL_COL, explode_cover
+    from .core import CELL_COL, cache_scope, explode_cover
 
     # cells are 360/2^res wide but 180/2^res tall — the exactness radius
     # must use the smaller extent
     cell_w = 180.0 / (1 << res)
-    # persist: every expansion round joins against this cover — without
-    # it the cover UDF re-runs over the whole feature side per round
+    # kept below: every round joins against this cover — without it
+    # the cover UDF re-runs over the whole feature side per round
     cover = explode_cover(features.select(feat_id, feat_wkb), feat_wkb,
-                          CELL_COL, res, res, max_cells=4096).drop(feat_wkb) \
-        .persist()
+                          CELL_COL, res, res, max_cells=4096).drop(feat_wkb)
 
     feats = features.select(feat_id, feat_wkb)
     w = Window.partitionBy(point_id).orderBy(F.col("__order"), F.col(feat_id))
@@ -153,44 +152,52 @@ def _nearest_rings(points, features, *, lon, lat, point_id, feat_wkb, feat_id,
     deferred = []  # hit points whose confirm radius exceeded 2*max_k —
                    # routed to the broadcast fallback, never dropped
     k, lo, rounds = 0, 0, 0
-    while k <= max_k:
-        rounds += 1
-        best = _round_best(remaining, lo, k).localCheckpoint(eager=True)
-        if best.limit(1).count():
-            kconf = best.agg(F.max(F.ceil(F.col("nearest_dist") / F.lit(cell_w)))).collect()[0][0]
-            kconf = int(kconf or 0) + 1
-            if kconf > 2 * max_k:
-                # confirm annulus too wide to enumerate — defer the hit
-                # points to the broadcast fallback below
-                hit = best.select(point_id)
-                deferred.append(remaining.join(hit, on=point_id, how="left_semi")
-                                .localCheckpoint(eager=True))
-                remaining = remaining.join(hit, on=point_id, how="left_anti") \
-                                     .localCheckpoint(eager=True)
+    # every winner piece is an eager checkpoint and the broadcast
+    # fallback never reads the cover, so its cache ends with the rounds
+    with cache_scope() as keep:
+        keep(cover)
+        while k <= max_k:
+            rounds += 1
+            best = _round_best(remaining, lo, k).localCheckpoint(eager=True)
+            if best.limit(1).count():
+                kconf = best.agg(F.max(F.ceil(
+                    F.col("nearest_dist") / F.lit(cell_w)))).collect()[0][0]
+                kconf = int(kconf or 0) + 1
+                if kconf > 2 * max_k:
+                    # confirm annulus too wide to enumerate — defer the hit
+                    # points to the broadcast fallback below
+                    hit = best.select(point_id)
+                    deferred.append(remaining.join(hit, on=point_id,
+                                                   how="left_semi")
+                                    .localCheckpoint(eager=True))
+                    remaining = (remaining.join(hit, on=point_id,
+                                                how="left_anti")
+                                 .localCheckpoint(eager=True))
+                    if remaining.limit(1).count() == 0:
+                        remaining = None
+                        break
+                    lo = k + 1
+                    k = 1 if k == 0 else k * 2
+                    continue
+                if kconf > k:
+                    # exactness re-check: only the OUTER annulus (k, kconf] —
+                    # the inner disk is already reflected in `best`
+                    hit_pts = remaining.join(best.select(point_id),
+                                             on=point_id, how="left_semi")
+                    extra = _round_best(hit_pts, k + 1, kconf)
+                    best = (best.unionByName(extra)
+                            .withColumn("__rn", F.row_number().over(w2))
+                            .where("__rn = 1").drop("__rn")
+                            .localCheckpoint(eager=True))
+                winners.append(best.drop("__order"))
+                remaining = (remaining.join(best.select(point_id),
+                                            on=point_id, how="left_anti")
+                             .localCheckpoint(eager=True))
                 if remaining.limit(1).count() == 0:
                     remaining = None
                     break
-                lo = k + 1
-                k = 1 if k == 0 else k * 2
-                continue
-            if kconf > k:
-                # exactness re-check: only the OUTER annulus (k, kconf] —
-                # the inner disk is already reflected in `best`
-                hit_pts = remaining.join(best.select(point_id), on=point_id,
-                                         how="left_semi")
-                extra = _round_best(hit_pts, k + 1, kconf)
-                best = (best.unionByName(extra)
-                        .withColumn("__rn", F.row_number().over(w2))
-                        .where("__rn = 1").drop("__rn")
-                        .localCheckpoint(eager=True))
-            winners.append(best.drop("__order"))
-            remaining = remaining.join(best.select(point_id), on=point_id,
-                                       how="left_anti").localCheckpoint(eager=True)
-            if remaining.limit(1).count() == 0:
-                remaining = None
-                break
-        lo = k + 1
-        k = 1 if k == 0 else k * 2
+            lo = k + 1
+            k = 1 if k == 0 else k * 2
     fallback = list(deferred)
     if remaining is not None and remaining.limit(1).count():
         fallback.append(remaining)
@@ -203,10 +210,6 @@ def _nearest_rings(points, features, *, lon, lat, point_id, feat_wkb, feat_id,
         winners.append(_nearest_broadcast(fb, features, lon=lon, lat=lat,
                                           point_id=point_id, feat_wkb=feat_wkb,
                                           feat_id=feat_id))
-    # every winner piece is eagerly checkpointed and the broadcast
-    # fallback never touches the cover — safe to release it here
-    # (round-3 advisory: persists accumulated across invocations)
-    cover.unpersist()
     if not winners:
         # empty points input: empty DataFrame with the output schema
         return _nearest_broadcast(points.limit(0), features, lon=lon, lat=lat,

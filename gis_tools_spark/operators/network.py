@@ -130,45 +130,45 @@ def connected_components(edges: DataFrame, *, max_iter: int = 64) -> DataFrame:
         yield _cc_pairs_pandas(pdf["src_key"], pdf["dst_key"])
 
     mapping = edges.select("src_key", "dst_key").mapInPandas(
-        _local, schema=f"node {key_t}, lroot {key_t}").persist()
+        _local, schema=f"node {key_t}, lroot {key_t}")
     # contracted constraints: every node ties its min lroot to each of
     # its other lroots (collect_set is tiny per node — one entry per
     # task the node appeared in)
     grp = (mapping.groupBy("node")
            .agg(F.min("lroot").alias("__lo"),
                 F.collect_set("lroot").alias("__ls")))
-    # eager checkpoint (not persist): truncates the contracted graph's
-    # logical plan so the propagation rounds re-plan a leaf, not the
-    # whole mapping lineage per round
-    e2 = (grp.select(F.col("__lo").alias("src_key"),
-                     F.explode("__ls").alias("dst_key"))
-          .where(F.col("src_key") != F.col("dst_key"))
-          .localCheckpoint(eager=True))
-    # distributed path: min-label rounds on the symmetrized contracted
-    # graph. (A recursive contract-again variant was measured and
-    # REVERTED: each level's logical plan nests the previous one —
-    # persist does not truncate plans — and driver planning time blew
-    # up 5x, bimodally, on the st_dbscan gate.)
-    und = (e2.select(F.col("src_key").alias("a"), F.col("dst_key").alias("b"))
-           .unionAll(e2.select(F.col("dst_key").alias("a"),
-                               F.col("src_key").alias("b")))
-           .distinct()).persist()
-    lab2, _, _ = fixpoint(
-        "connected_components", e2, _minlabel_step(und),
-        max_rounds=max_iter,
-        start=lambda _: (und.select(F.col("a").alias("node")).distinct()
-                         .withColumn("component", F.col("node"))
-                         .localCheckpoint(eager=True)),
-        driver=solve, schema=schema)
-    und.unpersist()
-    out = (mapping.join(lab2.withColumnRenamed("node", "lroot"),
-                        on="lroot", how="left")
-           .groupBy("node")
-           .agg(F.min(F.coalesce("component", F.col("lroot")))
-                .alias("component"))
-           .localCheckpoint(eager=True))
-    mapping.unpersist()
-    return out
+    with core.cache_scope() as keep:
+        keep(mapping)
+        # eager checkpoint (not a cache): truncates the contracted
+        # graph's logical plan so the propagation rounds re-plan a leaf,
+        # not the whole mapping lineage per round
+        e2 = (grp.select(F.col("__lo").alias("src_key"),
+                         F.explode("__ls").alias("dst_key"))
+              .where(F.col("src_key") != F.col("dst_key"))
+              .localCheckpoint(eager=True))
+        # distributed path: min-label rounds on the symmetrized
+        # contracted graph. (A recursive contract-again variant was
+        # measured and REVERTED: each level's logical plan nests the
+        # previous one — persist does not truncate plans — and driver
+        # planning time blew up 5x, bimodally, on the st_dbscan gate.)
+        und = keep(e2.select(F.col("src_key").alias("a"),
+                             F.col("dst_key").alias("b"))
+                   .unionAll(e2.select(F.col("dst_key").alias("a"),
+                                       F.col("src_key").alias("b")))
+                   .distinct())
+        lab2, _, _ = fixpoint(
+            "connected_components", e2, _minlabel_step(und),
+            max_rounds=max_iter,
+            start=lambda _: (und.select(F.col("a").alias("node")).distinct()
+                             .withColumn("component", F.col("node"))
+                             .localCheckpoint(eager=True)),
+            driver=solve, schema=schema)
+        return (mapping.join(lab2.withColumnRenamed("node", "lroot"),
+                             on="lroot", how="left")
+                .groupBy("node")
+                .agg(F.min(F.coalesce("component", F.col("lroot")))
+                     .alias("component"))
+                .localCheckpoint(eager=True))
 
 
 def _minlabel_step(und: DataFrame):
@@ -219,19 +219,13 @@ def _bellman_ford(edges: DataFrame, sources: list[str], weight_col: str,
                        F.col(weight_col).cast("double").alias("w"))
     sym = sym.unionByName(
         sym.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
-    sym = sym.groupBy("u", "v").agg(F.min("w").alias("w")).persist()
+    sym = sym.groupBy("u", "v").agg(F.min("w").alias("w"))
     nodes = sym.select(F.col("u").alias("node")).distinct()
     # init rows come from an independent local relation (aliasing one
     # attribute into both 'source' and 'node' breaks localCheckpoint's
     # attribute rewrite: "key not found: source#N")
     init = spark.createDataFrame([(s, s, 0.0) for s in sources],
                                  "source string, node string, dist double")
-    # the state carries the frontier as `__front` (rows improved last
-    # round); the init rows are the first frontier
-    dist = (init.join(nodes, on="node")
-            .select("source", "node", "dist",
-                    F.lit(True).alias("__front"))
-            .localCheckpoint(eager=True))
 
     def relax(state: DataFrame) -> DataFrame:
         cand = (state.where("__front").join(sym, F.col("node") == sym["u"])
@@ -254,16 +248,23 @@ def _bellman_ford(edges: DataFrame, sources: list[str], weight_col: str,
                         F.least("dist", "__d_old").alias("dist"),
                         imp.alias("__front"), imp.alias("__chg")))
 
-    # a user cap of max_iter rounds keeps the pre-round-6 contract: the
-    # capped round's relaxations are discarded, so max_iter - 1 rounds
-    # run and no error is raised. Uncapped, a simple shortest path has
-    # fewer hops than the graph has nodes, so one round more than that
-    # always converges unless a negative cycle exists.
-    dist, _, _ = fixpoint(
-        "shortest_paths", dist, relax,
-        max_rounds=max_iter - 1 if max_iter else nodes.count() + 1,
-        strict=not max_iter)
-    sym.unpersist()
+    with core.cache_scope() as keep:
+        keep(sym)
+        # the state carries the frontier as `__front` (rows improved
+        # last round); the init rows are the first frontier
+        dist = (init.join(nodes, on="node")
+                .select("source", "node", "dist",
+                        F.lit(True).alias("__front"))
+                .localCheckpoint(eager=True))
+        # a user cap of max_iter rounds keeps the pre-round-6 contract:
+        # the capped round's relaxations are discarded, so max_iter - 1
+        # rounds run and no error is raised. Uncapped, a simple shortest
+        # path has fewer hops than the graph has nodes, so one round
+        # more than that always converges unless a negative cycle exists.
+        dist, _, _ = fixpoint(
+            "shortest_paths", dist, relax,
+            max_rounds=max_iter - 1 if max_iter else nodes.count() + 1,
+            strict=not max_iter)
     return dist.drop("__front")
 
 
@@ -397,13 +398,14 @@ def pagerank(edges: DataFrame, *, src_col: str = "src",
     run in numpy on its factorized node codes (``_pagerank_pandas``);
     the ranks come back broadcast-hinted. Above the gate: one shuffled
     contribution aggregation per round keyed on dst (map-side
-    combined), the dangling scalar rides a 1-row crossJoin (no driver
-    action per round), and eager localCheckpoint truncates the
-    iteration lineage exactly like the component/kNN loops. At 1000
-    executors each round is one shuffle of the live rank vector — the
-    canonical distributed formulation. The two paths sum the
-    contributions in different orders, so their ranks agree to float
-    rounding, not bit for bit."""
+    combined), the dangling scalar rides a 1-row crossJoin, and each
+    round is an eager localCheckpoint over the cached edges, which
+    truncates the iteration lineage like the component/kNN loops and
+    leaves the returned ranks reading no cache. At 1000 executors each
+    round is one shuffle of the live rank vector — the canonical
+    distributed formulation. The two paths sum the contributions in
+    different orders, so their ranks agree to float rounding, not bit
+    for bit."""
     key_t = edges.schema[src_col].dataType.simpleString()
     solved = core.driver_solve(
         "pagerank", edges.select(F.col(src_col).alias("src"),
@@ -420,7 +422,7 @@ def pagerank(edges: DataFrame, *, src_col: str = "src",
     npart = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     e = (edges.select(F.col(src_col).alias("src"),
                       F.col(dst_col).alias("dst"))
-         .repartition(npart, "src").persist())
+         .repartition(npart, "src"))
     nodes = (e.select(F.col("src").alias("node"))
              .unionByName(e.select(F.col("dst").alias("node")))
              .distinct())
@@ -428,26 +430,29 @@ def pagerank(edges: DataFrame, *, src_col: str = "src",
               .withColumnRenamed("src", "node"))
     nd = (nodes.join(outdeg, on="node", how="left")
           .select("node", F.coalesce("outdeg", F.lit(0)).alias("outdeg")))
-    n = nd.count()
-    pr = (nd.withColumn("pr", F.lit(1.0 / n))).localCheckpoint()
-    base = (1.0 - damping) / n
-    for _ in range(iters):
-        dang = pr.select(F.coalesce(F.sum(F.when(
-            F.col("outdeg") == 0, F.col("pr"))), F.lit(0.0)).alias("dang"))
-        contrib = (pr.join(e, pr["node"] == e["src"])
-                   .groupBy("dst")
-                   .agg(F.sum(F.col("pr") / F.col("outdeg"))
-                        .alias("contrib"))
-                   .withColumnRenamed("dst", "node"))
-        pr = (pr.select("node", "outdeg")
-              .join(contrib, on="node", how="left")
-              .crossJoin(dang)
-              .select("node", "outdeg",
-                      (F.lit(base) + F.lit(damping)
-                       * (F.coalesce("contrib", F.lit(0.0))
-                          + F.col("dang") / F.lit(float(n))))
-                      .alias("pr"))).localCheckpoint()
-    e.unpersist()
+    with core.cache_scope() as keep:
+        keep(e)
+        n = nd.count()
+        pr = nd.withColumn("pr", F.lit(1.0 / n)).localCheckpoint(eager=True)
+        base = (1.0 - damping) / n
+        for _ in range(iters):
+            dang = pr.select(F.coalesce(F.sum(F.when(
+                F.col("outdeg") == 0, F.col("pr"))), F.lit(0.0))
+                .alias("dang"))
+            contrib = (pr.join(e, pr["node"] == e["src"])
+                       .groupBy("dst")
+                       .agg(F.sum(F.col("pr") / F.col("outdeg"))
+                            .alias("contrib"))
+                       .withColumnRenamed("dst", "node"))
+            pr = (pr.select("node", "outdeg")
+                  .join(contrib, on="node", how="left")
+                  .crossJoin(dang)
+                  .select("node", "outdeg",
+                          (F.lit(base) + F.lit(damping)
+                           * (F.coalesce("contrib", F.lit(0.0))
+                              + F.col("dang") / F.lit(float(n))))
+                          .alias("pr"))
+                  .localCheckpoint(eager=True))
     return pr.select("node", "pr")
 
 

@@ -31,6 +31,8 @@ from typing import Sequence
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .core import cache_scope
+
 __all__ = ["ripleys_k", "quadrat_test", "cross_k", "g_function",
            "f_function"]
 
@@ -274,12 +276,8 @@ def _nn_ladder(a: DataFrame, b: DataFrame, radii, *, same_set: bool,
     # shuffled source could silently reassign monotonically_increasing_id
     # (round-5 ADVICE, medium). The eager checkpoint pins the ids
     # durably; a lost block is an error, never a silent relabel.
-    if same_set:
-        qa = _q(a, True).localCheckpoint(eager=True)
-        qb = qa
-    else:
-        qa = _q(a, True).localCheckpoint(eager=True)
-        qb = _q(b, False).persist()
+    qa = _q(a, True).localCheckpoint(eager=True)
+    qb = qa if same_set else _q(b, False)
     n_a = qa.count()
     offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
     dx = F.col("ax") - F.col("cx")
@@ -308,41 +306,40 @@ def _nn_ladder(a: DataFrame, b: DataFrame, radii, *, same_set: bool,
         return (j.where(d2 <= F.lit(Lk * Lk).cast("long"))
                 .groupBy("ra").agg(F.min(d2).alias("nn_d2")))
 
-    unresolved = qa
-    to_unpersist = [] if same_set else [qb]   # qa is checkpointed: see below
-    found = []
-    n_found = 0
-    for k, rk in enumerate(r_int):
-        nn_k = _level_join(unresolved, rk).persist()
-        c_k = nn_k.count()
-        n_found += c_k
-        found.append(nn_k)
-        to_unpersist.append(nn_k)
-        if k + 1 < len(r_int):
-            unresolved = unresolved.join(
-                nn_k.select(F.col("ra").alias("__rid")),
-                on="__rid", how="left_anti").persist()
-            to_unpersist.append(unresolved)
-            if unresolved.count() == 0:
-                break
-    nn = found[0]
-    for f in found[1:]:
-        nn = nn.unionByName(f)
     idx = None
     for k in range(len(r_int) - 1, -1, -1):
         cond = F.col("nn_d2") <= F.lit(r_int[k] * r_int[k]).cast("long")
-        idx = F.when(cond, F.lit(k)) if idx is None else             F.when(cond, F.lit(k)).otherwise(idx)
-    per = {int(r["r_idx"]): int(r["__c"]) for r in
-           nn.groupBy(idx.alias("r_idx"))
-           .agg(F.count("*").alias("__c")).collect()}
-    for df in to_unpersist:
-        df.unpersist()
+        idx = (F.when(cond, F.lit(k)) if idx is None
+               else F.when(cond, F.lit(k)).otherwise(idx))
+    unresolved = qa
+    found = []
+    n_found = 0
+    with cache_scope() as keep:
+        if not same_set:
+            keep(qb)
+        for k, rk in enumerate(r_int):
+            nn_k = keep(_level_join(unresolved, rk))
+            c_k = nn_k.count()
+            n_found += c_k
+            found.append(nn_k)
+            if k + 1 < len(r_int):
+                unresolved = keep(unresolved.join(
+                    nn_k.select(F.col("ra").alias("__rid")),
+                    on="__rid", how="left_anti"))
+                if unresolved.count() == 0:
+                    break
+        nn = found[0]
+        for f in found[1:]:
+            nn = nn.unionByName(f)
+        per = {int(r["r_idx"]): int(r["__c"]) for r in
+               nn.groupBy(idx.alias("r_idx"))
+               .agg(F.count("*").alias("__c")).collect()}
     # release qa's checkpoint blocks too: nothing returned reads them,
     # and local checkpoints are otherwise freed only on driver GC
     qa._jdf.queryExecution().logical().rdd().unpersist(False)
     # the ladder is len(radii) rows — materialize the cumulative sums
-    # driver-side (frees the persisted intermediates immediately and
-    # keeps the returned plan trivially small)
+    # driver-side (the caches are freed as the scope exits, and the
+    # returned plan stays trivially small)
     rows, acc = [], 0
     for k in range(len(radii)):
         acc += per.get(k, 0)

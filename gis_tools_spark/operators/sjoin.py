@@ -41,6 +41,7 @@ from ..geom.relate import relate_batch
 from .core import (
     CELL_COL,
     SALT_COL,
+    cache_scope,
     decode_cached,
     explode_cover,
     hot_cells,
@@ -59,22 +60,22 @@ BROADCAST_MAX_BYTES = 64 << 20
 
 
 def _strategy(op: str, strategy: str, *sides, small: str = "broadcast",
-              big: str = "cell", max_rows: int | None = None,
-              max_bytes: int | None = None) -> str:
+              big: str = "cell", max_rows: int | None = None) -> str:
     """The one broadcast-or-cell decision. ``strategy='auto'`` measures
     each ``(name, df, wkb_col)`` side in order with ``core.small_side``
-    against ``max_rows``/``max_bytes`` (default: the module limits, read
-    at call time) and picks ``big`` at the first side over them, without
-    measuring the rest; any other value is the caller's choice. Logs
-    one DEBUG record ``<op> strategy=… reason=…``."""
+    against ``max_rows`` (default BROADCAST_MAX_ROWS) and
+    BROADCAST_MAX_BYTES, both read at call time, and picks ``big`` at
+    the first side over them, without measuring the rest; any other
+    value is the caller's choice. Logs one DEBUG record
+    ``<op> strategy=… reason=…``."""
     if strategy == "auto":
         rows = BROADCAST_MAX_ROWS if max_rows is None else max_rows
-        nbytes = BROADCAST_MAX_BYTES if max_bytes is None else max_bytes
         strategy = small
         reason = ("both sides" if len(sides) > 1 else sides[0][0]) \
             + " within broadcast limits"
         for name, df, wkb_col in sides:
-            if not small_side(df, max_rows=rows, max_bytes=nbytes,
+            if not small_side(df, max_rows=rows,
+                              max_bytes=BROADCAST_MAX_BYTES,
                               bytes_col=wkb_col):
                 strategy, reason = big, f"{name} over broadcast limits"
                 break
@@ -107,7 +108,6 @@ def pip_join(points: DataFrame, polygons: DataFrame, *,
              salt_hist: DataFrame | None = None,
              strategy: str = "auto",
              broadcast_max_rows: int | None = None,
-             broadcast_max_bytes: int | None = None,
              force_shuffle: bool = False) -> DataFrame:
     """Join point rows to polygon rows where the point is covered.
 
@@ -125,8 +125,7 @@ def pip_join(points: DataFrame, polygons: DataFrame, *,
         points = points.withColumn("__rid", F.monotonically_increasing_id())
 
     strategy = _strategy("pip_join", strategy, ("polygons", polygons, poly_wkb),
-                         max_rows=broadcast_max_rows,
-                         max_bytes=broadcast_max_bytes)
+                         max_rows=broadcast_max_rows)
     if strategy == "broadcast":
         index = _BroadcastIndex(polygons, poly_wkb, res_min)
         hits = _pip_hits(index, predicate)(F.col(lon), F.col(lat))
@@ -469,9 +468,7 @@ def candidate_pairs(left: DataFrame, right: DataFrame, *,
                     res_min: int = C.RES_MIN, res_max: int = C.RES_MAX,
                     max_cells: int = 64,
                     salt_threshold: int | None = None,
-                    salt_sample: float = 1.0,
-                    broadcast_max_rows: int | None = None,
-                    broadcast_max_bytes: int | None = None) -> DataFrame:
+                    salt_sample: float = 1.0) -> DataFrame:
     """Distinct (left_id, right_id) bbox-overlap candidate pairs — the
     shared filter phase of the overlay intersection/difference joins.
 
@@ -484,9 +481,7 @@ def candidate_pairs(left: DataFrame, right: DataFrame, *,
     cell join (`_cell_candidates`) even under a small right side; the
     left side is measured only once the right side has passed."""
     path = _strategy("candidate_pairs", "auto", ("right", right, right_wkb),
-                     ("left", left, left_wkb), small="bbox",
-                     max_rows=broadcast_max_rows,
-                     max_bytes=broadcast_max_bytes)
+                     ("left", left, left_wkb), small="bbox")
     if path == "cell":
         return _cell_candidates(left, right, left_id=left_id,
                                 left_wkb=left_wkb, right_id=right_id,
@@ -514,9 +509,8 @@ def _cell_candidates(left: DataFrame, right: DataFrame, *, left_id,
     band floor for huge geometries), pairs match across resolutions
     (join1: right cells coarsened to each observed left res; join2 the
     strict converse), and both pair joins accept explicit hot-cell
-    salting."""
-    from pyspark.storagelevel import StorageLevel
-
+    salting. Eager: the pairs come back as a local checkpoint (one job
+    for the res probe, one for the pairs)."""
     lc = (explode_cover(left.select(left_id, left_wkb), left_wkb, CELL_COL,
                         res_min, res_max, max_cells)
           .withColumn("__res", F.shiftright(F.col(CELL_COL), C.RES_SHIFT)
@@ -527,59 +521,58 @@ def _cell_candidates(left: DataFrame, right: DataFrame, *, left_id,
           .withColumn("__res", F.shiftright(F.col(CELL_COL), C.RES_SHIFT)
                       .cast("int"))
           .select(right_id, CELL_COL, "__res"))
-    # persist both covers: the res-set probe below plus the two pair
-    # joins would otherwise re-run the cover UDF (WKB decode + adaptive
-    # cover) ~3x per side — measured 3.6 s -> 2.3 s on the 400x400
-    # bench join, and at 100 TB it is two full extra passes over each
-    # geometry side. Lifetime is tied to the returned plan
-    # (persist_scoped), so long-lived sessions don't accumulate cache.
-    lc = lc.persist(StorageLevel.MEMORY_AND_DISK)
-    rc = rc.persist(StorageLevel.MEMORY_AND_DISK)
-    # the distinct res sets are tiny (≤ band width); driver-materialized
-    # in ONE job so each side only emits ancestors at res levels the
-    # OTHER side actually uses
-    rset_rows = (lc.select(F.lit("l").alias("__s"), "__res").distinct()
-                 .unionByName(rc.select(F.lit("r").alias("__s"), "__res")
-                              .distinct())
-                 .collect())
-    rset_l = sorted(r["__res"] for r in rset_rows if r["__s"] == "l")
-    rset_r = sorted(r["__res"] for r in rset_rows if r["__s"] == "r")
+    # keep both covers: the res-set probe below plus the two pair joins
+    # would otherwise re-run the cover UDF (WKB decode + adaptive
+    # cover) ~3x per side — at 100 TB two full extra passes over each
+    # geometry side. The pairs are checkpointed inside the scope, so
+    # the returned plan reads neither cache and the covers are freed
+    # on return.
+    with cache_scope() as keep:
+        lc, rc = keep(lc), keep(rc)
+        # the distinct res sets are tiny (≤ band width); driver-
+        # materialized in ONE job so each side only emits ancestors at
+        # res levels the OTHER side actually uses
+        rset_rows = (lc.select(F.lit("l").alias("__s"), "__res").distinct()
+                     .unionByName(rc.select(F.lit("r").alias("__s"),
+                                            "__res").distinct())
+                     .collect())
+        rset_l = sorted(r["__res"] for r in rset_rows if r["__s"] == "l")
+        rset_r = sorted(r["__res"] for r in rset_rows if r["__s"] == "r")
 
-    pair_parts = []
-    if rset_l and rset_r:
-        # join1: right cells coarsened to each left res (ρ_r >= ρ_l)
-        anc1 = [F.when(F.col("__res") >= rho,
-                       _parent_cell(F.col(CELL_COL), F.col("__res"), rho))
-                for rho in rset_l if rho <= rset_r[-1]]
-        if anc1:
-            rc_plus = (rc.withColumn("__anc", F.explode(F.array(*anc1)))
-                       .where(F.col("__anc").isNotNull())
-                       .select(right_id, F.col("__anc").alias(CELL_COL)))
-            pair_parts.append(_hot_cell_join(
-                rc_plus, lc.select(left_id, CELL_COL),
-                salt_threshold=salt_threshold, salt_sample=salt_sample,
-                hash_col=right_id))
-        # join2: left cells coarsened to each STRICTLY coarser right res
-        anc2 = [F.when(F.col("__res") > rho,
-                       _parent_cell(F.col(CELL_COL), F.col("__res"), rho))
-                for rho in rset_r if rho < rset_l[-1]]
-        if anc2:
-            lc_plus = (lc.withColumn("__anc", F.explode(F.array(*anc2)))
-                       .where(F.col("__anc").isNotNull())
-                       .select(left_id, F.col("__anc").alias(CELL_COL)))
-            pair_parts.append(_hot_cell_join(
-                lc_plus, rc.select(right_id, CELL_COL),
-                salt_threshold=salt_threshold, salt_sample=salt_sample,
-                hash_col=left_id))
-    from .core import persist_scoped
-
-    if pair_parts:
-        pairs = pair_parts[0].select(left_id, right_id)
-        for p in pair_parts[1:]:
-            pairs = pairs.unionByName(p.select(left_id, right_id))
-        return persist_scoped(lc, persist_scoped(rc, pairs.distinct()))
-    lc.unpersist()
-    rc.unpersist()
+        pair_parts = []
+        if rset_l and rset_r:
+            # join1: right cells coarsened to each left res (ρ_r >= ρ_l)
+            anc1 = [F.when(F.col("__res") >= rho,
+                           _parent_cell(F.col(CELL_COL), F.col("__res"),
+                                        rho))
+                    for rho in rset_l if rho <= rset_r[-1]]
+            if anc1:
+                rc_plus = (rc.withColumn("__anc", F.explode(F.array(*anc1)))
+                           .where(F.col("__anc").isNotNull())
+                           .select(right_id, F.col("__anc").alias(CELL_COL)))
+                pair_parts.append(_hot_cell_join(
+                    rc_plus, lc.select(left_id, CELL_COL),
+                    salt_threshold=salt_threshold, salt_sample=salt_sample,
+                    hash_col=right_id))
+            # join2: left cells coarsened to each STRICTLY coarser right
+            # res
+            anc2 = [F.when(F.col("__res") > rho,
+                           _parent_cell(F.col(CELL_COL), F.col("__res"),
+                                        rho))
+                    for rho in rset_r if rho < rset_l[-1]]
+            if anc2:
+                lc_plus = (lc.withColumn("__anc", F.explode(F.array(*anc2)))
+                           .where(F.col("__anc").isNotNull())
+                           .select(left_id, F.col("__anc").alias(CELL_COL)))
+                pair_parts.append(_hot_cell_join(
+                    lc_plus, rc.select(right_id, CELL_COL),
+                    salt_threshold=salt_threshold, salt_sample=salt_sample,
+                    hash_col=left_id))
+        if pair_parts:
+            pairs = pair_parts[0].select(left_id, right_id)
+            for p in pair_parts[1:]:
+                pairs = pairs.unionByName(p.select(left_id, right_id))
+            return pairs.distinct().localCheckpoint(eager=True)
     return (left.select(left_id).limit(0)
             .crossJoin(right.select(right_id).limit(0)))
 
@@ -641,9 +634,7 @@ def sjoin(left: DataFrame, right: DataFrame, *,
           max_cells: int = 64,
           salt_threshold: int | None = None,
           salt_sample: float = 1.0,
-          strategy: str = "auto",
-          broadcast_max_rows: int | None = None,
-          broadcast_max_bytes: int | None = None) -> DataFrame:
+          strategy: str = "auto") -> DataFrame:
     """Geometry ⋈ geometry on a spatial predicate (reference sjoin /
     overlay filter phase, layer.py:1099-1140).
 
@@ -684,9 +675,7 @@ def sjoin(left: DataFrame, right: DataFrame, *,
     if how == "left":
         left = left.withColumn("__rid", F.monotonically_increasing_id())
 
-    strategy = _strategy("sjoin", strategy, ("right", right, right_wkb),
-                         max_rows=broadcast_max_rows,
-                         max_bytes=broadcast_max_bytes)
+    strategy = _strategy("sjoin", strategy, ("right", right, right_wkb))
     if strategy == "broadcast":
         index = _BroadcastIndex(right, right_wkb, res_min)
         hits = _geom_hits(index, predicate)(F.col(left_wkb))

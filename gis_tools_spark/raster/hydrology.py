@@ -130,43 +130,46 @@ def flow_accumulation(flowdir: DataFrame, *,
     flow-direction mosaic. method='auto' solves each drainage basin in
     one task and falls back to the iterative carry propagation for
     basins above ``max_component_rows`` edges; 'iterative' forces the
-    all-DataFrame path (no per-basin materialization)."""
+    all-DataFrame path (no per-basin materialization). Eager: the
+    result is a local checkpoint."""
+    from ..operators.core import cache_scope, cpu_grouped
     from ..operators.network import connected_components
 
     ed = flow_edges(flowdir, no_data=no_data)
     nodes = ed.select("src", "gix", "giy")
-    edges = (ed.where(F.col("dst").isNotNull())
-             .select("src", "dst").persist())
-
-    if method == "iterative":
-        acc = _accumulate_iterative(edges)
-    else:
-        comp = connected_components(
-            edges.select(F.col("src").alias("src_key"),
-                         F.col("dst").alias("dst_key")))
-        e = edges.join(comp.withColumnRenamed("node", "src"), on="src")
-        big = []
-        if method == "auto":
-            big = [r["component"] for r in
-                   e.groupBy("component").count()
-                   .where(F.col("count") > max_component_rows).collect()]
-        small = e.where(~F.col("component").isin(big)) if big else e
-        # cpu_grouped: basin edge lists are KB-sized but the in-task
-        # topological solve is CPU-heavy — AQE byte-coalescing would
-        # serialize basins onto 1-2 cores (round-5 verdict #2 audit)
-        from ..operators.core import cpu_grouped
-        acc = cpu_grouped(small, "component").applyInPandas(
-            lambda k, pdf: _solve_basin(pdf), schema="node long, acc long")
-        if big:
-            acc = acc.unionByName(
-                _accumulate_iterative(e.where(F.col("component").isin(big))
-                                      .select("src", "dst")))
-    out = (nodes.join(acc.withColumnRenamed("node", "src"),
-                      on="src", how="left")
-           .select("gix", "giy",
-                   F.coalesce("acc", F.lit(0)).cast("long").alias("acc")))
-    edges.unpersist()
-    return out
+    with cache_scope() as keep:
+        edges = keep(ed.where(F.col("dst").isNotNull()).select("src", "dst"))
+        if method == "iterative":
+            acc = _accumulate_iterative(edges)
+        else:
+            comp = connected_components(
+                edges.select(F.col("src").alias("src_key"),
+                             F.col("dst").alias("dst_key")))
+            e = edges.join(comp.withColumnRenamed("node", "src"), on="src")
+            big = []
+            if method == "auto":
+                big = [r["component"] for r in
+                       e.groupBy("component").count()
+                       .where(F.col("count") > max_component_rows)
+                       .collect()]
+            small = e.where(~F.col("component").isin(big)) if big else e
+            # cpu_grouped: basin edge lists are KB-sized but the in-task
+            # topological solve is CPU-heavy — AQE byte-coalescing would
+            # serialize basins onto 1-2 cores (round-5 verdict #2 audit)
+            acc = cpu_grouped(small, "component").applyInPandas(
+                lambda k, pdf: _solve_basin(pdf),
+                schema="node long, acc long")
+            if big:
+                acc = acc.unionByName(_accumulate_iterative(keep(
+                    e.where(F.col("component").isin(big))
+                    .select("src", "dst"))))
+        # checkpointed here: the returned plan reads no cache
+        return (nodes.join(acc.withColumnRenamed("node", "src"),
+                           on="src", how="left")
+                .select("gix", "giy",
+                        F.coalesce("acc", F.lit(0)).cast("long")
+                        .alias("acc"))
+                .localCheckpoint(eager=True))
 
 
 def _chase(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -261,8 +264,8 @@ def _accumulate_iterative(edges: DataFrame) -> DataFrame:
     """carry_{k+1}(v) = Σ_{u→v} carry_k(u); acc(v) = Σ_k carry_k(v),
     as one (node, c, a) state frame: c the current carry, a the sum so
     far. Rounds = longest flow-path length, which in an acyclic flow
-    graph is below its node count — a flow-direction cycle raises."""
-    edges = edges.persist()
+    graph is below its node count — a flow-direction cycle raises. The
+    caller keeps ``edges`` cached for the rounds."""
     state = (edges.select(F.col("src").alias("node")).distinct()
              .select("node", F.lit(1).cast("long").alias("c"),
                      F.lit(0).cast("long").alias("a"))
@@ -281,5 +284,4 @@ def _accumulate_iterative(edges: DataFrame) -> DataFrame:
 
     state, _, _ = fixpoint("flow_accumulation", state, carry,
                            max_rounds=state.count() + 1)
-    edges.unpersist()
     return state.select("node", F.col("a").alias("acc"))

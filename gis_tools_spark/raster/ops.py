@@ -159,7 +159,6 @@ def raster_pyramid(tiles: DataFrame, *, levels: int, origin: tuple,
         "image_id", "bytes", "w", "h", "fmt")
 
     outs = []
-    cached = []
     rx, ry = rx0, ry0
     for lvl in range(1, levels + 1):
         parent = (cur
@@ -172,10 +171,9 @@ def raster_pyramid(tiles: DataFrame, *, levels: int, origin: tuple,
                                  schema=out_schema))
         if lvl < levels:
             # each level feeds BOTH the next level and the returned
-            # union — without a persist, level k's whole subtree
+            # union — without a checkpoint, level k's whole subtree
             # re-evaluates once per deeper level (O(levels^2) stages)
-            parent = parent.persist()
-            cached.append(parent)
+            parent = parent.localCheckpoint(eager=True)
         outs.append(parent)
         cur = parent.select("tile_x", "tile_y", "image_id", "bytes",
                             "w", "h", "fmt")
@@ -183,10 +181,6 @@ def raster_pyramid(tiles: DataFrame, *, levels: int, origin: tuple,
     res = outs[0]
     for o in outs[1:]:
         res = res.unionByName(o)
-    from ..operators.core import persist_scoped
-
-    for c in cached:
-        res = persist_scoped(c, res)
     return res
 
 

@@ -3,6 +3,9 @@ identity, mixed-res input, guard on finer-than-target uncompact."""
 
 from __future__ import annotations
 
+import logging
+import re
+
 import numpy as np
 import pytest
 
@@ -45,13 +48,31 @@ def cover(spark):
     return np.unique(C.latlng_to_cell(lon, lat, 12))
 
 
-def test_compact_matches_bruteforce(spark, cover):
+def test_compact_matches_bruteforce(spark, cover, caplog, monkeypatch):
+    """Both paths match the brute force and log one record
+    ``compact_cells path=… levels=… promoted=…`` with the same counts."""
+    from gis_tools_spark.operators import core
     from gis_tools_spark.operators.cellcover import compact_cells
 
-    got = {r["cell"] for r in
-           compact_cells(_cover_df(spark, cover)).collect()}
+    caplog.set_level(logging.DEBUG, logger="gis_tools_spark")
     want = _compact_bruteforce(cover)
-    assert got == want
+    counts = {}
+    for path in ("driver", "distributed"):
+        if path == "distributed":
+            monkeypatch.setattr(core, "DRIVER_MAX_ROWS", 0)
+        caplog.clear()
+        got = {r["cell"] for r in
+               compact_cells(_cover_df(spark, cover)).collect()}
+        assert got == want, path
+        recs = [r.getMessage() for r in caplog.records
+                if r.getMessage().startswith("compact_cells ")]
+        assert len(recs) == 1, recs
+        m = re.fullmatch(r"compact_cells path=(\w+) levels=(\d+) "
+                         r"promoted=(\d+)", recs[0])
+        assert m and m[1] == path, recs
+        counts[path] = (int(m[2]), int(m[3]))
+    assert counts["driver"] == counts["distributed"]
+    assert counts["driver"][0] >= 2 and counts["driver"][1] > 0
     assert len(want) < len(cover)  # the fixture actually compacts
     # multi-level: at least two distinct resolutions in the result
     assert len({c >> C.RES_SHIFT for c in want}) >= 2

@@ -78,6 +78,31 @@ def test_package_reads_no_env_knobs():
     assert not hits, hits
 
 
+def test_package_caches_only_in_cache_scope():
+    """One cache lifetime rule: every persist goes through
+    ``core.cache_scope``, which releases it when the op's block exits,
+    so ``.persist(`` is called only in ``operators/core.py``; no module
+    ties a cache to an object's lifetime through ``weakref``. Spark-free
+    AST scan."""
+    pkg = Path(__file__).resolve().parent.parent / "gis_tools_spark"
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "persist"
+                    and rel != "operators/core.py"):
+                hits.append(f"{rel}:{node.lineno} .persist(")
+            names = ([a.name for a in node.names]
+                     if isinstance(node, ast.Import) else
+                     [node.module or ""]
+                     if isinstance(node, ast.ImportFrom) else [])
+            if any(n.split(".")[0] == "weakref" for n in names):
+                hits.append(f"{rel}:{node.lineno} weakref")
+    assert not hits, hits
+
+
 def test_package_has_no_unused_imports():
     """Every name a package module imports is used in that module. The
     package has no lint step, so this Spark-free AST scan stands in for

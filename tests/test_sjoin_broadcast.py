@@ -2,6 +2,7 @@
 cell-index path must be value-identical to the shuffle cell path, across
 predicates, null rows, oversize geometries, and how='left'."""
 
+import importlib
 import logging
 
 import numpy as np
@@ -11,7 +12,10 @@ from pyspark.sql import functions as F
 from gis_tools_spark import fixtures
 from gis_tools_spark.geom import wkb
 from gis_tools_spark.operators.overlay import intersection_join
-from gis_tools_spark.operators.sjoin import candidate_pairs, sjoin
+from gis_tools_spark.operators.sjoin import sjoin
+
+# the module itself: the package re-exports a function named `sjoin`
+sjoin_module = importlib.import_module("gis_tools_spark.operators.sjoin")
 
 
 def _layers(spark, n=120, seed=3):
@@ -96,13 +100,14 @@ def test_broadcast_plan_no_shuffle_join(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_auto_gates_on_bytes(spark, caplog):
+def test_auto_gates_on_bytes(spark, caplog, monkeypatch):
     """auto picks broadcast for a small right side and cell when the
     byte gate trips, and logs which it chose and why."""
     caplog.set_level(logging.DEBUG, logger="gis_tools_spark")
     left, right = _layers(spark, n=30)
     small = sjoin(left, right)  # auto -> broadcast at this size
-    gated = sjoin(left, right, broadcast_max_bytes=10)  # force cell
+    monkeypatch.setattr(sjoin_module, "BROADCAST_MAX_BYTES", 10)
+    gated = sjoin(left, right)  # force cell
     assert _pairs(small) == _pairs(gated)
     msgs = [r.getMessage() for r in caplog.records]
     assert "sjoin strategy=broadcast reason=right within broadcast limits" \
@@ -121,8 +126,7 @@ def test_bbox_candidates_gate_both_sides(spark, caplog, monkeypatch):
         fixtures.gen_zones(4, seed=9)[["gid", "geometry_wkb"]])
 
     def run(max_rows):
-        monkeypatch.setitem(candidate_pairs.__kwdefaults__,
-                            "broadcast_max_rows", max_rows)
+        monkeypatch.setattr(sjoin_module, "BROADCAST_MAX_ROWS", max_rows)
         caplog.clear()
         out = intersection_join(left, right)
         plan = out._jdf.queryExecution().executedPlan().toString()
