@@ -4192,9 +4192,9 @@ def q_stream_geofence(spark: SparkSession, sf_dir: str) -> DataFrame:
     geofence_transitions + sjoin.pip_tag, value-gated): user pings run
     as a REAL stream — 6 time-sliced input files (ascending mtimes so
     the file source replays event time), one per micro-batch — through
-    the join-free broadcast zone tagger and the GroupState transition
-    detector; the per-device last zone crosses micro-batch boundaries
-    in state. Because each user's pings arrive in ts order, the
+    the broadcast zone tagger (one stream-static join) and the
+    GroupState transition detector; the per-device last zone crosses
+    micro-batch boundaries in state. Because each user's pings arrive in ts order, the
     multi-batch stream output equals the batch lag-window closed form,
     which is the oracle."""
     _tune(spark)

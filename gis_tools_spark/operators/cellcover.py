@@ -106,19 +106,22 @@ def compact_cells(cover: DataFrame, *, cell_col: str = "cell",
     single-res cover or any valid mixed-res cover). Output: same single
     ``cell_col`` column, mixed resolutions."""
     df = cover.select(F.col(cell_col).cast("long").alias(cell_col))
-    if core.small_side(df, max_rows=core.DRIVER_MAX_ROWS):
+
+    def solve(pdf):
         # small cover: the cascade is a driver-local numpy pass instead
         # of ~2 jobs per resolution level (round-6; the sf0.1 gate paid
         # ~20 KB-sized jobs for a 1 MB cover)
         import numpy as np
         import pandas as pd
-        arr = df.toPandas()[cell_col].to_numpy()
-        out, levels, n_promoted = _compact_local(arr, min_res)
+        out, levels, n_promoted = _compact_local(pdf[cell_col].to_numpy(),
+                                                 min_res)
         _log.debug("compact_cells path=driver levels=%d promoted=%d",
                    levels, n_promoted)
-        return df.sparkSession.createDataFrame(
-            pd.DataFrame({cell_col: np.sort(out)}),
-            schema=f"{cell_col} long")
+        return pd.DataFrame({cell_col: np.sort(out)})
+
+    small = core.driver_solve("compact_cells", df, solve, f"{cell_col} long")
+    if small is not None:
+        return small
     npart = max(df.rdd.getNumPartitions(), 1)
     cur, levels, n_promoted = df, 0, 0
     # the input is kept for the resolution probe and the first level;

@@ -62,8 +62,9 @@ def _nearest_broadcast(points, features, *, lon, lat, point_id, feat_wkb, feat_i
     """All-pairs vectorized pass with the features broadcast (no shuffle).
 
     The UDF emits, per point, the winner's position in the collected
-    features and its distance (only lon/lat cross Arrow); the winner's
-    id is looked up JVM-side in the collected ids, with no join."""
+    features and its distance (only lon/lat cross Arrow); a left
+    broadcast join on that position attaches the winner's id, null
+    where no feature has a geometry."""
     from pyspark.sql import types as T
 
     nf = "nearest_" + feat_id
@@ -99,10 +100,9 @@ def _nearest_broadcast(points, features, *, lon, lat, point_id, feat_wkb, feat_i
         return pd.DataFrame({"i": np.asarray(valid, dtype=np.int32)[pick],
                              "d": best})
 
-    return (points.withColumn("__nn", _nn(F.col(lon), F.col(lat)))
-            .select("*",
-                    F.element_at(index.ids(nf), F.col("__nn.i") + 1).alias(nf),
-                    F.col("__nn.d").alias("nearest_dist"))
+    scored = points.withColumn("__nn", _nn(F.col(lon), F.col(lat)))
+    return (index.attach(scored, F.col("__nn.i"), [nf], how="left")
+            .withColumn("nearest_dist", F.col("__nn.d"))
             .drop("__nn"))
 
 

@@ -224,8 +224,9 @@ def _bellman_ford(edges: DataFrame, sources: list[str], weight_col: str,
     # init rows come from an independent local relation (aliasing one
     # attribute into both 'source' and 'node' breaks localCheckpoint's
     # attribute rewrite: "key not found: source#N")
-    init = spark.createDataFrame([(s, s, 0.0) for s in sources],
-                                 "source string, node string, dist double")
+    init = spark.createDataFrame(
+        pd.DataFrame({"source": sources, "node": sources, "dist": 0.0}),
+        "source string, node string, dist double")
 
     def relax(state: DataFrame) -> DataFrame:
         cand = (state.where("__front").join(sym, F.col("node") == sym["u"])

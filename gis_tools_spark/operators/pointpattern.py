@@ -29,7 +29,8 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, Window, functions as F
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .core import cache_scope
 
@@ -59,29 +60,48 @@ def ripleys_k(points: DataFrame, *, radii: Sequence[float], area: float,
     n = b.count()
     if n < 2:
         raise ValueError("need at least 2 points")
-    bx = (F.col("xi") - F.col("xi") % L) / L
-    by = (F.col("yi") - F.col("yi") % L) / L
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    left = b.select(
-        F.col("xi").alias("ax"), F.col("yi").alias("ay"),
-        F.col("__rid").alias("ra"),
-        F.explode(F.array(*[
-            F.struct((bx.cast("long") + dx).alias("bx"),
-                     (by.cast("long") + dy).alias("by"))
-            for dx, dy in offs])).alias("t")
-    ).select("ax", "ay", "ra",
-             F.col("t.bx").alias("bx"), F.col("t.by").alias("by"))
-    right = b.select(F.col("xi").alias("cx"), F.col("yi").alias("cy"),
-                     F.col("__rid").alias("rb"),
-                     bx.cast("long").alias("bx"),
-                     by.cast("long").alias("by"))
-    dx = F.col("ax") - F.col("cx")
-    dy = F.col("ay") - F.col("cy")
-    d2 = dx * dx + dy * dy
-    pairs = (left.join(right, on=["bx", "by"])
+    d2 = _d2()
+    pairs = (_bin_join(b, b, L)
              .where((F.col("ra") < F.col("rb")) & (d2 > 0)
                     & (d2 <= F.lit(L * L).cast("long")))
              .select(d2.alias("d2")))
+    # ordered pairs: each unordered pair counts twice
+    return _k_ladder(pairs, radii, r_int, area, float(n) * float(n - 1), 2)
+
+
+def _d2() -> Column:
+    """Squared distance of a `_bin_join` pair (exact integers)."""
+    dx = F.col("ax") - F.col("cx")
+    dy = F.col("ay") - F.col("cy")
+    return dx * dx + dy * dy
+
+
+def _bin_join(a: DataFrame, b: DataFrame, L: int) -> DataFrame:
+    """Pairs of a point of ``a`` and one of ``b`` (both quantized to
+    integer (xi, yi), each with an optional ``__rid``) in neighbouring
+    L-wide bins: each ``a`` point visits its 3×3 bins, so every pair
+    within L meets. Columns bx, by, ax, ay[, ra], cx, cy[, rb]."""
+    bx = ((F.col("xi") - F.col("xi") % L) / L).cast("long")
+    by = ((F.col("yi") - F.col("yi") % L) / L).cast("long")
+
+    def pt(df, x, y, rid):
+        return [F.col("xi").alias(x), F.col("yi").alias(y)] + (
+            [F.col("__rid").alias(rid)] if "__rid" in df.columns else [])
+
+    left = a.select(*pt(a, "ax", "ay", "ra"), F.explode(F.array(*[
+        F.struct((bx + ox).alias("bx"), (by + oy).alias("by"))
+        for ox in (-1, 0, 1) for oy in (-1, 0, 1)])).alias("t"))
+    right = b.select(*pt(b, "cx", "cy", "rb"), bx.alias("bx"),
+                     by.alias("by"))
+    return (left.select("*", "t.bx", "t.by").drop("t")
+            .join(right, on=["bx", "by"]))
+
+
+def _k_ladder(pairs: DataFrame, radii, r_int, area: float, norm: float,
+              mult: int) -> DataFrame:
+    """The (r_idx, r, n_pairs_le, k_hat, l_hat) ladder of K̂ over the
+    squared pair distances ``pairs.d2``: ``mult`` × the pairs within
+    each radius, times ``area`` / ``norm``."""
     # smallest radius index containing the pair (exact integer compare)
     idx = None
     for k in range(len(r_int) - 1, -1, -1):
@@ -89,19 +109,19 @@ def ripleys_k(points: DataFrame, *, radii: Sequence[float], area: float,
         idx = F.when(cond, F.lit(k)) if idx is None else \
             F.when(cond, F.lit(k)).otherwise(idx)
     # reversed scan: the final expression assigns the SMALLEST k
-    per = pairs.groupBy(idx.alias("r_idx")).agg(
-        F.count("*").alias("__c"))
+    per = pairs.groupBy(idx.alias("r_idx")).agg(F.count("*").alias("__c"))
     # densify to every radius and cumulate (n_radii rows: tiny)
-    rad_df = points.sparkSession.createDataFrame(
-        [(k, radii[k]) for k in range(len(radii))], "r_idx int, r double")
+    rad_df = pairs.sparkSession.createDataFrame(
+        pd.DataFrame({"r_idx": range(len(radii)), "r": radii}),
+        "r_idx int, r double")
     cum = (rad_df.join(per, on="r_idx", how="left")
            .withColumn("__c", F.coalesce("__c", F.lit(0)))
            .withColumn("n_pairs_le",
-                       F.lit(2) * F.sum("__c").over(
+                       F.lit(mult) * F.sum("__c").over(
                            Window.orderBy("r_idx")
                            .rowsBetween(Window.unboundedPreceding, 0))))
     k_hat = (F.lit(float(area)) * F.col("n_pairs_le").cast("double")
-             / F.lit(float(n) * float(n - 1)))
+             / F.lit(norm))
     return cum.select("r_idx", "r",
                       F.col("n_pairs_le").cast("long").alias("n_pairs_le"),
                       k_hat.alias("k_hat"),
@@ -172,46 +192,10 @@ def cross_k(points_a: DataFrame, points_b: DataFrame, *,
     n1, n2 = a.count(), b.count()
     if n1 == 0 or n2 == 0:
         raise ValueError("both layers need at least 1 point")
-    bx = (F.col("xi") - F.col("xi") % L) / L
-    by = (F.col("yi") - F.col("yi") % L) / L
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    left = a.select(
-        F.col("xi").alias("ax"), F.col("yi").alias("ay"),
-        F.explode(F.array(*[
-            F.struct((bx.cast("long") + dx).alias("bx"),
-                     (by.cast("long") + dy).alias("by"))
-            for dx, dy in offs])).alias("t")
-    ).select("ax", "ay", F.col("t.bx").alias("bx"),
-             F.col("t.by").alias("by"))
-    right = b.select(F.col("xi").alias("cx"), F.col("yi").alias("cy"),
-                     bx.cast("long").alias("bx"),
-                     by.cast("long").alias("by"))
-    dx = F.col("ax") - F.col("cx")
-    dy = F.col("ay") - F.col("cy")
-    d2 = dx * dx + dy * dy
-    pairs = (left.join(right, on=["bx", "by"])
-             .where(d2 <= F.lit(L * L).cast("long"))
+    d2 = _d2()
+    pairs = (_bin_join(a, b, L).where(d2 <= F.lit(L * L).cast("long"))
              .select(d2.alias("d2")))
-    idx = None
-    for k in range(len(r_int) - 1, -1, -1):
-        cond = F.col("d2") <= F.lit(r_int[k] * r_int[k]).cast("long")
-        idx = F.when(cond, F.lit(k)) if idx is None else \
-            F.when(cond, F.lit(k)).otherwise(idx)
-    per = pairs.groupBy(idx.alias("r_idx")).agg(F.count("*").alias("__c"))
-    rad_df = points_a.sparkSession.createDataFrame(
-        [(k, radii[k]) for k in range(len(radii))], "r_idx int, r double")
-    cum = (rad_df.join(per, on="r_idx", how="left")
-           .withColumn("__c", F.coalesce("__c", F.lit(0)))
-           .withColumn("n_pairs_le",
-                       F.sum("__c").over(
-                           Window.orderBy("r_idx")
-                           .rowsBetween(Window.unboundedPreceding, 0))))
-    k_hat = (F.lit(float(area)) * F.col("n_pairs_le").cast("double")
-             / F.lit(float(n1) * float(n2)))
-    return cum.select("r_idx", "r",
-                      F.col("n_pairs_le").cast("long").alias("n_pairs_le"),
-                      k_hat.alias("k_hat"),
-                      F.sqrt(k_hat / F.lit(float(np.pi))).alias("l_hat"))
+    return _k_ladder(pairs, radii, r_int, area, float(n1) * float(n2), 1)
 
 
 def g_function(points: DataFrame, *, radii: Sequence[float],
@@ -279,28 +263,10 @@ def _nn_ladder(a: DataFrame, b: DataFrame, radii, *, same_set: bool,
     qa = _q(a, True).localCheckpoint(eager=True)
     qb = qa if same_set else _q(b, False)
     n_a = qa.count()
-    offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-    dx = F.col("ax") - F.col("cx")
-    dy = F.col("ay") - F.col("cy")
-    d2 = dx * dx + dy * dy
+    d2 = _d2()
 
     def _level_join(unres, Lk: int):
-        bx = (F.col("xi") - F.col("xi") % Lk) / Lk
-        by = (F.col("yi") - F.col("yi") % Lk) / Lk
-        left = unres.select(
-            F.col("xi").alias("ax"), F.col("yi").alias("ay"),
-            F.col("__rid").alias("ra"),
-            F.explode(F.array(*[
-                F.struct((bx.cast("long") + ox).alias("bx"),
-                         (by.cast("long") + oy).alias("by"))
-                for ox, oy in offs])).alias("t")
-        ).select("ax", "ay", "ra",
-                 F.col("t.bx").alias("bx"), F.col("t.by").alias("by"))
-        rcols = [F.col("xi").alias("cx"), F.col("yi").alias("cy"),
-                 bx.cast("long").alias("bx"), by.cast("long").alias("by")]
-        if same_set:
-            rcols.insert(2, F.col("__rid").alias("rb"))
-        j = left.join(qb.select(*rcols), on=["bx", "by"])
+        j = _bin_join(unres, qb, Lk)
         if same_set:
             j = j.where(F.col("ra") != F.col("rb"))
         return (j.where(d2 <= F.lit(Lk * Lk).cast("long"))
@@ -340,12 +306,11 @@ def _nn_ladder(a: DataFrame, b: DataFrame, radii, *, same_set: bool,
     # the ladder is len(radii) rows — materialize the cumulative sums
     # driver-side (the caches are freed as the scope exits, and the
     # returned plan stays trivially small)
-    rows, acc = [], 0
-    for k in range(len(radii)):
-        acc += per.get(k, 0)
-        rows.append((k, radii[k], acc))
-    cum = a.sparkSession.createDataFrame(
-        rows, "r_idx int, r double, n_le long")
+    cum = a.sparkSession.createDataFrame(pd.DataFrame({
+        "r_idx": range(len(radii)), "r": radii,
+        "n_le": np.cumsum([per.get(k, 0) for k in range(len(radii))],
+                          dtype=np.int64)}),
+        "r_idx int, r double, n_le long")
     return cum, n_a, n_found
 
 

@@ -23,7 +23,8 @@ small side against BROADCAST_MAX_ROWS/BROADCAST_MAX_BYTES:
    once, cell-buckets and broadcasts it; a single scalar-UDF pass over
    the big side does filter+refine with zero shuffle — the distributed
    analog of the reference's in-process R-tree (coordinates.py:303-317)
-   — and a broadcast equi-join attaches the small side's attributes.
+   — and a broadcast equi-join attaches the small side's attributes
+   from a local relation keyed by position.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .. import cells as C
@@ -129,7 +131,7 @@ def pip_join(points: DataFrame, polygons: DataFrame, *,
     if strategy == "broadcast":
         index = _BroadcastIndex(polygons, poly_wkb, res_min)
         hits = _pip_hits(index, predicate)(F.col(lon), F.col(lat))
-        matched = index.attach(_spread(points), hits,
+        matched = index.attach(_spread(points), F.explode(hits),
                                [c for c in polygons.columns if c != poly_wkb])
     else:
         matched = _pip_cell_join(points, polygons, lon=lon, lat=lat,
@@ -191,10 +193,10 @@ def _hot_cell_join(fact: DataFrame, dim: DataFrame, *, salt_threshold,
         hot_lazy = hot_cells(fact if salt_hist is None else salt_hist,
                              CELL_COL, salt_threshold,
                              sample_fraction=salt_sample)
-        hot_rows = hot_lazy.collect()
-        _log.debug("salt hot_cells=%d", len(hot_rows))
-        if hot_rows:
-            hot = fact.sparkSession.createDataFrame(hot_rows, hot_lazy.schema)
+        hot_pdf = hot_lazy.toPandas()
+        _log.debug("salt hot_cells=%d", len(hot_pdf))
+        if len(hot_pdf):
+            hot = fact.sparkSession.createDataFrame(hot_pdf, hot_lazy.schema)
             fact = salt_fact_side(fact, CELL_COL, hot, hash_col=hash_col)
             dim = salt_dim_side(dim, CELL_COL, hot)
             join_on = [CELL_COL, SALT_COL]
@@ -306,15 +308,15 @@ class _BroadcastIndex:
     ``boxes``) and broadcast ``(geoms, index, res)`` as ``bc``. A
     per-batch lookup UDF over ``bc`` names matching rows by their
     position in ``rows`` (sorted by ``key`` when given: a driver sort,
-    where an orderBy would cost a sampling job); `attach` or `ids`
-    turns those positions into attributes."""
+    where an orderBy would cost a sampling job); `attach` turns those
+    positions into attributes."""
 
     def __init__(self, small: DataFrame, wkb_col: str,
                  res: int | Callable[[np.ndarray], int] | None,
                  key: Callable | None = None):
         self.rows = sorted(small.collect(), key=key) if key \
             else small.collect()
-        self.schema = small.schema
+        self.schema, self.spark = small.schema, small.sparkSession
         geoms = [None if r[wkb_col] is None else wkb.decode(r[wkb_col])
                  for r in self.rows]
         self.boxes = np.array(
@@ -323,28 +325,45 @@ class _BroadcastIndex:
         if callable(res):
             res = res(self.boxes)
         index = None if res is None else _cell_index(self.boxes, res)
-        self.bc = small.sparkSession.sparkContext.broadcast(
+        self.bc = self.spark.sparkContext.broadcast(
             (geoms, index, res))
 
-    def attach(self, df: DataFrame, hits: Column, cols: list[str]) -> DataFrame:
-        """``df`` rows joined to ``cols`` of the collected rows at the
-        positions in ``hits`` (an array column): explode, then a
-        broadcast equi-join, so attribute columns never cross the Python
-        worker."""
-        fields = [T.StructField("__bi", T.IntegerType())]
-        attrs = df.sparkSession.createDataFrame(
-            [(i, *[r[c] for c in cols]) for i, r in enumerate(self.rows)],
-            schema=T.StructType(fields + [self.schema[c] for c in cols]))
-        return (df.withColumn("__bi", F.explode(hits))
-                .join(F.broadcast(attrs), on="__bi")
-                .drop("__bi"))
+    def table(self, cols: list[str]) -> DataFrame:
+        """``cols`` of the collected rows keyed by their position
+        (`__bi`), built from pandas with an explicit schema so that it
+        plans as a LocalRelation, with no Python RDD behind it. Object
+        columns keep longs and decimals exact; doubles go in
+        Arrow-backed, so NaN stays apart from null; a naive timestamp
+        (the driver's local time, as ``collect`` gives it) is made
+        zone-aware first."""
+        def column(c):
+            values = [r[c] for r in self.rows]
+            dtype = self.schema[c].dataType
+            if isinstance(dtype, (T.FloatType, T.DoubleType)):
+                return pd.arrays.ArrowExtensionArray(pa.array(
+                    values, pa.float32() if isinstance(dtype, T.FloatType)
+                    else pa.float64()))
+            if isinstance(dtype, T.TimestampType):
+                values = [None if v is None else v.astimezone()
+                          for v in values]
+            return pd.Series(values, dtype=object)
 
-    def ids(self, col: str) -> Column:
-        """The collected ``col`` values as a literal array of ``col``'s
-        type: the join-free lookup ``element_at(ids, position + 1)`` for
-        one attribute, which streaming taggers need."""
-        return F.array(*[F.lit(r[col]) for r in self.rows]).cast(
-            T.ArrayType(self.schema[col].dataType))
+        pdf = pd.DataFrame({"__bi": np.arange(len(self.rows), dtype=np.int32),
+                            **{c: column(c) for c in cols}})
+        return self.spark.createDataFrame(
+            pdf, T.StructType([T.StructField("__bi", T.IntegerType())]
+                              + [self.schema[c] for c in cols]))
+
+    def attach(self, df: DataFrame, pos: Column, cols: list[str],
+               how: str = "inner") -> DataFrame:
+        """``df`` rows joined to ``cols`` of the collected row at
+        position ``pos`` (an int column, or the explode of an array of
+        hits) by a broadcast equi-join on `table`, so attribute columns
+        never cross the Python worker. how='left' keeps the rows whose
+        ``pos`` is null."""
+        return (df.withColumn("__bi", pos)
+                .join(F.broadcast(self.table(cols)), on="__bi", how=how)
+                .drop("__bi"))
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -435,16 +454,18 @@ def pip_tag(points: DataFrame, polygons: DataFrame, *,
             out_col: str = "zone") -> DataFrame:
     """LEFT-tagging variant of the broadcast PIP join: adds ``out_col``
     = the MIN ``poly_id`` covering each row (NULL outside every
-    polygon) without dropping or duplicating any row — and without any
-    join in the plan (the id lookup is a pure array expression over
-    the hit indices), so it is legal on STREAMING DataFrames where a
-    join-back on a surrogate id is not."""
-    index = _BroadcastIndex(polygons, poly_wkb, res)
-    ids = index.ids(poly_id)
+    polygon, or where only null ids cover it) without dropping or
+    duplicating any row. The index rows are sorted by ``poly_id``
+    (nulls last), so the least hit position is the MIN id, and one
+    left broadcast join attaches it: a stream-static join, so this is
+    legal on STREAMING DataFrames, where a join-back on a surrogate id
+    is not. An existing ``out_col`` is replaced."""
+    index = _BroadcastIndex(
+        polygons.select(F.col(poly_id).alias(out_col), poly_wkb), poly_wkb,
+        res, key=lambda r: (r[out_col] is None, r[out_col]))
     hits = _pip_hits(index, predicate)(F.col(lon), F.col(lat))
-    zone = F.array_min(F.transform(
-        hits, lambda i: F.element_at(ids, i + F.lit(1))))
-    return points.withColumn(out_col, zone)
+    return index.attach(points.drop(out_col), F.array_min(hits), [out_col],
+                        how="left")
 
 
 # ------------------------------------------------------------------ generic geometry-geometry join
@@ -679,7 +700,7 @@ def sjoin(left: DataFrame, right: DataFrame, *,
     if strategy == "broadcast":
         index = _BroadcastIndex(right, right_wkb, res_min)
         hits = _geom_hits(index, predicate)(F.col(left_wkb))
-        return _join_back(left, index.attach(_spread(left), hits,
+        return _join_back(left, index.attach(_spread(left), F.explode(hits),
                                              right.columns),
                           how, orig_left.columns)
 

@@ -109,29 +109,30 @@ def od_flows(points: DataFrame, zones: DataFrame, *,
     strategy = _strategy("od_flows", strategy,
                          ("zones", zones, "geometry_wkb"))
     if strategy == "broadcast":
-        # round-6 (guide §2.4): tag BOTH endpoints in one broadcast-CSR
-        # UDF stage and explode the hit arrays — zero joins — instead
-        # of two pip_join passes re-joined on the session key. The
-        # explode × explode cross reproduces pip_join's inner pair
-        # multiplicity exactly (a session in k origin zones and m
-        # destination zones contributes k·m trips, and a session with
-        # no hit on either side drops), so results are identical.
-        index = _BroadcastIndex(zones, "geometry_wkb", C.RES_MIN)
+        # tag BOTH endpoints in one broadcast-CSR UDF stage and explode
+        # the hit arrays, instead of two pip_join passes re-joined on
+        # the session key. The explode × explode cross reproduces
+        # pip_join's inner pair multiplicity exactly (a session in k
+        # origin zones and m destination zones contributes k·m trips,
+        # and a session with no hit on either side drops). Trips are
+        # counted per (origin, destination) index position; the ids
+        # are attached to that small result by broadcast joins and the
+        # counts re-grouped by id, so zones sharing an id add up.
+        index = _BroadcastIndex(zones.select(zone_id, "geometry_wkb"),
+                                "geometry_wkb", C.RES_MIN)
         _hits = _pip_hits(index, "covers")
-        ids = index.ids(zone_id)
+        ids = index.table([zone_id])
         return (ends
                 .select(F.explode(_hits(F.col("__o.lon"),
                                         F.col("__o.lat"))).alias("__io"),
                         _hits(F.col("__d.lon"),
                               F.col("__d.lat")).alias("__hd"))
-                .select(F.element_at(ids, F.col("__io") + 1)
-                        .alias("zone_o"),
-                        F.explode("__hd").alias("__id"))
-                .select("zone_o",
-                        F.element_at(ids, F.col("__id") + 1)
-                        .alias("zone_d"))
+                .select("__io", F.explode("__hd").alias("__id"))
+                .groupBy("__io", "__id").agg(F.count("*").alias("__n"))
+                .join(F.broadcast(ids.toDF("__io", "zone_o")), on="__io")
+                .join(F.broadcast(ids.toDF("__id", "zone_d")), on="__id")
                 .groupBy("zone_o", "zone_d")
-                .agg(F.count("*").alias("n_trips")))
+                .agg(F.sum("__n").alias("n_trips")))
     o = ends.select(*keys, "session_idx",
                     F.col("__o.lon").alias("lon"), F.col("__o.lat").alias("lat"))
     d = ends.select(*keys, "session_idx",
@@ -163,21 +164,21 @@ def geofence_events(points: DataFrame, zones: DataFrame, *,
     A stream that starts inside a fence emits an 'enter' at its first
     ping (from_zone NULL); pings that stay outside emit nothing.
 
-    Plan: ``auto`` tags every ping with pip_tag's join-free broadcast
-    pass when the zones pass pip_join's broadcast gate, else runs a
-    cell-join pip_join (left semantics restored by grouping hits per
-    ping id and left-joining back); then one lag window on the key. The
-    output is only the transition rows, orders of magnitude smaller
-    than the ping stream."""
+    Plan: ``auto`` tags every ping with pip_tag's broadcast pass (one
+    left broadcast join attaches the id) when the zones pass
+    pip_join's broadcast gate, else runs a cell-join pip_join (left
+    semantics restored by grouping hits per ping id and left-joining
+    back); then one lag window on the key. The output is only the
+    transition rows, orders of magnitude smaller than the ping
+    stream."""
     keys = list(key_cols)
     strategy = _strategy("geofence_events", strategy,
                          ("zones", zones, "geometry_wkb"))
     if strategy == "broadcast":
-        # round-6 (guide §2.4): pip_tag IS this op's tagging step —
-        # MIN covering zone id, NULL outside, every row kept, and
-        # join-free (pure array expression over the broadcast CSR
-        # hits) — so the groupBy(id) + left-join-back pair of shuffles
-        # disappears from the plan
+        # pip_tag IS this op's tagging step — MIN covering zone id,
+        # NULL outside, every row kept, its one join a broadcast of the
+        # small id table — so the groupBy(id) + left-join-back pair of
+        # shuffles disappears from the plan
         z = pip_tag(points, zones, lon=lon, lat=lat, poly_id=zone_id,
                     res=C.RES_MIN, out_col="__zone")
     else:

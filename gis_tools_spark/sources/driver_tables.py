@@ -65,14 +65,13 @@ def nation_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
         minx.alias("zminx"), miny.alias("zminy"),
         maxx.alias("zmaxx"), maxy.alias("zmaxy"),
     )
-    rows = zones.collect()
-    pdf_rows = [
-        (r["gid"], r["nom"], r["regionkey"],
-         bytearray(wkb.box(r["zminx"], r["zminy"], r["zmaxx"], r["zmaxy"])))
-        for r in rows
-    ]
+    pdf = zones.toPandas()
+    pdf["geometry_wkb"] = [
+        bytearray(wkb.box(*b)) for b in
+        pdf[["zminx", "zminy", "zmaxx", "zmaxy"]].itertuples(index=False)]
     return spark.createDataFrame(
-        pdf_rows, "gid int, nom string, regionkey int, geometry_wkb binary")
+        pdf[["gid", "nom", "regionkey", "geometry_wkb"]],
+        "gid int, nom string, regionkey int, geometry_wkb binary")
 
 
 ZONES_SQL = """

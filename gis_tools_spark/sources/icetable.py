@@ -157,7 +157,8 @@ def _read_files(spark: SparkSession, root: str, schema_json: str,
     """The rows of manifest ``entries``, read with a recorded schema."""
     schema = T.StructType.fromJson(json.loads(schema_json))
     if not entries:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame(pd.DataFrame(columns=schema.names),
+                                     schema)
     return spark.read.schema(schema).parquet(
         *[os.path.join(root, e["path"]) for e in entries])
 

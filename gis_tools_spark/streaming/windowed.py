@@ -114,8 +114,9 @@ def geofence_transitions(stream: DataFrame, zones: DataFrame, *,
     GroupState (per-device state is two fields; overlapping fences
     resolve to the MIN zone id, identical to the batch op).
 
-    Zone tagging uses ``pip_tag`` — the join-free broadcast CSR
-    variant — because left-join-back plans are illegal on streams.
+    Zone tagging uses ``pip_tag`` — the broadcast CSR variant, whose
+    one join is a stream-static broadcast of the zone ids — because
+    left-join-back plans are illegal on streams.
     Ordering: rows are ordered by (ts, key) WITHIN each micro-batch;
     cross-batch order follows arrival, the standard low-latency
     stateful contract (buffer upstream if strict event-time order is

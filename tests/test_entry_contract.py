@@ -103,6 +103,60 @@ def test_package_caches_only_in_cache_scope():
     assert not hits, hits
 
 
+def test_package_builds_no_frame_from_a_list():
+    """A table built on the driver goes back to Spark one way: a pandas
+    frame with an explicit schema, which plans as a LocalRelation. A
+    Python list or a collected Row list plans as a LogicalRDD over a
+    Python RDD, and ``F.array`` of ``F.lit`` values costs one py4j call
+    per element. Fails on ``createDataFrame(`` whose first argument is a
+    list, a list comprehension, a ``.collect()``, or a name bound to one
+    of these in the same function, and on ``F.array(`` over a
+    comprehension of ``F.lit(``. ``raster/kernels.py`` builds its task
+    frame from ``sc.parallelize`` on purpose, to spread tasks, and is
+    not matched. Spark-free AST scan."""
+    def listy(v):
+        return isinstance(v, (ast.List, ast.ListComp)) or (
+            isinstance(v, ast.Call) and isinstance(v.func, ast.Attribute)
+            and v.func.attr == "collect")
+
+    def called(node, name):
+        return (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == name)
+
+    pkg = Path(__file__).resolve().parent.parent / "gis_tools_spark"
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text())
+        scope_of = {}
+        for scope in [tree] + [n for n in ast.walk(tree) if isinstance(
+                n, (ast.FunctionDef, ast.AsyncFunctionDef))]:
+            for n in ast.walk(scope):  # inner scopes overwrite outer ones
+                scope_of[n] = scope
+        for node in ast.walk(tree):
+            if called(node, "createDataFrame") and node.args:
+                arg = node.args[0]
+                bound = set()
+                for n in ast.walk(scope_of[node]):
+                    for t in getattr(n, "targets", ()):
+                        pairs = (zip(t.elts, n.value.elts)
+                                 if isinstance(t, ast.Tuple)
+                                 and isinstance(n.value, ast.Tuple)
+                                 else [(t, n.value)])
+                        bound |= {tt.id for tt, v in pairs
+                                  if isinstance(tt, ast.Name) and listy(v)}
+                if listy(arg) or (isinstance(arg, ast.Name)
+                                  and arg.id in bound):
+                    hits.append(f"{rel}:{node.lineno} createDataFrame")
+            if called(node, "array") and any(
+                    isinstance(a, ast.Starred)
+                    and isinstance(a.value, (ast.ListComp, ast.GeneratorExp))
+                    and called(a.value.elt, "lit") for a in node.args):
+                hits.append(f"{rel}:{node.lineno} F.array of F.lit")
+    assert not hits, hits
+
+
 def test_package_has_no_unused_imports():
     """Every name a package module imports is used in that module. The
     package has no lint step, so this Spark-free AST scan stands in for

@@ -8,11 +8,12 @@ import pandas as pd
 import pytest
 
 
-ZONES = [  # (gid, minx, miny, maxx, maxy) — gid 7/8 overlap
-    (3, 0.0, 0.0, 1.0, 1.0),
+ZONES = [  # (gid, minx, miny, maxx, maxy) — gid 7/8 overlap; the ids
+    # are not in row order, so the MIN-id rule cannot lean on it
+    (8, 4.5, 0.0, 5.5, 1.0),
     (5, 2.0, 0.0, 3.0, 1.0),
     (7, 4.0, 0.0, 5.0, 1.0),
-    (8, 4.5, 0.0, 5.5, 1.0),
+    (3, 0.0, 0.0, 1.0, 1.0),
 ]
 
 

@@ -119,14 +119,19 @@ def test_jpeg_unsupported_modes_rejected():
 
 def test_jpeg_decode_rate_floor():
     """Regression guard for the round-4 LUT decoder: stays well above
-    the round-3 interpreter-loop rate (~0.9 MPix/s on this shape)."""
+    the round-3 interpreter-loop rate (~0.9 MPix/s on this shape). The
+    best of 3 timed passes over the same 8 images, so one pass slowed
+    by a loaded host does not decide it."""
     import time
     bufs = [jpeg.encode(_smooth_rgb(64, 64, s), 85) for s in range(8)]
     jpeg.decode(bufs[0])                 # warm the LUT cache
-    t0 = time.perf_counter()
-    for b in bufs:
-        jpeg.decode(b)
-    rate = 8 * 64 * 64 / (time.perf_counter() - t0) / 1e6
+    best = float("inf")
+    for _ in range(3):
+        t0 = time.perf_counter()
+        for b in bufs:
+            jpeg.decode(b)
+        best = min(best, time.perf_counter() - t0)
+    rate = 8 * 64 * 64 / best / 1e6
     assert rate > 1.5, f"{rate:.2f} MPix/s"
 
 

@@ -26,12 +26,18 @@ def dfs(spark, zones_pd, points_pd):
 
 
 @pytest.mark.parametrize("strategy", ["cell", "broadcast", "auto"])
-def test_pip_join_matches_oracle(dfs, oracle_pairs, strategy, caplog):
+def test_pip_join_matches_oracle(dfs, zones_pd, oracle_pairs, strategy,
+                                caplog):
     caplog.set_level(logging.DEBUG, logger="gis_tools_spark")
     pts, zones = dfs
-    got = sorted((r["pid"], r["gid"]) for r in
-                 pip_join(pts, zones, strategy=strategy).select("pid", "gid").collect())
+    rows = pip_join(pts, zones, strategy=strategy).select(
+        "pid", "gid", "nom", "secteur", "surf").collect()
+    got = sorted((r["pid"], r["gid"]) for r in rows)
     assert got == oracle_pairs
+    # every plan attaches each polygon's own attributes
+    attrs = {int(z.gid): (z.nom, z.secteur, z.surf)
+             for z in zones_pd.itertuples()}
+    assert all(tuple(r)[2:] == attrs[r["gid"]] for r in rows)
     want = {"cell": "pip_join strategy=cell reason=requested",
             "broadcast": "pip_join strategy=broadcast reason=requested",
             "auto": "pip_join strategy=broadcast reason=polygons within "
@@ -98,7 +104,8 @@ def test_pip_left_join_keeps_all_points(dfs):
 @pytest.mark.parametrize("strategy", ["cell", "broadcast"])
 def test_pip_empty_and_null_sides(dfs, spark, strategy):
     """An empty polygon side gives no rows; a null polygon is skipped on
-    both strategies while the other polygons still match."""
+    both strategies while the other polygons still match; a polygon
+    side with no attribute column still joins."""
     from pyspark.sql import functions as F
 
     pts, zones = dfs
@@ -108,6 +115,8 @@ def test_pip_empty_and_null_sides(dfs, spark, strategy):
     n = pip_join(pts, zones, strategy=strategy).count()
     assert n > 0
     assert pip_join(pts, zones.unionByName(zn), strategy=strategy).count() == n
+    assert pip_join(pts, zones.select("geometry_wkb"),
+                    strategy=strategy).count() == n
 
 
 def test_geom_geom_sjoin_matches_oracle(spark, zones_pd):

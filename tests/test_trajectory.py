@@ -56,11 +56,13 @@ def test_track_stats_matches_pandas(spark, tracks_pd):
 
 
 def _zones():
+    """A 3x3 grid of disjoint boxes; the last two share id 7, so their
+    trips must add up under one id."""
     rows = []
     for k in range(9):
         x0 = 5.0 + (k % 3) * 1.5
         y0 = 40.0 + (k // 3) * 1.5
-        rows.append((k, x0, y0, x0 + 1.2, y0 + 1.2))
+        rows.append((min(k, 7), x0, y0, x0 + 1.2, y0 + 1.2))
     return pd.DataFrame(rows, columns=["gid", "minx", "miny", "maxx", "maxy"])
 
 
