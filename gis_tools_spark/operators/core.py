@@ -102,21 +102,61 @@ def cache_scope():
 DRIVER_MAX_ROWS = 2_000_000
 
 
+def plan_size(df: DataFrame, cols: list[str]):
+    """What Catalyst knows of ``df``'s size, at no job: ``(rows, exact,
+    nbytes, local)`` from the leaf under its Projects, Filters and
+    repartitions, or None. A loaded cache gives its rows and its
+    uncompressed size, which bounds ``cols`` if they all pass through
+    unchanged (else ``nbytes`` is None); a LocalRelation (``local``)
+    gives rows only. Rows are an upper bound past a Filter."""
+    if df.isStreaming:
+        return None
+    plan = top = df._jdf.queryExecution().optimizedPlan()
+    exact = True
+    while (node := plan.nodeName()) in ("Project", "Filter", "Repartition",
+                                        "RepartitionByExpression"):
+        exact = exact and node != "Filter"
+        plan = plan.child()
+    if node == "LocalRelation":
+        return plan.data().size(), exact, None, True
+    if node != "InMemoryRelation" \
+            or not plan.cacheBuilder().isCachedColumnBuffersLoaded():
+        return None
+    stats, out, leaf = plan.stats(), top.output(), plan.outputSet()
+    named = {a.name(): a for a in map(out.apply, range(out.size()))}
+    through = all(c in named and leaf.contains(named[c]) for c in cols)
+    return (stats.rowCount().get(), exact,
+            stats.sizeInBytes() if through else None, False)
+
+
 def small_side(df: DataFrame, *, max_rows: int, max_bytes: int | None = None,
                bytes_col: str | None = None) -> bool:
     """The one broadcast / driver-solve size gate: ``df`` has at most
     ``max_rows`` rows and, with ``max_bytes``, at most that many bytes
     in ``bytes_col`` (100k polygons of 1 MB WKB would be 100 GB on the
-    driver). One column-pruned aggregate job."""
-    aggs = [F.count("*").alias("n")]
-    if max_bytes is not None:
-        aggs.append(F.coalesce(F.sum(F.length(F.col(bytes_col))),
-                               F.lit(0)).alias("nbytes"))
-    stat = df.select(*aggs).collect()[0]
-    nbytes = stat["nbytes"] if max_bytes is not None else None
-    small = stat["n"] <= max_rows and (nbytes is None or nbytes <= max_bytes)
+    driver). Decided by `plan_size` when its bounds are within the
+    limits or its exact rows over them, else by one column-pruned
+    aggregate (2 jobs under AQE). A wrong bound can only overcount, so
+    it can pick the slower plan, never a wrong one."""
+    known = plan_size(df, [bytes_col] if max_bytes is not None else [])
+    if known is not None:
+        n, exact, nbytes, _ = known
+        small = n <= max_rows and (max_bytes is None or nbytes is not None
+                                   and nbytes <= max_bytes)
+        if not small and not (exact and n > max_rows):
+            known = None
+    if known is None:
+        aggs = [F.count("*").alias("n")]
+        if max_bytes is not None:
+            aggs.append(F.coalesce(F.sum(F.length(F.col(bytes_col))),
+                                   F.lit(0)).alias("nbytes"))
+        stat = df.select(*aggs).collect()[0]
+        n = stat["n"]
+        nbytes = stat["nbytes"] if max_bytes is not None else None
+        small = n <= max_rows and (nbytes is None or nbytes <= max_bytes)
     _log.debug("small_side rows=%d bytes=%s max_rows=%d max_bytes=%s "
-               "small=%s", stat["n"], nbytes, max_rows, max_bytes, small)
+               "stats=%s small=%s", n, nbytes, max_rows, max_bytes,
+               "aggregate" if known is None else "plan", small)
     return small
 
 

@@ -36,6 +36,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .. import cells as C
 from ..geom import kernels as K, wkb
@@ -330,29 +331,26 @@ class _BroadcastIndex:
 
     def table(self, cols: list[str]) -> DataFrame:
         """``cols`` of the collected rows keyed by their position
-        (`__bi`), built from pandas with an explicit schema so that it
-        plans as a LocalRelation, with no Python RDD behind it. Object
-        columns keep longs and decimals exact; doubles go in
-        Arrow-backed, so NaN stays apart from null; a naive timestamp
+        (`__bi`), built from an Arrow table with an explicit schema so
+        that it plans as a LocalRelation, with no Python RDD behind it.
+        Columns are typed from their Spark types, so longs and decimals
+        stay exact and NaN stays apart from null inside arrays, maps
+        and structs too (pandas masks nested NaN); a naive timestamp
         (the driver's local time, as ``collect`` gives it) is made
         zone-aware first."""
         def column(c):
             values = [r[c] for r in self.rows]
             dtype = self.schema[c].dataType
-            if isinstance(dtype, (T.FloatType, T.DoubleType)):
-                return pd.arrays.ArrowExtensionArray(pa.array(
-                    values, pa.float32() if isinstance(dtype, T.FloatType)
-                    else pa.float64()))
             if isinstance(dtype, T.TimestampType):
                 values = [None if v is None else v.astimezone()
                           for v in values]
-            return pd.Series(values, dtype=object)
+            return pa.array(values, to_arrow_type(dtype))
 
-        pdf = pd.DataFrame({"__bi": np.arange(len(self.rows), dtype=np.int32),
-                            **{c: column(c) for c in cols}})
         return self.spark.createDataFrame(
-            pdf, T.StructType([T.StructField("__bi", T.IntegerType())]
-                              + [self.schema[c] for c in cols]))
+            pa.table({"__bi": np.arange(len(self.rows), dtype=np.int32),
+                      **{c: column(c) for c in cols}}),
+            T.StructType([T.StructField("__bi", T.IntegerType())]
+                         + [self.schema[c] for c in cols]))
 
     def attach(self, df: DataFrame, pos: Column, cols: list[str],
                how: str = "inner") -> DataFrame:
@@ -374,11 +372,13 @@ def _spread(df: DataFrame) -> DataFrame:
     cluster's parallelism, repartition first (cheap: only the narrow
     input columns move). At production scale scans carry >>
     parallelism partitions, so this is a no-op there — no extra shuffle
-    on the 100 TB path."""
+    on the 100 TB path. A plan with an exchange is returned as it is:
+    reading its partition count would run the exchange as a job."""
     n = df.sparkSession.sparkContext.defaultParallelism
-    if not df.isStreaming and df.rdd.getNumPartitions() < n:
-        return df.repartition(n)
-    return df
+    if df.isStreaming or "Exchange" in \
+            df._jdf.queryExecution().executedPlan().toString():
+        return df
+    return df.repartition(n) if df.rdd.getNumPartitions() < n else df
 
 
 def _pip_hits(index: _BroadcastIndex, predicate: str):

@@ -167,7 +167,7 @@ def decode_pixels(dem_tiles: DataFrame, *,
     only); grid indices derived from each tile's geotransform."""
     from ..raster.stitch import _grid_indexed
 
-    t, _ = _grid_indexed(dem_tiles)
+    t, _, _ = _grid_indexed(dem_tiles)
 
     def _px(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

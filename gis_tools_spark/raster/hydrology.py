@@ -92,7 +92,7 @@ def flow_edges(flowdir: DataFrame, *,
     one row per valid pixel; dst is NULL for pits/flats (d8 = 0).
     Node keys pack (giy, gix) into one long so the graph ops shuffle
     8-byte keys, not structs."""
-    t, _ = _grid_indexed(flowdir)
+    t, _, _ = _grid_indexed(flowdir)
     return _edge_frame(t, no_data)
 
 
@@ -207,9 +207,10 @@ def watershed(flowdir: DataFrame, *,
     localCheckpoint — the same O(log d) round structure as the engine's
     connected components, so a continental mega-basin needs ~30 rounds,
     not ~10^4. A mosaic of at most core.DRIVER_MAX_ROWS pixels (the
-    grid-index aggregate's count, so the gate costs no job) is instead
-    collected once and its edges and chase run on the driver, through
-    the same ``_edges`` and ``_chase`` as the distributed plan. Above
+    grid summary's count) is instead collected once (by the summary
+    itself, where it collected them) and its edges and chase run on the
+    driver, through the same ``_edges`` and ``_chase`` as the
+    distributed plan. Above
     that gate, fixpoint's ``driver=`` hook still chases an edge list
     under it (a mosaic of mostly no-data) on the driver.
 
@@ -217,11 +218,11 @@ def watershed(flowdir: DataFrame, *,
     packed pour-point key, shared by every pixel of one watershed."""
     from ..operators import core
 
-    t, pixels = _grid_indexed(flowdir)
+    t, pixels, collect = _grid_indexed(flowdir)
     mask = (1 << _KEY_SHIFT) - 1
     if pixels <= core.DRIVER_MAX_ROWS:
         _log.debug("watershed path=driver pixels=%d", pixels)
-        ed = _edges(t.toPandas(), no_data)
+        ed = _edges(collect(), no_data)
         ptr = _chase(pd.DataFrame({"src": ed["src"],
                                    "ptr": ed["dst"].fillna(ed["src"])}))
         basin = ptr["ptr"].to_numpy(np.int64)

@@ -15,7 +15,7 @@ semantics:
 
 Tiles are assumed to sit on a regular grid (equal size, aligned origins
 — the SRTM/mosaic layout); the grid indices are derived from each
-tile's geotransform against the global origin (one scalar agg, which
+tile's geotransform against the global origin (one summary, which
 also counts the mosaic's pixels and rejects mixed tile sizes).
 
 Driver path: every halo pass goes through ``stitched_apply``, which
@@ -39,17 +39,43 @@ from . import codec
 _log = logging.getLogger("gis_tools_spark")
 
 
+def _half_up(v):
+    """Spark's ``round`` (HALF_UP) of non-negative doubles, on the
+    driver: ``v - floor(v)`` is exact, so only a true .5 rounds up."""
+    lo = np.floor(v)
+    return lo + (v - lo >= 0.5)
+
+
 def _grid_indexed(df: DataFrame):
     """Add (col, row) grid indices from the geotransforms; returns
-    (indexed_df, pixels): pixels = cols × rows × w × h of the grid's
-    extent, the size of the whole mosaic as one array (tiles × w × h
-    when no tile is missing)."""
-    o = df.agg(F.min("gt_x0").alias("x0"), F.max("gt_y0").alias("y0"),
-               F.max("gt_x0").alias("x1"), F.min("gt_y0").alias("y1"),
-               F.max(F.col("gt_rx") * F.col("w")).alias("tw"),
-               F.max(F.col("gt_ry") * F.col("h")).alias("th"),
-               F.min("w").alias("w0"), F.max("w").alias("w"),
-               F.min("h").alias("h0"), F.max("h").alias("h")).collect()[0]
+    (indexed_df, pixels, collect): pixels = cols × rows × w × h of the
+    grid's extent, the size of the whole mosaic as one array (tiles ×
+    w × h when no tile is missing), and ``collect()`` the indexed tiles
+    as pandas. A loaded cache within sjoin.BROADCAST_MAX_BYTES or a
+    local relation is collected first and summarized on the driver,
+    by the same formulas and rounding; any other input takes one
+    scalar aggregate (2 jobs under AQE), and ``collect`` collects."""
+    from ..operators import core
+    from ..operators.sjoin import BROADCAST_MAX_BYTES
+
+    _, _, nbytes, local = (core.plan_size(df, df.columns)
+                           or (None, None, None, False))
+    tiles = None
+    if local or nbytes is not None and nbytes <= BROADCAST_MAX_BYTES:
+        tiles = df.toPandas()
+        gx, gy = tiles["gt_x0"], tiles["gt_y0"]
+        o = {"x0": gx.min(), "y0": gy.max(), "x1": gx.max(),
+             "y1": gy.min(), "tw": (tiles["gt_rx"] * tiles["w"]).max(),
+             "th": (tiles["gt_ry"] * tiles["h"]).max(),
+             "w0": tiles["w"].min(), "w": tiles["w"].max(),
+             "h0": tiles["h"].min(), "h": tiles["h"].max()}
+    else:
+        o = df.agg(F.min("gt_x0").alias("x0"), F.max("gt_y0").alias("y0"),
+                   F.max("gt_x0").alias("x1"), F.min("gt_y0").alias("y1"),
+                   F.max(F.col("gt_rx") * F.col("w")).alias("tw"),
+                   F.max(F.col("gt_ry") * F.col("h")).alias("th"),
+                   F.min("w").alias("w0"), F.max("w").alias("w"),
+                   F.min("h").alias("h0"), F.max("h").alias("h")).collect()[0]
     if o["w0"] != o["w"] or o["h0"] != o["h"]:
         raise ValueError(
             "stitched raster passes require a uniform tile grid (equal "
@@ -59,10 +85,13 @@ def _grid_indexed(df: DataFrame):
     tw, th = float(o["tw"]), float(o["th"])
     out = (df.withColumn("__col", F.round((F.col("gt_x0") - F.lit(o["x0"])) / tw).cast("int"))
              .withColumn("__row", F.round((F.lit(o["y0"]) - F.col("gt_y0")) / th).cast("int")))
-    # the same HALF_UP rounding as the __col/__row columns
-    cols = int(np.floor((o["x1"] - o["x0"]) / tw + 0.5)) + 1
-    rows = int(np.floor((o["y0"] - o["y1"]) / th + 0.5)) + 1
-    return out, cols * rows * int(o["w"]) * int(o["h"])
+    if tiles is not None:
+        tiles["__col"] = _half_up((gx - o["x0"]) / tw).astype(np.int32)
+        tiles["__row"] = _half_up((o["y0"] - gy) / th).astype(np.int32)
+    cols = int(_half_up((o["x1"] - o["x0"]) / tw)) + 1
+    rows = int(_half_up((o["y0"] - o["y1"]) / th)) + 1
+    return (out, cols * rows * int(o["w"]) * int(o["h"]),
+            out.toPandas if tiles is None else lambda: tiles)
 
 
 def slope_aspect_stitched(df: DataFrame, *, mode: str = "slope",
@@ -338,13 +367,13 @@ def stitched_apply(df: DataFrame, padded_fn, *,
     4 strips + 4 corner pixels per tile, never whole tiles.
 
     A mosaic of at most core.DRIVER_MAX_ROWS pixels (the count comes
-    from the grid-index aggregate, so the gate costs no job) skips the
-    shuffle: its tiles are collected once and the same strip emitter
-    and kernel run on the driver, with the strips grouped into the
-    same ``__halo`` lists, so the output is bit-identical."""
+    from the grid summary) skips the shuffle: its tiles are collected
+    once (by the summary itself, where it collected them) and the same
+    strip emitter and kernel run on the driver, with the strips grouped
+    into the same ``__halo`` lists, so the output is bit-identical."""
     from ..operators import core
 
-    t, pixels = _grid_indexed(df)
+    t, pixels, collect = _grid_indexed(df)
 
     def _emit_strips(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -390,7 +419,7 @@ def stitched_apply(df: DataFrame, padded_fn, *,
 
     if pixels <= core.DRIVER_MAX_ROWS:
         _log.debug("stitched_apply path=driver pixels=%d", pixels)
-        tiles = t.toPandas()
+        tiles = collect()
         halo = {k: g[["dc", "dr", "strip"]].to_dict("records")
                 for k, g in pd.concat(list(_emit_strips(iter([tiles]))))
                 .groupby(["__col", "__row"])}

@@ -65,7 +65,12 @@ def get_spark(app_name: str = "gis_tools_spark", cpus: int | None = None,
               master: str | None = None, **extra) -> SparkSession:
     """`master` overrides the default local[cpus] — used by the scaling
     harness to launch real multi-JVM executors via
-    local-cluster[workers,cores,mem] (N vs 4N *executor* evidence)."""
+    local-cluster[workers,cores,mem] (N vs 4N *executor* evidence).
+    PySpark's DataFrame call-site capture is off (it adds py4j round
+    trips to every ``F.*`` and Column call), so a DataFrame error loses
+    its Python call-site line; ``extra`` confs are set last, and
+    ``**{"spark.python.sql.dataFrameDebugging.enabled": "true"}`` turns
+    it back on."""
     cpus = cpus or DEFAULT_CPUS
     for k, v in _THREAD_PINS.items():
         os.environ.setdefault(k, v)
@@ -97,6 +102,7 @@ def get_spark(app_name: str = "gis_tools_spark", cpus: int | None = None,
         # keep stdout clean for harnesses that tail-parse one JSON line
         # (the round-4 BENCH capture was overrun by progress bars)
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in _THREAD_PINS.items():
         b = b.config(f"spark.executorEnv.{k}", v)

@@ -154,11 +154,12 @@ def _rows(entries: list[dict]) -> int:
 
 def _read_files(spark: SparkSession, root: str, schema_json: str,
                 entries: list[dict]) -> DataFrame:
-    """The rows of manifest ``entries``, read with a recorded schema."""
+    """The rows of manifest ``entries``, read with a recorded schema; no
+    entries plan as an empty LocalRelation (the false filter's prune)."""
     schema = T.StructType.fromJson(json.loads(schema_json))
     if not entries:
         return spark.createDataFrame(pd.DataFrame(columns=schema.names),
-                                     schema)
+                                     schema).where(F.lit(False))
     return spark.read.schema(schema).parquet(
         *[os.path.join(root, e["path"]) for e in entries])
 

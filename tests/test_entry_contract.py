@@ -45,6 +45,17 @@ def test_entry_smoke(spark):
     assert len(df.schema.fields) > 0
 
 
+def test_session_turns_call_site_capture_off(spark):
+    """`get_spark` turns PySpark's DataFrame call-site capture off: with
+    it on, every ``F.*`` and Column call pays extra py4j round trips
+    and a failed ``import IPython``."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled",
+                          "true") == "false"
+    assert not is_debugging_enabled()
+
+
 def test_every_query_has_an_oracle():
     assert set(E.queries()) == set(E.oracle_sql())
 
@@ -104,16 +115,17 @@ def test_package_caches_only_in_cache_scope():
 
 
 def test_package_builds_no_frame_from_a_list():
-    """A table built on the driver goes back to Spark one way: a pandas
-    frame with an explicit schema, which plans as a LocalRelation. A
-    Python list or a collected Row list plans as a LogicalRDD over a
-    Python RDD, and ``F.array`` of ``F.lit`` values costs one py4j call
-    per element. Fails on ``createDataFrame(`` whose first argument is a
-    list, a list comprehension, a ``.collect()``, or a name bound to one
-    of these in the same function, and on ``F.array(`` over a
-    comprehension of ``F.lit(``. ``raster/kernels.py`` builds its task
-    frame from ``sc.parallelize`` on purpose, to spread tasks, and is
-    not matched. Spark-free AST scan."""
+    """A table built on the driver goes back to Spark as a pandas frame
+    or an Arrow table with an explicit schema, which plans as a
+    LocalRelation. A Python list or a collected Row list plans as a
+    LogicalRDD over a Python RDD, and ``F.array`` of ``F.lit`` values
+    costs one py4j call per element. Fails on ``createDataFrame(``
+    whose first argument is a list, a list comprehension, a
+    ``.collect()``, or a name bound to one of these in the same
+    function, and on ``F.array(`` over a comprehension of ``F.lit(``.
+    ``raster/kernels.py`` builds its task frame from ``sc.parallelize``
+    on purpose, to spread tasks, and is not matched. Spark-free AST
+    scan."""
     def listy(v):
         return isinstance(v, (ast.List, ast.ListComp)) or (
             isinstance(v, ast.Call) and isinstance(v.func, ast.Attribute)

@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from gis_tools_spark.operators import core
 from gis_tools_spark.sources import icetable as ice
 
 
@@ -73,6 +74,11 @@ def test_manifest_stats_prune_files_and_exactness(spark, tmp_path):
     empty = ice.scan(spark, root, bbox=(100.0, 0.0, 101.0, 1.0))
     assert empty.count() == 0
     assert "pid" in empty.columns and "zkey" in empty.columns
+    # ... and plans as an empty local relation, whose 0 rows a size
+    # gate reads from the plan at no job
+    plan = empty._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan, plan
+    assert core.plan_size(empty, [])[0] == 0
 
 
 def test_filter_ops_prune_and_match(spark, tmp_path):

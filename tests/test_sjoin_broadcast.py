@@ -2,7 +2,7 @@
 cell-index path must be value-identical to the shuffle cell path, across
 predicates, null rows, oversize geometries, how='left', and the right
 side's attribute types (long and string ids, a null, a decimal, a
-timestamp)."""
+timestamp, an array of doubles holding a NaN)."""
 
 import datetime
 import decimal
@@ -26,8 +26,9 @@ sjoin_module = importlib.import_module("gis_tools_spark.operators.sjoin")
 
 def _layers(spark, n=120, seed=3, ids="long"):
     """Two zone layers; the right one carries ids above 2^53 (or
-    strings) and a string, a decimal, a timestamp and a double
-    attribute, each null on one zone (the double is NaN on another)."""
+    strings) and a string, a decimal, a timestamp, a double and an
+    array<double> attribute, each null on one zone (the double is NaN
+    on another, and the array holds a NaN on every other zone)."""
     za = fixtures.gen_zones(n, seed=seed)
     zb = fixtures.gen_zones(n, seed=seed + 4)
     left = (spark.createDataFrame(za[["gid", "geometry_wkb"]])
@@ -38,12 +39,13 @@ def _layers(spark, n=120, seed=3, ids="long"):
              None if k == 2 else decimal.Decimal(k) / 8,
              None if k == 3 else ts0 + datetime.timedelta(hours=7 * k),
              None if k == 4 else float("nan") if k == 5 else k / 3,
+             None if k == 6 else [1.0, float("nan")] if k % 2 else [k / 7],
              bytearray(b)) for k, (g, nom, b) in
             enumerate(zip(zb["gid"], zb["nom"], zb["geometry_wkb"]))]
     right = spark.createDataFrame(
         rows, f"gid {'string' if ids == 'string' else 'long'}, nom string, "
               "price decimal(12,3), seen timestamp, score double, "
-              "geometry_wkb binary")
+              "vals array<double>, geometry_wkb binary")
     return left, right
 
 
@@ -56,7 +58,8 @@ def _rows(df):
     """The joined rows with the right side's attributes, sorted (compare
     their ``repr``: NaN != NaN)."""
     return sorted((tuple(r) for r in df.select(
-        "lid", "gid", "nom", "price", "seen", "score").collect()), key=repr)
+        "lid", "gid", "nom", "price", "seen", "score",
+        "vals").collect()), key=repr)
 
 
 @pytest.mark.parametrize("pred", ["intersects", "within", "contains",
@@ -69,10 +72,12 @@ def test_broadcast_equals_cell(spark, pred):
     if pred == "intersects":
         assert len(b) > 0
         # every attribute type reaches the result, nulls and NaN included
-        for k in range(2, 6):
+        for k in range(2, 7):
             assert any(r[k] is None for r in b), k
             assert any(r[k] is not None for r in b), k
         assert any(r[5] is not None and r[5] != r[5] for r in b)
+        assert any(r[6] is not None and len(r[6]) == 2
+                   and r[6][1] != r[6][1] for r in b)
 
 
 def test_broadcast_null_and_oversize(spark):
@@ -113,7 +118,7 @@ def test_broadcast_how_left(spark):
         kb = _rows(sjoin(left2, right, strategy="broadcast", how="left"))
         kc = _rows(sjoin(left2, right, strategy="cell", how="left"))
         assert repr(kb) == repr(kc), ids
-        assert (7777, None, None, None, None, None) in kb, ids
+        assert (7777, None, None, None, None, None, None) in kb, ids
 
 
 def test_broadcast_plan_no_shuffle_join(spark):
